@@ -37,27 +37,22 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def synth_corpus_df(spark, n_docs: int, seed: int = 42, slices: int | None = None):
     """Distributed deterministic corpus: spark.range → per-index gen_doc."""
-    from pyspark.sql import functions as F  # noqa: F401
-
+    from oxidizepdf_spark.pipeline import map_rows
     from oxidizepdf_spark.table_io import DOCS_SCHEMA
 
-    def gen(batches):
-        import pandas as pd
-
+    def make_row():
         from oxidizepdf_spark.corpus import all_cases, gen_doc
 
         cases = all_cases()
-        for b in batches:
-            rows = {"doc_id": [], "part_id": [], "spans": []}
-            for i in b["id"]:
-                in_row, _ = gen_doc(int(i), seed, cases)
-                rows["doc_id"].append(in_row["doc_id"])
-                rows["part_id"].append(in_row["part_id"])
-                rows["spans"].append(in_row["spans"])
-            yield pd.DataFrame(rows)
+
+        def row(i):
+            in_row, _ = gen_doc(i, seed, cases)
+            yield in_row["doc_id"], in_row["part_id"], in_row["spans"]
+
+        return row
 
     rng = spark.range(n_docs, numPartitions=slices or spark.sparkContext.defaultParallelism)
-    return rng.mapInPandas(gen, schema=DOCS_SCHEMA)
+    return map_rows(rng, make_row, DOCS_SCHEMA)
 
 
 def stage_corpus(spark, n_docs: int, seed: int = 42) -> str:
@@ -306,9 +301,11 @@ def _control_work(args) -> int:
 
 
 def main() -> None:
+    from oxidizepdf_spark.table_io import default_cpus
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=default_cpus())
     ap.add_argument("--n-docs", type=int, default=None, help="bench corpus size")
     ap.add_argument(
         "--scaling",

@@ -52,11 +52,12 @@ def suite(Q):
 
 
 def main() -> None:
+    from oxidizepdf_spark.table_io import default_cpus
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", type=int, default=int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=default_cpus())
     ap.add_argument("-q", "--queries", default=None,
                     help="comma-separated names (substring match)")
     ap.add_argument("--repeats", type=int, default=2)

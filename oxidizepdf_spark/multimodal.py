@@ -1,9 +1,9 @@
 """Multimodal column plumbing: opaque binary media + typed metadata.
 
 Images/audio/video ride the corpus as ``binary`` columns with a metadata
-struct; decode / feature-extract / resize / frame-sample run as
-Arrow-batched stages over ``mapInPandas``. Image payloads this engine can
-decode natively — JPEG via kernel/jpeg_codec.py (baseline, extended,
+struct; feature-extract / frame-sample run as Arrow-batched stages over
+``pipeline.map_rows``. Image payloads this engine can decode natively
+— JPEG via kernel/jpeg_codec.py (baseline, extended,
 progressive) and the filter-0 PNGs its own extractors emit — go through a
 REAL decode/resize path (no external imaging stack needed); anything else
 (audio, video, exotic formats) falls back to deterministic fakes so the
@@ -22,13 +22,12 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .pipeline import map_rows
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -156,35 +155,23 @@ def fake_embedding(payload: bytes, dims: int = 8) -> list[float]:
 def extract_media_features(media: DataFrame, dims: int = 8) -> DataFrame:
     """Arrow-batched feature extraction over the binary column."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         # Feature extraction here is bytes-level (no pixel decode), so
         # the decoder tag stays 'stub'; decode_image_stub reports
         # 'native' when a payload really decodes.
-        decoder = "stub"
-        for b in batches:
-            out = {
-                "doc_id": [],
-                "media_ref": [],
-                "media_type": [],
-                "n_bytes": [],
-                "sha1": [],
-                "md5": [],
-                "fake_embedding": [],
-                "decoder": [],
-            }
-            for row in b.itertuples(index=False):
-                payload = bytes(row.payload) if row.payload is not None else b""
-                out["doc_id"].append(row.doc_id)
-                out["media_ref"].append(row.media_ref)
-                out["media_type"].append(row.media_type)
-                out["n_bytes"].append(len(payload))
-                out["sha1"].append(hashlib.sha1(payload).hexdigest())
-                out["md5"].append(hashlib.md5(payload).hexdigest())
-                out["fake_embedding"].append(fake_embedding(payload, dims))
-                out["decoder"].append(decoder)
-            yield pd.DataFrame(out)
+        def row(doc_id, media_ref, media_type, payload):
+            payload = payload if payload is not None else b""
+            yield (
+                doc_id, media_ref, media_type, len(payload),
+                hashlib.sha1(payload).hexdigest(),
+                hashlib.md5(payload).hexdigest(),
+                fake_embedding(payload, dims), "stub",
+            )
 
-    return media.mapInPandas(run, schema=FEATURES_SCHEMA)
+        return row
+
+    cols = media.select("doc_id", "media_ref", "media_type", "payload")
+    return map_rows(cols, make_row, FEATURES_SCHEMA)
 
 
 def resize_image_stub(payload: bytes, target: tuple[int, int]) -> bytes:
@@ -216,26 +203,20 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     Stub derives frame count from duration_ms; the real path would seek a
     decoder. Batch shape (explode inside the UDF) matches production."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {"doc_id": [], "media_ref": [], "frame_idx": [], "frame_sha1": []}
-            for row in b.itertuples(index=False):
-                if row.media_type != "video":
-                    continue
-                meta = row.meta if isinstance(row.meta, dict) else {}
-                duration = (meta.get("duration_ms") or 0) if meta else 0
-                n_frames = max(1, duration // every_ms)
-                payload = bytes(row.payload) if row.payload is not None else b""
-                for i in range(int(n_frames)):
-                    out["doc_id"].append(row.doc_id)
-                    out["media_ref"].append(row.media_ref)
-                    out["frame_idx"].append(i)
-                    out["frame_sha1"].append(
-                        hashlib.sha1(payload + i.to_bytes(4, "big")).hexdigest()
-                    )
-            yield pd.DataFrame(out)
+    def make_row():
+        def row(doc_id, media_ref, media_type, payload, meta):
+            if media_type != "video":
+                return
+            duration = (meta or {}).get("duration_ms") or 0
+            payload = payload if payload is not None else b""
+            for i in range(max(1, duration // every_ms)):
+                sha1 = hashlib.sha1(payload + i.to_bytes(4, "big")).hexdigest()
+                yield doc_id, media_ref, i, sha1
 
-    return media.mapInPandas(run, schema=FRAME_SCHEMA)
+        return row
+
+    cols = media.select("doc_id", "media_ref", "media_type", "payload", "meta")
+    return map_rows(cols, make_row, FRAME_SCHEMA)
 
 
 def synth_media_table(spark, docs: DataFrame) -> DataFrame:

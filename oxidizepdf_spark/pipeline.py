@@ -3,7 +3,8 @@
 The Spark-first layer (SURVEY.md §2.8): documents are embarrassingly
 parallel, so the only cross-node concerns are
 
-- Arrow batch exchange into the Python workers (``mapInPandas``),
+- Arrow batch exchange into the Python workers (``mapInArrow``; every
+  per-row stage outside extraction goes through ``map_rows``),
 - salted repartitioning so skewed mega-PDFs don't serialize a task,
 - per-partition lineage + metrics for checkpoint/resume,
 - the resume anti-join that skips completed work.
@@ -81,7 +82,6 @@ def _extract_batches(
         ]
     )
     for batch in batches:
-        t0 = time.perf_counter()
         n = batch.num_rows
         names = batch.schema.names
         doc_ids = batch.column(names.index("doc_id")).to_pylist()
@@ -142,7 +142,6 @@ def _extract_batches(
             nspans_c.append(len(spans))
             bytes_c.append(int(meta["bytes_in"]))
             wall_c.append((time.perf_counter() - t_doc) * 1000.0)
-        _ = t0
         spans_arr = pa.ListArray.from_arrays(
             pa.array(out_offsets, type=pa.int32()),
             pa.StructArray.from_arrays(
@@ -174,6 +173,48 @@ def _extract_batches(
                 "n_pages", "n_spans", "bytes_in", "wall_ms", "task_partition",
             ],
         )
+
+
+def map_rows(df: DataFrame, make_row, schema) -> DataFrame:
+    """Run a per-row Python function over ``df`` through ``mapInArrow``.
+
+    ``make_row()`` runs once per task, inside the worker: it does the lazy
+    kernel imports, builds options and per-task memos, and returns
+    ``row(*values)``. ``row`` receives one input row's values as Python
+    objects, in ``df.columns`` order, and yields zero or more output
+    tuples in ``schema`` order. Input columns are read with
+    ``to_pylist()``; each output column is built with ``pa.array`` at the
+    Arrow type of the declared schema (derived once, here on the driver),
+    with NaN read as null as pandas-based UDFs do. An exception raised by
+    ``row`` fails the task.
+
+    ``schema`` is a ``StructType`` or a DDL string."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches):
+        import pyarrow as pa
+
+        row = make_row()
+        for batch in batches:
+            out = [
+                r
+                for vals in zip(*(c.to_pylist() for c in batch.columns))
+                for r in row(*vals)
+            ]
+            cols = list(zip(*out)) if out else [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(c, type=f.type, from_pandas=True)
+                    for c, f in zip(cols, arrow_schema)
+                ],
+                schema=arrow_schema,
+            )
+
+    return df.mapInArrow(run, schema=schema)
 
 
 def extract_spans(

@@ -25,12 +25,11 @@ columns). Float outputs are rounded to 6dp on both sides.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .pipeline import extract_spans, map_rows
 
 # ---------------------------------------------------------------------------
 # shared text normalization (identical semantics in both dialects)
@@ -70,15 +69,17 @@ def _plan_memo(spark: SparkSession, key: str, build):
 _EXPR_MEMO: dict = {}
 
 
-def _expr_memo(spark: SparkSession, key: str, sql: str):
+def _expr_memo(spark: SparkSession, sql: str):
     """Per-application memo of parsed Column expressions (r11, same
     rationale as _plan_memo): ``F.expr`` pays a py4j round-trip plus a
     JVM SQL parse per call, re-paid on every bench issuance for the big
     SQL folds below. A Column is an immutable UNRESOLVED expression
     tree — no data, no plan state — so reusing the parsed tree across
-    issuances changes nothing about what executes. Keyed by
-    applicationId so a stopped session never leaks into a new one."""
-    k = (spark.sparkContext.applicationId, key)
+    issuances changes nothing about what executes. Keyed by the SQL
+    text itself, so two sites share a parsed tree only when their SQL is
+    identical, and by applicationId so a stopped session never leaks
+    into a new one."""
+    k = (spark.sparkContext.applicationId, sql)
     c = _EXPR_MEMO.get(k)
     if c is None:
         c = F.expr(sql)
@@ -96,7 +97,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _rebalance_for_udf(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Expensive-per-row-UDF guard: a single-row-group parquet file
     cannot split, so a small-file corpus lands the WHOLE table in one
-    task and a per-doc mapInPandas operator (0.2-1.3 ms/doc of Python
+    task and a per-doc map_rows operator (0.2-1.3 ms/doc of Python
     work) runs single-core no matter how many executors exist. When the
     scan yields fewer splits than half the cluster parallelism,
     round-robin rebalance the narrow projected rows before the UDF —
@@ -268,28 +269,18 @@ def _roundtrip_row(norm: str, variant: str) -> tuple:
     return extracted.replace("\n", " "), n_lines, res.n_pages, res.mode
 
 
-def _roundtrip_udf(variant: str):
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {"doc_id": [], "text": [], "n_lines": [], "n_pages": [], "mode": []}
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                text, n_lines, n_pages, mode = _roundtrip_row(norm, variant)
-                out["doc_id"].append(doc_id)
-                out["text"].append(text)
-                out["n_lines"].append(n_lines)
-                out["n_pages"].append(n_pages)
-                out["mode"].append(mode)
-            yield pd.DataFrame(out)
-
-    return run
-
-
 def _pdf_roundtrip(variant: str, with_mode: bool = False):
     cols = "doc_id long, text string, n_lines int, n_pages int, mode string"
 
+    def make_row():
+        def row(doc_id, norm):
+            yield (doc_id, *_roundtrip_row(norm, variant))
+
+        return row
+
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = _docs_norm_rebalanced(spark, sf_dir)
-        out = docs.mapInPandas(_roundtrip_udf(variant), schema=cols)
+        out = map_rows(docs, make_row, cols)
         keep = ["doc_id", "text", "n_lines", "n_pages"] + (
             ["mode"] if with_mode else []
         )
@@ -346,25 +337,14 @@ def q_pdf_extract_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_pages int, mode string"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {
-                "doc_id": [], "variant": [], "text": [],
-                "n_lines": [], "n_pages": [], "mode": [],
-            }
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                variant = _VARIANT_CYCLE[int(doc_id) % 10]
-                text, n_lines, n_pages, mode = _roundtrip_row(norm, variant)
-                out["doc_id"].append(doc_id)
-                out["variant"].append(variant)
-                out["text"].append(text)
-                out["n_lines"].append(n_lines)
-                out["n_pages"].append(n_pages)
-                out["mode"].append(mode)
-            yield pd.DataFrame(out)
+    def make_row():
+        def row(doc_id, norm):
+            variant = _VARIANT_CYCLE[doc_id % 10]
+            yield (doc_id, variant, *_roundtrip_row(norm, variant))
 
-    docs = _docs_norm_rebalanced(spark, sf_dir)
-    return docs.mapInPandas(run, schema=cols)
+        return row
+
+    return map_rows(_docs_norm_rebalanced(spark, sf_dir), make_row, cols)
 
 
 def _pdf_variants_oracle() -> str:
@@ -392,54 +372,28 @@ def q_pdf_extract_spans_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interleaving contract end-to-end: every 3rd document gets lead-in
     text + trailing media spans around its raw_pdf span; the output span
     sequence (kind, text, media_ref, offset) is exact (FIXTURES.md §1.2)."""
-    from .pipeline import extract_spans
 
-    docs = _docs_norm_rebalanced(spark, sf_dir)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from .corpus import build_text_pdf, encode_raw_payload
 
-        for b in batches:
-            rows = {"doc_id": [], "part_id": [], "spans": []}
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                spans = []
-                if doc_id % 3 == 0:
-                    spans.append(
-                        {
-                            "kind": "text",
-                            "text": f"lead-{doc_id}",
-                            "media_ref": None,
-                            "offset": len(spans),
-                        }
-                    )
-                pdf = build_text_pdf(
-                    "\n".join(_wrap_lines(norm)), lines_per_page=LINES_PER_PAGE
-                )
-                spans.append(
-                    {
-                        "kind": "raw_pdf",
-                        "text": encode_raw_payload(pdf),
-                        "media_ref": None,
-                        "offset": len(spans),
-                    }
-                )
-                if doc_id % 3 == 0:
-                    spans.append(
-                        {
-                            "kind": "media",
-                            "text": "",
-                            "media_ref": f"media://img/{doc_id}",
-                            "offset": len(spans),
-                        }
-                    )
-                rows["doc_id"].append(str(doc_id))
-                rows["part_id"].append(int(doc_id) % 8)
-                rows["spans"].append(spans)
-            yield pd.DataFrame(rows)
+        def row(doc_id, norm):
+            spans = []
+            if doc_id % 3 == 0:
+                spans.append(("text", f"lead-{doc_id}", None, len(spans)))
+            pdf = build_text_pdf(
+                "\n".join(_wrap_lines(norm)), lines_per_page=LINES_PER_PAGE
+            )
+            spans.append(("raw_pdf", encode_raw_payload(pdf), None, len(spans)))
+            if doc_id % 3 == 0:
+                spans.append(("media", "", f"media://img/{doc_id}", len(spans)))
+            yield str(doc_id), doc_id % 8, spans
 
-    input_df = docs.mapInPandas(
-        build,
-        schema="doc_id string, part_id int, "
+        return row
+
+    input_df = map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id string, part_id int, "
         "spans array<struct<kind string, text string, media_ref string, offset int>>",
     )
     results = extract_spans(input_df)
@@ -482,26 +436,24 @@ def q_html_extract_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     content as <p> blocks plus one in-content image. Extraction must strip
     every boilerplate element and return exactly the content text (+1
     image span), which the oracle recomputes from the text column."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from .corpus import build_html_doc
         from .kernel.html_extract import extract_html_spans
 
-        for b in batches:
-            out = {"doc_id": [], "text": [], "n_blocks": [], "n_images": []}
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                html = build_html_doc("\n".join(_wrap_lines(norm)), with_image=True)
-                spans = extract_html_spans(html, min_block_chars=1)
-                texts = [s[1] for s in spans if s[0] == "text"]
-                out["doc_id"].append(doc_id)
-                out["text"].append(" ".join(texts))
-                out["n_blocks"].append(len(texts))
-                out["n_images"].append(sum(1 for s in spans if s[0] == "image"))
-            yield pd.DataFrame(out)
+        def row(doc_id, norm):
+            html = build_html_doc("\n".join(_wrap_lines(norm)), with_image=True)
+            spans = extract_html_spans(html, min_block_chars=1)
+            texts = [s[1] for s in spans if s[0] == "text"]
+            n_images = sum(1 for s in spans if s[0] == "image")
+            yield doc_id, " ".join(texts), len(texts), n_images
 
-    return docs.mapInPandas(
-        run, schema="doc_id long, text string, n_blocks int, n_images int"
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, text string, n_blocks int, n_images int",
     )
 
 
@@ -525,39 +477,34 @@ def q_pdf_extract_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         _docs(spark, sf_dir).select("doc_id", "source", "text"),
     ).select("doc_id", "source", norm_col("text").alias("norm"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from .corpus import build_pdf_with_content_stream, escape_pdf_string
         from .kernel.extract import extract_metadata
 
-        for b in batches:
-            out = {
-                "doc_id": [], "title": [], "author": [],
-                "version": [], "n_pages": [], "via_xmp": [],
-            }
-            for doc_id, source, norm in zip(b["doc_id"], b["source"], b["norm"]):
-                content = b"BT /F1 12 Tf 100 700 Td (%s) Tj ET" % escape_pdf_string(
-                    norm[:40]
+        def row(doc_id, source, norm):
+            content = b"BT /F1 12 Tf 100 700 Td (%s) Tj ET" % escape_pdf_string(
+                norm[:40]
+            )
+            fields = {"title": f"Doc {doc_id}", "author": str(source)}
+            if doc_id % 2 == 0:
+                pdf = build_pdf_with_content_stream(
+                    content,
+                    info={"Title": fields["title"], "Author": fields["author"]},
                 )
-                fields = {"title": f"Doc {doc_id}", "author": str(source)}
-                if int(doc_id) % 2 == 0:
-                    pdf = build_pdf_with_content_stream(
-                        content,
-                        info={"Title": fields["title"], "Author": fields["author"]},
-                    )
-                else:
-                    pdf = build_pdf_with_content_stream(content, xmp=fields)
-                m = extract_metadata(pdf)
-                out["doc_id"].append(doc_id)
-                out["title"].append(m["title"])
-                out["author"].append(m["author"])
-                out["version"].append(m["version"])
-                out["n_pages"].append(m["n_pages"])
-                out["via_xmp"].append(bool(m["xmp_present"]))
-            yield pd.DataFrame(out)
+            else:
+                pdf = build_pdf_with_content_stream(content, xmp=fields)
+            m = extract_metadata(pdf)
+            yield (
+                doc_id, m["title"], m["author"], m["version"], m["n_pages"],
+                bool(m["xmp_present"]),
+            )
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, title string, author string, version string, "
+        return row
+
+    return map_rows(
+        docs,
+        make_row,
+        "doc_id long, title string, author string, version string, "
         "n_pages int, via_xmp boolean",
     )
 
@@ -575,31 +522,29 @@ def q_pdf_extract_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     20pt apart at 12pt (gap 8 < 1.5x median height 12), so each page
     reconstructs to exactly one paragraph whose text joins the page's
     lines with newlines — recomputable by the oracle from the raw text."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from .corpus import build_text_pdf
         from .kernel.extract import extract_pdf_bytes
         from .kernel.textstate import ExtractionOptions
 
         opts = ExtractionOptions(preserve_layout=True, reconstruct_paragraphs=True)
-        for b in batches:
-            out = {"doc_id": [], "n_paragraphs": [], "text": []}
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                pdf = build_text_pdf(
-                    "\n".join(_wrap_lines(norm)), lines_per_page=LINES_PER_PAGE
-                )
-                res = extract_pdf_bytes(pdf, opts)
-                paras = [f for page in res.page_fragments for f in page]
-                out["doc_id"].append(doc_id)
-                out["n_paragraphs"].append(len(paras))
-                out["text"].append(
-                    "\n".join(p.text for p in paras).replace("\n", " ")
-                )
-            yield pd.DataFrame(out)
 
-    return docs.mapInPandas(
-        run, schema="doc_id long, n_paragraphs int, text string"
+        def row(doc_id, norm):
+            pdf = build_text_pdf(
+                "\n".join(_wrap_lines(norm)), lines_per_page=LINES_PER_PAGE
+            )
+            res = extract_pdf_bytes(pdf, opts)
+            paras = [f for page in res.page_fragments for f in page]
+            text = "\n".join(p.text for p in paras).replace("\n", " ")
+            yield doc_id, len(paras), text
+
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, n_paragraphs int, text string",
     )
 
 
@@ -629,9 +574,8 @@ def q_pdf_page_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     /Pages parent node instead of each page — the §7.7.3.4 inheritance
     path must yield the same effective value; eff_w/eff_h are the
     rotation-adjusted MediaBox extents (swap on exactly 90/270)."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from .corpus import build_text_pdf
         from .kernel.extract import extract_pdf_bytes
         from .kernel.pages import (
@@ -643,38 +587,33 @@ def q_pdf_page_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         from .kernel.reader import PdfReader
 
         nums = b"0 << /S /r >> 2 << /S /D /P (P-) /St 1 >>"
-        for b in batches:
-            out = {
-                "doc_id": [], "page_idx": [], "page_text": [],
-                "page_label": [], "rotation": [], "eff_w": [], "eff_h": [],
-            }
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                rot = (int(doc_id) % 4) * 90
-                pdf = build_text_pdf(
-                    "\n".join(_wrap_lines(norm)),
-                    lines_per_page=PAGE_OPS_LINES,
-                    page_labels_nums=nums,
-                    rotate=rot if rot else None,
-                    rotate_inherited=int(doc_id) % 8 >= 4,
-                )
-                res = extract_pdf_bytes(pdf)
-                reader = PdfReader(pdf)
-                labels = page_labels(reader, len(res.page_texts))
-                pages = flatten_page_tree(reader)
-                for i, pt in enumerate(res.page_texts):
-                    ew, eh = effective_page_size(pages[i], reader)
-                    out["doc_id"].append(doc_id)
-                    out["page_idx"].append(i)
-                    out["page_text"].append(pt.replace("\n", " "))
-                    out["page_label"].append(labels[i])
-                    out["rotation"].append(page_rotation(pages[i], reader))
-                    out["eff_w"].append(int(ew))
-                    out["eff_h"].append(int(eh))
-            yield pd.DataFrame(out)
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, page_idx int, page_text string, "
+        def row(doc_id, norm):
+            rot = (doc_id % 4) * 90
+            pdf = build_text_pdf(
+                "\n".join(_wrap_lines(norm)),
+                lines_per_page=PAGE_OPS_LINES,
+                page_labels_nums=nums,
+                rotate=rot if rot else None,
+                rotate_inherited=doc_id % 8 >= 4,
+            )
+            res = extract_pdf_bytes(pdf)
+            reader = PdfReader(pdf)
+            labels = page_labels(reader, len(res.page_texts))
+            pages = flatten_page_tree(reader)
+            for i, pt in enumerate(res.page_texts):
+                ew, eh = effective_page_size(pages[i], reader)
+                yield (
+                    doc_id, i, pt.replace("\n", " "), labels[i],
+                    page_rotation(pages[i], reader), int(ew), int(eh),
+                )
+
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, page_idx int, page_text string, "
         "page_label string, rotation int, eff_w int, eff_h int",
     )
 
@@ -721,46 +660,46 @@ def q_pdf_extract_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     zipper the columns together. Extracting with reading_order='xycut'
     must split on the column gap and restore the original logical order,
     so the oracle is simply the normalized 32-word prefix."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from .corpus import build_pdf_with_content_stream, escape_pdf_string
         from .kernel.extract import extract_pdf_bytes
         from .kernel.textstate import ExtractionOptions
 
         opts = ExtractionOptions(reading_order="xycut")
-        for b in batches:
-            out = {"doc_id": [], "text": [], "n_lines": []}
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                words = norm.split(" ")[:COLUMNS_MAX_WORDS]
-                lines = [
-                    " ".join(words[i : i + COLUMNS_WORDS_PER_LINE])
-                    for i in range(0, len(words), COLUMNS_WORDS_PER_LINE)
-                ]
-                half = (len(lines) + 1) // 2
-                parts = [b"BT /F1 12 Tf"]
-                # interleave left/right emission; xycut must un-zipper it
-                for i in range(half):
-                    y = 720 - 20 * i
-                    parts.append(
-                        b"1 0 0 1 72 %d Tm (%s) Tj"
-                        % (y, escape_pdf_string(lines[i]))
-                    )
-                    j = half + i
-                    if j < len(lines):
-                        parts.append(
-                            b"1 0 0 1 400 %d Tm (%s) Tj"
-                            % (y, escape_pdf_string(lines[j]))
-                        )
-                parts.append(b"ET")
-                pdf = build_pdf_with_content_stream(b" ".join(parts))
-                res = extract_pdf_bytes(pdf, opts)
-                out["doc_id"].append(doc_id)
-                out["text"].append(res.page_texts[0].replace("\n", " "))
-                out["n_lines"].append(len(lines))
-            yield pd.DataFrame(out)
 
-    return docs.mapInPandas(run, schema="doc_id long, text string, n_lines int")
+        def row(doc_id, norm):
+            words = norm.split(" ")[:COLUMNS_MAX_WORDS]
+            lines = [
+                " ".join(words[i : i + COLUMNS_WORDS_PER_LINE])
+                for i in range(0, len(words), COLUMNS_WORDS_PER_LINE)
+            ]
+            half = (len(lines) + 1) // 2
+            parts = [b"BT /F1 12 Tf"]
+            # interleave left/right emission; xycut must un-zipper it
+            for i in range(half):
+                y = 720 - 20 * i
+                parts.append(
+                    b"1 0 0 1 72 %d Tm (%s) Tj" % (y, escape_pdf_string(lines[i]))
+                )
+                j = half + i
+                if j < len(lines):
+                    parts.append(
+                        b"1 0 0 1 400 %d Tm (%s) Tj"
+                        % (y, escape_pdf_string(lines[j]))
+                    )
+            parts.append(b"ET")
+            pdf = build_pdf_with_content_stream(b" ".join(parts))
+            res = extract_pdf_bytes(pdf, opts)
+            yield doc_id, res.page_texts[0].replace("\n", " "), len(lines)
+
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, text string, n_lines int",
+    )
 
 
 ORACLE_COLUMNS = f"""
@@ -790,11 +729,8 @@ def q_pdf_extract_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     PNG-decode loop is differentially checked per document. Text rows
     carry -1/'' sentinels (NULL ints promote to float64 and poison the
     value hash)."""
-    import math
 
-    docs = _docs_norm_rebalanced(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         import zlib
 
         from .corpus import build_pdf_with_content_stream, escape_pdf_string
@@ -804,61 +740,50 @@ def q_pdf_extract_images(spark: SparkSession, sf_dir: str) -> DataFrame:
             parse_png_samples,
         )
 
-        for b in batches:
-            out = {
-                "doc_id": [], "offset": [], "kind": [], "text": [],
-                "media_ref": [], "img_w": [], "img_h": [],
-                "img_format": [], "img_px_sum": [],
-            }
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                d = int(doc_id)
-                words = norm.split(" ")
-                h = math.ceil(len(words) / 2)
-                first, second = " ".join(words[:h]), " ".join(words[h:])
-                content = (
-                    b"BT /F1 12 Tf 100 700 Td (%s) Tj ET "
-                    b"q 100 0 0 100 50 50 cm /Im1 Do Q "
-                    b"BT /F1 12 Tf 1 0 0 1 100 700 Tm (%s) Tj ET"
-                    % (escape_pdf_string(first), escape_pdf_string(second))
-                )
-                pixels = bytes((d * 7 + i * i) % 256 for i in range(256))
-                comp = zlib.compress(pixels)
-                img_obj = (
-                    b"<< /Type /XObject /Subtype /Image /Width 16 /Height 16 "
-                    b"/ColorSpace /DeviceGray /BitsPerComponent 8 "
-                    b"/Filter /FlateDecode /Length %d >>\nstream\n%s\nendstream"
-                    % (len(comp), comp)
-                )
-                pdf = build_pdf_with_content_stream(
-                    content,
-                    page_extra="/XObject << /Im1 6 0 R >> ",
-                    extra_objects={6: img_obj},
-                )
-                res = extract_pdf_bytes(pdf)
-                images = extract_images_from_pdf(pdf)
-                iw = ih = px_sum = -1
-                ifmt = ""
-                if images:
-                    im = images[0]
-                    _, _, _, _, samples = parse_png_samples(im.data)
-                    iw, ih, ifmt = im.width, im.height, im.format
-                    px_sum = sum(samples)
-                for off, (kind, text, media_ref) in enumerate(res.spans):
-                    is_img = kind == "image"
-                    out["doc_id"].append(doc_id)
-                    out["offset"].append(off)
-                    out["kind"].append(kind)
-                    out["text"].append(text)
-                    out["media_ref"].append(media_ref)
-                    out["img_w"].append(iw if is_img else -1)
-                    out["img_h"].append(ih if is_img else -1)
-                    out["img_format"].append(ifmt if is_img else "")
-                    out["img_px_sum"].append(px_sum if is_img else -1)
-            yield pd.DataFrame(out)
+        def row(doc_id, norm):
+            words = norm.split(" ")
+            h = math.ceil(len(words) / 2)
+            first, second = " ".join(words[:h]), " ".join(words[h:])
+            content = (
+                b"BT /F1 12 Tf 100 700 Td (%s) Tj ET "
+                b"q 100 0 0 100 50 50 cm /Im1 Do Q "
+                b"BT /F1 12 Tf 1 0 0 1 100 700 Tm (%s) Tj ET"
+                % (escape_pdf_string(first), escape_pdf_string(second))
+            )
+            pixels = bytes((doc_id * 7 + i * i) % 256 for i in range(256))
+            comp = zlib.compress(pixels)
+            img_obj = (
+                b"<< /Type /XObject /Subtype /Image /Width 16 /Height 16 "
+                b"/ColorSpace /DeviceGray /BitsPerComponent 8 "
+                b"/Filter /FlateDecode /Length %d >>\nstream\n%s\nendstream"
+                % (len(comp), comp)
+            )
+            pdf = build_pdf_with_content_stream(
+                content,
+                page_extra="/XObject << /Im1 6 0 R >> ",
+                extra_objects={6: img_obj},
+            )
+            res = extract_pdf_bytes(pdf)
+            images = extract_images_from_pdf(pdf)
+            iw = ih = px_sum = -1
+            ifmt = ""
+            if images:
+                im = images[0]
+                _, _, _, _, samples = parse_png_samples(im.data)
+                iw, ih, ifmt = im.width, im.height, im.format
+                px_sum = sum(samples)
+            for off, (kind, text, media_ref) in enumerate(res.spans):
+                if kind == "image":
+                    yield doc_id, off, kind, text, media_ref, iw, ih, ifmt, px_sum
+                else:
+                    yield doc_id, off, kind, text, media_ref, -1, -1, "", -1
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, offset int, kind string, text string, "
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, offset int, kind string, text string, "
         "media_ref string, img_w int, img_h int, img_format string, "
         "img_px_sum long",
     )
@@ -900,29 +825,24 @@ def _pdf_encrypted_roundtrip(method: str):
     encrypted PDF (RC4 or AES-128-CBC per-object keys); extraction must
     transparently unlock and recover the exact text."""
 
+    def make_row():
+        from .corpus import build_encrypted_pdf
+        from .kernel.extract import extract_pdf_bytes
+
+        def row(doc_id, norm):
+            pdf = build_encrypted_pdf("\n".join(_wrap_lines(norm)), method=method)
+            res = extract_pdf_bytes(pdf)
+            text = res.page_texts[0] if res.page_texts else ""
+            n_lines = text.count("\n") + 1 if text or norm == "" else 1
+            yield doc_id, text.replace("\n", " "), n_lines, res.error is None
+
+        return row
+
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = _docs_norm_rebalanced(spark, sf_dir)
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from .corpus import build_encrypted_pdf
-            from .kernel.extract import extract_pdf_bytes
-
-            for b in batches:
-                out = {"doc_id": [], "text": [], "n_lines": [], "unlocked": []}
-                for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                    pdf = build_encrypted_pdf(
-                        "\n".join(_wrap_lines(norm)), method=method
-                    )
-                    res = extract_pdf_bytes(pdf)
-                    text = res.page_texts[0] if res.page_texts else ""
-                    out["doc_id"].append(doc_id)
-                    out["text"].append(text.replace("\n", " "))
-                    out["n_lines"].append(text.count("\n") + 1 if text or norm == "" else 1)
-                    out["unlocked"].append(res.error is None)
-                yield pd.DataFrame(out)
-
-        return docs.mapInPandas(
-            run, schema="doc_id long, text string, n_lines int, unlocked boolean"
+        return map_rows(
+            _docs_norm_rebalanced(spark, sf_dir),
+            make_row,
+            "doc_id long, text string, n_lines int, unlocked boolean",
         )
 
     return q
@@ -965,7 +885,7 @@ def q_pdf_extract_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
     RSA key, and asserts keyless extraction stays error='encrypted'
     (pubsec_text / pubsec_unlocked / pubsec_nokey_error columns)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from .corpus import (
             build_encrypted_pdf,
             build_pubkey_encrypted_pdf,
@@ -978,56 +898,46 @@ def q_pdf_extract_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         pub_methods = ("rc4-128", "aes-128", "aes-256")
         rkey = ExtractionOptions(recipient_key=(TEST_RSA_N, TEST_RSA_D))
-        for b in batches:
-            out = {
-                "doc_id": [], "method": [], "text": [],
-                "n_lines": [], "unlocked": [],
-                "detect_error": [], "detect_n_spans": [],
-                "can_copy": [], "can_print": [],
-                "pubsec_text": [], "pubsec_unlocked": [],
-                "pubsec_nokey_error": [],
-            }
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                method = "rc4-128" if int(doc_id) % 2 == 0 else "aes-128"
-                p = {0: -4 & ~(1 << 4), 1: -4 & ~(1 << 2), 2: -4}[
-                    int(doc_id) % 3
-                ]
-                pdf = build_encrypted_pdf(
-                    "\n".join(_wrap_lines(norm)), method=method, p=p
-                )
-                res = extract_pdf_bytes(pdf)
-                text = res.page_texts[0] if res.page_texts else ""
-                perms = document_permissions(pdf)
-                bogus = build_text_pdf(norm).replace(
-                    b"trailer\n<< /Size", b"trailer\n<< /Encrypt 9 0 R /Size", 1
-                )
-                det = extract_pdf_bytes(bogus)
-                word = next((w for w in norm.split(" ") if w), "x")
-                ppdf = build_pubkey_encrypted_pdf(
-                    word, method=pub_methods[int(doc_id) % 3])
-                pres = extract_pdf_bytes(ppdf, rkey)
-                pno = extract_pdf_bytes(ppdf)
-                out["doc_id"].append(doc_id)
-                out["method"].append(method)
-                out["text"].append(text.replace("\n", " "))
-                out["n_lines"].append(
-                    text.count("\n") + 1 if text or norm == "" else 1
-                )
-                out["unlocked"].append(res.error is None)
-                out["detect_error"].append(det.error)
-                out["detect_n_spans"].append(len(det.spans))
-                out["can_copy"].append(perms.can_copy())
-                out["can_print"].append(perms.can_print())
-                out["pubsec_text"].append(
-                    pres.page_texts[0] if pres.page_texts else "")
-                out["pubsec_unlocked"].append(pres.error is None)
-                out["pubsec_nokey_error"].append(pno.error)
-            yield pd.DataFrame(out)
 
-    docs = _docs_norm_rebalanced(spark, sf_dir)
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, method string, text string, n_lines int, "
+        def row(doc_id, norm):
+            method = "rc4-128" if doc_id % 2 == 0 else "aes-128"
+            p = {0: -4 & ~(1 << 4), 1: -4 & ~(1 << 2), 2: -4}[doc_id % 3]
+            pdf = build_encrypted_pdf(
+                "\n".join(_wrap_lines(norm)), method=method, p=p
+            )
+            res = extract_pdf_bytes(pdf)
+            text = res.page_texts[0] if res.page_texts else ""
+            perms = document_permissions(pdf)
+            bogus = build_text_pdf(norm).replace(
+                b"trailer\n<< /Size", b"trailer\n<< /Encrypt 9 0 R /Size", 1
+            )
+            det = extract_pdf_bytes(bogus)
+            word = next((w for w in norm.split(" ") if w), "x")
+            ppdf = build_pubkey_encrypted_pdf(
+                word, method=pub_methods[doc_id % 3])
+            pres = extract_pdf_bytes(ppdf, rkey)
+            pno = extract_pdf_bytes(ppdf)
+            yield (
+                doc_id,
+                method,
+                text.replace("\n", " "),
+                text.count("\n") + 1 if text or norm == "" else 1,
+                res.error is None,
+                det.error,
+                len(det.spans),
+                perms.can_copy(),
+                perms.can_print(),
+                pres.page_texts[0] if pres.page_texts else "",
+                pres.error is None,
+                pno.error,
+            )
+
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, method string, text string, n_lines int, "
         "unlocked boolean, detect_error string, detect_n_spans int, "
         "can_copy boolean, can_print boolean, pubsec_text string, "
         "pubsec_unlocked boolean, pubsec_nokey_error string",
@@ -1069,40 +979,39 @@ def q_pdf_extract_encrypted_password(spark: SparkSession, sf_dir: str) -> DataFr
     wrong password must refuse with error-as-data — all three asserted in
     one relation."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from .corpus import build_encrypted_pdf
         from .kernel.extract import extract_pdf_bytes
         from .kernel.textstate import ExtractionOptions
 
         methods = ("rc4-128", "aes-128", "rc4-40")
-        for b in batches:
-            out = {"doc_id": [], "text": [], "unlocked": [], "wrong_refused": []}
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                doc_id = int(doc_id)
-                user_pw = f"pw-{doc_id % 97}"
-                owner_pw = f"ow-{doc_id % 89}"
-                pdf = build_encrypted_pdf(
-                    "\n".join(_wrap_lines(norm)),
-                    method=methods[doc_id % 3],
-                    user_pw=user_pw.encode(),
-                    owner_pw=owner_pw.encode(),
-                )
-                pw = user_pw if doc_id % 2 == 0 else owner_pw
-                res = extract_pdf_bytes(pdf, ExtractionOptions(password=pw))
-                text = res.page_texts[0] if res.page_texts else ""
-                wrong = extract_pdf_bytes(
-                    pdf, ExtractionOptions(password="not-the-password")
-                )
-                out["doc_id"].append(doc_id)
-                out["text"].append(text.replace("\n", " "))
-                out["unlocked"].append(res.error is None)
-                out["wrong_refused"].append(wrong.error == "encrypted")
-            yield pd.DataFrame(out)
 
-    docs = _docs_norm_rebalanced(spark, sf_dir)
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, text string, unlocked boolean, wrong_refused boolean",
+        def row(doc_id, norm):
+            user_pw = f"pw-{doc_id % 97}"
+            owner_pw = f"ow-{doc_id % 89}"
+            pdf = build_encrypted_pdf(
+                "\n".join(_wrap_lines(norm)),
+                method=methods[doc_id % 3],
+                user_pw=user_pw.encode(),
+                owner_pw=owner_pw.encode(),
+            )
+            pw = user_pw if doc_id % 2 == 0 else owner_pw
+            res = extract_pdf_bytes(pdf, ExtractionOptions(password=pw))
+            text = res.page_texts[0] if res.page_texts else ""
+            wrong = extract_pdf_bytes(
+                pdf, ExtractionOptions(password="not-the-password")
+            )
+            yield (
+                doc_id, text.replace("\n", " "), res.error is None,
+                wrong.error == "encrypted",
+            )
+
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, text string, unlocked boolean, wrong_refused boolean",
     )
 
 
@@ -1197,7 +1106,7 @@ def _shingles_spark(d: DataFrame) -> DataFrame:
         f"{SHINGLE_K}, 0)), "
         f"i -> concat_ws(' ', slice(split(norm, ' '), i + 1, {SHINGLE_K})))"
     )
-    shingles = _expr_memo(d.sparkSession, "shingles", shingles_sql)
+    shingles = _expr_memo(d.sparkSession, shingles_sql)
     return d.select(
         "doc_id", F.explode(F.array_distinct(shingles)).alias("shingle")
     ).where(F.length("shingle") > 0)
@@ -1219,6 +1128,14 @@ _SHINGLES_SQL = f"""
 _MERSENNE = 2147483647
 _MH_A = [((i * 1103515245 + 12345) % (1 << 30)) | 1 for i in range(MINHASH_N)]
 _MH_B = [(i * 2654435761) % _MERSENNE for i in range(MINHASH_N)]
+
+
+# every unordered (doc_a, doc_b) pair of a bucket's doc array ``ds``
+_BUCKET_PAIRS_SQL = (
+    "flatten(transform(sequence(0, size(ds) - 2), "
+    "i -> transform(sequence(i + 1, size(ds) - 1), "
+    "j -> struct(ds[i] AS doc_a, ds[j] AS doc_b))))"
+)
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1245,7 +1162,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"cast(get(mh, b * {rows_per_band} + {r}) AS string)"
         for r in range(rows_per_band)
     )
-    bands_arr = _expr_memo(spark, "minhash_bands", f"""
+    bands_arr = _expr_memo(spark, f"""
         get(transform(array(split(norm, ' ')), ws ->
           get(transform(array(
                 transform(
@@ -1309,12 +1226,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("ds")
     )
     k = F.size("ds")
-    pairs_arr = _expr_memo(
-        spark, "bucket_pairs",
-        "flatten(transform(sequence(0, size(ds) - 2), "
-        "i -> transform(sequence(i + 1, size(ds) - 1), "
-        "j -> struct(ds[i] AS doc_a, ds[j] AS doc_b))))",
-    )
+    pairs_arr = _expr_memo(spark, _BUCKET_PAIRS_SQL)
     pairs = (
         buckets.select(F.explode(pairs_arr).alias("p"))
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
@@ -1389,7 +1301,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hs_sql = f"transform(filter(split(norm, ' '), w -> length(w) > 0), w -> {h})"
     hashed = d.select(
-        "doc_id", _expr_memo(spark, "simhash_hs", hs_sql).alias("hs")
+        "doc_id", _expr_memo(spark, hs_sql).alias("hs")
     )
 
     def vote(bit: int) -> str:
@@ -1405,7 +1317,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in range(SIMHASH_BITS)
     )
     return hashed.select(
-        "doc_id", _expr_memo(spark, "simhash_sig", sig_sql).alias("simhash")
+        "doc_id", _expr_memo(spark, sig_sql).alias("simhash")
     )
 
 
@@ -1563,12 +1475,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_sh"))
     )
     k = F.size("ds")
-    pairs_arr = _expr_memo(
-        spark, "bucket_pairs",
-        "flatten(transform(sequence(0, size(ds) - 2), "
-        "i -> transform(sequence(i + 1, size(ds) - 1), "
-        "j -> struct(ds[i] AS doc_a, ds[j] AS doc_b))))",
-    )
+    pairs_arr = _expr_memo(spark, _BUCKET_PAIRS_SQL)
     inter = (
         g.where(k >= 2)
         .select(F.explode(pairs_arr).alias("p"))
@@ -1681,7 +1588,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_a",
             "vec_b",
-            F.round(_cos_spark(F.col("va"), F.col("vb")), 6).alias("cos"),
+            _expr_memo(spark, f"round({_cos_sql('va', 'vb')}, 6)").alias("cos"),
         )
         .where(F.col("cos") >= EMB_COS_THRESHOLD)
     )
@@ -1741,36 +1648,11 @@ ANN_TOPK = 5
 IVF_N_CENTROIDS = 8
 
 
-def _dot_spark(a, b):
-    """Sequential-fold dot product — the exact summation order the DuckDB
-    oracle's list_dot_product uses; shared by every cosine site."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _l2norm_spark(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def _cos_spark(a, b):
-    return _dot_spark(a, b) / (_l2norm_spark(a) * _l2norm_spark(b))
-
-
-# SQL-text twins of the three folds above (r11 follow-up): the F-API
-# lambda builders cost ~10-80 ms of py4j chatter per call site per
-# issuance; a single parsed expression (memoized via _expr_memo) builds
-# in microseconds. ``double(x)`` ≡ ``cast(x as double)`` and
-# ``double(0)`` ≡ ``lit(0.0)`` — same fold order, same seed type, so
-# values are bit-identical (snapshot-pinned at sf0.01/sf0.1).
+# Cosine folds as SQL text, parsed once per application via _expr_memo
+# (r11): the F-API lambda builders cost ~10-80 ms of py4j chatter per
+# call site per issuance; a single parsed expression builds in
+# microseconds. The dot product is a sequential fold — the exact
+# summation order the DuckDB oracle's list_dot_product uses.
 def _dot_sql(a: str, b: str) -> str:
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> double(x) * double(y)), "
@@ -1787,6 +1669,10 @@ def _l2norm_sql(a: str) -> str:
 
 def _cos_sql(a: str, b: str) -> str:
     return f"{_dot_sql(a, b)} / ({_l2norm_sql(a)} * {_l2norm_sql(b)})"
+
+
+# query x candidate cosine over precomputed norms nq / nv
+_ANN_PAIR_COS_SQL = f"round({_dot_sql('qv', 'embedding')} / (nq * nv), 6)"
 
 
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1806,7 +1692,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # embeddings file is one task otherwise (same guard as the per-doc
     # Python operators — narrow rows, bounded shuffle, no-op at
     # production split counts)
-    nv_expr = _expr_memo(spark, "ann_l2_emb", _l2norm_sql("embedding"))
+    nv_expr = _expr_memo(spark, _l2norm_sql("embedding"))
     en = _emb_rebalanced(spark, sf_dir).select(
         "vec_id", "embedding", nv_expr.alias("nv")
     )
@@ -1821,10 +1707,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            _expr_memo(
-                spark, "ann_pair_cos",
-                f"round({_dot_sql('qv', 'embedding')} / (nq * nv), 6)",
-            ).alias("cos"),
+            _expr_memo(spark, _ANN_PAIR_COS_SQL).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -1895,10 +1778,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            _expr_memo(
-                spark, "ann_pair_cos",
-                f"round({_dot_sql('qv', 'embedding')} / (nq * nv), 6)",
-            ).alias("cos"),
+            _expr_memo(spark, _ANN_PAIR_COS_SQL).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
@@ -1969,11 +1849,7 @@ def _assign_to_centroids(e: DataFrame, cents: DataFrame) -> DataFrame:
     spark = e.sparkSession
     carr = cents.select(
         "centroid_id", "cv",
-        _expr_memo(
-            spark, "assign_ncv",
-            "sqrt(aggregate(transform(cv, x -> double(x) * double(x)),"
-            " double(0), (acc, v) -> acc + v))",
-        ).alias("ncv"),
+        _expr_memo(spark, _l2norm_sql("cv")).alias("ncv"),
     ).agg(
         F.array_sort(
             F.collect_list(F.struct("centroid_id", "cv", "ncv"))
@@ -1987,7 +1863,7 @@ def _assign_to_centroids(e: DataFrame, cents: DataFrame) -> DataFrame:
     # exactly the F-API tree this replaces (snapshot-pinned): same fold
     # order, same round(dot/(nv*ncv), 6), same NaN-aware comparisons and
     # lowest-centroid tie-break.
-    picked = _expr_memo(spark, "assign_pick", """
+    picked = _expr_memo(spark, """
         get(transform(array(
             sqrt(aggregate(transform(embedding, x -> double(x) * double(x)),
                            double(0), (acc, v) -> acc + v))
@@ -2041,9 +1917,7 @@ def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
     c0 = e.where(F.col("vec_id") < IVF_N_CENTROIDS).select(
         F.col("vec_id").alias("centroid_id"),
-        _expr_memo(
-            spark, "emb_as_double", "transform(embedding, x -> double(x))"
-        ).alias("cv"),
+        _expr_memo(spark, "transform(embedding, x -> double(x))").alias("cv"),
     )
     # parallelize both map-side E-steps over a single-row-group scan (see
     # q_ann_cosine_topk)
@@ -2071,7 +1945,7 @@ def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = e.where(F.col("vec_id") < ANN_N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
-        _expr_memo(spark, "ann_l2_emb", _l2norm_sql("embedding")).alias("nq"),
+        _expr_memo(spark, _l2norm_sql("embedding")).alias("nq"),
     )
     wp = Window.partitionBy("query_id").orderBy(
         F.desc("pcos"), F.asc("centroid_id")
@@ -2083,9 +1957,7 @@ def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qv",
             "nq",
             "centroid_id",
-            _expr_memo(
-                spark, "kmeans_pcos", f"round({_cos_sql('qv', 'cv')}, 6)"
-            ).alias("pcos"),
+            _expr_memo(spark, f"round({_cos_sql('qv', 'cv')}, 6)").alias("pcos"),
         )
         .withColumn("r", F.row_number().over(wp))
         .where(F.col("r") <= IVF_KMEANS_NPROBE)
@@ -2097,10 +1969,7 @@ def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            _expr_memo(
-                spark, "ann_pair_cos",
-                f"round({_dot_sql('qv', 'embedding')} / (nq * nv), 6)",
-            ).alias("cos"),
+            _expr_memo(spark, _ANN_PAIR_COS_SQL).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -2569,33 +2438,27 @@ def q_html_extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     template plus {HTML_LINK_WORDS} doc-derived anchors; the oracle
     enumerates the template's static links and recomputes the derived
     ones from the word array."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from .corpus import build_html_doc
         from .kernel.html_extract import extract_html_links
 
-        for b in batches:
-            out = {"doc_id": [], "link_idx": [], "href": [], "anchor": []}
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                words = [w for w in (norm or "").split(" ") if w]
-                extra = [
-                    (f"https://ex.test/{w[:12]}", w[:12])
-                    for w in words[:HTML_LINK_WORDS]
-                ]
-                html = build_html_doc(norm, extra_links=extra)
-                for i, (href, anchor) in enumerate(
-                    extract_html_links(html)
-                ):
-                    out["doc_id"].append(doc_id)
-                    out["link_idx"].append(i)
-                    out["href"].append(href)
-                    out["anchor"].append(anchor)
-            yield pd.DataFrame(out)
+        def row(doc_id, norm):
+            words = [w for w in (norm or "").split(" ") if w]
+            extra = [
+                (f"https://ex.test/{w[:12]}", w[:12])
+                for w in words[:HTML_LINK_WORDS]
+            ]
+            html = build_html_doc(norm, extra_links=extra)
+            for i, (href, anchor) in enumerate(extract_html_links(html)):
+                yield doc_id, i, href, anchor
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, link_idx int, href string, anchor string",
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, link_idx int, href string, anchor string",
     )
 
 
@@ -2653,98 +2516,86 @@ def q_pdf_extract_annotations(spark: SparkSession, sf_dir: str) -> DataFrame:
     linkage, /Open state, own /Rect) that the extractor must FOLD into
     the parent's row (popup_open encoded -1 none / 0 closed / 1 open)
     rather than emit standalone — 3 rows per doc, not 4."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from .corpus import build_pdf_with_content_stream, escape_pdf_string
         from .kernel.extract import extract_annotations
 
-        cols = [
-            "page_idx", "subtype", "uri", "action_type", "action_target",
-            "contents", "rect", "author", "n_quads", "covered_text",
-        ]
-        for b in batches:
-            out = {c: [] for c in ["doc_id", *cols, "popup_open", "popup_rect"]}
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                words = [w for w in (norm or "").split(" ") if w]
-                first = words[0][:12] if words else "none"
-                note = " ".join(words[:ANNOT_WORDS])
-                # four fixed-anchor body words at x=100+100i (12pt, y=700):
-                # quad x-range [195, 395] covers the CENTers of words 1-2
-                # for any word width <= 190pt, excludes words 0 and 3
-                body4 = [
-                    (words[i][:12] if len(words) > i else f"w{i}")
-                    for i in range(4)
-                ]
-                ops = b"BT /F1 12 Tf " + b" ".join(
-                    b"1 0 0 1 %d 700 Tm (%s) Tj"
-                    % (100 + 100 * i, escape_pdf_string(w))
-                    for i, w in enumerate(body4)
-                ) + b" ET"
-                uri = f"https://example.com/{first}"
-                fw = escape_pdf_string(first)
-                variant = doc_id % 4
-                if variant == 0:
-                    act = b"<< /S /URI /URI (%s) >>" % uri.encode("latin-1")
-                elif variant == 1:
-                    act = (
-                        b"<< /S /GoToR /F (other-%s.pdf) /D (sec-1) >>" % fw
-                    )
-                elif variant == 2:
-                    act = b"<< /S /Launch /F << /F (app-%s) >> >>" % fw
-                else:
-                    act = b"<< /S /Named /N /NextPage >>"
-                link = (
-                    b"<< /Type /Annot /Subtype /Link /Rect [0 0 100 20] "
-                    b"/A %s >>" % act
-                )
-                text_a = (
-                    b"<< /Type /Annot /Subtype /Text /Rect [0 30 100 50] "
-                    b"/Contents (%s) /Popup 11 0 R >>" % escape_pdf_string(note)
-                )
-                popup = (
-                    b"<< /Type /Annot /Subtype /Popup /Rect "
-                    b"[400 695 560 795] /Parent 9 0 R /Open %s >>"
-                    % (b"true" if doc_id % 2 == 0 else b"false")
-                )
-                hl = (
-                    b"<< /Type /Annot /Subtype /Highlight "
-                    b"/Rect [195 695 395 715] /T (rev-%d) "
-                    b"/QuadPoints [195 695 395 695 395 715 195 715] >>"
-                    % (doc_id % 5)
-                )
-                pdf = build_pdf_with_content_stream(
-                    ops, extra_objects={8: link, 9: text_a, 10: hl, 11: popup},
-                )
-                pdf = pdf.replace(
-                    b"/Contents 5 0 R",
-                    b"/Annots [8 0 R 9 0 R 10 0 R 11 0 R] /Contents 5 0 R",
-                    1,
-                )
-                for a in extract_annotations(pdf):
-                    out["doc_id"].append(doc_id)
-                    out["rect"].append(
-                        ",".join(str(int(v)) for v in a["rect"])
-                        if a["rect"] else None
-                    )
-                    # total encodings for the recorded relation (the
-                    # outline dest lesson: NULL numerics hash
-                    # None-vs-NaN across Spark/DuckDB)
-                    out["popup_open"].append(
-                        -1 if a["popup_open"] is None else int(a["popup_open"])
-                    )
-                    out["popup_rect"].append(
-                        ",".join(str(int(v)) for v in a["popup_rect"])
-                        if a["popup_rect"] else None
-                    )
-                    for c in cols:
-                        if c != "rect":
-                            out[c].append(a[c])
-            yield pd.DataFrame(out)
+        def rect(r):
+            return ",".join(str(int(v)) for v in r) if r else None
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, page_idx int, subtype string, uri string, "
+        def row(doc_id, norm):
+            words = [w for w in (norm or "").split(" ") if w]
+            first = words[0][:12] if words else "none"
+            note = " ".join(words[:ANNOT_WORDS])
+            # four fixed-anchor body words at x=100+100i (12pt, y=700):
+            # quad x-range [195, 395] covers the CENTers of words 1-2
+            # for any word width <= 190pt, excludes words 0 and 3
+            body4 = [
+                (words[i][:12] if len(words) > i else f"w{i}")
+                for i in range(4)
+            ]
+            ops = b"BT /F1 12 Tf " + b" ".join(
+                b"1 0 0 1 %d 700 Tm (%s) Tj"
+                % (100 + 100 * i, escape_pdf_string(w))
+                for i, w in enumerate(body4)
+            ) + b" ET"
+            uri = f"https://example.com/{first}"
+            fw = escape_pdf_string(first)
+            variant = doc_id % 4
+            if variant == 0:
+                act = b"<< /S /URI /URI (%s) >>" % uri.encode("latin-1")
+            elif variant == 1:
+                act = b"<< /S /GoToR /F (other-%s.pdf) /D (sec-1) >>" % fw
+            elif variant == 2:
+                act = b"<< /S /Launch /F << /F (app-%s) >> >>" % fw
+            else:
+                act = b"<< /S /Named /N /NextPage >>"
+            link = (
+                b"<< /Type /Annot /Subtype /Link /Rect [0 0 100 20] "
+                b"/A %s >>" % act
+            )
+            text_a = (
+                b"<< /Type /Annot /Subtype /Text /Rect [0 30 100 50] "
+                b"/Contents (%s) /Popup 11 0 R >>" % escape_pdf_string(note)
+            )
+            popup = (
+                b"<< /Type /Annot /Subtype /Popup /Rect "
+                b"[400 695 560 795] /Parent 9 0 R /Open %s >>"
+                % (b"true" if doc_id % 2 == 0 else b"false")
+            )
+            hl = (
+                b"<< /Type /Annot /Subtype /Highlight "
+                b"/Rect [195 695 395 715] /T (rev-%d) "
+                b"/QuadPoints [195 695 395 695 395 715 195 715] >>"
+                % (doc_id % 5)
+            )
+            pdf = build_pdf_with_content_stream(
+                ops, extra_objects={8: link, 9: text_a, 10: hl, 11: popup},
+            )
+            pdf = pdf.replace(
+                b"/Contents 5 0 R",
+                b"/Annots [8 0 R 9 0 R 10 0 R 11 0 R] /Contents 5 0 R",
+                1,
+            )
+            for a in extract_annotations(pdf):
+                # total encodings for the recorded relation (the outline
+                # dest lesson: NULL numerics hash None-vs-NaN across
+                # Spark/DuckDB)
+                popup_open = -1 if a["popup_open"] is None else int(a["popup_open"])
+                yield (
+                    doc_id, a["page_idx"], a["subtype"], a["uri"],
+                    a["action_type"], a["action_target"], a["contents"],
+                    rect(a["rect"]), a["author"], a["n_quads"],
+                    a["covered_text"], popup_open, rect(a["popup_rect"]),
+                )
+
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, page_idx int, subtype string, uri string, "
         "action_type string, action_target string, "
         "contents string, rect string, author string, n_quads int, "
         "covered_text string, popup_open int, popup_rect string",
@@ -2806,54 +2657,46 @@ def q_pdf_extract_keyvalues(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair (two runs on one baseline with a wide gap); the detector must
     recover all four with the right pattern class and confidence. Values
     derive from the word array so the oracle recomputes every pair."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from .corpus import build_pdf_with_content_stream, escape_pdf_string
         from .kernel.extract import extract_pdf_bytes
         from .kernel.structured import detect_key_value_pairs
         from .kernel.textstate import ExtractionOptions
 
         opts = ExtractionOptions(preserve_layout=True)
-        for b in batches:
-            out = {
-                "doc_id": [], "pair_idx": [], "key": [], "value": [],
-                "pattern": [], "confidence": [],
-            }
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                words = [w for w in (norm or "").split(" ") if w]
 
-                def wv(i):
-                    return words[i % len(words)][:12] if words else "x"
+        def row(doc_id, norm):
+            words = [w for w in (norm or "").split(" ") if w]
 
-                parts = []
-                y = 720
-                for i in range(KV_COLON_PAIRS):
-                    parts.append(
-                        b"BT /F1 12 Tf 72 %d Td (k%d: %s) Tj ET"
-                        % (y, i, escape_pdf_string(wv(i)))
-                    )
-                    y -= 20
-                parts.append(b"BT /F1 12 Tf 72 640 Td (label) Tj ET")
+            def wv(i):
+                return words[i % len(words)][:12] if words else "x"
+
+            parts = []
+            y = 720
+            for i in range(KV_COLON_PAIRS):
                 parts.append(
-                    b"BT /F1 12 Tf 300 640 Td (%s) Tj ET"
-                    % escape_pdf_string(wv(KV_COLON_PAIRS))
+                    b"BT /F1 12 Tf 72 %d Td (k%d: %s) Tj ET"
+                    % (y, i, escape_pdf_string(wv(i)))
                 )
-                pdf = build_pdf_with_content_stream(b" ".join(parts))
-                res = extract_pdf_bytes(pdf, opts)
-                kvs = detect_key_value_pairs(res.page_fragments[0])
-                for i, kv in enumerate(kvs):
-                    out["doc_id"].append(doc_id)
-                    out["pair_idx"].append(i)
-                    out["key"].append(kv.key)
-                    out["value"].append(kv.value)
-                    out["pattern"].append(kv.pattern)
-                    out["confidence"].append(kv.confidence)
-            yield pd.DataFrame(out)
+                y -= 20
+            parts.append(b"BT /F1 12 Tf 72 640 Td (label) Tj ET")
+            parts.append(
+                b"BT /F1 12 Tf 300 640 Td (%s) Tj ET"
+                % escape_pdf_string(wv(KV_COLON_PAIRS))
+            )
+            pdf = build_pdf_with_content_stream(b" ".join(parts))
+            res = extract_pdf_bytes(pdf, opts)
+            kvs = detect_key_value_pairs(res.page_fragments[0])
+            for i, kv in enumerate(kvs):
+                yield doc_id, i, kv.key, kv.value, kv.pattern, kv.confidence
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, pair_idx int, key string, value string, "
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, pair_idx int, key string, value string, "
         "pattern string, confidence double",
     )
 
@@ -2895,9 +2738,8 @@ def q_pdf_extract_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     output row per page with the analyzer's classification and counts; the
     OCR round-trip columns ride on the page-0 row (the scanned class is
     exactly the OCR trigger)."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from .corpus import build_composition_pdf, build_scanned_pdf
         from .kernel.extract import analyze_page_composition, extract_pdf_bytes
         from .kernel.textstate import ExtractionOptions
@@ -2908,42 +2750,32 @@ def q_pdf_extract_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
             return image_bytes.decode("utf-8", "replace")
 
         opts = ExtractionOptions(ocr_provider=provider)
-        cols = [
-            "doc_id", "page_idx", "page_type", "image_count",
-            "text_fragments", "ocr_text", "n_images", "n_text_spans",
-        ]
-        for b in batches:
-            out = {c: [] for c in cols}
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                pdf = build_scanned_pdf((norm or "").encode("utf-8"))
-                res = extract_pdf_bytes(pdf, opts)
-                comp = analyze_page_composition(
-                    build_composition_pdf((norm or "").encode("utf-8"))
-                )
-                # doc-level OCR columns repeat on every page row (NULL
-                # ints would promote to float64 in pandas and hash-mismatch
-                # the oracle — the known NULL-vs-NaN trap)
-                ocr_text = " ".join(
-                    t for k, t, _ in res.spans if k == "text" and t
-                )
-                n_images = sum(1 for k, _, _ in res.spans if k == "image")
-                n_text = sum(
-                    1 for k, t, _ in res.spans if k == "text" and t
-                )
-                for row in comp:
-                    out["doc_id"].append(doc_id)
-                    out["page_idx"].append(row["page_idx"])
-                    out["page_type"].append(row["page_type"])
-                    out["image_count"].append(row["image_count"])
-                    out["text_fragments"].append(row["text_fragments"])
-                    out["ocr_text"].append(ocr_text)
-                    out["n_images"].append(n_images)
-                    out["n_text_spans"].append(n_text)
-            yield pd.DataFrame(out)
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, page_idx int, page_type string, "
+        def row(doc_id, norm):
+            pdf = build_scanned_pdf((norm or "").encode("utf-8"))
+            res = extract_pdf_bytes(pdf, opts)
+            comp = analyze_page_composition(
+                build_composition_pdf((norm or "").encode("utf-8"))
+            )
+            # doc-level OCR columns repeat on every page row (NULL ints
+            # would promote to float64 in pandas and hash-mismatch the
+            # oracle — the known NULL-vs-NaN trap)
+            ocr_text = " ".join(t for k, t, _ in res.spans if k == "text" and t)
+            n_images = sum(1 for k, _, _ in res.spans if k == "image")
+            n_text = sum(1 for k, t, _ in res.spans if k == "text" and t)
+            for page in comp:
+                yield (
+                    doc_id, page["page_idx"], page["page_type"],
+                    page["image_count"], page["text_fragments"], ocr_text,
+                    n_images, n_text,
+                )
+
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, page_idx int, page_type string, "
         "image_count int, text_fragments int, ocr_text string, "
         "n_images int, n_text_spans int",
     )
@@ -2977,57 +2809,45 @@ def q_pdf_extract_outline(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact pre-order sequence (ord), nesting level, decoded title, and
     /Dest-resolved page index. Titles: top i = 'sec-i-w(i*3)', child j of
     i = 'sub-i.j-w(i*3+1+j)' over the word array with modulo."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from .corpus import build_outline_pdf
         from .kernel.extract import extract_outline
 
-        for b in batches:
-            out = {
-                "doc_id": [], "ord": [], "level": [],
-                "title": [], "page_idx": [], "fit_type": [],
-                "dest_x": [], "dest_y": [], "dest_zoom": [],
-                "dest_rect": [],
-            }
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                words = [w for w in (norm or "").split(" ") if w]
-                nw = len(words)
+        def row(doc_id, norm):
+            words = [w for w in (norm or "").split(" ") if w]
+            nw = len(words)
 
-                def w(k):
-                    return words[k % nw] if nw else "x"
+            def w(k):
+                return words[k % nw] if nw else "x"
 
-                sections = [
-                    (
-                        f"sec-{i}-{w(i * 3)}",
-                        [
-                            f"sub-{i}.{j}-{w(i * 3 + 1 + j)}"
-                            for j in range(OUTLINE_KIDS)
-                        ],
-                    )
-                    for i in range(OUTLINE_TOPS)
+            sections = [
+                (
+                    f"sec-{i}-{w(i * 3)}",
+                    [f"sub-{i}.{j}-{w(i * 3 + 1 + j)}" for j in range(OUTLINE_KIDS)],
+                )
+                for i in range(OUTLINE_TOPS)
+            ]
+            for item in extract_outline(build_outline_pdf(sections)):
+                # total encoding for the recorded relation: an unspecified
+                # coordinate (PDF null) becomes -1.0 on BOTH sides — NULL
+                # doubles hash None-vs-NaN across Spark/DuckDB (the
+                # dedup_components COALESCE lesson)
+                dest = [
+                    -1.0 if item[c] is None else item[c]
+                    for c in ("dest_x", "dest_y", "dest_zoom")
                 ]
-                pdf = build_outline_pdf(sections)
-                for item in extract_outline(pdf):
-                    out["doc_id"].append(doc_id)
-                    out["ord"].append(item["ord"])
-                    out["level"].append(item["level"])
-                    out["title"].append(item["title"])
-                    out["page_idx"].append(item["page_idx"])
-                    out["fit_type"].append(item["fit_type"])
-                    # total encoding for the recorded relation: an
-                    # unspecified coordinate (PDF null) becomes -1.0 on
-                    # BOTH sides — NULL doubles hash None-vs-NaN across
-                    # Spark/DuckDB (the dedup_components COALESCE lesson)
-                    for c in ("dest_x", "dest_y", "dest_zoom"):
-                        v = item[c]
-                        out[c].append(-1.0 if v is None else v)
-                    out["dest_rect"].append(item["dest_rect"])
-            yield pd.DataFrame(out)
+                yield (
+                    doc_id, item["ord"], item["level"], item["title"],
+                    item["page_idx"], item["fit_type"], *dest, item["dest_rect"],
+                )
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, ord int, level int, title string, "
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, ord int, level int, title string, "
         "page_idx int, fit_type string, dest_x double, dest_y double, "
         "dest_zoom double, dest_rect string",
     )
@@ -3088,66 +2908,59 @@ def q_pdf_extract_form_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     imprint on doc_id%8==5 (ts_valid must read 0 while the signature
     itself stays valid).  The signature detail repeats on every field
     row (doc-level columns)."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from .corpus import build_form_pdf
         from .kernel.extract import extract_form_fields, extract_signatures
 
         key_rot = [("rsa", "SHA-256"), ("rsa", "SHA-512"), ("ec-p256", "SHA-256")]
-        for b in batches:
-            out = {"doc_id": [], "field_name": [], "ftype": [], "value": [],
-                   "sig_signer": [], "sig_alg": [], "sig_valid": [],
-                   "sig_attrs": [], "sig_incr": [], "ts_valid": [],
-                   "ts_time": []}
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                words = [w for w in (norm or "").split(" ") if w]
-                nw = len(words)
 
-                def w(k):
-                    return words[k % nw] if nw else "x"
+        def row(doc_id, norm):
+            words = [w for w in (norm or "").split(" ") if w]
+            nw = len(words)
 
-                did = int(doc_id)
-                key_type, digest_alg = key_rot[did % 3]
-                pdf = build_form_pdf(
-                    text_value=w(0),
-                    checked=did % 2 == 0,
-                    grp_value=w(1),
-                    b_value=w(2),
-                    sign=dict(
-                        signer_cn=f"Signer-{did % 5}",
-                        key_type=key_type,
-                        digest_alg=digest_alg,
-                        signed_attrs=did % 2 == 1,
-                        tamper_find=b"form)" if did % 10 == 3 else None,
-                        incremental_tail=b"% upd\n" if did % 7 == 0 else b"",
-                        timestamp=did % 8 == 1,
-                        timestamp_bad_imprint=did % 8 == 5,
-                    ),
-                )
-                sig = extract_signatures(pdf)[0]
-                for fld in extract_form_fields(pdf):
-                    out["doc_id"].append(doc_id)
-                    out["field_name"].append(fld["name"])
-                    out["ftype"].append(fld["ftype"])
-                    out["value"].append(fld["value"])
-                    out["sig_signer"].append(sig["signer"])
-                    out["sig_alg"].append(sig["signature_algorithm"])
-                    out["sig_valid"].append(int(sig["signature_valid"]))
-                    # signed attrs iff the CMS carries a signingTime attr
-                    out["sig_attrs"].append(int(sig["cms_signing_time"] is not None))
-                    out["sig_incr"].append(int(sig["incremental_update"]))
-                    # -1 = no token (a NULL int would reach pandas as
-                    # NaN-float on the DuckDB side and break the hash)
-                    out["ts_valid"].append(
-                        -1 if sig["ts_valid"] is None
-                        else int(sig["ts_valid"]))
-                    out["ts_time"].append(sig["ts_time"])
-            yield pd.DataFrame(out)
+            def w(k):
+                return words[k % nw] if nw else "x"
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, field_name string, ftype string, value string, "
+            key_type, digest_alg = key_rot[doc_id % 3]
+            pdf = build_form_pdf(
+                text_value=w(0),
+                checked=doc_id % 2 == 0,
+                grp_value=w(1),
+                b_value=w(2),
+                sign=dict(
+                    signer_cn=f"Signer-{doc_id % 5}",
+                    key_type=key_type,
+                    digest_alg=digest_alg,
+                    signed_attrs=doc_id % 2 == 1,
+                    tamper_find=b"form)" if doc_id % 10 == 3 else None,
+                    incremental_tail=b"% upd\n" if doc_id % 7 == 0 else b"",
+                    timestamp=doc_id % 8 == 1,
+                    timestamp_bad_imprint=doc_id % 8 == 5,
+                ),
+            )
+            sig = extract_signatures(pdf)[0]
+            sig_cols = (
+                sig["signer"],
+                sig["signature_algorithm"],
+                int(sig["signature_valid"]),
+                # signed attrs iff the CMS carries a signingTime attr
+                int(sig["cms_signing_time"] is not None),
+                int(sig["incremental_update"]),
+                # -1 = no token (a NULL int would reach pandas as
+                # NaN-float on the DuckDB side and break the hash)
+                -1 if sig["ts_valid"] is None else int(sig["ts_valid"]),
+                sig["ts_time"],
+            )
+            for fld in extract_form_fields(pdf):
+                yield (doc_id, fld["name"], fld["ftype"], fld["value"], *sig_cols)
+
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, field_name string, ftype string, value string, "
         "sig_signer string, sig_alg string, sig_valid int, sig_attrs int, "
         "sig_incr int, ts_valid int, ts_time string",
     )
@@ -3201,6 +3014,65 @@ TABLE_COLS = 3
 TABLE_WORD_CLIP = 12  # cell words clipped so centers stay inside cells
 
 
+def _table_cells(words: list[str]) -> list[list[str]]:
+    """The TABLE_ROWS x TABLE_COLS grid of a document's words (clipped so
+    centers stay inside cells; 'x' for a wordless document)."""
+    nw = len(words)
+    return [
+        [
+            words[(r * TABLE_COLS + c) % nw][:TABLE_WORD_CLIP] if nw else "x"
+            for c in range(TABLE_COLS)
+        ]
+        for r in range(TABLE_ROWS)
+    ]
+
+
+def _tables(spark: SparkSession, sf_dir: str, bordered_of) -> DataFrame:
+    """Per-cell table-detection rows: each document renders a
+    TABLE_ROWS x TABLE_COLS grid of its own words, with stroked border
+    lines when ``bordered_of(doc_id)`` (grid recovered from vector-line
+    clustering) or without (left-edge + baseline alignment)."""
+
+    def make_row():
+        from .corpus import build_borderless_table_pdf, build_table_pdf
+        from .kernel.extract import extract_pdf_bytes
+        from .kernel.pages import flatten_page_tree, page_content
+        from .kernel.reader import PdfReader
+        from .kernel.tables import detect_borderless_tables, detect_page_tables
+        from .kernel.textstate import ExtractionOptions
+
+        opts = ExtractionOptions(preserve_layout=True)
+
+        def row(doc_id, norm):
+            bordered = bordered_of(doc_id)
+            cells = _table_cells([w for w in (norm or "").split(" ") if w])
+            if bordered:
+                pdf = build_table_pdf(cells)
+                res = extract_pdf_bytes(pdf, opts)
+                reader = PdfReader(pdf)
+                content = page_content(reader, flatten_page_tree(reader)[0])
+                tables = detect_page_tables(content, res.page_fragments[0])
+            else:
+                pdf = build_borderless_table_pdf(cells)
+                res = extract_pdf_bytes(pdf, opts)
+                tables = detect_borderless_tables(res.page_fragments[0])
+            for t in tables:
+                for cell in t.cells:
+                    yield (
+                        doc_id, bordered, cell.row, cell.column, cell.text,
+                        t.rows, t.columns,
+                    )
+
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, bordered boolean, row_idx int, col_idx int, "
+        "cell_text string, n_rows int, n_cols int",
+    )
+
+
 def q_pdf_extract_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bordered-table detection end-to-end: each document renders a 4x3
     grid (stroked m/l lines + one text run per cell, cell text drawn from
@@ -3210,56 +3082,7 @@ def q_pdf_extract_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     center containment (text/table_detection.rs). The oracle recomputes
     every cell's text from the word array + grid constants — proving cell
     geometry, line clustering, and text assignment all at once."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .corpus import build_table_pdf
-        from .kernel.extract import extract_pdf_bytes
-        from .kernel.pages import flatten_page_tree, page_content
-        from .kernel.reader import PdfReader
-        from .kernel.tables import detect_page_tables
-        from .kernel.textstate import ExtractionOptions
-
-        opts = ExtractionOptions(preserve_layout=True)
-        for b in batches:
-            out = {
-                "doc_id": [], "row_idx": [], "col_idx": [],
-                "cell_text": [], "n_rows": [], "n_cols": [],
-            }
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                words = [w for w in (norm or "").split(" ") if w]
-                nw = len(words)
-                cells = [
-                    [
-                        (
-                            words[(r * TABLE_COLS + c) % nw][:TABLE_WORD_CLIP]
-                            if nw
-                            else "x"
-                        )
-                        for c in range(TABLE_COLS)
-                    ]
-                    for r in range(TABLE_ROWS)
-                ]
-                pdf = build_table_pdf(cells)
-                res = extract_pdf_bytes(pdf, opts)
-                reader = PdfReader(pdf)
-                content = page_content(reader, flatten_page_tree(reader)[0])
-                tables = detect_page_tables(content, res.page_fragments[0])
-                for t in tables:
-                    for cell in t.cells:
-                        out["doc_id"].append(doc_id)
-                        out["row_idx"].append(cell.row)
-                        out["col_idx"].append(cell.column)
-                        out["cell_text"].append(cell.text)
-                        out["n_rows"].append(t.rows)
-                        out["n_cols"].append(t.columns)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, row_idx int, col_idx int, cell_text string, "
-        "n_rows int, n_cols int",
-    )
+    return _tables(spark, sf_dir, lambda doc_id: True).drop("bordered")
 
 
 ORACLE_TABLES = f"""
@@ -3288,51 +3111,7 @@ def q_pdf_extract_tables_borderless(spark: SparkSession, sf_dir: str) -> DataFra
     recovered purely from repeated left-edge alignment and rows from
     baseline clusters. Same oracle shape — every cell recomputed from the
     word array + geometry constants."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .corpus import build_borderless_table_pdf
-        from .kernel.extract import extract_pdf_bytes
-        from .kernel.tables import detect_borderless_tables
-        from .kernel.textstate import ExtractionOptions
-
-        opts = ExtractionOptions(preserve_layout=True)
-        for b in batches:
-            out = {
-                "doc_id": [], "row_idx": [], "col_idx": [],
-                "cell_text": [], "n_rows": [], "n_cols": [],
-            }
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                words = [w for w in (norm or "").split(" ") if w]
-                nw = len(words)
-                cells = [
-                    [
-                        (
-                            words[(r * TABLE_COLS + c) % nw][:TABLE_WORD_CLIP]
-                            if nw
-                            else "x"
-                        )
-                        for c in range(TABLE_COLS)
-                    ]
-                    for r in range(TABLE_ROWS)
-                ]
-                pdf = build_borderless_table_pdf(cells)
-                res = extract_pdf_bytes(pdf, opts)
-                for t in detect_borderless_tables(res.page_fragments[0]):
-                    for cell in t.cells:
-                        out["doc_id"].append(doc_id)
-                        out["row_idx"].append(cell.row)
-                        out["col_idx"].append(cell.column)
-                        out["cell_text"].append(cell.text)
-                        out["n_rows"].append(t.rows)
-                        out["n_cols"].append(t.columns)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, row_idx int, col_idx int, cell_text string, "
-        "n_rows int, n_cols int",
-    )
+    return _tables(spark, sf_dir, lambda doc_id: False).drop("bordered")
 
 
 def q_pdf_extract_tables_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3344,63 +3123,7 @@ def q_pdf_extract_tables_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovered purely from left-edge + baseline alignment). Every cell's
     text is recomputed by the oracle from the word array + geometry
     constants. Consolidates the two single-family registry entries."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .corpus import build_borderless_table_pdf, build_table_pdf
-        from .kernel.extract import extract_pdf_bytes
-        from .kernel.pages import flatten_page_tree, page_content
-        from .kernel.reader import PdfReader
-        from .kernel.tables import detect_borderless_tables, detect_page_tables
-        from .kernel.textstate import ExtractionOptions
-
-        opts = ExtractionOptions(preserve_layout=True)
-        for b in batches:
-            out = {
-                "doc_id": [], "bordered": [], "row_idx": [], "col_idx": [],
-                "cell_text": [], "n_rows": [], "n_cols": [],
-            }
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                bordered = int(doc_id) % 2 == 0
-                words = [w for w in (norm or "").split(" ") if w]
-                nw = len(words)
-                cells = [
-                    [
-                        (
-                            words[(r * TABLE_COLS + c) % nw][:TABLE_WORD_CLIP]
-                            if nw
-                            else "x"
-                        )
-                        for c in range(TABLE_COLS)
-                    ]
-                    for r in range(TABLE_ROWS)
-                ]
-                if bordered:
-                    pdf = build_table_pdf(cells)
-                    res = extract_pdf_bytes(pdf, opts)
-                    reader = PdfReader(pdf)
-                    content = page_content(reader, flatten_page_tree(reader)[0])
-                    tables = detect_page_tables(content, res.page_fragments[0])
-                else:
-                    pdf = build_borderless_table_pdf(cells)
-                    res = extract_pdf_bytes(pdf, opts)
-                    tables = detect_borderless_tables(res.page_fragments[0])
-                for t in tables:
-                    for cell in t.cells:
-                        out["doc_id"].append(doc_id)
-                        out["bordered"].append(bordered)
-                        out["row_idx"].append(cell.row)
-                        out["col_idx"].append(cell.column)
-                        out["cell_text"].append(cell.text)
-                        out["n_rows"].append(t.rows)
-                        out["n_cols"].append(t.columns)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, bordered boolean, row_idx int, col_idx int, "
-        "cell_text string, n_rows int, n_cols int",
-    )
+    return _tables(spark, sf_dir, lambda doc_id: doc_id % 2 == 0)
 
 
 ORACLE_TABLES_MERGED = f"""
@@ -3431,6 +3154,18 @@ ELEM_PARA_WORDS = 20  # section body splits into paragraphs of this size
 ELEM_CHUNK_TOKENS = 64  # hybrid chunker max_tokens (word-count proxy)
 
 
+def _sections(words: list[str]) -> list[tuple[str, list[list[str]]]]:
+    """One 'SECTION i' page per ELEM_SECTION_WORDS words, its body split
+    into paragraphs of ELEM_PARA_WORDS (a wordless document still gets
+    one title-only section)."""
+    sections = []
+    for i in range(max(1, math.ceil(len(words) / ELEM_SECTION_WORDS))):
+        sw = words[i * ELEM_SECTION_WORDS : (i + 1) * ELEM_SECTION_WORDS]
+        paras = [p for p in (sw[:ELEM_PARA_WORDS], sw[ELEM_PARA_WORDS:]) if p]
+        sections.append((f"SECTION {i}", paras))
+    return sections
+
+
 def q_rag_chunk_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ELEMENT-TYPED chunking, end-to-end through real layout: each doc is
     rendered as sectioned pages (18pt title + 12pt body paragraphs with
@@ -3448,55 +3183,28 @@ def q_rag_chunk_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
     paragraph (the classifier's body font IS the title size then), which
     the oracle mirrors — that is the honest behavior of a relative-size
     classifier on a single-size document."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
+    def make_row():
         from .corpus import build_sectioned_pdf
         from .kernel.elements import classify_pages, hybrid_chunks
         from .kernel.extract import extract_pdf_bytes
         from .kernel.textstate import ExtractionOptions
 
-        opts = ExtractionOptions(
-            preserve_layout=True, reconstruct_paragraphs=True
-        )
-        for b in batches:
-            out = {
-                "doc_id": [], "chunk_id": [], "kind": [],
-                "heading": [], "chunk": [], "n_tokens": [],
-            }
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                words = [w for w in (norm or "").split(" ") if w]
-                n_sec = max(1, math.ceil(len(words) / ELEM_SECTION_WORDS))
-                sections = []
-                for i in range(n_sec):
-                    sw = words[
-                        i * ELEM_SECTION_WORDS : (i + 1) * ELEM_SECTION_WORDS
-                    ]
-                    paras = [
-                        p
-                        for p in (sw[:ELEM_PARA_WORDS], sw[ELEM_PARA_WORDS:])
-                        if p
-                    ]
-                    sections.append((f"SECTION {i}", paras))
-                pdf = build_sectioned_pdf(sections)
-                res = extract_pdf_bytes(pdf, opts)
-                elements = classify_pages(res.page_fragments)
-                for cid, ch in enumerate(
-                    hybrid_chunks(elements, ELEM_CHUNK_TOKENS)
-                ):
-                    out["doc_id"].append(doc_id)
-                    out["chunk_id"].append(cid)
-                    out["kind"].append(ch.kind)
-                    out["heading"].append(ch.heading)
-                    out["chunk"].append(ch.text)
-                    out["n_tokens"].append(ch.n_tokens)
-            yield pd.DataFrame(out)
+        opts = ExtractionOptions(preserve_layout=True, reconstruct_paragraphs=True)
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, chunk_id int, kind string, heading string, "
+        def row(doc_id, norm):
+            words = [w for w in (norm or "").split(" ") if w]
+            res = extract_pdf_bytes(build_sectioned_pdf(_sections(words)), opts)
+            elements = classify_pages(res.page_fragments)
+            for cid, ch in enumerate(hybrid_chunks(elements, ELEM_CHUNK_TOKENS)):
+                yield doc_id, cid, ch.kind, ch.heading, ch.text, ch.n_tokens
+
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, chunk_id int, kind string, heading string, "
         "chunk string, n_tokens int",
     )
 
@@ -3573,11 +3281,8 @@ def q_pdf_export_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     a round-robin rebalance of the narrow (doc_id, text) rows buys full
     parallelism for ~nothing. At production split counts the branch
     never fires and the plan stays map-only."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
+    def make_row():
         from .corpus import build_sectioned_pdf, build_table_pdf
         from .kernel.ai_export import (
             DocumentMetadata,
@@ -3591,89 +3296,45 @@ def q_pdf_export_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         from .kernel.tables import detect_page_tables
         from .kernel.textstate import ExtractionOptions
 
-        opts = ExtractionOptions(
-            preserve_layout=True, reconstruct_paragraphs=True
-        )
+        opts = ExtractionOptions(preserve_layout=True, reconstruct_paragraphs=True)
         topts = ExtractionOptions(preserve_layout=True)
-        for b in batches:
-            out = {
-                "doc_id": [], "markdown": [], "contextual": [],
-                "n_headings": [], "n_pages": [],
-            }
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                words = [w for w in (norm or "").split(" ") if w]
-                n_sec = max(1, math.ceil(len(words) / ELEM_SECTION_WORDS))
-                sections = []
-                for i in range(n_sec):
-                    sw = words[
-                        i * ELEM_SECTION_WORDS : (i + 1) * ELEM_SECTION_WORDS
-                    ]
-                    paras = [
-                        p
-                        for p in (sw[:ELEM_PARA_WORDS], sw[ELEM_PARA_WORDS:])
-                        if p
-                    ]
-                    sections.append((f"SECTION {i}", paras))
-                pdf = build_sectioned_pdf(sections)
-                res = extract_pdf_bytes(pdf, opts)
-                elements = classify_pages(res.page_fragments)
-                nw = len(words)
-                cells = [
-                    [
-                        (
-                            words[(r * TABLE_COLS + c) % nw][:TABLE_WORD_CLIP]
-                            if nw
-                            else "x"
-                        )
-                        for c in range(TABLE_COLS)
-                    ]
-                    for r in range(TABLE_ROWS)
-                ]
-                tpdf = build_table_pdf(cells)
-                tres = extract_pdf_bytes(tpdf, topts)
-                treader = PdfReader(tpdf)
-                tcontent = page_content(
-                    treader, flatten_page_tree(treader)[0]
-                )
-                tables = detect_page_tables(tcontent, tres.page_fragments[0])
-                n_pages = len(res.page_fragments)
-                did = int(doc_id)
-                title = (
-                    f"DOC {did}: report" if did % 3 == 0 else f"DOC {did}"
-                )
-                if did % 10 == 4:
-                    author = f"lab: a{did % 5}"
-                elif did % 2 == 0:
-                    author = f"author-{did % 5}"
-                else:
-                    author = None
-                created = "2024-01-15" if did % 4 == 0 else None
-                meta = DocumentMetadata(
-                    title, n_pages, created_at=created, author=author
-                )
-                md = export_structured_markdown(elements, tables, meta)
-                by_page: dict[int, list[str]] = {}
-                for el in elements:
-                    by_page.setdefault(el.page, []).append(el.text)
-                page_texts = [
-                    (i + 1, "\n\n".join(by_page.get(i, [])))
-                    for i in range(n_pages)
-                ]
-                ctx = export_contextual_with_metadata_and_pages(
-                    page_texts, meta
-                )
-                out["doc_id"].append(doc_id)
-                out["markdown"].append(md)
-                out["contextual"].append(ctx)
-                out["n_headings"].append(
-                    sum(1 for el in elements if el.kind == "title")
-                )
-                out["n_pages"].append(n_pages)
-            yield pd.DataFrame(out)
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, markdown string, contextual string, "
+        def row(doc_id, norm):
+            words = [w for w in (norm or "").split(" ") if w]
+            res = extract_pdf_bytes(build_sectioned_pdf(_sections(words)), opts)
+            elements = classify_pages(res.page_fragments)
+            tpdf = build_table_pdf(_table_cells(words))
+            tres = extract_pdf_bytes(tpdf, topts)
+            treader = PdfReader(tpdf)
+            tcontent = page_content(treader, flatten_page_tree(treader)[0])
+            tables = detect_page_tables(tcontent, tres.page_fragments[0])
+            n_pages = len(res.page_fragments)
+            title = f"DOC {doc_id}: report" if doc_id % 3 == 0 else f"DOC {doc_id}"
+            if doc_id % 10 == 4:
+                author = f"lab: a{doc_id % 5}"
+            elif doc_id % 2 == 0:
+                author = f"author-{doc_id % 5}"
+            else:
+                author = None
+            created = "2024-01-15" if doc_id % 4 == 0 else None
+            meta = DocumentMetadata(title, n_pages, created_at=created, author=author)
+            md = export_structured_markdown(elements, tables, meta)
+            by_page: dict[int, list[str]] = {}
+            for el in elements:
+                by_page.setdefault(el.page, []).append(el.text)
+            page_texts = [
+                (i + 1, "\n\n".join(by_page.get(i, []))) for i in range(n_pages)
+            ]
+            ctx = export_contextual_with_metadata_and_pages(page_texts, meta)
+            n_headings = sum(1 for el in elements if el.kind == "title")
+            yield doc_id, md, ctx, n_headings, n_pages
+
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, markdown string, contextual string, "
         "n_headings int, n_pages int",
     )
 
@@ -3790,58 +3451,45 @@ def q_rag_chunk_typed_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     inline under AnyInlineContent), footer — with heading lineage
     attached everywhere after the title. Mirrors partition.rs zone +
     is_list_item classification and hybrid_chunking.rs merge policy."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from .corpus import build_pdf_with_content_stream, escape_pdf_string
         from .kernel.elements import classify_pages, hybrid_chunks
         from .kernel.extract import extract_pdf_bytes
         from .kernel.textstate import ExtractionOptions
 
-        opts = ExtractionOptions(
-            preserve_layout=True, reconstruct_paragraphs=True
-        )
-        for b in batches:
-            out = {
-                "doc_id": [], "chunk_id": [], "kind": [],
-                "heading": [], "chunk": [], "n_tokens": [],
-            }
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                words = [w for w in (norm or "").split(" ") if w]
+        opts = ExtractionOptions(preserve_layout=True, reconstruct_paragraphs=True)
 
-                def wv(i):
-                    return words[i % len(words)][:12] if words else "x"
+        def row(doc_id, norm):
+            words = [w for w in (norm or "").split(" ") if w]
 
-                para = " ".join(words[2:12])
-                parts = [
-                    b"BT /F1 12 Tf 72 760 Td (PAGE HEADER) Tj ET",
-                    b"BT /F1 18 Tf 72 700 Td (SECTION 0) Tj ET",
-                    b"BT /F1 12 Tf 72 640 Td (- %s) Tj ET"
-                    % escape_pdf_string(wv(0)),
-                    b"BT /F1 12 Tf 72 604 Td (- %s) Tj ET"
-                    % escape_pdf_string(wv(1)),
-                ]
-                if para:
-                    parts.append(
-                        b"BT /F1 12 Tf 72 560 Td (%s) Tj ET"
-                        % escape_pdf_string(para)
-                    )
-                parts.append(b"BT /F1 12 Tf 72 20 Td (page 1) Tj ET")
-                pdf = build_pdf_with_content_stream(b" ".join(parts))
-                res = extract_pdf_bytes(pdf, opts)
-                els = classify_pages(res.page_fragments)
-                for cid, ch in enumerate(hybrid_chunks(els, CHUNK_WORDS)):
-                    out["doc_id"].append(doc_id)
-                    out["chunk_id"].append(cid)
-                    out["kind"].append(ch.kind)
-                    out["heading"].append(ch.heading)
-                    out["chunk"].append(ch.text)
-                    out["n_tokens"].append(ch.n_tokens)
-            yield pd.DataFrame(out)
+            def wv(i):
+                return words[i % len(words)][:12] if words else "x"
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, chunk_id int, kind string, heading string, "
+            para = " ".join(words[2:12])
+            parts = [
+                b"BT /F1 12 Tf 72 760 Td (PAGE HEADER) Tj ET",
+                b"BT /F1 18 Tf 72 700 Td (SECTION 0) Tj ET",
+                b"BT /F1 12 Tf 72 640 Td (- %s) Tj ET" % escape_pdf_string(wv(0)),
+                b"BT /F1 12 Tf 72 604 Td (- %s) Tj ET" % escape_pdf_string(wv(1)),
+            ]
+            if para:
+                parts.append(
+                    b"BT /F1 12 Tf 72 560 Td (%s) Tj ET" % escape_pdf_string(para)
+                )
+            parts.append(b"BT /F1 12 Tf 72 20 Td (page 1) Tj ET")
+            pdf = build_pdf_with_content_stream(b" ".join(parts))
+            res = extract_pdf_bytes(pdf, opts)
+            els = classify_pages(res.page_fragments)
+            for cid, ch in enumerate(hybrid_chunks(els, CHUNK_WORDS)):
+                yield doc_id, cid, ch.kind, ch.heading, ch.text, ch.n_tokens
+
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, chunk_id int, kind string, heading string, "
         "chunk string, n_tokens int",
     )
 
@@ -4326,7 +3974,9 @@ def q_text_exact_substring_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "shard", norm_col("text").alias("norm"))
     )
 
-    def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_shard(pdf):
+        import pandas as pd
+
         from .suffix import cross_doc_duplicate_coverage
 
         texts = [
@@ -4503,7 +4153,7 @@ WHERE k.keep AND q.quality >= {TRAIN_MIN_QUALITY}
 
 def q_media_stub_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing: treat each document's bytes as an opaque binary
-    media column; 'feature extraction' runs in an Arrow-batched pandas stage
+    media column; 'feature extraction' runs in an Arrow-batched Python stage
     (the real decode — image/audio libs — is stubbed per round-1 scope, but
     the schema, batching, and binary transport are production-shaped)."""
     d = _rebalance_for_udf(
@@ -4512,19 +4162,16 @@ def q_media_stub_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.encode(norm_col("text"), "UTF-8").alias("media")
     )
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         import hashlib
 
-        for b in batches:
-            out = {"doc_id": [], "media_len": [], "media_md5": []}
-            for doc_id, blob in zip(b["doc_id"], b["media"]):
-                data = bytes(blob) if blob is not None else b""
-                out["doc_id"].append(doc_id)
-                out["media_len"].append(len(data))
-                out["media_md5"].append(hashlib.md5(data).hexdigest())
-            yield pd.DataFrame(out)
+        def row(doc_id, blob):
+            data = blob if blob is not None else b""
+            yield doc_id, len(data), hashlib.md5(data).hexdigest()
 
-    return d.mapInPandas(feats, schema="doc_id long, media_len long, media_md5 string")
+        return row
+
+    return map_rows(d, make_row, "doc_id long, media_len long, media_md5 string")
 
 
 ORACLE_MEDIA_STUB = f"""
@@ -4540,40 +4187,31 @@ def q_pdf_extract_invoice(spark: SparkSession, sf_dir: str) -> DataFrame:
     number INV-doc_id, date 2024-MM-DD from doc_id, total from integer
     cents — and the extractor must recover all four via pattern-keyed
     keyvalue matching plus first-colon-less-line vendor detection."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from .corpus import build_invoice_pdf
         from .kernel.invoice import extract_invoice
 
-        for b in batches:
-            out = {
-                "doc_id": [], "vendor": [], "invoice_no": [],
-                "inv_date": [], "total": [], "n_pairs": [],
-            }
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                doc_id = int(doc_id)
-                words = [w for w in (norm or "").split(" ") if w]
-                vendor = words[0] if words else "x"
-                cents = doc_id % 9999
-                pdf = build_invoice_pdf(
-                    vendor=vendor,
-                    invoice_no=f"INV-{doc_id}",
-                    date=f"2024-{doc_id % 12 + 1:02d}-{doc_id % 28 + 1:02d}",
-                    total=f"{cents // 100}.{cents % 100:02d}",
-                )
-                inv = extract_invoice(pdf)
-                out["doc_id"].append(doc_id)
-                out["vendor"].append(inv.vendor)
-                out["invoice_no"].append(inv.invoice_number)
-                out["inv_date"].append(inv.invoice_date)
-                out["total"].append(inv.total)
-                out["n_pairs"].append(inv.n_pairs)
-            yield pd.DataFrame(out)
+        def row(doc_id, norm):
+            words = [w for w in (norm or "").split(" ") if w]
+            cents = doc_id % 9999
+            inv = extract_invoice(build_invoice_pdf(
+                vendor=words[0] if words else "x",
+                invoice_no=f"INV-{doc_id}",
+                date=f"2024-{doc_id % 12 + 1:02d}-{doc_id % 28 + 1:02d}",
+                total=f"{cents // 100}.{cents % 100:02d}",
+            ))
+            yield (
+                doc_id, inv.vendor, inv.invoice_number, inv.invoice_date,
+                inv.total, inv.n_pairs,
+            )
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, vendor string, invoice_no string, "
+        return row
+
+    return map_rows(
+        _docs_norm_rebalanced(spark, sf_dir),
+        make_row,
+        "doc_id long, vendor string, invoice_no string, "
         "inv_date string, total string, n_pairs int",
     )
 
@@ -4615,41 +4253,32 @@ def q_pdf_detect_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-page doc — the 200-byte ``/Type /Page`` lookahead window overlaps
     the neighbouring /Catalog and /Pages objects, a reference quirk
     (corruption.rs:207-246) pinned in tests/test_diagnostics.py."""
-    docs = _rebalance_for_udf(spark, _docs(spark, sf_dir).select("doc_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from .corpus import build_text_pdf
         from .kernel.diagnostics import detect_corruption
 
-        for b in batches:
-            out = {
-                "doc_id": [], "variant": [], "corruption_type": [],
-                "severity": [], "n_errors": [], "est_objects": [],
-                "found_pages": [],
-            }
-            for doc_id in b["doc_id"]:
-                doc_id = int(doc_id)
-                v = doc_id % 5
-                data = build_text_pdf(f"corruption probe {doc_id}")
-                if v == 1:
-                    data = b"XX" + data[2:]
-                if v in (2, 4):
-                    data = data.replace(b"%%EOF", b"%%EOX")
-                if v in (3, 4):
-                    data = data.replace(b"xref", b"xrEf")
-                r = detect_corruption(data)
-                out["doc_id"].append(doc_id)
-                out["variant"].append(v)
-                out["corruption_type"].append(r["corruption_type"])
-                out["severity"].append(r["severity"])
-                out["n_errors"].append(len(r["errors"]))
-                out["est_objects"].append(r["estimated_objects"])
-                out["found_pages"].append(r["found_pages"])
-            yield pd.DataFrame(out)
+        def row(doc_id):
+            v = doc_id % 5
+            data = build_text_pdf(f"corruption probe {doc_id}")
+            if v == 1:
+                data = b"XX" + data[2:]
+            if v in (2, 4):
+                data = data.replace(b"%%EOF", b"%%EOX")
+            if v in (3, 4):
+                data = data.replace(b"xref", b"xrEf")
+            r = detect_corruption(data)
+            yield (
+                doc_id, v, r["corruption_type"], r["severity"], len(r["errors"]),
+                r["estimated_objects"], r["found_pages"],
+            )
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, variant int, corruption_type string, "
+        return row
+
+    return map_rows(
+        _rebalance_for_udf(spark, _docs(spark, sf_dir).select("doc_id")),
+        make_row,
+        "doc_id long, variant int, corruption_type string, "
         "severity int, n_errors int, est_objects int, found_pages int",
     )
 
@@ -5449,32 +5078,30 @@ def q_pdf_decode_image_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["variant", "w0"])
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         # Per-task memo of the per-VARIANT image fields: the image
         # XObject stream is a fixed per-variant fixture (the oracle
         # enumerates one pixel MD5 per variant), so the heavy pixel
         # decode (37 ms/key for JBIG2-arithmetic) runs once per variant
         # per task; only the cheap text extraction stays per key.
         img_memo: dict[int, tuple] = {}
-        for b in batches:
-            out = {"variant": [], "w0": [], "img_w": [], "img_h": [],
-                   "img_format": [], "px_md5": [], "text": [],
-                   "n_spans": []}
-            for v, w0 in zip(b["variant"], b["w0"]):
-                # decode_image_codec_row(d, norm) depends only on d % 8
-                # and the first word of norm: v in 0..7 and the single
-                # word w0 reproduce the per-doc call exactly
-                row = decode_image_codec_row(int(v), w0, img_memo)
-                out["variant"].append(v)
-                out["w0"].append(w0)
-                for k, val in row.items():
-                    if k != "variant":
-                        out[k].append(val)
-            yield pd.DataFrame(out)
 
-    decoded = keys.mapInPandas(
-        run,
-        schema="variant int, w0 string, img_w int, img_h int, "
+        def row(v, w0):
+            # decode_image_codec_row(d, norm) depends only on d % 8 and
+            # the first word of norm: v in 0..7 and the single word w0
+            # reproduce the per-doc call exactly
+            r = decode_image_codec_row(v, w0, img_memo)
+            yield (
+                v, w0, r["img_w"], r["img_h"], r["img_format"], r["px_md5"],
+                r["text"], r["n_spans"],
+            )
+
+        return row
+
+    decoded = map_rows(
+        keys,
+        make_row,
+        "variant int, w0 string, img_w int, img_h int, "
         "img_format string, px_md5 string, text string, n_spans int",
     )
     return keyed.join(F.broadcast(decoded), on=["variant", "w0"]).select(
@@ -5772,7 +5399,7 @@ def build_queries() -> dict:
         "pdf_detect_corruption": q_pdf_detect_corruption,
         # media_features stays implemented (tests/test_displaced_rows.py)
         # but yields its registry row to pdf_decode_image_codecs:
-        # doc_fingerprint exercises the same binary mapInPandas path,
+        # doc_fingerprint exercises the same binary map_rows path,
         # while the 6-codec decode is the newest failure-prone surface
         # (VERDICT r8 #1)
         "pdf_decode_image_codecs": q_pdf_decode_image_codecs,

@@ -20,6 +20,8 @@ Input/output schemas (BASELINE.json input_hint / FIXTURES.md §1):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -42,6 +44,12 @@ DOCS_SCHEMA = T.StructType(
 )
 
 
+def default_cpus() -> int:
+    """Cores for a local master: ``$SPARK_GRAFT_CPUS`` when set, else the
+    CPUs this process may run on. The one owner of that default."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "oxidizepdf-spark",
     master: str | None = None,
@@ -62,10 +70,8 @@ def get_spark(
     - AQE on: runtime coalescing + skew-join mitigation for the corpus-level
       joins (resume anti-join, dedup self-joins)
     """
-    import os
-
     if master is None:
-        cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = cpus or default_cpus()
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = max(

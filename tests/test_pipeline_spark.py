@@ -1,4 +1,4 @@
-"""Spark pipeline tests: end-to-end span equality through mapInPandas,
+"""Spark pipeline tests: end-to-end span equality through mapInArrow,
 skew salting, per-partition metrics, and checkpoint-resume semantics.
 """
 

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import pytest
 
+from plan_checks import assert_no_python_operator
+
 
 @pytest.fixture(scope="module")
 def spark():
@@ -64,7 +66,7 @@ def test_token_count_whole_stage_codegen(spark):
     plan = _plan(q_text_token_count(spark, SF))
     # '*(n)' node prefixes mark whole-stage-codegen spans in executedPlan
     assert "*(1)" in plan or "WholeStageCodegen" in plan
-    assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
+    assert_no_python_operator(plan)
 
 
 def test_events_agg_partial_before_shuffle(spark):
@@ -84,7 +86,7 @@ def test_char_entropy_is_map_only(spark):
 
     plan = _plan(q_text_char_entropy(spark, SF))
     assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
+    assert_no_python_operator(plan)
 
 
 def test_tfidf_count_stays_lazy(spark):
@@ -133,7 +135,7 @@ def test_simhash_is_map_only(spark):
 
     plan = _plan(q_dedup_simhash(spark, SF))
     assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
+    assert_no_python_operator(plan)
 
 
 def test_tfidf_df_relation_broadcasts(spark):
@@ -280,7 +282,7 @@ def test_exact_substring_bytes_plan_shape(spark):
 
 
 def test_export_markdown_plan_shape(spark):
-    """pdf_export_markdown: pruned scan + mapInPandas. The test corpus
+    """pdf_export_markdown: pruned scan + mapInArrow. The test corpus
     is a single-row-group parquet file (unsplittable scan), so the
     query's under-parallel guard fires and the ONLY Exchange is the
     round-robin rebalance of the narrow input rows before the heavy
@@ -304,7 +306,7 @@ def test_export_markdown_plan_shape(spark):
 def test_form_fields_signed_plan_shape(spark):
     """pdf_extract_form_fields (now building+verifying SIGNED fixtures
     per doc): still a pruned two-column scan + one round-robin rebalance
-    + mapInPandas — the RSA/ECDSA work lives inside the Arrow batch UDF,
+    + mapInArrow — the RSA/ECDSA work lives inside the Arrow batch UDF,
     never in a shuffle or driver loop."""
     from oxidizepdf_spark.queries import q_pdf_extract_form_fields
 

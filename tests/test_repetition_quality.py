@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import pytest
 
+from plan_checks import assert_no_python_operator
+
 
 @pytest.fixture(scope="module")
 def spark():
@@ -63,5 +65,4 @@ def test_repetition_quality_plan_is_jvm_native(spark):
         spark, "/root/testdata/sf0.001")._jdf.queryExecution() \
         .executedPlan().toString()
     # no Python workers anywhere: the n-gram build is transform/sequence
-    assert "PythonUDF" not in plan and "ArrowEval" not in plan
-    assert "mapInPandas" not in plan.lower()
+    assert_no_python_operator(plan)

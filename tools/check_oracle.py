@@ -55,7 +55,7 @@ def main():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in (

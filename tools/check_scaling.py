@@ -7,11 +7,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bench import _host_spin_ceiling, _pinned_leg, stage_corpus  # noqa: E402
-from oxidizepdf_spark.table_io import get_spark  # noqa: E402
+from oxidizepdf_spark.table_io import default_cpus, get_spark  # noqa: E402
 
 
 def main():
-    cpus = 32
+    cpus = default_cpus()
     scale_docs = 150_000
     sat_docs = scale_docs * 6
     spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=cpus)

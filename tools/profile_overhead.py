@@ -17,7 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bench import run_extract_job, stage_corpus  # noqa: E402
-from oxidizepdf_spark.table_io import get_spark  # noqa: E402
+from oxidizepdf_spark.table_io import default_cpus, get_spark  # noqa: E402
 
 
 def timeit(fn, n=3, warm=1):
@@ -33,7 +33,7 @@ def timeit(fn, n=3, warm=1):
 
 
 def main():
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = default_cpus()
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 150_000
     spark = get_spark(master=f"local[{cores}]", shuffle_partitions=cores)
     spark.sparkContext.setLogLevel("ERROR")

@@ -25,6 +25,10 @@ def fetch(spark, name: str, sf_dir: str):
     qs = Q.build_queries()
     if name.startswith("pdf_roundtrip_"):
         fn = Q._pdf_roundtrip(name.removeprefix("pdf_roundtrip_"))
+    elif name.startswith("pdf_encrypted_roundtrip_"):
+        fn = Q._pdf_encrypted_roundtrip(
+            name.removeprefix("pdf_encrypted_roundtrip_")
+        )
     else:
         fn = qs.get(name) or getattr(Q, f"q_{name}")
     df = fn(spark, sf_dir)
@@ -40,7 +44,7 @@ def main() -> None:
 
     from oxidizepdf_spark.table_io import get_spark
 
-    spark = get_spark(master="local[32]", shuffle_partitions=32)
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
 
     if mode == "save":
