@@ -22,17 +22,15 @@ the extracted span sequence with per-row span-sequence equality
 
 __version__ = "0.1.0"
 
-# Worker-boundary latency fixes (workerenv.py docstrings have the full
-# story): PySpark re-validates every cached zipimporter per task (200-300
-# ms of fixed latency per Python task until skipped for Spark's immutable
-# runtime zips), and the daemon full-gc's the worker heap between tasks
-# (~15 ms over the imported modules until frozen). Importing this package
-# is the one step every Spark worker performs before running any of its
-# functions, so both land exactly where needed without per-UDF
-# boilerplate; the heap freeze applies only under the PySpark daemon.
-from .workerenv import freeze_worker_heap as _freeze_worker
-from .workerenv import neutralize_static_zip_invalidation as _neutralize_zip
+# Spark worker setup (workerenv.py has the full story). In worker
+# processes only, skip PySpark's per-task re-read of Spark's own runtime
+# archives, matched by resolved path under $SPARK_HOME: the spark-core jar
+# (15 MB, cached by two zipimporters) cost 50-120 ms per task, under
+# 0.1 ms once skipped. Also gc.freeze() the import-time heap the daemon
+# would otherwise walk after every task. Importing this package is the one
+# step every worker performs before running any of its functions; the
+# driver and non-Spark processes are left untouched.
+from .workerenv import setup_worker as _setup_worker
 
-_neutralize_zip()
-_freeze_worker()
-del _neutralize_zip, _freeze_worker
+_setup_worker()
+del _setup_worker

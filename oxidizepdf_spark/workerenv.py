@@ -1,116 +1,81 @@
-"""Worker-process environment tuning (optimization guide §4.5: per-task
-init cost at the Python boundary).
+"""Spark worker-process setup: the fixed per-task cost at the Python boundary.
 
-CPython's ``zipimporter.invalidate_caches()`` (pure-Python zipimport,
-3.8-3.11) unconditionally re-reads the archive's central directory.
-PySpark calls ``importlib.invalidate_caches()`` in EVERY task's setup
-(``pyspark.worker_util.setup_spark_files``), and a warm Spark worker
-holds one cached ``zipimporter`` per package path *inside*
-``$SPARK_HOME/python/lib/pyspark.zip`` (one per imported subpackage —
-they all share the same archive). Measured on this engine's workers:
-30-60 cached entries at ~5 ms of TOC re-read each = **200-300 ms of
-fixed latency added to every Python task**. Profiled with a
-timestamp-instrumented worker: the whole gap sat between
-``setup_spark_files`` entry and exit, and JVM task threads blocked in
-``BasePythonRunner`` reads for exactly that long; a trivial 32-task
-identity ``mapInArrow`` job ran 0.36 s stock vs 0.14 s neutralized.
+PySpark calls ``importlib.invalidate_caches()`` at the start of every task
+(``pyspark.worker_util.setup_spark_files``), and CPython's pure-Python
+``zipimporter.invalidate_caches()`` (3.10+) re-reads the archive's whole
+central directory for every cached zipimporter. The JVM puts Spark's own
+archives on the workers' ``sys.path``: ``pyspark.zip``, the ``py4j-*`` src
+zip, and the spark-core jar, given by its *resolved* path. With
+``$SPARK_HOME`` a symlink to a versioned install directory, that path is
+``<resolved home>/jars/spark-core_*.jar`` (Spark 4.1: 5,359 entries,
+15 MB), cached twice: the jar root and its ``org`` sub-importer.
+Re-reading it cost 50-120 ms of worker CPU in every task before any row
+moved (measured on 4 vCPUs); with Spark's runtime archives skipped, the
+whole ``invalidate_caches()`` call takes under 0.1 ms.
 
-Spark's own runtime zips are immutable for the lifetime of a job, so
-re-validating them once per task buys nothing. This module patches
-``zipimport.zipimporter.invalidate_caches`` with a filter that skips
-the re-read ONLY for the static Spark runtime archives (``pyspark.zip``,
-the ``py4j-*`` src zip, anything under ``$SPARK_HOME``); every other
-archive keeps stock behavior, so ``sc.addPyFile``-style dynamic code
-still invalidates correctly. Applied at package import — i.e. in every
-Spark worker the moment it unpickles one of this package's functions —
-and idempotent; the first task a fresh worker runs still pays the stock
-cost (the patch lands during that task's unpickle), every later task is
-free. Set ``SPARK_GRAFT_KEEP_ZIP_INVALIDATION=1`` to opt out.
+An archive is Spark runtime iff its ``realpath`` lies under
+``realpath($SPARK_HOME)``; those cannot change while a job runs, so the
+filter skips their re-read. Every other archive — ``--py-files`` and
+``sc.addPyFile`` zips included, whatever their name — keeps stock
+``invalidate_caches``, as does every archive when ``SPARK_HOME`` is unset.
+
+PySpark's daemon also runs a full ``gc.collect()`` after every task in
+reuse mode, walking the ~70k objects a worker holds once it has imported
+pyspark, pyarrow and this engine (13-18 ms per collection).
+``gc.freeze()`` moves that import-time heap to the permanent generation,
+so the per-task collection walks only the task's own garbage.
+
+``setup_worker`` applies both, only in Spark worker processes: the JVM's
+``PythonWorkerFactory`` sets ``PYTHON_WORKER_FACTORY_SECRET`` in the
+daemon/worker environment and nowhere else, so the driver keeps a stock
+``zipimport`` and an unfrozen heap. It runs when a worker first imports
+this package, i.e. while unpickling its first task's function, so that
+task still pays the stock cost and every later task on the reused worker
+does not. Opt out with ``SPARK_GRAFT_KEEP_ZIP_INVALIDATION=1`` (zip
+filter) and ``SPARK_GRAFT_KEEP_WORKER_GC=1`` (heap freeze).
 """
 
 from __future__ import annotations
 
+import functools
+import gc
 import os
 import zipimport
 
 _ORIG_INVALIDATE = zipimport.zipimporter.invalidate_caches
-_APPLIED = False
+_SET_UP = False
 
 
 def _is_static_spark_archive(path: str) -> bool:
-    """True for archives that cannot change while a Spark job runs."""
-    base = os.path.basename(path)
-    if base == "pyspark.zip" or base.startswith("py4j-"):
-        return True
-    spark_home = os.environ.get("SPARK_HOME")
-    if spark_home:
-        return os.path.abspath(path).startswith(
-            os.path.join(os.path.abspath(spark_home), "")
-        )
-    return False
+    """True iff ``path`` resolves under the resolved ``$SPARK_HOME``."""
+    return _resolves_under(path, os.environ.get("SPARK_HOME"))
 
 
-def neutralize_static_zip_invalidation() -> bool:
-    """Install the filtered ``invalidate_caches``; returns True if active.
-
-    Idempotent and reversible (``restore_zip_invalidation``). Honors the
-    ``SPARK_GRAFT_KEEP_ZIP_INVALIDATION=1`` opt-out.
-    """
-    global _APPLIED
-    if os.environ.get("SPARK_GRAFT_KEEP_ZIP_INVALIDATION") == "1":
+@functools.lru_cache(maxsize=None)
+def _resolves_under(path: str, home: str | None) -> bool:
+    # memoized: unmemoized, the realpath calls for a warm worker's 16
+    # cached zipimporters took 0.9 ms per task; memoized, 0.05 ms
+    if not home:
         return False
-    if _APPLIED:
-        return True
+    root = os.path.join(os.path.realpath(home), "")
+    return os.path.realpath(path).startswith(root)
 
-    def invalidate_caches(self):  # noqa: ANN001 — stdlib signature
-        archive = getattr(self, "archive", "") or ""
-        if _is_static_spark_archive(archive):
-            return
+
+def _invalidate_caches(self) -> None:  # noqa: ANN001 — stdlib signature
+    if not _is_static_spark_archive(self.archive):
         _ORIG_INVALIDATE(self)
 
-    invalidate_caches.__module__ = __name__
-    try:
-        zipimport.zipimporter.invalidate_caches = invalidate_caches
-        _APPLIED = True
-    except Exception:  # pragma: no cover — e.g. a C-accelerated zipimport
-        _APPLIED = False
-    return _APPLIED
 
-
-def restore_zip_invalidation() -> None:
-    """Undo ``neutralize_static_zip_invalidation`` (for tests)."""
-    global _APPLIED
-    zipimport.zipimporter.invalidate_caches = _ORIG_INVALIDATE
-    _APPLIED = False
-
-
-_FROZE = False
-
-
-def freeze_worker_heap() -> bool:
-    """In a Spark *worker* process, ``gc.freeze()`` the just-imported heap.
-
-    PySpark's daemon runs a FULL ``gc.collect()`` after every task in
-    reuse mode (pyspark/daemon.py's worker loop), and a worker that has
-    imported pyspark + pyarrow + this engine holds ~70k tracked objects
-    — measured 13-18 ms per collection, paid between back-to-back tasks
-    (an A/B of a trivial 32-task job read 0.25 → 0.19 s median once
-    frozen). Those import-time objects are module state that lives for
-    the worker's whole life; ``gc.freeze()`` moves them to the permanent
-    generation so the per-task collection only walks each task's own
-    garbage (measured ~0 ms) — exactly the CPython-documented use of
-    freeze for long-lived pre-fork/worker heaps. Applied only in worker
-    processes — the JVM's PythonWorkerFactory sets
-    ``PYTHON_WORKER_FACTORY_SECRET`` in the daemon/worker environment
-    and nowhere else — never in the driver; opt out with
-    ``SPARK_GRAFT_KEEP_WORKER_GC=1``."""
-    global _FROZE
-    if _FROZE or os.environ.get("SPARK_GRAFT_KEEP_WORKER_GC") == "1":
-        return _FROZE
-    if "PYTHON_WORKER_FACTORY_SECRET" not in os.environ:
-        return False
-    import gc
-
-    gc.freeze()
-    _FROZE = True
+def setup_worker() -> bool:
+    """In a Spark worker process, install the zip filter and freeze the
+    heap (each unless opted out); True iff this is a worker process.
+    Idempotent; a no-op in the driver and in non-Spark processes."""
+    global _SET_UP
+    if _SET_UP or "PYTHON_WORKER_FACTORY_SECRET" not in os.environ:
+        return _SET_UP
+    _SET_UP = True
+    if os.environ.get("SPARK_GRAFT_KEEP_ZIP_INVALIDATION") != "1":
+        zipimport.zipimporter.invalidate_caches = _invalidate_caches
+    if os.environ.get("SPARK_GRAFT_KEEP_WORKER_GC") != "1":
+        gc.freeze()
     return True
