@@ -2461,11 +2461,43 @@ static PyObject *g_ref_cls;          /* objects.Ref */
 static PyObject *g_obj_name_memo;    /* objects._NAME_MEMO */
 static PyObject *g_decode_name_obj;  /* Lexer._decode_name_bytes */
 
+/* object-lexer token boundary: whitespace or one of ()<>[]{}/% (unlike
+ * is_bound, ';' is an ordinary keyword byte outside content streams) */
+static int is_obound(unsigned char ch)
+{
+    return is_ws1(ch) || ch == '(' || ch == ')' || ch == '<' || ch == '>' ||
+           ch == '[' || ch == ']' || ch == '{' || ch == '}' || ch == '/' ||
+           ch == '%';
+}
+
+static int g_ref_is_tuple; /* Ref is a field-less tuple subclass */
+
 typedef struct {
     const unsigned char *d;
     Py_ssize_t n, pos;
     int bail; /* set → return None, caller falls back to Python */
 } OLex;
+
+/* Ref(num, gen).  Ref is a namedtuple: a tuple subclass with no instance
+ * fields, so a 2-slot tuple of its type is exactly what its Python-level
+ * __new__ builds (tuple_subtype_new does the same), without the call. */
+static PyObject *new_ref(long long num, long long gen)
+{
+    if (!g_ref_is_tuple)
+        return PyObject_CallFunction(g_ref_cls, "LL", num, gen);
+    PyObject *a = PyLong_FromLongLong(num);
+    PyObject *b = a ? PyLong_FromLongLong(gen) : NULL;
+    PyTypeObject *t = (PyTypeObject *)g_ref_cls;
+    PyObject *r = b ? t->tp_alloc(t, 2) : NULL;
+    if (!r) {
+        Py_XDECREF(a);
+        Py_XDECREF(b);
+        return NULL;
+    }
+    PyTuple_SET_ITEM(r, 0, a);
+    PyTuple_SET_ITEM(r, 1, b);
+    return r;
+}
 
 #define OBJ_MAX_DEPTH 128 /* objects.MAX_PARSE_DEPTH */
 
@@ -2488,50 +2520,79 @@ static void o_skip(OLex *o)
     o->pos = p;
 }
 
-/* name token after '/': raw (incl. slash) keys objects._NAME_MEMO */
-static PyObject *o_name(OLex *o)
+/* Decoded names by raw token: a direct-mapped cache in front of
+ * objects._NAME_MEMO, so a name the parser has seen costs no allocation.
+ * Each slot holds the raw token (incl. slash), its Name and str(Name), the
+ * exact-str dict key parse_object stores.  setup_obj empties it: a second
+ * objects module brings its own Name class. */
+#define NAME_SLOTS 1024
+typedef struct {
+    PyObject *raw, *name, *key;
+} NameSlot;
+static NameSlot g_names[NAME_SLOTS];
+
+static void names_clear(void)
+{
+    for (int i = 0; i < NAME_SLOTS; i++) {
+        Py_CLEAR(g_names[i].raw);
+        Py_CLEAR(g_names[i].name);
+        Py_CLEAR(g_names[i].key);
+    }
+}
+
+/* name token at o->pos ('/'): its slot (borrowed; valid until the next
+ * name is read, so callers take their own references at once) */
+static NameSlot *o_name_slot(OLex *o)
 {
     const unsigned char *d = o->d;
     Py_ssize_t n = o->n, p = o->pos + 1, start = o->pos;
-    while (p < n && !is_ws1(d[p]) && !is_bound(d[p]))
-        p++;
-    /* is_bound == ws + delimiters; '/' itself is a delimiter (name ends) */
-    PyObject *key =
-        PyBytes_FromStringAndSize((const char *)(d + start), p - start);
-    if (!key)
+    /* '/' itself is a delimiter (the name ends) */
+    unsigned int h = 2166136261u;
+    while (p < n && !is_obound(d[p]))
+        h = (h ^ d[p++]) * 16777619u;
+    Py_ssize_t len = p - start;
+    NameSlot *slot = &g_names[h & (NAME_SLOTS - 1)];
+    if (slot->raw && PyBytes_GET_SIZE(slot->raw) == len &&
+        memcmp(PyBytes_AS_STRING(slot->raw), d + start, (size_t)len) == 0) {
+        o->pos = p;
+        return slot;
+    }
+    PyObject *raw = PyBytes_FromStringAndSize((const char *)(d + start), len);
+    if (!raw)
         return NULL;
-    o->pos = p;
-    PyObject *nm = PyDict_GetItemWithError(g_obj_name_memo, key);
-    if (nm) {
+    PyObject *nm = PyDict_GetItemWithError(g_obj_name_memo, raw);
+    if (nm)
         Py_INCREF(nm);
-        Py_DECREF(key);
-        return nm;
+    else if (!PyErr_Occurred()) {
+        if (PyDict_GET_SIZE(g_obj_name_memo) > 8192)
+            PyDict_Clear(g_obj_name_memo);
+        PyObject *inner = PyBytes_FromStringAndSize(
+            (const char *)(d + start + 1), len - 1);
+        nm = inner ? PyObject_CallOneArg(g_decode_name_obj, inner) : NULL;
+        Py_XDECREF(inner);
+        if (nm && PyDict_SetItem(g_obj_name_memo, raw, nm) < 0)
+            Py_CLEAR(nm);
     }
-    if (PyErr_Occurred()) {
-        Py_DECREF(key);
+    PyObject *key = nm ? PyObject_Str(nm) : NULL; /* str(Name) dict key */
+    if (!key) {
+        Py_DECREF(raw);
+        Py_XDECREF(nm);
         return NULL;
     }
-    if (PyDict_GET_SIZE(g_obj_name_memo) > 8192)
-        PyDict_Clear(g_obj_name_memo);
-    PyObject *inner =
-        PyBytes_FromStringAndSize((const char *)(d + start + 1), p - start - 1);
-    if (!inner) {
-        Py_DECREF(key);
+    Py_XSETREF(slot->raw, raw);
+    Py_XSETREF(slot->name, nm);
+    Py_XSETREF(slot->key, key);
+    o->pos = p;
+    return slot;
+}
+
+static PyObject *o_name(OLex *o)
+{
+    NameSlot *slot = o_name_slot(o);
+    if (!slot)
         return NULL;
-    }
-    nm = PyObject_CallOneArg(g_decode_name_obj, inner);
-    Py_DECREF(inner);
-    if (!nm) {
-        Py_DECREF(key);
-        return NULL;
-    }
-    if (PyDict_SetItem(g_obj_name_memo, key, nm) < 0) {
-        Py_DECREF(key);
-        Py_DECREF(nm);
-        return NULL;
-    }
-    Py_DECREF(key);
-    return nm;
+    Py_INCREF(slot->name);
+    return slot->name;
 }
 
 /* literal string (objects.Lexer._read_literal_string — same escape rules
@@ -2719,7 +2780,7 @@ static int o_skip_token(OLex *o)
     }
     /* '>' alone, '{', '}', junk delimiters, keywords: bail — the Python
      * path's behavior (raise / silent skip / kw) decides */
-    if (!is_bound(ch) || ch == '/') {
+    if (!is_obound(ch) || ch == '/') {
         if (ch == '/') {
             PyObject *nm = o_name(o);
             if (!nm)
@@ -2729,7 +2790,7 @@ static int o_skip_token(OLex *o)
         }
         /* keyword run */
         Py_ssize_t p = o->pos;
-        while (p < o->n && !is_ws1(d[p]) && !is_bound(d[p]))
+        while (p < o->n && !is_obound(d[p]))
             p++;
         o->pos = p;
         return 1;
@@ -2803,10 +2864,9 @@ static PyObject *o_value(OLex *o, int depth)
                     Py_ssize_t p = o->pos;
                     if (p < n && d[p] == 'R' &&
                         (p + 1 >= n ||
-                         is_ws1(d[p + 1]) || is_bound(d[p + 1]))) {
+                         is_obound(d[p + 1]))) {
                         o->pos = p + 1;
-                        return PyObject_CallFunction(
-                            g_ref_cls, "LL", val, gen);
+                        return new_ref(val, gen);
                     }
                     /* t3 is read then pushed back: its lexing must not
                      * raise */
@@ -2859,17 +2919,13 @@ static PyObject *o_value(OLex *o, int depth)
                     }
                     continue;
                 }
-                PyObject *nm = o_name(o);
-                if (!nm) {
+                NameSlot *slot = o_name_slot(o);
+                if (!slot) {
                     Py_DECREF(dict);
                     return NULL;
                 }
-                PyObject *keystr = PyObject_Str(nm); /* str(Name) key */
-                Py_DECREF(nm);
-                if (!keystr) {
-                    Py_DECREF(dict);
-                    return NULL;
-                }
+                PyObject *keystr = slot->key; /* str(Name) key */
+                Py_INCREF(keystr);
                 PyObject *v = o_value(o, depth + 1);
                 if (!v) {
                     Py_DECREF(keystr);
@@ -2917,9 +2973,9 @@ static PyObject *o_value(OLex *o, int depth)
         }
     }
     /* keyword (true/false/null); anything else → bail */
-    if (!is_bound(ch)) {
+    if (!is_obound(ch)) {
         Py_ssize_t p = o->pos;
-        while (p < n && !is_ws1(d[p]) && !is_bound(d[p]))
+        while (p < n && !is_obound(d[p]))
             p++;
         Py_ssize_t kl = p - o->pos;
         const unsigned char *kp = d + o->pos;
@@ -2940,6 +2996,73 @@ static PyObject *o_value(OLex *o, int depth)
     return NULL;
 }
 
+/* `N G obj value [stream]` at o->pos (the body of parse_indirect, shared
+ * with the document fast path below): 1 = parsed (*value is a new ref,
+ * *has_stream set, o->pos after the `stream` keyword when it is), 0 = bail
+ * (Python decides), -1 = a real exception (memory, callback failure). */
+static int o_indirect(OLex *o, long long *num, long long *gen,
+                      PyObject **value, int *has_stream)
+{
+    *value = NULL;
+    *has_stream = 0;
+    o_skip(o);
+    if (o->pos >= o->n || !((o->d[o->pos] >= '0' && o->d[o->pos] <= '9') ||
+                            o->d[o->pos] == '+' || o->d[o->pos] == '-'))
+        return 0; /* no header → Python raises its exact error */
+    if (!o_int(o, num, NULL))
+        return 0;
+    o_skip(o);
+    if (!(o->pos < o->n && ((o->d[o->pos] >= '0' && o->d[o->pos] <= '9') ||
+                            o->d[o->pos] == '+' || o->d[o->pos] == '-')))
+        return 0;
+    if (!o_int(o, gen, NULL))
+        return 0;
+    o_skip(o);
+    if (!(o->pos + 2 < o->n && memcmp(o->d + o->pos, "obj", 3) == 0 &&
+          (o->pos + 3 >= o->n ||
+           is_obound(o->d[o->pos + 3]))))
+        return 0;
+    o->pos += 3;
+    PyObject *v = o_value(o, 0);
+    if (!v)
+        return (o->bail && !PyErr_Occurred()) ? 0 : -1;
+    /* post-value token: Python consumes exactly one token here and only
+     * `stream` matters — but its next_token can RAISE (lone '>', invalid
+     * hex), so the peek must validate like the lexer: bail on anything
+     * uncertain instead of silently succeeding. */
+    o_skip(o);
+    if (o->pos < o->n) {
+        unsigned char pc = o->d[o->pos];
+        int numlike = (pc >= '0' && pc <= '9') || pc == '+' || pc == '-' ||
+                      pc == '.';
+        if (!numlike && (pc == '/' || !is_obound(pc))) {
+            Py_ssize_t p = o->pos + (pc == '/' ? 1 : 0);
+            while (p < o->n && !is_obound(o->d[p]))
+                p++;
+            if (pc != '/' && p - o->pos == 6 &&
+                memcmp(o->d + o->pos, "stream", 6) == 0) {
+                *has_stream = 1;
+                o->pos = p;
+                if (!PyDict_Check(v)) {
+                    /* "stream keyword after non-dict object" */
+                    Py_DECREF(v);
+                    return 0;
+                }
+            }
+            /* other keyword/name (endobj, …): harmless, pos unused */
+        } else {
+            /* delimiter-led token: validate it the lexer's way; a token
+             * the lexer would raise on → bail to Python */
+            if (!o_skip_token(o)) {
+                Py_DECREF(v);
+                return (o->bail && !PyErr_Occurred()) ? 0 : -1;
+            }
+        }
+    }
+    *value = v;
+    return 1;
+}
+
 static PyObject *parse_indirect(PyObject *self, PyObject *args)
 {
     PyObject *data_obj;
@@ -2956,71 +3079,17 @@ static PyObject *parse_indirect(PyObject *self, PyObject *args)
     o.pos = offset >= 0 ? offset : 0;
     o.bail = 0;
     long long num, gen;
-    o_skip(&o);
-    if (o.pos >= o.n || !((o.d[o.pos] >= '0' && o.d[o.pos] <= '9') ||
-                          o.d[o.pos] == '+' || o.d[o.pos] == '-'))
-        Py_RETURN_NONE; /* no header → Python raises its exact error */
-    if (!o_int(&o, &num, NULL))
-        goto maybe_bail;
-    o_skip(&o);
-    if (!(o.pos < o.n && ((o.d[o.pos] >= '0' && o.d[o.pos] <= '9') ||
-                          o.d[o.pos] == '+' || o.d[o.pos] == '-')))
+    PyObject *value;
+    int has_stream;
+    int rc = o_indirect(&o, &num, &gen, &value, &has_stream);
+    if (rc == 0)
         Py_RETURN_NONE;
-    if (!o_int(&o, &gen, NULL))
-        goto maybe_bail;
-    o_skip(&o);
-    if (!(o.pos + 2 < o.n && memcmp(o.d + o.pos, "obj", 3) == 0 &&
-          (o.pos + 3 >= o.n ||
-           is_ws1(o.d[o.pos + 3]) || is_bound(o.d[o.pos + 3]))))
-        Py_RETURN_NONE;
-    o.pos += 3;
-    {
-        PyObject *value = o_value(&o, 0);
-        if (!value)
-            goto maybe_bail;
-        /* post-value token: Python consumes exactly one token here and
-         * only `stream` matters — but its next_token can RAISE (lone '>',
-         * invalid hex), so the peek must validate like the lexer: bail on
-         * anything uncertain instead of silently succeeding. */
-        o_skip(&o);
-        int has_stream = 0;
-        if (o.pos < o.n) {
-            unsigned char pc = o.d[o.pos];
-            int numlike = (pc >= '0' && pc <= '9') || pc == '+' ||
-                          pc == '-' || pc == '.';
-            if (!numlike && (pc == '/' || (!is_ws1(pc) && !is_bound(pc)))) {
-                Py_ssize_t p = o.pos + (pc == '/' ? 1 : 0);
-                while (p < o.n && !is_ws1(o.d[p]) && !is_bound(o.d[p]))
-                    p++;
-                if (pc != '/' && p - o.pos == 6 &&
-                    memcmp(o.d + o.pos, "stream", 6) == 0) {
-                    has_stream = 1;
-                    o.pos = p;
-                    if (!PyDict_Check(value)) {
-                        /* "stream keyword after non-dict object" */
-                        Py_DECREF(value);
-                        Py_RETURN_NONE;
-                    }
-                }
-                /* other keyword/name (endobj, …): harmless, pos unused */
-            } else {
-                /* delimiter-led token: validate it the lexer's way; a
-                 * token the lexer would raise on → bail to Python */
-                if (!o_skip_token(&o)) {
-                    Py_DECREF(value);
-                    goto maybe_bail;
-                }
-            }
-        }
-        PyObject *r = Py_BuildValue("(LLOin)", num, gen, value,
-                                    has_stream, o.pos);
-        Py_DECREF(value);
-        return r;
-    }
-maybe_bail:
-    if (o.bail && !PyErr_Occurred())
-        Py_RETURN_NONE;
-    return NULL; /* real exception (memory, callback failure) */
+    if (rc < 0)
+        return NULL;
+    PyObject *r =
+        Py_BuildValue("(LLOin)", num, gen, value, has_stream, o.pos);
+    Py_DECREF(value);
+    return r;
 }
 
 /* ========================================================================
@@ -4428,11 +4497,12 @@ static PyObject *html_events_py(PyObject *self, PyObject *args)
 
 /* ========================================================================
  * Traditional xref-section fast parse (xref.py _parse_traditional_section
- * entry loop; xref.rs:750-911 lineage).  STRICT 20-byte-stride layout
- * only — `NNNNNNNNNN GGGGG k\x??\x??` — anything else (flexible spacing,
- * comments before 'xref', truncated tables, 19-byte entries) returns
- * None and the Python loop, which is the behavior authority including
- * its flexible-producer fallback, re-parses from the same offset.
+ * and _parse_trailer_after; xref.rs:750-911 lineage).  STRICT 20-byte-stride
+ * layout only — `NNNNNNNNNN GGGGG k\x??\x??` — followed by `trailer <<…>>`.
+ * Anything else (flexible spacing, comments before 'xref', truncated tables,
+ * 19-byte entries, no trailer keyword, a trailer that is not a dict)
+ * returns None and the Python loop, which is the behavior authority
+ * including its flexible-producer fallback, re-parses from the same offset.
  * ======================================================================== */
 
 static PyObject *g_n_str, *g_f_str; /* "n" / "f" singletons */
@@ -4444,30 +4514,13 @@ static int is_bws(unsigned char b)
            b == 0x0b;
 }
 
-static PyObject *parse_xref_sections(PyObject *self, PyObject *args)
+/* the subsection entries of one section; p is just past the 'xref'
+ * keyword.  Entries go into `entries` with setdefault (first definition
+ * wins).  1 = parsed (*end = position after the last entry's EOL),
+ * 0 = bail, -1 = exception. */
+static int xref_entries(const unsigned char *d, Py_ssize_t n, Py_ssize_t p,
+                        PyObject *entries, Py_ssize_t *end)
 {
-    PyObject *data_obj;
-    Py_ssize_t offset;
-    if (!PyArg_ParseTuple(args, "On", &data_obj, &offset))
-        return NULL;
-    if (!PyBytes_Check(data_obj) || offset < 0)
-        Py_RETURN_NONE;
-    const unsigned char *d = (const unsigned char *)PyBytes_AS_STRING(data_obj);
-    Py_ssize_t n = PyBytes_GET_SIZE(data_obj);
-    Py_ssize_t p = offset;
-    /* the Lexer skips ws AND comments before 'xref'; handle pure-ws skip
-     * natively, bail on anything else (incl. '%') */
-    while (p < n && is_ws1(d[p]))
-        p++;
-    if (p + 4 > n || memcmp(d + p, "xref", 4) != 0)
-        Py_RETURN_NONE; /* Python raises its exact XRefError */
-    if (p + 4 < n && !is_bound(d[p + 4]))
-        Py_RETURN_NONE; /* 'xrefx' — not the keyword token */
-    p += 4;
-
-    PyObject *entries = PyDict_New();
-    if (!entries)
-        return NULL;
     for (;;) {
         /* subsection header: \s*(\d+)\s+(\d+)\s* — commit p only on a
          * full match (regex semantics) */
@@ -4480,7 +4533,7 @@ static PyObject *parse_xref_sections(PyObject *self, PyObject *args)
         while (q < n && d[q] >= '0' && d[q] <= '9')
             q++;
         if (q - s1 > 18)
-            goto bail;
+            return 0;
         Py_ssize_t ws = q;
         while (q < n && is_bws(d[q]))
             q++;
@@ -4490,7 +4543,7 @@ static PyObject *parse_xref_sections(PyObject *self, PyObject *args)
         while (q < n && d[q] >= '0' && d[q] <= '9')
             q++;
         if (q - s2 > 18)
-            goto bail;
+            return 0;
         while (q < n && is_bws(d[q]))
             q++;
         long long start_obj = 0, count = 0;
@@ -4501,27 +4554,28 @@ static PyObject *parse_xref_sections(PyObject *self, PyObject *args)
         Py_ssize_t hdr_end = q;
         /* strict stride validation */
         if (count > 0) {
-            if (hdr_end + 20 * (count - 1) + 18 > n)
-                goto bail; /* truncated: Python's flex path decides */
+            if (count > (n - hdr_end) / 20 + 1 ||
+                hdr_end + 20 * (count - 1) + 18 > n)
+                return 0; /* truncated: Python's flex path decides */
             for (long long i = 0; i < count; i++) {
                 const unsigned char *e = d + hdr_end + 20 * i;
                 for (int k2 = 0; k2 < 10; k2++)
                     if (e[k2] < '0' || e[k2] > '9')
-                        goto bail;
+                        return 0;
                 if (!is_bws(e[10]))
-                    goto bail;
+                    return 0;
                 for (int k2 = 11; k2 < 16; k2++)
                     if (e[k2] < '0' || e[k2] > '9')
-                        goto bail;
+                        return 0;
                 if (!is_bws(e[16]))
-                    goto bail;
+                    return 0;
                 if (e[17] != 'n' && e[17] != 'f')
-                    goto bail;
+                    return 0;
                 if (i < count - 1) {
                     /* the two stride filler bytes must be whitespace or
                      * the bulk regex would see a different layout */
                     if (!is_bws(e[18]) || !is_bws(e[19]))
-                        goto bail;
+                        return 0;
                 }
             }
             for (long long i = 0; i < count; i++) {
@@ -4533,14 +4587,14 @@ static PyObject *parse_xref_sections(PyObject *self, PyObject *args)
                     gen = gen * 10 + (e[k2] - '0');
                 PyObject *num = PyLong_FromLongLong(start_obj + i);
                 if (!num)
-                    goto err;
+                    return -1;
                 PyObject *off_o = PyLong_FromLongLong(off);
                 PyObject *gen_o = PyLong_FromLongLong(gen);
                 if (!off_o || !gen_o) {
                     Py_DECREF(num);
                     Py_XDECREF(off_o);
                     Py_XDECREF(gen_o);
-                    goto err;
+                    return -1;
                 }
                 PyObject *tup = PyTuple_Pack(
                     3, e[17] == 'n' ? g_n_str : g_f_str, off_o, gen_o);
@@ -4548,14 +4602,14 @@ static PyObject *parse_xref_sections(PyObject *self, PyObject *args)
                 Py_DECREF(gen_o);
                 if (!tup) {
                     Py_DECREF(num);
-                    goto err;
+                    return -1;
                 }
                 /* first definition wins (entries.setdefault) */
                 PyObject *prev = PyDict_SetDefault(entries, num, tup);
                 Py_DECREF(num);
                 Py_DECREF(tup);
                 if (!prev)
-                    goto err;
+                    return -1;
             }
             p = hdr_end + 20 * (count - 1) + 18;
         } else {
@@ -4565,17 +4619,761 @@ static PyObject *parse_xref_sections(PyObject *self, PyObject *args)
         while (p < n && (d[p] == '\r' || d[p] == '\n' || d[p] == ' '))
             p++;
     }
-    {
-        PyObject *r = Py_BuildValue("(On)", entries, p);
-        Py_DECREF(entries);
-        return r;
+    *end = p;
+    return 1;
+}
+
+/* `trailer <<…>>` at pos (_parse_trailer_after): 1 = *out is the dict (new
+ * ref) and *end the position after it, 0 = bail, -1 = exception */
+static int xref_trailer(const unsigned char *d, Py_ssize_t n, Py_ssize_t pos,
+                        PyObject **out, Py_ssize_t *end)
+{
+    OLex o;
+    o.d = d;
+    o.n = n;
+    o.pos = pos;
+    o.bail = 0;
+    o_skip(&o);
+    if (!(o.pos + 7 <= n && memcmp(d + o.pos, "trailer", 7) == 0 &&
+          (o.pos + 7 == n || is_obound(d[o.pos + 7]))))
+        return 0;
+    o.pos += 7;
+    PyObject *t = o_value(&o, 0);
+    if (!t)
+        return (o.bail && !PyErr_Occurred()) ? 0 : -1;
+    if (!PyDict_CheckExact(t)) {
+        Py_DECREF(t);
+        return 0;
     }
+    *out = t;
+    *end = o.pos;
+    return 1;
+}
+
+/* one whole section at `offset` (after optional whitespace): the xref.py
+ * _parse_traditional_section result (entries, trailer, pos_after) */
+static int xref_section(const unsigned char *d, Py_ssize_t n,
+                        Py_ssize_t offset, PyObject *entries,
+                        PyObject **trailer, Py_ssize_t *end)
+{
+    Py_ssize_t p = offset;
+    /* the Lexer skips ws AND comments before 'xref'; handle pure-ws skip
+     * natively, bail on anything else (incl. '%') */
+    while (p < n && is_ws1(d[p]))
+        p++;
+    if (p + 4 > n || memcmp(d + p, "xref", 4) != 0)
+        return 0; /* Python raises its exact XRefError */
+    if (p + 4 < n && !is_obound(d[p + 4]))
+        return 0; /* 'xrefx' — not the keyword token */
+    int rc = xref_entries(d, n, p + 4, entries, &p);
+    if (rc <= 0)
+        return rc;
+    return xref_trailer(d, n, p, trailer, end);
+}
+
+static PyObject *parse_xref_section(PyObject *self, PyObject *args)
+{
+    PyObject *data_obj;
+    Py_ssize_t offset;
+    if (!PyArg_ParseTuple(args, "On", &data_obj, &offset))
+        return NULL;
+    if (!PyBytes_Check(data_obj) || offset < 0)
+        Py_RETURN_NONE;
+    PyObject *entries = PyDict_New();
+    if (!entries)
+        return NULL;
+    PyObject *trailer = NULL;
+    Py_ssize_t end = 0;
+    int rc = xref_section((const unsigned char *)PyBytes_AS_STRING(data_obj),
+                          PyBytes_GET_SIZE(data_obj), offset, entries,
+                          &trailer, &end);
+    if (rc <= 0) {
+        Py_DECREF(entries);
+        if (rc < 0)
+            return NULL;
+        Py_RETURN_NONE;
+    }
+    PyObject *r = Py_BuildValue("(NNn)", entries, trailer, end);
+    return r;
+}
+
+/* ========================================================================
+ * Document skeleton fast path: the xref chain (xref.py parse_xref_chain),
+ * object fetch (reader.py PdfReader.get_object / resolve), the page tree
+ * (pages.py flatten_page_tree) and /Contents assembly (pages.py
+ * page_content).  Same discipline as parse_indirect: each entry point
+ * returns a complete result or None (get_object: the BAIL sentinel), and on
+ * a bail the caller re-runs that whole step in Python, the authority.  The
+ * C steps bail on encryption, recovered mode, a missing xref entry, a
+ * compressed or wrong-object entry, an indirect /Length, xref streams and
+ * /XRefStm, and on every parse the object parser is not byte-certain about.
+ *
+ * Objects fetched here go into reader._cache exactly as get_object would
+ * cache them (same key, same value), and a bailed step's Python re-run
+ * walks the same objects first, so a bail leaves nothing Python would not
+ * have produced itself.
+ * ======================================================================== */
+
+static PyObject *g_stream_cls; /* objects.Stream */
+static PyObject *g_bail;       /* module BAIL sentinel */
+static PyObject *g_space_bytes;                  /* b" " */
+static PyObject *s_data, *s_xref, *s_cache, *s_resolving, *s_lenient,
+    *s_decryptor, *s_mode, *s_trailer, *s_strict, *s_join, *s_dict, *s_raw;
+static PyObject *k_Length, *k_Root, *k_Pages, *k_Type, *k_Kids, *k_Contents,
+    *k_Resources, *k_MediaBox, *k_Filter, *k_DecodeParms, *k_DP, *k_Prev,
+    *k_XRefStm, *k_Page;
+static PyObject *k_inheritable[4]; /* Resources MediaBox CropBox Rotate */
+
+/* data.find(needle, start) for a NUL-free needle; -1 when absent */
+static Py_ssize_t bfind(const unsigned char *d, Py_ssize_t n,
+                        Py_ssize_t start, const char *needle, Py_ssize_t m)
+{
+    Py_ssize_t i = start;
+    while (i + m <= n) {
+        const unsigned char *hit = memchr(d + i, needle[0], (size_t)(n - m + 1 - i));
+        if (!hit)
+            return -1;
+        i = hit - d;
+        if (memcmp(d + i, needle, (size_t)m) == 0)
+            return i;
+        i++;
+    }
+    return -1;
+}
+
+/* an exact int (bool excluded) that fits a Py_ssize_t: 1 + *out, else 0 */
+static int small_int(PyObject *v, Py_ssize_t *out)
+{
+    if (!v || !PyLong_CheckExact(v))
+        return 0;
+    Py_ssize_t x = PyLong_AsSsize_t(v);
+    if (x == -1 && PyErr_Occurred()) {
+        PyErr_Clear();
+        return 0;
+    }
+    *out = x;
+    return 1;
+}
+
+/* find_xref_offset: `startxref` in the last 1KB, else anywhere; then
+ * re.match(rb"startxref\s+(\d+)") over a 64-byte window.  1 = *out,
+ * 0 = no offset (Python recovers), -1 = bail (digits past 18). */
+static int c_startxref(const unsigned char *d, Py_ssize_t n, Py_ssize_t *out)
+{
+    Py_ssize_t tail = n > 1024 ? n - 1024 : 0, idx = -1;
+    for (Py_ssize_t i = n - 9; i >= tail; i--)
+        if (d[i] == 's' && memcmp(d + i, "startxref", 9) == 0) {
+            idx = i;
+            break;
+        }
+    if (idx < 0)
+        for (Py_ssize_t i = tail - 1; i >= 0; i--)
+            if (i + 9 <= n && d[i] == 's' && memcmp(d + i, "startxref", 9) == 0) {
+                idx = i;
+                break;
+            }
+    if (idx < 0)
+        return 0;
+    Py_ssize_t w = idx + 64 < n ? idx + 64 : n, q = idx + 9, s = q;
+    while (q < w && is_bws(d[q]))
+        q++;
+    if (q == s || q >= w || d[q] < '0' || d[q] > '9')
+        return 0;
+    s = q;
+    long long v = 0;
+    while (q < w && d[q] >= '0' && d[q] <= '9') {
+        if (q - s >= 18)
+            return -1;
+        v = v * 10 + (d[q] - '0');
+        q++;
+    }
+    *out = (Py_ssize_t)v;
+    return 1;
+}
+
+/* parse_xref_chain's happy path: the /Prev chain of traditional sections,
+ * newest entries and trailer keys first, with the cycle guard and the
+ * 64-hop cap.  Returns (entries, trailer) or None. */
+static PyObject *xref_chain(PyObject *self, PyObject *args)
+{
+    PyObject *data_obj;
+    if (!PyArg_ParseTuple(args, "O", &data_obj))
+        return NULL;
+    if (!PyBytes_Check(data_obj))
+        Py_RETURN_NONE;
+    const unsigned char *d = (const unsigned char *)PyBytes_AS_STRING(data_obj);
+    Py_ssize_t n = PyBytes_GET_SIZE(data_obj), offset = 0;
+    if (c_startxref(d, n, &offset) != 1)
+        Py_RETURN_NONE;
+    PyObject *entries = PyDict_New(), *trailer = PyDict_New();
+    Py_ssize_t seen[64];
+    int hops = 0;
+    if (!entries || !trailer)
+        goto err;
+    while (0 <= offset && offset < n && hops < 64) {
+        int cyc = 0;
+        for (int i = 0; i < hops; i++)
+            if (seen[i] == offset)
+                cyc = 1;
+        if (cyc)
+            break; /* cycle guard */
+        seen[hops++] = offset;
+        if (offset + 4 > n || memcmp(d + offset, "xref", 4) != 0)
+            goto bail; /* xref stream: Python path */
+        PyObject *sec_trailer = NULL;
+        Py_ssize_t end;
+        int rc = xref_section(d, n, offset, entries, &sec_trailer, &end);
+        if (rc <= 0) {
+            if (rc < 0)
+                goto err;
+            goto bail;
+        }
+        Py_ssize_t pos = 0;
+        PyObject *k, *v;
+        while (PyDict_Next(sec_trailer, &pos, &k, &v))
+            if (!PyDict_SetDefault(trailer, k, v)) {
+                Py_DECREF(sec_trailer);
+                goto err;
+            }
+        /* an int /XRefStm (hybrid file), a bool, float or huge /Prev:
+         * Python decides; any other /Prev value ends the chain */
+        PyObject *stm = PyDict_GetItemWithError(sec_trailer, k_XRefStm);
+        PyObject *prev =
+            PyErr_Occurred() ? NULL
+                             : PyDict_GetItemWithError(sec_trailer, k_Prev);
+        int verdict; /* 1 = follow /Prev, 0 = stop, -1 = bail */
+        if (stm && PyLong_Check(stm))
+            verdict = -1;
+        else if (!prev)
+            verdict = 0;
+        else if (small_int(prev, &offset))
+            verdict = 1;
+        else
+            verdict = (PyLong_Check(prev) || PyFloat_Check(prev)) ? -1 : 0;
+        Py_DECREF(sec_trailer);
+        if (PyErr_Occurred())
+            goto err;
+        if (verdict < 0)
+            goto bail;
+        if (verdict == 0)
+            break;
+    }
+    if (PyDict_GET_SIZE(entries) == 0)
+        goto bail; /* Python recovers */
+    return Py_BuildValue("(NN)", entries, trailer);
 bail:
-    Py_DECREF(entries);
+    Py_XDECREF(entries);
+    Py_XDECREF(trailer);
     Py_RETURN_NONE;
 err:
-    Py_DECREF(entries);
+    Py_XDECREF(entries);
+    Py_XDECREF(trailer);
     return NULL;
+}
+
+/* one reader's state for the duration of a C call (borrowed views into
+ * the PdfReader's slots, held by new refs) */
+typedef struct {
+    PyObject *reader, *data, *xref, *cache, *resolving;
+    const unsigned char *d;
+    Py_ssize_t n;
+    int lenient;
+} Doc;
+
+static void doc_close(Doc *doc)
+{
+    Py_CLEAR(doc->data);
+    Py_CLEAR(doc->xref);
+    Py_CLEAR(doc->cache);
+    Py_CLEAR(doc->resolving);
+}
+
+/* 1 = ready, 0 = bail (encrypted, recovered, unexpected reader shape),
+ * -1 = exception */
+static int doc_open(Doc *doc, PyObject *reader)
+{
+    memset(doc, 0, sizeof(*doc));
+    doc->reader = reader;
+    PyObject *dec = PyObject_GetAttr(reader, s_decryptor);
+    PyObject *mode = dec ? PyObject_GetAttr(reader, s_mode) : NULL;
+    PyObject *len = mode ? PyObject_GetAttr(reader, s_lenient) : NULL;
+    int ok = len && dec == Py_None && PyUnicode_Check(mode) &&
+             PyUnicode_Compare(mode, s_strict) == 0;
+    if (ok) {
+        doc->lenient = PyObject_IsTrue(len);
+        doc->data = PyObject_GetAttr(reader, s_data);
+        doc->xref = doc->data ? PyObject_GetAttr(reader, s_xref) : NULL;
+        doc->cache = doc->xref ? PyObject_GetAttr(reader, s_cache) : NULL;
+        doc->resolving =
+            doc->cache ? PyObject_GetAttr(reader, s_resolving) : NULL;
+        ok = doc->lenient >= 0 && doc->resolving &&
+             PyBytes_CheckExact(doc->data) && PyDict_CheckExact(doc->xref) &&
+             PyDict_CheckExact(doc->cache) && PySet_Check(doc->resolving);
+    }
+    Py_XDECREF(dec);
+    Py_XDECREF(mode);
+    Py_XDECREF(len);
+    if (!ok) {
+        doc_close(doc);
+        /* a reader still in construction lacks some slots: bail, never
+         * raise from the fast path */
+        if (PyErr_Occurred() && !PyErr_ExceptionMatches(PyExc_AttributeError))
+            return -1;
+        PyErr_Clear();
+        return 0;
+    }
+    doc->d = (const unsigned char *)PyBytes_AS_STRING(doc->data);
+    doc->n = PyBytes_GET_SIZE(doc->data);
+    return 1;
+}
+
+/* reader._capture_stream without a decryptor: the payload after the
+ * `stream` keyword at pos.  New Stream, or NULL with *bail / exception. */
+static PyObject *doc_stream(Doc *doc, PyObject *value, Py_ssize_t pos,
+                            int *bail)
+{
+    const unsigned char *d = doc->d;
+    Py_ssize_t n = doc->n;
+    /* exactly one EOL after 'stream' (spec): \r\n or \n (tolerate \r) */
+    if (pos + 1 < n && d[pos] == '\r' && d[pos + 1] == '\n')
+        pos += 2;
+    else if (pos < n && (d[pos] == '\r' || d[pos] == '\n'))
+        pos += 1;
+    PyObject *length = PyDict_GetItemWithError(value, k_Length);
+    if (!length && PyErr_Occurred())
+        return NULL;
+    if (length && (PyObject_TypeCheck(length, (PyTypeObject *)g_ref_cls) ||
+                   PyBool_Check(length))) {
+        *bail = 1; /* indirect /Length: Python resolves it */
+        return NULL;
+    }
+    Py_ssize_t start = pos, stop = -1, len;
+    if (length && PyLong_CheckExact(length)) {
+        if (!small_int(length, &len)) {
+            *bail = 1;
+            return NULL;
+        }
+        if (len >= 0 && len <= n - pos) {
+            /* data[end:end+32].lstrip(b"\r\n \t").startswith(b"endstream") */
+            Py_ssize_t q = pos + len, w = q + 32 < n ? q + 32 : n;
+            while (q < w && (d[q] == '\r' || d[q] == '\n' || d[q] == ' ' ||
+                             d[q] == '\t'))
+                q++;
+            if (w - q >= 9 && memcmp(d + q, "endstream", 9) == 0)
+                stop = pos + len;
+        }
+    }
+    if (stop < 0) {
+        /* declared length wrong/absent: lenient endstream search; strict
+         * mode and an unterminated stream raise in Python */
+        Py_ssize_t es = doc->lenient ? bfind(d, n, pos, "endstream", 9) : -1;
+        if (es < 0) {
+            *bail = 1;
+            return NULL;
+        }
+        stop = es;
+        if (stop > start && d[stop - 1] == '\n')
+            stop--;
+        if (stop > start && d[stop - 1] == '\r')
+            stop--;
+    }
+    PyObject *raw =
+        PyBytes_FromStringAndSize((const char *)(d + start), stop - start);
+    if (!raw)
+        return NULL;
+    PyObject *stm = PyObject_CallFunctionObjArgs(g_stream_cls, value, raw, NULL);
+    Py_DECREF(raw);
+    return stm;
+}
+
+/* PdfReader.get_object(num, gen) for cached, free and in-use entries:
+ * new ref, or NULL with *bail set (no exception) / an exception */
+static PyObject *doc_fetch(Doc *doc, PyObject *num, PyObject *gen, int *bail)
+{
+    PyObject *key = PyTuple_Pack(2, num, gen);
+    if (!key)
+        return NULL;
+    PyObject *obj = PyDict_GetItemWithError(doc->cache, key);
+    if (obj || PyErr_Occurred()) {
+        Py_XINCREF(obj);
+        Py_DECREF(key);
+        return obj;
+    }
+    obj = NULL;
+    if (PySet_GET_SIZE(doc->resolving)) {
+        int r = PySet_Contains(doc->resolving, key);
+        if (r != 0) { /* a reference cycle, or an error */
+            *bail = r > 0;
+            goto done;
+        }
+    }
+    /* a missing entry is filled from a header scan in Python */
+    PyObject *entry = PyDict_GetItemWithError(doc->xref, num);
+    Py_ssize_t offset;
+    long long want;
+    if (!entry || !PyTuple_CheckExact(entry) || PyTuple_GET_SIZE(entry) != 3 ||
+        !PyUnicode_Check(PyTuple_GET_ITEM(entry, 0)) ||
+        PyUnicode_GET_LENGTH(PyTuple_GET_ITEM(entry, 0)) != 1) {
+        *bail = !PyErr_Occurred();
+        goto done;
+    }
+    Py_UCS4 kind = PyUnicode_READ_CHAR(PyTuple_GET_ITEM(entry, 0), 0);
+    if (kind == 'f') {
+        obj = Py_None;
+        Py_INCREF(obj);
+    } else if (kind == 'n' && small_int(PyTuple_GET_ITEM(entry, 1), &offset) &&
+               PyLong_CheckExact(num) &&
+               (want = PyLong_AsLongLong(num), !PyErr_Occurred())) {
+        OLex o;
+        o.d = doc->d;
+        o.n = doc->n;
+        o.pos = offset >= 0 ? offset : 0;
+        o.bail = 0;
+        long long pnum, pgen;
+        PyObject *value;
+        int has_stream;
+        int rc = o_indirect(&o, &pnum, &pgen, &value, &has_stream);
+        if (rc <= 0) {
+            *bail = rc == 0;
+            goto done;
+        }
+        if (pnum != want) { /* wrong object at the offset: Python rescans */
+            Py_DECREF(value);
+            *bail = 1;
+            goto done;
+        }
+        if (has_stream) {
+            obj = doc_stream(doc, value, o.pos, bail);
+            Py_DECREF(value);
+            if (!obj)
+                goto done;
+        } else
+            obj = value;
+    } else {
+        /* compressed ('c') entries, odd offsets: Python path */
+        PyErr_Clear();
+        *bail = 1;
+        goto done;
+    }
+    if (PyDict_SetItem(doc->cache, key, obj) < 0)
+        Py_CLEAR(obj);
+done:
+    Py_DECREF(key);
+    return obj;
+}
+
+/* PdfReader.resolve: follow up to 32 Ref hops (v borrowed, NULL read as
+ * None; new ref) */
+static PyObject *doc_resolve(Doc *doc, PyObject *v, int *bail)
+{
+    if (!v) { /* a missing key (dict.get → None), or a lookup error */
+        if (PyErr_Occurred())
+            return NULL;
+        v = Py_None;
+    }
+    Py_INCREF(v);
+    for (int hops = 0;
+         hops < 32 && PyObject_TypeCheck(v, (PyTypeObject *)g_ref_cls);
+         hops++) {
+        if (PyTuple_GET_SIZE(v) != 2) {
+            Py_DECREF(v);
+            *bail = 1;
+            return NULL;
+        }
+        PyObject *nv = doc_fetch(doc, PyTuple_GET_ITEM(v, 0),
+                                 PyTuple_GET_ITEM(v, 1), bail);
+        Py_DECREF(v);
+        if (!nv)
+            return NULL;
+        v = nv;
+    }
+    return v;
+}
+
+/* get_object(reader, num, gen): the object, or BAIL → Python get_object */
+static PyObject *c_get_object(PyObject *self, PyObject *args)
+{
+    PyObject *reader, *num, *gen;
+    if (!PyArg_ParseTuple(args, "OOO", &reader, &num, &gen))
+        return NULL;
+    Doc doc;
+    int rc = doc_open(&doc, reader);
+    if (rc <= 0) {
+        if (rc < 0)
+            return NULL;
+        Py_INCREF(g_bail);
+        return g_bail;
+    }
+    int bail = 0;
+    PyObject *obj = doc_fetch(&doc, num, gen, &bail);
+    doc_close(&doc);
+    if (!obj && bail && !PyErr_Occurred()) {
+        Py_INCREF(g_bail);
+        return g_bail;
+    }
+    return obj;
+}
+
+typedef struct {
+    Doc *doc;
+    PyObject *page_cls, *result, *visited;
+    long max_depth;
+    int bail;
+} Walk;
+
+/* pages.flatten_page_tree's walk(node, inherited, depth): 0 ok, -1 stop
+ * (w->bail set, or an exception) */
+static int walk_node(Walk *w, PyObject *node, PyObject *inherited, long depth)
+{
+    if (depth > w->max_depth || !PyDict_Check(node))
+        return 0;
+    PyObject *typ = PyDict_GetItemWithError(node, k_Type);
+    if (!typ && PyErr_Occurred())
+        return -1;
+    /* str(node.get("Type", "")) == "Page": only a str can print as Page */
+    int is_page = typ && PyUnicode_Check(typ) &&
+                  PyUnicode_Compare(typ, k_Page) == 0;
+    PyObject *inh = PyDict_Copy(inherited);
+    if (!inh)
+        return -1;
+    int rc = -1;
+    for (int i = 0; i < 4; i++) {
+        PyObject *v = PyDict_GetItemWithError(node, k_inheritable[i]);
+        if (v ? PyDict_SetItem(inh, k_inheritable[i], v) < 0
+              : PyErr_Occurred() != NULL)
+            goto out;
+    }
+    if (!is_page) {
+        int kids_in = PyDict_Contains(node, k_Kids);
+        int cont_in = PyDict_Contains(node, k_Contents);
+        if (kids_in < 0 || cont_in < 0)
+            goto out;
+        is_page = !kids_in && cont_in;
+    }
+    if (is_page) {
+        PyObject *d = PyDict_Copy(node);
+        if (!d)
+            goto out;
+        PyObject *res = NULL, *mb = NULL, *page = NULL;
+        for (int i = 0; i < 4; i++) {
+            PyObject *k = k_inheritable[i];
+            int in_d = PyDict_Contains(d, k);
+            PyObject *v = in_d ? NULL : PyDict_GetItemWithError(inh, k);
+            if (in_d < 0 || (v && PyDict_SetItem(d, k, v) < 0) ||
+                (!v && PyErr_Occurred()))
+                goto page_out;
+        }
+        res = doc_resolve(w->doc, PyDict_GetItemWithError(d, k_Resources),
+                          &w->bail);
+        if (!res)
+            goto page_out;
+        mb = doc_resolve(w->doc, PyDict_GetItemWithError(d, k_MediaBox),
+                         &w->bail);
+        if (!mb)
+            goto page_out;
+        if (!PyDict_Check(res)) {
+            Py_SETREF(res, PyDict_New());
+            if (!res)
+                goto page_out;
+        }
+        page = PyObject_CallFunctionObjArgs(w->page_cls, d, res, mb, NULL);
+        if (page && PyList_Append(w->result, page) == 0)
+            rc = 0;
+    page_out:
+        Py_XDECREF(page);
+        Py_XDECREF(res);
+        Py_XDECREF(mb);
+        Py_DECREF(d);
+        goto out;
+    }
+    PyObject *kids_v = PyDict_GetItemWithError(node, k_Kids);
+    if (!kids_v && PyErr_Occurred())
+        goto out;
+    PyObject *kids = doc_resolve(w->doc, kids_v, &w->bail);
+    if (!kids)
+        goto out;
+    if (PyList_Check(kids)) {
+        for (Py_ssize_t i = 0; i < PyList_GET_SIZE(kids); i++) {
+            PyObject *kid = PyList_GET_ITEM(kids, i);
+            PyObject *marker =
+                PyObject_TypeCheck(kid, (PyTypeObject *)g_ref_cls)
+                    ? (Py_INCREF(kid), kid)
+                    : PyLong_FromVoidPtr(kid); /* id(kid) */
+            if (!marker)
+                goto kids_out;
+            int seen = PySet_Contains(w->visited, marker);
+            if (seen == 0 && PySet_Add(w->visited, marker) < 0)
+                seen = -1;
+            Py_DECREF(marker);
+            if (seen < 0)
+                goto kids_out;
+            if (seen) /* cycle guard */
+                continue;
+            Py_INCREF(kid); /* the list may not outlive a deep resolve */
+            PyObject *child = doc_resolve(w->doc, kid, &w->bail);
+            Py_DECREF(kid);
+            if (!child)
+                goto kids_out;
+            int r = walk_node(w, child, inh, depth + 1);
+            Py_DECREF(child);
+            if (r < 0)
+                goto kids_out;
+        }
+    }
+    rc = 0;
+kids_out:
+    Py_DECREF(kids);
+out:
+    Py_DECREF(inh);
+    return rc;
+}
+
+/* flatten_pages(reader, Page, max_depth): the flatten_page_tree list, or
+ * None → Python walks the tree itself */
+static PyObject *flatten_pages(PyObject *self, PyObject *args)
+{
+    PyObject *reader, *page_cls;
+    long max_depth;
+    if (!PyArg_ParseTuple(args, "OOl", &reader, &page_cls, &max_depth))
+        return NULL;
+    Doc doc;
+    int rc = doc_open(&doc, reader);
+    if (rc <= 0) {
+        if (rc < 0)
+            return NULL;
+        Py_RETURN_NONE;
+    }
+    Walk w = {&doc, page_cls, NULL, NULL, max_depth, 0};
+    PyObject *trailer = PyObject_GetAttr(reader, s_trailer);
+    PyObject *catalog = NULL, *pages = NULL, *empty = NULL;
+    if (!trailer)
+        goto fail;
+    if (!PyDict_Check(trailer)) {
+        w.bail = 1;
+        goto fail;
+    }
+    catalog = doc_resolve(&doc, PyDict_GetItemWithError(trailer, k_Root),
+                          &w.bail);
+    if (!catalog)
+        goto fail;
+    if (!PyDict_Check(catalog)) { /* reader.catalog() raises */
+        w.bail = 1;
+        goto fail;
+    }
+    pages = doc_resolve(&doc, PyDict_GetItemWithError(catalog, k_Pages),
+                        &w.bail);
+    w.result = PyList_New(0);
+    w.visited = PySet_New(NULL);
+    empty = PyDict_New();
+    if (!pages || !w.result || !w.visited || !empty)
+        goto fail;
+    if (walk_node(&w, pages, empty, 0) < 0)
+        goto fail;
+    Py_DECREF(trailer);
+    Py_DECREF(catalog);
+    Py_DECREF(pages);
+    Py_DECREF(empty);
+    Py_DECREF(w.visited);
+    doc_close(&doc);
+    return w.result;
+fail:
+    Py_XDECREF(trailer);
+    Py_XDECREF(catalog);
+    Py_XDECREF(pages);
+    Py_XDECREF(empty);
+    Py_XDECREF(w.visited);
+    Py_XDECREF(w.result);
+    doc_close(&doc);
+    if (w.bail && !PyErr_Occurred())
+        Py_RETURN_NONE;
+    return NULL;
+}
+
+/* one content stream's bytes (pages._safe_decode): unfiltered payloads
+ * natively, anything with a /Filter or decode parameters through the
+ * Python helper.  New ref or NULL (exception). */
+static PyObject *content_bytes(PyObject *reader, PyObject *stm,
+                               PyObject *safe_decode)
+{
+    PyObject *sd = PyObject_GetAttr(stm, s_dict);
+    if (!sd)
+        return NULL;
+    int plain = 0;
+    if (PyDict_Check(sd)) {
+        PyObject *filt = PyDict_GetItemWithError(sd, k_Filter);
+        int parms = -1;
+        if (!PyErr_Occurred()) {
+            parms = PyDict_Contains(sd, k_DecodeParms);
+            if (parms == 0)
+                parms = PyDict_Contains(sd, k_DP);
+        }
+        if (parms < 0) {
+            Py_DECREF(sd);
+            return NULL;
+        }
+        /* decode_stream_data(raw, None, None) is raw itself */
+        plain = (!filt || filt == Py_None) && !parms;
+    }
+    Py_DECREF(sd);
+    if (plain)
+        return PyObject_GetAttr(stm, s_raw);
+    return PyObject_CallFunctionObjArgs(safe_decode, reader, stm, NULL);
+}
+
+/* page_content(reader, contents, _safe_decode): the joined /Contents
+ * bytes, or None → Python assembles them */
+static PyObject *page_content_c(PyObject *self, PyObject *args)
+{
+    PyObject *reader, *contents, *safe_decode;
+    if (!PyArg_ParseTuple(args, "OOO", &reader, &contents, &safe_decode))
+        return NULL;
+    Doc doc;
+    int rc = doc_open(&doc, reader);
+    if (rc <= 0) {
+        if (rc < 0)
+            return NULL;
+        Py_RETURN_NONE;
+    }
+    int bail = 0;
+    PyObject *parts = NULL, *out = NULL;
+    PyObject *c = doc_resolve(&doc, contents, &bail);
+    if (!c)
+        goto done;
+    parts = PyList_New(0);
+    if (!parts)
+        goto done;
+    int is_list = PyList_Check(c);
+    for (Py_ssize_t i = 0; is_list ? i < PyList_GET_SIZE(c) : i < 1; i++) {
+        PyObject *obj;
+        if (is_list) {
+            PyObject *item = PyList_GET_ITEM(c, i);
+            Py_INCREF(item);
+            obj = doc_resolve(&doc, item, &bail);
+            Py_DECREF(item);
+            if (!obj)
+                goto done;
+        } else {
+            obj = c;
+            Py_INCREF(obj);
+        }
+        int r = 0;
+        if (PyObject_TypeCheck(obj, (PyTypeObject *)g_stream_cls)) {
+            PyObject *b = content_bytes(reader, obj, safe_decode);
+            r = b ? PyList_Append(parts, b) : -1;
+            Py_XDECREF(b);
+        }
+        Py_DECREF(obj);
+        if (r < 0)
+            goto done;
+    }
+    out = PyObject_CallMethodOneArg(g_space_bytes, s_join, parts);
+done:
+    Py_XDECREF(c);
+    Py_XDECREF(parts);
+    doc_close(&doc);
+    if (!out && bail && !PyErr_Occurred())
+        Py_RETURN_NONE;
+    return out;
 }
 
 static void install_global(PyObject **slot, PyObject *value); /* below */
@@ -4630,11 +5428,24 @@ static PyObject *setup(PyObject *self, PyObject *args)
 
 static PyObject *setup_obj(PyObject *self, PyObject *args)
 {
-    PyObject *ref_cls, *obj_name_memo, *decode_name_obj;
-    if (!PyArg_ParseTuple(args, "OOO", &ref_cls, &obj_name_memo,
-                          &decode_name_obj))
+    PyObject *ref_cls, *obj_name_memo, *decode_name_obj, *stream_cls;
+    if (!PyArg_ParseTuple(args, "OOOO", &ref_cls, &obj_name_memo,
+                          &decode_name_obj, &stream_cls))
         return NULL;
+    if (!PyType_Check(ref_cls) || !PyType_Check(stream_cls)) {
+        PyErr_SetString(PyExc_TypeError, "Ref and Stream must be classes");
+        return NULL;
+    }
     install_global(&g_ref_cls, ref_cls);
+    install_global(&g_stream_cls, stream_cls);
+    names_clear();
+    {
+        PyTypeObject *t = (PyTypeObject *)ref_cls;
+        g_ref_is_tuple = PyType_IsSubtype(t, &PyTuple_Type) &&
+                         t->tp_basicsize == PyTuple_Type.tp_basicsize &&
+                         t->tp_itemsize == PyTuple_Type.tp_itemsize &&
+                         t->tp_dictoffset == 0;
+    }
     install_global(&g_obj_name_memo, obj_name_memo);
     install_global(&g_decode_name_obj, decode_name_obj);
     Py_RETURN_NONE;
@@ -4912,8 +5723,16 @@ static PyMethodDef methods[] = {
      "install html-path helpers (unescape, ws_collapse, boiler_value)"},
     {"html_events", html_events_py, METH_VARARGS,
      "HTML main-content events+links; None = bail to Python"},
-    {"parse_xref_sections", parse_xref_sections, METH_VARARGS,
-     "strict 20-byte traditional xref sections; None = bail"},
+    {"parse_xref_section", parse_xref_section, METH_VARARGS,
+     "strict 20-byte traditional xref section + trailer; None = bail"},
+    {"xref_chain", xref_chain, METH_VARARGS,
+     "traditional-xref /Prev chain -> (entries, trailer); None = bail"},
+    {"get_object", c_get_object, METH_VARARGS,
+     "reader.get_object for cached/free/in-use entries; BAIL = bail"},
+    {"flatten_pages", flatten_pages, METH_VARARGS,
+     "flatten_page_tree's Page list; None = bail"},
+    {"page_content", page_content_c, METH_VARARGS,
+     "page_content's joined /Contents bytes; None = bail"},
     {"run_page", run_page, METH_VARARGS,
      "run the fast content loop; None on completion"},
     {"parse_indirect", parse_indirect, METH_VARARGS,
@@ -4969,7 +5788,40 @@ PyMODINIT_FUNC PyInit_oxpdf_cscan(void)
     IN(a_layout, "_layout");
     IN(a_fragments, "fragments");
     IN(a_pending_absorb, "_pending_absorb");
+    IN(s_data, "data");
+    IN(s_xref, "xref");
+    IN(s_cache, "_cache");
+    IN(s_resolving, "_resolving");
+    IN(s_lenient, "lenient");
+    IN(s_decryptor, "decryptor");
+    IN(s_mode, "mode");
+    IN(s_trailer, "trailer");
+    IN(s_strict, "strict");
+    IN(s_join, "join");
+    IN(s_dict, "dict");
+    IN(s_raw, "raw");
+    IN(k_Length, "Length");
+    IN(k_Root, "Root");
+    IN(k_Pages, "Pages");
+    IN(k_Type, "Type");
+    IN(k_Kids, "Kids");
+    IN(k_Contents, "Contents");
+    IN(k_Resources, "Resources");
+    IN(k_MediaBox, "MediaBox");
+    IN(k_Filter, "Filter");
+    IN(k_DecodeParms, "DecodeParms");
+    IN(k_DP, "DP");
+    IN(k_Prev, "Prev");
+    IN(k_XRefStm, "XRefStm");
+    IN(k_Page, "Page");
+    k_inheritable[0] = k_Resources;
+    k_inheritable[1] = k_MediaBox;
+    IN(k_inheritable[2], "CropBox");
+    IN(k_inheritable[3], "Rotate");
 #undef IN
+    g_space_bytes = PyBytes_FromString(" ");
+    if (!g_space_bytes)
+        return NULL;
     g_nl = PyUnicode_InternFromString("\n");
     g_sp = PyUnicode_InternFromString(" ");
     g_empty = PyUnicode_InternFromString("");
@@ -4992,6 +5844,12 @@ PyMODINIT_FUNC PyInit_oxpdf_cscan(void)
     Py_INCREF(&CFragType);
     if (PyModule_AddObject(mod, "CFrag", (PyObject *)&CFragType) < 0) {
         Py_DECREF(&CFragType);
+        Py_DECREF(mod);
+        return NULL;
+    }
+    /* get_object's "not handled here" answer (None is a valid object) */
+    g_bail = PyObject_CallNoArgs((PyObject *)&PyBaseObject_Type);
+    if (!g_bail || PyModule_AddObjectRef(mod, "BAIL", g_bail) < 0) {
         Py_DECREF(mod);
         return NULL;
     }

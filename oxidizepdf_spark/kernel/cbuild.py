@@ -1,17 +1,37 @@
-"""Lazy in-repo C-extension build for the content-stream fast path.
+"""Lazy in-repo C-extension build for the kernel's fast paths.
 
-The kernel ships ``_cscan.c`` (a transcription of ``parse_and_run``'s
-fused fast loop — see content.py — into C using the CPython API) and
-compiles it ON FIRST IMPORT with the host toolchain:
+The kernel ships ``_cscan.c`` and compiles it ON FIRST IMPORT with the host
+toolchain:
 
     gcc -O2 -shared -fPIC _cscan.c -o <cache>/_cscan-<tag>.so
+
+``_cscan.c`` holds C transcriptions of pure-Python kernel steps, each
+pinned to its Python original by the differential tests
+(tests/test_cscan_differential.py):
+
+- the content interpreter loop (``run_page``: content.py's fused
+  parse_and_run loop, fast-show and layout modes) and the layout merge
+  (``merge_close``, ``reconstruct_text``);
+- the document skeleton: the xref chain and one traditional section with
+  its trailer (``xref_chain``, ``parse_xref_section``: xref.py), the object
+  parse and fetch (``parse_indirect``, ``get_object``: reader.py), the page
+  tree and the /Contents assembly (``flatten_pages``, ``page_content``:
+  pages.py);
+- the HTML main-content tokenizer (``html_events``: html_extract.py).
+
+Every entry point returns a complete result or a bail (None, or ``BAIL``
+for ``get_object``). On a bail the caller runs that whole step in Python,
+which stays the behavior authority: encrypted and recovered-mode
+documents, xref streams, compressed objects, an indirect /Length and any
+input the C code is not byte-certain about take the Python path.
 
 This is the same deploy-anywhere story a 1000-executor cluster needs: the
 source rides with the package (``--py-files``), each executor compiles
 once into a local cache keyed by (source hash, python version), and ANY
 failure — no compiler, no headers, sandboxed filesystem — degrades to the
-pure-Python loop with identical semantics (the parse_and_run ==
-run∘parse_content differential pins cover both paths).
+pure-Python kernel with identical output. A compiler rejection is cached
+as ``_cscan-<tag>.failed`` holding the compiler command and its stderr;
+``build_failure()`` returns that text.
 
 Kill switch: ``OXPDF_NO_CKERNEL=1`` forces pure Python.
 """
@@ -32,21 +52,7 @@ def _cache_dir() -> str:
     return os.path.join(base, "oxidizepdf_spark")
 
 
-def _write_failed_sentinel(path: str) -> None:
-    try:
-        tmp = path + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write("compile failed\n")
-        os.replace(tmp, path)
-    except OSError:
-        pass
-
-
-def load_cscan():
-    """Compile (if needed) and import the _cscan extension; None on any
-    failure — callers fall back to the pure-Python loop."""
-    if os.environ.get("OXPDF_NO_CKERNEL"):
-        return None
+def _source() -> bytes | None:
     # importlib.resources reads the source even when the package ships as a
     # zip (spark-submit --py-files oxidizepdf_spark.zip) — a plain
     # __file__-relative open() would fail there and silently lose the fast
@@ -54,7 +60,7 @@ def load_cscan():
     try:
         from importlib import resources
 
-        source = (
+        return (
             resources.files("oxidizepdf_spark.kernel") / "_cscan.c"
         ).read_bytes()
     except Exception:
@@ -63,57 +69,108 @@ def load_cscan():
                 os.path.dirname(os.path.abspath(__file__)), "_cscan.c"
             )
             with open(src, "rb") as f:
-                source = f.read()
+                return f.read()
         except OSError:
             return None
+
+
+def _stem(source: bytes, cache: str) -> str:
+    """``<cache>/_cscan-<tag>``: the tag invalidates every artifact (the
+    .so and the negative-cache sentinel) on the next kernel change."""
     tag = hashlib.sha256(
         source + sys.version.encode() + sys.executable.encode()
     ).hexdigest()[:16]
-    cache = _cache_dir()
-    so_path = os.path.join(cache, f"_cscan-{tag}.so")
+    return os.path.join(cache, f"_cscan-{tag}")
+
+
+def _write_failed_sentinel(path: str, text: str) -> None:
+    try:
+        tmp = path + f".tmp.{os.getpid()}"
+        with open(tmp, "w") as f:
+            f.write(text)
+        os.replace(tmp, path)
+    except OSError:
+        pass
+
+
+def build(source: bytes, cache: str) -> str | None:
+    """Compile ``source`` into ``cache`` unless already built; the .so
+    path, or None when the build failed (the sentinel says why)."""
+    stem = _stem(source, cache)
+    so_path = stem + ".so"
     # negative cache: without it, every new Python process on a host with a
     # broken toolchain re-runs the gcc attempt (up to the 120s timeout)
     # before degrading — a sentinel makes the failure a one-time cost per
-    # host; the source-hash tag invalidates it on the next kernel change
-    failed_path = os.path.join(cache, f"_cscan-{tag}.failed")
-    if not os.path.exists(so_path):
-        if os.path.exists(failed_path):
-            return None
-        try:
-            os.makedirs(cache, exist_ok=True)
-            include = sysconfig.get_paths()["include"]
-            cc = os.environ.get("CC", "gcc")
-            # compile from a cache-local copy of the source: the package
-            # may be a zip with no on-disk .c path for gcc to read
-            csrc = os.path.join(cache, f"_cscan-{tag}.c")
-            if not os.path.exists(csrc):
-                tmp_c = csrc + f".tmp.{os.getpid()}"
-                with open(tmp_c, "wb") as f:
-                    f.write(source)
-                os.replace(tmp_c, csrc)
-            tmp = so_path + f".tmp.{os.getpid()}"
-            proc = subprocess.run(
-                [
-                    cc, "-O2", "-fPIC", "-shared", "-fno-strict-aliasing",
-                    f"-I{include}", csrc, "-o", tmp,
-                ],
-                capture_output=True,
-                timeout=120,
+    # host
+    failed_path = stem + ".failed"
+    if os.path.exists(so_path):
+        return so_path
+    if os.path.exists(failed_path):
+        return None
+    try:
+        os.makedirs(cache, exist_ok=True)
+        include = sysconfig.get_paths()["include"]
+        cc = os.environ.get("CC", "gcc")
+        # compile from a cache-local copy of the source: the package may be
+        # a zip with no on-disk .c path for gcc to read
+        csrc = stem + ".c"
+        if not os.path.exists(csrc):
+            tmp_c = csrc + f".tmp.{os.getpid()}"
+            with open(tmp_c, "wb") as f:
+                f.write(source)
+            os.replace(tmp_c, csrc)
+        tmp = so_path + f".tmp.{os.getpid()}"
+        cmd = [
+            cc, "-O2", "-fPIC", "-shared", "-fno-strict-aliasing",
+            f"-I{include}", csrc, "-o", tmp,
+        ]
+        proc = subprocess.run(cmd, capture_output=True, timeout=120)
+        if proc.returncode != 0:
+            # a real compiler rejection is deterministic for this source
+            # hash — cache the negative permanently, with the reason
+            _write_failed_sentinel(
+                failed_path,
+                f"compile failed (exit {proc.returncode}): {' '.join(cmd)}\n"
+                + proc.stderr.decode("utf-8", "replace"),
             )
-            if proc.returncode != 0:
-                # a real compiler rejection is deterministic for this
-                # source hash — cache the negative permanently
-                _write_failed_sentinel(failed_path)
-                return None
-            os.replace(tmp, so_path)  # atomic vs concurrent executors
-        except (subprocess.TimeoutExpired, OSError):
-            # transient causes (gcc timeout under host load, ENOSPC, a
-            # killed subprocess): do NOT poison the negative cache — the
-            # next process should retry the compile
             return None
-        except Exception:
-            _write_failed_sentinel(failed_path)
-            return None
+        os.replace(tmp, so_path)  # atomic vs concurrent executors
+    except (subprocess.TimeoutExpired, OSError):
+        # transient causes (gcc timeout under host load, ENOSPC, a killed
+        # subprocess): do NOT poison the negative cache — the next process
+        # should retry the compile
+        return None
+    except Exception as e:
+        _write_failed_sentinel(
+            failed_path, f"build failed: {type(e).__name__}: {e}\n")
+        return None
+    return so_path
+
+
+def build_failure() -> str | None:
+    """The cached compiler failure for the current source (command and
+    stderr), or None when there is none."""
+    source = _source()
+    if source is None:
+        return None
+    try:
+        with open(_stem(source, _cache_dir()) + ".failed") as f:
+            return f.read()
+    except OSError:
+        return None
+
+
+def load_cscan():
+    """Compile (if needed) and import the _cscan extension; None on any
+    failure — callers fall back to the pure-Python kernel."""
+    if os.environ.get("OXPDF_NO_CKERNEL"):
+        return None
+    source = _source()
+    if source is None:
+        return None
+    so_path = build(source, _cache_dir())
+    if so_path is None:
+        return None
     try:
         import importlib.util
 

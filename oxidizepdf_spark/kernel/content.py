@@ -2090,7 +2090,8 @@ def _load_cscan():
         from . import objects as _objmod
 
         mod.setup_obj(
-            _objmod.Ref, _objmod._NAME_MEMO, _objmod.Lexer._decode_name_bytes
+            _objmod.Ref, _objmod._NAME_MEMO, _objmod.Lexer._decode_name_bytes,
+            _objmod.Stream,
         )
         # layout-mode fragment emission (optional second stage: its own
         # kill switch so the C fast-show path survives a layout-only

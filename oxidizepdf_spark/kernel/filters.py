@@ -156,6 +156,11 @@ def _png_unpredict(data: bytes, row_bytes: int, bpp: int) -> bytes:
     n_rows = len(data) // stride
     arr = np.frombuffer(data, dtype=np.uint8).reshape(n_rows, stride)
     tags = arr[:, 0]
+    if (tags == 2).all():
+        # Up rows only (xref streams' /Predictor 12): row r is the running
+        # column sum of rows 0..r, mod 256 — the loop below, in one pass
+        out = np.cumsum(arr[:, 1:], axis=0, dtype=np.int64) & 0xFF
+        return out.astype(np.uint8).tobytes()
     rows = arr[:, 1:].astype(np.int32)
     prev = np.zeros(row_bytes, dtype=np.int32)
     out = np.empty((n_rows, row_bytes), dtype=np.uint8)

@@ -8,10 +8,19 @@ Reimplements (in-UDF, per document):
 - /Contents assembly (single ref or array, decoded, joined in order):
   page_tree.rs:834; document.rs:1038 — streams are concatenated with a
   space separator per the spec's "treat as one stream" rule
+
+Both run natively when the C kernel is loaded (kernel/_cscan.c
+``flatten_pages`` and ``page_content``, on the C object fetch). Each C
+call returns the complete result or None; on None the Python code below
+runs the whole step and stays the authority. The C steps give up on
+encrypted and recovered-mode documents and on any object the C fetch
+bails on; a /Filter or decode parameters on a content stream go through
+``_safe_decode`` below, called from C.
 """
 
 from __future__ import annotations
 
+from . import content as _content
 from .objects import Ref, Stream
 from .reader import PdfReader
 
@@ -34,6 +43,11 @@ def flatten_page_tree(reader: PdfReader) -> list[Page]:
     Tree order drives the output span ``offset`` sequence across pages.
     Inherited attributes are resolved on the way down (document.rs:486-522).
     """
+    ck = _content._CSCAN
+    if ck is not None:
+        pages = ck.flatten_pages(reader, Page, MAX_TREE_DEPTH)
+        if pages is not None:
+            return pages
     catalog = reader.catalog()
     pages_obj = reader.resolve(catalog.get("Pages"))
     result: list[Page] = []
@@ -82,6 +96,11 @@ def page_content(reader: PdfReader, page: Page) -> bytes:
     contents = page.dict.get("Contents")
     if contents is None:
         return b""
+    ck = _content._CSCAN
+    if ck is not None:
+        joined = ck.page_content(reader, contents, _safe_decode)
+        if joined is not None:
+            return joined
     contents = reader.resolve(contents)
     streams: list[bytes] = []
     if isinstance(contents, Stream):

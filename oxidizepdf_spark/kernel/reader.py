@@ -8,12 +8,20 @@ Reimplements (in-UDF, per document):
 - indirect /Length + lenient endstream search: reader.rs:880; mod.rs:232-235
 - compressed-object fetch (ObjStm): reader.rs:914-957; object_stream.rs:27-109
 - encryption detection (detect-only, descoped): reader.rs:350-409
+
+The C kernel (kernel/_cscan.c) runs the happy path of three steps: the
+xref chain (via xref.parse_xref_chain), the object parse
+(``parse_indirect``) and the whole object fetch (``get_object``). Each
+returns a complete result or a bail; on a bail the Python code here runs
+that step from the start and stays the authority. Encrypted and
+recovered-mode documents always fetch in Python.
 """
 
 from __future__ import annotations
 
 import re
 
+from . import content as _content
 from .objects import Lexer, PdfParseError, Ref, Stream, parse_object
 from .xref import fill_missing_objects, parse_xref_chain, recover_xref
 
@@ -144,7 +152,7 @@ class PdfReader:
 
     def _parse_header(self) -> tuple[int, int]:
         """%PDF-x.y within the first 1KB (header.rs:1-60; leading junk ok)."""
-        m = _HEADER_RE.search(self.data[:1024])
+        m = _HEADER_RE.search(self.data, 0, 1024)
         if not m:
             raise PdfParseError("missing %PDF header")
         return (int(m.group(1)), int(m.group(2)))
@@ -160,10 +168,22 @@ class PdfReader:
         return value
 
     def get_object(self, num: int, gen: int = 0):
-        """xref lookup → seek → parse → cache (reader.rs:564-650)."""
+        """xref lookup → seek → parse → cache (reader.rs:564-650).
+
+        Fast path: the C fetch (kernel/_cscan.c get_object) serves free and
+        in-use entries of unencrypted strict-mode documents, stream payloads
+        with a direct /Length included, and fills the same ``_cache``. It
+        answers ``BAIL`` for a missing entry, a compressed entry, a wrong
+        object at the offset, an indirect /Length or any parse it is not
+        byte-certain about, and the code below then fetches the object."""
         key = (num, gen)
         if key in self._cache:
             return self._cache[key]
+        ck = _content._CSCAN
+        if ck is not None:
+            obj = ck.get_object(self, num, gen)
+            if obj is not ck.BAIL:
+                return obj
         if key in self._resolving:
             return None  # reference cycle — mirror the reference's guard
         entry = self.xref.get(num)
@@ -376,17 +396,9 @@ class PdfReader:
         return root
 
 
-def _load_cparse():
-    """Bind the C object parser (kernel/_cscan.c parse_indirect) when the
-    extension built; None → pure-Python parsing everywhere."""
-    try:
-        from .content import _CSCAN
-
-        if _CSCAN is not None:
-            return _CSCAN.parse_indirect
-    except Exception:
-        pass
-    return None
-
-
-_CPARSE = _load_cparse()
+# The C object parser, bound once at import (None → pure-Python parsing).
+# The other C steps read ``_content._CSCAN`` at call time, so
+# OXPDF_NO_CKERNEL=1 (no extension at all) turns every one of them off.
+_CPARSE = (
+    _content._CSCAN.parse_indirect if _content._CSCAN is not None else None
+)

@@ -9,6 +9,14 @@ Reimplements (in-UDF, per document):
 - Prev chain walk + cycle guard + newest-entry-wins merge: xref.rs:495-574
 - hybrid /XRefStm hop:         xref.rs (hybrid-reference files)
 - missing-object scan + full recovery: xref.rs:1022-1265, 115-180
+
+The C kernel (kernel/_cscan.c) runs two of these natively: ``xref_chain``
+(the whole chain of traditional sections: startxref, entries, trailers,
+/Prev with the same cycle guard) and ``parse_xref_section`` (one strict
+20-byte-stride section and its trailer). Each returns the complete result
+or None; on None the Python code here runs that step from the start and
+stays the authority, so xref streams, an int /XRefStm, flexible layouts
+and recovery are always Python.
 """
 
 from __future__ import annotations
@@ -17,6 +25,7 @@ import re
 
 import numpy as np
 
+from . import content as _content
 from .objects import Lexer, PdfParseError, Ref, Stream, parse_object
 
 # Entry kinds: ('n', offset, gen) in-use | ('f', next_free, gen) free
@@ -46,27 +55,22 @@ def find_xref_offset(data: bytes) -> int | None:
     return int(m.group(1))
 
 
-def _xref_cscan():
-    from .content import _CSCAN
-
-    return _CSCAN
-
-
 def _parse_traditional_section(data: bytes, offset: int) -> tuple[dict, dict, int]:
     """One traditional xref section at ``offset`` (xref.rs:750-911).
 
     Returns (entries, trailer_dict, pos_after). Entries are decoded in bulk:
     the 20-byte fixed-width lines of each subsection are matched with one
     compiled regex pass (S4 numpy/regex bulk decode per SURVEY.md §2.1).
-    When the C kernel is loaded, strict 20-byte-stride tables parse
-    natively (parse_xref_sections, _cscan.c) with the loop below as the
-    pinned authority — any non-strict layout (flexible spacing,
-    comments, truncation) bails back here."""
-    ck = _xref_cscan()
+    When the C kernel is loaded, a strict 20-byte-stride table followed by
+    a ``trailer`` dict parses natively (parse_xref_section, _cscan.c) with
+    the loop below as the pinned authority — any non-strict layout
+    (flexible spacing, comments, truncation, no trailer dict) bails back
+    here."""
+    ck = _content._CSCAN
     if ck is not None:
-        r = ck.parse_xref_sections(data, offset)
+        r = ck.parse_xref_section(data, offset)
         if r is not None:
-            return _parse_trailer_after(data, *r)
+            return r
     lexer = Lexer(data, offset)
     tok = lexer.next_token()
     if tok != ("kw", "xref"):
@@ -197,8 +201,20 @@ def parse_xref_chain(data: bytes, reader, start_offset: int | None = None):
     """Walk the Prev chain, newest entries win (xref.rs:495-574).
 
     Returns (entries, trailer, mode) where mode is 'strict' or 'recovered'.
+
+    When the C kernel is loaded, a chain of traditional sections is walked
+    natively (xref_chain, _cscan.c: startxref, sections, trailers, /Prev
+    with the same cycle guard and hop cap). It returns the complete result
+    or None; on None this function walks the chain itself, so an xref
+    stream, an int /XRefStm, a section the C parser is not byte-certain
+    about or a chain that needs recovery always takes this Python path.
     """
     if start_offset is None:
+        ck = _content._CSCAN
+        if ck is not None:
+            r = ck.xref_chain(data)
+            if r is not None:
+                return r[0], r[1], "strict"
         start_offset = find_xref_offset(data)
     entries: dict[int, tuple] = {}
     trailer: dict = {}

@@ -47,6 +47,22 @@ def norm_col(col: str = "text"):
     )
 
 
+def _app_memo(memo: dict, spark: SparkSession, key, build):
+    """``memo[(applicationId, key)]``, built on a miss. Storing an entry
+    drops every entry of another application: a stopped session's plans
+    and expressions are never reused, and each still pins JVM objects
+    through py4j."""
+    app = spark.sparkContext.applicationId
+    k = (app, key)
+    v = memo.get(k)
+    if v is None:
+        v = build()
+        for stale in [old for old in memo if old[0] != app]:
+            del memo[stale]
+        memo[k] = v
+    return v
+
+
 _PLAN_MEMO: dict = {}
 
 
@@ -57,13 +73,8 @@ def _plan_memo(spark: SparkSession, key: str, build):
     Repeated `spark.read.parquet` re-reads footers (~100 ms) and every
     `inputFiles()` re-lists (~55 ms), costs paid on each of the bench's
     per-run query rebuilds. Keyed by applicationId so a stopped session
-    never leaks stale plans into a new one."""
-    k = (spark.sparkContext.applicationId, key)
-    df = _PLAN_MEMO.get(k)
-    if df is None:
-        df = build()
-        _PLAN_MEMO[k] = df
-    return df
+    never leaks stale plans into a new one (see ``_app_memo``)."""
+    return _app_memo(_PLAN_MEMO, spark, key, build)
 
 
 _EXPR_MEMO: dict = {}
@@ -78,13 +89,8 @@ def _expr_memo(spark: SparkSession, sql: str):
     issuances changes nothing about what executes. Keyed by the SQL
     text itself, so two sites share a parsed tree only when their SQL is
     identical, and by applicationId so a stopped session never leaks
-    into a new one."""
-    k = (spark.sparkContext.applicationId, sql)
-    c = _EXPR_MEMO.get(k)
-    if c is None:
-        c = F.expr(sql)
-        _EXPR_MEMO[k] = c
-    return c
+    into a new one (see ``_app_memo``)."""
+    return _app_memo(_EXPR_MEMO, spark, sql, lambda: F.expr(sql))
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:

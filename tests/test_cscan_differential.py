@@ -760,3 +760,390 @@ def test_differential_xref_sections():
         off = find_xref_offset(data)
         if off is not None and data[off:off + 4] == b"xref":
             both(data, off)
+
+
+# -- document skeleton: xref chain, object fetch, page tree, /Contents -------
+
+
+def _canon(v):
+    """Type-strict, order-strict value fingerprint (Stream has no __eq__;
+    Name vs str, bool vs int and Ref vs tuple must not compare equal)."""
+    from oxidizepdf_spark.kernel.objects import Stream
+
+    if isinstance(v, Stream):
+        return ("Stream", _canon(v.dict), v.raw)
+    if isinstance(v, dict):
+        return ("dict", tuple((type(k).__name__, k, _canon(x))
+                              for k, x in v.items()))
+    if isinstance(v, list):
+        return ("list", tuple(_canon(x) for x in v))
+    return (type(v).__name__, v)
+
+
+def _err(e: Exception):
+    return ("ERR", type(e).__name__, str(e))
+
+
+def _skeleton(data: bytes, lenient: bool = True):
+    """Everything the four skeleton steps produce for one document: the
+    reader's xref/trailer/mode, the flattened pages (dict, resources, media
+    box), each page's /Contents bytes, every object by number, and the
+    object cache they leave behind."""
+    from oxidizepdf_spark.kernel.pages import flatten_page_tree, page_content
+    from oxidizepdf_spark.kernel.reader import PdfReader
+
+    try:
+        rdr = PdfReader(data, lenient=lenient)
+    except Exception as e:
+        return _err(e)
+    out = [list(rdr.xref.items()), _canon(rdr.trailer), rdr.mode]
+    try:
+        pages = flatten_page_tree(rdr)
+    except Exception as e:
+        pages = []
+        out.append(_err(e))
+    for page in pages:
+        out.append((_canon(page.dict), _canon(page.resources),
+                    _canon(page.media_box)))
+        try:
+            out.append(page_content(rdr, page))
+        except Exception as e:
+            out.append(_err(e))
+    out.append(sorted(rdr._cache))
+    out.append([_canon(rdr._cache[k]) for k in sorted(rdr._cache)])
+    for num in sorted(rdr.xref):
+        try:
+            out.append((num, _canon(rdr.get_object(num))))
+        except Exception as e:
+            out.append((num, _err(e)))
+    return out
+
+
+def _assert_same_skeleton(data: bytes, label):
+    from oxidizepdf_spark.kernel import xref as X
+
+    for lenient in (True, False):
+        got_c, got_py = _both_paths(lambda: _skeleton(data, lenient))
+        assert got_c == got_py, (label, lenient)
+    got_c, got_py = _both_paths(lambda: _extract_all(data))
+    assert got_c == got_py, label
+    off = X.find_xref_offset(data)
+    if off is not None and data[off:off + 4] == b"xref":
+
+        def section():
+            try:
+                return X._parse_traditional_section(data, off)
+            except Exception as e:
+                return _err(e)
+
+        got_c, got_py = _both_paths(section)
+        assert got_c == got_py, label
+
+
+_CONTENT = b"BT /F1 12 Tf 72 700 Td (Hello) Tj ET"
+
+
+def _objects(pages_extra=b"", page_extra=b"", content=_CONTENT,
+             content_dict=b""):
+    return {
+        1: b"<< /Type /Catalog /Pages 2 0 R >>",
+        2: b"<< /Type /Pages /Kids [3 0 R] /Count 1 "
+           b"/Resources << /Font << /F1 5 0 R >> >> " + pages_extra + b">>",
+        3: b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R " + page_extra
+           + b">>",
+        4: b"<< /Length %d %s >>\nstream\n%s\nendstream"
+           % (len(content), content_dict, content),
+        5: b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
+    }
+
+
+def _body(objs: dict) -> tuple[bytearray, dict]:
+    out = bytearray(b"%PDF-1.4\n")
+    offs = {}
+    for num, body in objs.items():
+        offs[num] = len(out)
+        out += b"%d 0 obj\n" % num + body + b"\nendobj\n"
+    return out, offs
+
+
+def _xref(offs: dict, size: int) -> bytes:
+    s = b"xref\n0 %d\n0000000000 65535 f \n" % size
+    for num in range(1, size):
+        s += b"%010d 00000 %s \n" % (offs.get(num, 0),
+                                     b"n" if num in offs else b"f")
+    return s
+
+
+def _pdf(objs: dict, trailer: bytes = b"/Root 1 0 R",
+         offsets: dict | None = None) -> bytes:
+    out, offs = _body(objs)
+    offs.update(offsets or {})
+    size = max(objs) + 1
+    start = len(out)
+    out += _xref(offs, size)
+    out += b"trailer\n<< /Size %d %s >>\nstartxref\n%d\n%%%%EOF\n" % (
+        size, trailer, start)
+    return bytes(out)
+
+
+def _prev_cycle_pdf(self_loop: bool) -> bytes:
+    """Two traditional sections whose /Prev entries point at each other,
+    or one whose /Prev points at itself."""
+    out, offs = _body(_objects())
+    a = len(out)
+    sec_a = _xref(offs, 6)
+    if self_loop:
+        out += sec_a + b"trailer\n<< /Size 6 /Root 1 0 R /Prev %010d >>\n" % a
+    else:
+        tail_a = b"trailer\n<< /Size 6 /Root 1 0 R /Prev %010d >>\n"
+        b = a + len(sec_a) + len(tail_a % 0)
+        out += sec_a + tail_a % b
+        out += b"xref\n0 1\n0000000000 65535 f \n"
+        out += b"trailer\n<< /Size 6 /Prev %d >>\n" % a
+    out += b"startxref\n%d\n%%%%EOF\n" % a
+    return bytes(out)
+
+
+def _deep_tree_pdf(depth: int) -> bytes:
+    """A page under ``depth`` intermediate /Pages nodes."""
+    objs = {1: b"<< /Type /Catalog /Pages 10 0 R >>",
+            4: _objects()[4], 5: _objects()[5]}
+    for i in range(depth):
+        kid = 10 + i + 1 if i + 1 < depth else 3
+        objs[10 + i] = b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % kid
+    objs[3] = (b"<< /Type /Page /Contents 4 0 R "
+               b"/Resources << /Font << /F1 5 0 R >> >> >>")
+    return _pdf(dict(sorted(objs.items())))
+
+
+def _flate_predictor_content(tags: bytes) -> bytes:
+    """_CONTENT through FlateDecode with PNG predictor rows of 4 columns,
+    row filter tags cycling through ``tags`` (forward direction of
+    filters._png_unpredict)."""
+    import zlib
+
+    cols = 4
+    data = _CONTENT + b" " * (-len(_CONTENT) % cols)
+    rows = [data[i:i + cols] for i in range(0, len(data), cols)]
+    prev = bytes(cols)
+    enc = bytearray()
+    for r, row in enumerate(rows):
+        tag = tags[r % len(tags)]
+        enc.append(tag)
+        for i in range(cols):
+            left = row[i - 1] if i >= 1 else 0
+            up = prev[i]
+            ul = prev[i - 1] if i >= 1 else 0
+            if tag == 0:
+                pred = 0
+            elif tag == 1:
+                pred = left
+            elif tag == 2:
+                pred = up
+            elif tag == 3:
+                pred = (left + up) >> 1
+            else:
+                p = left + up - ul
+                pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
+                pred = left if pa <= pb and pa <= pc else (
+                    up if pb <= pc else ul)
+            enc.append((row[i] - pred) & 0xFF)
+        prev = row
+    return zlib.compress(bytes(enc))
+
+
+def _crafted_skeleton_cases():
+    from oxidizepdf_spark.corpus import (
+        build_encrypted_pdf,
+        build_pdf_incremental_update,
+        build_pdf_with_content_stream,
+        build_pdf_xref_stream,
+    )
+
+    cases = {"plain": _pdf(_objects())}
+    cases["prev_cycle"] = _prev_cycle_pdf(self_loop=False)
+    cases["prev_self_loop"] = _prev_cycle_pdf(self_loop=True)
+    cases["incremental_update"] = build_pdf_incremental_update(
+        b"BT /F1 12 Tf 72 700 Td (Updated) Tj ET")
+    # /Kids cycles: the root lists itself, an intermediate node lists its
+    # parent, and one page appears twice
+    kids = _objects()
+    kids[2] = (b"<< /Type /Pages /Kids [3 0 R 2 0 R 6 0 R 3 0 R] /Count 2 "
+               b"/Resources << /Font << /F1 5 0 R >> >> >>")
+    kids[6] = b"<< /Type /Pages /Kids [2 0 R 7 0 R] /Count 1 >>"
+    kids[7] = b"<< /Type /Page /Contents 4 0 R >>"
+    cases["kids_cycle"] = _pdf(kids)
+    cases["tree_depth_64"] = _deep_tree_pdf(64)
+    cases["tree_deeper_than_max"] = _deep_tree_pdf(70)
+    # inherited Resources/MediaBox/CropBox/Rotate, one page overriding
+    inh = _objects(pages_extra=b"/MediaBox [0 0 500 400] /CropBox [1 1 2 2] "
+                   b"/Rotate 90 ")
+    inh[2] = inh[2].replace(b"/Kids [3 0 R]", b"/Kids [3 0 R 6 0 R 8 0 R]")
+    inh[6] = (b"<< /Type /Page /Contents 4 0 R /MediaBox 7 0 R /Rotate 180 "
+              b"/Resources << >> >>")
+    inh[7] = b"[0 0 300 300]"
+    inh[8] = b"<< /Contents 4 0 R /Resources 9 0 R >>"  # no /Type: leaf
+    inh[9] = b"<< /Font << /F1 5 0 R >> /ProcSet [/PDF /Text] >>"
+    cases["inherited_attrs"] = _pdf(inh)
+    # /Contents arrays: a dangling ref, a free entry, a non-stream
+    arr = _objects(page_extra=b"")
+    arr[3] = arr[3].replace(b"/Contents 4 0 R",
+                            b"/Contents [4 0 R 99 0 R 6 0 R 4 0 R 5 0 R]")
+    cases["contents_dangling_ref"] = _pdf(arr, offsets={6: 0})
+    direct = _objects()
+    direct[3] = direct[3].replace(b"/Contents 4 0 R", b"/Contents [4 0 R]")
+    cases["contents_array"] = _pdf(direct)
+    cases["indirect_length"] = build_pdf_with_content_stream(
+        _CONTENT, indirect_length=True)
+    cases["length_too_long"] = build_pdf_with_content_stream(
+        _CONTENT, length_delta=7)
+    cases["length_too_short"] = build_pdf_with_content_stream(
+        _CONTENT, length_delta=-5)
+    # the EOL after `stream` and before `endstream`, with a right and a
+    # wrong /Length (the wrong one takes the lenient endstream search)
+    for eol in (b"\r\n", b"\r", b"\n"):
+        for length in (len(_CONTENT), 999, None):
+            objs = _objects()
+            objs[4] = (b"<< %s>>\nstream%s%s%sendstream" % (
+                b"" if length is None else b"/Length %d " % length,
+                eol, _CONTENT, eol))
+            cases[f"eol_{eol.hex()}_length_{length}"] = _pdf(objs)
+    for tags in (b"\x02", b"\x00\x02", b"\x01\x03\x04\x02"):
+        payload = _flate_predictor_content(tags)
+        cases[f"flate_predictor_{tags.hex()}"] = _pdf(_objects(
+            content=payload,
+            content_dict=b"/Filter /FlateDecode "
+                         b"/DecodeParms << /Predictor 12 /Columns 4 >>"))
+    cases["flate_parms_ref"] = _pdf({**_objects(
+        content=_flate_predictor_content(b"\x02"),
+        content_dict=b"/Filter /FlateDecode /DecodeParms 6 0 R"),
+        6: b"<< /Predictor 12 /Columns 4 >>"})
+    cases["null_filter_with_parms"] = _pdf(_objects(
+        content_dict=b"/Filter null /DP << /Predictor 1 >>"))
+    cases["unknown_filter"] = _pdf(_objects(
+        content_dict=b"/Filter /FooDecode"))
+    for name in ("FlateDecode", "LZWDecode", "ASCIIHexDecode", "AHx+Fl"):
+        cases[f"filter_{name}"] = build_pdf_with_content_stream(
+            _CONTENT, content_filter=name)
+    # a stream cut off before its endstream: in a file cut short, and as
+    # the last object of an intact file (no endstream anywhere after it)
+    plain = _pdf(_objects())
+    cut = plain.index(b"endstream")
+    cases["truncated_file"] = plain[:cut - 10]
+    cut_objs = _objects()
+    cut_objs[6] = b"<< /Length 500 >>\nstream\n" + _CONTENT[:20]
+    cut_objs[3] = cut_objs[3].replace(b"/Contents 4 0 R", b"/Contents 6 0 R")
+    cases["truncated_stream"] = _pdf(cut_objs)
+    # object 4's xref entry points at object 5
+    out, offs = _body(_objects())
+    cases["wrong_object_offset"] = _pdf(_objects(), offsets={4: offs[5]})
+    cases["offset_past_eof"] = _pdf(_objects(), offsets={4: 10**9})
+    cases["missing_root"] = _pdf(_objects(), trailer=b"")
+    cases["root_not_a_dict"] = _pdf({**_objects(), 6: b"[1 2]"},
+                                   trailer=b"/Root 6 0 R")
+    cases["prev_float"] = _pdf(_objects(), trailer=b"/Root 1 0 R /Prev 9.5")
+    cases["prev_bool"] = _pdf(_objects(), trailer=b"/Root 1 0 R /Prev true")
+    cases["xrefstm_int"] = _pdf(_objects(),
+                                trailer=b"/Root 1 0 R /XRefStm 123")
+    cases["encrypted_rc4"] = build_encrypted_pdf("secret text")
+    cases["encrypted_aes"] = build_encrypted_pdf("aes text", method="aes-128")
+    cases["xref_stream"] = build_pdf_xref_stream(_CONTENT)
+    cases["xref_stream_objstm"] = build_pdf_xref_stream(_CONTENT,
+                                                        use_objstm=True)
+    cases["no_startxref"] = plain.replace(b"startxref", b"startxrex")
+    # ';' ends tokens in content streams only: `trailer;`, `stream;`,
+    # `obj;`, `R;` and `/Na;me` are other tokens to the object lexer
+    cases["semicolon_trailer"] = plain.replace(b"trailer\n", b"trailer;\n")
+    cases["semicolon_stream"] = plain.replace(b">>\nstream\n", b">>\nstream;\n")
+    cases["semicolon_obj"] = plain.replace(b"3 0 obj\n", b"3 0 obj;\n")
+    cases["semicolon_ref"] = plain.replace(b"/Contents 4 0 R", b"/Contents 4 0 R;")
+    cases["semicolon_name"] = plain.replace(b"/Type /Page ", b"/Type /Pa;ge ")
+    return cases
+
+
+def test_differential_skeleton_crafted():
+    """C skeleton (xref_chain, get_object, flatten_pages, page_content) vs
+    the pure-Python authority on crafted structure: /Prev and /Kids cycles,
+    tree depth around MAX_TREE_DEPTH, inheritance, dangling and free
+    /Contents refs, indirect /Length, predictors, unknown filters,
+    truncated streams, wrong-object offsets, a missing /Root and encrypted
+    documents — in lenient and strict readers."""
+    for label, data in _crafted_skeleton_cases().items():
+        _assert_same_skeleton(data, label)
+
+
+def test_differential_skeleton_corpus_catalog():
+    """Every PDF of the corpus catalog, plus its corrupted variants from a
+    generated corpus, through both skeleton paths."""
+    from oxidizepdf_spark.corpus import all_cases, generate_corpus
+    from oxidizepdf_spark.kernel.extract import decode_raw_payload
+
+    for case, pdf, _expected in all_cases():
+        _assert_same_skeleton(pdf, case)
+    for in_row, _ in generate_corpus(n_docs=300, seed=7, mega_doc_rate=0.0):
+        for s in in_row["spans"]:
+            if s["kind"] == "raw_pdf":
+                _assert_same_skeleton(decode_raw_payload(s["text"] or ""),
+                                      (in_row["doc_id"], in_row["case"]))
+
+
+def test_differential_skeleton_mutations():
+    """Random byte edits of the crafted documents (overwrites, inserted
+    PDF tokens, deletions, truncation) through both skeleton paths."""
+    import random
+
+    cases = list(_crafted_skeleton_cases().values())
+    tokens = [b"R", b" ", b"<<", b">>", b"[", b"]", b"/", b"(", b")", b"%",
+              b"\n", b"\r", b"0", b"9", b"-", b".", b"#", b"<", b">", b";",
+              b"\x00", b"endstream", b"obj", b"trailer", b"xref", b"/Prev 0",
+              b"/Kids", b"/Type /Page"]
+    rng = random.Random(2)
+    for _ in range(400):
+        data = bytearray(rng.choice(cases))
+        for _edit in range(rng.randrange(1, 4)):
+            i = rng.randrange(len(data))
+            op = rng.random()
+            if op < 0.3:
+                data[i] = rng.randrange(256)
+            elif op < 0.6:
+                data[i:i] = rng.choice(tokens)
+            elif op < 0.8:
+                del data[i:i + rng.randrange(1, 8)]
+            else:
+                del data[max(i, 16):]
+        data = bytes(data)
+        for lenient in (True, False):
+            got_c, got_py = _both_paths(lambda: _skeleton(data, lenient))
+            assert got_c == got_py, (data, lenient)
+
+
+def test_skeleton_fast_path_taken():
+    """The crafted plain document opens, flattens and assembles in C (no
+    bail), and each listed shape bails to Python."""
+    import re
+
+    from oxidizepdf_spark.kernel.pages import MAX_TREE_DEPTH, Page
+    from oxidizepdf_spark.kernel.reader import PdfReader
+
+    ck = C._CSCAN
+    cases = _crafted_skeleton_cases()
+    plain = cases["plain"]
+    assert ck.xref_chain(plain) is not None
+    rdr = PdfReader(plain)
+    pages = ck.flatten_pages(rdr, Page, MAX_TREE_DEPTH)
+    assert pages is not None and len(pages) == 1
+    assert ck.page_content(rdr, pages[0].dict["Contents"], None) == _CONTENT
+    for label in ("xref_stream", "xrefstm_int", "prev_float", "no_startxref",
+                  "semicolon_trailer"):
+        assert ck.xref_chain(cases[label]) is None, label
+    for label in ("encrypted_rc4", "missing_root"):
+        rdr = PdfReader(cases[label])
+        assert ck.flatten_pages(rdr, Page, MAX_TREE_DEPTH) is None, label
+        assert ck.get_object(rdr, 1, 0) is ck.BAIL, label
+    indirect = re.search(rb"(\d+) 0 obj\s*<< /Length \d+ 0 R",
+                         cases["indirect_length"])
+    for label, num in (("wrong_object_offset", 4),
+                       ("indirect_length", int(indirect.group(1))),
+                       ("contents_dangling_ref", 99)):
+        rdr = PdfReader(cases[label])
+        assert ck.get_object(rdr, num, 0) is ck.BAIL, label

@@ -85,6 +85,35 @@ def test_png_predictor_up():
     assert out == b"".join(rows)
 
 
+def test_png_up_rows_match_row_loop():
+    """The all-Up shortcut of _png_unpredict (a column cumsum) against the
+    row-by-row definition, with wraparound and trailing partial rows."""
+    import random
+
+    def reference(data: bytes, row_bytes: int) -> bytes:
+        stride = row_bytes + 1
+        prev = bytes(row_bytes)
+        out = bytearray()
+        for r in range(len(data) // stride):
+            row = data[r * stride : (r + 1) * stride]
+            assert row[0] == 2
+            prev = bytes((row[1 + i] + prev[i]) & 0xFF for i in range(row_bytes))
+            out += prev
+        return bytes(out)
+
+    rng = random.Random(5)
+    for _ in range(50):
+        row_bytes = rng.randrange(1, 9)
+        n_rows = rng.randrange(1, 40)
+        data = b"".join(
+            bytes([2]) + bytes(rng.randrange(256) for _ in range(row_bytes))
+            for _ in range(n_rows)
+        ) + bytes(rng.randrange(row_bytes + 1))  # partial trailing row
+        assert filters._png_unpredict(data, row_bytes, 1) == reference(
+            data, row_bytes
+        )
+
+
 def test_filter_chain_order():
     data = b"chained content"
     encoded = zlib.compress(data).hex().encode() + b">"
