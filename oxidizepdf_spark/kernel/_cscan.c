@@ -13,7 +13,8 @@
  * macro == generic-token semantics is itself pinned), the operator
  * handlers mirror the Python branches one-for-one, and everything the C
  * loop cannot express natively (XObject paint, marked-content props,
- * inline-image scan, cold run decode) calls back into the SAME Python
+ * inline-image scan, a cold run its font's code table declines — see the
+ * fonts section) calls back into the SAME Python
  * methods with the SAME state write-back/read-back discipline the Python
  * loop uses around those calls.
  *
@@ -638,6 +639,18 @@ static int emit_fragment(Ctx *c, PyObject *decoded, double width, double x,
     return rc;
 }
 
+/* ---- cold run decode: the font's code table, else Interpreter._decode -- */
+static PyObject *decode_native(Ctx *c, PyObject *key); /* fonts section */
+
+/* (decoded, unit_width) for a run the memo missed (new ref) */
+static PyObject *decode_miss(Ctx *c, PyObject *key)
+{
+    PyObject *hit = decode_native(c, key);
+    if (hit || PyErr_Occurred())
+        return hit;
+    return PyObject_CallOneArg(c->decode_meth, key);
+}
+
 /* ---- show text (transcription of the inline tail, fast_show branch) ---- */
 static int do_show(Ctx *c, const unsigned char *p, Py_ssize_t len,
                    PyObject *owned)
@@ -659,7 +672,7 @@ static int do_show(Ctx *c, const unsigned char *p, Py_ssize_t len,
             Py_DECREF(key);
             return -1;
         }
-        hit = PyObject_CallOneArg(c->decode_meth, key);
+        hit = decode_miss(c, key);
         if (!hit) {
             Py_DECREF(key);
             return -1;
@@ -1100,7 +1113,7 @@ static int exec_tj(Ctx *c)
                         Py_DECREF(key);
                         return -1;
                     }
-                    hit = PyObject_CallOneArg(c->decode_meth, key);
+                    hit = decode_miss(c, key);
                     if (!hit) {
                         Py_DECREF(key);
                         return -1;
@@ -1179,7 +1192,7 @@ static int exec_tj(Ctx *c)
                     Py_DECREF(key);
                     return -1;
                 }
-                hit = PyObject_CallOneArg(c->decode_meth, key);
+                hit = decode_miss(c, key);
                 if (!hit) {
                     Py_DECREF(key);
                     return -1;
@@ -1407,7 +1420,7 @@ static int flat_tj_show(Ctx *c, TjEl *els, Py_ssize_t cnt)
                 } else {
                     if (PyErr_Occurred())
                         goto done;
-                    hit = PyObject_CallOneArg(c->decode_meth, keys[i]);
+                    hit = decode_miss(c, keys[i]);
                     if (!hit)
                         goto done;
                 }
@@ -1461,7 +1474,7 @@ static int flat_tj_show(Ctx *c, TjEl *els, Py_ssize_t cnt)
         } else {
             if (PyErr_Occurred())
                 goto done;
-            hit = PyObject_CallOneArg(c->decode_meth, keys[i]);
+            hit = decode_miss(c, keys[i]);
             if (!hit)
                 goto done;
         }
@@ -5376,6 +5389,1591 @@ done:
     return out;
 }
 
+/* ======================================================================== */
+/* Fonts and text decode.
+ *
+ * page_fonts / font_info transcribe fonts.extract_page_fonts and
+ * fonts.extract_font_info (with cmap.CMap.parse for a ToUnicode stream);
+ * the per-font code table behind decode_native answers
+ * Interpreter._decode for a run the memo missed.  Same rules as the
+ * skeleton: a complete result or a bail, the Python functions stay the
+ * authority.
+ *
+ * The font build answers BAIL (Python builds that font) for Type3 and
+ * any other subtype outside Type1/MMType1/TrueType/Type0/CIDFontType0/
+ * CIDFontType2, an embedded /Encoding CMap stream, a ToUnicode CMap with
+ * usecmap or cid sections, an embedded FontFile* width read-back, and a
+ * number it cannot convert exactly.  The code table declines (Python
+ * decodes the run) for a Type0 font without ToUnicode (the CJK / CID
+ * table chain), ToUnicode codes of 3 or 4 bytes, composite fonts with
+ * /Widths or CID width tables, and any run whose decode would meet the
+ * acceptance gate or a sanitize trigger. */
+
+static void install_global(PyObject **slot, PyObject *value); /* below */
+
+static PyObject *g_fontinfo_cls;  /* fonts.FontInfo */
+static PyObject *g_cmap_cls;      /* cmap.CMap */
+static PyObject *g_glyph_uni;     /* encodings.glyph_name_to_unicode */
+static PyObject *g_stream_bytes;  /* fonts._stream_bytes */
+static PyObject *g_std14;         /* afm_widths.standard14_widths */
+static PyObject *g_py_font_info;  /* fonts.extract_font_info */
+static Py_UCS4 g_winansi[256], g_macroman[256];
+static PyObject *f_name, *f_font_type, *f_encoding, *f_to_unicode,
+    *f_differences, *f_descendant_font, *f_cid_ordering, *f_first_char,
+    *f_last_char, *f_widths, *f_missing_width, *f_cid_widths,
+    *f_cid_default_width, *f_code_table, *f_fonts, *f_fontinfo_cache,
+    *f_resolve, *m_cmap_type, *m_wmode, *m_codespace_ranges, *m_ranges,
+    *m_single, *m_inherited_predefined;
+static PyObject *k_Subtype, *k_BaseFont, *k_CIDSystemInfo, *k_Ordering,
+    *k_Encoding, *k_BaseEncoding, *k_Differences, *k_ToUnicode,
+    *k_FirstChar, *k_LastChar, *k_Widths, *k_FontDescriptor,
+    *k_MissingWidth, *k_DescendantFonts, *k_DW, *k_FontFile, *k_FontFile2,
+    *k_FontFile3, *k_Font;
+
+static int is_ref(PyObject *v)
+{
+    return v && PyObject_TypeCheck(v, (PyTypeObject *)g_ref_cls);
+}
+
+static int str_is(PyObject *s, const char *lit)
+{
+    return s && PyUnicode_Check(s) &&
+           PyUnicode_CompareWithASCIIString(s, lit) == 0;
+}
+
+/* float(v) for an int or float: 1 = *out, 0 = neither, -1 = overflow */
+static int num_double(PyObject *v, double *out)
+{
+    if (PyFloat_Check(v)) {
+        *out = PyFloat_AS_DOUBLE(v);
+        return 1;
+    }
+    if (PyLong_Check(v)) {
+        double d = PyLong_AsDouble(v);
+        if (d == -1.0 && PyErr_Occurred()) {
+            PyErr_Clear();
+            return -1;
+        }
+        *out = d;
+        return 1;
+    }
+    return 0;
+}
+
+/* bytes ordering (memcmp, then the shorter first) */
+static int lexcmp(const unsigned char *a, Py_ssize_t an,
+                  const unsigned char *b, Py_ssize_t bn)
+{
+    int r = memcmp(a, b, (size_t)(an < bn ? an : bn));
+    if (r)
+        return r;
+    return an < bn ? -1 : an > bn;
+}
+
+/* ---- code table -------------------------------------------------------- */
+
+typedef struct {
+    unsigned code;
+    PyObject *uni; /* owned str; NULL = the CMap maps the code to None */
+} CSingle;
+
+typedef struct {
+    PyObject *lo, *hi, *dst; /* owned bytes */
+} CRange;
+
+typedef struct {
+    int cmap;      /* 1: ToUnicode CMap walk, 0: byte encoding */
+    int composite; /* width 0.5 per decoded char, else w[code] per byte */
+    double w[256]; /* widths[code - first] / 1000.0, or missing / 1000.0 */
+    Py_UCS4 u[256];       /* byte encoding: the char of each code */
+    PyObject *u1[256];    /* CMap: 1-byte codes (owned str, NULL = None) */
+    CSingle *s2;          /* CMap: 2-byte single mappings, by code */
+    Py_ssize_t n2;
+    CRange *r2;           /* CMap: ranges over 2-byte codes, in order */
+    Py_ssize_t nr2;
+} CodeTable;
+
+static const char CT_CAPSULE[] = "oxpdf_cscan.CodeTable";
+
+static void ct_free(CodeTable *t)
+{
+    if (!t)
+        return;
+    for (int b = 0; b < 256; b++)
+        Py_XDECREF(t->u1[b]);
+    for (Py_ssize_t k = 0; k < t->n2; k++)
+        Py_XDECREF(t->s2[k].uni);
+    for (Py_ssize_t k = 0; k < t->nr2; k++) {
+        Py_DECREF(t->r2[k].lo);
+        Py_DECREF(t->r2[k].hi);
+        Py_DECREF(t->r2[k].dst);
+    }
+    PyMem_Free(t->s2);
+    PyMem_Free(t->r2);
+    PyMem_Free(t);
+}
+
+static void ct_capsule_free(PyObject *cap)
+{
+    ct_free((CodeTable *)PyCapsule_GetPointer(cap, CT_CAPSULE));
+}
+
+/* CMap.to_unicode on a ToUnicode CMap: UTF-16BE for an even length, else
+ * UTF-8.  New str, or NULL without an exception for None. */
+static PyObject *cm_to_uni(const char *s, Py_ssize_t n)
+{
+    PyObject *r;
+    if (n % 2 == 0) {
+        int bo = 1;
+        r = PyUnicode_DecodeUTF16(s, n, "strict", &bo);
+    } else
+        r = PyUnicode_DecodeUTF8(s, n, "strict");
+    if (!r && PyErr_ExceptionMatches(PyExc_UnicodeDecodeError))
+        PyErr_Clear();
+    return r;
+}
+
+/* CMap.map's range arm then to_unicode: dst + (code - lo) big-endian,
+ * wrapping at the dst width */
+static PyObject *cm_range_uni(PyObject *lo, PyObject *dst, unsigned code)
+{
+    const unsigned char *l = (const unsigned char *)PyBytes_AS_STRING(lo);
+    unsigned lov = PyBytes_GET_SIZE(lo) == 1 ? l[0] : (l[0] << 8) | l[1];
+    unsigned long carry = code - lov;
+    Py_ssize_t w = PyBytes_GET_SIZE(dst);
+    unsigned char stackbuf[64];
+    unsigned char *b = w <= 64 ? stackbuf : PyMem_Malloc((size_t)w);
+    if (!b)
+        return PyErr_NoMemory();
+    memcpy(b, PyBytes_AS_STRING(dst), (size_t)w);
+    for (Py_ssize_t k = w - 1; k >= 0 && carry; k--) {
+        unsigned long s = b[k] + (carry & 0xFF);
+        b[k] = (unsigned char)(s & 0xFF);
+        carry = (carry >> 8) + (s >> 8);
+    }
+    PyObject *r = cm_to_uni((const char *)b, w);
+    if (b != stackbuf)
+        PyMem_Free(b);
+    return r;
+}
+
+static int cs_cmp(const void *a, const void *b)
+{
+    unsigned x = ((const CSingle *)a)->code, y = ((const CSingle *)b)->code;
+    return x < y ? -1 : x > y;
+}
+
+/* the CMap half of the table: 1 built, 0 decline, -1 exception */
+static int ct_fill_cmap(CodeTable *t, PyObject *cm)
+{
+    PyObject *single = NULL, *ranges = NULL, *ctype = NULL, *inh = NULL;
+    PyObject *one[256];
+    CRange *r1 = NULL;
+    Py_ssize_t nr1 = 0;
+    int rc = 0;
+    memset(one, 0, sizeof(one));
+    ctype = PyObject_GetAttr(cm, m_cmap_type);
+    inh = ctype ? PyObject_GetAttr(cm, m_inherited_predefined) : NULL;
+    single = inh ? PyObject_GetAttr(cm, m_single) : NULL;
+    ranges = single ? PyObject_GetAttr(cm, m_ranges) : NULL;
+    if (!ranges) {
+        rc = -1;
+        goto done;
+    }
+    if (!str_is(ctype, "ToUnicode") || inh != Py_None ||
+        !PyDict_CheckExact(single) || !PyList_CheckExact(ranges))
+        goto done;
+    {
+        Py_ssize_t pos = 0;
+        PyObject *k, *v;
+        size_t ns = (size_t)PyDict_GET_SIZE(single) + 1;
+        t->s2 = PyMem_Malloc(sizeof(CSingle) * ns);
+        if (!t->s2) {
+            PyErr_NoMemory();
+            rc = -1;
+            goto done;
+        }
+        while (PyDict_Next(single, &pos, &k, &v)) {
+            if (!PyBytes_Check(k) || !PyBytes_Check(v))
+                goto done;
+            const unsigned char *kp =
+                (const unsigned char *)PyBytes_AS_STRING(k);
+            Py_ssize_t kl = PyBytes_GET_SIZE(k);
+            if (kl == 1)
+                one[kp[0]] = v;
+            else if (kl == 2) {
+                PyObject *u =
+                    cm_to_uni(PyBytes_AS_STRING(v), PyBytes_GET_SIZE(v));
+                if (!u && PyErr_Occurred()) {
+                    rc = -1;
+                    goto done;
+                }
+                t->s2[t->n2].code = (kp[0] << 8) | kp[1];
+                t->s2[t->n2].uni = u;
+                t->n2++;
+            } else if (kl == 3 || kl == 4)
+                goto done;
+        }
+        qsort(t->s2, (size_t)t->n2, sizeof(CSingle), cs_cmp);
+    }
+    {
+        Py_ssize_t nr = PyList_GET_SIZE(ranges);
+        r1 = PyMem_Malloc(sizeof(CRange) * (size_t)(nr + 1));
+        t->r2 = PyMem_Malloc(sizeof(CRange) * (size_t)(nr + 1));
+        if (!r1 || !t->r2) {
+            PyErr_NoMemory();
+            rc = -1;
+            goto done;
+        }
+        for (Py_ssize_t k = 0; k < nr; k++) {
+            PyObject *tup = PyList_GET_ITEM(ranges, k);
+            if (!PyTuple_Check(tup) || PyTuple_GET_SIZE(tup) != 3)
+                goto done;
+            PyObject *lo = PyTuple_GET_ITEM(tup, 0),
+                     *hi = PyTuple_GET_ITEM(tup, 1),
+                     *dst = PyTuple_GET_ITEM(tup, 2);
+            if (!PyBytes_Check(lo) || !PyBytes_Check(hi) ||
+                !PyBytes_Check(dst))
+                goto done;
+            Py_ssize_t ll = PyBytes_GET_SIZE(lo);
+            CRange cr = {lo, hi, dst};
+            if (ll == 1)
+                r1[nr1++] = cr;
+            else if (ll == 2) {
+                Py_INCREF(lo);
+                Py_INCREF(hi);
+                Py_INCREF(dst);
+                t->r2[t->nr2++] = cr;
+            } else if (ll == 3 || ll == 4)
+                goto done;
+        }
+    }
+    for (int b = 0; b < 256; b++) {
+        unsigned char code = (unsigned char)b;
+        PyObject *u = NULL;
+        if (one[b])
+            u = cm_to_uni(PyBytes_AS_STRING(one[b]),
+                          PyBytes_GET_SIZE(one[b]));
+        else {
+            for (Py_ssize_t k = 0; k < nr1; k++) {
+                const unsigned char *lo =
+                    (const unsigned char *)PyBytes_AS_STRING(r1[k].lo);
+                const unsigned char *hi =
+                    (const unsigned char *)PyBytes_AS_STRING(r1[k].hi);
+                if (lexcmp(lo, 1, &code, 1) <= 0 &&
+                    lexcmp(&code, 1, hi, PyBytes_GET_SIZE(r1[k].hi)) <= 0) {
+                    u = cm_range_uni(r1[k].lo, r1[k].dst, code);
+                    break;
+                }
+            }
+        }
+        if (!u && PyErr_Occurred()) {
+            rc = -1;
+            goto done;
+        }
+        t->u1[b] = u;
+    }
+    t->cmap = 1;
+    rc = 1;
+done:
+    PyMem_Free(r1);
+    Py_XDECREF(ctype);
+    Py_XDECREF(inh);
+    Py_XDECREF(single);
+    Py_XDECREF(ranges);
+    return rc;
+}
+
+/* the byte-encoding half (fonts._decode_with_encoding's table): 1 / 0 / -1 */
+static int ct_fill_encoding(CodeTable *t, PyObject *enc, PyObject *diffs)
+{
+    const Py_UCS4 *base = NULL;
+    if (str_is(enc, "WinAnsiEncoding"))
+        base = g_winansi;
+    else if (str_is(enc, "MacRomanEncoding"))
+        base = g_macroman;
+    for (int b = 0; b < 256; b++)
+        t->u[b] = base ? base[b] : (Py_UCS4)b;
+    if (diffs == Py_None)
+        return 1;
+    if (!PyDict_Check(diffs))
+        return 0;
+    Py_ssize_t pos = 0;
+    PyObject *k, *v;
+    while (PyDict_Next(diffs, &pos, &k, &v)) {
+        if (!PyLong_Check(k))
+            continue;
+        int ovf;
+        long long code = PyLong_AsLongLongAndOverflow(k, &ovf);
+        if (code == -1 && PyErr_Occurred())
+            return -1;
+        if (ovf || code < 0 || code > 255)
+            continue;
+        PyObject *u = PyObject_CallOneArg(g_glyph_uni, v);
+        if (!u)
+            return -1;
+        if (u != Py_None) {
+            if (!PyUnicode_Check(u) || PyUnicode_GET_LENGTH(u) != 1) {
+                Py_DECREF(u);
+                return 0;
+            }
+            t->u[code] = PyUnicode_READ_CHAR(u, 0);
+        }
+        Py_DECREF(u);
+    }
+    return 1;
+}
+
+/* per-code widths of a simple font (calculate_text_width_from_codes at
+ * font_size 1): 1 / 0 / -1 */
+static int ct_fill_widths(CodeTable *t, PyObject *widths, PyObject *fc,
+                          PyObject *lc, PyObject *missing)
+{
+    if (widths == Py_None) {
+        for (int b = 0; b < 256; b++)
+            t->w[b] = 0.5;
+        return 1;
+    }
+    long long first = 0, last = 255;
+    int ovf = 0;
+    if (fc != Py_None) {
+        if (!PyLong_Check(fc))
+            return 0;
+        first = PyLong_AsLongLongAndOverflow(fc, &ovf);
+        if (ovf || (first == -1 && PyErr_Occurred()))
+            return PyErr_Occurred() ? -1 : 0;
+    }
+    if (lc != Py_None) {
+        if (!PyLong_Check(lc))
+            return 0;
+        last = PyLong_AsLongLongAndOverflow(lc, &ovf);
+        if (ovf || (last == -1 && PyErr_Occurred()))
+            return PyErr_Occurred() ? -1 : 0;
+    }
+    double miss;
+    if (num_double(missing, &miss) != 1)
+        return 0;
+    if (!PyList_Check(widths) && !PyTuple_Check(widths))
+        return 0;
+    Py_ssize_t nw = PySequence_Fast_GET_SIZE(widths);
+    PyObject **items = PySequence_Fast_ITEMS(widths);
+    for (int b = 0; b < 256; b++) {
+        double w = miss;
+        if (first <= b && b <= last && b - first < nw) {
+            if (num_double(items[b - first], &w) != 1)
+                return 0;
+        }
+        t->w[b] = w / 1000.0;
+    }
+    return 1;
+}
+
+/* a code table for one FontInfo: 1 = *out, 0 = decline, -1 = exception */
+static int ct_build(PyObject *info, CodeTable **out)
+{
+    PyObject *v[9];
+    PyObject *const names[9] = {f_font_type, f_descendant_font, f_to_unicode,
+                                f_widths, f_first_char, f_last_char,
+                                f_missing_width, f_encoding, f_differences};
+    int rc = 0;
+    memset(v, 0, sizeof(v));
+    for (int k = 0; k < 9; k++) {
+        v[k] = PyObject_GetAttr(info, names[k]);
+        if (!v[k]) {
+            rc = -1;
+            goto done;
+        }
+    }
+    PyObject *ftype = v[0], *desc = v[1], *tu = v[2], *widths = v[3];
+    if (!PyUnicode_Check(ftype))
+        goto done;
+    int type0 = str_is(ftype, "Type0");
+    CodeTable *t = PyMem_Calloc(1, sizeof(CodeTable));
+    if (!t) {
+        PyErr_NoMemory();
+        rc = -1;
+        goto done;
+    }
+    t->composite = type0 || desc != Py_None;
+    if (t->composite) {
+        /* calculate_text_width_from_codes: char-indexed /Widths and CID
+         * width tables stay in Python; else 0.5 per decoded char */
+        if (widths != Py_None)
+            goto decline;
+        if (desc != Py_None) {
+            PyObject *cw = PyObject_GetAttr(desc, f_cid_widths);
+            if (!cw)
+                goto fail;
+            int has = cw != Py_None;
+            Py_DECREF(cw);
+            if (has)
+                goto decline;
+        }
+    } else {
+        rc = ct_fill_widths(t, widths, v[4], v[5], v[6]);
+        if (rc <= 0)
+            goto fail_or_decline;
+    }
+    if (tu != Py_None) {
+        if (!PyObject_TypeCheck(tu, (PyTypeObject *)g_cmap_cls))
+            goto decline;
+        rc = ct_fill_cmap(t, tu);
+    } else if (type0 && desc != Py_None)
+        goto decline; /* the CJK / CID-collection chain */
+    else
+        rc = ct_fill_encoding(t, v[7], v[8]);
+    if (rc <= 0)
+        goto fail_or_decline;
+    *out = t;
+    rc = 1;
+    goto done;
+fail_or_decline:
+    if (rc < 0)
+        goto fail;
+decline:
+    rc = 0;
+    ct_free(t);
+    goto done;
+fail:
+    rc = -1;
+    ct_free(t);
+done:
+    for (int k = 0; k < 9; k++)
+        Py_XDECREF(v[k]);
+    return rc;
+}
+
+typedef struct {
+    Py_UCS4 *buf;
+    Py_ssize_t len, cap;
+} UBuf;
+
+static int ub_put(UBuf *u, PyObject *s)
+{
+    Py_ssize_t n = PyUnicode_GET_LENGTH(s);
+    if (u->len + n > u->cap) {
+        Py_ssize_t cap = (u->len + n) * 2 + 16;
+        Py_UCS4 *nb = PyMem_Realloc(u->buf, sizeof(Py_UCS4) * (size_t)cap);
+        if (!nb) {
+            PyErr_NoMemory();
+            return -1;
+        }
+        u->buf = nb;
+        u->cap = cap;
+    }
+    int kind = PyUnicode_KIND(s);
+    const void *data = PyUnicode_DATA(s);
+    for (Py_ssize_t k = 0; k < n; k++)
+        u->buf[u->len++] = PyUnicode_READ(kind, data, k);
+    return 0;
+}
+
+/* a 2-byte code through the CMap: new str, or NULL (None / exception) */
+static PyObject *ct_lookup2(CodeTable *t, unsigned code)
+{
+    Py_ssize_t lo = 0, hi = t->n2;
+    while (lo < hi) {
+        Py_ssize_t mid = (lo + hi) / 2;
+        if (t->s2[mid].code < code)
+            lo = mid + 1;
+        else
+            hi = mid;
+    }
+    if (lo < t->n2 && t->s2[lo].code == code) {
+        Py_XINCREF(t->s2[lo].uni);
+        return t->s2[lo].uni;
+    }
+    unsigned char cb[2] = {(unsigned char)(code >> 8), (unsigned char)code};
+    for (Py_ssize_t k = 0; k < t->nr2; k++) {
+        CRange *r = &t->r2[k];
+        const unsigned char *lo =
+            (const unsigned char *)PyBytes_AS_STRING(r->lo);
+        const unsigned char *hi =
+            (const unsigned char *)PyBytes_AS_STRING(r->hi);
+        if (lexcmp(lo, 2, cb, 2) <= 0 &&
+            lexcmp(cb, 2, hi, PyBytes_GET_SIZE(r->hi)) <= 0)
+            return cm_range_uni(r->lo, r->dst, code);
+    }
+    return NULL;
+}
+
+/* one run through the table: the decoded str with *w1, or NULL without an
+ * exception where decode_text would reject, rewrite or fall back */
+static PyObject *ct_decode(CodeTable *t, const unsigned char *p,
+                           Py_ssize_t n, double *w1)
+{
+    UBuf u = {NULL, 0, 0};
+    PyObject *res = NULL;
+    u.cap = n + 16;
+    u.buf = PyMem_Malloc(sizeof(Py_UCS4) * (size_t)u.cap);
+    if (!u.buf)
+        return PyErr_NoMemory();
+    if (t->cmap) {
+        /* decode_with_cmap's walk: with only 1- and 2-byte codes mapped,
+         * a 1-byte hit wins, then a 2-byte one, else skip one byte */
+        Py_ssize_t i = 0;
+        while (i < n) {
+            PyObject *s = t->u1[p[i]];
+            if (s) {
+                if (ub_put(&u, s) < 0)
+                    goto done;
+                i++;
+                continue;
+            }
+            if (n - i >= 2) {
+                s = ct_lookup2(t, ((unsigned)p[i] << 8) | p[i + 1]);
+                if (s) {
+                    int r = ub_put(&u, s);
+                    Py_DECREF(s);
+                    if (r < 0)
+                        goto done;
+                    i += 2;
+                    continue;
+                }
+                if (PyErr_Occurred())
+                    goto done;
+            }
+            i++;
+        }
+    } else {
+        for (Py_ssize_t i = 0; i < n; i++)
+            u.buf[u.len++] = t->u[p[i]];
+    }
+    /* decode_text's gate (non-blank, not all control) and the
+     * sanitize_extracted_text triggers: any of them -> Python */
+    if (u.len == 0)
+        goto done;
+    int blank = 1;
+    for (Py_ssize_t k = 0; k < u.len; k++) {
+        Py_UCS4 ch = u.buf[k];
+        if ((ch < 0x20 && ch != '\t' && ch != '\n' && ch != '\r') ||
+            ch == 0x7F)
+            goto done;
+        if ((ch == ' ' || ch == '\t') && k + 1 < u.len && u.buf[k + 1] == ' ')
+            goto done;
+        if (blank && !Py_UNICODE_ISSPACE(ch))
+            blank = 0;
+    }
+    if (blank)
+        goto done;
+    if (t->composite)
+        *w1 = (double)u.len * 0.5;
+    else {
+        double total = 0.0;
+        for (Py_ssize_t i = 0; i < n; i++)
+            total += t->w[p[i]];
+        *w1 = total;
+    }
+    res = PyUnicode_FromKindAndData(PyUnicode_4BYTE_KIND, u.buf, u.len);
+done:
+    PyMem_Free(u.buf);
+    return res;
+}
+
+/* Interpreter._decode for a memo miss, natively: the (decoded, w1) pair
+ * stored in the run memo, or NULL without an exception when the Python
+ * method must decide (no font, no table, a gated run) */
+static PyObject *decode_native(Ctx *c, PyObject *key)
+{
+    if (!g_fontinfo_cls || !PyBytes_Check(key))
+        return NULL;
+    PyObject *fname = PyObject_GetAttr(c->st, a_font_name);
+    if (!fname)
+        return NULL;
+    PyObject *fonts = NULL, *info = NULL, *tbl = NULL, *hit = NULL;
+    if (!PyUnicode_Check(fname) || PyUnicode_GET_LENGTH(fname) == 0)
+        goto done;
+    fonts = PyObject_GetAttr(c->interp, f_fonts);
+    if (!fonts || !PyDict_Check(fonts))
+        goto done;
+    info = PyDict_GetItemWithError(fonts, fname);
+    if (!info)
+        goto done;
+    Py_INCREF(info);
+    tbl = PyObject_GetAttr(info, f_code_table);
+    if (!tbl) {
+        if (PyErr_ExceptionMatches(PyExc_AttributeError))
+            PyErr_Clear(); /* a font object without the slot */
+        goto done;
+    }
+    if (tbl == Py_None) {
+        CodeTable *t = NULL;
+        int rc = ct_build(info, &t);
+        if (rc < 0)
+            goto done;
+        Py_DECREF(tbl);
+        if (rc == 0) {
+            tbl = Py_False;
+            Py_INCREF(tbl);
+        } else {
+            tbl = PyCapsule_New(t, CT_CAPSULE, ct_capsule_free);
+            if (!tbl) {
+                ct_free(t);
+                goto done;
+            }
+        }
+        if (PyObject_SetAttr(info, f_code_table, tbl) < 0)
+            PyErr_Clear(); /* no slot to keep it in: decode this run only */
+    }
+    if (!PyCapsule_IsValid(tbl, CT_CAPSULE))
+        goto done;
+    CodeTable *t = PyCapsule_GetPointer(tbl, CT_CAPSULE);
+    double w1 = 0.0;
+    PyObject *decoded =
+        ct_decode(t, (const unsigned char *)PyBytes_AS_STRING(key),
+                  PyBytes_GET_SIZE(key), &w1);
+    if (!decoded)
+        goto done;
+    hit = Py_BuildValue("(Nd)", decoded, w1);
+    if (hit && PyDict_SetItem(c->font_memo, key, hit) < 0)
+        Py_CLEAR(hit);
+done:
+    Py_XDECREF(fname);
+    Py_XDECREF(fonts);
+    Py_XDECREF(info);
+    Py_XDECREF(tbl);
+    return hit;
+}
+
+/* ---- ToUnicode CMap parse (cmap.tokenize_cmap + CMap.parse) ------------- */
+
+enum { CT_HEX, CT_ARR, CT_NAME, CT_INT, CT_KW };
+
+typedef struct {
+    unsigned char kind;
+    Py_ssize_t a, b; /* HEX: arena offset/length; ARR: harr first/count;
+                      * NAME/KW: data offset/length */
+    int imod;        /* INT: the value & 0xFF */
+} CTok;
+
+typedef struct {
+    Py_ssize_t off, len;
+} HRef;
+
+typedef struct {
+    const unsigned char *d;
+    Py_ssize_t n;
+    CTok *toks;
+    Py_ssize_t nt, capt;
+    HRef *harr;
+    Py_ssize_t nh, caph;
+    unsigned char *arena;
+    Py_ssize_t na;
+} CmLex;
+
+static int cm_ws(unsigned char ch)
+{
+    return ch == 0 || ch == '\t' || ch == '\n' || ch == '\f' || ch == '\r' ||
+           ch == ' ';
+}
+
+static int cm_delim(unsigned char ch)
+{
+    return cm_ws(ch) || ch == '(' || ch == ')' || ch == '<' || ch == '>' ||
+           ch == '[' || ch == ']' || ch == '{' || ch == '}' || ch == '/' ||
+           ch == '%';
+}
+
+static int cm_push(CmLex *L, CTok t)
+{
+    if (L->nt == L->capt) {
+        Py_ssize_t cap = L->capt * 2 + 64;
+        CTok *nt = PyMem_Realloc(L->toks, sizeof(CTok) * (size_t)cap);
+        if (!nt) {
+            PyErr_NoMemory();
+            return -1;
+        }
+        L->toks = nt;
+        L->capt = cap;
+    }
+    L->toks[L->nt++] = t;
+    return 0;
+}
+
+static int cm_push_h(CmLex *L, HRef h)
+{
+    if (L->nh == L->caph) {
+        Py_ssize_t cap = L->caph * 2 + 64;
+        HRef *nh = PyMem_Realloc(L->harr, sizeof(HRef) * (size_t)cap);
+        if (!nh) {
+            PyErr_NoMemory();
+            return -1;
+        }
+        L->harr = nh;
+        L->caph = cap;
+    }
+    L->harr[L->nh++] = h;
+    return 0;
+}
+
+/* tokenize_cmap: 0 ok, -1 exception */
+static int cm_tokenize(CmLex *L)
+{
+    const unsigned char *d = L->d;
+    Py_ssize_t n = L->n, pos = 0, arr_start = -1;
+    L->arena = PyMem_Malloc((size_t)(n / 2 + 1));
+    if (!L->arena) {
+        PyErr_NoMemory();
+        return -1;
+    }
+    while (pos < n) {
+        unsigned char ch = d[pos];
+        if (cm_ws(ch) || ch == '%') {
+            while (pos < n) {
+                if (cm_ws(d[pos]))
+                    pos++;
+                else if (d[pos] == '%') {
+                    while (pos < n && d[pos] != '\n')
+                        pos++;
+                } else
+                    break;
+            }
+            continue;
+        }
+        if ((ch == '<' || ch == '>') && pos + 1 < n && d[pos + 1] == ch) {
+            pos += 2; /* << >> */
+            continue;
+        }
+        if (ch == '<') {
+            Py_ssize_t q = pos + 1, digits = 0;
+            while (q < n && (hex_digit(d[q]) >= 0 || cm_ws(d[q]))) {
+                digits += hex_digit(d[q]) >= 0;
+                q++;
+            }
+            if (q < n && d[q] == '>') {
+                if (digits % 2 == 0) {
+                    HRef h = {L->na, digits / 2};
+                    int hi = -1;
+                    for (Py_ssize_t k = pos + 1; k < q; k++) {
+                        int v = hex_digit(d[k]);
+                        if (v < 0)
+                            continue;
+                        if (hi < 0)
+                            hi = v;
+                        else {
+                            L->arena[L->na++] = (unsigned char)((hi << 4) | v);
+                            hi = -1;
+                        }
+                    }
+                    if (arr_start >= 0) {
+                        if (cm_push_h(L, h) < 0)
+                            return -1;
+                    } else {
+                        CTok t = {CT_HEX, h.off, h.len, 0};
+                        if (cm_push(L, t) < 0)
+                            return -1;
+                    }
+                }
+                pos = q + 1;
+                continue;
+            }
+            pos++; /* a lone '<' */
+            continue;
+        }
+        if (ch == '[') {
+            arr_start = L->nh;
+            pos++;
+            continue;
+        }
+        if (ch == ']') {
+            if (arr_start >= 0) {
+                CTok t = {CT_ARR, arr_start, L->nh - arr_start, 0};
+                if (cm_push(L, t) < 0)
+                    return -1;
+                arr_start = -1;
+            }
+            pos++;
+            continue;
+        }
+        if (ch == '/') {
+            Py_ssize_t q = pos + 1;
+            while (q < n && !cm_delim(d[q]))
+                q++;
+            CTok t = {CT_NAME, pos + 1, q - pos - 1, 0};
+            if (cm_push(L, t) < 0)
+                return -1;
+            pos = q;
+            continue;
+        }
+        if (cm_delim(ch)) {
+            pos++; /* ( ) { } > : no token */
+            continue;
+        }
+        {
+            /* [+-]?\d+(?![.\d]) else a keyword run */
+            Py_ssize_t q = pos;
+            if (d[q] == '+' || d[q] == '-')
+                q++;
+            Py_ssize_t ds = q;
+            unsigned mod = 0;
+            while (q < n && d[q] >= '0' && d[q] <= '9') {
+                mod = (mod * 10 + (unsigned)(d[q] - '0')) & 0xFF;
+                q++;
+            }
+            if (q > ds && !(q < n && d[q] == '.')) {
+                int m = (int)mod;
+                if (d[pos] == '-')
+                    m = (256 - m) & 0xFF;
+                CTok t = {CT_INT, pos, q - pos, m};
+                if (cm_push(L, t) < 0)
+                    return -1;
+                pos = q;
+                continue;
+            }
+            q = pos;
+            while (q < n && !cm_delim(d[q]))
+                q++;
+            CTok t = {CT_KW, pos, q - pos, 0};
+            if (cm_push(L, t) < 0)
+                return -1;
+            pos = q;
+        }
+    }
+    return 0;
+}
+
+static int tok_is(CmLex *L, Py_ssize_t i, int kind, const char *lit)
+{
+    if (i >= L->nt || L->toks[i].kind != kind)
+        return 0;
+    size_t m = strlen(lit);
+    return (size_t)L->toks[i].b == m &&
+           memcmp(L->d + L->toks[i].a, lit, m) == 0;
+}
+
+static PyObject *cm_hex(CmLex *L, Py_ssize_t off, Py_ssize_t len)
+{
+    return PyBytes_FromStringAndSize((const char *)L->arena + off, len);
+}
+
+static int cm_set_item(PyObject *dict, CmLex *L, HRef k, HRef v)
+{
+    PyObject *kb = cm_hex(L, k.off, k.len);
+    PyObject *vb = kb ? cm_hex(L, v.off, v.len) : NULL;
+    int r = vb ? PyDict_SetItem(dict, kb, vb) : -1;
+    Py_XDECREF(kb);
+    Py_XDECREF(vb);
+    return r;
+}
+
+/* CMap.parse over a ToUnicode stream: a new CMap, BAIL (usecmap, cid
+ * sections), or NULL with an exception */
+static PyObject *cm_parse(const unsigned char *d, Py_ssize_t n)
+{
+    CmLex L;
+    memset(&L, 0, sizeof(L));
+    L.d = d;
+    L.n = n;
+    PyObject *cm = NULL, *name = NULL, *wmode = NULL, *cs = NULL,
+             *ranges = NULL, *single = NULL, *res = NULL;
+    unsigned char *cur = NULL;
+    if (cm_tokenize(&L) < 0)
+        goto done;
+    cs = PyList_New(0);
+    ranges = PyList_New(0);
+    single = PyDict_New();
+    if (!cs || !ranges || !single)
+        goto done;
+    CTok *T = L.toks;
+    Py_ssize_t i = 0, nt = L.nt;
+    while (i < nt) {
+        if (tok_is(&L, i, CT_NAME, "CMapName")) {
+            if (i + 1 < nt && T[i + 1].kind == CT_NAME) {
+                Py_XDECREF(name);
+                name = PyUnicode_DecodeLatin1((const char *)d + T[i + 1].a,
+                                              T[i + 1].b, NULL);
+                if (!name)
+                    goto done;
+                i += 2;
+                continue;
+            }
+        } else if (tok_is(&L, i, CT_KW, "usecmap") ||
+                   tok_is(&L, i, CT_KW, "begincidchar") ||
+                   tok_is(&L, i, CT_KW, "begincidrange") ||
+                   tok_is(&L, i, CT_KW, "beginnotdefrange")) {
+            res = g_bail;
+            Py_INCREF(res);
+            goto done;
+        } else if (tok_is(&L, i, CT_NAME, "WMode")) {
+            if (i + 1 < nt && T[i + 1].kind == CT_INT) {
+                Py_XDECREF(wmode);
+                wmode = PyLong_FromLong(T[i + 1].imod);
+                if (!wmode)
+                    goto done;
+                i += 2;
+                continue;
+            }
+        } else if (tok_is(&L, i, CT_KW, "begincodespacerange") ||
+                   tok_is(&L, i, CT_KW, "beginbfchar")) {
+            int is_cs = T[i].b == 19;
+            const char *end = is_cs ? "endcodespacerange" : "endbfchar";
+            i++;
+            while (i < nt) {
+                if (tok_is(&L, i, CT_KW, end))
+                    break;
+                if (T[i].kind == CT_HEX && i + 1 < nt &&
+                    T[i + 1].kind == CT_HEX) {
+                    HRef a = {T[i].a, T[i].b}, b = {T[i + 1].a, T[i + 1].b};
+                    if (is_cs) {
+                        PyObject *tup =
+                            Py_BuildValue("(y#y#)", L.arena + a.off, a.len,
+                                          L.arena + b.off, b.len);
+                        if (!tup || PyList_Append(cs, tup) < 0) {
+                            Py_XDECREF(tup);
+                            goto done;
+                        }
+                        Py_DECREF(tup);
+                    } else if (cm_set_item(single, &L, a, b) < 0)
+                        goto done;
+                    i += 2;
+                    continue;
+                }
+                i++;
+            }
+        } else if (tok_is(&L, i, CT_KW, "beginbfrange")) {
+            i++;
+            while (i < nt) {
+                if (tok_is(&L, i, CT_KW, "endbfrange"))
+                    break;
+                if (T[i].kind == CT_HEX && i + 2 < nt &&
+                    T[i + 1].kind == CT_HEX) {
+                    HRef s = {T[i].a, T[i].b}, e = {T[i + 1].a, T[i + 1].b};
+                    CTok *dt = &T[i + 2];
+                    if (dt->kind == CT_HEX) {
+                        PyObject *tup = Py_BuildValue(
+                            "(y#y#y#)", L.arena + s.off, s.len,
+                            L.arena + e.off, e.len, L.arena + dt->a, dt->b);
+                        if (!tup || PyList_Append(ranges, tup) < 0) {
+                            Py_XDECREF(tup);
+                            goto done;
+                        }
+                        Py_DECREF(tup);
+                        i += 3;
+                        continue;
+                    }
+                    if (dt->kind == CT_ARR) {
+                        /* array form: consecutive codes from src_start,
+                         * stopping at src_end; the code wraps at its width */
+                        PyMem_Free(cur);
+                        cur = PyMem_Malloc((size_t)s.len + 1);
+                        if (!cur) {
+                            PyErr_NoMemory();
+                            goto done;
+                        }
+                        memcpy(cur, L.arena + s.off, (size_t)s.len);
+                        for (Py_ssize_t k = 0; k < dt->b; k++) {
+                            HRef dv = L.harr[dt->a + k];
+                            PyObject *kb = PyBytes_FromStringAndSize(
+                                (const char *)cur, s.len);
+                            PyObject *vb =
+                                kb ? cm_hex(&L, dv.off, dv.len) : NULL;
+                            int r = vb ? PyDict_SetItem(single, kb, vb) : -1;
+                            Py_XDECREF(kb);
+                            Py_XDECREF(vb);
+                            if (r < 0)
+                                goto done;
+                            if (lexcmp(cur, s.len, L.arena + e.off,
+                                       e.len) >= 0)
+                                break;
+                            for (Py_ssize_t q = s.len - 1; q >= 0; q--) {
+                                if (cur[q] == 0xFF)
+                                    cur[q] = 0;
+                                else {
+                                    cur[q]++;
+                                    break;
+                                }
+                            }
+                        }
+                        i += 3;
+                        continue;
+                    }
+                }
+                i++;
+            }
+        }
+        i++;
+    }
+    cm = PyObject_CallNoArgs(g_cmap_cls);
+    if (!cm)
+        goto done;
+    if ((name && PyObject_SetAttr(cm, f_name, name) < 0) ||
+        (wmode && PyObject_SetAttr(cm, m_wmode, wmode) < 0) ||
+        PyObject_SetAttr(cm, m_codespace_ranges, cs) < 0 ||
+        PyObject_SetAttr(cm, m_ranges, ranges) < 0 ||
+        PyObject_SetAttr(cm, m_single, single) < 0)
+        goto done;
+    res = cm;
+    cm = NULL;
+done:
+    PyMem_Free(cur);
+    PyMem_Free(L.toks);
+    PyMem_Free(L.harr);
+    PyMem_Free(L.arena);
+    Py_XDECREF(cm);
+    Py_XDECREF(name);
+    Py_XDECREF(wmode);
+    Py_XDECREF(cs);
+    Py_XDECREF(ranges);
+    Py_XDECREF(single);
+    return res;
+}
+
+/* ---- FontInfo build (fonts.extract_font_info) --------------------------- */
+
+typedef struct {
+    PyObject *reader;
+    Doc doc;
+    int doc_ok;
+} FCtx;
+
+/* reader.resolve(v) for a borrowed v (NULL: a missing key, read as None):
+ * the C fetch first, the Python method where it bails */
+static PyObject *f_res(FCtx *f, PyObject *v)
+{
+    if (!v) {
+        if (PyErr_Occurred())
+            return NULL;
+        Py_RETURN_NONE;
+    }
+    if (!is_ref(v)) {
+        Py_INCREF(v);
+        return v;
+    }
+    if (f->doc_ok) {
+        int bail = 0;
+        PyObject *r = doc_resolve(&f->doc, v, &bail);
+        if (r || PyErr_Occurred())
+            return r;
+    }
+    return PyObject_CallMethodOneArg(f->reader, f_resolve, v);
+}
+
+/* set info.<attr> = float(v) for an int/float v: 1 set, 0 not a number,
+ * -1 bail/exception (check PyErr) */
+static int set_float_attr(PyObject *info, PyObject *attr, PyObject *v)
+{
+    double x;
+    int r = v ? num_double(v, &x) : 0;
+    if (r <= 0)
+        return r;
+    PyObject *fv = PyFloat_FromDouble(x);
+    if (!fv || PyObject_SetAttr(info, attr, fv) < 0) {
+        Py_XDECREF(fv);
+        return -1;
+    }
+    Py_DECREF(fv);
+    return 1;
+}
+
+/* BaseEncoding / Differences of an encoding dict: 0 ok, -1 bail/exception */
+static int fi_enc_dict(PyObject *info, PyObject *enc)
+{
+    PyObject *be = PyDict_GetItemWithError(enc, k_BaseEncoding);
+    if (be && PyUnicode_Check(be)) {
+        PyObject *s = PyObject_Str(be);
+        if (!s || PyObject_SetAttr(info, f_encoding, s) < 0) {
+            Py_XDECREF(s);
+            return -1;
+        }
+        Py_DECREF(s);
+    }
+    if (PyErr_Occurred())
+        return -1;
+    PyObject *diffs = PyDict_GetItemWithError(enc, k_Differences);
+    if (!diffs || !PyList_Check(diffs))
+        return PyErr_Occurred() ? -1 : 0;
+    /* _parse_differences */
+    PyObject *out = PyDict_New();
+    if (!out)
+        return -1;
+    long long code = 0;
+    for (Py_ssize_t k = 0; k < PyList_GET_SIZE(diffs); k++) {
+        PyObject *it = PyList_GET_ITEM(diffs, k);
+        if (PyBool_Check(it))
+            continue;
+        if (PyLong_Check(it)) {
+            int ovf;
+            long long x = PyLong_AsLongLongAndOverflow(it, &ovf);
+            if (ovf || (x == -1 && PyErr_Occurred())) {
+                Py_DECREF(out);
+                return -1; /* bail: Python masks the big int */
+            }
+            code = x & 0xFF;
+        } else if (PyUnicode_Check(it)) {
+            PyObject *key = PyLong_FromLongLong(code);
+            PyObject *val = key ? PyObject_Str(it) : NULL;
+            int r = val ? PyDict_SetItem(out, key, val) : -1;
+            Py_XDECREF(key);
+            Py_XDECREF(val);
+            if (r < 0) {
+                Py_DECREF(out);
+                return -1;
+            }
+            code = (code + 1) & 0xFF;
+        }
+    }
+    int r = PyObject_SetAttr(info, f_differences, out);
+    Py_DECREF(out);
+    return r;
+}
+
+static int fi_subtype_ok(PyObject *st)
+{
+    return str_is(st, "Type1") || str_is(st, "MMType1") ||
+           str_is(st, "TrueType") || str_is(st, "Type0") ||
+           str_is(st, "CIDFontType0") || str_is(st, "CIDFontType2");
+}
+
+/* extract_font_info(fd, reader): a new FontInfo, None or BAIL (new refs),
+ * NULL with an exception */
+static PyObject *fi_build(FCtx *f, PyObject *fd)
+{
+    PyObject *sub = PyDict_GetItemWithError(fd, k_Subtype);
+    if (!sub || !PyUnicode_Check(sub)) {
+        if (PyErr_Occurred())
+            return NULL;
+        Py_RETURN_NONE;
+    }
+    if (!fi_subtype_ok(sub)) {
+        Py_INCREF(g_bail);
+        return g_bail;
+    }
+    PyObject *info = PyObject_CallNoArgs(g_fontinfo_cls);
+    if (!info)
+        return NULL;
+    PyObject *tmp = NULL, *desc = NULL;
+    int bail = 0;
+    int simple = str_is(sub, "Type1") || str_is(sub, "TrueType") ||
+                 str_is(sub, "MMType1");
+#define SETA(attr, val)                                                       \
+    do {                                                                      \
+        PyObject *v_ = (val);                                                 \
+        if (!v_ || PyObject_SetAttr(info, attr, v_) < 0) {                    \
+            Py_XDECREF(v_);                                                   \
+            goto fail;                                                        \
+        }                                                                     \
+        Py_DECREF(v_);                                                        \
+    } while (0)
+    SETA(f_font_type, PyObject_Str(sub));
+    PyObject *base = PyDict_GetItemWithError(fd, k_BaseFont);
+    if (base && PyUnicode_Check(base))
+        SETA(f_name, PyObject_Str(base));
+    if (PyErr_Occurred())
+        goto fail;
+    PyObject *cs = PyDict_GetItemWithError(fd, k_CIDSystemInfo);
+    if (cs && PyDict_Check(cs)) {
+        PyObject *ord = PyDict_GetItemWithError(cs, k_Ordering);
+        if (ord && PyBytes_Check(ord)) {
+            PyObject *s = PyUnicode_DecodeUTF8(
+                PyBytes_AS_STRING(ord), PyBytes_GET_SIZE(ord), "strict");
+            if (s)
+                SETA(f_cid_ordering, s);
+            else if (PyErr_ExceptionMatches(PyExc_UnicodeDecodeError))
+                PyErr_Clear();
+            else
+                goto fail;
+        } else if (ord && PyUnicode_Check(ord))
+            SETA(f_cid_ordering, PyObject_Str(ord));
+    }
+    if (PyErr_Occurred())
+        goto fail;
+    /* /Encoding: a name, a dict, or a Ref to a dict (a Ref to an
+     * embedded CMap stream is Python's) */
+    PyObject *enc = PyDict_GetItemWithError(fd, k_Encoding);
+    if (enc && PyUnicode_Check(enc))
+        SETA(f_encoding, PyObject_Str(enc));
+    else if (enc && PyDict_Check(enc)) {
+        if (fi_enc_dict(info, enc) < 0)
+            goto bail_or_fail;
+    } else if (is_ref(enc)) {
+        tmp = f_res(f, enc);
+        if (!tmp)
+            goto fail;
+        if (PyDict_Check(tmp)) {
+            if (fi_enc_dict(info, tmp) < 0)
+                goto bail_or_fail;
+        } else if (PyObject_TypeCheck(tmp, (PyTypeObject *)g_stream_cls))
+            goto bail;
+        Py_CLEAR(tmp);
+    }
+    if (PyErr_Occurred())
+        goto fail;
+    /* /ToUnicode, honored as an indirect stream only */
+    PyObject *tu = PyDict_GetItemWithError(fd, k_ToUnicode);
+    if (is_ref(tu)) {
+        tmp = f_res(f, tu);
+        if (!tmp)
+            goto fail;
+        if (PyObject_TypeCheck(tmp, (PyTypeObject *)g_stream_cls)) {
+            /* Stream.decode: no /Filter (and no parms to resolve) is the
+             * raw payload; the filters are Python's */
+            PyObject *sd = PyObject_GetAttr(tmp, s_dict);
+            PyObject *bytes;
+            if (!sd || !PyDict_Check(sd)) {
+                Py_XDECREF(sd);
+                goto bail_or_fail;
+            }
+            PyObject *flt = PyDict_GetItemWithError(sd, k_Filter);
+            int plain = (!flt || flt == Py_None) &&
+                        !PyDict_GetItemWithError(sd, k_DecodeParms) &&
+                        !PyDict_GetItemWithError(sd, k_DP);
+            if (PyErr_Occurred()) {
+                Py_DECREF(sd);
+                goto fail;
+            }
+            if (plain)
+                bytes = PyObject_GetAttr(tmp, s_raw);
+            else
+                bytes = PyObject_CallFunctionObjArgs(g_stream_bytes, tmp,
+                                                     f->reader, NULL);
+            Py_DECREF(sd);
+            if (!bytes)
+                goto fail;
+            if (PyBytes_Check(bytes)) {
+                PyObject *cm = cm_parse(
+                    (const unsigned char *)PyBytes_AS_STRING(bytes),
+                    PyBytes_GET_SIZE(bytes));
+                Py_DECREF(bytes);
+                if (!cm)
+                    goto fail;
+                if (cm == g_bail) {
+                    Py_DECREF(cm);
+                    goto bail;
+                }
+                SETA(f_to_unicode, cm);
+            } else {
+                int none = bytes == Py_None;
+                Py_DECREF(bytes);
+                if (!none)
+                    goto bail;
+            }
+        }
+        Py_CLEAR(tmp);
+    }
+    if (PyErr_Occurred())
+        goto fail;
+    /* metrics */
+    PyObject *fc = PyDict_GetItemWithError(fd, k_FirstChar);
+    if (fc && PyLong_Check(fc)) {
+        Py_INCREF(fc);
+        SETA(f_first_char, fc);
+    }
+    if (PyErr_Occurred())
+        goto fail;
+    PyObject *lc = PyDict_GetItemWithError(fd, k_LastChar);
+    if (lc && PyLong_Check(lc)) {
+        Py_INCREF(lc);
+        SETA(f_last_char, lc);
+    }
+    if (PyErr_Occurred())
+        goto fail;
+    int has_widths = 0;
+    tmp = f_res(f, PyDict_GetItemWithError(fd, k_Widths));
+    if (!tmp)
+        goto fail;
+    if (PyList_Check(tmp)) {
+        Py_ssize_t nw = PyList_GET_SIZE(tmp);
+        PyObject *wl = PyList_New(nw);
+        if (!wl)
+            goto fail;
+        for (Py_ssize_t k = 0; k < nw; k++) {
+            PyObject *w = PyList_GET_ITEM(tmp, k);
+            double x = 0.0;
+            if (num_double(w, &x) < 0) {
+                Py_DECREF(wl);
+                goto bail; /* float() overflows: Python raises */
+            }
+            PyObject *fw = PyFloat_FromDouble(x);
+            if (!fw) {
+                Py_DECREF(wl);
+                goto fail;
+            }
+            PyList_SET_ITEM(wl, k, fw);
+        }
+        SETA(f_widths, wl);
+        has_widths = 1;
+    }
+    Py_CLEAR(tmp);
+    desc = f_res(f, PyDict_GetItemWithError(fd, k_FontDescriptor));
+    if (!desc)
+        goto fail;
+    if (PyDict_Check(desc)) {
+        PyObject *mw = PyDict_GetItemWithError(desc, k_MissingWidth);
+        if (set_float_attr(info, f_missing_width, mw) < 0 || PyErr_Occurred())
+            goto bail_or_fail;
+    }
+    if (str_is(sub, "Type0")) {
+        tmp = f_res(f, PyDict_GetItemWithError(fd, k_DescendantFonts));
+        if (!tmp)
+            goto fail;
+        if (PyList_Check(tmp) && PyList_GET_SIZE(tmp)) {
+            PyObject *dd = f_res(f, PyList_GET_ITEM(tmp, 0));
+            if (!dd)
+                goto fail;
+            /* ISO 32000-1 9.7.1: the descendant is a CIDFont; a Type0
+             * descendant is not followed */
+            PyObject *dsub =
+                PyDict_Check(dd) ? PyDict_GetItemWithError(dd, k_Subtype)
+                                 : NULL;
+            if (PyDict_Check(dd) && !PyErr_Occurred() &&
+                !str_is(dsub, "Type0")) {
+                PyObject *di = fi_build(f, dd);
+                Py_DECREF(dd);
+                if (!di)
+                    goto fail;
+                if (di == g_bail) {
+                    Py_DECREF(di);
+                    goto bail;
+                }
+                SETA(f_descendant_font, di);
+            } else
+                Py_DECREF(dd);
+            if (PyErr_Occurred())
+                goto fail;
+        }
+        Py_CLEAR(tmp);
+    }
+    if (!has_widths && simple) {
+        /* Standard-14 AFM widths (the name defaults to "Unknown") */
+        PyObject *nm = PyObject_GetAttr(info, f_name);
+        if (!nm)
+            goto fail;
+        if (PyUnicode_Check(nm) && PyUnicode_GET_LENGTH(nm)) {
+            PyObject *std = PyObject_CallOneArg(g_std14, nm);
+            Py_DECREF(nm);
+            if (!std)
+                goto fail;
+            if (std != Py_None) {
+                if (!PyTuple_Check(std) || PyTuple_GET_SIZE(std) != 2) {
+                    Py_DECREF(std);
+                    goto bail;
+                }
+                PyObject *table = PyTuple_GET_ITEM(std, 0);
+                int r = set_float_attr(info, f_missing_width,
+                                       PyTuple_GET_ITEM(std, 1));
+                Py_INCREF(table);
+                Py_DECREF(std);
+                if (r != 1) {
+                    Py_DECREF(table);
+                    goto bail_or_fail;
+                }
+                SETA(f_widths, table); /* the shared table, as in Python */
+                SETA(f_first_char, PyLong_FromLong(0));
+                SETA(f_last_char, PyLong_FromLong(255));
+                has_widths = 1;
+            } else
+                Py_DECREF(std);
+        } else
+            Py_DECREF(nm);
+    }
+    if (!has_widths && simple && PyDict_Check(desc)) {
+        /* an embedded font program to read widths from: Python's */
+        PyObject *const ffk[3] = {k_FontFile2, k_FontFile3, k_FontFile};
+        for (int k = 0; k < 3; k++) {
+            PyObject *ff = PyDict_GetItemWithError(desc, ffk[k]);
+            if (!ff) {
+                if (PyErr_Occurred())
+                    goto fail;
+                continue;
+            }
+            int t = PyObject_IsTrue(ff);
+            if (t < 0)
+                goto fail;
+            if (t) {
+                if (is_ref(ff))
+                    goto bail;
+                break;
+            }
+        }
+    }
+    if (str_is(sub, "CIDFontType0") || str_is(sub, "CIDFontType2")) {
+        PyObject *dw = PyDict_GetItemWithError(fd, k_DW);
+        if (set_float_attr(info, f_cid_default_width, dw) < 0 ||
+            PyErr_Occurred())
+            goto bail_or_fail;
+        if (str_is(sub, "CIDFontType0") && !has_widths && PyDict_Check(desc) &&
+            is_ref(PyDict_GetItemWithError(desc, k_FontFile3)))
+            goto bail; /* CID-keyed CFF width read-back */
+        if (PyErr_Occurred())
+            goto fail;
+    }
+#undef SETA
+    Py_DECREF(desc);
+    return info;
+bail_or_fail:
+    if (PyErr_Occurred())
+        goto fail;
+bail:
+    bail = 1;
+fail:
+    Py_XDECREF(tmp);
+    Py_XDECREF(desc);
+    Py_DECREF(info);
+    if (bail && !PyErr_Occurred()) {
+        Py_INCREF(g_bail);
+        return g_bail;
+    }
+    return NULL;
+}
+
+/* the C build, else the Python extract_font_info (new ref) */
+static PyObject *fi_build_or_py(FCtx *f, PyObject *fd)
+{
+    PyObject *fi = fi_build(f, fd);
+    if (fi != g_bail)
+        return fi;
+    Py_DECREF(fi);
+    return PyObject_CallFunctionObjArgs(g_py_font_info, fd, f->reader, NULL);
+}
+
+/* font_info(reader, font_dict): extract_font_info's FontInfo or None;
+ * BAIL = Python builds it */
+static PyObject *font_info_c(PyObject *self, PyObject *args)
+{
+    PyObject *reader, *fd;
+    if (!PyArg_ParseTuple(args, "OO", &reader, &fd))
+        return NULL;
+    if (!g_fontinfo_cls || !PyDict_Check(fd)) {
+        Py_INCREF(g_bail);
+        return g_bail;
+    }
+    FCtx f;
+    f.reader = reader;
+    f.doc_ok = doc_open(&f.doc, reader);
+    if (f.doc_ok < 0)
+        return NULL;
+    PyObject *r = fi_build(&f, fd);
+    if (f.doc_ok)
+        doc_close(&f.doc);
+    return r;
+}
+
+/* page_fonts(reader, resources): extract_page_fonts' {name: FontInfo},
+ * filling reader._fontinfo_cache; a font the C build bails on is built
+ * by the Python extract_font_info.  BAIL = Python runs the whole step. */
+static PyObject *page_fonts_c(PyObject *self, PyObject *args)
+{
+    PyObject *reader, *resources;
+    if (!PyArg_ParseTuple(args, "OO", &reader, &resources))
+        return NULL;
+    if (!g_fontinfo_cls || !PyDict_Check(resources)) {
+        Py_INCREF(g_bail);
+        return g_bail;
+    }
+    PyObject *cache = PyObject_GetAttr(reader, f_fontinfo_cache);
+    if (!cache) {
+        if (!PyErr_ExceptionMatches(PyExc_AttributeError))
+            return NULL;
+        PyErr_Clear();
+    } else if (!PyDict_CheckExact(cache)) {
+        Py_DECREF(cache);
+        Py_INCREF(g_bail);
+        return g_bail;
+    }
+    FCtx f;
+    f.reader = reader;
+    f.doc_ok = doc_open(&f.doc, reader);
+    PyObject *fonts = NULL, *res = NULL;
+    if (f.doc_ok < 0)
+        goto done;
+    fonts = PyDict_New();
+    if (!fonts)
+        goto done;
+    res = f_res(&f, PyDict_GetItemWithError(resources, k_Font));
+    if (!res)
+        goto done;
+    if (PyDict_Check(res)) {
+        Py_ssize_t pos = 0;
+        PyObject *fname, *fobj;
+        while (PyDict_Next(res, &pos, &fname, &fobj)) {
+            PyObject *fi;
+            if (is_ref(fobj) && cache) {
+                fi = PyDict_GetItemWithError(cache, fobj);
+                if (fi)
+                    Py_INCREF(fi);
+                else if (PyErr_Occurred())
+                    goto fail;
+                else {
+                    PyObject *fd = f_res(&f, fobj);
+                    if (!fd)
+                        goto fail;
+                    if (PyDict_Check(fd))
+                        fi = fi_build_or_py(&f, fd);
+                    else {
+                        fi = Py_None;
+                        Py_INCREF(fi);
+                    }
+                    Py_DECREF(fd);
+                    if (!fi)
+                        goto fail;
+                    if (PyDict_SetItem(cache, fobj, fi) < 0) {
+                        Py_DECREF(fi);
+                        goto fail;
+                    }
+                }
+            } else {
+                PyObject *fd = f_res(&f, fobj);
+                if (!fd)
+                    goto fail;
+                if (PyDict_Check(fd))
+                    fi = fi_build_or_py(&f, fd);
+                else {
+                    fi = Py_None;
+                    Py_INCREF(fi);
+                }
+                Py_DECREF(fd);
+                if (!fi)
+                    goto fail;
+            }
+            if (fi != Py_None) {
+                PyObject *key = PyObject_Str(fname);
+                int r = key ? PyDict_SetItem(fonts, key, fi) : -1;
+                Py_XDECREF(key);
+                if (r < 0) {
+                    Py_DECREF(fi);
+                    goto fail;
+                }
+            }
+            Py_DECREF(fi);
+        }
+    }
+    goto done;
+fail:
+    Py_CLEAR(fonts);
+done:
+    Py_XDECREF(res);
+    Py_XDECREF(cache);
+    if (f.doc_ok > 0)
+        doc_close(&f.doc);
+    return fonts;
+}
+
+/* setup_fonts(FontInfo, CMap, glyph_name_to_unicode, _stream_bytes,
+ * standard14_widths, extract_font_info, winansi, macroman): the last two
+ * are the 256-char base tables of those encodings */
+static PyObject *setup_fonts(PyObject *self, PyObject *args)
+{
+    PyObject *fi, *cm, *glyph, *sbytes, *std14, *pyfi, *win, *mac;
+    if (!PyArg_ParseTuple(args, "OOOOOOUU", &fi, &cm, &glyph, &sbytes, &std14,
+                          &pyfi, &win, &mac))
+        return NULL;
+    if (PyUnicode_GET_LENGTH(win) != 256 || PyUnicode_GET_LENGTH(mac) != 256) {
+        PyErr_SetString(PyExc_ValueError, "base tables must have 256 chars");
+        return NULL;
+    }
+    for (Py_ssize_t b = 0; b < 256; b++) {
+        g_winansi[b] = PyUnicode_READ_CHAR(win, b);
+        g_macroman[b] = PyUnicode_READ_CHAR(mac, b);
+    }
+    install_global(&g_cmap_cls, cm);
+    install_global(&g_glyph_uni, glyph);
+    install_global(&g_stream_bytes, sbytes);
+    install_global(&g_std14, std14);
+    install_global(&g_py_font_info, pyfi);
+    install_global(&g_fontinfo_cls, fi);
+    Py_RETURN_NONE;
+}
+
 static void install_global(PyObject **slot, PyObject *value); /* below */
 
 static PyObject *setup_html(PyObject *self, PyObject *args)
@@ -5733,6 +7331,12 @@ static PyMethodDef methods[] = {
      "flatten_page_tree's Page list; None = bail"},
     {"page_content", page_content_c, METH_VARARGS,
      "page_content's joined /Contents bytes; None = bail"},
+    {"setup_fonts", setup_fonts, METH_VARARGS,
+     "install font-path classes, helpers and base encoding tables"},
+    {"font_info", font_info_c, METH_VARARGS,
+     "extract_font_info's FontInfo or None; BAIL = bail"},
+    {"page_fonts", page_fonts_c, METH_VARARGS,
+     "extract_page_fonts' {name: FontInfo}; BAIL = bail"},
     {"run_page", run_page, METH_VARARGS,
      "run the fast content loop; None on completion"},
     {"parse_indirect", parse_indirect, METH_VARARGS,
@@ -5814,6 +7418,48 @@ PyMODINIT_FUNC PyInit_oxpdf_cscan(void)
     IN(k_Prev, "Prev");
     IN(k_XRefStm, "XRefStm");
     IN(k_Page, "Page");
+    IN(f_name, "name");
+    IN(f_font_type, "font_type");
+    IN(f_encoding, "encoding");
+    IN(f_to_unicode, "to_unicode");
+    IN(f_differences, "differences");
+    IN(f_descendant_font, "descendant_font");
+    IN(f_cid_ordering, "cid_ordering");
+    IN(f_first_char, "first_char");
+    IN(f_last_char, "last_char");
+    IN(f_widths, "widths");
+    IN(f_missing_width, "missing_width");
+    IN(f_cid_widths, "cid_widths");
+    IN(f_cid_default_width, "cid_default_width");
+    IN(f_code_table, "_code_table");
+    IN(f_fonts, "fonts");
+    IN(f_fontinfo_cache, "_fontinfo_cache");
+    IN(f_resolve, "resolve");
+    IN(m_cmap_type, "cmap_type");
+    IN(m_wmode, "wmode");
+    IN(m_codespace_ranges, "codespace_ranges");
+    IN(m_ranges, "ranges");
+    IN(m_single, "single");
+    IN(m_inherited_predefined, "inherited_predefined");
+    IN(k_Subtype, "Subtype");
+    IN(k_BaseFont, "BaseFont");
+    IN(k_CIDSystemInfo, "CIDSystemInfo");
+    IN(k_Ordering, "Ordering");
+    IN(k_Encoding, "Encoding");
+    IN(k_BaseEncoding, "BaseEncoding");
+    IN(k_Differences, "Differences");
+    IN(k_ToUnicode, "ToUnicode");
+    IN(k_FirstChar, "FirstChar");
+    IN(k_LastChar, "LastChar");
+    IN(k_Widths, "Widths");
+    IN(k_FontDescriptor, "FontDescriptor");
+    IN(k_MissingWidth, "MissingWidth");
+    IN(k_DescendantFonts, "DescendantFonts");
+    IN(k_DW, "DW");
+    IN(k_FontFile, "FontFile");
+    IN(k_FontFile2, "FontFile2");
+    IN(k_FontFile3, "FontFile3");
+    IN(k_Font, "Font");
     k_inheritable[0] = k_Resources;
     k_inheritable[1] = k_MediaBox;
     IN(k_inheritable[2], "CropBox");

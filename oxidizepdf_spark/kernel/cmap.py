@@ -9,6 +9,12 @@ Reimplements (in-UDF, parsed once per font per document):
 - map() precedence — explicit singles, then ranges (big-endian carry add),
   then codespace-gated Identity passthrough: cmap.rs:317-389
 - variable-width code walk for decoding: extraction_cmap.rs decode_with_cmap
+
+C fast path (kernel/_cscan.c): the C font build parses ToUnicode streams
+into the same CMap fields (name, wmode, codespace_ranges, ranges, single)
+and bails to ``CMap.parse`` on usecmap and cid sections; the C code table
+decodes runs through CMaps whose codes are 1 or 2 bytes and leaves 3- and
+4-byte codes, usecmap parents and predefined CMaps to ``decode_with_cmap``.
 """
 
 from __future__ import annotations

@@ -1147,3 +1147,342 @@ def test_skeleton_fast_path_taken():
                        ("contents_dangling_ref", 99)):
         rdr = PdfReader(cases[label])
         assert ck.get_object(rdr, num, 0) is ck.BAIL, label
+
+
+# -- fonts and text decode: page_fonts, font_info, the per-font code table ---
+
+
+def _num(v):
+    return (type(v).__name__, repr(v))
+
+
+def _cmap_key(cm):
+    if cm is None:
+        return None
+    return (
+        _num(cm.name), cm.cmap_type, _num(cm.wmode), cm.codespace_ranges,
+        cm.ranges, sorted(cm.single.items()), sorted(cm.cid_singles.items()),
+        cm.cid_ranges, cm.notdef_ranges, cm.inherited_predefined,
+    )
+
+
+def _font_key(fi):
+    """Every FontInfo field the decode and width paths read, type-strict
+    (the memo caches _decode_table and _code_table are left out)."""
+    if fi is None:
+        return None
+    return (
+        _num(fi.name), _num(fi.font_type), _num(fi.encoding),
+        _cmap_key(fi.to_unicode),
+        None if fi.differences is None else sorted(
+            (_num(k), _num(v)) for k, v in fi.differences.items()),
+        _font_key(fi.descendant_font), _num(fi.cid_ordering),
+        _cmap_key(fi.encoding_cmap), _num(fi.first_char),
+        _num(fi.last_char),
+        None if fi.widths is None else (
+            type(fi.widths).__name__, [_num(w) for w in fi.widths]),
+        _num(fi.missing_width), fi.cid_widths, _num(fi.cid_default_width),
+    )
+
+
+def _font_run(data: bytes, layout: bool = False):
+    """Per page: the fonts extract_page_fonts builds, then the page run
+    (spans, text, raw and finalized fragments); at the end the document's
+    FontInfo cache and every run-memo entry (decoded text and unit width,
+    bit-strict) keyed by font fields and fallback class."""
+    from oxidizepdf_spark.kernel.content import parse_and_run
+    from oxidizepdf_spark.kernel.fonts import extract_page_fonts
+    from oxidizepdf_spark.kernel.pages import flatten_page_tree, page_content
+    from oxidizepdf_spark.kernel.reader import PdfReader
+    from oxidizepdf_spark.kernel.textstate import ExtractionOptions, Interpreter
+
+    try:
+        rdr = PdfReader(data, lenient=True)
+        pages = flatten_page_tree(rdr)
+    except Exception as e:
+        return _err(e)
+    opts = ExtractionOptions(preserve_layout=layout)
+    out = []
+    for idx, page in enumerate(pages):
+        try:
+            fonts = extract_page_fonts(page.resources, rdr)
+            content = page_content(rdr, page)
+        except Exception as e:
+            out.append(_err(e))
+            continue
+        out.append(sorted(((k, type(k).__name__, _font_key(v))
+                           for k, v in fonts.items()), key=repr))
+        interp = Interpreter(reader=rdr, fonts=fonts, options=opts,
+                             page_index=idx)
+        try:
+            parse_and_run(interp, content, page.resources)
+            err = None
+        except Exception as e:
+            err = _err(e)
+        raw = [_frag_key(f) for f in interp.fragments]
+        res = interp.finalize()
+        out.append((err, res.spans, res.text, raw,
+                    [_frag_key(f) for f in res.fragments]))
+    out.append(sorted(((k, _font_key(v))
+                       for k, v in rdr._fontinfo_cache.items()), key=repr))
+    out.append(sorted((
+        ((_font_key(info), cls),
+         sorted(((b, d, repr(w)) for b, (d, w) in memo.items()), key=repr))
+        for (info, cls), memo in rdr._span_decode_memo.items()), key=repr))
+    return out
+
+
+def _assert_same_fonts(data: bytes, label):
+    for layout in (False, True):
+        got_c, got_py = _both_paths(lambda: _font_run(data, layout))
+        assert got_c == got_py, (label, layout)
+    got_c, got_py = _both_paths(lambda: _extract_all(data))
+    assert got_c == got_py, label
+
+
+def _stm(body: bytes, extra: bytes = b"") -> bytes:
+    return b"<< /Length %d %s>>\nstream\n%s\nendstream" % (
+        len(body), extra, body)
+
+
+def _font_pdf(font: bytes, content: bytes, extra: dict | None = None,
+              **kw) -> bytes:
+    objs = _objects(content=content, **kw)
+    objs[5] = font
+    objs.update(extra or {})
+    return _pdf(dict(sorted(objs.items())))
+
+
+_ALL_BYTES = b"".join(
+    b"(%s) Tj " % bytes(b for b in range(i, i + 16)
+                         if b not in b"()\\\r\n")
+    for i in range(0, 256, 16))
+_SHOW = (b"BT /F1 12 Tf 72 700 Td (Hello) Tj [(Wor) -250 (ld)] TJ "
+         b"<00480069> Tj <41424300> Tj (a  b) Tj (   ) Tj () Tj "
+         + _ALL_BYTES + b"ET")
+
+_CMAP_2BYTE = b"""/CIDInit /ProcSet findresource begin
+12 dict begin begincmap /CMapName /Test-UCS def /WMode 1 def
+1 begincodespacerange <0000> <FFFF> endcodespacerange
+4 beginbfchar <0003> <0020> <0011> <D83DDE00> <0048> <0048>
+<0012> <D800> endbfchar
+4 beginbfrange <0024> <0026> [<0041> <00420043> <>]
+<00FE> <0101> <FFFE> <0040> <0042> <0061> <0069> <0069> <E282AC>
+endbfrange
+endcmap CMapName currentdict /CMap defineresource pop end end"""
+
+_CMAP_1BYTE = b"""begincmap /WMode -255 def
+1 begincodespacerange <00> <FF> endcodespacerange
+2 beginbfchar <41> <0058> <20> <0020> endbfchar
+3 beginbfrange <61> <63> [<0031> <0032>] <64> <66> <0044> <FE> <FF> <FFFF>
+endbfrange endcmap"""
+
+
+def _crafted_font_cases():
+    import zlib
+
+    helv = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica %s>>"
+    tt = b"<< /Type /Font /Subtype /TrueType /BaseFont /ABCDEF+Custom %s>>"
+    type0 = (b"<< /Type /Font /Subtype /Type0 /BaseFont /Dummy "
+             b"/Encoding /Identity-H /DescendantFonts [6 0 R] %s>>")
+    cid = (b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont /Dummy "
+           b"/CIDSystemInfo << /Registry (Adobe) /Ordering (Identity) "
+           b"/Supplement 0 >> /DW 900 >>")
+    cases = {}
+    cases["std14_plain"] = _font_pdf(helv % b"", _SHOW)
+    cases["std14_differences"] = _font_pdf(helv % (
+        b"/Encoding << /BaseEncoding /WinAnsiEncoding /Differences [65 /B /C "
+        b"97 /uni00E9 /bullet /u1F600 /notaglyph /space -1 /Euro 300 /fi "
+        b"true /A 2.5 (x) /uniD800] >> "), _SHOW)
+    cases["macroman"] = _font_pdf(
+        helv.replace(b"Helvetica", b"Times-BoldItalic")
+        % b"/Encoding /MacRomanEncoding ", _SHOW)
+    cases["encoding_ref"] = _font_pdf(
+        helv % b"/Encoding 6 0 R ", _SHOW,
+        {6: b"<< /Differences [72 /H.alt /e 104 /uni0048] >>"})
+    cases["truetype_widths"] = _font_pdf(tt % (
+        b"/FirstChar 65 /LastChar 70 /Widths [500 600 700.5 /x null true] "
+        b"/FontDescriptor 6 0 R /Encoding /WinAnsiEncoding "), _SHOW,
+        {6: b"<< /Type /FontDescriptor /MissingWidth 333.25 >>"})
+    cases["truetype_no_widths"] = _font_pdf(tt % b"", _SHOW)
+    cases["missing_firstchar"] = _font_pdf(
+        tt % b"/Widths 6 0 R /LastChar 300 ", _SHOW,
+        {6: b"[" + b" ".join(b"%d" % (250 + i) for i in range(120)) + b"]"})
+    cases["type1_tounicode"] = _font_pdf(
+        tt % b"/ToUnicode 6 0 R /Widths [600 700] /FirstChar 97 ", _SHOW,
+        {6: _stm(_CMAP_1BYTE)})
+    cases["identity_h_tounicode"] = _font_pdf(
+        type0 % b"/ToUnicode 7 0 R ", _SHOW, {6: cid, 7: _stm(_CMAP_2BYTE)})
+    cases["identity_h_flate_tounicode"] = _font_pdf(
+        type0 % b"/ToUnicode 7 0 R ", _SHOW,
+        {6: cid, 7: _stm(zlib.compress(_CMAP_2BYTE), b"/Filter /FlateDecode ")})
+    cases["identity_h_bad_flate"] = _font_pdf(
+        type0 % b"/ToUnicode 7 0 R ", _SHOW,
+        {6: cid, 7: _stm(b"not zlib", b"/Filter /FlateDecode ")})
+    cases["tounicode_3byte"] = _font_pdf(
+        type0 % b"/ToUnicode 7 0 R ", _SHOW,
+        {6: cid, 7: _stm(b"1 beginbfchar <414243> <0058> endbfchar "
+                         b"1 beginbfrange <0048> <0049> <0061> endbfrange")})
+    cases["tounicode_usecmap"] = _font_pdf(
+        type0 % b"/ToUnicode 7 0 R ", _SHOW,
+        {6: cid, 7: _stm(b"/Identity-H usecmap " + _CMAP_2BYTE)})
+    cases["type0_self_descendant"] = _font_pdf(
+        b"<< /Type /Font /Subtype /Type0 /BaseFont /Loop "
+        b"/Encoding /Identity-H /DescendantFonts [5 0 R] >>", _CONTENT)
+    cases["type0_cjk"] = _font_pdf(
+        b"<< /Type /Font /Subtype /Type0 /BaseFont /SimSun "
+        b"/Encoding /GBK-EUC-H /DescendantFonts [6 0 R] >>",
+        b"BT /F1 12 Tf <c4e3bac3> Tj (Hi) Tj ET",
+        {6: b"<< /Type /Font /Subtype /CIDFontType0 /BaseFont /SimSun "
+            b"/CIDSystemInfo << /Registry (Adobe) /Ordering (GB1) "
+            b"/Supplement 2 >> >>"})
+    cases["type0_encoding_stream"] = _font_pdf(
+        b"<< /Type /Font /Subtype /Type0 /BaseFont /X /Encoding 7 0 R "
+        b"/DescendantFonts [6 0 R] >>", _SHOW,
+        {6: cid, 7: _stm(b"1 begincidrange <0000> <FFFF> 0 endcidrange")})
+    cases["type3"] = _font_pdf(
+        b"<< /Type /Font /Subtype /Type3 /FontBBox [0 0 1 1] "
+        b"/FontMatrix [0.001 0 0 0.001 0 0] /CharProcs << >> "
+        b"/Encoding << /Differences [72 /H /e] >> /FirstChar 72 "
+        b"/LastChar 101 /Widths [500 600] >>", _SHOW)
+    cases["fontfile_widths"] = _font_pdf(
+        tt % b"/FontDescriptor 6 0 R ", _SHOW,
+        {6: b"<< /Type /FontDescriptor /FontFile2 7 0 R >>",
+         7: _stm(b"\x00\x01\x00\x00 not a font")})
+    # fonts from the page tree: inherited from /Pages, overridden on a
+    # second page, and one font Ref shared by two pages
+    shared = _objects(content=_SHOW)
+    shared[2] = shared[2].replace(b"/Kids [3 0 R]", b"/Kids [3 0 R 6 0 R 7 0 R]")
+    shared[6] = (b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R "
+                 b"/Resources << /Font << /F1 8 0 R /F2 5 0 R >> >> >>")
+    shared[7] = b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>"
+    shared[8] = tt % b"/Widths [1 2 3] /FirstChar 72 "
+    cases["shared_and_inherited"] = _pdf(shared)
+    return cases
+
+
+def test_differential_fonts_crafted():
+    """C font build and code-table decode vs the Python authority: fonts,
+    FontInfo cache, run memo (decoded text and unit width), spans and
+    layout-mode fragment widths — Standard-14 with /Differences, TrueType
+    with and without /Widths, a missing /FirstChar, ToUnicode CMaps
+    (1- and 2-byte, bfrange array form, a wrapping range, filtered and
+    broken streams, 3-byte codes, usecmap), Type3, CJK and encoding-CMap
+    Type0 fonts, an embedded FontFile2, fonts inherited through the page
+    tree and shared by two pages, and a Type0 font that is its own
+    descendant."""
+    for label, data in _crafted_font_cases().items():
+        _assert_same_fonts(data, label)
+
+
+def test_differential_fonts_corpus_catalog():
+    from oxidizepdf_spark.corpus import all_cases, generate_corpus
+    from oxidizepdf_spark.kernel.extract import decode_raw_payload
+
+    for case, pdf, _expected in all_cases():
+        _assert_same_fonts(pdf, case)
+    for in_row, _ in generate_corpus(n_docs=150, seed=11, mega_doc_rate=0.0):
+        for s in in_row["spans"]:
+            if s["kind"] == "raw_pdf":
+                _assert_same_fonts(decode_raw_payload(s["text"] or ""),
+                                   (in_row["doc_id"], in_row["case"]))
+
+
+def test_differential_fonts_mutations():
+    """Seeded edits of font dicts and ToUnicode CMap bodies (the xref
+    stays valid, so every edit reaches the font build and the decode)."""
+    import random
+
+    fonts = [
+        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding "
+        b"<< /Differences [65 /B /C 97 /uni00E9] >> >>",
+        b"<< /Type /Font /Subtype /TrueType /BaseFont /Custom /FirstChar 65 "
+        b"/LastChar 70 /Widths [500 600 700.5] /FontDescriptor 6 0 R >>",
+        b"<< /Type /Font /Subtype /Type0 /BaseFont /Dummy /Encoding "
+        b"/Identity-H /DescendantFonts [6 0 R] /ToUnicode 7 0 R >>",
+        b"<< /Type /Font /Subtype /Type1 /BaseFont /Custom "
+        b"/ToUnicode 7 0 R >>",
+    ]
+    cmaps = [_CMAP_1BYTE, _CMAP_2BYTE]
+    tokens = [b"/Widths", b"[", b"]", b"<", b">", b"<<", b">>", b"0", b"-1",
+              b"255", b"99999999999999999999", b"/Differences", b"/FirstChar",
+              b" 5 0 R", b" 6 0 R", b"beginbfrange", b"endbfrange",
+              b"beginbfchar", b"usecmap", b"<FFFF>", b"<D800>", b"/Type0",
+              b"/Type3", b"%", b"\n", b"(", b")", b"/Subtype", b"<0041>",
+              b"begincodespacerange", b"/WMode", b"2.5", b"true", b"null"]
+    rng = random.Random(5)
+
+    def mutate(body: bytes) -> bytes:
+        data = bytearray(body)
+        for _edit in range(rng.randrange(1, 4)):
+            i = rng.randrange(len(data))
+            op = rng.random()
+            if op < 0.3:
+                data[i] = rng.randrange(256)
+            elif op < 0.7:
+                data[i:i] = rng.choice(tokens)
+            else:
+                del data[i:i + rng.randrange(1, 6)]
+        return bytes(data)
+
+    for _ in range(250):
+        font, cmap = rng.choice(fonts), rng.choice(cmaps)
+        if rng.random() < 0.5:
+            font = mutate(font)
+        else:
+            cmap = mutate(cmap)
+        data = _font_pdf(font, _SHOW, {
+            6: b"<< /Type /Font /Subtype /CIDFontType2 /MissingWidth 250 "
+               b"/DW 800 >>",
+            7: _stm(cmap)})
+        got_c, got_py = _both_paths(lambda: _font_run(data))
+        assert got_c == got_py, (font, cmap)
+
+
+def test_font_fast_path_taken(monkeypatch):
+    """The corpus's Helvetica, ToUnicode Type1 and Identity-H fonts build
+    in C and decode every run natively (no Python _decode call); Type3
+    and a CJK Type0 font bail to Python."""
+    from oxidizepdf_spark.corpus import all_cases
+    from oxidizepdf_spark.kernel.extract import extract_pdf_bytes
+    from oxidizepdf_spark.kernel.reader import PdfReader
+    from oxidizepdf_spark.kernel.textstate import Interpreter
+
+    calls = []
+    orig = Interpreter._decode
+
+    def counting(self, tb):
+        calls.append((self.state.font_name, tb))
+        return orig(self, tb)
+
+    monkeypatch.setattr(Interpreter, "_decode", counting)
+    ck = C._CSCAN
+    catalog = {case: pdf for case, pdf, _ in all_cases()}
+    for case in ("X01", "X12", "X13", "X14", "X15"):
+        calls.clear()
+        assert extract_pdf_bytes(catalog[case]).spans
+        assert calls == [], case
+    cases = _crafted_font_cases()
+    for label in ("type3", "type0_cjk"):
+        calls.clear()
+        extract_pdf_bytes(cases[label])
+        assert calls, label
+    for label in ("type3", "type0_encoding_stream", "tounicode_usecmap",
+                  "fontfile_widths"):
+        rdr = PdfReader(cases[label])
+        assert ck.font_info(rdr, rdr.get_object(5)) is ck.BAIL, label
+    rdr = PdfReader(cases["identity_h_tounicode"])
+    fi = ck.font_info(rdr, rdr.get_object(5))
+    assert fi.to_unicode.name == "Test-UCS" and fi.to_unicode.wmode == 1
+    assert fi.descendant_font.cid_default_width == 900.0
+
+
+def test_type0_self_descendant_extracts():
+    """A Type0 font whose /DescendantFonts lists itself: the descendant
+    is not followed (it must be a CIDFont), so the page extracts instead
+    of failing with RecursionError — on both paths."""
+    data = _crafted_font_cases()["type0_self_descendant"]
+    got_c, got_py = _both_paths(lambda: _extract_all(data))
+    assert got_c == got_py
+    spans, n_pages, error, _mode = got_c
+    assert spans == [("text", "Hello", None)] and error is None

@@ -1,32 +1,37 @@
 #!/usr/bin/env python3
-"""Stable kernel micro-benchmarks (no Spark): the numbers BENCH.md's kernel
-tables cite, measured the same way every round.
+"""Kernel layer split, no Spark: the single-process replay the benchmark's
+``--trace 1`` uses (``perfbench/kernel_replay.replay``), printed as one
+JSON object of per-layer seconds and counts.
 
-Usage: python tools/kernel_bench.py [--reps N]
+Usage: python tools/kernel_bench.py [--seed 90210] [--sample 1500]
+                                    [--reps 3] [--fixtures]
 
-Measures best-of-N (host vCPU contention on this sandbox swings single
-runs ±30%, so compare best-window numbers, and never run Spark
-concurrently):
-
-- Cold_Email_Hacks.pdf  (44-page text-heavy book; reference Rust: 85 ms)
-- Higgs arXiv paper     (38 pages, TJ-kerned dense text + 245 image refs)
-- synthetic corpus mix  (3,000 docs, PDF/HTML/mega/corrupt tiers)
+The replay draws ``--sample`` documents from the seeded 16,000-document
+``extract_mixed`` corpus. With ``--reps`` above 1, each layer reports its
+best repetition (a busy host swings single runs by ±30%; never run Spark
+alongside). ``--fixtures`` adds best-of-reps timings of the two
+real-document fixtures (the 44-page Cold_Email book, the 38-page Higgs
+paper), default and layout mode, for each fixture file that exists.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
-COLD = "/root/reference/test-pdfs/Cold_Email_Hacks.pdf"
-HIGGS = (
-    "/root/reference/oxidize-pdf-core/tests/fixtures/"
-    "issue_272_higgs_arxiv_1207_7214.pdf"
-)
+N_DOCS = 16000  # extract_mixed's corpus size
+FIXTURES = {
+    "cold_email": "/root/reference/test-pdfs/Cold_Email_Hacks.pdf",
+    "higgs": "/root/reference/oxidize-pdf-core/tests/fixtures/"
+             "issue_272_higgs_arxiv_1207_7214.pdf",
+}
 
 
 def best_of(fn, reps: int) -> float:
@@ -39,48 +44,55 @@ def best_of(fn, reps: int) -> float:
     return best
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--reps", type=int, default=4)
-    args = ap.parse_args()
+def replay_layers(seed: int, sample: int, reps: int) -> dict:
+    """Per-layer seconds (best repetition) and counts of the replay."""
+    import kernel_replay
 
-    from oxidizepdf_spark.corpus import generate_corpus
-    from oxidizepdf_spark.kernel.extract import (
-        extract_document_spans,
-        extract_pdf_bytes,
-    )
+    out: dict = {}
+    for _ in range(max(reps, 1)):
+        r = kernel_replay.replay(seed, N_DOCS, sample)
+        for k, v in r.items():
+            if k.endswith("_s") and k in out:
+                out[k] = min(out[k], v)
+            else:
+                out[k] = v
+    out["kernel_s"] = sum(v for k, v in out.items()
+                          if k.startswith("kernel.") and k.endswith("_s"))
+    return out
 
+
+def fixture_legs(reps: int) -> dict:
+    from oxidizepdf_spark.kernel.extract import extract_pdf_bytes
     from oxidizepdf_spark.kernel.textstate import ExtractionOptions
 
+    layout = ExtractionOptions(preserve_layout=True)
     out = {}
-    for name, path in (("cold_email_sec", COLD), ("higgs_sec", HIGGS)):
+    for name, path in FIXTURES.items():
+        if not os.path.exists(path):
+            continue
         data = open(path, "rb").read()
-        out[name] = round(best_of(lambda: extract_pdf_bytes(data), args.reps), 4)
-        # layout mode (positioned fragments): the path tables/elements/
-        # annotations covered_text/reading-order queries pay
-        out[name.replace("_sec", "_layout_sec")] = round(
-            best_of(
-                lambda: extract_pdf_bytes(
-                    data, options=ExtractionOptions(preserve_layout=True)
-                ),
-                args.reps,
-            ),
-            4,
-        )
+        out[f"{name}_s"] = best_of(lambda: extract_pdf_bytes(data), reps)
+        out[f"{name}_layout_s"] = best_of(
+            lambda: extract_pdf_bytes(data, options=layout), reps)
+    return out
 
-    pairs = list(generate_corpus(n_docs=3000, seed=42))
-    triples = [
-        [(s["kind"], s["text"], s["media_ref"]) for s in r["spans"]]
-        for r, _ in pairs
-    ]
 
-    def corpus_pass():
-        for t in triples:
-            extract_document_spans(t)
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--seed", type=int, default=90210)
+    ap.add_argument("--sample", type=int, default=1500)
+    ap.add_argument("--reps", type=int, default=1)
+    ap.add_argument("--fixtures", action="store_true")
+    args = ap.parse_args()
 
-    sec = best_of(corpus_pass, max(2, args.reps - 1))
-    out["synthetic_ms_per_doc"] = round(sec / len(triples) * 1e3, 4)
-    print(json.dumps(out))
+    from oxidizepdf_spark.kernel import content
+
+    out = {"c_fast_path": int(content._CSCAN is not None)}
+    out.update(replay_layers(args.seed, args.sample, args.reps))
+    if args.fixtures:
+        out.update(fixture_legs(args.reps))
+    print(json.dumps({k: round(v, 5) if isinstance(v, float) else v
+                      for k, v in out.items()}))
 
 
 if __name__ == "__main__":
