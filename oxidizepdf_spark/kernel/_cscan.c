@@ -5392,48 +5392,29 @@ done:
 /* ======================================================================== */
 /* Fonts and text decode.
  *
- * page_fonts / font_info transcribe fonts.extract_page_fonts and
- * fonts.extract_font_info (with cmap.CMap.parse for a ToUnicode stream);
- * the per-font code table behind decode_native answers
- * Interpreter._decode for a run the memo missed.  Same rules as the
- * skeleton: a complete result or a bail, the Python functions stay the
- * authority.
+ * The per-font code table behind decode_native answers
+ * Interpreter._decode for a run the memo missed; parse_cmap transcribes
+ * cmap.CMap.parse (with tokenize_cmap) for the ToUnicode streams
+ * fonts.extract_font_info reads.  Same rules as the skeleton: a complete
+ * result or a bail, the Python functions stay the authority.
  *
- * The font build answers BAIL (Python builds that font) for Type3 and
- * any other subtype outside Type1/MMType1/TrueType/Type0/CIDFontType0/
- * CIDFontType2, an embedded /Encoding CMap stream, a ToUnicode CMap with
- * usecmap or cid sections, an embedded FontFile* width read-back, and a
- * number it cannot convert exactly.  The code table declines (Python
- * decodes the run) for a Type0 font without ToUnicode (the CJK / CID
- * table chain), ToUnicode codes of 3 or 4 bytes, composite fonts with
- * /Widths or CID width tables, and any run whose decode would meet the
- * acceptance gate or a sanitize trigger. */
+ * parse_cmap answers BAIL (CMap.parse runs) for a CMap with usecmap or
+ * cid sections.  The code table declines (Python decodes the run) for a
+ * Type0 font without ToUnicode (the CJK / CID table chain), ToUnicode
+ * codes of 3 or 4 bytes, composite fonts with /Widths or CID width
+ * tables, and any run whose decode would meet the acceptance gate or a
+ * sanitize trigger. */
 
 static void install_global(PyObject **slot, PyObject *value); /* below */
 
-static PyObject *g_fontinfo_cls;  /* fonts.FontInfo */
-static PyObject *g_cmap_cls;      /* cmap.CMap */
+static PyObject *g_cmap_cls;      /* cmap.CMap; set last by setup_fonts */
 static PyObject *g_glyph_uni;     /* encodings.glyph_name_to_unicode */
-static PyObject *g_stream_bytes;  /* fonts._stream_bytes */
-static PyObject *g_std14;         /* afm_widths.standard14_widths */
-static PyObject *g_py_font_info;  /* fonts.extract_font_info */
 static Py_UCS4 g_winansi[256], g_macroman[256];
 static PyObject *f_name, *f_font_type, *f_encoding, *f_to_unicode,
-    *f_differences, *f_descendant_font, *f_cid_ordering, *f_first_char,
-    *f_last_char, *f_widths, *f_missing_width, *f_cid_widths,
-    *f_cid_default_width, *f_code_table, *f_fonts, *f_fontinfo_cache,
-    *f_resolve, *m_cmap_type, *m_wmode, *m_codespace_ranges, *m_ranges,
-    *m_single, *m_inherited_predefined;
-static PyObject *k_Subtype, *k_BaseFont, *k_CIDSystemInfo, *k_Ordering,
-    *k_Encoding, *k_BaseEncoding, *k_Differences, *k_ToUnicode,
-    *k_FirstChar, *k_LastChar, *k_Widths, *k_FontDescriptor,
-    *k_MissingWidth, *k_DescendantFonts, *k_DW, *k_FontFile, *k_FontFile2,
-    *k_FontFile3, *k_Font;
-
-static int is_ref(PyObject *v)
-{
-    return v && PyObject_TypeCheck(v, (PyTypeObject *)g_ref_cls);
-}
+    *f_differences, *f_descendant_font, *f_first_char, *f_last_char,
+    *f_widths, *f_missing_width, *f_cid_widths, *f_code_table, *f_fonts,
+    *m_cmap_type, *m_wmode, *m_codespace_ranges, *m_ranges, *m_single,
+    *m_inherited_predefined;
 
 static int str_is(PyObject *s, const char *lit)
 {
@@ -5975,7 +5956,7 @@ done:
  * method must decide (no font, no table, a gated run) */
 static PyObject *decode_native(Ctx *c, PyObject *key)
 {
-    if (!g_fontinfo_cls || !PyBytes_Check(key))
+    if (!g_cmap_cls || !PyBytes_Check(key))
         return NULL;
     PyObject *fname = PyObject_GetAttr(c->st, a_font_name);
     if (!fname)
@@ -6035,7 +6016,7 @@ done:
     return hit;
 }
 
-/* ---- ToUnicode CMap parse (cmap.tokenize_cmap + CMap.parse) ------------- */
+/* ---- CMap parse (cmap.tokenize_cmap + CMap.parse) ---------------------- */
 
 enum { CT_HEX, CT_ARR, CT_NAME, CT_INT, CT_KW };
 
@@ -6256,7 +6237,7 @@ static int cm_set_item(PyObject *dict, CmLex *L, HRef k, HRef v)
     return r;
 }
 
-/* CMap.parse over a ToUnicode stream: a new CMap, BAIL (usecmap, cid
+/* CMap.parse over a CMap stream's bytes: a new CMap, BAIL (usecmap, cid
  * sections), or NULL with an exception */
 static PyObject *cm_parse(const unsigned char *d, Py_ssize_t n)
 {
@@ -6418,544 +6399,24 @@ done:
     return res;
 }
 
-/* ---- FontInfo build (fonts.extract_font_info) --------------------------- */
-
-typedef struct {
-    PyObject *reader;
-    Doc doc;
-    int doc_ok;
-} FCtx;
-
-/* reader.resolve(v) for a borrowed v (NULL: a missing key, read as None):
- * the C fetch first, the Python method where it bails */
-static PyObject *f_res(FCtx *f, PyObject *v)
+/* parse_cmap(data): CMap.parse(data), or BAIL (usecmap, cid sections,
+ * data not bytes) = CMap.parse runs */
+static PyObject *parse_cmap(PyObject *self, PyObject *data)
 {
-    if (!v) {
-        if (PyErr_Occurred())
-            return NULL;
-        Py_RETURN_NONE;
-    }
-    if (!is_ref(v)) {
-        Py_INCREF(v);
-        return v;
-    }
-    if (f->doc_ok) {
-        int bail = 0;
-        PyObject *r = doc_resolve(&f->doc, v, &bail);
-        if (r || PyErr_Occurred())
-            return r;
-    }
-    return PyObject_CallMethodOneArg(f->reader, f_resolve, v);
-}
-
-/* set info.<attr> = float(v) for an int/float v: 1 set, 0 not a number,
- * -1 bail/exception (check PyErr) */
-static int set_float_attr(PyObject *info, PyObject *attr, PyObject *v)
-{
-    double x;
-    int r = v ? num_double(v, &x) : 0;
-    if (r <= 0)
-        return r;
-    PyObject *fv = PyFloat_FromDouble(x);
-    if (!fv || PyObject_SetAttr(info, attr, fv) < 0) {
-        Py_XDECREF(fv);
-        return -1;
-    }
-    Py_DECREF(fv);
-    return 1;
-}
-
-/* BaseEncoding / Differences of an encoding dict: 0 ok, -1 bail/exception */
-static int fi_enc_dict(PyObject *info, PyObject *enc)
-{
-    PyObject *be = PyDict_GetItemWithError(enc, k_BaseEncoding);
-    if (be && PyUnicode_Check(be)) {
-        PyObject *s = PyObject_Str(be);
-        if (!s || PyObject_SetAttr(info, f_encoding, s) < 0) {
-            Py_XDECREF(s);
-            return -1;
-        }
-        Py_DECREF(s);
-    }
-    if (PyErr_Occurred())
-        return -1;
-    PyObject *diffs = PyDict_GetItemWithError(enc, k_Differences);
-    if (!diffs || !PyList_Check(diffs))
-        return PyErr_Occurred() ? -1 : 0;
-    /* _parse_differences */
-    PyObject *out = PyDict_New();
-    if (!out)
-        return -1;
-    long long code = 0;
-    for (Py_ssize_t k = 0; k < PyList_GET_SIZE(diffs); k++) {
-        PyObject *it = PyList_GET_ITEM(diffs, k);
-        if (PyBool_Check(it))
-            continue;
-        if (PyLong_Check(it)) {
-            int ovf;
-            long long x = PyLong_AsLongLongAndOverflow(it, &ovf);
-            if (ovf || (x == -1 && PyErr_Occurred())) {
-                Py_DECREF(out);
-                return -1; /* bail: Python masks the big int */
-            }
-            code = x & 0xFF;
-        } else if (PyUnicode_Check(it)) {
-            PyObject *key = PyLong_FromLongLong(code);
-            PyObject *val = key ? PyObject_Str(it) : NULL;
-            int r = val ? PyDict_SetItem(out, key, val) : -1;
-            Py_XDECREF(key);
-            Py_XDECREF(val);
-            if (r < 0) {
-                Py_DECREF(out);
-                return -1;
-            }
-            code = (code + 1) & 0xFF;
-        }
-    }
-    int r = PyObject_SetAttr(info, f_differences, out);
-    Py_DECREF(out);
-    return r;
-}
-
-static int fi_subtype_ok(PyObject *st)
-{
-    return str_is(st, "Type1") || str_is(st, "MMType1") ||
-           str_is(st, "TrueType") || str_is(st, "Type0") ||
-           str_is(st, "CIDFontType0") || str_is(st, "CIDFontType2");
-}
-
-/* extract_font_info(fd, reader): a new FontInfo, None or BAIL (new refs),
- * NULL with an exception */
-static PyObject *fi_build(FCtx *f, PyObject *fd)
-{
-    PyObject *sub = PyDict_GetItemWithError(fd, k_Subtype);
-    if (!sub || !PyUnicode_Check(sub)) {
-        if (PyErr_Occurred())
-            return NULL;
-        Py_RETURN_NONE;
-    }
-    if (!fi_subtype_ok(sub)) {
+    if (!g_cmap_cls || !PyBytes_CheckExact(data)) {
         Py_INCREF(g_bail);
         return g_bail;
     }
-    PyObject *info = PyObject_CallNoArgs(g_fontinfo_cls);
-    if (!info)
-        return NULL;
-    PyObject *tmp = NULL, *desc = NULL;
-    int bail = 0;
-    int simple = str_is(sub, "Type1") || str_is(sub, "TrueType") ||
-                 str_is(sub, "MMType1");
-#define SETA(attr, val)                                                       \
-    do {                                                                      \
-        PyObject *v_ = (val);                                                 \
-        if (!v_ || PyObject_SetAttr(info, attr, v_) < 0) {                    \
-            Py_XDECREF(v_);                                                   \
-            goto fail;                                                        \
-        }                                                                     \
-        Py_DECREF(v_);                                                        \
-    } while (0)
-    SETA(f_font_type, PyObject_Str(sub));
-    PyObject *base = PyDict_GetItemWithError(fd, k_BaseFont);
-    if (base && PyUnicode_Check(base))
-        SETA(f_name, PyObject_Str(base));
-    if (PyErr_Occurred())
-        goto fail;
-    PyObject *cs = PyDict_GetItemWithError(fd, k_CIDSystemInfo);
-    if (cs && PyDict_Check(cs)) {
-        PyObject *ord = PyDict_GetItemWithError(cs, k_Ordering);
-        if (ord && PyBytes_Check(ord)) {
-            PyObject *s = PyUnicode_DecodeUTF8(
-                PyBytes_AS_STRING(ord), PyBytes_GET_SIZE(ord), "strict");
-            if (s)
-                SETA(f_cid_ordering, s);
-            else if (PyErr_ExceptionMatches(PyExc_UnicodeDecodeError))
-                PyErr_Clear();
-            else
-                goto fail;
-        } else if (ord && PyUnicode_Check(ord))
-            SETA(f_cid_ordering, PyObject_Str(ord));
-    }
-    if (PyErr_Occurred())
-        goto fail;
-    /* /Encoding: a name, a dict, or a Ref to a dict (a Ref to an
-     * embedded CMap stream is Python's) */
-    PyObject *enc = PyDict_GetItemWithError(fd, k_Encoding);
-    if (enc && PyUnicode_Check(enc))
-        SETA(f_encoding, PyObject_Str(enc));
-    else if (enc && PyDict_Check(enc)) {
-        if (fi_enc_dict(info, enc) < 0)
-            goto bail_or_fail;
-    } else if (is_ref(enc)) {
-        tmp = f_res(f, enc);
-        if (!tmp)
-            goto fail;
-        if (PyDict_Check(tmp)) {
-            if (fi_enc_dict(info, tmp) < 0)
-                goto bail_or_fail;
-        } else if (PyObject_TypeCheck(tmp, (PyTypeObject *)g_stream_cls))
-            goto bail;
-        Py_CLEAR(tmp);
-    }
-    if (PyErr_Occurred())
-        goto fail;
-    /* /ToUnicode, honored as an indirect stream only */
-    PyObject *tu = PyDict_GetItemWithError(fd, k_ToUnicode);
-    if (is_ref(tu)) {
-        tmp = f_res(f, tu);
-        if (!tmp)
-            goto fail;
-        if (PyObject_TypeCheck(tmp, (PyTypeObject *)g_stream_cls)) {
-            /* Stream.decode: no /Filter (and no parms to resolve) is the
-             * raw payload; the filters are Python's */
-            PyObject *sd = PyObject_GetAttr(tmp, s_dict);
-            PyObject *bytes;
-            if (!sd || !PyDict_Check(sd)) {
-                Py_XDECREF(sd);
-                goto bail_or_fail;
-            }
-            PyObject *flt = PyDict_GetItemWithError(sd, k_Filter);
-            int plain = (!flt || flt == Py_None) &&
-                        !PyDict_GetItemWithError(sd, k_DecodeParms) &&
-                        !PyDict_GetItemWithError(sd, k_DP);
-            if (PyErr_Occurred()) {
-                Py_DECREF(sd);
-                goto fail;
-            }
-            if (plain)
-                bytes = PyObject_GetAttr(tmp, s_raw);
-            else
-                bytes = PyObject_CallFunctionObjArgs(g_stream_bytes, tmp,
-                                                     f->reader, NULL);
-            Py_DECREF(sd);
-            if (!bytes)
-                goto fail;
-            if (PyBytes_Check(bytes)) {
-                PyObject *cm = cm_parse(
-                    (const unsigned char *)PyBytes_AS_STRING(bytes),
-                    PyBytes_GET_SIZE(bytes));
-                Py_DECREF(bytes);
-                if (!cm)
-                    goto fail;
-                if (cm == g_bail) {
-                    Py_DECREF(cm);
-                    goto bail;
-                }
-                SETA(f_to_unicode, cm);
-            } else {
-                int none = bytes == Py_None;
-                Py_DECREF(bytes);
-                if (!none)
-                    goto bail;
-            }
-        }
-        Py_CLEAR(tmp);
-    }
-    if (PyErr_Occurred())
-        goto fail;
-    /* metrics */
-    PyObject *fc = PyDict_GetItemWithError(fd, k_FirstChar);
-    if (fc && PyLong_Check(fc)) {
-        Py_INCREF(fc);
-        SETA(f_first_char, fc);
-    }
-    if (PyErr_Occurred())
-        goto fail;
-    PyObject *lc = PyDict_GetItemWithError(fd, k_LastChar);
-    if (lc && PyLong_Check(lc)) {
-        Py_INCREF(lc);
-        SETA(f_last_char, lc);
-    }
-    if (PyErr_Occurred())
-        goto fail;
-    int has_widths = 0;
-    tmp = f_res(f, PyDict_GetItemWithError(fd, k_Widths));
-    if (!tmp)
-        goto fail;
-    if (PyList_Check(tmp)) {
-        Py_ssize_t nw = PyList_GET_SIZE(tmp);
-        PyObject *wl = PyList_New(nw);
-        if (!wl)
-            goto fail;
-        for (Py_ssize_t k = 0; k < nw; k++) {
-            PyObject *w = PyList_GET_ITEM(tmp, k);
-            double x = 0.0;
-            if (num_double(w, &x) < 0) {
-                Py_DECREF(wl);
-                goto bail; /* float() overflows: Python raises */
-            }
-            PyObject *fw = PyFloat_FromDouble(x);
-            if (!fw) {
-                Py_DECREF(wl);
-                goto fail;
-            }
-            PyList_SET_ITEM(wl, k, fw);
-        }
-        SETA(f_widths, wl);
-        has_widths = 1;
-    }
-    Py_CLEAR(tmp);
-    desc = f_res(f, PyDict_GetItemWithError(fd, k_FontDescriptor));
-    if (!desc)
-        goto fail;
-    if (PyDict_Check(desc)) {
-        PyObject *mw = PyDict_GetItemWithError(desc, k_MissingWidth);
-        if (set_float_attr(info, f_missing_width, mw) < 0 || PyErr_Occurred())
-            goto bail_or_fail;
-    }
-    if (str_is(sub, "Type0")) {
-        tmp = f_res(f, PyDict_GetItemWithError(fd, k_DescendantFonts));
-        if (!tmp)
-            goto fail;
-        if (PyList_Check(tmp) && PyList_GET_SIZE(tmp)) {
-            PyObject *dd = f_res(f, PyList_GET_ITEM(tmp, 0));
-            if (!dd)
-                goto fail;
-            /* ISO 32000-1 9.7.1: the descendant is a CIDFont; a Type0
-             * descendant is not followed */
-            PyObject *dsub =
-                PyDict_Check(dd) ? PyDict_GetItemWithError(dd, k_Subtype)
-                                 : NULL;
-            if (PyDict_Check(dd) && !PyErr_Occurred() &&
-                !str_is(dsub, "Type0")) {
-                PyObject *di = fi_build(f, dd);
-                Py_DECREF(dd);
-                if (!di)
-                    goto fail;
-                if (di == g_bail) {
-                    Py_DECREF(di);
-                    goto bail;
-                }
-                SETA(f_descendant_font, di);
-            } else
-                Py_DECREF(dd);
-            if (PyErr_Occurred())
-                goto fail;
-        }
-        Py_CLEAR(tmp);
-    }
-    if (!has_widths && simple) {
-        /* Standard-14 AFM widths (the name defaults to "Unknown") */
-        PyObject *nm = PyObject_GetAttr(info, f_name);
-        if (!nm)
-            goto fail;
-        if (PyUnicode_Check(nm) && PyUnicode_GET_LENGTH(nm)) {
-            PyObject *std = PyObject_CallOneArg(g_std14, nm);
-            Py_DECREF(nm);
-            if (!std)
-                goto fail;
-            if (std != Py_None) {
-                if (!PyTuple_Check(std) || PyTuple_GET_SIZE(std) != 2) {
-                    Py_DECREF(std);
-                    goto bail;
-                }
-                PyObject *table = PyTuple_GET_ITEM(std, 0);
-                int r = set_float_attr(info, f_missing_width,
-                                       PyTuple_GET_ITEM(std, 1));
-                Py_INCREF(table);
-                Py_DECREF(std);
-                if (r != 1) {
-                    Py_DECREF(table);
-                    goto bail_or_fail;
-                }
-                SETA(f_widths, table); /* the shared table, as in Python */
-                SETA(f_first_char, PyLong_FromLong(0));
-                SETA(f_last_char, PyLong_FromLong(255));
-                has_widths = 1;
-            } else
-                Py_DECREF(std);
-        } else
-            Py_DECREF(nm);
-    }
-    if (!has_widths && simple && PyDict_Check(desc)) {
-        /* an embedded font program to read widths from: Python's */
-        PyObject *const ffk[3] = {k_FontFile2, k_FontFile3, k_FontFile};
-        for (int k = 0; k < 3; k++) {
-            PyObject *ff = PyDict_GetItemWithError(desc, ffk[k]);
-            if (!ff) {
-                if (PyErr_Occurred())
-                    goto fail;
-                continue;
-            }
-            int t = PyObject_IsTrue(ff);
-            if (t < 0)
-                goto fail;
-            if (t) {
-                if (is_ref(ff))
-                    goto bail;
-                break;
-            }
-        }
-    }
-    if (str_is(sub, "CIDFontType0") || str_is(sub, "CIDFontType2")) {
-        PyObject *dw = PyDict_GetItemWithError(fd, k_DW);
-        if (set_float_attr(info, f_cid_default_width, dw) < 0 ||
-            PyErr_Occurred())
-            goto bail_or_fail;
-        if (str_is(sub, "CIDFontType0") && !has_widths && PyDict_Check(desc) &&
-            is_ref(PyDict_GetItemWithError(desc, k_FontFile3)))
-            goto bail; /* CID-keyed CFF width read-back */
-        if (PyErr_Occurred())
-            goto fail;
-    }
-#undef SETA
-    Py_DECREF(desc);
-    return info;
-bail_or_fail:
-    if (PyErr_Occurred())
-        goto fail;
-bail:
-    bail = 1;
-fail:
-    Py_XDECREF(tmp);
-    Py_XDECREF(desc);
-    Py_DECREF(info);
-    if (bail && !PyErr_Occurred()) {
-        Py_INCREF(g_bail);
-        return g_bail;
-    }
-    return NULL;
+    return cm_parse((const unsigned char *)PyBytes_AS_STRING(data),
+                    PyBytes_GET_SIZE(data));
 }
 
-/* the C build, else the Python extract_font_info (new ref) */
-static PyObject *fi_build_or_py(FCtx *f, PyObject *fd)
-{
-    PyObject *fi = fi_build(f, fd);
-    if (fi != g_bail)
-        return fi;
-    Py_DECREF(fi);
-    return PyObject_CallFunctionObjArgs(g_py_font_info, fd, f->reader, NULL);
-}
-
-/* font_info(reader, font_dict): extract_font_info's FontInfo or None;
- * BAIL = Python builds it */
-static PyObject *font_info_c(PyObject *self, PyObject *args)
-{
-    PyObject *reader, *fd;
-    if (!PyArg_ParseTuple(args, "OO", &reader, &fd))
-        return NULL;
-    if (!g_fontinfo_cls || !PyDict_Check(fd)) {
-        Py_INCREF(g_bail);
-        return g_bail;
-    }
-    FCtx f;
-    f.reader = reader;
-    f.doc_ok = doc_open(&f.doc, reader);
-    if (f.doc_ok < 0)
-        return NULL;
-    PyObject *r = fi_build(&f, fd);
-    if (f.doc_ok)
-        doc_close(&f.doc);
-    return r;
-}
-
-/* page_fonts(reader, resources): extract_page_fonts' {name: FontInfo},
- * filling reader._fontinfo_cache; a font the C build bails on is built
- * by the Python extract_font_info.  BAIL = Python runs the whole step. */
-static PyObject *page_fonts_c(PyObject *self, PyObject *args)
-{
-    PyObject *reader, *resources;
-    if (!PyArg_ParseTuple(args, "OO", &reader, &resources))
-        return NULL;
-    if (!g_fontinfo_cls || !PyDict_Check(resources)) {
-        Py_INCREF(g_bail);
-        return g_bail;
-    }
-    PyObject *cache = PyObject_GetAttr(reader, f_fontinfo_cache);
-    if (!cache) {
-        if (!PyErr_ExceptionMatches(PyExc_AttributeError))
-            return NULL;
-        PyErr_Clear();
-    } else if (!PyDict_CheckExact(cache)) {
-        Py_DECREF(cache);
-        Py_INCREF(g_bail);
-        return g_bail;
-    }
-    FCtx f;
-    f.reader = reader;
-    f.doc_ok = doc_open(&f.doc, reader);
-    PyObject *fonts = NULL, *res = NULL;
-    if (f.doc_ok < 0)
-        goto done;
-    fonts = PyDict_New();
-    if (!fonts)
-        goto done;
-    res = f_res(&f, PyDict_GetItemWithError(resources, k_Font));
-    if (!res)
-        goto done;
-    if (PyDict_Check(res)) {
-        Py_ssize_t pos = 0;
-        PyObject *fname, *fobj;
-        while (PyDict_Next(res, &pos, &fname, &fobj)) {
-            PyObject *fi;
-            if (is_ref(fobj) && cache) {
-                fi = PyDict_GetItemWithError(cache, fobj);
-                if (fi)
-                    Py_INCREF(fi);
-                else if (PyErr_Occurred())
-                    goto fail;
-                else {
-                    PyObject *fd = f_res(&f, fobj);
-                    if (!fd)
-                        goto fail;
-                    if (PyDict_Check(fd))
-                        fi = fi_build_or_py(&f, fd);
-                    else {
-                        fi = Py_None;
-                        Py_INCREF(fi);
-                    }
-                    Py_DECREF(fd);
-                    if (!fi)
-                        goto fail;
-                    if (PyDict_SetItem(cache, fobj, fi) < 0) {
-                        Py_DECREF(fi);
-                        goto fail;
-                    }
-                }
-            } else {
-                PyObject *fd = f_res(&f, fobj);
-                if (!fd)
-                    goto fail;
-                if (PyDict_Check(fd))
-                    fi = fi_build_or_py(&f, fd);
-                else {
-                    fi = Py_None;
-                    Py_INCREF(fi);
-                }
-                Py_DECREF(fd);
-                if (!fi)
-                    goto fail;
-            }
-            if (fi != Py_None) {
-                PyObject *key = PyObject_Str(fname);
-                int r = key ? PyDict_SetItem(fonts, key, fi) : -1;
-                Py_XDECREF(key);
-                if (r < 0) {
-                    Py_DECREF(fi);
-                    goto fail;
-                }
-            }
-            Py_DECREF(fi);
-        }
-    }
-    goto done;
-fail:
-    Py_CLEAR(fonts);
-done:
-    Py_XDECREF(res);
-    Py_XDECREF(cache);
-    if (f.doc_ok > 0)
-        doc_close(&f.doc);
-    return fonts;
-}
-
-/* setup_fonts(FontInfo, CMap, glyph_name_to_unicode, _stream_bytes,
- * standard14_widths, extract_font_info, winansi, macroman): the last two
- * are the 256-char base tables of those encodings */
+/* setup_fonts(CMap, glyph_name_to_unicode, winansi, macroman): the last
+ * two are the 256-char base tables of those encodings */
 static PyObject *setup_fonts(PyObject *self, PyObject *args)
 {
-    PyObject *fi, *cm, *glyph, *sbytes, *std14, *pyfi, *win, *mac;
-    if (!PyArg_ParseTuple(args, "OOOOOOUU", &fi, &cm, &glyph, &sbytes, &std14,
-                          &pyfi, &win, &mac))
+    PyObject *cm, *glyph, *win, *mac;
+    if (!PyArg_ParseTuple(args, "OOUU", &cm, &glyph, &win, &mac))
         return NULL;
     if (PyUnicode_GET_LENGTH(win) != 256 || PyUnicode_GET_LENGTH(mac) != 256) {
         PyErr_SetString(PyExc_ValueError, "base tables must have 256 chars");
@@ -6965,12 +6426,8 @@ static PyObject *setup_fonts(PyObject *self, PyObject *args)
         g_winansi[b] = PyUnicode_READ_CHAR(win, b);
         g_macroman[b] = PyUnicode_READ_CHAR(mac, b);
     }
-    install_global(&g_cmap_cls, cm);
     install_global(&g_glyph_uni, glyph);
-    install_global(&g_stream_bytes, sbytes);
-    install_global(&g_std14, std14);
-    install_global(&g_py_font_info, pyfi);
-    install_global(&g_fontinfo_cls, fi);
+    install_global(&g_cmap_cls, cm);
     Py_RETURN_NONE;
 }
 
@@ -7333,10 +6790,8 @@ static PyMethodDef methods[] = {
      "page_content's joined /Contents bytes; None = bail"},
     {"setup_fonts", setup_fonts, METH_VARARGS,
      "install font-path classes, helpers and base encoding tables"},
-    {"font_info", font_info_c, METH_VARARGS,
-     "extract_font_info's FontInfo or None; BAIL = bail"},
-    {"page_fonts", page_fonts_c, METH_VARARGS,
-     "extract_page_fonts' {name: FontInfo}; BAIL = bail"},
+    {"parse_cmap", parse_cmap, METH_O,
+     "CMap.parse's CMap; BAIL = bail"},
     {"run_page", run_page, METH_VARARGS,
      "run the fast content loop; None on completion"},
     {"parse_indirect", parse_indirect, METH_VARARGS,
@@ -7424,42 +6879,19 @@ PyMODINIT_FUNC PyInit_oxpdf_cscan(void)
     IN(f_to_unicode, "to_unicode");
     IN(f_differences, "differences");
     IN(f_descendant_font, "descendant_font");
-    IN(f_cid_ordering, "cid_ordering");
     IN(f_first_char, "first_char");
     IN(f_last_char, "last_char");
     IN(f_widths, "widths");
     IN(f_missing_width, "missing_width");
     IN(f_cid_widths, "cid_widths");
-    IN(f_cid_default_width, "cid_default_width");
     IN(f_code_table, "_code_table");
     IN(f_fonts, "fonts");
-    IN(f_fontinfo_cache, "_fontinfo_cache");
-    IN(f_resolve, "resolve");
     IN(m_cmap_type, "cmap_type");
     IN(m_wmode, "wmode");
     IN(m_codespace_ranges, "codespace_ranges");
     IN(m_ranges, "ranges");
     IN(m_single, "single");
     IN(m_inherited_predefined, "inherited_predefined");
-    IN(k_Subtype, "Subtype");
-    IN(k_BaseFont, "BaseFont");
-    IN(k_CIDSystemInfo, "CIDSystemInfo");
-    IN(k_Ordering, "Ordering");
-    IN(k_Encoding, "Encoding");
-    IN(k_BaseEncoding, "BaseEncoding");
-    IN(k_Differences, "Differences");
-    IN(k_ToUnicode, "ToUnicode");
-    IN(k_FirstChar, "FirstChar");
-    IN(k_LastChar, "LastChar");
-    IN(k_Widths, "Widths");
-    IN(k_FontDescriptor, "FontDescriptor");
-    IN(k_MissingWidth, "MissingWidth");
-    IN(k_DescendantFonts, "DescendantFonts");
-    IN(k_DW, "DW");
-    IN(k_FontFile, "FontFile");
-    IN(k_FontFile2, "FontFile2");
-    IN(k_FontFile3, "FontFile3");
-    IN(k_Font, "Font");
     k_inheritable[0] = k_Resources;
     k_inheritable[1] = k_MediaBox;
     IN(k_inheritable[2], "CropBox");

@@ -17,26 +17,23 @@ pinned to its Python original by the differential tests
   parse and fetch (``parse_indirect``, ``get_object``: reader.py), the page
   tree and the /Contents assembly (``flatten_pages``, ``page_content``:
   pages.py);
-- the text path: each page's fonts (``page_fonts``, ``font_info``:
-  fonts.extract_page_fonts / extract_font_info, with cmap.CMap.parse for
-  ToUnicode streams) and, inside ``run_page``, the per-font code table
-  that decodes and measures a show run the run memo missed
-  (Interpreter._decode: fonts.decode_text and
-  calculate_text_width_from_codes);
+- the text path: the CMap parse (``parse_cmap``: cmap.CMap.parse with
+  tokenize_cmap, for the ToUnicode streams fonts.extract_font_info reads)
+  and, inside ``run_page``, the per-font code table that decodes and
+  measures a show run the run memo missed (Interpreter._decode:
+  fonts.decode_text and calculate_text_width_from_codes);
 - the HTML main-content tokenizer (``html_events``: html_extract.py).
 
 Every entry point returns a complete result or a bail (None, or ``BAIL``
-for ``get_object``, ``page_fonts`` and ``font_info``). On a bail the
-caller runs that whole step in Python, which stays the behavior
-authority: encrypted and recovered-mode documents, xref streams,
-compressed objects, an indirect /Length and any input the C code is not
-byte-certain about take the Python path. Fonts bail for Type3, an
-embedded /Encoding CMap stream, a ToUnicode CMap with usecmap or cid
-sections and an embedded FontFile* width read-back; a run goes to
-Interpreter._decode for a Type0 font without ToUnicode (CJK/CID tables),
-3- or 4-byte ToUnicode codes, composite /Widths or CID width tables, no
-font, or a decode that meets decode_text's acceptance gate or a
-sanitize trigger.
+for ``get_object`` and ``parse_cmap``). On a bail the caller runs that
+whole step in Python, which stays the behavior authority: encrypted and
+recovered-mode documents, xref streams, compressed objects, an indirect
+/Length and any input the C code is not byte-certain about take the
+Python path. A CMap with usecmap or cid sections bails to the Python
+parse; a run goes to Interpreter._decode for a Type0 font without
+ToUnicode (CJK/CID tables), 3- or 4-byte ToUnicode codes, composite
+/Widths or CID width tables, no font, or a decode that meets
+decode_text's acceptance gate or a sanitize trigger.
 
 This is the same deploy-anywhere story a 1000-executor cluster needs: the
 source rides with the package (``--py-files``), each executor compiles

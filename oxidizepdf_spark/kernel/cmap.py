@@ -10,11 +10,12 @@ Reimplements (in-UDF, parsed once per font per document):
   then codespace-gated Identity passthrough: cmap.rs:317-389
 - variable-width code walk for decoding: extraction_cmap.rs decode_with_cmap
 
-C fast path (kernel/_cscan.c): the C font build parses ToUnicode streams
-into the same CMap fields (name, wmode, codespace_ranges, ranges, single)
-and bails to ``CMap.parse`` on usecmap and cid sections; the C code table
-decodes runs through CMaps whose codes are 1 or 2 bytes and leaves 3- and
-4-byte codes, usecmap parents and predefined CMaps to ``decode_with_cmap``.
+C fast path (kernel/_cscan.c): ``CMap.parse`` runs as ``parse_cmap``,
+which tokenizes and parses into the same CMap fields (name, wmode,
+codespace_ranges, ranges, single) and bails to the Python parse below on
+usecmap and cid sections; the C code table decodes runs through CMaps
+whose codes are 1 or 2 bytes and leaves 3- and 4-byte codes, usecmap
+parents and predefined CMaps to ``decode_with_cmap``.
 """
 
 from __future__ import annotations
@@ -176,6 +177,11 @@ class CMap:
 
     @classmethod
     def parse(cls, data: bytes) -> "CMap":
+        ck = _content._CSCAN
+        if ck is not None and cls is CMap:
+            cmap = ck.parse_cmap(data)
+            if cmap is not ck.BAIL:
+                return cmap
         cmap = cls()
         tokens = tokenize_cmap(data)
         i = 0
@@ -397,3 +403,8 @@ def decode_with_cmap(text: bytes, cmap: CMap) -> str:
                 continue
             i += 1
     return "".join(out)
+
+
+# last: content.py's C-kernel load imports this module for setup_fonts,
+# so the definitions above must exist before content runs
+from . import content as _content  # noqa: E402

@@ -2093,15 +2093,12 @@ def _load_cscan():
             _objmod.Ref, _objmod._NAME_MEMO, _objmod.Lexer._decode_name_bytes,
             _objmod.Stream,
         )
-        # fonts and cold run decode (page_fonts, font_info, the per-font
-        # code table behind run_page's memo misses)
-        from . import afm_widths as _afm, cmap as _cmap, encodings as _enc
-        from . import fonts as _fonts
+        # CMap parse and cold run decode (parse_cmap, the per-font code
+        # table behind run_page's memo misses)
+        from . import cmap as _cmap, encodings as _enc
 
         mod.setup_fonts(
-            _fonts.FontInfo, _cmap.CMap, _enc.glyph_name_to_unicode,
-            _fonts._stream_bytes, _afm.standard14_widths,
-            _fonts.extract_font_info,
+            _cmap.CMap, _enc.glyph_name_to_unicode,
             "".join(_enc.decode_winansi_byte(b) for b in range(256)),
             "".join(_enc.decode_macroman_byte(b) for b in range(256)),
         )

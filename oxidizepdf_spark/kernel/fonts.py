@@ -15,17 +15,15 @@ GB1/Japan1/Korea1 tables are bundled (kernel/data/, derived from Adobe's
 BSD CMap resources × Python codecs); embedded /Encoding CMap streams and
 usecmap *-UCS2 parents are supported.
 
-C fast path (kernel/_cscan.c, see cbuild.py): ``extract_page_fonts`` runs
-as ``page_fonts`` and builds FontInfo natively (``font_info``), calling
-``extract_font_info`` below for Type3 fonts, embedded /Encoding CMap
-streams, ToUnicode CMaps with usecmap or cid sections and embedded
-FontFile* width read-back. A run the interpreter's memo misses is decoded
-and measured through a per-font code table (FontInfo._code_table: per-code
-Unicode and width / 1000); ``decode_text`` and
-``calculate_text_width_from_codes`` stay the authority and decode every
-run the table declines: Type0 fonts without ToUnicode, 3- or 4-byte
-ToUnicode codes, composite /Widths or CID width tables, no font, and any
-decode that meets the acceptance gate or a sanitize trigger.
+C fast path (kernel/_cscan.c, see cbuild.py): a run the interpreter's
+memo misses is decoded and measured through a per-font code table
+(FontInfo._code_table: per-code Unicode and width / 1000);
+``decode_text`` and ``calculate_text_width_from_codes`` stay the authority
+and decode every run the table declines: Type0 fonts without ToUnicode,
+3- or 4-byte ToUnicode codes, composite /Widths or CID width tables, no
+font, and any decode that meets the acceptance gate or a sanitize
+trigger. FontInfo is built here, with ToUnicode streams parsed by the C
+``parse_cmap`` (see cmap.py).
 """
 
 from __future__ import annotations
@@ -348,17 +346,7 @@ def _parse_differences(diffs: list) -> dict[int, str]:
 def extract_page_fonts(resources: dict, reader) -> dict[str, FontInfo]:
     """Per-page /Font dict → {resource_name: FontInfo}
     (extraction.rs extract_font_resources:1670-1763). The per-ref object
-    cache lives in ``reader._cache`` so shared font objects parse once.
-
-    Fast path: the C step (kernel/_cscan.c page_fonts) runs this loop and
-    builds each FontInfo natively, calling ``extract_font_info`` for the
-    fonts it bails on (see the module docstring); a BAIL for the whole
-    step runs the code below."""
-    ck = _content._CSCAN
-    if ck is not None:
-        fonts = ck.page_fonts(reader, resources)
-        if fonts is not ck.BAIL:
-            return fonts
+    cache lives in ``reader._cache`` so shared font objects parse once."""
     fonts: dict[str, FontInfo] = {}
     font_res = resources.get("Font")
     if isinstance(font_res, Ref):
@@ -390,15 +378,6 @@ def extract_page_fonts(resources: dict, reader) -> dict[str, FontInfo]:
 
 
 _FI_MISS = object()
-
-
-def _stream_bytes(stream: Stream, reader) -> bytes | None:
-    """A filtered ToUnicode stream's bytes for the C font build, or None
-    where extract_font_info's try/except drops the CMap."""
-    try:
-        return stream.decode(resolve=reader.resolve)
-    except Exception:
-        return None
 
 
 # ---------------------------------------------------------------------------
@@ -741,8 +720,3 @@ def _calc_width_chars(decoded: str, font_size: float, info: FontInfo) -> float:
         return total
     # reference falls through to 0.5em per decoded char for composite
     return len(decoded) * font_size * 0.5
-
-
-# last: content.py's C-kernel load imports this module for setup_fonts,
-# so the definitions above must exist before content runs
-from . import content as _content  # noqa: E402

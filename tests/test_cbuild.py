@@ -27,7 +27,7 @@ def test_cscan_builds_with_toolchain():
         or "no failure sentinel: transient build error or import failure")
     for entry in ("xref_chain", "parse_xref_section", "get_object",
                   "flatten_pages", "page_content", "parse_indirect",
-                  "run_page", "page_fonts", "font_info"):
+                  "run_page", "parse_cmap"):
         assert hasattr(content._CSCAN, entry), entry
 
 

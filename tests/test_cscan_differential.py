@@ -8,6 +8,8 @@ can't build the extension (the engine then runs pure Python anyway)."""
 
 from __future__ import annotations
 
+import sys
+
 import pytest
 
 from oxidizepdf_spark.kernel import content as C
@@ -1149,7 +1151,7 @@ def test_skeleton_fast_path_taken():
         assert ck.get_object(rdr, num, 0) is ck.BAIL, label
 
 
-# -- fonts and text decode: page_fonts, font_info, the per-font code table ---
+# -- fonts and text decode: parse_cmap, the per-font code table ------------
 
 
 def _num(v):
@@ -1266,8 +1268,9 @@ _CMAP_2BYTE = b"""/CIDInit /ProcSet findresource begin
 1 begincodespacerange <0000> <FFFF> endcodespacerange
 4 beginbfchar <0003> <0020> <0011> <D83DDE00> <0048> <0048>
 <0012> <D800> endbfchar
-4 beginbfrange <0024> <0026> [<0041> <00420043> <>]
+5 beginbfrange <0024> <0026> [<0041> <00420043> <>]
 <00FE> <0101> <FFFE> <0040> <0042> <0061> <0069> <0069> <E282AC>
+<01FE> <0201> [<0050> <0051> <0052> <0053>]
 endbfrange
 endcmap CMapName currentdict /CMap defineresource pop end end"""
 
@@ -1440,11 +1443,16 @@ def test_differential_fonts_mutations():
 
 
 def test_font_fast_path_taken(monkeypatch):
-    """The corpus's Helvetica, ToUnicode Type1 and Identity-H fonts build
-    in C and decode every run natively (no Python _decode call); Type3
-    and a CJK Type0 font bail to Python."""
+    """The corpus's Helvetica, ToUnicode Type1 and Identity-H fonts decode
+    every run natively (no Python _decode call), and Type3 and a CJK
+    Type0 font bail to Python; a ToUnicode stream parses in C, a usecmap
+    ToUnicode and an embedded encoding CMap (cid sections) bail to the
+    Python CMap.parse."""
     from oxidizepdf_spark.corpus import all_cases
+    from oxidizepdf_spark.kernel.cmap import tokenize_cmap
     from oxidizepdf_spark.kernel.extract import extract_pdf_bytes
+    from oxidizepdf_spark.kernel.fonts import extract_page_fonts
+    from oxidizepdf_spark.kernel.pages import flatten_page_tree
     from oxidizepdf_spark.kernel.reader import PdfReader
     from oxidizepdf_spark.kernel.textstate import Interpreter
 
@@ -1467,14 +1475,33 @@ def test_font_fast_path_taken(monkeypatch):
         calls.clear()
         extract_pdf_bytes(cases[label])
         assert calls, label
-    for label in ("type3", "type0_encoding_stream", "tounicode_usecmap",
-                  "fontfile_widths"):
+    # which CMaps the Python parser reads (its tokenizer runs under the
+    # C parse_cmap's bails; seen through the profiler, since fonts.py
+    # calls CMap.parse directly)
+    py_parsed = []
+
+    def profile(frame, event, _arg):
+        if event == "call" and frame.f_code is tokenize_cmap.__code__:
+            py_parsed.append(frame.f_locals["data"])
+
+    def fonts_of(label):
         rdr = PdfReader(cases[label])
-        assert ck.font_info(rdr, rdr.get_object(5)) is ck.BAIL, label
-    rdr = PdfReader(cases["identity_h_tounicode"])
-    fi = ck.font_info(rdr, rdr.get_object(5))
+        py_parsed.clear()
+        sys.setprofile(profile)
+        try:
+            return extract_page_fonts(flatten_page_tree(rdr)[0].resources,
+                                      rdr)
+        finally:
+            sys.setprofile(None)
+
+    for label in ("tounicode_usecmap", "type0_encoding_stream"):
+        fonts_of(label)
+        assert len(py_parsed) == 1, label
+        assert ck.parse_cmap(py_parsed[0]) is ck.BAIL, label
+    fi = fonts_of("identity_h_tounicode")["F1"]
+    assert py_parsed == []
     assert fi.to_unicode.name == "Test-UCS" and fi.to_unicode.wmode == 1
-    assert fi.descendant_font.cid_default_width == 900.0
+    assert ck.parse_cmap(bytearray(_CMAP_2BYTE)) is ck.BAIL
 
 
 def test_type0_self_descendant_extracts():

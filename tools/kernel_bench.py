@@ -3,15 +3,15 @@
 ``--trace 1`` uses (``perfbench/kernel_replay.replay``), printed as one
 JSON object of per-layer seconds and counts.
 
-Usage: python tools/kernel_bench.py [--seed 90210] [--sample 1500]
-                                    [--reps 3] [--fixtures]
+Usage: python tools/kernel_bench.py [--seed 90210] [--reps 3]
 
-The replay draws ``--sample`` documents from the seeded 16,000-document
-``extract_mixed`` corpus. With ``--reps`` above 1, each layer reports its
-best repetition (a busy host swings single runs by ±30%; never run Spark
-alongside). ``--fixtures`` adds best-of-reps timings of the two
-real-document fixtures (the 44-page Cold_Email book, the 38-page Higgs
-paper), default and layout mode, for each fixture file that exists.
+The replay draws 1,500 documents from the seeded 16,000-document
+``extract_mixed`` corpus. With ``--reps`` above 1, the layers reported are
+those of the repetition with the smallest total kernel time, so every
+figure comes from one replay (a busy host swings single runs by ±30%; never
+run Spark alongside). For each real-document fixture file that exists (the
+44-page Cold_Email book, the 38-page Higgs paper), best-of-reps timings in
+default and layout mode are added.
 """
 
 from __future__ import annotations
@@ -27,11 +27,13 @@ sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
 N_DOCS = 16000  # extract_mixed's corpus size
-FIXTURES = {
-    "cold_email": "/root/reference/test-pdfs/Cold_Email_Hacks.pdf",
-    "higgs": "/root/reference/oxidize-pdf-core/tests/fixtures/"
-             "issue_272_higgs_arxiv_1207_7214.pdf",
-}
+SAMPLE = 1500   # documents replayed per repetition
+COLD = "/root/reference/test-pdfs/Cold_Email_Hacks.pdf"
+HIGGS = (
+    "/root/reference/oxidize-pdf-core/tests/fixtures/"
+    "issue_272_higgs_arxiv_1207_7214.pdf"
+)
+FIXTURES = {"cold_email": COLD, "higgs": HIGGS}
 
 
 def best_of(fn, reps: int) -> float:
@@ -44,21 +46,21 @@ def best_of(fn, reps: int) -> float:
     return best
 
 
-def replay_layers(seed: int, sample: int, reps: int) -> dict:
-    """Per-layer seconds (best repetition) and counts of the replay."""
+def kernel_total(r: dict) -> float:
+    return sum(v for k, v in r.items()
+               if k.startswith("kernel.") and k.endswith("_s"))
+
+
+def replay_layers(seed: int, reps: int) -> dict:
+    """Per-layer seconds and counts of the replay repetition with the
+    smallest total kernel time."""
     import kernel_replay
 
-    out: dict = {}
-    for _ in range(max(reps, 1)):
-        r = kernel_replay.replay(seed, N_DOCS, sample)
-        for k, v in r.items():
-            if k.endswith("_s") and k in out:
-                out[k] = min(out[k], v)
-            else:
-                out[k] = v
-    out["kernel_s"] = sum(v for k, v in out.items()
-                          if k.startswith("kernel.") and k.endswith("_s"))
-    return out
+    runs = [kernel_replay.replay(seed, N_DOCS, SAMPLE)
+            for _ in range(max(reps, 1))]
+    best = dict(min(runs, key=kernel_total))
+    best["kernel_s"] = kernel_total(best)
+    return best
 
 
 def fixture_legs(reps: int) -> dict:
@@ -80,17 +82,14 @@ def fixture_legs(reps: int) -> dict:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--seed", type=int, default=90210)
-    ap.add_argument("--sample", type=int, default=1500)
     ap.add_argument("--reps", type=int, default=1)
-    ap.add_argument("--fixtures", action="store_true")
     args = ap.parse_args()
 
     from oxidizepdf_spark.kernel import content
 
     out = {"c_fast_path": int(content._CSCAN is not None)}
-    out.update(replay_layers(args.seed, args.sample, args.reps))
-    if args.fixtures:
-        out.update(fixture_legs(args.reps))
+    out.update(replay_layers(args.seed, args.reps))
+    out.update(fixture_legs(args.reps))
     print(json.dumps({k: round(v, 5) if isinstance(v, float) else v
                       for k, v in out.items()}))
 
