@@ -1,207 +1,11 @@
-#!/usr/bin/env python3
-"""Benchmark harness (driver contract + north_rule scaling evidence).
+"""Host speed probe for the benchmark.
 
-Default mode: runs the headline extraction pipeline plus representative
-training-data queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
-line::
-
-    {"metric": "extract_pipeline_sec", "value": <sec>, "unit": "sec",
-     "queries": {...per-query sec...}, "sf": <sf>,
-     "docs_per_sec": <headline throughput>,
-     "scaling": {...only with --scaling...}}
-
-``--scaling`` additionally runs the identical extraction job at two
-parallelism levels (local[N] and local[4N], N = cpus/4) on the identical
-input and reports throughput at both plus
-``efficiency = T(4N) / (4 * T(N))`` — the sandbox evidence for the
-north_rule's two-cluster-size criterion (no real cluster here).
-
-The bench corpus is synthesized deterministically *inside Spark executors*
-(one task generates any slice by index — corpus.gen_doc is keyed by
-(seed, i)), so generation itself scales and the driver never materializes
-the corpus.
+``perfbench/common.host_window`` imports ``_spin`` and times it before and
+after every run: a pure-Python register loop whose Mops/s says how busy the
+host is, so a noisy set of runs explains itself. Throughput, the query
+suite and N-vs-4N scaling are measured by ``perfbench/run.py`` and
+``perfbench/summary.py``.
 """
-
-from __future__ import annotations
-
-import argparse
-import json
-import os
-import subprocess
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-
-def synth_corpus_df(spark, n_docs: int, seed: int = 42, slices: int | None = None):
-    """Distributed deterministic corpus: spark.range → per-index gen_doc."""
-    from oxidizepdf_spark.pipeline import map_rows
-    from oxidizepdf_spark.table_io import DOCS_SCHEMA
-
-    def make_row():
-        from oxidizepdf_spark.corpus import all_cases, gen_doc
-
-        cases = all_cases()
-
-        def row(i):
-            in_row, _ = gen_doc(i, seed, cases)
-            yield in_row["doc_id"], in_row["part_id"], in_row["spans"]
-
-        return row
-
-    rng = spark.range(n_docs, numPartitions=slices or spark.sparkContext.defaultParallelism)
-    return map_rows(rng, make_row, DOCS_SCHEMA)
-
-
-def stage_corpus(spark, n_docs: int, seed: int = 42) -> str:
-    """Materialize the synthetic corpus to parquet once (untimed setup):
-    the timed job then measures the production shape — columnar scan →
-    salted repartition → Arrow exchange → extraction."""
-    import tempfile
-
-    path = os.path.join(
-        tempfile.gettempdir(), f"oxspark_bench_corpus_v3_{n_docs}_{seed}"
-    )
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        # 128 evenly-sized files: parquet row groups don't split below file
-        # granularity at this corpus size, so file count IS the max scan
-        # parallelism — 128 gives 4 waves at 32 cores / 16 at 8 cores and
-        # keeps task sizes balanced regardless of session core count
-        synth_corpus_df(spark, n_docs, seed).repartition(128).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
-
-
-def run_extract_job(
-    spark,
-    n_docs: int,
-    seed: int = 42,
-    staged: bool = True,
-    salt: bool = False,
-    waves: int | None = None,
-) -> dict:
-    """The headline job: corpus scan → full extraction → aggregate.
-
-    The staged corpus is written bucketed (partitionBy part_id), so the
-    production-shaped run skips the salting shuffle (salt=False); bench
-    also times the salted path separately (extras['salted_sec']).
-
-    Split sizing (``waves``): None = one task per staged file (128).
-    Per-task overhead is ~200ms of MACHINE time regardless of core
-    count (measured ~8ms/task wall at 32 cores, ~90ms at 2 —
-    tools/profile_tasks.py + the pinned-leg A/B), so with a FIXED task
-    count it scales exactly like compute across core counts and the
-    scaling pairs' ratios stay overhead-neutral — the per-file default
-    is the fair configuration for the N-vs-4N legs and balances best on
-    large corpora (whole waves). The small headline corpus, whose
-    per-task compute would drop to ~0.1s, passes ``waves=1`` instead:
-    one even wave of cores-sized tasks (measured 1.84s → 1.26s on the
-    50k corpus), which is also closer to the production shape of
-    multi-second 128-512MB-split tasks."""
-    from pyspark.sql import functions as F
-
-    from oxidizepdf_spark.pipeline import extract_spans
-
-    if staged:
-        path = stage_corpus(spark, n_docs, seed)
-        files = list(__import__("pathlib").Path(path).rglob("*.parquet"))
-        total = sum(f.stat().st_size for f in files)
-        if waves:
-            par = spark.sparkContext.defaultParallelism
-            per = max(total // (par * waves), 1) + (1 << 13)
-        else:
-            # one task per file: cap the split at the file size so
-            # bin-packing never merges files into under-parallel scans
-            per = max(total // max(len(files), 1), 1)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(per))
-        spark.conf.set("spark.sql.files.openCostInBytes", "0")
-        docs = spark.read.parquet(path)
-    else:
-        docs = synth_corpus_df(spark, n_docs, seed)
-    t0 = time.perf_counter()
-    results = extract_spans(docs, salt=salt)
-    agg = results.agg(
-        F.count("*").alias("docs"),
-        F.sum("n_spans").alias("spans"),
-        F.sum(F.col("ok").cast("long")).alias("ok"),
-        F.sum("bytes_in").alias("bytes_in"),
-    ).collect()[0]
-    elapsed = time.perf_counter() - t0
-    return {
-        "sec": elapsed,
-        "docs": agg["docs"],
-        "docs_per_sec": agg["docs"] / elapsed if elapsed > 0 else 0.0,
-        "spans": agg["spans"],
-        "ok": agg["ok"],
-        "bytes_in": agg["bytes_in"],
-    }
-
-
-def _pinned_leg(
-    cores: int, n_docs: int, seed: int, warm: int = 2, timed: int = 3
-) -> dict | None:
-    """Run one scaling leg in a subprocess whose CPU affinity is pinned to
-    exactly ``cores`` CPUs (taskset). An unpinned local[N] session on a
-    32-core host lets the JVM's GC/IO/Arrow helper threads and the Python
-    workers spill onto the 24 idle cores, inflating the N leg's throughput
-    and deflating measured efficiency — pinning makes 'N cores' mean N
-    cores, which is the faithful simulation of an N-core cluster node.
-    Returns the leg dict, or None if the subprocess fails (caller falls
-    back to in-process legs)."""
-    avail = sorted(os.sched_getaffinity(0))
-    if len(avail) < cores:
-        return None
-    cpu_list = ",".join(str(c) for c in avail[:cores])
-    cmd = [
-        "taskset", "-c", cpu_list,
-        sys.executable, os.path.abspath(__file__),
-        "--scale-leg", str(cores), "--n-docs", str(n_docs),
-        "--leg-seed", str(seed),
-        "--leg-warm", str(warm), "--leg-timed", str(timed),
-    ]
-    try:
-        proc = subprocess.run(
-            cmd, capture_output=True, text=True, timeout=900, check=False
-        )
-        for line in reversed(proc.stdout.strip().splitlines()):
-            line = line.strip()
-            if line.startswith("{"):
-                return json.loads(line)
-    except (OSError, subprocess.TimeoutExpired, json.JSONDecodeError):
-        pass
-    return None
-
-
-def _run_scale_leg(cores: int, n_docs: int, seed: int, warm: int, timed: int) -> None:
-    """--scale-leg entry: ``warm`` warm-up runs (fresh-JVM JIT needs 2+
-    full passes to converge — measured 13.2k → 30k docs/s over runs 0-3 at
-    32 cores) then best-of-``timed``, print JSON."""
-    from oxidizepdf_spark.table_io import get_spark
-
-    s = get_spark(
-        app_name=f"bench-scale-{cores}",
-        master=f"local[{cores}]",
-        shuffle_partitions=cores,
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    for _ in range(warm):
-        run_extract_job(s, n_docs, seed=seed)
-    best = None
-    for _ in range(timed):
-        r = run_extract_job(s, n_docs, seed=seed)
-        if best is None or r["docs_per_sec"] > best["docs_per_sec"]:
-            best = r
-    s.stop()
-    print(json.dumps({
-        "cores": cores,
-        "sec": round(best["sec"], 4),
-        "docs_per_sec": round(best["docs_per_sec"], 2),
-        "pinned": True,
-    }))
 
 
 def _spin(n: int) -> int:
@@ -209,475 +13,3 @@ def _spin(n: int) -> int:
     for i in range(n):
         x += i * i
     return x
-
-
-def _host_spin_ceiling(n_small: int, n_big: int, n: int = 4_000_000) -> float:
-    """The host's OWN small→big scaling on a pure register-arithmetic spin
-    loop — zero Spark, zero memory pressure. On this sandbox the per-core
-    spin throughput DROPS as concurrency rises (15.4 Mops at 1 proc →
-    13.9 at 8 → 10.4 at 32: host-level frequency/steal throttling), so
-    e.g. 8→32 tops out at ~0.74 for ANY job. This number is the physical
-    ceiling the pipeline's raw efficiency must be read against."""
-    import multiprocessing as mp
-
-    def measure(procs: int) -> float:
-        with mp.Pool(procs) as p:
-            p.map(_spin, [n // 10] * procs)  # warm
-            t0 = time.perf_counter()
-            p.map(_spin, [n] * procs)
-            return procs * n / (time.perf_counter() - t0)
-
-    small = max(measure(n_small), measure(n_small))
-    big = max(measure(n_big), measure(n_big))
-    return big / ((n_big / n_small) * small)
-
-
-def _host_window(full_procs: int, n: int = 4_000_000) -> dict:
-    """Self-documenting host-window probe (VERDICT r4 'what's wrong' #2):
-    measure the host's raw spin throughput at 1 proc and at full width RIGHT
-    NOW and report it beside the headline, against the quiet-window
-    reference measured during development (BENCH.md round-3/4 logs:
-    ~15.4 Mops/proc at 1 proc, ~10.4 at 32). A recorded artifact whose
-    ``index_1p`` reads ~0.8 was taken in a degraded window — its headline
-    seconds are host noise, not a code regression, and the artifact now
-    says so itself."""
-    import multiprocessing as mp
-
-    QUIET_MOPS_1P = 15.4   # Mops/proc, 1 proc, quiet window (BENCH.md r3)
-    QUIET_MOPS_FULL = 10.4  # Mops/proc, 32 procs, quiet window
-
-    def measure(procs: int) -> float:
-        with mp.Pool(procs) as p:
-            p.map(_spin, [n // 10] * procs)  # warm
-            t0 = time.perf_counter()
-            p.map(_spin, [n] * procs)
-            return procs * n / (time.perf_counter() - t0) / 1e6 / procs
-
-    one = max(measure(1), measure(1))
-    full = max(measure(full_procs), measure(full_procs))
-    return {
-        "spin_mops_1p": round(one, 2),
-        "spin_mops_full": round(full, 2),
-        "full_procs": full_procs,
-        "quiet_ref_mops_1p": QUIET_MOPS_1P,
-        "quiet_ref_mops_full": QUIET_MOPS_FULL,
-        "index_1p": round(one / QUIET_MOPS_1P, 3),
-        "index_full": round(full / QUIET_MOPS_FULL, 3),
-    }
-
-
-def _machine_scaling_control(n_small: int, n_big: int) -> float:
-    """N-vs-4N throughput ratio for the IDENTICAL per-document kernel run
-    under plain multiprocessing — zero Spark involvement. This isolates the
-    sandbox VM's intrinsic parallel ceiling (memory bandwidth / vCPU
-    contention under N-way Python) from anything the pipeline adds; the
-    pipeline-attributable efficiency is raw_efficiency / this value."""
-    import multiprocessing as mp
-
-    def measure(procs: int, per: int) -> float:
-        with mp.Pool(procs) as p:
-            p.map(_control_work, [(j, 40) for j in range(procs)])  # warm
-            t0 = time.perf_counter()
-            p.map(_control_work, [(j, per) for j in range(procs)])
-            return procs * per / (time.perf_counter() - t0)
-
-    small = max(measure(n_small, 1200), measure(n_small, 1200))
-    big = max(measure(n_big, 1200), measure(n_big, 1200))
-    return big / ((n_big / n_small) * small)
-
-
-def _control_work(args) -> int:
-    seed, count = args
-    from oxidizepdf_spark.corpus import all_cases, gen_doc
-    from oxidizepdf_spark.kernel.extract import extract_document_spans
-
-    cases = all_cases()
-    for i in range(count):
-        in_row, _ = gen_doc(seed * 1_000_000 + i, 7, cases)
-        extract_document_spans(
-            [(s["kind"], s["text"], s["media_ref"]) for s in in_row["spans"]]
-        )
-    return count
-
-
-def main() -> None:
-    from oxidizepdf_spark.table_io import default_cpus
-
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", type=int, default=default_cpus())
-    ap.add_argument("--n-docs", type=int, default=None, help="bench corpus size")
-    ap.add_argument(
-        "--scaling",
-        action=argparse.BooleanOptionalAction,
-        default=True,
-        help="run local[N] vs local[4N] scaling legs (north_rule evidence)",
-    )
-    ap.add_argument("--scale-leg", type=int, default=None, help=argparse.SUPPRESS)
-    ap.add_argument("--leg-seed", type=int, default=7, help=argparse.SUPPRESS)
-    ap.add_argument("--leg-warm", type=int, default=2, help=argparse.SUPPRESS)
-    ap.add_argument("--leg-timed", type=int, default=3, help=argparse.SUPPRESS)
-    args = ap.parse_args()
-
-    if args.scale_leg:
-        _run_scale_leg(
-            args.scale_leg, args.n_docs or 1000, args.leg_seed,
-            args.leg_warm, args.leg_timed,
-        )
-        return
-
-    sf = args.sf_dir.rstrip("/").split("sf")[-1]
-    try:
-        sf_num = float(sf)
-    except ValueError:
-        sf_num = 0.1
-    # headline corpus sized so the 32-core leg runs seconds of kernel work
-    # (fixed scheduler/py-worker overheads otherwise dominate the number)
-    n_docs = args.n_docs or max(2000, int(500_000 * sf_num))
-
-    from oxidizepdf_spark import queries as Q
-    from oxidizepdf_spark.table_io import get_spark
-
-    timings: dict[str, float] = {}
-    extras: dict = {}
-
-    spark = get_spark(master=f"local[{args.cpus}]", shuffle_partitions=args.cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # headline: full extraction pipeline on the synthetic interleaved corpus
-    # (identical warm-up run first: JVM + all py-workers + codegen amortized,
-    # matching a long-running production job's steady state). Best-of-3
-    # timed runs: single measurements on this sandbox swing ±30% with host
-    # contention (r2 recorded 5.66s for a job that runs 2.4s in a quiet
-    # window) — the fastest window is the least-contended measurement of
-    # the pipeline itself.
-    # the headline agg reduces ~36 map outputs to 9 values — 32 reduce
-    # partitions are pure scheduling overhead there (A/B: 1.43s @32 vs
-    # 1.29s @4 same window); the query suite gets the full width back
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    run_extract_job(spark, n_docs, seed=42, waves=1)
-    run_extract_job(spark, n_docs, seed=42, waves=1)  # 2nd warm: JIT convergence
-    # best-of-6 with an early stop once a run lands within 3% of the best
-    # twice (the window is healthy — more runs just burn the budget); a
-    # degraded window keeps sampling all 6 legs to straddle it.
-    head = None
-    near_best = 0
-    head_attempts: list[float] = []
-    for _ in range(6):
-        r = run_extract_job(spark, n_docs, seed=42, waves=1)
-        head_attempts.append(round(r["sec"], 3))
-        if head is None or r["sec"] < head["sec"]:
-            head = r
-            near_best = 0  # 'within 3%' hits must refer to the final best
-        elif r["sec"] < head["sec"] * 1.03:
-            near_best += 1
-            if near_best >= 2:
-                break
-    timings["extract_pipeline"] = round(head["sec"], 4)
-    # every attempt goes into the recorded artifact (VERDICT r8 #2): the
-    # cross-round headline comparison reads the BAND, not one lottery draw
-    extras["headline_attempts_sec"] = head_attempts
-    extras["docs_per_sec"] = round(head["docs_per_sec"], 2)
-    extras["extract_docs"] = head["docs"]
-    extras["extract_spans"] = int(head["spans"])
-    extras["extract_ok_rate"] = round(head["ok"] / max(head["docs"], 1), 5)
-    extras["extract_mb_in"] = round(head["bytes_in"] / 1e6, 1)
-    # restore full reduce width BEFORE the salted leg: salt_by_size
-    # derives its repartition count from spark.sql.shuffle.partitions
-    spark.conf.set("spark.sql.shuffle.partitions", str(args.cpus))
-    salted = None
-    for _ in range(2):
-        r = run_extract_job(spark, n_docs, seed=42, salt=True, waves=1)
-        if salted is None or r["sec"] < salted["sec"]:
-            salted = r
-    extras["salted_sec"] = round(salted["sec"], 4)
-    extras["salted_docs_per_sec"] = round(salted["docs_per_sec"], 2)
-    # measure the host window AFTER the headline (Spark idle between query
-    # legs) so the recorded artifact carries its own degraded-window evidence
-    extras["host_window"] = _host_window(args.cpus)
-
-    # The headline job sized maxPartitionBytes for its staged corpus;
-    # restore the defaults so the suite's scans split (and the per-doc
-    # queries' under-parallel rebalance guard sees honest conditions)
-    # rather than inheriting the extract job's tiny splits.
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(128 << 20))
-    spark.conf.set("spark.sql.files.openCostInBytes", str(4 << 20))
-
-    # representative query suite at the sf dir (oracle-checked elsewhere)
-    suite = {
-        "pdf_roundtrip_flate": Q._pdf_roundtrip("flate"),
-        "pdf_roundtrip_xrefstream": Q._pdf_roundtrip("xrefstream"),
-        "dedup_exact": Q.q_dedup_exact,
-        "dedup_minhash_lsh": Q.q_dedup_minhash_lsh,
-        "dedup_ngram_jaccard": Q.q_dedup_ngram_jaccard,
-        "dedup_simhash": Q.q_dedup_simhash,
-        "ann_cosine_topk": Q.q_ann_cosine_topk,
-        "ann_ivf_topk": Q.q_ann_ivf_topk,
-        "text_token_count": Q.q_text_token_count,
-        "text_quality_score": Q.q_text_quality_score,
-        "doc_fingerprint": Q.q_doc_fingerprint,
-        # round-3 additions (representative new-op coverage)
-        "ann_ivf_kmeans_topk": Q.q_ann_ivf_kmeans_topk,
-        "text_line_dedup": Q.q_text_line_dedup,
-        "corpus_pack_sequences": Q.q_corpus_pack_sequences,
-        # round-5 addition (Lee et al. exact-substring stage)
-        "text_exact_substring_dedup": Q.q_text_exact_substring_dedup,
-        # round-6: byte-level suffix-array variant (pytest-pinned; not
-        # in the 50-row oracle registry — see its docstring)
-        "text_exact_substring_bytes": Q.q_text_exact_substring_bytes,
-        # round-7: ai-export flagship (render + layout-extract + classify
-        # + table-detect + compose per doc)
-        "pdf_export_markdown": Q.q_pdf_export_markdown,
-        # round-8: Gopher repetition filter (oracle-registry row since r9)
-        "text_repetition_quality": Q.q_text_repetition_quality,
-        # round-9: 6-codec image decode (oracle-registry row since r9)
-        "pdf_decode_image_codecs": Q.q_pdf_decode_image_codecs,
-    }
-    for name, fn in suite.items():
-        # warm: codegen compile + page cache + persisted relations (the
-        # timed run reuses them by logical-plan match — steady state of a
-        # repeatedly-issued query, consistent across rounds)
-        fn(spark, args.sf_dir).count()
-        # best-of-2: this sandbox's vCPU contention swings single
-        # measurements ±30%, which would read as phantom per-query
-        # regressions between rounds; the faster window is the
-        # least-contended measurement of the query itself
-        best = None
-        n = 0
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df = fn(spark, args.sf_dir)
-            n = df.count()
-            dt = time.perf_counter() - t0
-            best = dt if best is None or dt < best else best
-        timings[name] = round(best, 4)
-        extras.setdefault("rows", {})[name] = n
-        # long-lived session hygiene: drop relations the query builders
-        # cached (persist leaks otherwise accumulate across the suite)
-        Q.release_persisted()
-
-    n_small = max(4, args.cpus // 4)
-    scale_docs = max(1000, n_docs * 3)  # 4N leg must be compute-bound
-    # The saturated 8→32 pair gets its OWN corpus, scaled with core count
-    # (VERDICT r5 #1): at 150k docs the 32-core leg finishes in ~3s and
-    # measures Spark's per-job fixed costs (scan setup, scheduling, Arrow
-    # worker spin-up), not scaling — r5 recorded 0.618 on a job whose
-    # soak-scale twin runs at 1.0+. 6x the corpus keeps BOTH saturated
-    # legs well into the compute-bound regime the 2→8 pair runs in
-    # (validated: at 4x the 32-core leg ran 9.3s and normalized
-    # efficiency recovered 0.618 → 0.815; 6x adds margin).
-    sat_docs = scale_docs * 6
-    if args.scaling:
-        # pre-stage the scaling corpora with the full-width session (untimed
-        # setup; the pinned N-core legs shouldn't pay the one-off writes)
-        stage_corpus(spark, scale_docs, seed=7)
-        stage_corpus(spark, sat_docs, seed=7)
-    spark.stop()
-
-    if args.scaling:
-        def run_leg(k: int, warm: int, timed: int, docs: int) -> dict:
-            r = _pinned_leg(k, docs, seed=7, warm=warm, timed=timed)
-            if r is None:
-                # fallback: in-process unpinned leg (taskset unavailable)
-                s = get_spark(
-                    app_name=f"bench-scale-{k}",
-                    master=f"local[{k}]",
-                    shuffle_partitions=k,
-                )
-                s.sparkContext.setLogLevel("ERROR")
-                for _ in range(warm):
-                    run_extract_job(s, docs, seed=7)
-                best = None
-                for _ in range(timed):
-                    rr = run_extract_job(s, docs, seed=7)
-                    if best is None or rr["docs_per_sec"] > best["docs_per_sec"]:
-                        best = rr
-                s.stop()
-                r = {
-                    "cores": k,
-                    "sec": round(best["sec"], 4),
-                    "docs_per_sec": round(best["docs_per_sec"], 2),
-                    "pinned": False,
-                }
-            return r
-
-        def pair_eff(small: dict, big: dict) -> float:
-            return big["docs_per_sec"] / (
-                (big["cores"] / small["cores"]) * small["docs_per_sec"]
-            )
-
-        # PRIMARY pair: pinned 2 → 8 cores. The north rule's N vs 4N
-        # EXECUTORS means 4x independent hardware on a real cluster; on a
-        # single sandbox VM, concurrency levels near full saturation mix
-        # the engine's scaling with the HOST's own throttling (the spin
-        # ceiling below measures ~0.74 for 8→32 — unattainable by any
-        # job). 2→8 stays in the host's linear region (spin ~0.92), so it
-        # isolates what the rule actually asks: does the PIPELINE scale
-        # when you quadruple its cores? The saturated 8→32 pair is
-        # reported alongside, with the measured host ceiling for context.
-        # Like the saturated pair below, the primary pair gets one
-        # bounded retry: the 8-core leg is documented to swing 13.8-18.6k
-        # docs/s with host windows, and a single bad window on one leg
-        # poisons the ratio even when the post-pair spin ceiling reads
-        # quiet (r6 recorded 0.67 raw under a 0.94 ceiling while three
-        # hand runs the same day read 0.90/1.01/1.00). Both attempts'
-        # efficiencies are recorded; the better pair is reported.
-        best_primary = None
-        primary_attempts = []
-        for _attempt in range(2):
-            leg2 = run_leg(2, warm=1, timed=2, docs=scale_docs)  # long; JIT
-            leg8 = run_leg(8, warm=2, timed=3, docs=scale_docs)  # converges
-            eff_try = pair_eff(leg2, leg8)
-            primary_attempts.append(round(eff_try, 4))
-            if best_primary is None or eff_try > best_primary[2]:
-                best_primary = (leg2, leg8, eff_try)
-            if eff_try >= 0.8:
-                break
-        leg2, leg8, _ = best_primary
-        # saturated pair on its own 6x corpus: both legs stay >=15s so the
-        # ratio measures scaling, not per-job fixed-cost amortization.
-        # The sandbox host's throttle windows are TIME-VARYING: a window
-        # shift between the two legs poisons the ratio (observed: spin
-        # ceiling 0.52 — half the quiet norm — turned an 0.88-normalized
-        # pair into 0.63 twenty minutes later). The measured ceiling
-        # taken right after the legs detects this; one bounded retry of
-        # the whole pair in a degraded window keeps the artifact honest
-        # without cherry-picking (the ceiling is recorded either way).
-        # best-of-2 by NORMALIZED efficiency: retry both on a degraded
-        # window (ceiling < 0.7 — the r6 case) and on a low reading in a
-        # quiet window (normalized < 0.8 — the 8-core leg alone swings
-        # 13.8-18.6k docs/s across windows, so a single bad leg can
-        # produce 0.75-normalized under a 0.88 ceiling). Both attempts'
-        # normalized efficiencies are recorded either way.
-        # Attempt ranking: a degraded ceiling reading INFLATES the
-        # normalized ratio (raw 0.72 / ceiling 0.53 reads as "1.35"), so
-        # picking by raw normalized would favor exactly the windows the
-        # retry exists to escape. Rank (1) attempts that SATISFY the
-        # north rule (raw >= 0.8, or normalized >= 0.8 under a quiet
-        # ceiling) first, then (2) quiet-ceiling attempts, then the
-        # higher normalized reading among them. One extra bounded
-        # attempt fires only when nothing satisfied the rule yet —
-        # volatile windows (probes here have swung 0.42 -> 1.01 within
-        # minutes) can poison two pairs in a row; every attempt's
-        # reading stays in the artifact regardless.
-        best_sat = None
-        sat_attempts = []
-        sat_attempts_raw = []
-        raw_chase_used = False
-        for _attempt in range(3):
-            leg8_sat = run_leg(8, warm=1, timed=2, docs=sat_docs)
-            leg32 = run_leg(args.cpus, warm=2, timed=3, docs=sat_docs)
-            spin_sat = _host_spin_ceiling(8, args.cpus)
-            raw_try = pair_eff(leg8_sat, leg32)
-            norm_try = raw_try / spin_sat
-            sat_attempts.append(round(norm_try, 4))
-            sat_attempts_raw.append(round(raw_try, 4))
-            satisfied = raw_try >= 0.8 or (spin_sat >= 0.7 and norm_try >= 0.8)
-            # raw-green outranks norm-green: a same-code hand run has
-            # read 0.894 RAW minutes after a 0.691-raw/0.868-norm
-            # artifact, so the recorded attempt should be the strongest
-            # rule-satisfying one available
-            rank = (raw_try >= 0.8, satisfied, spin_sat >= 0.7,
-                    min(norm_try, 1.0), spin_sat)
-            if best_sat is None or rank > best_sat[4]:
-                best_sat = (leg8_sat, leg32, spin_sat, norm_try, rank)
-            if raw_try >= 0.8:
-                break  # fully green — nothing better to chase
-            if satisfied:
-                # norm-green but raw < 0.8: ONE extra bounded attempt
-                # chases the raw-green reading (r9 verdict ask); the
-                # norm-green attempt stays recorded and wins unless the
-                # retry actually does better
-                if raw_chase_used:
-                    break
-                raw_chase_used = True
-                continue
-            # else: rule not satisfied — the remaining budget retries
-        leg8_sat, leg32, spin_sat, _, _ = best_sat
-        eff_primary = pair_eff(leg2, leg8)
-        eff_sat = pair_eff(leg8_sat, leg32)
-        # Pure-CPU spin control (zero Spark, zero memory traffic): the
-        # host's own scaling ceiling at each concurrency pair.
-        spin_primary = _host_spin_ceiling(2, 8)
-        # kernel-workload control (real per-doc work under multiprocessing)
-        machine_eff = _machine_scaling_control(n_small, args.cpus)
-        extras["scaling"] = {
-            "docs": scale_docs,
-            "N": leg2,
-            "4N": leg8,
-            "efficiency": round(eff_primary, 4),
-            "attempts": primary_attempts,
-            "host_spin_ceiling": round(spin_primary, 4),
-            "saturated_pair": {
-                "docs": sat_docs,
-                "N": leg8_sat,
-                "4N": leg32,
-                "efficiency": round(eff_sat, 4),
-                "attempts_normalized": sat_attempts,
-                "attempts_raw": sat_attempts_raw,
-                "host_spin_ceiling": round(spin_sat, 4),
-                "normalized_efficiency": round(eff_sat / spin_sat, 4),
-            },
-            "machine_cpu_efficiency": round(machine_eff, 4),
-            "pipeline_normalized_efficiency": round(eff_sat / machine_eff, 4),
-        }
-
-    out = {
-        "metric": "extract_pipeline_sec",
-        "value": timings["extract_pipeline"],
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf_num,
-    }
-    out.update(extras)
-    # The driver records only the LAST 2000 chars of stdout and json-loads
-    # them (BENCH_r07.json: `parsed: null` — the full record outgrew the
-    # window and its head was cut). stdout therefore carries ONE compact
-    # line (< ~1.5 KB: headline + per-query secs + scaling efficiencies
-    # with every attempt); the full verbose record goes to stderr for hand
-    # runs / BENCH.md.
-    print(json.dumps(out), file=sys.stderr)
-    compact = {
-        "metric": out["metric"],
-        "value": out["value"],
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf_num,
-        "docs_per_sec": extras.get("docs_per_sec"),
-        "headline_attempts": extras.get("headline_attempts_sec"),
-        "salted_dps": extras.get("salted_docs_per_sec"),
-        "window": [
-            extras.get("host_window", {}).get("index_1p"),
-            extras.get("host_window", {}).get("index_full"),
-        ],
-    }
-    sc = extras.get("scaling")
-    if sc:
-        sat = sc["saturated_pair"]
-        compact["scaling"] = {
-            "eff": sc["efficiency"],
-            "attempts": sc["attempts"],
-            "ceiling": sc["host_spin_ceiling"],
-            "N_dps": sc["N"]["docs_per_sec"],
-            "4N_dps": sc["4N"]["docs_per_sec"],
-            "sat_eff": sat["efficiency"],
-            "sat_norm": sat["normalized_efficiency"],
-            "sat_attempts_norm": sat["attempts_normalized"],
-            "sat_attempts_raw": sat["attempts_raw"],
-            "sat_ceiling": sat["host_spin_ceiling"],
-            "sat_N_dps": sat["N"]["docs_per_sec"],
-            "sat_4N_dps": sat["4N"]["docs_per_sec"],
-        }
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1900:  # never let the record outgrow the window again
-        compact["queries"] = {
-            k: v for k, v in sorted(
-                timings.items(), key=lambda kv: -kv[1]
-            )[:10]
-        }
-        line = json.dumps(compact, separators=(",", ":"))
-    print(line)
-
-
-if __name__ == "__main__":
-    main()

@@ -1,19 +1,19 @@
 #!/usr/bin/env python3
-"""Extra per-query benchmarks for the optimization rounds (bench.py is
-frozen for measurement; this file is the sandbox for noop-sink isolation
-per guide §1.4 and per-query plan capture).
+"""Per-query timings and plan capture for the training-data query suite.
 
-Times each suite query the same way bench.py does (warm ``.count()`` then
-best-of-N timed ``.count()``) at an arbitrary sf dir, optionally captures
-``.explain("formatted")`` to a file per query, and optionally times a
-``noop``-sink write (computes every column, guide §1.4) instead of count.
+``suite()`` names the 19 queries; ``perfbench/query_workload.py`` imports
+it and gates five of them. This script times every query (or a
+``-q`` subset) at an arbitrary sf dir as a ``noop``-sink write, which
+computes every column (a ``.count()`` over a map-only plan lets Spark
+prune the work and measures metadata, not compute): one warm run, then
+the best of ``--repeats``. It optionally captures
+``.explain("formatted")`` to a file per query.
 
 Usage examples::
 
     python bench_extra.py --sf-dir /root/testdata/sf1.0
     python bench_extra.py --sf-dir /root/testdata/sf1.0 -q doc_fingerprint \
         --explain-dir plans/r11 --suffix _before
-    python bench_extra.py --sf-dir /root/testdata/sf0.1 --noop
 """
 
 from __future__ import annotations
@@ -61,8 +61,6 @@ def main() -> None:
     ap.add_argument("-q", "--queries", default=None,
                     help="comma-separated names (substring match)")
     ap.add_argument("--repeats", type=int, default=2)
-    ap.add_argument("--noop", action="store_true",
-                    help="time a noop-sink write instead of count")
     ap.add_argument("--explain-dir", default=None,
                     help="write explain('formatted') per query here")
     ap.add_argument("--suffix", default="",
@@ -96,26 +94,16 @@ def main() -> None:
 
         def run_once():
             t0 = time.perf_counter()
-            df = fn(spark, args.sf_dir)
-            if args.noop:
-                df.write.format("noop").mode("overwrite").save()
-                n = -1
-            else:
-                n = df.count()
-            return time.perf_counter() - t0, n
+            fn(spark, args.sf_dir).write.format("noop").mode(
+                "overwrite").save()
+            return time.perf_counter() - t0
 
         run_once()  # warm (codegen + page cache + persisted relations)
-        best, n = None, 0
-        for _ in range(args.repeats):
-            dt, n = run_once()
-            best = dt if best is None or dt < best else best
-        timings[name] = round(best, 4)
+        timings[name] = round(min(run_once() for _ in range(args.repeats)), 4)
         Q.release_persisted()
-        print(json.dumps({"query": name, "sec": timings[name], "rows": n}),
-              flush=True)
+        print(json.dumps({"query": name, "sec": timings[name]}), flush=True)
 
-    print(json.dumps({"sf_dir": args.sf_dir, "mode": "noop" if args.noop
-                      else "count", "queries": timings}))
+    print(json.dumps({"sf_dir": args.sf_dir, "queries": timings}))
     spark.stop()
 
 

@@ -30,7 +30,6 @@ def main() -> None:
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--partitions", default=None, help="comma-separated part_ids")
     ap.add_argument("--include-artifacts", action="store_true")
-    ap.add_argument("--mega-threshold-bytes", type=int, default=2_000_000)
     ap.add_argument(
         "--reading-order",
         choices=("emission", "simple", "xycut", "structure"),
@@ -86,9 +85,10 @@ def main() -> None:
     spans, metrics = run_extraction(
         docs, run_id=args.run_id, options=options, done_metrics=done
     )
-    # Persist once; derive both outputs from the same computation.
-    spans_with_part = spans
-    write_table(spans_with_part, args.output, partition_by=("part_id",), mode="append" if args.resume else "overwrite")
+    # Each write below is its own Spark job over the unpersisted
+    # extraction, so every document is parsed twice: once for the spans,
+    # once for the metrics.
+    write_table(spans, args.output, partition_by=("part_id",), mode="append" if args.resume else "overwrite")
     write_table(metrics, args.metrics, partition_by=(), mode="append")
     print(f"run {args.run_id} complete", file=sys.stderr)
     spark.stop()

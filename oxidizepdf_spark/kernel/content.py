@@ -1395,11 +1395,10 @@ def parse_content(data: bytes) -> list[tuple]:
 
 def parse_and_run(interp, data: bytes, resources, depth: int = 0) -> None:
     """Fused tokenize+parse+interpret dispatcher: the C fast path
-    (_cscan.c, compiled lazily by cbuild.py) when available and the page
-    runs in fast-show mode (no layout fragments), else the pure-Python
-    fused loop below. Both are pinned against run(parse_content(data)) by
+    (_cscan.c, compiled lazily by cbuild.py, in fast-show and layout mode
+    alike) when available, else the pure-Python fused loop below. Both are pinned against run(parse_content(data)) by
     the differential tests; OXPDF_NO_CKERNEL=1 forces pure Python."""
-    if _CSCAN is not None and (not interp._layout or _CSCAN.layout_ready):
+    if _CSCAN is not None:
         _CSCAN.run_page(interp, data, resources, depth)
         return
     _parse_and_run_py(interp, data, resources, depth)
@@ -2075,8 +2074,6 @@ def _c_frag_env(interp):
 
 
 def _load_cscan():
-    import os as _os
-
     from .cbuild import load_cscan
 
     mod = load_cscan()
@@ -2102,24 +2099,16 @@ def _load_cscan():
             "".join(_enc.decode_winansi_byte(b) for b in range(256)),
             "".join(_enc.decode_macroman_byte(b) for b in range(256)),
         )
-        # layout-mode fragment emission (optional second stage: its own
-        # kill switch so the C fast-show path survives a layout-only
-        # problem; pure-Python layout remains the behavior authority)
-        mod.layout_ready = False
-        if not _os.environ.get("OXPDF_NO_CLAYOUT"):
-            from .layout import TextFragment, parse_font_style
+        # layout-mode fragment emission and the HTML tokenizer; the
+        # pure-Python layout and html.parser passes stay the behavior
+        # authority
+        from html import unescape as _html_unescape
 
-            mod.setup_layout(TextFragment, parse_font_style, _c_frag_env)
-            mod.layout_ready = True
-        # HTML tokenizer stage (its own kill switch, same rationale)
-        mod.html_ready = False
-        if not _os.environ.get("OXPDF_NO_CHTML"):
-            from html import unescape as _html_unescape
+        from .html_extract import _hint_value, _ws_collapse
+        from .layout import TextFragment, parse_font_style
 
-            from .html_extract import _hint_value, _ws_collapse
-
-            mod.setup_html(_html_unescape, _ws_collapse, _hint_value)
-            mod.html_ready = True
+        mod.setup_layout(TextFragment, parse_font_style, _c_frag_env)
+        mod.setup_html(_html_unescape, _ws_collapse, _hint_value)
     except Exception:
         return None
     return mod

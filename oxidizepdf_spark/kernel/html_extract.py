@@ -171,7 +171,7 @@ def _parse_events(html: str):
     any bail/None/exception falls back to the pure-Python authority."""
     from .content import _CSCAN
 
-    if _CSCAN is not None and getattr(_CSCAN, "html_ready", False):
+    if _CSCAN is not None:
         try:
             r = _CSCAN.html_events(html)
         except Exception:

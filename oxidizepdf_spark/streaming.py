@@ -8,8 +8,8 @@ checkpointing: new document files are discovered, extracted, and appended;
 a restart resumes from the checkpoint without reprocessing (S15/S16 →
 readStream + foreachBatch, SURVEY.md §2.1).
 
-``stream_extract`` runs the same kernel as the batch pipeline inside the
-stream (mapInArrow works unchanged on streaming DataFrames); Trigger
+``stream_extract`` runs the batch pipeline's ``extract_spans`` (unsalted)
+inside the stream (mapInArrow works unchanged on streaming DataFrames); Trigger
 ``availableNow`` drains everything pending then stops, which is the batch-
 equivalent semantics a backfill run wants.
 
@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .kernel.textstate import ExtractionOptions
-from .pipeline import RESULT_SCHEMA, _extract_batches
+from .pipeline import extract_spans
 from .table_io import DOCS_SCHEMA
 
 
@@ -43,14 +43,11 @@ def stream_extract(
     metrics-table anti-join). Returns the StreamingQuery (stopped already
     if ``await_termination``).
     """
-    opts = options or ExtractionOptions()
     reader = spark.readStream.schema(DOCS_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     docs = reader.parquet(input_path)
-    results = docs.mapInArrow(
-        lambda it: _extract_batches(it, opts), schema=RESULT_SCHEMA
-    )
+    results = extract_spans(docs, options, salt=False)
     spans = results.select("doc_id", "part_id", "spans", "ok", "mode", "error")
     q = (
         spans.writeStream.format("parquet")
