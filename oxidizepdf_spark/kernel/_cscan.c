@@ -4527,6 +4527,26 @@ static int is_bws(unsigned char b)
            b == 0x0b;
 }
 
+/* d[key] = (kind, a, b) with setdefault (first definition wins) or, when
+ * replace, a plain store: 0 ok, -1 exception */
+static int put_entry(PyObject *entries, long long key, PyObject *kind,
+                     long long a, long long b, int replace)
+{
+    PyObject *k = PyLong_FromLongLong(key);
+    PyObject *x = k ? PyLong_FromLongLong(a) : NULL;
+    PyObject *y = x ? PyLong_FromLongLong(b) : NULL;
+    PyObject *t = y ? PyTuple_Pack(3, kind, x, y) : NULL;
+    int rc = -1;
+    if (t)
+        rc = replace ? PyDict_SetItem(entries, k, t)
+                     : (PyDict_SetDefault(entries, k, t) ? 0 : -1);
+    Py_XDECREF(k);
+    Py_XDECREF(x);
+    Py_XDECREF(y);
+    Py_XDECREF(t);
+    return rc;
+}
+
 /* the subsection entries of one section; p is just past the 'xref'
  * keyword.  Entries go into `entries` with setdefault (first definition
  * wins).  1 = parsed (*end = position after the last entry's EOL),
@@ -4598,30 +4618,10 @@ static int xref_entries(const unsigned char *d, Py_ssize_t n, Py_ssize_t p,
                     off = off * 10 + (e[k2] - '0');
                 for (int k2 = 11; k2 < 16; k2++)
                     gen = gen * 10 + (e[k2] - '0');
-                PyObject *num = PyLong_FromLongLong(start_obj + i);
-                if (!num)
-                    return -1;
-                PyObject *off_o = PyLong_FromLongLong(off);
-                PyObject *gen_o = PyLong_FromLongLong(gen);
-                if (!off_o || !gen_o) {
-                    Py_DECREF(num);
-                    Py_XDECREF(off_o);
-                    Py_XDECREF(gen_o);
-                    return -1;
-                }
-                PyObject *tup = PyTuple_Pack(
-                    3, e[17] == 'n' ? g_n_str : g_f_str, off_o, gen_o);
-                Py_DECREF(off_o);
-                Py_DECREF(gen_o);
-                if (!tup) {
-                    Py_DECREF(num);
-                    return -1;
-                }
                 /* first definition wins (entries.setdefault) */
-                PyObject *prev = PyDict_SetDefault(entries, num, tup);
-                Py_DECREF(num);
-                Py_DECREF(tup);
-                if (!prev)
+                if (put_entry(entries, start_obj + i,
+                              e[17] == 'n' ? g_n_str : g_f_str, off, gen,
+                              0) < 0)
                     return -1;
             }
             p = hdr_end + 20 * (count - 1) + 18;
@@ -4711,20 +4711,25 @@ static PyObject *parse_xref_section(PyObject *self, PyObject *args)
 }
 
 /* ========================================================================
- * Document skeleton fast path: the xref chain (xref.py parse_xref_chain),
- * object fetch (reader.py PdfReader.get_object / resolve), the page tree
- * (pages.py flatten_page_tree) and /Contents assembly (pages.py
- * page_content).  Same discipline as parse_indirect: each entry point
- * returns a complete result or None (get_object: the BAIL sentinel), and on
- * a bail the caller re-runs that whole step in Python, the authority.  The
- * C steps bail on encryption, recovered mode, a missing xref entry, a
- * compressed or wrong-object entry, an indirect /Length, xref streams and
- * /XRefStm, and on every parse the object parser is not byte-certain about.
+ * Document skeleton fast path: the xref chain with its xref streams,
+ * hybrid /XRefStm and recovery scan (xref.py parse_xref_chain,
+ * recover_xref), object fetch including object-stream members (reader.py
+ * PdfReader.get_object / resolve), the page tree (pages.py
+ * flatten_page_tree) and /Contents assembly (pages.py page_content).  Same
+ * discipline as parse_indirect: each entry point returns a complete result
+ * or None (get_object: the BAIL sentinel), and on a bail the caller re-runs
+ * that whole step in Python, the authority.  The C steps bail on
+ * encryption, a missing xref entry, a wrong-object entry, an indirect
+ * /Length, an exception from a Python stream decode they did not expect,
+ * and on every parse the object parser is not byte-certain about.  Stream
+ * payloads (xref streams, object streams) decode through the Python
+ * Stream.decode, so the build links no zlib.
  *
- * Objects fetched here go into reader._cache exactly as get_object would
- * cache them (same key, same value), and a bailed step's Python re-run
- * walks the same objects first, so a bail leaves nothing Python would not
- * have produced itself.
+ * Objects fetched here go into reader._cache (object-stream members also
+ * into reader._objstm_cache) exactly as get_object would cache them (same
+ * key, same value), and a bailed step's Python re-run walks the same
+ * objects first, so a bail leaves nothing Python would not have produced
+ * itself.
  * ======================================================================== */
 
 static PyObject *g_stream_cls; /* objects.Stream */
@@ -4804,26 +4809,644 @@ static int c_startxref(const unsigned char *d, Py_ssize_t n, Py_ssize_t *out)
     return 1;
 }
 
-/* parse_xref_chain's happy path: the /Prev chain of traditional sections,
- * newest entries and trailer keys first, with the cycle guard and the
- * 64-hop cap.  Returns (entries, trailer) or None. */
-static PyObject *xref_chain(PyObject *self, PyObject *args)
+/* ---- stream payloads, xref streams, the recovery scan ------------------ */
+
+static PyObject *g_c_str; /* "c" singleton */
+static PyObject *s_objstm_cache, *s_recovered, *s_resolve, *s_decode;
+static PyObject *k_W, *k_Size, *k_Index, *k_N, *k_First, *k_Info, *k_ID;
+
+/* The payload after the `stream` keyword at pos: reader._capture_stream
+ * without a decryptor, or (standalone) xref._parse_object_at_standalone,
+ * which never resolves a /Length and is always lenient.  1 = the payload
+ * is d[*start:*stop], 2 = Python raises PdfParseError (a strict /Length
+ * mismatch, an unterminated stream), 0 = bail (an indirect /Length the
+ * reader resolves, a bool /Length), -1 = exception. */
+static int stream_span(const unsigned char *d, Py_ssize_t n, PyObject *value,
+                       Py_ssize_t pos, int lenient, int standalone,
+                       Py_ssize_t *start, Py_ssize_t *stop)
+{
+    /* exactly one EOL after 'stream' (spec): \r\n or \n (tolerate \r) */
+    if (pos + 1 < n && d[pos] == '\r' && d[pos + 1] == '\n')
+        pos += 2;
+    else if (pos < n && (d[pos] == '\r' || d[pos] == '\n'))
+        pos += 1;
+    PyObject *length = PyDict_GetItemWithError(value, k_Length);
+    if (!length && PyErr_Occurred())
+        return -1;
+    if (length && PyBool_Check(length))
+        return 0;
+    if (length && PyObject_TypeCheck(length, (PyTypeObject *)g_ref_cls) &&
+        !standalone)
+        return 0; /* indirect /Length: Python resolves it */
+    Py_ssize_t len;
+    *start = pos;
+    *stop = -1;
+    /* an int too large for Py_ssize_t never fits the buffer */
+    if (length && PyLong_CheckExact(length) && small_int(length, &len) &&
+        len >= 0 && len <= n - pos) {
+        /* data[end:end+32].lstrip(b"\r\n \t").startswith(b"endstream") */
+        Py_ssize_t q = pos + len, w = q + 32 < n ? q + 32 : n;
+        while (q < w && (d[q] == '\r' || d[q] == '\n' || d[q] == ' ' ||
+                         d[q] == '\t'))
+            q++;
+        if (w - q >= 9 && memcmp(d + q, "endstream", 9) == 0)
+            *stop = pos + len;
+    }
+    if (*stop < 0) {
+        /* declared length wrong/absent: the lenient endstream search */
+        if (!lenient && !standalone)
+            return 2;
+        Py_ssize_t es = bfind(d, n, pos, "endstream", 9);
+        if (es < 0)
+            return 2;
+        if (es > pos && d[es - 1] == '\n')
+            es--;
+        if (es > pos && d[es - 1] == '\r')
+            es--;
+        *stop = es;
+    }
+    return 1;
+}
+
+/* Stream(value, d[start:stop]) */
+static PyObject *new_stream(const unsigned char *d, Py_ssize_t start,
+                            Py_ssize_t stop, PyObject *value)
+{
+    PyObject *raw =
+        PyBytes_FromStringAndSize((const char *)(d + start), stop - start);
+    if (!raw)
+        return NULL;
+    PyObject *stm = PyObject_CallFunctionObjArgs(g_stream_cls, value, raw, NULL);
+    Py_DECREF(raw);
+    return stm;
+}
+
+/* stm.decode(resolve) through the Python filters (zlib, predictors, LZW):
+ * the decoded bytes (new ref); or NULL with no exception set, *raised = 1
+ * when decode raised an Exception (cleared: the caller bails, or skips
+ * where Python catches every Exception) and 0 when it returned something
+ * other than bytes (bail); or NULL with an exception that is not an
+ * Exception. */
+static PyObject *stream_decode(PyObject *stm, PyObject *resolve, int *raised)
+{
+    PyObject *dec = PyObject_CallMethodOneArg(stm, s_decode, resolve);
+    *raised = 0;
+    if (dec && PyBytes_CheckExact(dec))
+        return dec;
+    Py_XDECREF(dec);
+    if (PyErr_Occurred() && PyErr_ExceptionMatches(PyExc_Exception)) {
+        PyErr_Clear();
+        *raised = 1;
+    }
+    return NULL;
+}
+
+/* a list of exact ints (bool excluded) that fit a Py_ssize_t: 1 with a
+ * malloc'd *out of *cnt values, 0 for any other value, -1 on memory */
+static int int_list(PyObject *lst, Py_ssize_t **out, Py_ssize_t *cnt)
+{
+    if (!PyList_CheckExact(lst))
+        return 0;
+    Py_ssize_t k = PyList_GET_SIZE(lst);
+    Py_ssize_t *v = (Py_ssize_t *)malloc(sizeof(Py_ssize_t) * (size_t)(k + 1));
+    if (!v) {
+        PyErr_NoMemory();
+        return -1;
+    }
+    for (Py_ssize_t i = 0; i < k; i++)
+        if (!small_int(PyList_GET_ITEM(lst, i), &v[i])) {
+            free(v);
+            return 0;
+        }
+    *out = v;
+    *cnt = k;
+    return 1;
+}
+
+/* a decimal digit run of at most 18 digits as a long long: 1, else 0 */
+static int digits_ll(const unsigned char *p, Py_ssize_t len, long long *out)
+{
+    if (len > 18)
+        return 0;
+    long long v = 0;
+    for (Py_ssize_t i = 0; i < len; i++)
+        v = v * 10 + (p[i] - '0');
+    *out = v;
+    return 1;
+}
+
+/* one field of an xref-stream row: the big-endian value of its w bytes,
+ * wrapped to int64 the way the numpy column sum wraps; def when w is 0 */
+static long long xs_field(const unsigned char *p, Py_ssize_t w, long long def)
+{
+    if (w == 0)
+        return def;
+    unsigned long long v = 0;
+    for (Py_ssize_t i = 0; i < w; i++)
+        v = (v << 8) | p[i];
+    return (long long)v;
+}
+
+/* xref._parse_xref_stream_at(data, offset, reader) while the reader is
+ * being built: 1 = the section's entries went into `entries` with
+ * setdefault and *trailer is dict(d) (new ref), 2 = Python raises an error
+ * parse_xref_chain catches (the chain stops, a /XRefStm is skipped),
+ * 0 = bail, -1 = exception.  Nothing is written to `entries` before every
+ * check has passed. */
+static int xref_stream_at(const unsigned char *d, Py_ssize_t n,
+                          Py_ssize_t offset, int lenient, PyObject *entries,
+                          PyObject **trailer)
+{
+    OLex o = {d, n, offset, 0};
+    long long onum, ogen;
+    PyObject *value = NULL, *stm = NULL, *dec = NULL;
+    Py_ssize_t *w = NULL, *idx = NULL, nw = 0, nidx = 0, start, stop;
+    int has_stream;
+    int rc = o_indirect(&o, &onum, &ogen, &value, &has_stream);
+    if (rc <= 0)
+        return rc;
+    if (!has_stream) { /* "object at … is not an xref stream" */
+        rc = 2;
+        goto out;
+    }
+    rc = stream_span(d, n, value, o.pos, lenient, 0, &start, &stop);
+    if (rc != 1)
+        goto out;
+    rc = -1;
+    PyObject *typ = PyDict_GetItemWithError(value, k_Type);
+    if (!typ && PyErr_Occurred())
+        goto out;
+    /* str(d.get("Type", "")) != "XRef": only a str can print as XRef */
+    if (!(typ && PyUnicode_Check(typ) &&
+          PyUnicode_CompareWithASCIIString(typ, "XRef") == 0)) {
+        int has_w = PyDict_Contains(value, k_W);
+        if (has_w < 0)
+            goto out;
+        if (!has_w) { /* "xref stream missing /Type and /W" */
+            rc = 2;
+            goto out;
+        }
+    }
+    stm = new_stream(d, start, stop, value);
+    if (!stm)
+        goto out;
+    int raised;
+    dec = stream_decode(stm, Py_None, &raised);
+    if (!dec) {
+        rc = PyErr_Occurred() ? -1 : 0;
+        goto out;
+    }
+    PyObject *wl = PyDict_GetItemWithError(value, k_W);
+    if (!wl) {
+        rc = PyErr_Occurred() ? -1 : 2; /* [] → "bad /W array" */
+        goto out;
+    }
+    if ((rc = int_list(wl, &w, &nw)) != 1)
+        goto out;
+    if (nw < 3) {
+        rc = 2;
+        goto out;
+    }
+    Py_ssize_t row = 0;
+    for (Py_ssize_t i = 0; i < nw; i++) {
+        if (w[i] < 0 || w[i] > (i < 3 ? 8 : 1 << 20)) {
+            rc = 0;
+            goto out;
+        }
+        row += w[i];
+    }
+    Py_ssize_t size = 0;
+    PyObject *sz = PyDict_GetItemWithError(value, k_Size);
+    if (!sz && PyErr_Occurred()) {
+        rc = -1;
+        goto out;
+    }
+    if (sz && !small_int(sz, &size)) {
+        rc = 0;
+        goto out;
+    }
+    PyObject *il = PyDict_GetItemWithError(value, k_Index);
+    if (!il && PyErr_Occurred()) {
+        rc = -1;
+        goto out;
+    }
+    if (il) {
+        if ((rc = int_list(il, &idx, &nidx)) != 1)
+            goto out;
+    } else {
+        idx = (Py_ssize_t *)malloc(2 * sizeof(Py_ssize_t));
+        if (!idx) {
+            PyErr_NoMemory();
+            rc = -1;
+            goto out;
+        }
+        idx[0] = 0;
+        idx[1] = size;
+        nidx = 2;
+    }
+    if (row == 0) { /* "zero-width xref stream rows" */
+        rc = 2;
+        goto out;
+    }
+    const unsigned char *m = (const unsigned char *)PyBytes_AS_STRING(dec);
+    Py_ssize_t n_rows = PyBytes_GET_SIZE(dec) / row, r = 0;
+    for (Py_ssize_t i = 0; i + 1 < nidx; i += 2)
+        if (idx[i] > PY_SSIZE_T_MAX - n_rows) {
+            rc = 0; /* object numbers past 64 bits: Python's own ints */
+            goto out;
+        }
+    rc = -1;
+    for (Py_ssize_t i = 0; i + 1 < nidx; i += 2) {
+        Py_ssize_t first = idx[i], count = idx[i + 1];
+        for (Py_ssize_t j = 0; j < count && r < n_rows; j++, r++) {
+            const unsigned char *e = m + r * row;
+            long long t = xs_field(e, w[0], 1);
+            PyObject *kind = t == 0 ? g_f_str : t == 1 ? g_n_str
+                           : t == 2 ? g_c_str : NULL;
+            if (kind && put_entry(entries, first + j, kind,
+                                  xs_field(e + w[0], w[1], 0),
+                                  xs_field(e + w[0] + w[1], w[2], 0), 0) < 0)
+                goto out;
+        }
+    }
+    *trailer = PyDict_Copy(value);
+    rc = *trailer ? 1 : -1;
+out:
+    free(w);
+    free(idx);
+    Py_XDECREF(value);
+    Py_XDECREF(stm);
+    Py_XDECREF(dec);
+    return rc;
+}
+
+/* bytes-pattern \w (ASCII) for the \b after `obj` */
+static int is_wordb(unsigned char b)
+{
+    return (b >= '0' && b <= '9') || (b >= 'a' && b <= 'z') ||
+           (b >= 'A' && b <= 'Z') || b == '_';
+}
+
+/* xref.scan_object_headers: every rb"(\d+)\s+(\d+)\s+obj\b" match, left
+ * to right and non-overlapping, as found[num] = ("n", start, gen) (a later
+ * header replaces the value; the key keeps its place).  A match can only
+ * start at the first digit of a run: the rest of the run meets the same
+ * bytes after it.  1 = done, 0 = bail (a number past 18 digits),
+ * -1 = exception. */
+static int scan_headers(const unsigned char *d, Py_ssize_t n, PyObject *found)
+{
+    Py_ssize_t i = 0;
+    while (i < n) {
+        const unsigned char *hit = d + i;
+        while (hit < d + n && (*hit < '0' || *hit > '9'))
+            hit++;
+        if (hit >= d + n)
+            break;
+        Py_ssize_t s = hit - d, q = s;
+        while (q < n && d[q] >= '0' && d[q] <= '9')
+            q++;
+        Py_ssize_t e1 = q;
+        i = e1; /* no match from this run: resume after it */
+        while (q < n && is_bws(d[q]))
+            q++;
+        if (q == e1 || q >= n || d[q] < '0' || d[q] > '9')
+            continue;
+        Py_ssize_t s2 = q;
+        while (q < n && d[q] >= '0' && d[q] <= '9')
+            q++;
+        Py_ssize_t e2 = q;
+        while (q < n && is_bws(d[q]))
+            q++;
+        if (q == e2 || q + 3 > n || memcmp(d + q, "obj", 3) != 0 ||
+            (q + 3 < n && is_wordb(d[q + 3])))
+            continue;
+        long long num, gen;
+        if (!digits_ll(d + s, e1 - s, &num) || !digits_ll(d + s2, e2 - s2, &gen))
+            return 0;
+        if (put_entry(found, num, g_n_str, s, gen, 1) < 0)
+            return -1;
+        i = q + 3;
+    }
+    return 1;
+}
+
+/* data.rfind(needle, 0, end) for a NUL-free needle; -1 when absent */
+static Py_ssize_t brfind(const unsigned char *d, Py_ssize_t end,
+                         const char *needle, Py_ssize_t m)
+{
+    for (Py_ssize_t i = end - m; i >= 0; i--)
+        if (d[i] == (unsigned char)needle[0] && memcmp(d + i, needle, (size_t)m) == 0)
+            return i;
+    return -1;
+}
+
+/* parse_object over a fresh Lexer at o->pos: 1 = *out (new ref), 2 = it
+ * raises PdfParseError (EOF, or a keyword other than true/false/null),
+ * 0 = bail, -1 = exception */
+static int o_value_top(OLex *o, PyObject **out)
+{
+    o_skip(o);
+    if (o->pos >= o->n)
+        return 2; /* "unexpected EOF" */
+    unsigned char ch = o->d[o->pos];
+    if (ch == '{' || ch == '}')
+        return 2; /* the brace keywords */
+    if (!is_obound(ch) && !((ch >= '0' && ch <= '9') || ch == '+' ||
+                            ch == '-' || ch == '.')) {
+        Py_ssize_t p = o->pos;
+        while (p < o->n && !is_obound(o->d[p]))
+            p++;
+        Py_ssize_t kl = p - o->pos;
+        const unsigned char *kp = o->d + o->pos;
+        if (!((kl == 4 && memcmp(kp, "true", 4) == 0) ||
+              (kl == 5 && memcmp(kp, "false", 5) == 0) ||
+              (kl == 4 && memcmp(kp, "null", 4) == 0)))
+            return 2; /* "unexpected keyword" */
+    }
+    PyObject *v = o_value(o, 0);
+    if (!v)
+        return (o->bail && !PyErr_Occurred()) ? 0 : -1;
+    *out = v;
+    return 1;
+}
+
+/* int(v or 0) for an ObjStm's /N or /First: 1 = *out, 2 = int() raises
+ * (a Ref), 0 = bail (bool, float, str: Python's conversions decide) */
+static int objstm_int(PyObject *dict, PyObject *key, Py_ssize_t *out)
+{
+    PyObject *v = PyDict_GetItemWithError(dict, key);
+    if (!v) {
+        if (PyErr_Occurred())
+            return -1;
+        *out = 0;
+        return 1;
+    }
+    if (v == Py_None) {
+        *out = 0;
+        return 1;
+    }
+    if (PyObject_TypeCheck(v, (PyTypeObject *)g_ref_cls))
+        return 2;
+    return small_int(v, out) && *out >= 0;
+}
+
+/* the (number, offset) header of a decoded object stream:
+ * re.findall(rb"\d+", decoded[:first])[:2 * n] as a malloc'd array.
+ * 1 = the pairs and their count, 0 = bail (a number past 18 digits),
+ * -1 = memory */
+static int objstm_pairs(const unsigned char *m, Py_ssize_t len,
+                        Py_ssize_t first, Py_ssize_t n_members,
+                        long long **pairs, Py_ssize_t *cnt)
+{
+    Py_ssize_t end = first < len ? first : len, k = 0,
+               want = n_members < (end + 1) / 2 ? 2 * n_members : end + 1;
+    long long *v = (long long *)malloc(sizeof(long long) * (size_t)(want + 1));
+    if (!v) {
+        PyErr_NoMemory();
+        return -1;
+    }
+    for (Py_ssize_t i = 0; i < end && k < want;) {
+        if (m[i] < '0' || m[i] > '9') {
+            i++;
+            continue;
+        }
+        Py_ssize_t s = i;
+        while (i < end && m[i] >= '0' && m[i] <= '9')
+            i++;
+        if (!digits_ll(m + s, i - s, &v[k++])) {
+            free(v);
+            return 0;
+        }
+    }
+    *pairs = v;
+    *cnt = k;
+    return 1;
+}
+
+/* xref.recover_xref: the header scan; /Root from the last parseable
+ * `trailer` dict, else an /XRef stream's dict; ObjStm members registered as
+ * compressed entries; the /Catalog fallback; the /Size default.
+ * (entries, trailer) or None (bail). */
+static PyObject *recover(const unsigned char *d, Py_ssize_t n)
+{
+    PyObject *entries = PyDict_New(), *trailer = NULL, *keys = NULL;
+    if (!entries)
+        return NULL;
+    int rc = scan_headers(d, n, entries);
+    if (rc <= 0)
+        goto fail;
+    /* 1) the last parseable `trailer` keyword dict with /Root */
+    for (Py_ssize_t t = brfind(d, n, "trailer", 7); t >= 0;
+         t = brfind(d, t, "trailer", 7)) {
+        OLex o = {d, n, t + 7, 0};
+        PyObject *cand = NULL;
+        rc = o_value_top(&o, &cand);
+        if (rc == 2)
+            continue;
+        if (rc <= 0)
+            goto fail;
+        int has_root = PyDict_Check(cand) ? PyDict_Contains(cand, k_Root) : 0;
+        if (has_root > 0) {
+            trailer = cand;
+            break;
+        }
+        Py_DECREF(cand);
+        if (has_root < 0) {
+            rc = -1;
+            goto fail;
+        }
+    }
+    rc = -1;
+    if (!trailer && !(trailer = PyDict_New()))
+        goto fail;
+    /* 2) mine the scanned objects: /XRef stream dicts for /Root, ObjStm
+     * members as compressed entries (the scan's own entries, by number) */
+    keys = PyDict_Keys(entries);
+    if (!keys || PyList_Sort(keys) < 0)
+        goto fail;
+    for (Py_ssize_t i = 0; i < PyList_GET_SIZE(keys); i++) {
+        PyObject *num = PyList_GET_ITEM(keys, i);
+        PyObject *entry = PyDict_GetItemWithError(entries, num);
+        Py_ssize_t off;
+        if (!entry || !small_int(PyTuple_GET_ITEM(entry, 1), &off))
+            goto fail;
+        Py_ssize_t wend = off + 256 < n ? off + 256 : n;
+        int is_xref = bfind(d, wend, off, "/XRef", 5) >= 0;
+        int is_objstm = bfind(d, wend, off, "/ObjStm", 7) >= 0;
+        if (!is_xref && !is_objstm)
+            continue;
+        OLex o = {d, n, off, 0};
+        long long onum, ogen;
+        PyObject *value = NULL;
+        int has_stream;
+        rc = o_indirect(&o, &onum, &ogen, &value, &has_stream);
+        if (rc <= 0)
+            goto fail;
+        Py_ssize_t start, stop;
+        rc = has_stream ? stream_span(d, n, value, o.pos, 1, 1, &start, &stop)
+                        : 2; /* not a Stream */
+        if (rc != 1) {
+            Py_DECREF(value);
+            if (rc == 2)
+                continue; /* no stream, or PdfParseError: skipped */
+            goto fail;
+        }
+        rc = -1;
+        if (is_xref) {
+            int root_t = PyDict_Contains(trailer, k_Root);
+            int root_d = root_t ? 0 : PyDict_Contains(value, k_Root);
+            if (root_t < 0 || root_d < 0) {
+                Py_DECREF(value);
+                goto fail;
+            }
+            if (root_d) {
+                PyObject *mined[4] = {k_Root, k_Size, k_Info, k_ID};
+                for (int k = 0; k < 4; k++) {
+                    PyObject *v = PyDict_GetItemWithError(value, mined[k]);
+                    if (v ? !PyDict_SetDefault(trailer, mined[k], v)
+                          : PyErr_Occurred() != NULL) {
+                        Py_DECREF(value);
+                        goto fail;
+                    }
+                }
+            }
+        }
+        if (is_objstm) {
+            Py_ssize_t n_members, first;
+            int rn = objstm_int(value, k_N, &n_members);
+            int rf = rn == 1 ? objstm_int(value, k_First, &first) : rn;
+            PyObject *stm = NULL, *dec = NULL;
+            long long *pairs = NULL;
+            Py_ssize_t cnt = 0;
+            int raised = 0;
+            rc = 1;
+            if (rn < 0 || rf < 0)
+                rc = -1;
+            else if (rn == 0 || rf == 0)
+                rc = 0;
+            else if (!(stm = new_stream(d, start, stop, value)))
+                rc = -1;
+            else if (!(dec = stream_decode(stm, Py_None, &raised)))
+                /* except Exception: pass */
+                rc = PyErr_Occurred() ? -1 : raised ? 2 : 0;
+            else if (rn == 2 || rf == 2)
+                rc = 2; /* int(Ref): TypeError, caught */
+            else
+                rc = objstm_pairs((const unsigned char *)PyBytes_AS_STRING(dec),
+                                  PyBytes_GET_SIZE(dec), first, n_members,
+                                  &pairs, &cnt);
+            if (rc == 1) {
+                long long container = PyLong_AsLongLong(num);
+                for (Py_ssize_t k = 0; k + 1 < cnt; k += 2)
+                    if (put_entry(entries, pairs[k], g_c_str, container,
+                                  k / 2, 0) < 0) {
+                        rc = -1;
+                        break;
+                    }
+            }
+            free(pairs);
+            Py_XDECREF(stm);
+            Py_XDECREF(dec);
+            if (rc <= 0) {
+                Py_DECREF(value);
+                goto fail;
+            }
+        }
+        Py_DECREF(value);
+    }
+    rc = -1;
+    /* 3) last resort: a /Type /Catalog object among the recovered headers */
+    int has_root = PyDict_Contains(trailer, k_Root);
+    if (has_root < 0)
+        goto fail;
+    if (!has_root) {
+        Py_SETREF(keys, PyDict_Keys(entries));
+        if (!keys || PyList_Sort(keys) < 0)
+            goto fail;
+        for (Py_ssize_t i = 0; i < PyList_GET_SIZE(keys); i++) {
+            PyObject *num = PyList_GET_ITEM(keys, i);
+            PyObject *entry = PyDict_GetItemWithError(entries, num);
+            if (!entry)
+                goto fail;
+            if (PyTuple_GET_ITEM(entry, 0) != g_n_str)
+                continue;
+            Py_ssize_t off = PyLong_AsSsize_t(PyTuple_GET_ITEM(entry, 1));
+            Py_ssize_t wend = off + 512 < n ? off + 512 : n;
+            if (bfind(d, wend, off, "/Catalog", 8) < 0)
+                continue;
+            PyObject *ref = new_ref(PyLong_AsLongLong(num),
+                                    PyLong_AsLongLong(PyTuple_GET_ITEM(entry, 2)));
+            Py_SETREF(trailer, PyDict_Copy(trailer));
+            if (!ref || !trailer || PyDict_SetItem(trailer, k_Root, ref) < 0) {
+                Py_XDECREF(ref);
+                goto fail;
+            }
+            Py_DECREF(ref);
+            break;
+        }
+    }
+    /* 4) the /Size default: max(entries) + 1, or 0 */
+    long long size = 0;
+    Py_ssize_t pos = 0;
+    PyObject *k, *v;
+    while (PyDict_Next(entries, &pos, &k, &v)) {
+        long long x = PyLong_AsLongLong(k);
+        if (x + 1 > size)
+            size = x + 1;
+    }
+    PyObject *size_o = PyLong_FromLongLong(size);
+    if (!size_o || !PyDict_SetDefault(trailer, k_Size, size_o)) {
+        Py_XDECREF(size_o);
+        goto fail;
+    }
+    Py_DECREF(size_o);
+    Py_XDECREF(keys);
+    return Py_BuildValue("(NN)", entries, trailer);
+fail:
+    Py_XDECREF(entries);
+    Py_XDECREF(trailer);
+    Py_XDECREF(keys);
+    if (rc < 0 && PyErr_Occurred())
+        return NULL;
+    PyErr_Clear();
+    Py_RETURN_NONE;
+}
+
+/* recover_xref(data): xref.recover_xref's (entries, trailer), or None */
+static PyObject *recover_xref_c(PyObject *self, PyObject *args)
 {
     PyObject *data_obj;
     if (!PyArg_ParseTuple(args, "O", &data_obj))
         return NULL;
     if (!PyBytes_Check(data_obj))
         Py_RETURN_NONE;
-    const unsigned char *d = (const unsigned char *)PyBytes_AS_STRING(data_obj);
-    Py_ssize_t n = PyBytes_GET_SIZE(data_obj), offset = 0;
-    if (c_startxref(d, n, &offset) != 1)
+    return recover((const unsigned char *)PyBytes_AS_STRING(data_obj),
+                   PyBytes_GET_SIZE(data_obj));
+}
+
+/* parse_xref_chain (start_offset None): the /Prev chain of traditional
+ * sections and xref streams, newest entries and trailer keys first, with
+ * the hybrid /XRefStm hop, the cycle guard and the 64-hop cap; recovery
+ * when nothing parses.  (entries, trailer, mode) or None. */
+static PyObject *xref_chain(PyObject *self, PyObject *args)
+{
+    PyObject *data_obj;
+    int lenient = 1;
+    if (!PyArg_ParseTuple(args, "O|p", &data_obj, &lenient))
+        return NULL;
+    if (!PyBytes_Check(data_obj))
         Py_RETURN_NONE;
-    PyObject *entries = PyDict_New(), *trailer = PyDict_New();
+    const unsigned char *d = (const unsigned char *)PyBytes_AS_STRING(data_obj);
+    Py_ssize_t n = PyBytes_GET_SIZE(data_obj), offset = -1;
+    int st = c_startxref(d, n, &offset);
+    if (st < 0)
+        Py_RETURN_NONE;
+    PyObject *entries = PyDict_New(), *trailer = PyDict_New(), *res;
     Py_ssize_t seen[64];
-    int hops = 0;
+    int hops = 0, ok = 0;
     if (!entries || !trailer)
         goto err;
-    while (0 <= offset && offset < n && hops < 64) {
+    while (st == 1 && 0 <= offset && offset < n && hops < 64) {
         int cyc = 0;
         for (int i = 0; i < hops; i++)
             if (seen[i] == offset)
@@ -4831,16 +5454,19 @@ static PyObject *xref_chain(PyObject *self, PyObject *args)
         if (cyc)
             break; /* cycle guard */
         seen[hops++] = offset;
-        if (offset + 4 > n || memcmp(d + offset, "xref", 4) != 0)
-            goto bail; /* xref stream: Python path */
         PyObject *sec_trailer = NULL;
         Py_ssize_t end;
-        int rc = xref_section(d, n, offset, entries, &sec_trailer, &end);
-        if (rc <= 0) {
-            if (rc < 0)
-                goto err;
+        int rc = (offset + 4 <= n && memcmp(d + offset, "xref", 4) == 0)
+                     ? xref_section(d, n, offset, entries, &sec_trailer, &end)
+                     : xref_stream_at(d, n, offset, lenient, entries,
+                                      &sec_trailer);
+        if (rc < 0)
+            goto err;
+        if (rc == 0)
             goto bail;
-        }
+        if (rc == 2)
+            break; /* the section raised: the chain stops here */
+        ok = 1;
         Py_ssize_t pos = 0;
         PyObject *k, *v;
         while (PyDict_Next(sec_trailer, &pos, &k, &v))
@@ -4848,15 +5474,34 @@ static PyObject *xref_chain(PyObject *self, PyObject *args)
                 Py_DECREF(sec_trailer);
                 goto err;
             }
-        /* an int /XRefStm (hybrid file), a bool, float or huge /Prev:
-         * Python decides; any other /Prev value ends the chain */
+        /* hybrid file: an int /XRefStm names an xref stream whose entries
+         * join the chain's; a failing one is skipped */
         PyObject *stm = PyDict_GetItemWithError(sec_trailer, k_XRefStm);
+        Py_ssize_t stm_off;
+        int verdict = 0; /* 1 = follow /Prev, 0 = stop, -1 = bail */
+        if (stm && PyLong_Check(stm)) {
+            PyObject *stm_trailer = NULL;
+            /* past the end: "no object header", skipped; a negative
+             * offset parses from 0 in Python: bail */
+            rc = !small_int(stm, &stm_off) || stm_off < 0 ? 0
+                 : stm_off >= n ? 2
+                 : xref_stream_at(d, n, stm_off, lenient, entries,
+                                  &stm_trailer);
+            Py_XDECREF(stm_trailer);
+            if (rc < 0) {
+                Py_DECREF(sec_trailer);
+                goto err;
+            }
+            if (rc == 0)
+                verdict = -1;
+        }
+        /* a bool, float or huge /Prev: Python decides; any other /Prev
+         * value ends the chain */
         PyObject *prev =
             PyErr_Occurred() ? NULL
                              : PyDict_GetItemWithError(sec_trailer, k_Prev);
-        int verdict; /* 1 = follow /Prev, 0 = stop, -1 = bail */
-        if (stm && PyLong_Check(stm))
-            verdict = -1;
+        if (verdict < 0 || PyErr_Occurred())
+            ;
         else if (!prev)
             verdict = 0;
         else if (small_int(prev, &offset))
@@ -4871,9 +5516,18 @@ static PyObject *xref_chain(PyObject *self, PyObject *args)
         if (verdict == 0)
             break;
     }
-    if (PyDict_GET_SIZE(entries) == 0)
-        goto bail; /* Python recovers */
-    return Py_BuildValue("(NN)", entries, trailer);
+    if (!ok || PyDict_GET_SIZE(entries) == 0) {
+        Py_DECREF(entries);
+        Py_DECREF(trailer);
+        PyObject *r = recover(d, n);
+        if (!r || r == Py_None)
+            return r;
+        res = Py_BuildValue("(OOO)", PyTuple_GET_ITEM(r, 0),
+                            PyTuple_GET_ITEM(r, 1), s_recovered);
+        Py_DECREF(r);
+        return res;
+    }
+    return Py_BuildValue("(NNO)", entries, trailer, s_strict);
 bail:
     Py_XDECREF(entries);
     Py_XDECREF(trailer);
@@ -4887,7 +5541,7 @@ err:
 /* one reader's state for the duration of a C call (borrowed views into
  * the PdfReader's slots, held by new refs) */
 typedef struct {
-    PyObject *reader, *data, *xref, *cache, *resolving;
+    PyObject *reader, *data, *xref, *cache, *resolving, *objstm;
     const unsigned char *d;
     Py_ssize_t n;
     int lenient;
@@ -4899,10 +5553,12 @@ static void doc_close(Doc *doc)
     Py_CLEAR(doc->xref);
     Py_CLEAR(doc->cache);
     Py_CLEAR(doc->resolving);
+    Py_CLEAR(doc->objstm);
 }
 
-/* 1 = ready, 0 = bail (encrypted, recovered, unexpected reader shape),
- * -1 = exception */
+/* 1 = ready, 0 = bail (encrypted, a reader still being built, unexpected
+ * reader shape), -1 = exception.  Strict and recovered readers are served
+ * alike: the fetch reads only the xref entries. */
 static int doc_open(Doc *doc, PyObject *reader)
 {
     memset(doc, 0, sizeof(*doc));
@@ -4911,7 +5567,8 @@ static int doc_open(Doc *doc, PyObject *reader)
     PyObject *mode = dec ? PyObject_GetAttr(reader, s_mode) : NULL;
     PyObject *len = mode ? PyObject_GetAttr(reader, s_lenient) : NULL;
     int ok = len && dec == Py_None && PyUnicode_Check(mode) &&
-             PyUnicode_Compare(mode, s_strict) == 0;
+             (PyUnicode_Compare(mode, s_strict) == 0 ||
+              PyUnicode_Compare(mode, s_recovered) == 0);
     if (ok) {
         doc->lenient = PyObject_IsTrue(len);
         doc->data = PyObject_GetAttr(reader, s_data);
@@ -4919,9 +5576,12 @@ static int doc_open(Doc *doc, PyObject *reader)
         doc->cache = doc->xref ? PyObject_GetAttr(reader, s_cache) : NULL;
         doc->resolving =
             doc->cache ? PyObject_GetAttr(reader, s_resolving) : NULL;
-        ok = doc->lenient >= 0 && doc->resolving &&
+        doc->objstm =
+            doc->resolving ? PyObject_GetAttr(reader, s_objstm_cache) : NULL;
+        ok = doc->lenient >= 0 && doc->objstm &&
              PyBytes_CheckExact(doc->data) && PyDict_CheckExact(doc->xref) &&
-             PyDict_CheckExact(doc->cache) && PySet_Check(doc->resolving);
+             PyDict_CheckExact(doc->cache) && PySet_Check(doc->resolving) &&
+             PyDict_CheckExact(doc->objstm);
     }
     Py_XDECREF(dec);
     Py_XDECREF(mode);
@@ -4941,66 +5601,115 @@ static int doc_open(Doc *doc, PyObject *reader)
 }
 
 /* reader._capture_stream without a decryptor: the payload after the
- * `stream` keyword at pos.  New Stream, or NULL with *bail / exception. */
+ * `stream` keyword at pos.  New Stream, or NULL with *bail / exception
+ * (a strict /Length mismatch or an unterminated stream raises in Python,
+ * which then rescans or propagates: bail). */
 static PyObject *doc_stream(Doc *doc, PyObject *value, Py_ssize_t pos,
                             int *bail)
 {
-    const unsigned char *d = doc->d;
-    Py_ssize_t n = doc->n;
-    /* exactly one EOL after 'stream' (spec): \r\n or \n (tolerate \r) */
-    if (pos + 1 < n && d[pos] == '\r' && d[pos + 1] == '\n')
-        pos += 2;
-    else if (pos < n && (d[pos] == '\r' || d[pos] == '\n'))
-        pos += 1;
-    PyObject *length = PyDict_GetItemWithError(value, k_Length);
-    if (!length && PyErr_Occurred())
-        return NULL;
-    if (length && (PyObject_TypeCheck(length, (PyTypeObject *)g_ref_cls) ||
-                   PyBool_Check(length))) {
-        *bail = 1; /* indirect /Length: Python resolves it */
+    Py_ssize_t start, stop;
+    int rc = stream_span(doc->d, doc->n, value, pos, doc->lenient, 0, &start,
+                         &stop);
+    if (rc != 1) {
+        *bail = rc >= 0;
         return NULL;
     }
-    Py_ssize_t start = pos, stop = -1, len;
-    if (length && PyLong_CheckExact(length)) {
-        if (!small_int(length, &len)) {
-            *bail = 1;
-            return NULL;
-        }
-        if (len >= 0 && len <= n - pos) {
-            /* data[end:end+32].lstrip(b"\r\n \t").startswith(b"endstream") */
-            Py_ssize_t q = pos + len, w = q + 32 < n ? q + 32 : n;
-            while (q < w && (d[q] == '\r' || d[q] == '\n' || d[q] == ' ' ||
-                             d[q] == '\t'))
-                q++;
-            if (w - q >= 9 && memcmp(d + q, "endstream", 9) == 0)
-                stop = pos + len;
-        }
-    }
-    if (stop < 0) {
-        /* declared length wrong/absent: lenient endstream search; strict
-         * mode and an unterminated stream raise in Python */
-        Py_ssize_t es = doc->lenient ? bfind(d, n, pos, "endstream", 9) : -1;
-        if (es < 0) {
-            *bail = 1;
-            return NULL;
-        }
-        stop = es;
-        if (stop > start && d[stop - 1] == '\n')
-            stop--;
-        if (stop > start && d[stop - 1] == '\r')
-            stop--;
-    }
-    PyObject *raw =
-        PyBytes_FromStringAndSize((const char *)(d + start), stop - start);
-    if (!raw)
-        return NULL;
-    PyObject *stm = PyObject_CallFunctionObjArgs(g_stream_cls, value, raw, NULL);
-    Py_DECREF(raw);
-    return stm;
+    return new_stream(doc->d, start, stop, value);
 }
 
-/* PdfReader.get_object(num, gen) for cached, free and in-use entries:
- * new ref, or NULL with *bail set (no exception) / an exception */
+static PyObject *doc_fetch(Doc *doc, PyObject *num, PyObject *gen, int *bail);
+
+/* PdfReader._get_compressed_object's container parse: the {number:
+ * value} members of object stream `container`, the dict the reader keeps
+ * in _objstm_cache.  Python holds `key` (the member being fetched) in
+ * _resolving throughout, and so does this.  New ref, or NULL with *bail /
+ * an exception. */
+static PyObject *objstm_members(Doc *doc, PyObject *key, PyObject *container,
+                                int *bail)
+{
+    PyObject *zero = NULL, *stm = NULL, *resolve = NULL, *dec = NULL,
+             *parsed = NULL;
+    long long *pairs = NULL;
+    if (PySet_Add(doc->resolving, key) < 0)
+        return NULL;
+    zero = PyLong_FromLong(0);
+    stm = zero ? doc_fetch(doc, container, zero, bail) : NULL;
+    if (!stm)
+        goto done;
+    parsed = PyDict_New();
+    if (!parsed || !PyObject_TypeCheck(stm, (PyTypeObject *)g_stream_cls))
+        goto done; /* not a stream: no members */
+    PyObject *sd = PyObject_GetAttr(stm, s_dict);
+    Py_ssize_t n_members, first, cnt = 0;
+    int rn = sd && PyDict_Check(sd) ? objstm_int(sd, k_N, &n_members) : 0;
+    int rf = rn == 1 ? objstm_int(sd, k_First, &first) : 0;
+    Py_XDECREF(sd);
+    if (rn < 0 || rf < 0) {
+        Py_CLEAR(parsed);
+        goto done;
+    }
+    if (rn != 1 || rf != 1) { /* an indirect or odd /N or /First */
+        PyErr_Clear();
+        *bail = 1;
+        Py_CLEAR(parsed);
+        goto done;
+    }
+    int raised;
+    resolve = PyObject_GetAttr(doc->reader, s_resolve);
+    dec = resolve ? stream_decode(stm, resolve, &raised) : NULL;
+    if (!dec) {
+        *bail = !PyErr_Occurred();
+        Py_CLEAR(parsed);
+        goto done;
+    }
+    const unsigned char *m = (const unsigned char *)PyBytes_AS_STRING(dec);
+    Py_ssize_t len = PyBytes_GET_SIZE(dec);
+    int rc = objstm_pairs(m, len, first, n_members, &pairs, &cnt);
+    if (rc <= 0) {
+        *bail = rc == 0;
+        Py_CLEAR(parsed);
+        goto done;
+    }
+    for (Py_ssize_t k = 0; k + 1 < cnt; k += 2) {
+        /* parse_object(Lexer(decoded, first + off)); PdfParseError → None */
+        OLex o = {m, len, 0, 0};
+        PyObject *v = NULL;
+        if (pairs[k + 1] > PY_SSIZE_T_MAX - first) {
+            rc = 0;
+        } else {
+            o.pos = first + (Py_ssize_t)pairs[k + 1];
+            rc = o_value_top(&o, &v);
+        }
+        if (rc == 2) {
+            v = Py_None;
+            Py_INCREF(v);
+        } else if (rc <= 0) {
+            *bail = rc == 0;
+            Py_CLEAR(parsed);
+            goto done;
+        }
+        PyObject *onum = PyLong_FromLongLong(pairs[k]);
+        rc = onum ? PyDict_SetItem(parsed, onum, v) : -1;
+        Py_XDECREF(onum);
+        Py_DECREF(v);
+        if (rc < 0) {
+            Py_CLEAR(parsed);
+            goto done;
+        }
+    }
+done:
+    free(pairs);
+    if (PySet_Discard(doc->resolving, key) < 0)
+        Py_CLEAR(parsed);
+    Py_XDECREF(zero);
+    Py_XDECREF(stm);
+    Py_XDECREF(resolve);
+    Py_XDECREF(dec);
+    return parsed;
+}
+
+/* PdfReader.get_object(num, gen) for cached, free, in-use and compressed
+ * entries: new ref, or NULL with *bail set (no exception) / an exception */
 static PyObject *doc_fetch(Doc *doc, PyObject *num, PyObject *gen, int *bail)
 {
     PyObject *key = PyTuple_Pack(2, num, gen);
@@ -5062,8 +5771,42 @@ static PyObject *doc_fetch(Doc *doc, PyObject *num, PyObject *gen, int *bail)
                 goto done;
         } else
             obj = value;
+    } else if (kind == 'c' && PyLong_CheckExact(PyTuple_GET_ITEM(entry, 1)) &&
+               PyLong_CheckExact(num)) {
+        /* _get_compressed_object: the member from its container's parsed
+         * members (an entry naming its own number as container: Python) */
+        PyObject *container = PyTuple_GET_ITEM(entry, 1);
+        int same = PyObject_RichCompareBool(container, num, Py_EQ);
+        if (same != 0) {
+            *bail = same > 0;
+            goto done;
+        }
+        PyObject *parsed = PyDict_GetItemWithError(doc->objstm, container);
+        if (parsed)
+            Py_INCREF(parsed);
+        else if (!PyErr_Occurred()) {
+            Py_INCREF(container); /* the decode runs Python code */
+            parsed = objstm_members(doc, key, container, bail);
+            if (parsed && PyDict_SetItem(doc->objstm, container, parsed) < 0)
+                Py_CLEAR(parsed);
+            Py_DECREF(container);
+        }
+        if (!parsed)
+            goto done;
+        if (!PyDict_Check(parsed)) {
+            Py_DECREF(parsed);
+            *bail = 1;
+            goto done;
+        }
+        obj = PyDict_GetItemWithError(parsed, num);
+        if (!obj && !PyErr_Occurred())
+            obj = Py_None;
+        Py_XINCREF(obj);
+        Py_DECREF(parsed);
+        if (!obj)
+            goto done;
     } else {
-        /* compressed ('c') entries, odd offsets: Python path */
+        /* odd entries and offsets: Python path */
         PyErr_Clear();
         *bail = 1;
         goto done;
@@ -5387,6 +6130,112 @@ done:
     if (!out && bail && !PyErr_Occurred())
         Py_RETURN_NONE;
     return out;
+}
+
+/* ---- LZWDecode (filters.decode_lzw) ------------------------------------ *
+ * 9-bit initial codes, Clear=256, EOD=257, the width bumps when the table
+ * size + early_change reaches 2^width (to 12 bits).  The table keeps
+ * growing past 4096 entries as the Python list does, but no code can name
+ * those, so only the count is kept.  An entry is (prefix code, length,
+ * first byte, last byte); output is written back to front along the
+ * prefix chain.  Returns the bytes, or the str message decode_lzw raises
+ * as FilterError. */
+typedef struct {
+    int prefix, len;
+    unsigned char first, last;
+} LzwEnt;
+
+static PyObject *lzw_decode(PyObject *self, PyObject *args)
+{
+    Py_buffer buf;
+    long long early, cap;
+    if (!PyArg_ParseTuple(args, "y*LL", &buf, &early, &cap))
+        return NULL;
+    LzwEnt *tab = (LzwEnt *)malloc(4096 * sizeof(LzwEnt));
+    Py_ssize_t ocap = buf.len * 4 + 256, olen = 0;
+    unsigned char *out = (unsigned char *)malloc((size_t)ocap);
+    PyObject *res = NULL;
+    if (!tab || !out) {
+        PyErr_NoMemory();
+        goto done;
+    }
+    for (int i = 0; i < 256; i++) {
+        tab[i].prefix = -1;
+        tab[i].len = 1;
+        tab[i].first = tab[i].last = (unsigned char)i;
+    }
+    const unsigned char *p = (const unsigned char *)buf.buf;
+    long long tlen = 258;
+    int width = 9, prev = -1, bitcnt = 0;
+    unsigned long bitbuf = 0;
+    for (Py_ssize_t i = 0; i < buf.len; i++) {
+        bitbuf = ((bitbuf << 8) | p[i]) & 0xFFFFFFUL;
+        bitcnt += 8;
+        while (bitcnt >= width) {
+            int code = (int)((bitbuf >> (bitcnt - width)) & ((1UL << width) - 1));
+            bitcnt -= width;
+            if (code == 256) { /* Clear */
+                tlen = 258;
+                width = 9;
+                prev = -1;
+                continue;
+            }
+            if (code == 257) /* EOD */
+                goto finish;
+            int ent = code;
+            if (prev < 0) {
+                if (code >= tlen) {
+                    res = PyUnicode_FromFormat("invalid initial LZW code %d",
+                                               code);
+                    goto done;
+                }
+            } else if (code < tlen || code == tlen) {
+                /* table.append(prev + entry[:1]); for code == len(table)
+                 * the entry is that new one: prev + prev[:1] */
+                if (tlen < 4096) {
+                    LzwEnt *e = &tab[tlen];
+                    e->prefix = prev;
+                    e->len = tab[prev].len + 1;
+                    e->first = tab[prev].first;
+                    e->last = code < tlen ? tab[code].first : tab[prev].first;
+                }
+                tlen++;
+            } else {
+                res = PyUnicode_FromFormat("invalid LZW code %d", code);
+                goto done;
+            }
+            int len = tab[ent].len;
+            if (olen + len > ocap) {
+                Py_ssize_t nc = ocap * 2 > olen + len ? ocap * 2 : olen + len;
+                if (nc > cap + 8192 && cap + 8192 >= olen + len)
+                    nc = (Py_ssize_t)(cap + 8192);
+                unsigned char *nb = (unsigned char *)realloc(out, (size_t)nc);
+                if (!nb) {
+                    PyErr_NoMemory();
+                    goto done;
+                }
+                out = nb;
+                ocap = nc;
+            }
+            for (int k = len - 1, c = ent; k >= 0; k--, c = tab[c].prefix)
+                out[olen + k] = tab[c].last;
+            olen += len;
+            if (olen > cap) {
+                res = PyUnicode_FromString("LZW output exceeds size limit");
+                goto done;
+            }
+            prev = ent;
+            if (tlen + early >= (1LL << width) && width < 12)
+                width++;
+        }
+    }
+finish:
+    res = PyBytes_FromStringAndSize((const char *)out, olen);
+done:
+    free(tab);
+    free(out);
+    PyBuffer_Release(&buf);
+    return res;
 }
 
 /* ======================================================================== */
@@ -6781,9 +7630,14 @@ static PyMethodDef methods[] = {
     {"parse_xref_section", parse_xref_section, METH_VARARGS,
      "strict 20-byte traditional xref section + trailer; None = bail"},
     {"xref_chain", xref_chain, METH_VARARGS,
-     "traditional-xref /Prev chain -> (entries, trailer); None = bail"},
+     "parse_xref_chain -> (entries, trailer, mode); None = bail"},
+    {"recover_xref", recover_xref_c, METH_VARARGS,
+     "recover_xref -> (entries, trailer); None = bail"},
     {"get_object", c_get_object, METH_VARARGS,
-     "reader.get_object for cached/free/in-use entries; BAIL = bail"},
+     "reader.get_object for cached/free/in-use/compressed entries; "
+     "BAIL = bail"},
+    {"lzw_decode", lzw_decode, METH_VARARGS,
+     "decode_lzw -> bytes, or the FilterError message as str"},
     {"flatten_pages", flatten_pages, METH_VARARGS,
      "flatten_page_tree's Page list; None = bail"},
     {"page_content", page_content_c, METH_VARARGS,
@@ -6873,6 +7727,18 @@ PyMODINIT_FUNC PyInit_oxpdf_cscan(void)
     IN(k_Prev, "Prev");
     IN(k_XRefStm, "XRefStm");
     IN(k_Page, "Page");
+    IN(s_objstm_cache, "_objstm_cache");
+    IN(s_recovered, "recovered");
+    IN(s_resolve, "resolve");
+    IN(s_decode, "decode");
+    IN(k_W, "W");
+    IN(k_Size, "Size");
+    IN(k_Index, "Index");
+    IN(k_N, "N");
+    IN(k_First, "First");
+    IN(k_Info, "Info");
+    IN(k_ID, "ID");
+    IN(g_c_str, "c");
     IN(f_name, "name");
     IN(f_font_type, "font_type");
     IN(f_encoding, "encoding");

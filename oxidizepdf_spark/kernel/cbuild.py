@@ -12,11 +12,13 @@ pinned to its Python original by the differential tests
 - the content interpreter loop (``run_page``: content.py's fused
   parse_and_run loop, fast-show and layout modes) and the layout merge
   (``merge_close``, ``reconstruct_text``);
-- the document skeleton: the xref chain and one traditional section with
-  its trailer (``xref_chain``, ``parse_xref_section``: xref.py), the object
-  parse and fetch (``parse_indirect``, ``get_object``: reader.py), the page
-  tree and the /Contents assembly (``flatten_pages``, ``page_content``:
-  pages.py);
+- the document skeleton: the xref chain with its xref streams and hybrid
+  /XRefStm, one traditional section with its trailer and the recovery scan
+  (``xref_chain``, ``parse_xref_section``, ``recover_xref``: xref.py), the
+  object parse and fetch, object-stream members included (``parse_indirect``,
+  ``get_object``: reader.py), the page tree and the /Contents assembly
+  (``flatten_pages``, ``page_content``: pages.py);
+- the LZW filter (``lzw_decode``: filters.decode_lzw);
 - the text path: the CMap parse (``parse_cmap``: cmap.CMap.parse with
   tokenize_cmap, for the ToUnicode streams fonts.extract_font_info reads)
   and, inside ``run_page``, the per-font code table that decodes and
@@ -26,14 +28,13 @@ pinned to its Python original by the differential tests
 
 Every entry point returns a complete result or a bail (None, or ``BAIL``
 for ``get_object`` and ``parse_cmap``). On a bail the caller runs that
-whole step in Python, which stays the behavior authority: encrypted and
-recovered-mode documents, xref streams, compressed objects, an indirect
-/Length and any input the C code is not byte-certain about take the
-Python path. A CMap with usecmap or cid sections bails to the Python
-parse; a run goes to Interpreter._decode for a Type0 font without
-ToUnicode (CJK/CID tables), 3- or 4-byte ToUnicode codes, composite
-/Widths or CID width tables, no font, or a decode that meets
-decode_text's acceptance gate or a sanitize trigger.
+whole step in Python, which stays the behavior authority: encrypted
+documents, an indirect /Length and any input the C code is not
+byte-certain about take the Python path. A CMap with usecmap or cid
+sections bails to the Python parse; a run goes to Interpreter._decode
+for a Type0 font without ToUnicode (CJK/CID tables), 3- or 4-byte
+ToUnicode codes, composite /Widths or CID width tables, no font, or a
+decode that meets decode_text's acceptance gate or a sanitize trigger.
 
 This is the same deploy-anywhere story a 1000-executor cluster needs: the
 source rides with the package (``--py-files``), each executor compiles

@@ -288,7 +288,22 @@ def decode_ascii85(data: bytes) -> bytes:
 
 def decode_lzw(data: bytes, early_change: int = 1) -> bytes:
     """LZWDecode (filters.rs:1836-1998). PDF flavor: 9-bit initial codes,
-    Clear=256, EOD=257, code width bumps at table size 2^w - early_change."""
+    Clear=256, EOD=257, code width bumps at table size 2^w - early_change.
+
+    With the C kernel loaded, bytes-like data decodes natively
+    (kernel/_cscan.c ``lzw_decode``: the same width rules, error messages
+    and ``MAX_DECOMPRESSED_SIZE`` cap); the loop below is the authority it
+    is tested against."""
+    from . import content as _content
+
+    ck = _content._CSCAN
+    if (ck is not None and isinstance(data, (bytes, bytearray, memoryview))
+            and isinstance(early_change, int)
+            and -(1 << 30) < early_change < (1 << 30)):
+        out = ck.lzw_decode(data, early_change, MAX_DECOMPRESSED_SIZE)
+        if isinstance(out, str):
+            raise FilterError(out)
+        return out
     CLEAR, EOD = 256, 257
     out = bytearray()
     table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]

@@ -10,12 +10,13 @@ Reimplements (in-UDF, per document):
   space separator per the spec's "treat as one stream" rule
 
 Both run natively when the C kernel is loaded (kernel/_cscan.c
-``flatten_pages`` and ``page_content``, on the C object fetch). Each C
-call returns the complete result or None; on None the Python code below
-runs the whole step and stays the authority. The C steps give up on
-encrypted and recovered-mode documents and on any object the C fetch
-bails on; a /Filter or decode parameters on a content stream go through
-``_safe_decode`` below, called from C.
+``flatten_pages`` and ``page_content``, on the C object fetch, for strict
+and recovered readers and object-stream members alike). Each C call
+returns the complete result or None; on None the Python code below runs
+the whole step and stays the authority. The C steps give up on encrypted
+documents and on any object the C fetch bails on; a /Filter or decode
+parameters on a content stream go through ``_safe_decode`` below, called
+from C.
 """
 
 from __future__ import annotations

@@ -10,11 +10,11 @@ Reimplements (in-UDF, per document):
 - encryption detection (detect-only, descoped): reader.rs:350-409
 
 The C kernel (kernel/_cscan.c) runs the happy path of three steps: the
-xref chain (via xref.parse_xref_chain), the object parse
-(``parse_indirect``) and the whole object fetch (``get_object``). Each
-returns a complete result or a bail; on a bail the Python code here runs
-that step from the start and stays the authority. Encrypted and
-recovered-mode documents always fetch in Python.
+xref chain and recovery (via xref.parse_xref_chain), the object parse
+(``parse_indirect``) and the whole object fetch (``get_object``), for
+strict and recovered readers alike. Each returns a complete result or a
+bail; on a bail the Python code here runs that step from the start and
+stays the authority. Encrypted documents always fetch in Python.
 """
 
 from __future__ import annotations
@@ -170,12 +170,15 @@ class PdfReader:
     def get_object(self, num: int, gen: int = 0):
         """xref lookup → seek → parse → cache (reader.rs:564-650).
 
-        Fast path: the C fetch (kernel/_cscan.c get_object) serves free and
-        in-use entries of unencrypted strict-mode documents, stream payloads
-        with a direct /Length included, and fills the same ``_cache``. It
-        answers ``BAIL`` for a missing entry, a compressed entry, a wrong
-        object at the offset, an indirect /Length or any parse it is not
-        byte-certain about, and the code below then fetches the object."""
+        Fast path: the C fetch (kernel/_cscan.c get_object) serves free,
+        in-use and compressed entries of unencrypted documents, strict or
+        recovered, stream payloads with a direct /Length included, and
+        fills the same ``_cache`` (and, for an object stream, the same
+        ``_objstm_cache`` members). It answers ``BAIL`` for a missing entry
+        (``fill_missing_objects`` below), a wrong object at the offset
+        (``_rescan_for``), an indirect /Length, an indirect or odd
+        object-stream /N or /First, or any parse it is not byte-certain
+        about, and the code below then fetches the object."""
         key = (num, gen)
         if key in self._cache:
             return self._cache[key]

@@ -10,13 +10,17 @@ Reimplements (in-UDF, per document):
 - hybrid /XRefStm hop:         xref.rs (hybrid-reference files)
 - missing-object scan + full recovery: xref.rs:1022-1265, 115-180
 
-The C kernel (kernel/_cscan.c) runs two of these natively: ``xref_chain``
-(the whole chain of traditional sections: startxref, entries, trailers,
-/Prev with the same cycle guard) and ``parse_xref_section`` (one strict
-20-byte-stride section and its trailer). Each returns the complete result
-or None; on None the Python code here runs that step from the start and
-stays the authority, so xref streams, an int /XRefStm, flexible layouts
-and recovery are always Python.
+The C kernel (kernel/_cscan.c) runs three of these natively:
+``xref_chain`` (the whole chain: startxref, traditional sections and xref
+streams with their trailers, the hybrid /XRefStm hop, /Prev with the same
+cycle guard, and recovery when nothing parses), ``parse_xref_section`` (one
+strict 20-byte-stride section and its trailer) and ``recover_xref`` (the
+header scan and the /Root search). Xref-stream and object-stream payloads
+decode through the Python ``Stream.decode``. Each returns the complete
+result or None; on None the Python code here runs that step from the start
+and stays the authority: flexible section layouts, a bool, float or huge
+/Prev or /XRefStm, an exception from a stream decode, and any object the C
+parser is not byte-certain about take this path.
 """
 
 from __future__ import annotations
@@ -202,19 +206,19 @@ def parse_xref_chain(data: bytes, reader, start_offset: int | None = None):
 
     Returns (entries, trailer, mode) where mode is 'strict' or 'recovered'.
 
-    When the C kernel is loaded, a chain of traditional sections is walked
-    natively (xref_chain, _cscan.c: startxref, sections, trailers, /Prev
-    with the same cycle guard and hop cap). It returns the complete result
-    or None; on None this function walks the chain itself, so an xref
-    stream, an int /XRefStm, a section the C parser is not byte-certain
-    about or a chain that needs recovery always takes this Python path.
+    When the C kernel is loaded, the chain is walked natively (xref_chain,
+    _cscan.c: startxref, traditional sections, xref streams, /XRefStm,
+    /Prev with the same cycle guard and hop cap, and the recovery scan when
+    nothing parses). It returns the complete result or None; on None this
+    function walks the chain itself, so a section the C parser is not
+    byte-certain about takes this Python path.
     """
     if start_offset is None:
         ck = _content._CSCAN
         if ck is not None:
-            r = ck.xref_chain(data)
+            r = ck.xref_chain(data, reader.lenient)
             if r is not None:
-                return r[0], r[1], "strict"
+                return r
         start_offset = find_xref_offset(data)
     entries: dict[int, tuple] = {}
     trailer: dict = {}
@@ -311,7 +315,15 @@ def recover_xref(data: bytes):
     (/Type /XRef) object's dict, or a /Type /Catalog object. Object-stream
     (/Type /ObjStm) containers found by the scan are decoded and their
     members registered as compressed entries so catalogs packed inside an
-    ObjStm (PDF 1.5 files) survive recovery too."""
+    ObjStm (PDF 1.5 files) survive recovery too.
+
+    When the C kernel is loaded, the whole scan runs natively
+    (recover_xref, _cscan.c); on its None the code below runs."""
+    ck = _content._CSCAN
+    if ck is not None:
+        r = ck.recover_xref(data)
+        if r is not None:
+            return r[0], r[1], "recovered"
     entries = scan_object_headers(data)
     trailer: dict = {}
     # 1) the last parseable `trailer` keyword dict with /Root

@@ -8,6 +8,7 @@ can't build the extension (the engine then runs pure Python anyway)."""
 
 from __future__ import annotations
 
+import re
 import sys
 
 import pytest
@@ -813,11 +814,15 @@ def _skeleton(data: bytes, lenient: bool = True):
             out.append(_err(e))
     out.append(sorted(rdr._cache))
     out.append([_canon(rdr._cache[k]) for k in sorted(rdr._cache)])
+    out.append([(k, _canon(rdr._objstm_cache[k]))
+                for k in sorted(rdr._objstm_cache)])
     for num in sorted(rdr.xref):
         try:
             out.append((num, _canon(rdr.get_object(num))))
         except Exception as e:
             out.append((num, _err(e)))
+    out.append([(k, _canon(rdr._objstm_cache[k]))
+                for k in sorted(rdr._objstm_cache)])
     return out
 
 
@@ -954,6 +959,234 @@ def _flate_predictor_content(tags: bytes) -> bytes:
     return zlib.compress(bytes(enc))
 
 
+def _xs_obj(num: int, rows: list, w=(1, 2, 1), index=None,
+            extra: bytes = b"", predictor: bool = True) -> bytes:
+    """Object ``num``: an /XRef stream over ``rows`` of (type, f2, f3),
+    each field big-endian in its /W width (a zero width writes nothing),
+    FlateDecode with or without /Predictor 12 Up rows."""
+    import zlib
+
+    data = b"".join(b"".join(v.to_bytes(k, "big") for v, k in zip(r, w) if k)
+                    for r in rows)
+    parms = b""
+    cols = sum(w)
+    if predictor and cols:
+        prev, pred = bytes(cols), bytearray()
+        for i in range(0, len(data), cols):
+            row = data[i:i + cols]
+            pred.append(2)
+            pred += bytes((row[j] - prev[j]) & 0xFF for j in range(cols))
+            prev = row
+        data = bytes(pred)
+        parms = b"/DecodeParms << /Predictor 12 /Columns %d >> " % cols
+    payload = zlib.compress(data)
+    idx = (b"" if index is None
+           else b"/Index [%s] " % b" ".join(b"%d" % x for x in index))
+    return (b"%d 0 obj\n<< /Type /XRef /W [%s] %s/Filter /FlateDecode %s%s"
+            b"/Length %d >>\nstream\n" % (
+                num, b" ".join(b"%d" % x for x in w), idx, parms, extra,
+                len(payload))
+            + payload + b"\nendstream\nendobj\n")
+
+
+def _objstm_obj(num: int, members: dict, header: bytes | None = None,
+                n: int | None = None, first: int | None = None,
+                extra: bytes = b"") -> bytes:
+    """Object ``num``: an /ObjStm packing ``members`` (number → body), its
+    (number, offset) header, /N and /First overridable."""
+    import zlib
+
+    pairs, parts, pos = [], [], 0
+    for onum, body in members.items():
+        pairs.append(b"%d %d" % (onum, pos))
+        parts.append(body)
+        pos += len(body) + 1
+    head = header if header is not None else b" ".join(pairs) + b"\n"
+    comp = zlib.compress(head + b"\n".join(parts))
+    return (b"%d 0 obj\n<< /Type /ObjStm /N %s /First %d /Filter /FlateDecode "
+            b"/Length %d %s>>\nstream\n" % (
+                num, b"%d" % (len(members) if n is None else n)
+                if not isinstance(n, bytes) else n,
+                len(head) if first is None else first, len(comp), extra)
+            + comp + b"\nendstream\nendobj\n")
+
+
+def _xs_pdf(objs: dict, members: dict | None = None, container: int = 6,
+            stm_kw: dict | None = None, w=(1, 2, 1), index=None,
+            trailer: bytes = b"/Root 1 0 R", rows_edit=None,
+            predictor: bool = True, base: bytes = b"%PDF-1.5\n") -> bytes:
+    """A PDF whose only cross-reference is an xref stream: ``objs`` written
+    directly, ``members`` packed into object stream ``container``."""
+    out = bytearray(base)
+    rows = {}
+    for num, body in objs.items():
+        rows[num] = (1, len(out), 0)
+        out += b"%d 0 obj\n" % num + body + b"\nendobj\n"
+    if members is not None:
+        for i, num in enumerate(members):
+            rows[num] = (2, container, i)
+        rows[container] = (1, len(out), 0)
+        out += _objstm_obj(container, members, **(stm_kw or {}))
+    xnum = max(rows) + 1
+    rows[0] = (0, 0, 0)
+    rows[xnum] = (1, len(out), 0)
+    row_list = [rows.get(i, (0, 0, 0)) for i in range(xnum + 1)]
+    if rows_edit is not None:
+        row_list = rows_edit(row_list)
+    xoff = len(out)
+    out += _xs_obj(xnum, row_list, w, index,
+                   b"/Size %d %s " % (xnum + 1, trailer), predictor)
+    out += b"startxref\n%d\n%%%%EOF\n" % xoff
+    return bytes(out)
+
+
+def _update(base: bytes, body: bytes, section) -> bytes:
+    """``base`` plus an incremental update: ``body``, then the section that
+    ``section(prev_offset, own_offset, body_offsets)`` returns."""
+    prev = int(base.rsplit(b"startxref", 1)[1].split()[0])
+    out = bytearray(base)
+    offs = {}
+    for m in re.finditer(rb"(\d+) 0 obj", body):
+        offs[int(m.group(1))] = len(out) + m.start()
+    out += body
+    own = len(out)
+    out += section(prev, own, offs)
+    out += b"startxref\n%d\n%%%%EOF\n" % own
+    return bytes(out)
+
+
+def _recovered(pdf: bytes) -> bytes:
+    """The same file with its startxref offset broken (recovery)."""
+    head, sep, tail = pdf.rpartition(b"startxref\n")
+    return head + sep + b"99999999" + tail[tail.index(b"\n"):]
+
+
+def _crafted_open_cases():
+    """Xref streams, object streams, mixed /Prev chains, hybrid /XRefStm
+    files and recovery shapes."""
+    from oxidizepdf_spark.corpus import lzw_encode
+
+    objs = _objects()
+    direct = {4: objs[4]}
+    members = {k: objs[k] for k in (1, 2, 3, 5)}
+    cases = {"xs_plain": _xs_pdf(objs)}
+    cases["xs_no_predictor"] = _xs_pdf(objs, predictor=False)
+    cases["xs_objstm"] = _xs_pdf(direct, members)
+    cases["xs_index_subsections"] = _xs_pdf(objs, index=[0, 3, 3, 4])
+    cases["xs_index_gaps"] = _xs_pdf(objs, index=[0, 2, 5, 3, 30, 2])
+    cases["xs_index_past_data"] = _xs_pdf(objs, index=[0, 40])
+    cases["xs_index_odd_length"] = _xs_pdf(objs, index=[0, 7, 9])
+    cases["xs_w_zero_type"] = _xs_pdf(objs, w=(0, 4, 1))
+    cases["xs_w_zero_gen"] = _xs_pdf(objs, w=(1, 3, 0))
+    cases["xs_w_four_fields"] = _xs_pdf(
+        objs, w=(1, 2, 1, 2), rows_edit=lambda r: [x + (513,) for x in r])
+    cases["xs_w_8byte"] = _xs_pdf(
+        objs, w=(1, 8, 2),
+        rows_edit=lambda r: r[:5] + [(1, 2**64 - 7, 0)] + r[6:])
+    cases["xs_w_short"] = _xs_pdf(objs, w=(1, 2))
+    cases["xs_w_zero_row"] = _xs_pdf(objs, w=(0, 0, 0))
+    cases["xs_type_3_rows"] = _xs_pdf(
+        objs, rows_edit=lambda r: [(3, 1, 1)] + r[1:3] + [(7, 0, 0)] + r[4:])
+    cases["xs_strict_length_wrong"] = _xs_pdf(objs).replace(
+        b"/Length 3", b"/Length 9", 1)
+    xs = _xs_pdf(objs)
+    cut = xs.rindex(b"/Type /XRef")
+    cases["xs_indirect_length"] = xs[:cut] + re.sub(
+        rb"/Length \d+ >>", b"/Length 5 0 R >>", xs[cut:], count=1)
+    cases["xs_objstm_first_past_data"] = _xs_pdf(
+        direct, members, stm_kw={"first": 900})
+    cases["xs_objstm_n_above_pairs"] = _xs_pdf(direct, members,
+                                               stm_kw={"n": 10})
+    cases["xs_objstm_n_zero"] = _xs_pdf(direct, members, stm_kw={"n": 0})
+    cases["xs_objstm_member_number_mismatch"] = _xs_pdf(
+        direct, members, stm_kw={"header": b"9 0 2 34 3 86 5 221\n"})
+    cases["xs_objstm_index_mismatch"] = _xs_pdf(
+        direct, members,
+        rows_edit=lambda r: r[:1] + [(2, 6, 3), (2, 6, 0)] + r[3:])
+    cases["xs_objstm_extends"] = _xs_pdf(
+        direct, members, stm_kw={"extra": b"/Extends 7 0 R "})
+    cases["xs_objstm_lists_itself"] = _xs_pdf(
+        direct, {**members, 6: b"<< /Self true >>"})
+    cases["xs_objstm_own_container"] = _xs_pdf(
+        direct, members, rows_edit=lambda r: r[:6] + [(2, 6, 0)] + r[7:])
+    cases["xs_objstm_bad_member"] = _xs_pdf(
+        direct, {**members, 8: b"endobj", 9: b"[1 2", 10: b"(unclosed"})
+    cases["xs_objstm_n_ref"] = _xs_pdf({**direct, 9: b"4"}, members,
+                                       stm_kw={"n": b"9 0 R"})
+    # a stream section whose /Prev is a classic section, and the reverse
+    plain = _pdf(objs)
+    new4 = b"4 0 obj\n<< /Length 13 >>\nstream\nBT (New) Tj ET\nendstream\nendobj\n"
+    cases["xs_prev_classic"] = _update(plain, new4, lambda prev, own, offs: (
+        _xs_obj(7, [(1, offs[4], 0), (1, own, 0)], index=[4, 1, 7, 1],
+                extra=b"/Size 8 /Root 1 0 R /Prev %d " % prev)))
+    xs = cases["xs_plain"]
+    cases["classic_prev_xs"] = _update(xs, new4, lambda prev, own, offs: (
+        b"xref\n0 1\n0000000000 65535 f \n4 1\n%010d 00000 n \n"
+        b"trailer\n<< /Size 7 /Root 1 0 R /Prev %d >>\n" % (offs[4], prev)))
+    # stream /Prev → classic /Prev → the stream again
+    head = _update(plain, b"", lambda prev, own, offs: _xs_obj(
+        7, [(1, own, 0)], index=[7, 1],
+        extra=b"/Size 8 /Root 1 0 R /Prev %d " % (own + 400)))
+    own = int(head.rsplit(b"startxref", 1)[1].split()[0])
+    pad = own + 400 - len(head)
+    cases["prev_cycle_mixed"] = (
+        head + b" " * pad + b"xref\n0 1\n0000000000 65535 f \n"
+        b"trailer\n<< /Size 8 /Prev %d >>\nstartxref\n%d\n%%%%EOF\n" % (
+            own, own))
+    # hybrid file: the classic table lists the direct objects, /XRefStm
+    # the object-stream members
+    body, _ = _body(direct)
+    body = bytearray(body)
+    off6 = len(body)
+    body += _objstm_obj(6, members)
+    off7 = len(body)
+    body += _xs_obj(7, [(2, 6, 0), (2, 6, 1), (2, 6, 2), (2, 6, 3)],
+                    index=[1, 3, 5, 1], extra=b"/Size 8 ")
+    off4 = body.index(b"4 0 obj")
+    xoff = len(body)
+    body += (b"xref\n0 1\n0000000000 65535 f \n4 1\n%010d 00000 n \n"
+             b"6 2\n%010d 00000 n \n%010d 00000 n \n" % (off4, off6, off7))
+    tail = b"trailer\n<< /Size 8 /Root 1 0 R /XRefStm %s >>\nstartxref\n%d\n%%%%EOF\n"
+    cases["hybrid_xrefstm"] = bytes(body) + tail % (b"%d" % off7, xoff)
+    cases["hybrid_xrefstm_bad"] = bytes(body) + tail % (b"%d" % off4, xoff)
+    cases["hybrid_xrefstm_past_eof"] = bytes(body) + tail % (b"999999", xoff)
+    cases["hybrid_xrefstm_bool"] = bytes(body) + tail % (b"true", xoff)
+    # recovery: duplicates (the last one wins), `obj` inside stream data,
+    # an ObjStm catalog, the /XRef root, the /Catalog fallback, trailers
+    # that do not parse, no objects at all
+    dup = _objects()
+    cases["rec_duplicate_objects"] = _recovered(_pdf(dup)).replace(
+        b"startxref", b"4 0 obj\n<< /Length 13 >>\nstream\nBT (Dup) Tj ET\n"
+        b"endstream\nendobj\nstartxref", 1)
+    cases["rec_obj_in_stream"] = _recovered(_pdf(_objects(
+        content=b"BT /F1 12 Tf (1 0 obj << /Type /Catalog >>) Tj ET 7 0 obj")))
+    cases["rec_obj_in_stream_late"] = _recovered(_pdf({**_objects(), 6: (
+        b"<< /Length 20 >>\nstream\n3 0 obj\n<< /X 1 >>\nendstream")}))
+    cases["rec_xs_objstm"] = _recovered(cases["xs_objstm"])
+    cases["rec_xs_root"] = _recovered(cases["xs_plain"])
+    cases["rec_xs_no_root"] = _recovered(_xs_pdf(objs, trailer=b""))
+    cases["rec_trailer_no_root"] = _recovered(_pdf(objs, trailer=b""))
+    cases["rec_trailer_junk_after"] = _recovered(plain) + b"%trailer junk\n"
+    cases["rec_trailer_not_dict"] = _recovered(plain) + b"trailer 12 0 R\n"
+    cases["rec_trailer_eof"] = _recovered(plain) + b"trailer"
+    cases["rec_trailer_brace"] = _recovered(plain) + b"trailer {\n"
+    cases["rec_no_catalog"] = _recovered(_pdf({
+        k: v.replace(b"/Catalog", b"/Katalog") for k, v in objs.items()},
+        trailer=b""))
+    cases["rec_no_objects"] = b"%PDF-1.4\nnothing here\n%%EOF\n"
+    cases["rec_long_number"] = _recovered(plain) + b"1234567890123456789012 0 obj\n"
+    cases["rec_header_shapes"] = _recovered(plain) + (
+        b"x12 0 obj\n13 0 objx\n14\t0\x0bobj\n15 0 obj_\n16  0\r\nobj\n99 0 obj")
+    cases["rec_objstm_n_ref"] = _recovered(cases["xs_objstm_n_ref"])
+    cases["rec_objstm_bad_zlib"] = _recovered(cases["xs_objstm"]).replace(
+        b"/Filter /FlateDecode >>", b"/Filter /FooDecode >>")
+    lzw = _objects(content=lzw_encode(_CONTENT, 0),
+                   content_dict=b"/Filter /LZWDecode "
+                                b"/DecodeParms << /EarlyChange 0 >>")
+    cases["lzw_early_change_0"] = _pdf(lzw)
+    return cases
+
+
 def _crafted_skeleton_cases():
     from oxidizepdf_spark.corpus import (
         build_encrypted_pdf,
@@ -1060,6 +1293,7 @@ def _crafted_skeleton_cases():
     cases["semicolon_obj"] = plain.replace(b"3 0 obj\n", b"3 0 obj;\n")
     cases["semicolon_ref"] = plain.replace(b"/Contents 4 0 R", b"/Contents 4 0 R;")
     cases["semicolon_name"] = plain.replace(b"/Type /Page ", b"/Type /Pa;ge ")
+    cases.update(_crafted_open_cases())
     return cases
 
 
@@ -1100,7 +1334,7 @@ def test_differential_skeleton_mutations():
               b"\x00", b"endstream", b"obj", b"trailer", b"xref", b"/Prev 0",
               b"/Kids", b"/Type /Page"]
     rng = random.Random(2)
-    for _ in range(400):
+    for _ in range(1200):
         data = bytearray(rng.choice(cases))
         for _edit in range(rng.randrange(1, 4)):
             i = rng.randrange(len(data))
@@ -1120,25 +1354,45 @@ def test_differential_skeleton_mutations():
 
 
 def test_skeleton_fast_path_taken():
-    """The crafted plain document opens, flattens and assembles in C (no
-    bail), and each listed shape bails to Python."""
-    import re
-
+    """The crafted documents open, flatten and assemble in C (no bail):
+    classic and xref-stream chains, a recovery, a recovered reader's
+    fetch, page tree and contents, an object-stream member and an LZW
+    payload; and each listed shape bails to Python."""
+    from oxidizepdf_spark.corpus import lzw_encode
+    from oxidizepdf_spark.kernel.filters import MAX_DECOMPRESSED_SIZE
     from oxidizepdf_spark.kernel.pages import MAX_TREE_DEPTH, Page
     from oxidizepdf_spark.kernel.reader import PdfReader
 
     ck = C._CSCAN
     cases = _crafted_skeleton_cases()
-    plain = cases["plain"]
-    assert ck.xref_chain(plain) is not None
-    rdr = PdfReader(plain)
-    pages = ck.flatten_pages(rdr, Page, MAX_TREE_DEPTH)
-    assert pages is not None and len(pages) == 1
-    assert ck.page_content(rdr, pages[0].dict["Contents"], None) == _CONTENT
-    for label in ("xref_stream", "xrefstm_int", "prev_float", "no_startxref",
-                  "semicolon_trailer"):
-        assert ck.xref_chain(cases[label]) is None, label
-    for label in ("encrypted_rc4", "missing_root"):
+    for label, mode in (("plain", "strict"), ("xref_stream", "strict"),
+                        ("xref_stream_objstm", "strict"),
+                        ("xs_prev_classic", "strict"),
+                        ("hybrid_xrefstm", "strict"),
+                        ("no_startxref", "recovered"),
+                        ("rec_xs_objstm", "recovered")):
+        r = ck.xref_chain(cases[label], True)
+        assert r is not None and r[2] == mode, label
+    assert ck.recover_xref(cases["rec_duplicate_objects"]) is not None
+    for label in ("plain", "no_startxref", "missing_root", "rec_xs_objstm",
+                  "xref_stream_objstm"):
+        rdr = PdfReader(cases[label])
+        pages = ck.flatten_pages(rdr, Page, MAX_TREE_DEPTH)
+        assert pages is not None and len(pages) == 1, label
+        assert ck.page_content(rdr, pages[0].dict["Contents"],
+                               None) == _CONTENT, label
+        assert ck.get_object(rdr, 1, 0) is not ck.BAIL, label
+    # a compressed entry: the catalog inside the object stream
+    rdr = PdfReader(cases["xref_stream_objstm"])
+    assert rdr.xref[1][0] == "c"
+    assert ck.get_object(rdr, 1, 0)["Type"] == "Catalog"
+    assert rdr._objstm_cache
+    assert ck.lzw_decode(lzw_encode(_CONTENT), 1,
+                         MAX_DECOMPRESSED_SIZE) == _CONTENT
+    for label in ("prev_float", "semicolon_trailer", "hybrid_xrefstm_bool",
+                  "rec_long_number"):
+        assert ck.xref_chain(cases[label], True) is None, label
+    for label in ("encrypted_rc4",):
         rdr = PdfReader(cases[label])
         assert ck.flatten_pages(rdr, Page, MAX_TREE_DEPTH) is None, label
         assert ck.get_object(rdr, 1, 0) is ck.BAIL, label
@@ -1146,9 +1400,77 @@ def test_skeleton_fast_path_taken():
                          cases["indirect_length"])
     for label, num in (("wrong_object_offset", 4),
                        ("indirect_length", int(indirect.group(1))),
-                       ("contents_dangling_ref", 99)):
+                       ("contents_dangling_ref", 99),
+                       ("xs_objstm_n_ref", 1),
+                       ("xs_objstm_own_container", 6)):
         rdr = PdfReader(cases[label])
         assert ck.get_object(rdr, num, 0) is ck.BAIL, label
+
+
+def _lzw_pack(codes) -> bytes:
+    """(code, width) pairs packed MSB-first, zero-padded to a byte."""
+    buf = nbits = 0
+    out = bytearray()
+    for code, width in codes:
+        buf = (buf << width) | code
+        nbits += width
+        while nbits >= 8:
+            out.append((buf >> (nbits - 8)) & 0xFF)
+            nbits -= 8
+    if nbits:
+        out.append((buf << (8 - nbits)) & 0xFF)
+    return bytes(out)
+
+
+def test_differential_lzw(monkeypatch):
+    """The C decode_lzw vs the Python loop: both early-change rules,
+    Clear codes mid-stream, a table grown past 4,096 entries, invalid
+    initial and later codes, a missing EOD, odd early-change values, random
+    bytes, and output over the size cap."""
+    import random
+
+    from oxidizepdf_spark.corpus import lzw_encode
+    from oxidizepdf_spark.kernel import filters as F
+
+    def both(data, early=1):
+        def run():
+            try:
+                return F.decode_lzw(data, early)
+            except Exception as e:
+                return _err(e)
+
+        got_c, got_py = _both_paths(run)
+        assert got_c == got_py, (data[:40], early)
+        return got_c
+
+    rng = random.Random(5)
+    texts = [b"", b"a", _CONTENT, b"abababababababababab" * 50,
+             bytes(rng.randrange(256) for _ in range(9000)),
+             bytes(rng.randrange(4) for _ in range(30000))]
+    for text in texts:
+        for enc in (0, 1):
+            for dec in (0, 1):
+                got = both(lzw_encode(text, enc), dec)
+                if enc == dec and len(text) < 9000:
+                    assert got == text
+    clear_mid = _lzw_pack([(256, 9), (65, 9), (66, 9), (258, 9), (256, 9),
+                           (67, 9), (68, 9), (258, 9), (259, 9), (257, 9)])
+    assert both(clear_mid) == b"ABABCDCDDC"
+    for codes in ([(256, 9), (300, 9)],            # invalid initial code
+                  [(65, 9), (400, 9)],             # invalid later code
+                  [(65, 9), (258, 9)],             # code == table size
+                  [(65, 9), (66, 9), (67, 9)],     # no EOD
+                  [(256, 9), (257, 9), (65, 9)],   # EOD first
+                  [(257, 9)]):
+        both(_lzw_pack(codes))
+    for early in (2, -1, 300, 5000):
+        both(lzw_encode(_CONTENT * 20, 1), early)
+    for _ in range(300):
+        both(bytes(rng.randrange(256) for _ in range(rng.randrange(1, 80))),
+             rng.choice((0, 1)))
+    monkeypatch.setattr(F, "MAX_DECOMPRESSED_SIZE", 1000)
+    got = both(lzw_encode(b"x" * 5000))
+    assert got == ("ERR", "FilterError", "LZW output exceeds size limit")
 
 
 # -- fonts and text decode: parse_cmap, the per-font code table ------------

@@ -12,6 +12,13 @@ figure comes from one replay (a busy host swings single runs by ±30%; never
 run Spark alongside). For each real-document fixture file that exists (the
 44-page Cold_Email book, the 38-page Higgs paper), best-of-reps timings in
 default and layout mode are added.
+
+Before the JSON line, a table splits the whole 16,000-document corpus by
+document class (strict classic xref, recovered, xref stream, object
+stream, LZW content, 50-page, HTML): documents, ``PdfReader`` +
+``flatten_page_tree`` µs/doc, ``extract_document_spans`` µs/doc and the
+class's share of the corpus's kernel time, each class at its best of
+``--reps``.
 """
 
 from __future__ import annotations
@@ -63,6 +70,84 @@ def replay_layers(seed: int, reps: int) -> dict:
     return best
 
 
+CLASSES = ("strict classic", "recovered", "xref stream", "object stream",
+           "LZW", "50-page", "HTML")
+_CASE_CLASS = {"X06": "xref stream", "X07": "object stream", "X04": "LZW",
+               "MEGA": "50-page", "HTML": "HTML"}
+
+
+def _doc_class(case: str, data: bytes | None) -> str:
+    """The document's class: a reader that opens in recovered mode is
+    ``recovered`` whatever its case; otherwise the corpus case names it."""
+    from oxidizepdf_spark.kernel.reader import PdfReader
+
+    if data is not None:
+        try:
+            if PdfReader(data).mode == "recovered":
+                return "recovered"
+        except Exception:
+            pass
+    return _CASE_CLASS.get(case, "strict classic")
+
+
+def class_table(seed: int, reps: int) -> list[tuple]:
+    """Rows of (class, docs, open+tree µs/doc, full µs/doc, kernel share)
+    over the whole ``N_DOCS`` corpus of ``seed``."""
+    from oxidizepdf_spark.corpus import all_cases, gen_doc
+    from oxidizepdf_spark.kernel.extract import (
+        decode_raw_payload,
+        extract_document_spans,
+    )
+    from oxidizepdf_spark.kernel.pages import flatten_page_tree
+    from oxidizepdf_spark.kernel.reader import PdfReader
+
+    cases = all_cases()
+    docs = {c: [] for c in CLASSES}
+    for i in range(N_DOCS):
+        row = gen_doc(i, seed, cases)[0]
+        triples = [(s["kind"], s["text"], s["media_ref"])
+                   for s in row["spans"]]
+        raw = [decode_raw_payload(t or "") for k, t, _m in triples
+               if k == "raw_pdf"]
+        docs[_doc_class(row["case"], raw[0] if raw else None)].append(
+            (triples, raw))
+    pc = time.perf_counter
+    best_open = dict.fromkeys(CLASSES, float("inf"))
+    best_full = dict.fromkeys(CLASSES, float("inf"))
+    for _ in range(max(reps, 1)):
+        for cls, items in docs.items():
+            t_open = 0.0
+            for _triples, raw in items:
+                for data in raw:
+                    t0 = pc()
+                    try:
+                        flatten_page_tree(PdfReader(data))
+                    except Exception:
+                        pass
+                    t_open += pc() - t0
+            t0 = pc()
+            for triples, _raw in items:
+                extract_document_spans(triples)
+            best_full[cls] = min(best_full[cls], pc() - t0)
+            best_open[cls] = min(best_open[cls], t_open)
+    total = sum(best_full.values())
+    rows = []
+    for cls in CLASSES:
+        n = max(len(docs[cls]), 1)
+        rows.append((cls, len(docs[cls]),
+                     None if cls == "HTML" else best_open[cls] / n * 1e6,
+                     best_full[cls] / n * 1e6, best_full[cls] / total))
+    return rows
+
+
+def print_class_table(rows: list[tuple]) -> None:
+    print("| class | docs | open+tree µs/doc | full µs/doc | share of kernel |")
+    print("|---|---|---|---|---|")
+    for cls, n, open_us, full_us, share in rows:
+        o = "-" if open_us is None else f"{open_us:.0f}"
+        print(f"| {cls} | {n} | {o} | {full_us:.0f} | {share:.0%} |")
+
+
 def fixture_legs(reps: int) -> dict:
     from oxidizepdf_spark.kernel.extract import extract_pdf_bytes
     from oxidizepdf_spark.kernel.textstate import ExtractionOptions
@@ -87,6 +172,7 @@ def main() -> None:
 
     from oxidizepdf_spark.kernel import content
 
+    print_class_table(class_table(args.seed, args.reps))
     out = {"c_fast_path": int(content._CSCAN is not None)}
     out.update(replay_layers(args.seed, args.reps))
     out.update(fixture_legs(args.reps))
