@@ -38,6 +38,7 @@ static PyObject *g_inline_tok;               /* content._InlineTok */
 static PyObject *g_hexval;                   /* content._hexval (error parity) */
 static PyObject *g_bi_helper;                /* content._c_bi */
 static PyObject *g_bdc_helper;               /* content._c_bdc */
+static PyObject *g_scan_bi;                  /* content._scan_bi */
 static PyObject *g_nl, *g_sp, *g_empty;      /* "\n", " ", "" */
 static PyObject *g_gray, *g_rgb, *g_cmyk;    /* color space tags */
 /* layout stage (setup_layout): fragment emission for preserve_layout /
@@ -107,7 +108,33 @@ typedef struct {
     int scale_dirty;
     Val *stk;
     Py_ssize_t sp, cap;
+    /* run_pages (native): no Interpreter behind the loop.  The state its
+     * Python object would hold lives here, and a step the loop would hand
+     * to an Interpreter method either runs natively or bails the page
+     * (bail = 1, no exception). */
+    int native, bail;
+    double leading;        /* st.leading */
+    PyObject *fonts;       /* the page's {name: FontInfo} (owned) */
+    PyObject *cur_info;    /* fonts.get(st.font_name), borrowed, or NULL */
+    PyObject *dmemo;       /* reader._span_decode_memo (borrowed) */
+    void *doc;             /* the open document (Doc *) */
+    PyObject *spans;       /* the page's spans (owned) */
+    Py_ssize_t flushed;    /* text_parts already flushed into spans */
+    Py_ssize_t page_index, inline_idx;
+    double *qs;            /* q/Q: the saved CTMs, 6 per entry */
+    Py_ssize_t qn, qcap;
+    unsigned char *mc;     /* marked-content stack: is-artifact flags */
+    Py_ssize_t mcn, mccap, art_n;
 } Ctx;
+
+/* run_pages' native steps (the page-loop section below): 0 = done, -1 =
+ * an exception or a bail (c->bail) */
+static int native_font(Ctx *c, PyObject *name);
+static int native_line_show(Ctx *c, Val *v);
+static int native_q(Ctx *c, int push);
+static int native_mc(Ctx *c, int kind);
+static int native_do(Ctx *c, PyObject *name);
+static int native_bi(Ctx *c, Py_ssize_t *pos);
 
 static int stack_push(Ctx *c, Val v)
 {
@@ -648,6 +675,10 @@ static PyObject *decode_miss(Ctx *c, PyObject *key)
     PyObject *hit = decode_native(c, key);
     if (hit || PyErr_Occurred())
         return hit;
+    if (c->native) { /* Interpreter._decode decides: Python runs the page */
+        c->bail = 1;
+        return NULL;
+    }
     return PyObject_CallOneArg(c->decode_meth, key);
 }
 
@@ -1580,144 +1611,11 @@ static int resync_after_do(Ctx *c)
     return 0;
 }
 
-/* ======================================================================== */
-static PyObject *run_page(PyObject *self, PyObject *args)
+/* The fused tokenize+parse+interpret loop over c->data, shared by run_page
+ * (an Interpreter behind it) and run_pages (native): 0 at the end of the
+ * data, -1 on an exception or, natively, a page bail (c->bail). */
+static int scan_content(Ctx *c)
 {
-    Ctx cx;
-    Ctx *c = &cx;
-    memset(c, 0, sizeof(Ctx));
-    int depth;
-    if (!PyArg_ParseTuple(args, "OOOi", &c->interp, &c->data_obj,
-                          &c->resources, &depth))
-        return NULL;
-    c->depth = depth;
-    if (!PyBytes_Check(c->data_obj)) {
-        PyErr_SetString(PyExc_TypeError, "data must be bytes");
-        return NULL;
-    }
-    c->data = (const unsigned char *)PyBytes_AS_STRING(c->data_obj);
-    c->n = PyBytes_GET_SIZE(c->data_obj);
-
-    /* ---- entry state read (mirror of the Python loop prologue) ---- */
-    c->st = PyObject_GetAttr(c->interp, a_state);
-    if (!c->st)
-        return NULL;
-    c->opts = PyObject_GetAttr(c->interp, a_options);
-    if (!c->opts)
-        goto fail_early;
-    if (get_f(c->opts, a_newline_threshold, &c->nl_thr) < 0)
-        goto fail_early;
-    if (get_f(c->opts, a_space_threshold, &c->sp_thr) < 0)
-        goto fail_early;
-    if (get_f(c->opts, a_tj_space_threshold, &c->tj_thr) < 0)
-        goto fail_early;
-    {
-        PyObject *ia = PyObject_GetAttr(c->opts, a_include_artifacts);
-        if (!ia)
-            goto fail_early;
-        c->inc_art = PyObject_IsTrue(ia);
-        Py_DECREF(ia);
-        if (c->inc_art < 0)
-            goto fail_early;
-    }
-    {
-        PyObject *it = PyObject_GetAttr(c->interp, a_in_text);
-        if (!it)
-            goto fail_early;
-        c->in_text = PyObject_IsTrue(it);
-        Py_DECREF(it);
-        if (c->in_text < 0)
-            goto fail_early;
-        PyObject *t = PyObject_GetAttr(c->interp, a_total);
-        if (!t)
-            goto fail_early;
-        c->total = PyLong_AsLongLong(t);
-        Py_DECREF(t);
-        if (c->total == -1 && PyErr_Occurred())
-            goto fail_early;
-        if (get_f(c->interp, a_last_x, &c->lastx) < 0)
-            goto fail_early;
-        if (get_f(c->interp, a_last_y, &c->lasty) < 0)
-            goto fail_early;
-        if (read_lastc(c) < 0)
-            goto fail_early;
-    }
-    c->text_parts = PyObject_GetAttr(c->interp, a_text_parts);
-    if (!c->text_parts || !PyList_Check(c->text_parts))
-        goto fail_early;
-    c->font_memo = PyObject_GetAttr(c->interp, a_font_memo);
-    if (!c->font_memo)
-        goto fail_early;
-    c->decode_meth = PyObject_GetAttr(c->interp, a_decode);
-    if (!c->decode_meth)
-        goto fail_early;
-    c->saved = PyObject_GetAttr(c->st, a_saved);
-    if (!c->saved || !PyList_Check(c->saved))
-        goto fail_early;
-    c->fill_color = PyObject_GetAttr(c->st, a_fill_color);
-    if (!c->fill_color)
-        goto fail_early;
-    c->tf_name = PyObject_GetAttr(c->st, a_font_name);
-    if (!c->tf_name)
-        goto fail_early;
-    {
-        double m[6];
-        if (read_mat6(c->st, a_text_line_matrix, m) < 0)
-            goto fail_early;
-        c->la1 = m[0];
-        c->la2 = m[1];
-        c->la3 = m[2];
-        c->la4 = m[3];
-        c->lt4 = m[4];
-        c->lt5 = m[5];
-        if (read_mat6(c->st, a_text_matrix, m) < 0)
-            goto fail_early;
-        c->tt4 = m[4];
-        c->tt5 = m[5];
-    }
-    if (read_mat6(c->st, a_ctm, c->ctm) < 0)
-        goto fail_early;
-    update_ctm_ident(c);
-    if (get_f(c->st, a_font_size, &c->fs) < 0)
-        goto fail_early;
-    if (get_f(c->st, a_horizontal_scale, &c->hs) < 0)
-        goto fail_early;
-    c->l_sp = c->sp_thr * c->fs;
-    if (read_noart(c) < 0)
-        goto fail_early;
-    {
-        /* layout stage: active only when the interpreter wants fragments
-         * AND setup_layout installed the helpers */
-        PyObject *lo = PyObject_GetAttr(c->interp, a_layout);
-        if (!lo)
-            goto fail_early;
-        c->layout = PyObject_IsTrue(lo);
-        Py_DECREF(lo);
-        if (c->layout < 0)
-            goto fail_early;
-        if (c->layout && !g_frag_cls) {
-            PyErr_SetString(PyExc_RuntimeError,
-                            "layout mode requires setup_layout");
-            goto fail_early;
-        }
-        if (c->layout) {
-            c->fragments = PyObject_GetAttr(c->interp, a_fragments);
-            if (!c->fragments)
-                goto fail_early;
-            if (!PyList_Check(c->fragments)) {
-                PyErr_SetString(PyExc_TypeError,
-                                "interp.fragments is not a list");
-                goto fail_early;
-            }
-            if (refresh_font_style(c) < 0)
-                goto fail_early;
-            if (refresh_frag_env(c) < 0)
-                goto fail_early;
-            c->scale_dirty = 1;
-        }
-    }
-
-    /* ---- the scan loop ---- */
     {
         const unsigned char *d = c->data;
         Py_ssize_t n = c->n;
@@ -1985,7 +1883,12 @@ static PyObject *run_page(PyObject *self, PyObject *args)
                         c->stk[c->sp - 1].tag == V_NUM) {
                         PyObject *s = c->stk[c->sp - 2].obj;
                         double sz = c->stk[c->sp - 1].num;
-                        if (s == c->tf_name && sz == c->fs) {
+                        if (c->native) {
+                            if (s != c->tf_name && native_font(c, s) < 0)
+                                goto fail;
+                            c->fs = sz;
+                            c->l_sp = c->sp_thr * c->fs;
+                        } else if (s == c->tf_name && sz == c->fs) {
                             /* same memoized name object, same size:
                              * every effect (attrs, memo, l_sp, style)
                              * is already in place — skip the Python
@@ -2022,8 +1925,8 @@ static PyObject *run_page(PyObject *self, PyObject *args)
                     if (exec_tj(c) < 0)
                         goto fail;
                 } else if (ol == 2 && op[0] == 'T' && op[1] == '*') {
-                    double lead;
-                    if (get_f(c->st, a_leading, &lead) < 0)
+                    double lead = c->leading;
+                    if (!c->native && get_f(c->st, a_leading, &lead) < 0)
                         goto fail;
                     c->lt4 = -lead * c->la3 + c->lt4;
                     c->lt5 = -lead * c->la4 + c->lt5;
@@ -2038,7 +1941,10 @@ static PyObject *run_page(PyObject *self, PyObject *args)
                              c->stk[c->sp - 1].tag == V_STR &&
                              c->stk[c->sp - 2].tag == V_NUM &&
                              c->stk[c->sp - 3].tag == V_NUM;
-                    if (ok && c->in_text) {
+                    if (ok && c->in_text && c->native) {
+                        if (native_line_show(c, &c->stk[c->sp - 1]) < 0)
+                            goto fail;
+                    } else if (ok && c->in_text) {
                         if (op[0] == '"') {
                             if (set_f(c->st, a_word_space,
                                       c->stk[c->sp - 3].num) < 0)
@@ -2065,36 +1971,43 @@ static PyObject *run_page(PyObject *self, PyObject *args)
                 } else if (ol == 2 && op[0] == 'T' && op[1] == 'L') {
                     double v1[1];
                     if (vnums(c, 1, v1)) {
-                        if (set_f(c->st, a_leading, v1[0]) < 0)
+                        c->leading = v1[0];
+                        if (!c->native &&
+                            set_f(c->st, a_leading, v1[0]) < 0)
                             goto fail;
                     }
                 } else if (ol == 2 && op[0] == 'T' && op[1] == 'c') {
                     double v1[1];
                     if (vnums(c, 1, v1)) {
-                        if (set_f(c->st, a_char_space, v1[0]) < 0)
+                        if (!c->native &&
+                            set_f(c->st, a_char_space, v1[0]) < 0)
                             goto fail;
                     }
                 } else if (ol == 2 && op[0] == 'T' && op[1] == 'w') {
                     double v1[1];
                     if (vnums(c, 1, v1)) {
-                        if (set_f(c->st, a_word_space, v1[0]) < 0)
+                        if (!c->native &&
+                            set_f(c->st, a_word_space, v1[0]) < 0)
                             goto fail;
                     }
                 } else if (ol == 2 && op[0] == 'T' && op[1] == 'z') {
                     double v1[1];
                     if (vnums(c, 1, v1)) {
-                        if (set_f(c->st, a_horizontal_scale, v1[0]) < 0)
+                        if (!c->native &&
+                            set_f(c->st, a_horizontal_scale, v1[0]) < 0)
                             goto fail;
                         c->hs = v1[0];
                     }
                 } else if (ol == 2 && op[0] == 'T' && op[1] == 's') {
                     double v1[1];
                     if (vnums(c, 1, v1)) {
-                        if (set_f(c->st, a_text_rise, v1[0]) < 0)
+                        if (!c->native &&
+                            set_f(c->st, a_text_rise, v1[0]) < 0)
                             goto fail;
                     }
                 } else if (ol == 2 && op[0] == 'T' && op[1] == 'r') {
-                    if (c->sp > 0 && c->stk[c->sp - 1].tag == V_NUM &&
+                    if (!c->native && c->sp > 0 &&
+                        c->stk[c->sp - 1].tag == V_NUM &&
                         c->stk[c->sp - 1].is_int) {
                         Val *v = &c->stk[c->sp - 1];
                         PyObject *iv = val_to_obj(v);
@@ -2120,15 +2033,41 @@ static PyObject *run_page(PyObject *self, PyObject *args)
                         memcpy(c->ctm, nc, sizeof(nc));
                         update_ctm_ident(c);
                         c->scale_dirty = 1;
-                        PyObject *t = tuple6(nc[0], nc[1], nc[2], nc[3],
-                                             nc[4], nc[5]);
-                        if (!t)
-                            goto fail;
-                        int r = PyObject_SetAttr(c->st, a_ctm, t);
-                        Py_DECREF(t);
-                        if (r < 0)
-                            goto fail;
+                        if (!c->native) {
+                            PyObject *t = tuple6(nc[0], nc[1], nc[2], nc[3],
+                                                 nc[4], nc[5]);
+                            if (!t)
+                                goto fail;
+                            int r = PyObject_SetAttr(c->st, a_ctm, t);
+                            Py_DECREF(t);
+                            if (r < 0)
+                                goto fail;
+                        }
                     }
+                } else if (c->native && ol == 1 &&
+                           (op[0] == 'q' || op[0] == 'Q')) {
+                    if (native_q(c, op[0] == 'q') < 0)
+                        goto fail;
+                } else if (c->native &&
+                           ((ol == 1 && (op[0] == 'g' || op[0] == 'k')) ||
+                            (ol == 2 && op[0] == 'r' && op[1] == 'g'))) {
+                    /* the fill colour: only layout fragments read it */
+                } else if (c->native && ol == 2 && op[0] == 'D' &&
+                           op[1] == 'o') {
+                    if (c->sp > 0 && c->stk[c->sp - 1].tag == V_NAME &&
+                        native_do(c, c->stk[c->sp - 1].obj) < 0)
+                        goto fail;
+                } else if (c->native && ol == 3 && op[2] == 'C' &&
+                           ((op[0] == 'B' && (op[1] == 'M' || op[1] == 'D')) ||
+                            (op[0] == 'E' && op[1] == 'M'))) {
+                    if (native_mc(c, op[0] == 'E' ? 'E' : op[1]) < 0)
+                        goto fail;
+                } else if (c->native && ol == 2 && op[0] == 'B' &&
+                           op[1] == 'I') {
+                    stack_clear(c);
+                    if (native_bi(c, &pos) < 0)
+                        goto fail;
+                    continue;
                 } else if (ol == 1 && op[0] == 'q') {
                     PyObject *ct = tuple6(c->ctm[0], c->ctm[1], c->ctm[2],
                                           c->ctm[3], c->ctm[4], c->ctm[5]);
@@ -2383,6 +2322,150 @@ static PyObject *run_page(PyObject *self, PyObject *args)
             }
         }
     }
+    return 0;
+fail:
+    return -1;
+}
+
+/* ======================================================================== */
+static PyObject *run_page(PyObject *self, PyObject *args)
+{
+    Ctx cx;
+    Ctx *c = &cx;
+    memset(c, 0, sizeof(Ctx));
+    int depth;
+    if (!PyArg_ParseTuple(args, "OOOi", &c->interp, &c->data_obj,
+                          &c->resources, &depth))
+        return NULL;
+    c->depth = depth;
+    if (!PyBytes_Check(c->data_obj)) {
+        PyErr_SetString(PyExc_TypeError, "data must be bytes");
+        return NULL;
+    }
+    c->data = (const unsigned char *)PyBytes_AS_STRING(c->data_obj);
+    c->n = PyBytes_GET_SIZE(c->data_obj);
+
+    /* ---- entry state read (mirror of the Python loop prologue) ---- */
+    c->st = PyObject_GetAttr(c->interp, a_state);
+    if (!c->st)
+        return NULL;
+    c->opts = PyObject_GetAttr(c->interp, a_options);
+    if (!c->opts)
+        goto fail_early;
+    if (get_f(c->opts, a_newline_threshold, &c->nl_thr) < 0)
+        goto fail_early;
+    if (get_f(c->opts, a_space_threshold, &c->sp_thr) < 0)
+        goto fail_early;
+    if (get_f(c->opts, a_tj_space_threshold, &c->tj_thr) < 0)
+        goto fail_early;
+    {
+        PyObject *ia = PyObject_GetAttr(c->opts, a_include_artifacts);
+        if (!ia)
+            goto fail_early;
+        c->inc_art = PyObject_IsTrue(ia);
+        Py_DECREF(ia);
+        if (c->inc_art < 0)
+            goto fail_early;
+    }
+    {
+        PyObject *it = PyObject_GetAttr(c->interp, a_in_text);
+        if (!it)
+            goto fail_early;
+        c->in_text = PyObject_IsTrue(it);
+        Py_DECREF(it);
+        if (c->in_text < 0)
+            goto fail_early;
+        PyObject *t = PyObject_GetAttr(c->interp, a_total);
+        if (!t)
+            goto fail_early;
+        c->total = PyLong_AsLongLong(t);
+        Py_DECREF(t);
+        if (c->total == -1 && PyErr_Occurred())
+            goto fail_early;
+        if (get_f(c->interp, a_last_x, &c->lastx) < 0)
+            goto fail_early;
+        if (get_f(c->interp, a_last_y, &c->lasty) < 0)
+            goto fail_early;
+        if (read_lastc(c) < 0)
+            goto fail_early;
+    }
+    c->text_parts = PyObject_GetAttr(c->interp, a_text_parts);
+    if (!c->text_parts || !PyList_Check(c->text_parts))
+        goto fail_early;
+    c->font_memo = PyObject_GetAttr(c->interp, a_font_memo);
+    if (!c->font_memo)
+        goto fail_early;
+    c->decode_meth = PyObject_GetAttr(c->interp, a_decode);
+    if (!c->decode_meth)
+        goto fail_early;
+    c->saved = PyObject_GetAttr(c->st, a_saved);
+    if (!c->saved || !PyList_Check(c->saved))
+        goto fail_early;
+    c->fill_color = PyObject_GetAttr(c->st, a_fill_color);
+    if (!c->fill_color)
+        goto fail_early;
+    c->tf_name = PyObject_GetAttr(c->st, a_font_name);
+    if (!c->tf_name)
+        goto fail_early;
+    {
+        double m[6];
+        if (read_mat6(c->st, a_text_line_matrix, m) < 0)
+            goto fail_early;
+        c->la1 = m[0];
+        c->la2 = m[1];
+        c->la3 = m[2];
+        c->la4 = m[3];
+        c->lt4 = m[4];
+        c->lt5 = m[5];
+        if (read_mat6(c->st, a_text_matrix, m) < 0)
+            goto fail_early;
+        c->tt4 = m[4];
+        c->tt5 = m[5];
+    }
+    if (read_mat6(c->st, a_ctm, c->ctm) < 0)
+        goto fail_early;
+    update_ctm_ident(c);
+    if (get_f(c->st, a_font_size, &c->fs) < 0)
+        goto fail_early;
+    if (get_f(c->st, a_horizontal_scale, &c->hs) < 0)
+        goto fail_early;
+    c->l_sp = c->sp_thr * c->fs;
+    if (read_noart(c) < 0)
+        goto fail_early;
+    {
+        /* layout stage: active only when the interpreter wants fragments
+         * AND setup_layout installed the helpers */
+        PyObject *lo = PyObject_GetAttr(c->interp, a_layout);
+        if (!lo)
+            goto fail_early;
+        c->layout = PyObject_IsTrue(lo);
+        Py_DECREF(lo);
+        if (c->layout < 0)
+            goto fail_early;
+        if (c->layout && !g_frag_cls) {
+            PyErr_SetString(PyExc_RuntimeError,
+                            "layout mode requires setup_layout");
+            goto fail_early;
+        }
+        if (c->layout) {
+            c->fragments = PyObject_GetAttr(c->interp, a_fragments);
+            if (!c->fragments)
+                goto fail_early;
+            if (!PyList_Check(c->fragments)) {
+                PyErr_SetString(PyExc_TypeError,
+                                "interp.fragments is not a list");
+                goto fail_early;
+            }
+            if (refresh_font_style(c) < 0)
+                goto fail_early;
+            if (refresh_frag_env(c) < 0)
+                goto fail_early;
+            c->scale_dirty = 1;
+        }
+    }
+
+    if (scan_content(c) < 0)
+        goto fail;
 
     /* ---- finally: flush hot state back (mirror of the Python finally) -- */
     if (set_matrices(c) < 0)
@@ -4816,28 +4899,32 @@ static PyObject *s_objstm_cache, *s_recovered, *s_resolve, *s_decode;
 static PyObject *k_W, *k_Size, *k_Index, *k_N, *k_First, *k_Info, *k_ID;
 
 /* The payload after the `stream` keyword at pos: reader._capture_stream
- * without a decryptor, or (standalone) xref._parse_object_at_standalone,
- * which never resolves a /Length and is always lenient.  1 = the payload
- * is d[*start:*stop], 2 = Python raises PdfParseError (a strict /Length
- * mismatch, an unterminated stream), 0 = bail (an indirect /Length the
- * reader resolves, a bool /Length), -1 = exception. */
+ * without a decryptor (standalone 0), the same while the xref is being
+ * built, where an indirect /Length cannot resolve and counts as absent
+ * (standalone 2: an xref stream), or xref._parse_object_at_standalone,
+ * which never resolves a /Length and is always lenient (standalone 1).
+ * 1 = the payload is d[*start:*stop], 2 = Python raises PdfParseError (a
+ * strict /Length mismatch, an unterminated stream), 0 = bail (an indirect
+ * /Length the reader resolves, a bool /Length), -1 = exception.  A
+ * non-NULL resolved stands for the /Length the reader resolved. */
 static int stream_span(const unsigned char *d, Py_ssize_t n, PyObject *value,
-                       Py_ssize_t pos, int lenient, int standalone,
-                       Py_ssize_t *start, Py_ssize_t *stop)
+                       PyObject *resolved, Py_ssize_t pos, int lenient,
+                       int standalone, Py_ssize_t *start, Py_ssize_t *stop)
 {
     /* exactly one EOL after 'stream' (spec): \r\n or \n (tolerate \r) */
     if (pos + 1 < n && d[pos] == '\r' && d[pos + 1] == '\n')
         pos += 2;
     else if (pos < n && (d[pos] == '\r' || d[pos] == '\n'))
         pos += 1;
-    PyObject *length = PyDict_GetItemWithError(value, k_Length);
+    PyObject *length =
+        resolved ? resolved : PyDict_GetItemWithError(value, k_Length);
     if (!length && PyErr_Occurred())
         return -1;
     if (length && PyBool_Check(length))
         return 0;
     if (length && PyObject_TypeCheck(length, (PyTypeObject *)g_ref_cls) &&
         !standalone)
-        return 0; /* indirect /Length: Python resolves it */
+        return 0; /* an indirect /Length left unresolved: Python's */
     Py_ssize_t len;
     *start = pos;
     *stop = -1;
@@ -4854,7 +4941,7 @@ static int stream_span(const unsigned char *d, Py_ssize_t n, PyObject *value,
     }
     if (*stop < 0) {
         /* declared length wrong/absent: the lenient endstream search */
-        if (!lenient && !standalone)
+        if (!lenient && standalone != 1)
             return 2;
         Py_ssize_t es = bfind(d, n, pos, "endstream", 9);
         if (es < 0)
@@ -4947,6 +5034,60 @@ static long long xs_field(const unsigned char *p, Py_ssize_t w, long long def)
     return (long long)v;
 }
 
+/* The class of the object-lexer token at p (after whitespace and
+ * comments): 'i' an int, 'k' the keyword `obj`, 'x' a token that is
+ * plainly neither (eof, a real, a name, an array or dict marker, another
+ * keyword), 0 a token whose read may skip bytes, recurse or raise (lone
+ * sign or dot, a string, hex, '>', a stray delimiter).  *end is the
+ * position after an 'i' token. */
+static int header_token(const unsigned char *d, Py_ssize_t n, Py_ssize_t p,
+                        Py_ssize_t *end)
+{
+    OLex o = {d, n, p, 0};
+    o_skip(&o);
+    p = o.pos;
+    if (p >= n)
+        return 'x';
+    unsigned char ch = d[p];
+    if ((ch >= '0' && ch <= '9') || ch == '+' || ch == '-' || ch == '.') {
+        int is_int = 0;
+        Py_ssize_t tl = scan_number(d + p, n - p, &is_int);
+        if (tl <= 0)
+            return 0;
+        *end = p + tl;
+        return is_int ? 'i' : 'x';
+    }
+    if (ch == '/' || ch == '[' || ch == ']' || ch == '{' || ch == '}')
+        return 'x';
+    if ((ch == '<' || ch == '>') && p + 1 < n && d[p + 1] == ch)
+        return 'x';
+    if ((ch >= 'A' && ch <= 'Z') || (ch >= 'a' && ch <= 'z') || ch == '\'' ||
+        ch == '"' || ch == '*') {
+        Py_ssize_t q = p;
+        while (q < n && !is_obound(d[q]))
+            q++;
+        return (q - p == 3 && memcmp(d + p, "obj", 3) == 0) ? 'k' : 'x';
+    }
+    return 0;
+}
+
+/* 1 when reader._parse_indirect_object_at_py(offset) certainly raises
+ * "no object header": one of its first three tokens is plainly not the
+ * int, int, `obj` it reads */
+static int header_absent(const unsigned char *d, Py_ssize_t n,
+                         Py_ssize_t offset)
+{
+    Py_ssize_t p = offset;
+    for (int k = 0; k < 3; k++) {
+        int t = header_token(d, n, p, &p);
+        if (t == 0)
+            return 0;
+        if (t != (k < 2 ? 'i' : 'k'))
+            return 1;
+    }
+    return 0;
+}
+
 /* xref._parse_xref_stream_at(data, offset, reader) while the reader is
  * being built: 1 = the section's entries went into `entries` with
  * setdefault and *trailer is dict(d) (new ref), 2 = Python raises an error
@@ -4963,13 +5104,15 @@ static int xref_stream_at(const unsigned char *d, Py_ssize_t n,
     Py_ssize_t *w = NULL, *idx = NULL, nw = 0, nidx = 0, start, stop;
     int has_stream;
     int rc = o_indirect(&o, &onum, &ogen, &value, &has_stream);
+    if (rc == 0 && header_absent(d, n, offset))
+        return 2; /* "no object header at …" */
     if (rc <= 0)
         return rc;
     if (!has_stream) { /* "object at … is not an xref stream" */
         rc = 2;
         goto out;
     }
-    rc = stream_span(d, n, value, o.pos, lenient, 0, &start, &stop);
+    rc = stream_span(d, n, value, NULL, o.pos, lenient, 2, &start, &stop);
     if (rc != 1)
         goto out;
     rc = -1;
@@ -5283,7 +5426,8 @@ static PyObject *recover(const unsigned char *d, Py_ssize_t n)
         if (rc <= 0)
             goto fail;
         Py_ssize_t start, stop;
-        rc = has_stream ? stream_span(d, n, value, o.pos, 1, 1, &start, &stop)
+        rc = has_stream ? stream_span(d, n, value, NULL, o.pos, 1, 1, &start,
+                                      &stop)
                         : 2; /* not a Stream */
         if (rc != 1) {
             Py_DECREF(value);
@@ -5600,16 +5744,33 @@ static int doc_open(Doc *doc, PyObject *reader)
     return 1;
 }
 
+static PyObject *doc_resolve(Doc *doc, PyObject *v, int *bail);
+
 /* reader._capture_stream without a decryptor: the payload after the
- * `stream` keyword at pos.  New Stream, or NULL with *bail / exception
- * (a strict /Length mismatch or an unterminated stream raises in Python,
- * which then rescans or propagates: bail). */
-static PyObject *doc_stream(Doc *doc, PyObject *value, Py_ssize_t pos,
-                            int *bail)
+ * `stream` keyword at pos of the object `key`.  An indirect /Length
+ * resolves with key in _resolving, as get_object holds it there.  New
+ * Stream, or NULL with *bail / exception (a strict /Length mismatch or an
+ * unterminated stream raises in Python, which then rescans or
+ * propagates: bail). */
+static PyObject *doc_stream(Doc *doc, PyObject *key, PyObject *value,
+                            Py_ssize_t pos, int *bail)
 {
     Py_ssize_t start, stop;
-    int rc = stream_span(doc->d, doc->n, value, pos, doc->lenient, 0, &start,
-                         &stop);
+    PyObject *length = PyDict_GetItemWithError(value, k_Length), *res = NULL;
+    if (!length && PyErr_Occurred())
+        return NULL;
+    if (length && PyObject_TypeCheck(length, (PyTypeObject *)g_ref_cls)) {
+        if (PySet_Add(doc->resolving, key) < 0)
+            return NULL;
+        res = doc_resolve(doc, length, bail);
+        if (PySet_Discard(doc->resolving, key) < 0)
+            Py_CLEAR(res);
+        if (!res)
+            return NULL;
+    }
+    int rc = stream_span(doc->d, doc->n, value, res, pos, doc->lenient, 0,
+                         &start, &stop);
+    Py_XDECREF(res);
     if (rc != 1) {
         *bail = rc >= 0;
         return NULL;
@@ -5765,7 +5926,7 @@ static PyObject *doc_fetch(Doc *doc, PyObject *num, PyObject *gen, int *bail)
             goto done;
         }
         if (has_stream) {
-            obj = doc_stream(doc, value, o.pos, bail);
+            obj = doc_stream(doc, key, value, o.pos, bail);
             Py_DECREF(value);
             if (!obj)
                 goto done;
@@ -6076,6 +6237,49 @@ static PyObject *content_bytes(PyObject *reader, PyObject *stm,
     return PyObject_CallFunctionObjArgs(safe_decode, reader, stm, NULL);
 }
 
+/* the joined /Contents bytes of an open document (contents: the page
+ * dict's value): new bytes, or NULL with *bail set / an exception */
+static PyObject *doc_contents(Doc *doc, PyObject *contents,
+                              PyObject *safe_decode, int *bail)
+{
+    PyObject *parts = NULL, *out = NULL;
+    PyObject *c = doc_resolve(doc, contents, bail);
+    if (!c)
+        goto done;
+    parts = PyList_New(0);
+    if (!parts)
+        goto done;
+    int is_list = PyList_Check(c);
+    for (Py_ssize_t i = 0; is_list ? i < PyList_GET_SIZE(c) : i < 1; i++) {
+        PyObject *obj;
+        if (is_list) {
+            PyObject *item = PyList_GET_ITEM(c, i);
+            Py_INCREF(item);
+            obj = doc_resolve(doc, item, bail);
+            Py_DECREF(item);
+            if (!obj)
+                goto done;
+        } else {
+            obj = c;
+            Py_INCREF(obj);
+        }
+        int r = 0;
+        if (PyObject_TypeCheck(obj, (PyTypeObject *)g_stream_cls)) {
+            PyObject *b = content_bytes(doc->reader, obj, safe_decode);
+            r = b ? PyList_Append(parts, b) : -1;
+            Py_XDECREF(b);
+        }
+        Py_DECREF(obj);
+        if (r < 0)
+            goto done;
+    }
+    out = PyObject_CallMethodOneArg(g_space_bytes, s_join, parts);
+done:
+    Py_XDECREF(c);
+    Py_XDECREF(parts);
+    return out;
+}
+
 /* page_content(reader, contents, _safe_decode): the joined /Contents
  * bytes, or None → Python assembles them */
 static PyObject *page_content_c(PyObject *self, PyObject *args)
@@ -6091,41 +6295,7 @@ static PyObject *page_content_c(PyObject *self, PyObject *args)
         Py_RETURN_NONE;
     }
     int bail = 0;
-    PyObject *parts = NULL, *out = NULL;
-    PyObject *c = doc_resolve(&doc, contents, &bail);
-    if (!c)
-        goto done;
-    parts = PyList_New(0);
-    if (!parts)
-        goto done;
-    int is_list = PyList_Check(c);
-    for (Py_ssize_t i = 0; is_list ? i < PyList_GET_SIZE(c) : i < 1; i++) {
-        PyObject *obj;
-        if (is_list) {
-            PyObject *item = PyList_GET_ITEM(c, i);
-            Py_INCREF(item);
-            obj = doc_resolve(&doc, item, &bail);
-            Py_DECREF(item);
-            if (!obj)
-                goto done;
-        } else {
-            obj = c;
-            Py_INCREF(obj);
-        }
-        int r = 0;
-        if (PyObject_TypeCheck(obj, (PyTypeObject *)g_stream_cls)) {
-            PyObject *b = content_bytes(reader, obj, safe_decode);
-            r = b ? PyList_Append(parts, b) : -1;
-            Py_XDECREF(b);
-        }
-        Py_DECREF(obj);
-        if (r < 0)
-            goto done;
-    }
-    out = PyObject_CallMethodOneArg(g_space_bytes, s_join, parts);
-done:
-    Py_XDECREF(c);
-    Py_XDECREF(parts);
+    PyObject *out = doc_contents(&doc, contents, safe_decode, &bail);
     doc_close(&doc);
     if (!out && bail && !PyErr_Occurred())
         Py_RETURN_NONE;
@@ -6259,6 +6429,19 @@ static void install_global(PyObject **slot, PyObject *value); /* below */
 static PyObject *g_cmap_cls;      /* cmap.CMap; set last by setup_fonts */
 static PyObject *g_glyph_uni;     /* encodings.glyph_name_to_unicode */
 static Py_UCS4 g_winansi[256], g_macroman[256];
+/* the Standard-14 width tables (afm_widths.TABLES), the code-table row
+ * each gives over codes 0-255, and the whole code table of a simple font
+ * on it without /Differences or ToUnicode, per base encoding (identity,
+ * WinAnsi, MacRoman; built on first use): constants derived from
+ * constants */
+#define AFM_MAX 16
+struct CodeTable_;
+static struct {
+    PyObject *table;
+    double w[256];
+    struct CodeTable_ *ct[3];
+} g_afm[AFM_MAX];
+static int g_n_afm;
 static PyObject *f_name, *f_font_type, *f_encoding, *f_to_unicode,
     *f_differences, *f_descendant_font, *f_first_char, *f_last_char,
     *f_widths, *f_missing_width, *f_cid_widths, *f_code_table, *f_fonts,
@@ -6311,7 +6494,7 @@ typedef struct {
     PyObject *lo, *hi, *dst; /* owned bytes */
 } CRange;
 
-typedef struct {
+typedef struct CodeTable_ {
     int cmap;      /* 1: ToUnicode CMap walk, 0: byte encoding */
     int composite; /* width 0.5 per decoded char, else w[code] per byte */
     double w[256]; /* widths[code - first] / 1000.0, or missing / 1000.0 */
@@ -6585,6 +6768,14 @@ static int ct_fill_widths(CodeTable *t, PyObject *widths, PyObject *fc,
         return 0;
     if (!PyList_Check(widths) && !PyTuple_Check(widths))
         return 0;
+    /* extract_font_info shares a Standard-14 table as the widths of a font
+     * without /Widths, with first 0 and last 255: the row is fixed */
+    if (first == 0 && last == 255)
+        for (int k = 0; k < g_n_afm; k++)
+            if (widths == g_afm[k].table) {
+                memcpy(t->w, g_afm[k].w, sizeof(t->w));
+                return 1;
+            }
     Py_ssize_t nw = PySequence_Fast_GET_SIZE(widths);
     PyObject **items = PySequence_Fast_ITEMS(widths);
     for (int b = 0; b < 256; b++) {
@@ -6598,7 +6789,44 @@ static int ct_fill_widths(CodeTable *t, PyObject *widths, PyObject *fc,
     return 1;
 }
 
-/* a code table for one FontInfo: 1 = *out, 0 = decline, -1 = exception */
+/* the shared table of a simple font whose widths are Standard-14 table k
+ * over codes 0-255 (first_char 0, last_char 255, a numeric missing width,
+ * which no code reaches), or NULL */
+static CodeTable *afm_table(PyObject *widths, PyObject *fc, PyObject *lc,
+                            PyObject *missing, PyObject *enc)
+{
+    double miss;
+    int ovf;
+    if (!PyLong_Check(fc) || !PyLong_Check(lc) ||
+        PyLong_AsLongLongAndOverflow(fc, &ovf) != 0 || ovf ||
+        PyLong_AsLongLongAndOverflow(lc, &ovf) != 255 || ovf ||
+        num_double(missing, &miss) != 1)
+        return NULL;
+    for (int k = 0; k < g_n_afm; k++) {
+        if (widths != g_afm[k].table)
+            continue;
+        int e = str_is(enc, "WinAnsiEncoding")    ? 1
+                : str_is(enc, "MacRomanEncoding") ? 2
+                                                  : 0;
+        if (!g_afm[k].ct[e]) {
+            CodeTable *t = PyMem_RawCalloc(1, sizeof(CodeTable));
+            if (!t)
+                return NULL;
+            const Py_UCS4 *base = e == 1 ? g_winansi : e == 2 ? g_macroman
+                                                             : NULL;
+            for (int b = 0; b < 256; b++) {
+                t->w[b] = g_afm[k].w[b];
+                t->u[b] = base ? base[b] : (Py_UCS4)b;
+            }
+            g_afm[k].ct[e] = t;
+        }
+        return g_afm[k].ct[e];
+    }
+    return NULL;
+}
+
+/* a code table for one FontInfo: 1 = *out, 2 = *out is a shared constant
+ * (afm_table), 0 = decline, -1 = exception */
 static int ct_build(PyObject *info, CodeTable **out)
 {
     PyObject *v[9];
@@ -6618,6 +6846,11 @@ static int ct_build(PyObject *info, CodeTable **out)
     if (!PyUnicode_Check(ftype))
         goto done;
     int type0 = str_is(ftype, "Type0");
+    if (!type0 && desc == Py_None && tu == Py_None && v[8] == Py_None &&
+        (*out = afm_table(widths, v[4], v[5], v[6], v[7]))) {
+        rc = 2;
+        goto done;
+    }
     CodeTable *t = PyMem_Calloc(1, sizeof(CodeTable));
     if (!t) {
         PyErr_NoMemory();
@@ -6807,16 +7040,21 @@ static PyObject *decode_native(Ctx *c, PyObject *key)
 {
     if (!g_cmap_cls || !PyBytes_Check(key))
         return NULL;
-    PyObject *fname = PyObject_GetAttr(c->st, a_font_name);
-    if (!fname)
-        return NULL;
-    PyObject *fonts = NULL, *info = NULL, *tbl = NULL, *hit = NULL;
-    if (!PyUnicode_Check(fname) || PyUnicode_GET_LENGTH(fname) == 0)
-        goto done;
-    fonts = PyObject_GetAttr(c->interp, f_fonts);
-    if (!fonts || !PyDict_Check(fonts))
-        goto done;
-    info = PyDict_GetItemWithError(fonts, fname);
+    PyObject *fname = NULL, *fonts = NULL, *info = NULL, *tbl = NULL,
+             *hit = NULL;
+    if (c->native) {
+        info = c->cur_info;
+    } else {
+        fname = PyObject_GetAttr(c->st, a_font_name);
+        if (!fname)
+            return NULL;
+        if (!PyUnicode_Check(fname) || PyUnicode_GET_LENGTH(fname) == 0)
+            goto done;
+        fonts = PyObject_GetAttr(c->interp, f_fonts);
+        if (!fonts || !PyDict_Check(fonts))
+            goto done;
+        info = PyDict_GetItemWithError(fonts, fname);
+    }
     if (!info)
         goto done;
     Py_INCREF(info);
@@ -6836,9 +7074,11 @@ static PyObject *decode_native(Ctx *c, PyObject *key)
             tbl = Py_False;
             Py_INCREF(tbl);
         } else {
-            tbl = PyCapsule_New(t, CT_CAPSULE, ct_capsule_free);
+            tbl = PyCapsule_New(t, CT_CAPSULE,
+                                rc == 2 ? NULL : ct_capsule_free);
             if (!tbl) {
-                ct_free(t);
+                if (rc == 1)
+                    ct_free(t);
                 goto done;
             }
         }
@@ -7260,21 +7500,60 @@ static PyObject *parse_cmap(PyObject *self, PyObject *data)
                     PyBytes_GET_SIZE(data));
 }
 
-/* setup_fonts(CMap, glyph_name_to_unicode, winansi, macroman): the last
- * two are the 256-char base tables of those encodings */
+static PyObject *g_extract_font_info; /* fonts.extract_font_info */
+static PyObject *g_fallback_enc;      /* fonts.fallback_encoding */
+
+/* setup_fonts(CMap, glyph_name_to_unicode, winansi, macroman, afm_tables,
+ * extract_font_info, fallback_encoding): winansi and macroman are the
+ * 256-char base tables of those encodings, afm_tables the Standard-14
+ * width tuples of 256 numbers each */
 static PyObject *setup_fonts(PyObject *self, PyObject *args)
 {
-    PyObject *cm, *glyph, *win, *mac;
-    if (!PyArg_ParseTuple(args, "OOUU", &cm, &glyph, &win, &mac))
+    PyObject *cm, *glyph, *win, *mac, *afm, *efi, *fbe;
+    if (!PyArg_ParseTuple(args, "OOUUO!OO", &cm, &glyph, &win, &mac,
+                          &PyTuple_Type, &afm, &efi, &fbe))
         return NULL;
     if (PyUnicode_GET_LENGTH(win) != 256 || PyUnicode_GET_LENGTH(mac) != 256) {
         PyErr_SetString(PyExc_ValueError, "base tables must have 256 chars");
         return NULL;
     }
+    if (PyTuple_GET_SIZE(afm) > AFM_MAX) {
+        PyErr_SetString(PyExc_ValueError, "too many width tables");
+        return NULL;
+    }
+    for (Py_ssize_t k = 0; k < PyTuple_GET_SIZE(afm); k++) {
+        PyObject *tbl = PyTuple_GET_ITEM(afm, k);
+        if (!PyTuple_Check(tbl) || PyTuple_GET_SIZE(tbl) != 256) {
+            PyErr_SetString(PyExc_ValueError,
+                            "width tables must be 256-tuples");
+            return NULL;
+        }
+        for (int b = 0; b < 256; b++) {
+            double w;
+            if (num_double(PyTuple_GET_ITEM(tbl, b), &w) != 1) {
+                PyErr_SetString(PyExc_ValueError,
+                                "width tables must hold numbers");
+                return NULL;
+            }
+            g_afm[k].w[b] = w / 1000.0;
+        }
+    }
+    /* a second setup: the shared tables FontInfos still hold stay alive */
+    for (int k = 0; k < g_n_afm; k++) {
+        Py_CLEAR(g_afm[k].table);
+        memset(g_afm[k].ct, 0, sizeof(g_afm[k].ct));
+    }
+    g_n_afm = (int)PyTuple_GET_SIZE(afm);
+    for (int k = 0; k < g_n_afm; k++) {
+        g_afm[k].table = PyTuple_GET_ITEM(afm, k);
+        Py_INCREF(g_afm[k].table);
+    }
     for (Py_ssize_t b = 0; b < 256; b++) {
         g_winansi[b] = PyUnicode_READ_CHAR(win, b);
         g_macroman[b] = PyUnicode_READ_CHAR(mac, b);
     }
+    install_global(&g_extract_font_info, efi);
+    install_global(&g_fallback_enc, fbe);
     install_global(&g_glyph_uni, glyph);
     install_global(&g_cmap_cls, cm);
     Py_RETURN_NONE;
@@ -7294,6 +7573,715 @@ static PyObject *setup_html(PyObject *self, PyObject *args)
     Py_RETURN_NONE;
 }
 
+/* ======================================================================== */
+/* The page loop: run_pages runs the pages of a document in one call, for
+ * the extraction path that needs no positioned fragments (no layout,
+ * emission order, no OCR).  Per page it does what extract.extract_pdf_bytes
+ * does around the C steps: fonts.extract_page_fonts, pages.page_content,
+ * Interpreter(...), parse_and_run and Interpreter.finalize, into the same
+ * spans, page text and (empty) fragment list.  No Interpreter is built:
+ * scan_content runs in native mode with the interpreter state in the Ctx,
+ * and the run memo is the document's _span_decode_memo, keyed as
+ * Interpreter._memo_for keys it.  A FontInfo cache miss calls the Python
+ * fonts.extract_font_info and stores the result in reader._fontinfo_cache,
+ * as extract_page_fonts does: the build stays in Python.
+ *
+ * Native here, beyond the show operators: Tf's run-memo switch, ' and ",
+ * q/Q, marked content (BMC/BDC/EMC: the artifact gate, and the
+ * /Properties fetches _op_bdc makes), image XObjects and inline images
+ * (content._scan_bi finds the end of the image data).  A page bails to the
+ * Python loop, which stays the authority, on an exception anywhere in it
+ * (Python then records the page's error), a fetch get_object bails on, a
+ * Form XObject, deep marked-content props, or a run the font's code table
+ * declines (Interpreter._decode decodes it).  A document whose reader
+ * get_object does not serve (encrypted) is not served at all.  A bail
+ * writes none of the page's results; what it left in the reader's caches
+ * (_cache, _fontinfo_cache, _span_decode_memo) is what the Python re-run
+ * of the page puts there too. */
+
+static PyObject *g_text_str, *g_image_str; /* span kinds */
+/* fonts.fallback_encoding's answers */
+static PyObject *g_fb_win, *g_fb_mac, *g_fb_std, *g_fb_pdfdoc;
+static PyObject *s_fontinfo_cache, *s_span_memo, *s_resources;
+static PyObject *k_Font, *k_XObject, *k_Subtype, *k_Properties;
+
+/* ASCII s[0:n], lower-cased, contains the lower-case pat */
+static int ascii_lower_contains(const char *s, Py_ssize_t n, const char *pat)
+{
+    Py_ssize_t m = (Py_ssize_t)strlen(pat);
+    for (Py_ssize_t i = 0; i + m <= n; i++) {
+        Py_ssize_t k = 0;
+        while (k < m) {
+            unsigned char ch = (unsigned char)s[i + k];
+            if (ch >= 'A' && ch <= 'Z')
+                ch += 'a' - 'A';
+            if (ch != (unsigned char)pat[k])
+                break;
+            k++;
+        }
+        if (k == m)
+            return 1;
+    }
+    return 0;
+}
+
+static int ascii_starts(const char *s, Py_ssize_t n, const char *pat)
+{
+    Py_ssize_t m = (Py_ssize_t)strlen(pat);
+    return n >= m && memcmp(s, pat, (size_t)m) == 0;
+}
+
+/* fonts.fallback_encoding(name) (new ref); Python's own str.lower decides
+ * for a name that is not ASCII */
+static PyObject *fallback_class(PyObject *name)
+{
+    if (!PyUnicode_IS_ASCII(name))
+        return PyObject_CallOneArg(g_fallback_enc, name);
+    Py_ssize_t n = PyUnicode_GET_LENGTH(name);
+    const char *s = (const char *)PyUnicode_1BYTE_DATA(name);
+    PyObject *r;
+    if (n == 0)
+        r = g_fb_win;
+    else if (ascii_lower_contains(s, n, "macroman"))
+        r = g_fb_mac;
+    else if (ascii_lower_contains(s, n, "winansi"))
+        r = g_fb_win;
+    else if (ascii_lower_contains(s, n, "standard"))
+        r = g_fb_std;
+    else if (ascii_lower_contains(s, n, "pdfdoc"))
+        r = g_fb_pdfdoc;
+    else if (ascii_starts(s, n, "Times") || ascii_starts(s, n, "Helvetica") ||
+             ascii_starts(s, n, "Courier"))
+        r = g_fb_win;
+    else
+        r = g_fb_pdfdoc;
+    Py_INCREF(r);
+    return r;
+}
+
+/* Interpreter._memo_for: the document's run memo of (FontInfo or None,
+ * fallback class), created when missing; name NULL is font_name None.
+ * New ref. */
+static PyObject *memo_for(Ctx *c, PyObject *info, PyObject *name)
+{
+    PyObject *cls =
+        name ? fallback_class(name) : (Py_INCREF(g_fb_win), g_fb_win);
+    if (!cls)
+        return NULL;
+    PyObject *key = PyTuple_Pack(2, info ? info : Py_None, cls);
+    Py_DECREF(cls);
+    if (!key)
+        return NULL;
+    PyObject *fm = PyDict_GetItemWithError(c->dmemo, key);
+    if (fm)
+        Py_INCREF(fm);
+    else if (!PyErr_Occurred()) {
+        fm = PyDict_New();
+        if (fm && PyDict_SetItem(c->dmemo, key, fm) < 0)
+            Py_CLEAR(fm);
+    }
+    Py_DECREF(key);
+    return fm;
+}
+
+/* Tf with a new name: Interpreter._set_font_memo */
+static int native_font(Ctx *c, PyObject *name)
+{
+    if (!PyUnicode_Check(name)) {
+        c->bail = 1;
+        return -1;
+    }
+    PyObject *info = NULL;
+    if (PyUnicode_GET_LENGTH(name) > 0) { /* `if font_name` */
+        info = PyDict_GetItemWithError(c->fonts, name);
+        if (!info && PyErr_Occurred())
+            return -1;
+    }
+    PyObject *fm = memo_for(c, info, name);
+    if (!fm)
+        return -1;
+    Py_XSETREF(c->font_memo, fm);
+    c->cur_info = info;
+    Py_INCREF(name);
+    Py_XSETREF(c->tf_name, name);
+    return 0;
+}
+
+/* ' and ": Interpreter._next_line_show, with the text matrices kept as
+ * run_page keeps them after that callback (the line matrix whole, the
+ * text matrix's translation) */
+static int native_line_show(Ctx *c, Val *v)
+{
+    PyObject *key = val_to_obj(v);
+    if (!key)
+        return -1;
+    PyObject *hit = PyDict_GetItemWithError(c->font_memo, key);
+    if (hit)
+        Py_INCREF(hit);
+    else if (!PyErr_Occurred())
+        hit = decode_miss(c, key);
+    Py_DECREF(key);
+    if (!hit)
+        return -1;
+    double unit_w = -1.0;
+    if (!PyTuple_Check(hit) || PyTuple_GET_SIZE(hit) != 2 ||
+        !PyUnicode_Check(PyTuple_GET_ITEM(hit, 0)) ||
+        ((unit_w = PyFloat_AsDouble(PyTuple_GET_ITEM(hit, 1))) == -1.0 &&
+         PyErr_Occurred())) {
+        Py_DECREF(hit);
+        c->bail = 1;
+        return -1;
+    }
+    PyObject *decoded = PyTuple_GET_ITEM(hit, 0);
+    /* nm = _mul((1, 0, 0, 1, 0, -leading), text_line_matrix) */
+    double t0 = c->la1, t1 = c->la2, t2 = c->la3, t3 = c->la4;
+    double a5 = -c->leading;
+    double n0 = 1.0 * t0 + 0.0 * t2, n1 = 1.0 * t1 + 0.0 * t3;
+    double n2 = 0.0 * t0 + 1.0 * t2, n3 = 0.0 * t1 + 1.0 * t3;
+    double n4 = 0.0 * t0 + a5 * t2 + c->lt4;
+    double n5 = 0.0 * t1 + a5 * t3 + c->lt5;
+    c->la1 = n0;
+    c->la2 = n1;
+    c->la3 = n2;
+    c->la4 = n3;
+    c->lt4 = n4;
+    c->lt5 = n5;
+    double x = n4 * c->ctm[0] + n5 * c->ctm[2] + c->ctm[4];
+    double y = n4 * c->ctm[1] + n5 * c->ctm[3] + c->ctm[5];
+    if (c->noart) {
+        if (c->total) {
+            if (PyList_Append(c->text_parts, g_nl) < 0) {
+                Py_DECREF(hit);
+                return -1;
+            }
+            c->total += 1;
+            c->lastc = '\n';
+        }
+        Py_ssize_t dlen = PyUnicode_GET_LENGTH(decoded);
+        if (dlen) {
+            if (PyList_Append(c->text_parts, decoded) < 0) {
+                Py_DECREF(hit);
+                return -1;
+            }
+            c->total += dlen;
+            c->lastc = PyUnicode_ReadChar(decoded, dlen - 1);
+        }
+    }
+    Py_DECREF(hit);
+    double width = unit_w * c->fs;
+    c->lastx = x + width;
+    c->lasty = y;
+    /* text_matrix = _mul((1, 0, 0, 1, tx, 0), nm) */
+    double tx = width * c->hs / 100.0;
+    c->tt4 = tx * n0 + 0.0 * n2 + n4;
+    c->tt5 = tx * n1 + 0.0 * n3 + n5;
+    return 0;
+}
+
+/* q pushes the CTM, Q pops it (st.saved without the fill colour) */
+static int native_q(Ctx *c, int push)
+{
+    if (push) {
+        if (c->qn >= c->qcap) {
+            Py_ssize_t cap = c->qcap ? c->qcap * 2 : 16;
+            double *nq =
+                (double *)realloc(c->qs, (size_t)cap * 6 * sizeof(double));
+            if (!nq) {
+                PyErr_NoMemory();
+                return -1;
+            }
+            c->qs = nq;
+            c->qcap = cap;
+        }
+        memcpy(c->qs + 6 * c->qn++, c->ctm, 6 * sizeof(double));
+    } else if (c->qn > 0) {
+        memcpy(c->ctm, c->qs + 6 * --c->qn, 6 * sizeof(double));
+        update_ctm_ident(c);
+        c->scale_dirty = 1;
+    }
+    return 0;
+}
+
+static int mc_push(Ctx *c, PyObject *tag)
+{
+    int is_art = PyUnicode_CompareWithASCIIString(tag, "Artifact") == 0 ||
+                 (c->mcn > 0 && c->mc[c->mcn - 1]);
+    if (c->mcn >= c->mccap) {
+        Py_ssize_t cap = c->mccap ? c->mccap * 2 : 16;
+        unsigned char *nm = (unsigned char *)realloc(c->mc, (size_t)cap);
+        if (!nm) {
+            PyErr_NoMemory();
+            return -1;
+        }
+        c->mc = nm;
+        c->mccap = cap;
+    }
+    c->mc[c->mcn++] = (unsigned char)is_art;
+    c->art_n += is_art;
+    return 0;
+}
+
+#define RV_RAISE (-2) /* content._rvalue raises: the props are dropped */
+#define RV_BAIL (-3)  /* deep enough that Python's recursion decides */
+
+/* content._rvalue over the operand stack for the value at index i (already
+ * popped): the index of the next operand to pop (-1: none left), or
+ * RV_RAISE / RV_BAIL */
+static Py_ssize_t rv_skip(Ctx *c, Py_ssize_t i, int depth)
+{
+    Val *v = &c->stk[i];
+    Py_ssize_t top = i - 1;
+    if (v->tag == V_NUM || v->tag == V_STR || v->tag == V_NAME)
+        return top;
+    if (v->tag != V_MARK || (v->obj != g_AC && v->obj != g_DC))
+        return RV_RAISE;
+    if (depth >= 64)
+        return RV_BAIL;
+    int is_dict = v->obj == g_DC;
+    PyObject *open = is_dict ? g_DO : g_AO;
+    while (top >= 0) {
+        Py_ssize_t j = top--;
+        if (c->stk[j].tag == V_MARK && c->stk[j].obj == open)
+            return top;
+        top = rv_skip(c, j, depth + 1);
+        if (top < -1)
+            return top;
+        if (is_dict) { /* key = st.pop(), a str */
+            if (top < 0 || c->stk[top].tag != V_NAME)
+                return RV_RAISE;
+            top--;
+        }
+    }
+    return RV_RAISE;
+}
+
+/* BMC ('M'), BDC ('D') and EMC ('E'): Interpreter._op_bmc, content._c_bdc
+ * with _op_bdc, and _op_emc, for what the text reads of them: the
+ * artifact gate.  A BDC fetches what _op_bdc fetches: the page's
+ * /Properties and, for a named property list, its entry. */
+static int native_mc(Ctx *c, int kind)
+{
+    if (kind == 'E') {
+        if (c->mcn > 0)
+            c->art_n -= c->mc[--c->mcn];
+    } else if (kind == 'M') {
+        if (c->sp > 0 && c->stk[c->sp - 1].tag == V_NAME &&
+            mc_push(c, c->stk[c->sp - 1].obj) < 0)
+            return -1;
+    } else {
+        /* props = _rdict_or_name(stack); tag = stack.pop() if a str */
+        Py_ssize_t top = c->sp - 1;
+        PyObject *ref = NULL;
+        int raised = top < 0;
+        if (!raised) {
+            Val *v = &c->stk[top--];
+            if (v->tag == V_NAME)
+                ref = v->obj;
+            else if (v->tag == V_MARK && v->obj == g_DC) {
+                for (;;) {
+                    if (top < 0) {
+                        raised = 1;
+                        break;
+                    }
+                    Py_ssize_t j = top--;
+                    if (c->stk[j].tag == V_MARK && c->stk[j].obj == g_DO)
+                        break;
+                    top = rv_skip(c, j, 1);
+                    if (top == RV_BAIL) {
+                        c->bail = 1;
+                        return -1;
+                    }
+                    if (top < 0 || c->stk[top].tag != V_NAME) {
+                        raised = 1;
+                        break;
+                    }
+                    top--;
+                }
+            } else
+                raised = 1;
+        }
+        if (!raised && top >= 0 && c->stk[top].tag == V_NAME) {
+            PyObject *tag = c->stk[top].obj;
+            PyObject *pp = doc_resolve(
+                (Doc *)c->doc,
+                PyDict_GetItemWithError(c->resources, k_Properties),
+                &c->bail);
+            if (!pp)
+                return -1;
+            if (ref && PyDict_Check(pp)) {
+                PyObject *entry = PyDict_GetItemWithError(pp, ref);
+                PyObject *r = NULL;
+                if (entry)
+                    r = doc_resolve((Doc *)c->doc, entry, &c->bail);
+                if (!r && (entry || PyErr_Occurred())) {
+                    Py_DECREF(pp);
+                    return -1;
+                }
+                Py_XDECREF(r);
+            }
+            Py_DECREF(pp);
+            if (mc_push(c, tag) < 0)
+                return -1;
+        }
+    }
+    c->noart = c->art_n == 0 || c->inc_art;
+    return 0;
+}
+
+/* Interpreter._flush_text: the text shown since the last flush becomes a
+ * span */
+static int flush_text(Ctx *c)
+{
+    Py_ssize_t np = PyList_GET_SIZE(c->text_parts);
+    if (np == c->flushed)
+        return 0;
+    PyObject *tail = PyList_GetSlice(c->text_parts, c->flushed, np);
+    PyObject *seg = tail ? PyUnicode_Join(g_empty, tail) : NULL;
+    Py_XDECREF(tail);
+    if (!seg)
+        return -1;
+    int r = 0;
+    if (PyUnicode_GET_LENGTH(seg)) {
+        PyObject *span = PyTuple_Pack(3, g_text_str, seg, Py_None);
+        r = span ? PyList_Append(c->spans, span) : -1;
+        Py_XDECREF(span);
+    }
+    Py_DECREF(seg);
+    c->flushed = np;
+    return r;
+}
+
+/* Interpreter._emit_image: the pending text, then the image span */
+static int native_image(Ctx *c, PyObject *media_ref)
+{
+    if (flush_text(c) < 0)
+        return -1;
+    PyObject *span = PyTuple_Pack(3, g_image_str, g_empty, media_ref);
+    int r = span ? PyList_Append(c->spans, span) : -1;
+    Py_XDECREF(span);
+    return r;
+}
+
+/* Do at the page level (c->resources is the page's /Resources dict):
+ * Interpreter._paint_xobject for an image; a Form XObject bails */
+static int native_do(Ctx *c, PyObject *name)
+{
+    Doc *doc = (Doc *)c->doc;
+    PyObject *xo = doc_resolve(
+        doc, PyDict_GetItemWithError(c->resources, k_XObject), &c->bail);
+    if (!xo)
+        return -1;
+    int rc = 0;
+    PyObject *obj = NULL, *sd = NULL;
+    if (PyDict_Check(xo)) {
+        PyObject *target = PyDict_GetItemWithError(xo, name);
+        obj = doc_resolve(doc, target, &c->bail);
+        if (!obj)
+            rc = -1;
+        else if (PyObject_TypeCheck(obj, (PyTypeObject *)g_stream_cls)) {
+            sd = PyObject_GetAttr(obj, s_dict);
+            PyObject *sub = NULL;
+            if (!sd)
+                rc = -1;
+            else if (!PyDict_Check(sd)) {
+                c->bail = 1;
+                rc = -1;
+            } else if (!(sub = PyDict_GetItemWithError(sd, k_Subtype)) &&
+                       PyErr_Occurred())
+                rc = -1;
+            /* str(Subtype): only a str prints as Image or Form */
+            else if (sub && PyUnicode_Check(sub)) {
+                if (PyUnicode_CompareWithASCIIString(sub, "Image") == 0)
+                    rc = native_image(c, name);
+                else if (PyUnicode_CompareWithASCIIString(sub, "Form") == 0) {
+                    c->bail = 1;
+                    rc = -1;
+                }
+            }
+        }
+    }
+    Py_DECREF(xo);
+    Py_XDECREF(obj);
+    Py_XDECREF(sd);
+    return rc;
+}
+
+/* BI: content._c_bi — _scan_bi finds the end of the image data */
+static int native_bi(Ctx *c, Py_ssize_t *pos)
+{
+    PyObject *pp = PyLong_FromSsize_t(*pos);
+    if (!pp)
+        return -1;
+    PyObject *r =
+        PyObject_CallFunctionObjArgs(g_scan_bi, c->data_obj, pp, NULL);
+    Py_DECREF(pp);
+    if (!r)
+        return -1;
+    Py_ssize_t np = -1;
+    if (PyTuple_Check(r) && PyTuple_GET_SIZE(r) == 3)
+        np = PyLong_AsSsize_t(PyTuple_GET_ITEM(r, 2));
+    Py_DECREF(r);
+    if (np < 0) {
+        if (!PyErr_Occurred())
+            c->bail = 1;
+        return -1;
+    }
+    PyObject *ref = PyUnicode_FromFormat("inline:%zd:%zd", c->page_index,
+                                         c->inline_idx);
+    if (!ref)
+        return -1;
+    int rc = native_image(c, ref);
+    Py_DECREF(ref);
+    c->inline_idx++;
+    *pos = np;
+    return rc;
+}
+
+typedef struct {
+    Doc doc;
+    PyObject *fic, *dmemo, *safe_decode; /* _fontinfo_cache, run memo */
+    PyObject *spans, *texts, *frags;     /* the DocResult lists */
+    double nl_thr, sp_thr, tj_thr;
+    int inc_art;
+} Pages;
+
+/* extract_font_info(resolve(fobj)) for a dict, else None (new ref) */
+static PyObject *font_info(Pages *P, PyObject *fobj, int *bail)
+{
+    PyObject *fd = doc_resolve(&P->doc, fobj, bail);
+    if (!fd)
+        return NULL;
+    PyObject *fi = Py_None;
+    if (PyDict_Check(fd))
+        fi = PyObject_CallFunctionObjArgs(g_extract_font_info, fd,
+                                          P->doc.reader, NULL);
+    else
+        Py_INCREF(fi);
+    Py_DECREF(fd);
+    return fi;
+}
+
+/* fonts.extract_page_fonts(resources, reader): {str(name): FontInfo},
+ * FontInfo by Ref from reader._fontinfo_cache.  New ref, or NULL with
+ * *bail set / an exception. */
+static PyObject *page_fonts(Pages *P, PyObject *res, int *bail)
+{
+    PyObject *fonts = PyDict_New();
+    if (!fonts)
+        return NULL;
+    PyObject *fr = doc_resolve(&P->doc, PyDict_GetItemWithError(res, k_Font),
+                               bail);
+    if (!fr) {
+        Py_DECREF(fonts);
+        return NULL;
+    }
+    if (!PyDict_Check(fr)) {
+        Py_DECREF(fr);
+        return fonts;
+    }
+    Py_ssize_t pos = 0;
+    PyObject *k, *v;
+    int ok = 1;
+    while (ok && PyDict_Next(fr, &pos, &k, &v)) {
+        Py_INCREF(k);
+        Py_INCREF(v);
+        PyObject *fi = NULL;
+        if (PyObject_TypeCheck(v, (PyTypeObject *)g_ref_cls)) {
+            fi = PyDict_GetItemWithError(P->fic, v);
+            if (fi)
+                Py_INCREF(fi);
+            else if (!PyErr_Occurred()) {
+                fi = font_info(P, v, bail);
+                if (fi && PyDict_SetItem(P->fic, v, fi) < 0)
+                    Py_CLEAR(fi);
+            }
+        } else
+            fi = font_info(P, v, bail);
+        if (!fi)
+            ok = 0;
+        else if (fi != Py_None) {
+            PyObject *key = PyUnicode_CheckExact(k) ? (Py_INCREF(k), k)
+                                                    : PyObject_Str(k);
+            ok = key && PyDict_SetItem(fonts, key, fi) == 0;
+            Py_XDECREF(key);
+        }
+        Py_XDECREF(fi);
+        Py_DECREF(k);
+        Py_DECREF(v);
+    }
+    Py_DECREF(fr);
+    if (!ok)
+        Py_CLEAR(fonts);
+    return fonts;
+}
+
+/* one page: 1 = served (its results appended), 0 = bail (nothing
+ * appended), -1 = an exception that is not an Exception (propagates) */
+static int run_one(Pages *P, PyObject *page, Py_ssize_t idx)
+{
+    Ctx cx;
+    Ctx *c = &cx;
+    memset(c, 0, sizeof(Ctx));
+    c->native = 1;
+    c->doc = &P->doc;
+    c->dmemo = P->dmemo;
+    c->page_index = idx;
+    int rc = -1;
+    PyObject *pd = PyObject_GetAttr(page, s_dict), *res = NULL, *text = NULL,
+             *frag = NULL, *contents = NULL;
+    if (pd)
+        res = PyObject_GetAttr(page, s_resources);
+    if (!res)
+        goto bail;
+    if (!PyDict_Check(pd) || !PyDict_Check(res)) {
+        c->bail = 1;
+        goto bail;
+    }
+    c->fonts = page_fonts(P, res, &c->bail);
+    if (!c->fonts)
+        goto bail;
+    contents = PyDict_GetItemWithError(pd, k_Contents);
+    if (!contents && PyErr_Occurred())
+        goto bail;
+    if (!contents || contents == Py_None)
+        c->data_obj = PyBytes_FromStringAndSize(NULL, 0);
+    else {
+        Py_INCREF(contents);
+        c->data_obj = doc_contents(&P->doc, contents, P->safe_decode,
+                                   &c->bail);
+        Py_DECREF(contents);
+    }
+    if (!c->data_obj)
+        goto bail;
+    if (!PyBytes_Check(c->data_obj)) {
+        c->bail = 1;
+        goto bail;
+    }
+    c->data = (const unsigned char *)PyBytes_AS_STRING(c->data_obj);
+    c->n = PyBytes_GET_SIZE(c->data_obj);
+    /* Interpreter(...): a fresh _State, the thresholds, the font-None memo */
+    c->resources = res;
+    c->nl_thr = P->nl_thr;
+    c->sp_thr = P->sp_thr;
+    c->tj_thr = P->tj_thr;
+    c->inc_art = P->inc_art;
+    c->la1 = c->la4 = 1.0;
+    c->ctm[0] = c->ctm[3] = 1.0;
+    c->ctm_ident = 1;
+    c->hs = 100.0;
+    c->l_sp = c->sp_thr * c->fs;
+    c->noart = 1;
+    c->tf_name = Py_None;
+    Py_INCREF(Py_None);
+    c->text_parts = PyList_New(0);
+    c->spans = PyList_New(0);
+    if (!c->text_parts || !c->spans)
+        goto bail;
+    c->font_memo = memo_for(c, NULL, NULL);
+    if (!c->font_memo || scan_content(c) < 0)
+        goto bail;
+    /* finalize: the last text span, the page text, no fragments */
+    if (c->flushed == 0) {
+        text = PyUnicode_Join(g_empty, c->text_parts);
+        if (text && PyUnicode_GET_LENGTH(text)) {
+            PyObject *span = PyTuple_Pack(3, g_text_str, text, Py_None);
+            if (!span || PyList_Append(c->spans, span) < 0)
+                Py_CLEAR(text);
+            Py_XDECREF(span);
+        }
+    } else if (flush_text(c) == 0)
+        text = PyUnicode_Join(g_empty, c->text_parts);
+    frag = text ? PyList_New(0) : NULL;
+    if (!frag)
+        goto bail;
+    /* committed: an error from here on propagates */
+    rc = -1;
+    if (PyList_SetSlice(P->spans, PY_SSIZE_T_MAX, PY_SSIZE_T_MAX,
+                        c->spans) < 0 ||
+        PyList_Append(P->texts, text) < 0 ||
+        PyList_Append(P->frags, frag) < 0)
+        goto out;
+    rc = 1;
+    goto out;
+bail:
+    /* a bail, or an exception Python re-raises in the page's own run */
+    if (!PyErr_Occurred() || PyErr_ExceptionMatches(PyExc_Exception)) {
+        PyErr_Clear();
+        rc = 0;
+    }
+out:
+    stack_clear(c);
+    free(c->stk);
+    free(c->qs);
+    free(c->mc);
+    Py_XDECREF(pd);
+    Py_XDECREF(res);
+    Py_XDECREF(text);
+    Py_XDECREF(frag);
+    Py_XDECREF(c->fonts);
+    Py_XDECREF(c->data_obj);
+    Py_XDECREF(c->text_parts);
+    Py_XDECREF(c->spans);
+    Py_XDECREF(c->font_memo);
+    Py_XDECREF(c->tf_name);
+    return rc;
+}
+
+/* run_pages(reader, pages, start, spans, page_texts, page_fragments,
+ * newline_threshold, space_threshold, tj_space_threshold,
+ * include_artifacts, _safe_decode): runs pages[start:] until one bails,
+ * appending each served page's results to the three DocResult lists.
+ * Returns the index of the first page not served (len(pages) when all
+ * were), or None when this document is not served at all. */
+static PyObject *run_pages(PyObject *self, PyObject *args)
+{
+    Pages P;
+    memset(&P, 0, sizeof(P));
+    PyObject *reader, *pages;
+    Py_ssize_t start;
+    if (!PyArg_ParseTuple(args, "OO!nO!O!O!dddpO", &reader, &PyList_Type,
+                          &pages, &start, &PyList_Type, &P.spans,
+                          &PyList_Type, &P.texts, &PyList_Type, &P.frags,
+                          &P.nl_thr, &P.sp_thr, &P.tj_thr, &P.inc_art,
+                          &P.safe_decode))
+        return NULL;
+    if (!g_extract_font_info || !g_cmap_cls || !g_scan_bi || start < 0)
+        Py_RETURN_NONE;
+    int rc = doc_open(&P.doc, reader);
+    if (rc <= 0) {
+        if (rc < 0)
+            return NULL;
+        Py_RETURN_NONE;
+    }
+    P.fic = PyObject_GetAttr(reader, s_fontinfo_cache);
+    P.dmemo = P.fic ? PyObject_GetAttr(reader, s_span_memo) : NULL;
+    int served = P.dmemo && PyDict_CheckExact(P.fic) &&
+                 PyDict_CheckExact(P.dmemo);
+    if (!served && PyErr_Occurred()) {
+        if (PyErr_ExceptionMatches(PyExc_AttributeError))
+            PyErr_Clear(); /* a reader without the caches: not served */
+        else
+            rc = -1;
+    }
+    Py_ssize_t idx = start;
+    for (; served && idx < PyList_GET_SIZE(pages); idx++) {
+        PyObject *page = PyList_GET_ITEM(pages, idx);
+        Py_INCREF(page);
+        rc = run_one(&P, page, idx);
+        Py_DECREF(page);
+        if (rc <= 0)
+            break;
+    }
+    Py_XDECREF(P.fic);
+    Py_XDECREF(P.dmemo);
+    doc_close(&P.doc);
+    if (rc < 0)
+        return NULL;
+    if (!served)
+        Py_RETURN_NONE;
+    return PyLong_FromSsize_t(idx);
+}
+
 /* ---- setup -------------------------------------------------------------- */
 /* Replace a module global: incref the new value, release the previously
  * installed one (setup may be called more than once if content.py is
@@ -7308,10 +8296,10 @@ static void install_global(PyObject **slot, PyObject *value)
 static PyObject *setup(PyObject *self, PyObject *args)
 {
     PyObject *markers, *name_memo, *decode_name, *inline_tok, *hexval,
-        *bi_helper, *bdc_helper;
-    if (!PyArg_ParseTuple(args, "OOOOOOO", &markers, &name_memo,
+        *bi_helper, *bdc_helper, *scan_bi;
+    if (!PyArg_ParseTuple(args, "OOOOOOOO", &markers, &name_memo,
                           &decode_name, &inline_tok, &hexval,
-                          &bi_helper, &bdc_helper))
+                          &bi_helper, &bdc_helper, &scan_bi))
         return NULL;
     if (!PyTuple_Check(markers) || PyTuple_GET_SIZE(markers) != 4) {
         PyErr_SetString(PyExc_TypeError, "markers must be a 4-tuple");
@@ -7327,6 +8315,7 @@ static PyObject *setup(PyObject *self, PyObject *args)
     install_global(&g_hexval, hexval);
     install_global(&g_bi_helper, bi_helper);
     install_global(&g_bdc_helper, bdc_helper);
+    install_global(&g_scan_bi, scan_bi);
     Py_RETURN_NONE;
 }
 
@@ -7648,6 +8637,9 @@ static PyMethodDef methods[] = {
      "CMap.parse's CMap; BAIL = bail"},
     {"run_page", run_page, METH_VARARGS,
      "run the fast content loop; None on completion"},
+    {"run_pages", run_pages, METH_VARARGS,
+     "run a document's pages natively from start; the first page not "
+     "served, or None = the document is not served"},
     {"parse_indirect", parse_indirect, METH_VARARGS,
      "fast `N G obj value [stream]` parse; None = fall back to Python"},
     {NULL, NULL, 0, NULL},
@@ -7758,6 +8750,19 @@ PyMODINIT_FUNC PyInit_oxpdf_cscan(void)
     IN(m_ranges, "ranges");
     IN(m_single, "single");
     IN(m_inherited_predefined, "inherited_predefined");
+    IN(s_fontinfo_cache, "_fontinfo_cache");
+    IN(s_span_memo, "_span_decode_memo");
+    IN(s_resources, "resources");
+    IN(k_Font, "Font");
+    IN(k_XObject, "XObject");
+    IN(k_Subtype, "Subtype");
+    IN(k_Properties, "Properties");
+    IN(g_text_str, "text");
+    IN(g_image_str, "image");
+    IN(g_fb_win, "WinAnsiEncoding");
+    IN(g_fb_mac, "MacRomanEncoding");
+    IN(g_fb_std, "StandardEncoding");
+    IN(g_fb_pdfdoc, "PdfDocEncoding");
     k_inheritable[0] = k_Resources;
     k_inheritable[1] = k_MediaBox;
     IN(k_inheritable[2], "CropBox");

@@ -23,14 +23,26 @@ pinned to its Python original by the differential tests
   tokenize_cmap, for the ToUnicode streams fonts.extract_font_info reads)
   and, inside ``run_page``, the per-font code table that decodes and
   measures a show run the run memo missed (Interpreter._decode:
-  fonts.decode_text and calculate_text_width_from_codes);
+  fonts.decode_text and calculate_text_width_from_codes), with the
+  Standard-14 width rows (afm_widths.TABLES) fixed at setup;
+- the page loop (``run_pages``: extract.extract_pdf_bytes's per-page
+  loop for options without layout fragments — no layout, emission order,
+  no OCR): per page the font lookup (the Python
+  fonts.extract_font_info on a FontInfo cache miss, stored in
+  reader._fontinfo_cache), the /Contents assembly, the interpreter state,
+  the run and Interpreter.finalize, with no Interpreter built. A page
+  bails to the Python loop on an exception in it (Python then records
+  the page's error), a Form XObject, a fetch ``get_object`` bails on,
+  deep marked-content props, or a run the code table declines; an
+  encrypted document is not served at all;
 - the HTML main-content tokenizer (``html_events``: html_extract.py).
 
 Every entry point returns a complete result or a bail (None, or ``BAIL``
-for ``get_object`` and ``parse_cmap``). On a bail the caller runs that
-whole step in Python, which stays the behavior authority: encrypted
-documents, an indirect /Length and any input the C code is not
-byte-certain about take the Python path. A CMap with usecmap or cid
+for ``get_object`` and ``parse_cmap``; for ``run_pages``, the index of
+the first page it did not serve). On a bail the caller runs that whole
+step in Python, which stays the behavior authority: encrypted documents
+and any input the C code is not byte-certain about take the Python
+path. A CMap with usecmap or cid
 sections bails to the Python parse; a run goes to Interpreter._decode
 for a Type0 font without ToUnicode (CJK/CID tables), 3- or 4-byte
 ToUnicode codes, composite /Widths or CID width tables, no font, or a

@@ -2082,7 +2082,7 @@ def _load_cscan():
     try:
         mod.setup(
             (_AO, _AC, _DO, _DC), _NAME_MEMO, _decode_name, _InlineTok,
-            _hexval, _c_bi, _c_bdc,
+            _hexval, _c_bi, _c_bdc, _scan_bi,
         )
         from . import objects as _objmod
 
@@ -2091,13 +2091,16 @@ def _load_cscan():
             _objmod.Stream,
         )
         # CMap parse and cold run decode (parse_cmap, the per-font code
-        # table behind run_page's memo misses)
-        from . import cmap as _cmap, encodings as _enc
+        # table behind run_page's memo misses, its Standard-14 width rows),
+        # and the FontInfo build run_pages calls on a cache miss
+        from . import afm_widths as _afm, cmap as _cmap, encodings as _enc
+        from . import fonts as _fonts
 
         mod.setup_fonts(
             _cmap.CMap, _enc.glyph_name_to_unicode,
             "".join(_enc.decode_winansi_byte(b) for b in range(256)),
             "".join(_enc.decode_macroman_byte(b) for b in range(256)),
+            _afm.TABLES, _fonts.extract_font_info, _fonts.fallback_encoding,
         )
         # layout-mode fragment emission and the HTML tokenizer; the
         # pure-Python layout and html.parser passes stay the behavior

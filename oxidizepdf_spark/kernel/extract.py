@@ -19,8 +19,9 @@ from __future__ import annotations
 
 import base64
 
+from . import content as _content
 from .objects import PdfParseError, Ref
-from .pages import flatten_page_tree, page_content
+from .pages import _safe_decode, flatten_page_tree, page_content
 from .reader import EncryptedPdfError, PdfReader
 from .textstate import ExtractionOptions, Interpreter
 from .fonts import extract_page_fonts
@@ -44,11 +45,30 @@ class DocResult:
         self.page_texts: list[str] = []
 
 
+def _page_loop_serves(options: ExtractionOptions) -> bool:
+    """Whether the C page loop (``run_pages``) may run these options: it
+    builds no positioned fragments, so no layout, emission order and no
+    OCR. The thresholds and ``include_artifacts`` go along with the call,
+    and a page that fails bails to the Python loop in every error mode."""
+    return (
+        not options.preserve_layout
+        and options.reading_order == "emission"
+        and options.ocr_provider is None
+    )
+
+
 def extract_pdf_bytes(
     data: bytes, options: ExtractionOptions | None = None
 ) -> DocResult:
     """Whole-document extraction (reference: extract_text → per-page loop,
-    text/extraction.rs:640-652). Page order follows the page tree (S11)."""
+    text/extraction.rs:640-652). Page order follows the page tree (S11).
+
+    With the C kernel loaded and options the C page loop serves, the pages
+    run natively in one call (``_cscan.c`` ``run_pages``: fonts, contents,
+    interpretation and finalize per page, calling the Python
+    ``extract_font_info`` on a FontInfo cache miss). A page it is not
+    certain about bails, and the loop below runs that page and stays the
+    authority; the C loop then resumes at the next page."""
     res = DocResult()
     res.bytes_in = len(data)
     options = options or ExtractionOptions()
@@ -82,7 +102,23 @@ def extract_pdf_bytes(
         if options.reading_order == "structure"
         else None
     )
-    for idx, page in enumerate(pages):
+    ck = _content._CSCAN if _page_loop_serves(options) else None
+    idx = 0
+    while idx < res.n_pages:
+        if ck is not None:
+            stop = ck.run_pages(
+                reader, pages, idx, res.spans, res.page_texts,
+                res.page_fragments, options.newline_threshold,
+                options.space_threshold, options.tj_space_threshold,
+                options.include_artifacts, _safe_decode,
+            )
+            if stop is None:  # not served at all (encrypted)
+                ck = None
+            elif stop >= res.n_pages:
+                break
+            else:  # page `stop` bailed: it runs below
+                idx = stop
+        page = pages[idx]
         try:
             fonts = extract_page_fonts(page.resources, reader)
             content = page_content(reader, page)
@@ -112,7 +148,7 @@ def extract_pdf_bytes(
             if options.error_mode != "skip":
                 # tolerant: degrade, record error-as-data, keep going
                 res.error = f"page{idx}:{type(e).__name__}:{e}"
-            continue
+        idx += 1
     return res
 
 

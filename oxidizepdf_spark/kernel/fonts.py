@@ -23,13 +23,16 @@ and decode every run the table declines: Type0 fonts without ToUnicode,
 3- or 4-byte ToUnicode codes, composite /Widths or CID width tables, no
 font, and any decode that meets the acceptance gate or a sanitize
 trigger. FontInfo is built here, with ToUnicode streams parsed by the C
-``parse_cmap`` (see cmap.py).
+``parse_cmap`` (see cmap.py); the C page loop (``run_pages``, see
+extract.py) calls ``extract_font_info`` on a FontInfo cache miss and
+mirrors ``extract_page_fonts``.
 """
 
 from __future__ import annotations
 
 import re
 
+from .afm_widths import standard14_widths
 from .cmap import CMap, decode_with_cmap
 from .encodings import (
     decode_macroman_byte,
@@ -106,8 +109,10 @@ class FontInfo:
         self.cid_default_width: float = 1000.0
         self._decode_table: dict[int, str] | None = None
         # built by _cscan.c on the first run-memo miss (False: no table
-        # applies, Interpreter._decode decodes); per document like
-        # _decode_table, since FontInfo is per document
+        # applies, Interpreter._decode decodes); per FontInfo, so per
+        # document, except that a Standard-14 font without /Differences or
+        # ToUnicode shares a constant table built once per width table
+        # and base encoding
         self._code_table = None
 
     @property
@@ -219,8 +224,6 @@ def extract_font_info(font_dict: dict, reader) -> FontInfo | None:
         and info.name
         and info.font_type in ("Type1", "TrueType", "MMType1")
     ):
-        from .afm_widths import standard14_widths
-
         std = standard14_widths(info.name)
         if std is not None:
             table, default = std

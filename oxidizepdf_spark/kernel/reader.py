@@ -172,13 +172,14 @@ class PdfReader:
 
         Fast path: the C fetch (kernel/_cscan.c get_object) serves free,
         in-use and compressed entries of unencrypted documents, strict or
-        recovered, stream payloads with a direct /Length included, and
-        fills the same ``_cache`` (and, for an object stream, the same
-        ``_objstm_cache`` members). It answers ``BAIL`` for a missing entry
-        (``fill_missing_objects`` below), a wrong object at the offset
-        (``_rescan_for``), an indirect /Length, an indirect or odd
-        object-stream /N or /First, or any parse it is not byte-certain
-        about, and the code below then fetches the object."""
+        recovered, stream payloads included, and fills the same
+        ``_cache`` (and, for an object stream, the same
+        ``_objstm_cache`` members); an indirect /Length resolves with the
+        object in ``_resolving``, as below. It answers ``BAIL`` for a
+        missing entry (``fill_missing_objects`` below), a wrong object at
+        the offset (``_rescan_for``), a /Length it cannot resolve, an
+        indirect or odd object-stream /N or /First, or any parse it is not
+        byte-certain about, and the code below then fetches the object."""
         key = (num, gen)
         if key in self._cache:
             return self._cache[key]
@@ -283,7 +284,10 @@ class PdfReader:
             pos += 1
         length = value.get("Length")
         if isinstance(length, Ref):
-            length = self.resolve(length)
+            # an xref stream is read while the xref is being built, so its
+            # indirect /Length cannot resolve yet: the endstream search
+            # (lenient) or the strict-mode error decides instead
+            length = self.resolve(length) if hasattr(self, "xref") else None
         raw = None
         if isinstance(length, int) and length >= 0 and pos + length <= len(data):
             cand_end = pos + length

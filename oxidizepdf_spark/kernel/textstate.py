@@ -285,7 +285,13 @@ class PageExtraction:
 
 class Interpreter:
     """Per-page interpreter. ``reader`` may be None for bare content streams
-    (then Do targets nothing and fonts come from ``fonts``)."""
+    (then Do targets nothing and fonts come from ``fonts``).
+
+    For options without layout fragments, the C page loop (``_cscan.c``
+    ``run_pages``, called from extract.extract_pdf_bytes) runs pages with
+    no Interpreter: it keeps this state in C and keys the document's run
+    memo as ``_memo_for`` does, so a change to either must follow in the
+    other (``tests/test_cscan_differential.py`` compares the two loops)."""
 
     def __init__(
         self,

@@ -1230,6 +1230,22 @@ def _crafted_skeleton_cases():
     cases["contents_array"] = _pdf(direct)
     cases["indirect_length"] = build_pdf_with_content_stream(
         _CONTENT, indirect_length=True)
+    # an indirect /Length naming the stream itself, a missing object, a
+    # wrong length, a chain of refs, and an int inside an object stream
+    for label, length, extra in (
+            ("self", b"4 0 R", {}),
+            ("missing", b"42 0 R", {}),
+            ("wrong", b"6 0 R", {6: b"3"}),
+            ("chain", b"6 0 R", {6: b"7 0 R", 7: b"%d" % len(_CONTENT)})):
+        objs = {**_objects(), **extra}
+        objs[4] = objs[4].replace(b"/Length %d" % len(_CONTENT),
+                                  b"/Length " + length)
+        cases["indirect_length_" + label] = _pdf(objs)
+    objs = _objects()
+    objs[4] = objs[4].replace(b"/Length %d" % len(_CONTENT), b"/Length 7 0 R")
+    cases["indirect_length_objstm"] = _xs_pdf(
+        {k: v for k, v in objs.items() if k != 5},
+        {5: objs[5], 7: b"%d" % len(_CONTENT)}, container=8)
     cases["length_too_long"] = build_pdf_with_content_stream(
         _CONTENT, length_delta=7)
     cases["length_too_short"] = build_pdf_with_content_stream(
@@ -1355,9 +1371,11 @@ def test_differential_skeleton_mutations():
 
 def test_skeleton_fast_path_taken():
     """The crafted documents open, flatten and assemble in C (no bail):
-    classic and xref-stream chains, a recovery, a recovered reader's
-    fetch, page tree and contents, an object-stream member and an LZW
-    payload; and each listed shape bails to Python."""
+    classic and xref-stream chains (an xref stream with an indirect
+    /Length, an int /XRefStm at non-object bytes), a recovery, a recovered
+    reader's fetch, page tree and contents, an object-stream member, a
+    stream with an indirect /Length and an LZW payload; and each listed
+    shape bails to Python."""
     from oxidizepdf_spark.corpus import lzw_encode
     from oxidizepdf_spark.kernel.filters import MAX_DECOMPRESSED_SIZE
     from oxidizepdf_spark.kernel.pages import MAX_TREE_DEPTH, Page
@@ -1369,6 +1387,8 @@ def test_skeleton_fast_path_taken():
                         ("xref_stream_objstm", "strict"),
                         ("xs_prev_classic", "strict"),
                         ("hybrid_xrefstm", "strict"),
+                        ("xrefstm_int", "strict"),
+                        ("xs_indirect_length", "strict"),
                         ("no_startxref", "recovered"),
                         ("rec_xs_objstm", "recovered")):
         r = ck.xref_chain(cases[label], True)
@@ -1398,8 +1418,10 @@ def test_skeleton_fast_path_taken():
         assert ck.get_object(rdr, 1, 0) is ck.BAIL, label
     indirect = re.search(rb"(\d+) 0 obj\s*<< /Length \d+ 0 R",
                          cases["indirect_length"])
+    rdr = PdfReader(cases["indirect_length"])
+    stm = ck.get_object(rdr, int(indirect.group(1)), 0)
+    assert stm is not ck.BAIL and stm.raw == _CONTENT
     for label, num in (("wrong_object_offset", 4),
-                       ("indirect_length", int(indirect.group(1))),
                        ("contents_dangling_ref", 99),
                        ("xs_objstm_n_ref", 1),
                        ("xs_objstm_own_container", 6)):
@@ -1835,3 +1857,283 @@ def test_type0_self_descendant_extracts():
     assert got_c == got_py
     spans, n_pages, error, _mode = got_c
     assert spans == [("text", "Hello", None)] and error is None
+
+
+def test_xref_stream_indirect_length_extracts():
+    """An xref stream whose /Length is indirect is read while the xref is
+    being built, when the reference cannot resolve: the lenient endstream
+    search finds the payload and the document extracts (it used to end as
+    internal:AttributeError); a strict reader reports the unresolvable
+    xref. Both paths agree."""
+    from oxidizepdf_spark.kernel.extract import extract_pdf_bytes
+    from oxidizepdf_spark.kernel.textstate import ExtractionOptions
+
+    data = _crafted_skeleton_cases()["xs_indirect_length"]
+    for opts, want in ((None, ([("text", "Hello", None)], None)),
+                       (ExtractionOptions(error_mode="strict"),
+                        ([], "parse:xref unresolvable (strict mode)"))):
+        def run():
+            res = extract_pdf_bytes(data, opts)
+            return res.spans, res.error
+
+        got_c, got_py = _both_paths(run)
+        assert got_c == got_py == want
+
+
+# -- the page loop (run_pages) against the Python page loop ---------------
+
+
+def _doc_run(data: bytes, options=None):
+    """extract_pdf_bytes' whole result, plus what the document's reader
+    holds afterwards: the object-cache and FontInfo-cache keys in
+    insertion order, and every run-memo entry keyed by font fields."""
+    from oxidizepdf_spark.kernel import extract as E
+
+    readers = []
+
+    class Recording(E.PdfReader):
+        __slots__ = ()
+
+        def __init__(self, *a, **k):
+            readers.append(self)
+            super().__init__(*a, **k)
+
+    saved = E.PdfReader
+    E.PdfReader = Recording
+    try:
+        res = E.extract_pdf_bytes(data, options)
+    finally:
+        E.PdfReader = saved
+    out = [res.spans, res.page_texts,
+           [[_frag_key(f) for f in page] for page in res.page_fragments],
+           res.n_pages, res.mode, res.error]
+    for rdr in readers:
+        if not hasattr(rdr, "xref"):
+            continue
+        out.append(list(rdr._cache))
+        out.append([(k, _font_key(v)) for k, v in rdr._fontinfo_cache.items()])
+        out.append(sorted((
+            ((_font_key(info), cls),
+             sorted(((b, d, repr(w)) for b, (d, w) in memo.items()),
+                    key=repr))
+            for (info, cls), memo in rdr._span_decode_memo.items()),
+            key=repr))
+    return out
+
+
+def _both_page_loops(fn, monkeypatch):
+    """fn() with the C page loop, then with the Python page loop forced
+    (every other C step still on)."""
+    from oxidizepdf_spark.kernel import extract as E
+
+    with_loop = fn()
+    with monkeypatch.context() as m:
+        m.setattr(E, "_page_loop_serves", lambda options: False)
+        without = fn()
+    return with_loop, without
+
+
+def _assert_same_page_loop(data: bytes, label, monkeypatch, options=()):
+    for opts in (None, *options):
+        got, want = _both_page_loops(lambda: _doc_run(data, opts),
+                                     monkeypatch)
+        assert got == want, (label, opts and opts.error_mode)
+
+
+def _error_modes():
+    from oxidizepdf_spark.kernel.textstate import ExtractionOptions
+
+    return (ExtractionOptions(error_mode="strict"),
+            ExtractionOptions(error_mode="skip"),
+            ExtractionOptions(include_artifacts=True, space_threshold=0.05,
+                              newline_threshold=1.5, tj_space_threshold=0.0))
+
+
+def _page_loop_content_cases():
+    """Content streams for the native operators: ' and ", q/Q, marked
+    content with inline and named property lists, image and Form
+    XObjects, inline images, fonts missing from the page, and broken
+    operands."""
+    streams = {
+        "quotes": b"BT /F1 10 Tf 12 TL 72 700 Td (a) Tj (b) ' 1 2 (c) \" "
+                  b"(d) ' T* (e) Tj ET",
+        "quote_no_bt": b"(x) ' 1 2 (y) \" BT (z) ' ET",
+        "quote_no_leading": b"BT /F1 10 Tf 5 5 Td (a) ' (b) ' ET",
+        "q_nesting": b"q 2 0 0 2 5 5 cm q 1 0 0 1 9 9 cm BT /F1 8 Tf (a) Tj "
+                     b"ET Q BT (b) Tj ET Q Q Q BT 0 -30 Td (c) Tj ET",
+        "artifact": b"/Artifact BMC BT /F1 10 Tf (hide) Tj ET /Span BMC "
+                    b"BT (nested) Tj ET EMC EMC BT (show) Tj ET EMC EMC",
+        "bdc_inline": b"/P << /MCID 2 /ActualText (x) /K [1 [2] << /A 1 >>] "
+                      b">> BDC BT /F1 10 Tf (tag) Tj ET EMC",
+        "bdc_named": b"/P /MC0 BDC BT /F1 10 Tf (n) Tj ET EMC /Artifact "
+                     b"/MC1 BDC (hidden) Tj BT (h) Tj ET EMC /X /None BDC EMC",
+        "bdc_broken": b"/P << /MCID >> BDC (a) Tj /P << 3 4 >> BDC BDC "
+                      b"/Artifact << /A [ 1 >> BDC BT /F1 9 Tf (b) Tj ET "
+                      b"EMC EMC EMC",
+        "bdc_deep": b"/P << /K " + b"[" * 80 + b"]" * 80 + b" >> BDC "
+                    b"BT /F1 9 Tf (deep) Tj ET EMC",
+        "images": b"BT /F1 10 Tf (before) Tj ET /Im1 Do q /Im2 Do Q /Bad Do "
+                  b"/NotStm Do /Missing Do 5 Do BT (after) Tj ET /Im1 Do",
+        "form": b"BT /F1 10 Tf (out) Tj ET /Fm1 Do BT (after) Tj ET",
+        "inline_images": b"BT /F1 10 Tf (a) Tj ET BI /W 1 /H 1 /CS /G /BPC 8 "
+                         b"ID \x00 EI BT (b) Tj ET BI /W 1 ID \x00\x01 EI BI",
+        "unknown_font": b"BT /F9 10 Tf (a) Tj /F1 10 Tf (b) Tj / 10 Tf (c) "
+                        b"Tj ET",
+        "font_switch": b"BT /F1 10 Tf (a) Tj /F2 12 Tf (b) Tj /F1 14 Tf (a) "
+                       b"Tj /F2 12 Tf [(b) -300 (c)] TJ ET",
+        "empty": b"",
+        "bad_hex": b"BT /F1 10 Tf <4G> Tj ET",
+        "gray_colors": b"0.5 g 1 0 0 rg 0 0 0 1 k BT /F1 10 Tf (c) Tj ET",
+        # resource names pick the run memo's fallback class
+        "fallback_names": b"BT /StandardF 9 Tf (a) Tj /MacRomanF 9 Tf (b) "
+                          b"' /Helvetica 9 Tf (c) Tj /xPDFDOC 9 Tf (d) Tj "
+                          b"/WINANSI#C9 9 Tf (e) Tj /Times 9 Tf (f) Tj ET",
+        "huge_matrix": b"BT /F1 10 Tf 1 0 1" + b"0" * 400 + b" 1 0 0 Tm "
+                       b"-1" + b"0" * 400 + b" TL (a) ' (b) ' (c) Tj ET",
+    }
+    return {"content_" + label: _page_loop_pdf(content)
+            for label, content in streams.items()}
+
+
+def _page_loop_pdf(content: bytes) -> bytes:
+    """One page showing ``content`` over two fonts, image and Form
+    XObjects and named property lists."""
+    img = (b"<< /Type /XObject /Subtype /Image /Width 1 /Height 1 "
+           b"/ColorSpace /DeviceGray /BitsPerComponent 8 /Length 1 >>\n"
+           b"stream\n\x00\nendstream")
+    form = (b"<< /Type /XObject /Subtype /Form /BBox [0 0 9 9] /Length 31 >>"
+            b"\nstream\nBT /F1 9 Tf (Inside form) Tj ET\nendstream")
+    res = (b"/Resources << /Font << /F1 5 0 R /F2 10 0 R /StandardF 5 0 R "
+           b"/MacRomanF 5 0 R /Helvetica 10 0 R /xPDFDOC 5 0 R "
+           b"/WINANSI#C9 5 0 R /Times 5 0 R >> /XObject << "
+           b"/Im1 6 0 R /Fm1 7 0 R /Im2 9 0 R /Bad 99 0 R /NotStm 8 0 R >> "
+           b"/Properties << /MC0 8 0 R /MC1 << /MCID 3 >> >> >> ")
+    objs = _objects(content=content, page_extra=res)
+    objs.update({
+        6: img, 7: form, 8: b"<< /MCID 7 /ActualText (alt) >>",
+        9: img.replace(b"/Image", b"/Other"),
+        10: b"<< /Type /Font /Subtype /Type1 /BaseFont /Times-Bold "
+            b"/Encoding /MacRomanEncoding >>"})
+    return _pdf(objs)
+
+
+def test_differential_page_loop_crafted(monkeypatch):
+    """The C page loop against the Python page loop on the crafted font,
+    skeleton and content cases, in every error mode and with non-default
+    thresholds: spans, page texts, fragments, page count, mode, error,
+    and the reader's object cache, FontInfo cache and run memo."""
+    cases = {**_crafted_font_cases(), **_crafted_skeleton_cases(),
+             **_page_loop_content_cases()}
+    modes = _error_modes()
+    for label, data in cases.items():
+        _assert_same_page_loop(data, label, monkeypatch, modes)
+
+
+def test_differential_page_loop_corpus(monkeypatch):
+    """The catalog, and a 300-document generated sample with 50-page
+    documents and corrupted (recovered) variants."""
+    from oxidizepdf_spark.corpus import all_cases, generate_corpus
+    from oxidizepdf_spark.kernel.extract import decode_raw_payload
+
+    for case, pdf, _expected in all_cases():
+        _assert_same_page_loop(pdf, case, monkeypatch, _error_modes())
+    mega = 0
+    for in_row, _ in generate_corpus(n_docs=300, seed=13, mega_doc_rate=0.05,
+                                     corrupt_rate=0.1):
+        mega += in_row["case"] == "MEGA"
+        for s in in_row["spans"]:
+            if s["kind"] == "raw_pdf":
+                _assert_same_page_loop(decode_raw_payload(s["text"] or ""),
+                                       (in_row["doc_id"], in_row["case"]),
+                                       monkeypatch)
+    assert mega >= 5
+
+
+def test_differential_page_loop_mutations(monkeypatch):
+    """Seeded edits of the crafted documents' bytes (the skeleton and font
+    shapes) and of their content streams (operator soup over the native
+    operators), through both page loops."""
+    import random
+
+    rng = random.Random(13)
+    docs = list(_crafted_skeleton_cases().values())
+    docs += list(_crafted_font_cases().values())
+    tokens = [b"R", b" ", b"<<", b">>", b"[", b"]", b"/", b"(", b")", b"%",
+              b"\n", b"0", b"9", b"-", b".", b"<", b">", b"\x00", b"endstream",
+              b"obj", b"/Contents", b"/Font", b"/Length 2 0 R"]
+    for _ in range(600):
+        data = bytearray(rng.choice(docs))
+        for _edit in range(rng.randrange(1, 4)):
+            i = rng.randrange(len(data))
+            op = rng.random()
+            if op < 0.3:
+                data[i] = rng.randrange(256)
+            elif op < 0.7:
+                data[i:i] = rng.choice(tokens)
+            else:
+                del data[i:i + rng.randrange(1, 8)]
+        data = bytes(data)
+        got, want = _both_page_loops(lambda: _doc_run(data), monkeypatch)
+        assert got == want, data
+    ops = [b"BT", b"ET", b"/F1 10 Tf", b"/F2 7 Tf", b"/F9 3 Tf", b"(ab)",
+           b"<41 42>", b"Tj", b"TJ", b"[(x) -300 (y)]", b"'", b"\"", b"1",
+           b"-2.5", b"Td", b"TD", b"T*", b"12 TL", b"Tm", b"cm", b"q", b"Q",
+           b"/Artifact", b"/P", b"/MC0", b"/MC1", b"BMC", b"BDC", b"EMC",
+           b"<<", b">>", b"/MCID", b"[", b"]", b"/Im1 Do", b"/Im2 Do",
+           b"/Fm1 Do", b"/Bad Do", b"Do", b"BI /W 1 ID \x00 EI", b"BI",
+           b"0.5 g", b"1 0 0 rg", b"Tz", b"Tc", b"Tw", b"Ts", b"Tr", b"%c\n",
+           b"( ) Tj", b"(a  b) Tj", b"<00> Tj", b"ID", b"EI", b";", b"}"]
+    for _ in range(600):
+        content = b" ".join(rng.choice(ops)
+                            for _ in range(rng.randrange(1, 30)))
+        data = _page_loop_pdf(content)
+        got, want = _both_page_loops(lambda: _doc_run(data), monkeypatch)
+        assert got == want, content
+
+
+def test_page_loop_fast_path_taken(monkeypatch):
+    """The catalog's X01 and X12-X15 and a 50-page generated document run
+    every page in the C loop: no Interpreter is built, no
+    extract_page_fonts and no finalize runs. Layout mode, simple reading
+    order, a Type3 font and an encrypted document still take the Python
+    loop, so a silent fallback cannot pass for the fast path."""
+    from oxidizepdf_spark.corpus import (
+        all_cases, build_encrypted_pdf, build_pdf_multipage_texts,
+    )
+    from oxidizepdf_spark.kernel import extract as E
+    from oxidizepdf_spark.kernel.textstate import ExtractionOptions, Interpreter
+
+    calls = []
+
+    def counting(name, fn):
+        def wrapper(*a, **k):
+            calls.append(name)
+            return fn(*a, **k)
+        return wrapper
+
+    monkeypatch.setattr(Interpreter, "__init__",
+                        counting("init", Interpreter.__init__))
+    monkeypatch.setattr(Interpreter, "finalize",
+                        counting("finalize", Interpreter.finalize))
+    monkeypatch.setattr(E, "extract_page_fonts",
+                        counting("fonts", E.extract_page_fonts))
+    catalog = {case: pdf for case, pdf, _ in all_cases()}
+    mega = build_pdf_multipage_texts([f"page {i}" for i in range(50)])
+    for label, data in (*((c, catalog[c]) for c in
+                          ("X01", "X12", "X13", "X14", "X15")),
+                        ("50-page", mega)):
+        calls.clear()
+        res = E.extract_pdf_bytes(data)
+        assert res.spans and res.error is None, label
+        assert calls == [], label
+    assert len(E.extract_pdf_bytes(mega).page_texts) == 50
+    for label, data, opts in (
+            ("layout", catalog["X01"],
+             ExtractionOptions(preserve_layout=True)),
+            ("simple order", catalog["X01"],
+             ExtractionOptions(reading_order="simple")),
+            ("type3", _crafted_font_cases()["type3"], None),
+            ("encrypted", build_encrypted_pdf("secret text"), None)):
+        calls.clear()
+        E.extract_pdf_bytes(data, opts)
+        assert {"init", "fonts", "finalize"} <= set(calls), label

@@ -16,9 +16,16 @@ default and layout mode are added.
 Before the JSON line, a table splits the whole 16,000-document corpus by
 document class (strict classic xref, recovered, xref stream, object
 stream, LZW content, 50-page, HTML): documents, ``PdfReader`` +
-``flatten_page_tree`` µs/doc, ``extract_document_spans`` µs/doc and the
+``flatten_page_tree`` µs/doc, ``extract_document_spans`` µs/doc, the
 class's share of the corpus's kernel time, each class at its best of
-``--reps``.
+``--reps``, and the share of the class's pages the C page loop
+(``_cscan.c`` ``run_pages``) served, counted in an untimed pass as the
+pages that built no ``Interpreter``.
+
+The replay (and so perfbench's ``kernel.*`` layers) times the Python
+per-page steps one call at a time, so it does not see the C page loop:
+the figures that move with it are the table's full µs/doc here and
+``pipeline.py_run_s`` in a traced perfbench run.
 """
 
 from __future__ import annotations
@@ -90,9 +97,33 @@ def _doc_class(case: str, data: bytes | None) -> str:
     return _CASE_CLASS.get(case, "strict classic")
 
 
+def native_share(items) -> float | None:
+    """The share of the pages of ``items`` that ran in the C page loop:
+    every page the Python loop runs builds one ``Interpreter``."""
+    from oxidizepdf_spark.kernel.extract import extract_document_spans
+    from oxidizepdf_spark.kernel.textstate import Interpreter
+
+    built = 0
+    init = Interpreter.__init__
+
+    def counting(self, *a, **k):
+        nonlocal built
+        built += 1
+        init(self, *a, **k)
+
+    pages = 0
+    Interpreter.__init__ = counting
+    try:
+        for triples, _raw in items:
+            pages += extract_document_spans(triples)[1]["n_pages"]
+    finally:
+        Interpreter.__init__ = init
+    return 1.0 - built / pages if pages else None
+
+
 def class_table(seed: int, reps: int) -> list[tuple]:
-    """Rows of (class, docs, open+tree µs/doc, full µs/doc, kernel share)
-    over the whole ``N_DOCS`` corpus of ``seed``."""
+    """Rows of (class, docs, open+tree µs/doc, full µs/doc, kernel share,
+    native page share) over the whole ``N_DOCS`` corpus of ``seed``."""
     from oxidizepdf_spark.corpus import all_cases, gen_doc
     from oxidizepdf_spark.kernel.extract import (
         decode_raw_payload,
@@ -136,16 +167,19 @@ def class_table(seed: int, reps: int) -> list[tuple]:
         n = max(len(docs[cls]), 1)
         rows.append((cls, len(docs[cls]),
                      None if cls == "HTML" else best_open[cls] / n * 1e6,
-                     best_full[cls] / n * 1e6, best_full[cls] / total))
+                     best_full[cls] / n * 1e6, best_full[cls] / total,
+                     native_share(docs[cls])))
     return rows
 
 
 def print_class_table(rows: list[tuple]) -> None:
-    print("| class | docs | open+tree µs/doc | full µs/doc | share of kernel |")
-    print("|---|---|---|---|---|")
-    for cls, n, open_us, full_us, share in rows:
+    print("| class | docs | open+tree µs/doc | full µs/doc | share of kernel "
+          "| native pages |")
+    print("|---|---|---|---|---|---|")
+    for cls, n, open_us, full_us, share, native in rows:
         o = "-" if open_us is None else f"{open_us:.0f}"
-        print(f"| {cls} | {n} | {o} | {full_us:.0f} | {share:.0%} |")
+        nat = "-" if native is None else f"{native:.1%}"
+        print(f"| {cls} | {n} | {o} | {full_us:.0f} | {share:.0%} | {nat} |")
 
 
 def fixture_legs(reps: int) -> dict:
