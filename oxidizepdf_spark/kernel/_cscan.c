@@ -29,6 +29,7 @@
 #include <stdlib.h>
 #include <ctype.h>
 #include <math.h>
+#include <time.h>
 
 /* ---- module-level objects installed by setup() ------------------------- */
 static PyObject *g_AO, *g_AC, *g_DO, *g_DC;  /* marker singletons */
@@ -3202,9 +3203,9 @@ static PyObject *parse_indirect(PyObject *self, PyObject *args)
  * ======================================================================== */
 
 static PyObject *g_unescape;     /* html.unescape */
-static PyObject *g_ws_collapse;  /* html_extract helper: _WS.sub(' ',s).strip() */
 static PyObject *g_boiler_value; /* html_extract helper: hint match on value */
 static PyObject *g_ev_text, *g_ev_img; /* event kind strings */
+static PyObject *g_text_str, *g_image_str; /* span kinds */
 static PyObject *g_lt_str;             /* "<" */
 
 /* memmem replacement for the two-byte needle case (portable) */
@@ -3293,6 +3294,7 @@ typedef struct {
     PyObject *anchors;   /* list of [href, parts-list] */
     PyObject *cdata;     /* lowercased cdata elem (script/style) or NULL */
     int bail;
+    int want_links;      /* 0: no anchor texts, no links (the span path) */
 } H;
 
 /* tag-name byte: [^\t\n\r\f />\x00] */
@@ -3439,6 +3441,33 @@ static long long h_collapsed_len(PyObject *s)
     return count;
 }
 
+/* _WS.sub(" ", s).strip(): runs of whitespace collapsed to one space,
+ * the ends stripped (regex \s and str.strip both test Py_UNICODE_ISSPACE).
+ * New ref. */
+static PyObject *ws_collapse(PyObject *s)
+{
+    Py_ssize_t len = PyUnicode_GET_LENGTH(s), o = 0;
+    int kind = PyUnicode_KIND(s), pending = 0;
+    const void *data = PyUnicode_DATA(s);
+    void *buf = PyMem_Malloc(len ? len * kind : 1);
+    if (!buf)
+        return PyErr_NoMemory();
+    for (Py_ssize_t i = 0; i < len; i++) {
+        Py_UCS4 ch = PyUnicode_READ(kind, data, i);
+        if (Py_UNICODE_ISSPACE(ch)) {
+            pending = o > 0;
+            continue;
+        }
+        if (pending)
+            PyUnicode_WRITE(kind, buf, o++, ' ');
+        pending = 0;
+        PyUnicode_WRITE(kind, buf, o++, ch);
+    }
+    PyObject *r = PyUnicode_FromKindAndData(kind, buf, o);
+    PyMem_Free(buf);
+    return r;
+}
+
 static int h_flush(H *h)
 {
     if (PyList_GET_SIZE(h->seg) == 0)
@@ -3517,7 +3546,7 @@ static int h_close_anchor(H *h)
             Py_DECREF(top);
             return -1;
         }
-        PyObject *coll = PyObject_CallOneArg(g_ws_collapse, joined);
+        PyObject *coll = ws_collapse(joined);
         Py_DECREF(joined);
         if (!coll) {
             Py_DECREF(top);
@@ -3596,8 +3625,9 @@ static int h_start(H *h, PyObject *tag, PyObject *src, PyObject *href,
         h->drop_depth++;
     if (boils)
         h->boiler_depth++;
-    if (is_a) {
+    if (is_a)
         h->anchor_depth++;
+    if (is_a && h->want_links) {
         PyObject *hv = (href && PyUnicode_GET_LENGTH(href)) ? href : g_empty;
         PyObject *parts = PyList_New(0);
         if (!parts)
@@ -4536,59 +4566,116 @@ static void h_free(H *h)
     Py_XDECREF(h->cdata);
 }
 
-/* html_events(doc) -> (events, links) | None (bail: caller re-parses
- * with the pure-Python authority) */
-static PyObject *html_events_py(PyObject *self, PyObject *args)
+/* the tokenizer over doc into h (the caller frees it): 1 = h->events and,
+ * with want_links, h->links hold the result; 0 = bail (the caller
+ * re-parses with the pure-Python authority); -1 = exception */
+static int html_run(H *h, PyObject *doc, int want_links)
 {
-    PyObject *doc;
-    if (!PyArg_ParseTuple(args, "U", &doc))
-        return NULL;
+    memset(h, 0, sizeof(*h));
     if (!g_unescape) {
         PyErr_SetString(PyExc_RuntimeError,
                         "html path requires setup_html");
-        return NULL;
+        return -1;
     }
     Py_ssize_t n;
     const char *u8 = PyUnicode_AsUTF8AndSize(doc, &n);
     if (!u8) {
         PyErr_Clear(); /* lone surrogates etc: Python authority */
-        Py_RETURN_NONE;
+        return 0;
     }
-    H h;
-    memset(&h, 0, sizeof(h));
-    h.d = (const unsigned char *)u8;
-    h.n = n;
-    h.seg = PyList_New(0);
-    h.events = PyList_New(0);
-    h.links = PyList_New(0);
-    h.anchors = PyList_New(0);
-    if (!h.seg || !h.events || !h.links || !h.anchors) {
-        h_free(&h);
-        return NULL;
-    }
+    h->d = (const unsigned char *)u8;
+    h->n = n;
+    h->want_links = want_links;
+    h->seg = PyList_New(0);
+    h->events = PyList_New(0);
+    h->links = PyList_New(0);
+    h->anchors = PyList_New(0);
+    if (!h->seg || !h->events || !h->links || !h->anchors)
+        return -1;
     Py_ssize_t pos = 0;
     /* feed(whole doc) then close(): goahead(0) then goahead(1) over the
      * unconsumed tail (parser.py feed/close semantics) */
-    if (h_goahead(&h, &pos, 0) < 0) {
-        h_free(&h);
-        return NULL;
-    }
-    if (!h.bail && h_goahead(&h, &pos, 1) < 0) {
-        h_free(&h);
-        return NULL;
-    }
-    if (h.bail) {
-        h_free(&h);
-        Py_RETURN_NONE;
-    }
+    if (h_goahead(h, &pos, 0) < 0)
+        return -1;
+    if (!h->bail && h_goahead(h, &pos, 1) < 0)
+        return -1;
+    if (h->bail)
+        return 0;
     /* consumer close(): final flush */
-    if (h_flush(&h) < 0) {
-        h_free(&h);
+    return h_flush(h) < 0 ? -1 : 1;
+}
+
+/* html_events(doc, want_links=True) -> (events, links) | None (bail);
+ * with want_links false the links list stays empty */
+static PyObject *html_events_py(PyObject *self, PyObject *args)
+{
+    PyObject *doc;
+    int want_links = 1;
+    if (!PyArg_ParseTuple(args, "U|p", &doc, &want_links))
         return NULL;
-    }
-    PyObject *r = PyTuple_Pack(2, h.events, h.links);
+    H h;
+    int rc = html_run(&h, doc, want_links);
+    PyObject *r = rc > 0 ? PyTuple_Pack(2, h.events, h.links)
+                  : rc == 0 ? Py_NewRef(Py_None) : NULL;
     h_free(&h);
     return r;
+}
+
+/* extract_html_spans' filter over the events of a finished run: images
+ * as ("image", "", src), and each text segment whitespace-collapsed, kept
+ * when at least min_block_chars long and at most link_density_max anchor
+ * text, as ("text", text, None); appended to out.  0 ok, -1 exception. */
+static int html_filter(PyObject *events, double link_density_max,
+                       Py_ssize_t min_block_chars, PyObject *out)
+{
+    for (Py_ssize_t i = 0; i < PyList_GET_SIZE(events); i++) {
+        PyObject *ev = PyList_GET_ITEM(events, i), *span;
+        if (PyTuple_GET_ITEM(ev, 0) == g_ev_img) {
+            span = PyTuple_Pack(3, g_image_str, g_empty,
+                                PyTuple_GET_ITEM(ev, 1));
+        } else {
+            long long link = PyLong_AsLongLong(PyTuple_GET_ITEM(ev, 2));
+            if (link == -1 && PyErr_Occurred())
+                return -1;
+            PyObject *text = ws_collapse(PyTuple_GET_ITEM(ev, 1));
+            if (!text)
+                return -1;
+            Py_ssize_t len = PyUnicode_GET_LENGTH(text);
+            if (len < min_block_chars ||
+                (double)link / (double)(len > 1 ? len : 1) >
+                    link_density_max) {
+                Py_DECREF(text);
+                continue;
+            }
+            span = PyTuple_Pack(3, g_text_str, text, Py_None);
+            Py_DECREF(text);
+        }
+        int rc = span ? PyList_Append(out, span) : -1;
+        Py_XDECREF(span);
+        if (rc < 0)
+            return -1;
+    }
+    return 0;
+}
+
+/* html_spans(doc, link_density_max, min_block_chars): extract_html_spans'
+ * span list, or None (bail: the Python parser and filter decide) */
+static PyObject *html_spans(PyObject *self, PyObject *args)
+{
+    PyObject *doc;
+    double ldm;
+    Py_ssize_t mbc;
+    if (!PyArg_ParseTuple(args, "Udn", &doc, &ldm, &mbc))
+        return NULL;
+    H h;
+    int rc = html_run(&h, doc, 0);
+    PyObject *out = rc > 0 ? PyList_New(0) : NULL;
+    if (out && html_filter(h.events, ldm, mbc, out) < 0)
+        Py_CLEAR(out);
+    h_free(&h);
+    if (rc == 0)
+        Py_RETURN_NONE;
+    return out;
 }
 
 /* ========================================================================
@@ -5568,18 +5655,13 @@ static PyObject *recover_xref_c(PyObject *self, PyObject *args)
                    PyBytes_GET_SIZE(data_obj));
 }
 
-/* parse_xref_chain (start_offset None): the /Prev chain of traditional
- * sections and xref streams, newest entries and trailer keys first, with
- * the hybrid /XRefStm hop, the cycle guard and the 64-hop cap; recovery
- * when nothing parses.  (entries, trailer, mode) or None. */
-static PyObject *xref_chain(PyObject *self, PyObject *args)
+/* parse_xref_chain (start_offset None) over the bytes of data_obj: the
+ * /Prev chain of traditional sections and xref streams, newest entries
+ * and trailer keys first, with the hybrid /XRefStm hop, the cycle guard
+ * and the 64-hop cap; recovery when nothing parses.  (entries, trailer,
+ * mode), None (bail), or NULL (exception). */
+static PyObject *chain_of(PyObject *data_obj, int lenient)
 {
-    PyObject *data_obj;
-    int lenient = 1;
-    if (!PyArg_ParseTuple(args, "O|p", &data_obj, &lenient))
-        return NULL;
-    if (!PyBytes_Check(data_obj))
-        Py_RETURN_NONE;
     const unsigned char *d = (const unsigned char *)PyBytes_AS_STRING(data_obj);
     Py_ssize_t n = PyBytes_GET_SIZE(data_obj), offset = -1;
     int st = c_startxref(d, n, &offset);
@@ -5680,6 +5762,17 @@ err:
     Py_XDECREF(entries);
     Py_XDECREF(trailer);
     return NULL;
+}
+
+static PyObject *xref_chain(PyObject *self, PyObject *args)
+{
+    PyObject *data_obj;
+    int lenient = 1;
+    if (!PyArg_ParseTuple(args, "O|p", &data_obj, &lenient))
+        return NULL;
+    if (!PyBytes_Check(data_obj))
+        Py_RETURN_NONE;
+    return chain_of(data_obj, lenient);
 }
 
 /* one reader's state for the duration of a C call (borrowed views into
@@ -6093,7 +6186,9 @@ static int walk_node(Walk *w, PyObject *node, PyObject *inherited, long depth)
             if (!res)
                 goto page_out;
         }
-        page = PyObject_CallFunctionObjArgs(w->page_cls, d, res, mb, NULL);
+        page = w->page_cls
+                   ? PyObject_CallFunctionObjArgs(w->page_cls, d, res, mb, NULL)
+                   : PyTuple_Pack(2, d, res);
         if (page && PyList_Append(w->result, page) == 0)
             rc = 0;
     page_out:
@@ -6145,6 +6240,50 @@ out:
     return rc;
 }
 
+/* the page list of doc under trailer: Page(dict, resources, media_box)
+ * objects, or (dict, resources) tuples when page_cls is NULL.  New ref, or
+ * NULL with *bail set (no exception) / an exception. */
+static PyObject *flatten_doc(Doc *doc, PyObject *trailer, PyObject *page_cls,
+                             long max_depth, int *bail)
+{
+    Walk w = {doc, page_cls, NULL, NULL, max_depth, 0};
+    PyObject *catalog = NULL, *pages = NULL, *empty = NULL;
+    if (!PyDict_Check(trailer)) {
+        *bail = 1;
+        return NULL;
+    }
+    catalog = doc_resolve(doc, PyDict_GetItemWithError(trailer, k_Root),
+                          &w.bail);
+    if (!catalog)
+        goto fail;
+    if (!PyDict_Check(catalog)) { /* reader.catalog() raises */
+        w.bail = 1;
+        goto fail;
+    }
+    pages = doc_resolve(doc, PyDict_GetItemWithError(catalog, k_Pages),
+                        &w.bail);
+    w.result = PyList_New(0);
+    w.visited = PySet_New(NULL);
+    empty = PyDict_New();
+    if (!pages || !w.result || !w.visited || !empty)
+        goto fail;
+    if (walk_node(&w, pages, empty, 0) < 0)
+        goto fail;
+    Py_DECREF(catalog);
+    Py_DECREF(pages);
+    Py_DECREF(empty);
+    Py_DECREF(w.visited);
+    return w.result;
+fail:
+    Py_XDECREF(catalog);
+    Py_XDECREF(pages);
+    Py_XDECREF(empty);
+    Py_XDECREF(w.visited);
+    Py_XDECREF(w.result);
+    *bail = w.bail && !PyErr_Occurred();
+    return NULL;
+}
+
 /* flatten_pages(reader, Page, max_depth): the flatten_page_tree list, or
  * None → Python walks the tree itself */
 static PyObject *flatten_pages(PyObject *self, PyObject *args)
@@ -6160,50 +6299,16 @@ static PyObject *flatten_pages(PyObject *self, PyObject *args)
             return NULL;
         Py_RETURN_NONE;
     }
-    Walk w = {&doc, page_cls, NULL, NULL, max_depth, 0};
+    int bail = 0;
     PyObject *trailer = PyObject_GetAttr(reader, s_trailer);
-    PyObject *catalog = NULL, *pages = NULL, *empty = NULL;
-    if (!trailer)
-        goto fail;
-    if (!PyDict_Check(trailer)) {
-        w.bail = 1;
-        goto fail;
-    }
-    catalog = doc_resolve(&doc, PyDict_GetItemWithError(trailer, k_Root),
-                          &w.bail);
-    if (!catalog)
-        goto fail;
-    if (!PyDict_Check(catalog)) { /* reader.catalog() raises */
-        w.bail = 1;
-        goto fail;
-    }
-    pages = doc_resolve(&doc, PyDict_GetItemWithError(catalog, k_Pages),
-                        &w.bail);
-    w.result = PyList_New(0);
-    w.visited = PySet_New(NULL);
-    empty = PyDict_New();
-    if (!pages || !w.result || !w.visited || !empty)
-        goto fail;
-    if (walk_node(&w, pages, empty, 0) < 0)
-        goto fail;
-    Py_DECREF(trailer);
-    Py_DECREF(catalog);
-    Py_DECREF(pages);
-    Py_DECREF(empty);
-    Py_DECREF(w.visited);
-    doc_close(&doc);
-    return w.result;
-fail:
+    PyObject *pages =
+        trailer ? flatten_doc(&doc, trailer, page_cls, max_depth, &bail)
+                : NULL;
     Py_XDECREF(trailer);
-    Py_XDECREF(catalog);
-    Py_XDECREF(pages);
-    Py_XDECREF(empty);
-    Py_XDECREF(w.visited);
-    Py_XDECREF(w.result);
     doc_close(&doc);
-    if (w.bail && !PyErr_Occurred())
+    if (!pages && bail)
         Py_RETURN_NONE;
-    return NULL;
+    return pages;
 }
 
 /* one content stream's bytes (pages._safe_decode): unfiltered payloads
@@ -7563,12 +7668,10 @@ static void install_global(PyObject **slot, PyObject *value); /* below */
 
 static PyObject *setup_html(PyObject *self, PyObject *args)
 {
-    PyObject *unescape, *ws_collapse, *boiler_value;
-    if (!PyArg_ParseTuple(args, "OOO", &unescape, &ws_collapse,
-                          &boiler_value))
+    PyObject *unescape, *boiler_value;
+    if (!PyArg_ParseTuple(args, "OO", &unescape, &boiler_value))
         return NULL;
     install_global(&g_unescape, unescape);
-    install_global(&g_ws_collapse, ws_collapse);
     install_global(&g_boiler_value, boiler_value);
     Py_RETURN_NONE;
 }
@@ -7599,7 +7702,6 @@ static PyObject *setup_html(PyObject *self, PyObject *args)
  * (_cache, _fontinfo_cache, _span_decode_memo) is what the Python re-run
  * of the page puts there too. */
 
-static PyObject *g_text_str, *g_image_str; /* span kinds */
 /* fonts.fallback_encoding's answers */
 static PyObject *g_fb_win, *g_fb_mac, *g_fb_std, *g_fb_pdfdoc;
 static PyObject *s_fontinfo_cache, *s_span_memo, *s_resources;
@@ -8041,22 +8143,82 @@ typedef struct {
     Doc doc;
     PyObject *fic, *dmemo, *safe_decode; /* _fontinfo_cache, run memo */
     PyObject *spans, *texts, *frags;     /* the DocResult lists */
+    PyObject *shared_fi; /* extract_batch's {direct_key: FontInfo}, or NULL */
     double nl_thr, sp_thr, tj_thr;
     int inc_art;
 } Pages;
 
-/* extract_font_info(resolve(fobj)) for a dict, else None (new ref) */
+static PyObject *direct_key(PyObject *v, int depth);
+
+/* t[i] = direct_key(v): 0, or -1 (v not keyed, or an exception) */
+static int set_key(PyObject *t, Py_ssize_t i, PyObject *v, int depth)
+{
+    PyObject *k = direct_key(v, depth + 1);
+    if (!k)
+        return -1;
+    PyTuple_SET_ITEM(t, i, k);
+    return 0;
+}
+
+/* a hashable key for a PDF value that holds no reference: a dict or list
+ * as its type and its items' keys in order, a scalar as (type, value), a
+ * float by its bits.  New ref; NULL without an exception when v holds a
+ * Ref, a Stream or any other object, or nests deeper than 16. */
+static PyObject *direct_key(PyObject *v, int depth)
+{
+    if (depth > 16)
+        return NULL;
+    PyObject *t, *k, *x;
+    if (PyDict_CheckExact(v)) {
+        t = PyTuple_New(1 + 2 * PyDict_GET_SIZE(v));
+        Py_ssize_t pos = 0, i = 1;
+        while (t && PyDict_Next(v, &pos, &k, &x)) {
+            if (set_key(t, i++, k, depth) < 0 || set_key(t, i++, x, depth) < 0)
+                Py_CLEAR(t);
+        }
+    } else if (PyList_CheckExact(v)) {
+        t = PyTuple_New(1 + PyList_GET_SIZE(v));
+        for (Py_ssize_t i = 0; t && i < PyList_GET_SIZE(v); i++)
+            if (set_key(t, i + 1, PyList_GET_ITEM(v, i), depth) < 0)
+                Py_CLEAR(t);
+    } else if (PyFloat_CheckExact(v)) {
+        double d = PyFloat_AS_DOUBLE(v);
+        return Py_BuildValue("(Oy#)", (PyObject *)Py_TYPE(v), (char *)&d,
+                             (Py_ssize_t)sizeof(d));
+    } else if (PyUnicode_Check(v) || PyBytes_CheckExact(v) ||
+               PyLong_CheckExact(v) || PyBool_Check(v) || v == Py_None) {
+        return PyTuple_Pack(2, (PyObject *)Py_TYPE(v), v);
+    } else
+        return NULL;
+    if (t)
+        PyTuple_SET_ITEM(t, 0, Py_NewRef((PyObject *)Py_TYPE(v)));
+    return t;
+}
+
+/* extract_font_info(resolve(fobj)) for a dict, else None (new ref).  In
+ * extract_batch a dict with no reference in it builds the same FontInfo
+ * in every document (extract_font_info resolves only references), so
+ * its FontInfo is shared through P->shared_fi for the whole batch. */
 static PyObject *font_info(Pages *P, PyObject *fobj, int *bail)
 {
     PyObject *fd = doc_resolve(&P->doc, fobj, bail);
     if (!fd)
         return NULL;
-    PyObject *fi = Py_None;
-    if (PyDict_Check(fd))
-        fi = PyObject_CallFunctionObjArgs(g_extract_font_info, fd,
-                                          P->doc.reader, NULL);
-    else
+    PyObject *fi = Py_None, *key = NULL;
+    if (PyDict_Check(fd)) {
+        key = P->shared_fi ? direct_key(fd, 0) : NULL;
+        fi = key ? PyDict_GetItemWithError(P->shared_fi, key) : NULL;
+        if (fi)
+            Py_INCREF(fi);
+        else if (!PyErr_Occurred()) {
+            fi = PyObject_CallFunctionObjArgs(g_extract_font_info, fd,
+                                              P->doc.reader, NULL);
+            if (fi && key && PyDict_SetItem(P->shared_fi, key, fi) < 0)
+                Py_CLEAR(fi);
+        }
+    } else
         Py_INCREF(fi);
+    Py_XDECREF(key);
     Py_DECREF(fd);
     return fi;
 }
@@ -8115,9 +8277,11 @@ static PyObject *page_fonts(Pages *P, PyObject *res, int *bail)
     return fonts;
 }
 
-/* one page: 1 = served (its results appended), 0 = bail (nothing
- * appended), -1 = an exception that is not an Exception (propagates) */
-static int run_one(Pages *P, PyObject *page, Py_ssize_t idx)
+/* one page, its dict and resources borrowed: 1 = served (its spans
+ * appended, and its text and fragments when P keeps them), 0 = bail
+ * (nothing appended), -1 = an exception that is not an Exception
+ * (propagates) */
+static int run_one(Pages *P, PyObject *pd, PyObject *res, Py_ssize_t idx)
 {
     Ctx cx;
     Ctx *c = &cx;
@@ -8127,12 +8291,7 @@ static int run_one(Pages *P, PyObject *page, Py_ssize_t idx)
     c->dmemo = P->dmemo;
     c->page_index = idx;
     int rc = -1;
-    PyObject *pd = PyObject_GetAttr(page, s_dict), *res = NULL, *text = NULL,
-             *frag = NULL, *contents = NULL;
-    if (pd)
-        res = PyObject_GetAttr(page, s_resources);
-    if (!res)
-        goto bail;
+    PyObject *text = NULL, *frag = NULL, *contents = NULL;
     if (!PyDict_Check(pd) || !PyDict_Check(res)) {
         c->bail = 1;
         goto bail;
@@ -8198,8 +8357,8 @@ static int run_one(Pages *P, PyObject *page, Py_ssize_t idx)
     rc = -1;
     if (PyList_SetSlice(P->spans, PY_SSIZE_T_MAX, PY_SSIZE_T_MAX,
                         c->spans) < 0 ||
-        PyList_Append(P->texts, text) < 0 ||
-        PyList_Append(P->frags, frag) < 0)
+        (P->texts && (PyList_Append(P->texts, text) < 0 ||
+                      PyList_Append(P->frags, frag) < 0)))
         goto out;
     rc = 1;
     goto out;
@@ -8214,8 +8373,6 @@ out:
     free(c->stk);
     free(c->qs);
     free(c->mc);
-    Py_XDECREF(pd);
-    Py_XDECREF(res);
     Py_XDECREF(text);
     Py_XDECREF(frag);
     Py_XDECREF(c->fonts);
@@ -8266,9 +8423,15 @@ static PyObject *run_pages(PyObject *self, PyObject *args)
     Py_ssize_t idx = start;
     for (; served && idx < PyList_GET_SIZE(pages); idx++) {
         PyObject *page = PyList_GET_ITEM(pages, idx);
-        Py_INCREF(page);
-        rc = run_one(&P, page, idx);
-        Py_DECREF(page);
+        PyObject *pd = PyObject_GetAttr(page, s_dict);
+        PyObject *res = pd ? PyObject_GetAttr(page, s_resources) : NULL;
+        rc = res ? run_one(&P, pd, res, idx) : -1;
+        Py_XDECREF(pd);
+        Py_XDECREF(res);
+        if (rc == -1 && PyErr_ExceptionMatches(PyExc_Exception)) {
+            PyErr_Clear(); /* a Page without its slots: Python runs it */
+            rc = 0;
+        }
         if (rc <= 0)
             break;
     }
@@ -8280,6 +8443,456 @@ static PyObject *run_pages(PyObject *self, PyObject *args)
     if (!served)
         Py_RETURN_NONE;
     return PyLong_FromSsize_t(idx);
+}
+
+/* ======================================================================== */
+/* The batch loop: extract_batch runs extract.extract_batch's per-document
+ * loop over one Arrow batch in one call.  Per document it does what
+ * extract_document_spans does: the latin-1 payload decode, the PdfReader
+ * construction (allocated here with its slots filled, after the header
+ * check, the xref chain and the /Root and /Encrypt checks), the page tree
+ * and the page loop (run_one per page); for an HTML payload the tokenizer
+ * and extract_html_spans' filter; and the text/media passthrough.  It
+ * appends straight into the batch's span and per-document columns and
+ * times wall_ms itself.  A document it is not certain about is handed
+ * back whole, before anything of it is kept, to the Python row function
+ * (extract_document_spans with a fresh reader, which stays the
+ * authority): a password, a b85: or non-latin-1 payload, a reader that
+ * raises or bails (a missing header or /Root, an xref chain xref_chain
+ * bails on, a recovered reader in strict mode), encryption, a page tree
+ * flatten_pages does not serve, a page run_one bails on, and an HTML
+ * document html_events bails on.  The documents served and handed back,
+ * by reason, are counted in g_batch_counts (batch_counts reads them). */
+
+enum { HB_SERVED, HB_PASSWORD, HB_B85, HB_PAYLOAD, HB_READER, HB_ENCRYPTED,
+       HB_TREE, HB_PAGE, HB_HTML, HB_N };
+static const char *const hb_names[HB_N] = {
+    "served", "password", "b85", "payload", "reader", "encrypted", "tree",
+    "page", "html"};
+static long long g_batch_counts[HB_N];
+
+/* PdfReader's slots, in the order reader_new takes their values */
+enum { RS_DATA, RS_VERSION, RS_XREF, RS_TRAILER, RS_MODE, RS_LENIENT,
+       RS_DECRYPTOR, RS_RECIPIENT, RS_CACHE, RS_OBJSTM, RS_RESOLVING,
+       RS_FIC, RS_MEMO, RS_N };
+static const char *const rs_names[RS_N] = {
+    "data", "version", "xref", "trailer", "mode", "lenient", "decryptor",
+    "_recipient_key", "_cache", "_objstm_cache", "_resolving",
+    "_fontinfo_cache", "_span_decode_memo"};
+static PyTypeObject *g_reader_cls;
+static Py_ssize_t g_reader_off[RS_N];
+static PyObject *k_Encrypt, *g_b85_str;
+
+/* setup_reader(PdfReader): record the offset of each slot reader_new
+ * fills.  A class whose slots are not exactly these object slots raises
+ * (the C kernel then stays off). */
+static PyObject *setup_reader(PyObject *self, PyObject *cls)
+{
+    if (!PyType_Check(cls)) {
+        PyErr_SetString(PyExc_TypeError, "PdfReader must be a class");
+        return NULL;
+    }
+    PyTypeObject *t = (PyTypeObject *)cls;
+    if (t->tp_dictoffset || t->tp_weaklistoffset || t->tp_itemsize ||
+        t->tp_basicsize !=
+            (Py_ssize_t)(sizeof(PyObject) + RS_N * sizeof(PyObject *))) {
+        PyErr_SetString(PyExc_TypeError,
+                        "PdfReader's slots are not the native layout");
+        return NULL;
+    }
+    for (int i = 0; i < RS_N; i++) {
+        PyObject *d = PyObject_GetAttrString(cls, rs_names[i]);
+        if (!d)
+            return NULL;
+        PyMemberDef *m = Py_IS_TYPE(d, &PyMemberDescr_Type)
+                             ? ((PyMemberDescrObject *)d)->d_member
+                             : NULL;
+        int ok = m && m->type == T_OBJECT_EX && !(m->flags & READONLY);
+        if (ok)
+            g_reader_off[i] = m->offset;
+        Py_DECREF(d);
+        if (!ok) {
+            PyErr_Format(PyExc_TypeError, "PdfReader.%s is not an object slot",
+                         rs_names[i]);
+            return NULL;
+        }
+    }
+    install_global((PyObject **)&g_reader_cls, cls);
+    Py_RETURN_NONE;
+}
+
+/* a PdfReader with its slots set to vals (references stolen) */
+static PyObject *reader_new(PyObject *vals[RS_N])
+{
+    PyObject *r = g_reader_cls->tp_alloc(g_reader_cls, 0);
+    for (int i = 0; i < RS_N; i++) {
+        if (r)
+            *(PyObject **)((char *)r + g_reader_off[i]) = vals[i];
+        else
+            Py_DECREF(vals[i]);
+    }
+    return r;
+}
+
+/* PdfReader._parse_header: the first %PDF-x.y ending within the first
+ * 1 KB.  1 = found (*maj, *min set), 0 = missing or too long for a long
+ * (Python decides). */
+static int pdf_header(const unsigned char *d, Py_ssize_t n, long *maj,
+                      long *min)
+{
+    Py_ssize_t end = n < 1024 ? n : 1024;
+    for (Py_ssize_t p = 0; p + 5 < end; p++) {
+        if (d[p] != '%' || memcmp(d + p, "%PDF-", 5) != 0)
+            continue;
+        Py_ssize_t a = p + 5, i = a;
+        while (i < end && d[i] >= '0' && d[i] <= '9')
+            i++;
+        if (i == a || i >= end || d[i] != '.')
+            continue;
+        Py_ssize_t b = ++i;
+        while (i < end && d[i] >= '0' && d[i] <= '9')
+            i++;
+        if (i == b)
+            continue;
+        if (b - 1 - a > 9 || i - b > 9)
+            return 0;
+        *maj = strtol((const char *)d + a, NULL, 10);
+        *min = strtol((const char *)d + b, NULL, 10);
+        return 1;
+    }
+    return 0;
+}
+
+typedef struct {
+    PyObject *recipient_key, *safe_decode;
+    int strict, inc_art;
+    double nl_thr, sp_thr, tj_thr, link_density_max;
+    Py_ssize_t min_block_chars;
+    long max_depth;
+    PyObject *payload_spans; /* one payload's (kind, text, media_ref) spans */
+    PyObject *shared_fi;     /* FontInfo by direct_key, for the batch */
+} Batch;
+
+/* an exception in a document's step: an Exception hands the document
+ * back for `why` (0), anything else propagates (-1) */
+static int hand_back(int *reason, int why)
+{
+    if (PyErr_Occurred()) {
+        if (!PyErr_ExceptionMatches(PyExc_Exception))
+            return -1;
+        PyErr_Clear();
+    }
+    *reason = why;
+    return 0;
+}
+
+/* one raw_pdf payload (extract_pdf_bytes): 1 = served, its spans in
+ * B->payload_spans, *n_pages and *bytes_in added to and *mode set to a
+ * non-strict reader mode; 0 = hand back (*reason set); -1 = exception */
+static int batch_pdf(Batch *B, PyObject *text, int *reason,
+                     long long *n_pages, long long *bytes_in, PyObject **mode)
+{
+    if (text == Py_None)
+        text = g_empty;
+    if (!PyUnicode_Check(text))
+        return hand_back(reason, HB_PAYLOAD);
+    if (PyUnicode_Tailmatch(text, g_b85_str, 0, 4, -1) == 1)
+        return hand_back(reason, HB_B85);
+    if (PyUnicode_KIND(text) != PyUnicode_1BYTE_KIND)
+        return hand_back(reason, HB_PAYLOAD); /* not latin-1 */
+    const unsigned char *u = PyUnicode_1BYTE_DATA(text);
+    Py_ssize_t n = PyUnicode_GET_LENGTH(text);
+    long maj, min;
+    if (!pdf_header(u, n, &maj, &min)) /* also the empty file */
+        return hand_back(reason, HB_READER);
+    PyObject *data = PyBytes_FromStringAndSize((const char *)u, n);
+    PyObject *chain = data ? chain_of(data, !B->strict) : NULL;
+    if (!chain || chain == Py_None) {
+        Py_XDECREF(data);
+        Py_XDECREF(chain);
+        return hand_back(reason, HB_READER);
+    }
+    PyObject *entries = PyTuple_GET_ITEM(chain, 0),
+             *trailer = PyTuple_GET_ITEM(chain, 1),
+             *rmode = PyTuple_GET_ITEM(chain, 2);
+    int has_root = PyDict_Contains(trailer, k_Root);
+    int has_enc = has_root > 0 ? PyDict_Contains(trailer, k_Encrypt) : 0;
+    if ((B->strict && rmode != s_strict) || has_root <= 0 || has_enc) {
+        Py_DECREF(data);
+        Py_DECREF(chain);
+        return hand_back(reason, has_enc > 0 ? HB_ENCRYPTED : HB_READER);
+    }
+    PyObject *vals[RS_N] = {
+        Py_NewRef(data), Py_BuildValue("(ll)", maj, min), Py_NewRef(entries),
+        Py_NewRef(trailer), Py_NewRef(rmode),
+        Py_NewRef(B->strict ? Py_False : Py_True), Py_NewRef(Py_None),
+        Py_NewRef(B->recipient_key), PyDict_New(), PyDict_New(),
+        PySet_New(NULL), PyDict_New(), PyDict_New()};
+    PyObject *reader = NULL, *pages = NULL;
+    int rc = -1, bail = 0;
+    Pages P;
+    for (int i = 0; i < RS_N; i++)
+        if (!vals[i]) {
+            for (int j = 0; j < RS_N; j++)
+                Py_XDECREF(vals[j]);
+            rc = hand_back(reason, HB_READER);
+            goto out;
+        }
+    memset(&P, 0, sizeof(P));
+    P.doc.reader = reader = reader_new(vals);
+    if (!reader) {
+        rc = hand_back(reason, HB_READER);
+        goto out;
+    }
+    P.doc.data = Py_NewRef(vals[RS_DATA]);
+    P.doc.xref = Py_NewRef(vals[RS_XREF]);
+    P.doc.cache = Py_NewRef(vals[RS_CACHE]);
+    P.doc.resolving = Py_NewRef(vals[RS_RESOLVING]);
+    P.doc.objstm = Py_NewRef(vals[RS_OBJSTM]);
+    P.doc.d = (const unsigned char *)PyBytes_AS_STRING(data);
+    P.doc.n = n;
+    P.doc.lenient = !B->strict;
+    P.fic = vals[RS_FIC];
+    P.dmemo = vals[RS_MEMO];
+    P.safe_decode = B->safe_decode;
+    P.spans = B->payload_spans;
+    P.shared_fi = B->shared_fi;
+    P.nl_thr = B->nl_thr;
+    P.sp_thr = B->sp_thr;
+    P.tj_thr = B->tj_thr;
+    P.inc_art = B->inc_art;
+    pages = flatten_doc(&P.doc, trailer, NULL, B->max_depth, &bail);
+    if (!pages) {
+        rc = hand_back(reason, HB_TREE);
+    } else {
+        rc = 1;
+        for (Py_ssize_t i = 0; rc == 1 && i < PyList_GET_SIZE(pages); i++) {
+            PyObject *pg = PyList_GET_ITEM(pages, i);
+            rc = run_one(&P, PyTuple_GET_ITEM(pg, 0), PyTuple_GET_ITEM(pg, 1),
+                         i);
+        }
+        if (rc == 0)
+            *reason = HB_PAGE;
+        if (rc == 1) {
+            *n_pages += PyList_GET_SIZE(pages);
+            *bytes_in += n;
+            if (rmode != s_strict)
+                *mode = rmode;
+        }
+    }
+    doc_close(&P.doc);
+out:
+    Py_XDECREF(pages);
+    Py_XDECREF(reader);
+    Py_DECREF(chain);
+    Py_DECREF(data);
+    return rc;
+}
+
+/* append the spans of B->payload_spans to the four span columns, numbering
+ * them from *k */
+static int batch_unpack(Batch *B, PyObject **cols, Py_ssize_t *k)
+{
+    for (Py_ssize_t i = 0; i < PyList_GET_SIZE(B->payload_spans); i++) {
+        PyObject *sp = PyList_GET_ITEM(B->payload_spans, i);
+        PyObject *off = PyLong_FromSsize_t((*k)++);
+        int rc = off ? 0 : -1;
+        for (int c = 0; rc == 0 && c < 3; c++)
+            rc = PyList_Append(cols[c], PyTuple_GET_ITEM(sp, c));
+        if (rc == 0)
+            rc = PyList_Append(cols[3], off);
+        Py_XDECREF(off);
+        if (rc < 0)
+            return -1;
+    }
+    return PyList_SetSlice(B->payload_spans, 0, PyList_GET_SIZE(B->payload_spans), NULL);
+}
+
+/* one document's spans lo..hi: 1 = served (appended), 0 = hand back,
+ * -1 = exception */
+static int batch_doc(Batch *B, PyObject *kinds, PyObject *texts,
+                     PyObject *refs, Py_ssize_t lo, Py_ssize_t hi,
+                     PyObject **cols, int *reason, long long *n_pages,
+                     long long *bytes_in, PyObject **mode, Py_ssize_t *k)
+{
+    for (Py_ssize_t j = lo; j < hi; j++) {
+        PyObject *kind = PyList_GET_ITEM(kinds, j),
+                 *text = PyList_GET_ITEM(texts, j),
+                 *ref = PyList_GET_ITEM(refs, j);
+        int is_str = PyUnicode_Check(kind);
+        if (is_str && PyUnicode_CompareWithASCIIString(kind, "raw_pdf") == 0) {
+            int rc = batch_pdf(B, text, reason, n_pages, bytes_in, mode);
+            if (rc <= 0)
+                return rc;
+        } else if (is_str &&
+                   PyUnicode_CompareWithASCIIString(kind, "raw_html") == 0) {
+            if (text == Py_None)
+                text = g_empty;
+            if (!PyUnicode_Check(text))
+                return hand_back(reason, HB_PAYLOAD);
+            H h;
+            int rc = html_run(&h, text, 0);
+            if (rc > 0)
+                rc = html_filter(h.events, B->link_density_max,
+                                 B->min_block_chars, B->payload_spans) < 0 ? -1 : 1;
+            h_free(&h);
+            if (rc <= 0)
+                return hand_back(reason, HB_HTML);
+            *bytes_in += PyUnicode_GET_LENGTH(text);
+        } else {
+            /* text / media / unknown kinds pass through: (kind, text or
+             * "", media_ref), with no media_ref on a text span */
+            if (text == Py_None)
+                text = g_empty;
+            if (!PyUnicode_Check(text))
+                return hand_back(reason, HB_PAYLOAD);
+            if (is_str && PyUnicode_CompareWithASCIIString(kind, "text") == 0)
+                ref = Py_None;
+            PyObject *sp = PyTuple_Pack(3, kind, text, ref);
+            int rc = sp ? PyList_Append(B->payload_spans, sp) : -1;
+            Py_XDECREF(sp);
+            if (rc < 0)
+                return hand_back(reason, HB_PAYLOAD);
+        }
+        if (batch_unpack(B, cols, k) < 0)
+            return hand_back(reason, HB_PAYLOAD);
+    }
+    return 1;
+}
+
+static double now_ms(void)
+{
+    struct timespec ts;
+    clock_gettime(CLOCK_MONOTONIC, &ts);
+    return ts.tv_sec * 1e3 + ts.tv_nsec / 1e6;
+}
+
+/* append v (a new reference, NULL on error) to lst */
+static int append_new(PyObject *lst, PyObject *v)
+{
+    int rc = v ? PyList_Append(lst, v) : -1;
+    Py_XDECREF(v);
+    return rc;
+}
+
+/* extract_batch(kinds, texts, media_refs, list_offsets, base, passwords,
+ * strict, newline_threshold, space_threshold, tj_space_threshold,
+ * include_artifacts, recipient_key, link_density_max, min_block_chars,
+ * max_tree_depth, _safe_decode, run_row, columns): runs every document
+ * of the batch, appending to columns (kind, text, media_ref, offset,
+ * list offsets, ok, mode, error, n_pages, n_spans, bytes_in, wall_ms);
+ * a document handed back runs as run_row(row), which appends its own. */
+static PyObject *extract_batch(PyObject *self, PyObject *args)
+{
+    PyObject *kinds, *texts, *refs, *offsets, *passwords, *run_row, *out;
+    Py_ssize_t base;
+    Batch B;
+    memset(&B, 0, sizeof(B));
+    if (!PyArg_ParseTuple(args, "O!O!O!O!nOpdddpOdnlOOO!", &PyList_Type,
+                          &kinds, &PyList_Type, &texts, &PyList_Type, &refs,
+                          &PyList_Type, &offsets, &base, &passwords,
+                          &B.strict, &B.nl_thr, &B.sp_thr, &B.tj_thr,
+                          &B.inc_art, &B.recipient_key, &B.link_density_max,
+                          &B.min_block_chars, &B.max_depth, &B.safe_decode,
+                          &run_row, &PyTuple_Type, &out))
+        return NULL;
+    Py_ssize_t n_spans = PyList_GET_SIZE(kinds);
+    Py_ssize_t n = PyList_GET_SIZE(offsets) - 1;
+    PyObject *cols[12];
+    int ok = PyTuple_GET_SIZE(out) == 12 && PyList_GET_SIZE(texts) == n_spans &&
+             PyList_GET_SIZE(refs) == n_spans && n >= 0 &&
+             (passwords == Py_None ||
+              (PyList_Check(passwords) && PyList_GET_SIZE(passwords) >= n));
+    for (int c = 0; ok && c < 12; c++)
+        ok = PyList_Check(cols[c] = PyTuple_GET_ITEM(out, c));
+    if (!ok) {
+        PyErr_SetString(PyExc_ValueError, "extract_batch: column shapes");
+        return NULL;
+    }
+    if (!g_reader_cls || !g_extract_font_info || !g_cmap_cls || !g_scan_bi ||
+        !g_unescape) {
+        PyErr_SetString(PyExc_RuntimeError,
+                        "extract_batch requires the setup calls");
+        return NULL;
+    }
+    B.payload_spans = PyList_New(0);
+    B.shared_fi = PyDict_New();
+    if (!B.payload_spans || !B.shared_fi)
+        goto err;
+    for (Py_ssize_t row = 0; row < n; row++) {
+        Py_ssize_t lo = PyLong_AsSsize_t(PyList_GET_ITEM(offsets, row));
+        Py_ssize_t hi = PyLong_AsSsize_t(PyList_GET_ITEM(offsets, row + 1));
+        if (PyErr_Occurred())
+            goto err;
+        lo -= base;
+        hi -= base;
+        Py_ssize_t start = PyList_GET_SIZE(cols[0]), k = 0;
+        long long n_pages = 0, bytes_in = 0;
+        PyObject *mode = s_strict;
+        int reason = HB_SERVED, rc;
+        double t0 = now_ms();
+        if (lo < 0 || hi < lo || hi > n_spans)
+            rc = hand_back(&reason, HB_PAYLOAD);
+        else if (passwords != Py_None &&
+                 PyList_GET_ITEM(passwords, row) != Py_None)
+            rc = hand_back(&reason, HB_PASSWORD);
+        else
+            rc = batch_doc(&B, kinds, texts, refs, lo, hi, cols, &reason,
+                           &n_pages, &bytes_in, &mode, &k);
+        if (rc < 0)
+            goto err;
+        g_batch_counts[reason]++;
+        if (rc == 0) {
+            if (PyList_SetSlice(B.payload_spans, 0, PyList_GET_SIZE(B.payload_spans),
+                                NULL) < 0)
+                goto err;
+            for (int c = 0; c < 4; c++)
+                if (PyList_SetSlice(cols[c], start, PY_SSIZE_T_MAX, NULL) < 0)
+                    goto err;
+            PyObject *r = PyLong_FromSsize_t(row);
+            PyObject *res = r ? PyObject_CallOneArg(run_row, r) : NULL;
+            Py_XDECREF(r);
+            if (!res)
+                goto err;
+            Py_DECREF(res);
+            continue;
+        }
+        if (append_new(cols[4], PyLong_FromSsize_t(PyList_GET_SIZE(cols[0]))) ||
+            PyList_Append(cols[5], Py_True) || PyList_Append(cols[6], mode) ||
+            PyList_Append(cols[7], Py_None) ||
+            append_new(cols[8], PyLong_FromLongLong(n_pages)) ||
+            append_new(cols[9], PyLong_FromSsize_t(k)) ||
+            append_new(cols[10], PyLong_FromLongLong(bytes_in)) ||
+            append_new(cols[11], PyFloat_FromDouble(now_ms() - t0)))
+            goto err;
+    }
+    Py_DECREF(B.payload_spans);
+    Py_DECREF(B.shared_fi);
+    Py_RETURN_NONE;
+err:
+    Py_XDECREF(B.payload_spans);
+    Py_XDECREF(B.shared_fi);
+    return NULL;
+}
+
+/* batch_counts(reset=False): {reason: documents} of extract_batch since
+ * the module loaded or the last reset ("served", then each hand-back
+ * reason) */
+static PyObject *batch_counts(PyObject *self, PyObject *args)
+{
+    int reset = 0;
+    if (!PyArg_ParseTuple(args, "|p", &reset))
+        return NULL;
+    PyObject *d = PyDict_New();
+    for (int i = 0; d && i < HB_N; i++) {
+        PyObject *v = PyLong_FromLongLong(g_batch_counts[i]);
+        if (!v || PyDict_SetItemString(d, hb_names[i], v) < 0)
+            Py_CLEAR(d);
+        Py_XDECREF(v);
+    }
+    if (d && reset)
+        memset(g_batch_counts, 0, sizeof(g_batch_counts));
+    return d;
 }
 
 /* ---- setup -------------------------------------------------------------- */
@@ -8640,6 +9253,15 @@ static PyMethodDef methods[] = {
     {"run_pages", run_pages, METH_VARARGS,
      "run a document's pages natively from start; the first page not "
      "served, or None = the document is not served"},
+    {"setup_reader", setup_reader, METH_O,
+     "record PdfReader's slot layout for extract_batch"},
+    {"extract_batch", extract_batch, METH_VARARGS,
+     "run one Arrow batch's documents; a document not served runs as "
+     "run_row(row)"},
+    {"batch_counts", batch_counts, METH_VARARGS,
+     "extract_batch's documents served and handed back, by reason"},
+    {"html_spans", html_spans, METH_VARARGS,
+     "extract_html_spans' span list; None = bail to Python"},
     {"parse_indirect", parse_indirect, METH_VARARGS,
      "fast `N G obj value [stream]` parse; None = fall back to Python"},
     {NULL, NULL, 0, NULL},
@@ -8757,6 +9379,8 @@ PyMODINIT_FUNC PyInit_oxpdf_cscan(void)
     IN(k_XObject, "XObject");
     IN(k_Subtype, "Subtype");
     IN(k_Properties, "Properties");
+    IN(k_Encrypt, "Encrypt");
+    IN(g_b85_str, "b85:");
     IN(g_text_str, "text");
     IN(g_image_str, "image");
     IN(g_fb_win, "WinAnsiEncoding");

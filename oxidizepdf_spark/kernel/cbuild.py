@@ -35,11 +35,29 @@ pinned to its Python original by the differential tests
   the page's error), a Form XObject, a fetch ``get_object`` bails on,
   deep marked-content props, or a run the code table declines; an
   encrypted document is not served at all;
-- the HTML main-content tokenizer (``html_events``: html_extract.py).
+- the HTML main-content tokenizer (``html_events``: html_extract.py,
+  with or without the out-link list) and, with the span filter,
+  ``html_spans`` (extract_html_spans);
+- the batch loop (``extract_batch``: extract.extract_batch's document
+  loop over one Arrow batch, for the options the page loop serves): per
+  document the latin-1 payload decode, the PdfReader construction (the
+  object allocated here with its slots filled, the layout
+  ``setup_reader`` checks), the xref chain, the page tree and the page
+  loop, the HTML spans and the text/media passthrough, appended straight
+  into the batch's columns, with wall_ms timed in C and a FontInfo shared
+  across the batch's documents for a font dict that holds no reference.
+  A document is handed back whole to extract_document_spans (a fresh
+  reader, Python the authority) for a password, a ``b85:`` or
+  non-latin-1 payload, a reader that raises or bails (no header or
+  /Root, a chain ``xref_chain`` bails on, a recovered reader in strict
+  mode), encryption, a tree ``flatten_pages`` does not serve, a page the
+  page loop bails on, or HTML ``html_events`` bails on;
+  ``batch_counts`` reads the served and handed-back documents by reason.
 
 Every entry point returns a complete result or a bail (None, or ``BAIL``
 for ``get_object`` and ``parse_cmap``; for ``run_pages``, the index of
-the first page it did not serve). On a bail the caller runs that whole
+the first page it did not serve; for ``extract_batch``, a call of the
+Python row function per document handed back). On a bail the caller runs that whole
 step in Python, which stays the behavior authority: encrypted documents
 and any input the C code is not byte-certain about take the Python
 path. A CMap with usecmap or cid

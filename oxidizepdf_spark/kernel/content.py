@@ -2107,11 +2107,11 @@ def _load_cscan():
         # authority
         from html import unescape as _html_unescape
 
-        from .html_extract import _hint_value, _ws_collapse
+        from .html_extract import _hint_value
         from .layout import TextFragment, parse_font_style
 
         mod.setup_layout(TextFragment, parse_font_style, _c_frag_env)
-        mod.setup_html(_html_unescape, _ws_collapse, _hint_value)
+        mod.setup_html(_html_unescape, _hint_value)
     except Exception:
         return None
     return mod

@@ -18,16 +18,23 @@ exceptions — a corrupt document must not fail a Spark task.
 from __future__ import annotations
 
 import base64
+import time
 
 from . import content as _content
+from .html_extract import LINK_DENSITY_MAX, MIN_BLOCK_CHARS
 from .objects import PdfParseError, Ref
-from .pages import _safe_decode, flatten_page_tree, page_content
+from .pages import MAX_TREE_DEPTH, _safe_decode, flatten_page_tree, page_content
 from .reader import EncryptedPdfError, PdfReader
 from .textstate import ExtractionOptions, Interpreter
 from .fonts import extract_page_fonts
 from .content import parse_and_run
 
 # span tuple: (kind, text, media_ref) — offset assigned at the end
+
+#: The options of a call that passes none. Shared, so never mutated: a
+#: caller that needs other options copies first (``with_password``,
+#: ``copy.copy``).
+_DEFAULT_OPTIONS = ExtractionOptions()
 
 
 class DocResult:
@@ -71,7 +78,8 @@ def extract_pdf_bytes(
     authority; the C loop then resumes at the next page."""
     res = DocResult()
     res.bytes_in = len(data)
-    options = options or ExtractionOptions()
+    if options is None:
+        options = _DEFAULT_OPTIONS
     strict = options.error_mode == "strict"
     try:
         reader = PdfReader(data, lenient=not strict,
@@ -1015,6 +1023,84 @@ def extract_document_spans(
     return [
         (k, t, m, i) for i, (k, t, m) in enumerate(out)
     ], meta
+
+
+def _batch_loop_serves(options: ExtractionOptions) -> bool:
+    """Whether the C batch loop (``extract_batch``) may run these options:
+    those the page loop it runs serves."""
+    return _page_loop_serves(options)
+
+
+def extract_batch(kinds, texts, media_refs, list_offsets, base, passwords,
+                  options: ExtractionOptions) -> tuple[list, ...]:
+    """One Arrow batch of documents → the twelve column lists of
+    ``pipeline._extract_batches``: the flattened spans' kind, text,
+    media_ref and offset, the list offsets (from 0), then per document
+    ok, mode, error, n_pages, n_spans, bytes_in and wall_ms.
+
+    The inputs are the batch's flat span child columns as lists, its list
+    offsets (``base`` is the child array's own offset) and its password
+    column (None when it has none). A document is ``extract_document_spans``
+    over its (kind, text, media_ref) triples, with its password when one is
+    set; an exception from it becomes a ``kernel:`` error row.
+
+    With the C kernel loaded and options the page loop serves, the whole
+    batch runs in one native call (``_cscan.c`` ``extract_batch``:
+    payload decode, reader, page tree and page loop, HTML spans and the
+    passthrough). A document it is not certain about (a password, a
+    ``b85:`` payload, encryption, a reader or tree it does not serve, a
+    page the page loop bails on) is handed back whole to ``run_row``
+    below, which stays the authority."""
+    cols = tuple([] for _ in range(12))
+    (out_kind, out_text, out_ref, out_off, out_offsets, ok_c, mode_c, err_c,
+     npages_c, nspans_c, bytes_c, wall_c) = cols
+    out_offsets.append(0)
+
+    def run_row(row: int) -> None:
+        lo, hi = list_offsets[row] - base, list_offsets[row + 1] - base
+        triples = list(zip(kinds[lo:hi], texts[lo:hi], media_refs[lo:hi]))
+        t_doc = time.perf_counter()
+        opts_row = options
+        if passwords is not None and passwords[row] is not None:
+            opts_row = options.with_password(passwords[row])
+        try:
+            spans, meta = extract_document_spans(triples, opts_row)
+        except Exception as e:  # absolute backstop: error-as-data
+            spans, meta = [], {
+                "ok": False,
+                "error": f"kernel:{type(e).__name__}:{e}",
+                "mode": "strict",
+                "n_pages": 0,
+                "bytes_in": 0,
+            }
+        for k, t, m, o in spans:
+            out_kind.append(k)
+            out_text.append(t)
+            out_ref.append(m)
+            out_off.append(o)
+        out_offsets.append(len(out_kind))
+        ok_c.append(bool(meta["ok"]))
+        mode_c.append(meta["mode"])
+        err_c.append(meta["error"])
+        npages_c.append(int(meta["n_pages"]))
+        nspans_c.append(len(spans))
+        bytes_c.append(int(meta["bytes_in"]))
+        wall_c.append((time.perf_counter() - t_doc) * 1000.0)
+
+    ck = _content._CSCAN
+    if ck is not None and _batch_loop_serves(options):
+        ck.extract_batch(
+            kinds, texts, media_refs, list_offsets, base, passwords,
+            options.error_mode == "strict", options.newline_threshold,
+            options.space_threshold, options.tj_space_threshold,
+            options.include_artifacts,
+            getattr(options, "recipient_key", None), LINK_DENSITY_MAX,
+            MIN_BLOCK_CHARS, MAX_TREE_DEPTH, _safe_decode, run_row, cols,
+        )
+    else:
+        for row in range(len(list_offsets) - 1):
+            run_row(row)
+    return cols
 
 
 # -- page-composition analysis (operations/page_analysis.rs) ----------------

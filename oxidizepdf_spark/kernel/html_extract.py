@@ -153,16 +153,23 @@ class _MainContentParser(HTMLParser):
         self._flush()
 
 
-# C fast-path helpers (installed into _cscan via setup_html): the C
-# tokenizer delegates exactly these semantics back to Python where byte-
-# level reimplementation would be risky (unicode \b in the hint regex,
-# unicode \s in the collapse)
+# C fast-path helper (installed into _cscan via setup_html): the C
+# tokenizer delegates exactly this back to Python, where a byte-level
+# reimplementation would be risky (unicode \b in the hint regex)
 def _hint_value(v: str) -> bool:
     return _BOILER_HINT.search(v) is not None
 
 
-def _ws_collapse(s: str) -> str:
-    return _WS.sub(" ", s).strip()
+def _py_events(html: str):
+    """(events, links) from the pure-Python ``html.parser`` pass, the
+    behavior authority."""
+    parser = _MainContentParser()
+    try:
+        parser.feed(html)
+        parser.close()
+    except Exception:
+        pass  # tolerate pathological markup; keep whatever parsed
+    return parser.events, parser.links
 
 
 def _parse_events(html: str):
@@ -178,13 +185,7 @@ def _parse_events(html: str):
             r = None
         if r is not None:
             return r
-    parser = _MainContentParser()
-    try:
-        parser.feed(html)
-        parser.close()
-    except Exception:
-        pass  # tolerate pathological markup; keep whatever parsed
-    return parser.events, parser.links
+    return _py_events(html)
 
 
 def extract_html_spans(
@@ -194,8 +195,21 @@ def extract_html_spans(
 ) -> list[tuple[str, str, str | None]]:
     """One HTML document → ordered main-content spans: kept segments as
     ``text`` spans (whitespace-normalized, document order), in-content
-    images as ``image`` spans with media_ref = the src attribute."""
-    events, _links = _parse_events(html)
+    images as ``image`` spans with media_ref = the src attribute.
+
+    With the C kernel loaded, the tokenizer and this filter run in one
+    call (``html_spans``, _cscan.c, collecting no links); on its bail the
+    Python parser and the loop below decide."""
+    from .content import _CSCAN
+
+    if _CSCAN is not None:
+        try:
+            spans = _CSCAN.html_spans(html, link_density_max, min_block_chars)
+        except Exception:
+            spans = None
+        if spans is not None:
+            return spans
+    events, _links = _py_events(html)
     spans: list[tuple[str, str, str | None]] = []
     for ev in events:
         if ev[0] == "img":

@@ -15,6 +15,12 @@ xref chain and recovery (via xref.parse_xref_chain), the object parse
 strict and recovered readers alike. Each returns a complete result or a
 bail; on a bail the Python code here runs that step from the start and
 stays the authority. Encrypted documents always fetch in Python.
+
+The C batch loop (``extract_batch``) also builds readers itself: it
+allocates a ``PdfReader`` and fills every slot (the layout
+``setup_reader`` checks at import) after the header check, the C xref
+chain and the /Root and /Encrypt checks. A document any of those is not
+certain about is handed back and opens through ``__init__`` below.
 """
 
 from __future__ import annotations
@@ -39,6 +45,9 @@ class PdfReader:
     (document.rs:101-162 cache) — both live and die inside one UDF call.
     """
 
+    # _cscan.c's extract_batch builds readers natively and fills these
+    # slots itself (its rs_names list; setup_reader below checks the
+    # layout): a slot added here must be added there too.
     __slots__ = (
         "data",
         "version",
@@ -409,3 +418,5 @@ class PdfReader:
 _CPARSE = (
     _content._CSCAN.parse_indirect if _content._CSCAN is not None else None
 )
+if _content._CSCAN is not None:
+    _content._CSCAN.setup_reader(PdfReader)

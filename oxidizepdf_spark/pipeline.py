@@ -17,13 +17,11 @@ Mirrors at corpus scale what the reference's batch module does per-process
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .kernel.extract import extract_document_spans
+from .kernel.extract import extract_batch
 from .kernel.textstate import ExtractionOptions
 from .table_io import SPAN_STRUCT
 
@@ -74,9 +72,11 @@ def _extract_batches(
     ``to_numpy(zero_copy_only=False).tolist()``: the same values as
     ``to_pylist()``, about 8× faster (4 against 33 ms per 4,000-document
     batch on a 4-vCPU host); ``part_id`` and ``password`` keep
-    ``to_pylist()``, since ``to_numpy`` turns a null int into NaN. Each
-    document's parse stays in-kernel; tolerant-mode errors surface as
-    columns, never as task failures.
+    ``to_pylist()``, since ``to_numpy`` turns a null int into NaN. The
+    document loop is ``kernel.extract.extract_batch``: with the C kernel
+    loaded it runs the whole batch in one native call, handing a document
+    it does not serve back to ``extract_document_spans``. Tolerant-mode
+    errors surface as columns, never as task failures.
 
     This loop is deliberately not a ``map_rows`` row function. Over the
     same Arrow batches (8,000 seed-90210 ``gen_doc`` documents in
@@ -128,40 +128,9 @@ def _extract_batches(
         texts = _pylist(flat.field("text"))
         refs = _pylist(flat.field("media_ref"))
 
-        ok_c, mode_c, err_c = [], [], []
-        npages_c, nspans_c, bytes_c, wall_c = [], [], [], []
-        out_kind, out_text, out_ref, out_off = [], [], [], []
-        out_offsets = [0]
-        for row in range(n):
-            lo, hi = list_offsets[row] - base, list_offsets[row + 1] - base
-            triples = list(zip(kinds[lo:hi], texts[lo:hi], refs[lo:hi]))
-            t_doc = time.perf_counter()
-            opts_row = options
-            if pw_col is not None and pw_col[row] is not None:
-                opts_row = options.with_password(pw_col[row])
-            try:
-                spans, meta = extract_document_spans(triples, opts_row)
-            except Exception as e:  # absolute backstop: error-as-data
-                spans, meta = [], {
-                    "ok": False,
-                    "error": f"kernel:{type(e).__name__}:{e}",
-                    "mode": "strict",
-                    "n_pages": 0,
-                    "bytes_in": 0,
-                }
-            for k, t, m, o in spans:
-                out_kind.append(k)
-                out_text.append(t)
-                out_ref.append(m)
-                out_off.append(o)
-            out_offsets.append(len(out_kind))
-            ok_c.append(bool(meta["ok"]))
-            mode_c.append(meta["mode"])
-            err_c.append(meta["error"])
-            npages_c.append(int(meta["n_pages"]))
-            nspans_c.append(len(spans))
-            bytes_c.append(int(meta["bytes_in"]))
-            wall_c.append((time.perf_counter() - t_doc) * 1000.0)
+        (out_kind, out_text, out_ref, out_off, out_offsets, ok_c, mode_c,
+         err_c, npages_c, nspans_c, bytes_c, wall_c) = extract_batch(
+            kinds, texts, refs, list_offsets, base, pw_col, options)
         spans_arr = pa.ListArray.from_arrays(
             pa.array(out_offsets, type=pa.int32()),
             pa.StructArray.from_arrays(

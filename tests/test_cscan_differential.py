@@ -512,15 +512,10 @@ def test_differential_reconstruct_hyphen_merge():
 
 
 def _py_html_events(html):
-    from oxidizepdf_spark.kernel.html_extract import _MainContentParser
+    from oxidizepdf_spark.kernel.html_extract import _py_events
 
-    p = _MainContentParser()
-    try:
-        p.feed(html)
-        p.close()
-    except Exception:
-        pass
-    return list(p.events), list(p.links)
+    events, links = _py_events(html)
+    return list(events), list(links)
 
 
 def test_differential_html_corpus():
@@ -551,14 +546,12 @@ def test_differential_html_corpus():
     assert n_html > 50  # the corpus does exercise the HTML tier
 
 
-def test_differential_html_constructs():
-    """Targeted html.parser constructs through both engines: CDATA
-    script/style, broken tags, comments, doctype, bogus comments,
-    charrefs (incl. truncated at EOF), quoted/bare/valueless attrs,
-    XHTML self-closing, nested/unbalanced anchors, img variants."""
-    from oxidizepdf_spark.kernel import content as CC
-
-    docs = [
+def _crafted_html_docs():
+    """html.parser constructs: CDATA script/style, broken tags, comments,
+    doctype, bogus comments, charrefs (incl. truncated at EOF),
+    quoted/bare/valueless attrs, XHTML self-closing, nested/unbalanced
+    anchors, img variants."""
+    return [
         "<p class='sidebar x'>hidden</p><p class=promo>also</p><p>kept body text here</p>",
         '<P CLASS="NAV">upper</P><DIV ID="MainFooter">f</DIV><p>body text stays</p>',
         "<a href='/a'>one</a><a href=/b>two</a><a href>three</a><a>four</a>",
@@ -608,12 +601,22 @@ def test_differential_html_constructs():
         "<p>café unicode body text — dash</p>",
         "<div class='café ad'>unicode class ad</div><p>body</p>",
         "<p nbsp>after-name nbsp</p>",
+        "<p>\n   lead and trail \u00a0 spaces of a block\t\n</p>",
+        "<p>\u2003em space\u3000ideographic\u2028line sep\x1c body</p>",
+        "<p><a href='/w'>  spaced \n  anchor  </a> and body text after</p>",
     ]
-    from oxidizepdf_spark.kernel import content as CC2
+
+
+def test_differential_html_constructs():
+    """Targeted html.parser constructs through both engines: CDATA
+    script/style, broken tags, comments, doctype, bogus comments,
+    charrefs (incl. truncated at EOF), quoted/bare/valueless attrs,
+    XHTML self-closing, nested/unbalanced anchors, img variants."""
+    from oxidizepdf_spark.kernel import content as CC
 
     n_bail = 0
-    for d in docs:
-        c = CC2._CSCAN.html_events(d)
+    for d in _crafted_html_docs():
+        c = CC._CSCAN.html_events(d)
         py = _py_html_events(d)
         if c is None:
             n_bail += 1
@@ -621,6 +624,40 @@ def test_differential_html_constructs():
         assert (list(c[0]), list(c[1])) == py, d[:80]
     # the fast path must actually cover the overwhelming majority
     assert n_bail <= 2, f"too many bails: {n_bail}"
+
+
+def _corpus_html(n_docs=600, seed=123):
+    from oxidizepdf_spark.corpus import generate_corpus
+
+    return [s["text"] for in_row, _ in generate_corpus(n_docs=n_docs, seed=seed)
+            for s in in_row["spans"] if s["kind"] == "raw_html"]
+
+
+def test_html_events_without_links():
+    """html_events(doc, want_links=False) gives the events it gives with
+    links, and no links; html_spans (the C tokenizer without links plus
+    the span filter) equals extract_html_spans' pure-Python path, at the
+    default and at other thresholds: over the corpus HTML and the crafted
+    constructs."""
+    from oxidizepdf_spark.kernel import content as CC
+    from oxidizepdf_spark.kernel.html_extract import extract_html_spans
+
+    docs = _corpus_html() + _crafted_html_docs()
+    assert len(docs) > 100
+    served = 0
+    for d in docs:
+        with_links = CC._CSCAN.html_events(d, True)
+        without = CC._CSCAN.html_events(d, False)
+        assert (with_links is None) == (without is None), d[:80]
+        if with_links is None:
+            continue
+        served += 1
+        assert without[0] == with_links[0] and without[1] == [], d[:80]
+        for ldm, mbc in ((0.5, 10), (0.0, 0), (0.2, 3), (1.0, 40)):
+            got, want = _both_paths(lambda: extract_html_spans(d, ldm, mbc))
+            assert got == want, (d[:80], ldm, mbc)
+            assert CC._CSCAN.html_spans(d, ldm, mbc) == want, (d[:80], ldm)
+    assert served >= len(docs) - 2
 
 
 def test_differential_html_hypothesis():
@@ -2137,3 +2174,236 @@ def test_page_loop_fast_path_taken(monkeypatch):
         calls.clear()
         E.extract_pdf_bytes(data, opts)
         assert {"init", "fonts", "finalize"} <= set(calls), label
+
+
+# -- the batch loop (extract_batch) against the per-document Python loop --
+
+
+def _arrow_batch(docs, passwords=None):
+    """An input Arrow batch of documents, each a list of (kind, text,
+    media_ref) spans, with a password column when given."""
+    import pyarrow as pa
+
+    span = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                      ("media_ref", pa.string())])
+    cols = [pa.array([f"doc-{i}" for i in range(len(docs))], pa.string()),
+            pa.array([i % 5 for i in range(len(docs))], pa.int32()),
+            pa.array([[{"kind": k, "text": t, "media_ref": m}
+                       for k, t, m in d] for d in docs], pa.list_(span))]
+    names = ["doc_id", "part_id", "spans"]
+    if passwords is not None:
+        cols.append(pa.array(passwords, pa.string()))
+        names.append("password")
+    return pa.RecordBatch.from_arrays(cols, names=names)
+
+
+def _batch_rows(batches, options):
+    """_extract_batches' output rows, every column but wall_ms."""
+    from oxidizepdf_spark.pipeline import _extract_batches
+
+    rows = []
+    for out in _extract_batches(batches, options):
+        assert all(w >= 0.0 for w in out.column("wall_ms").to_pylist())
+        rows += out.drop_columns(["wall_ms"]).to_pylist()
+    return rows
+
+
+def _assert_same_batches(batches, monkeypatch, modes=True):
+    """The batch loop against the forced per-document Python loop (every
+    other C step on), in tolerant mode and, with ``modes``, in strict and
+    skip modes and at non-default thresholds."""
+    from oxidizepdf_spark.kernel import extract as E
+    from oxidizepdf_spark.kernel.textstate import ExtractionOptions
+
+    for opts in (ExtractionOptions(), *(_error_modes() if modes else ())):
+        got = _batch_rows(batches, opts)
+        with monkeypatch.context() as m:
+            m.setattr(E, "_batch_loop_serves", lambda options: False)
+            want = _batch_rows(batches, opts)
+        assert len(got) == len(want)
+        for g, w in zip(got, want):
+            assert g == w, (g["doc_id"], opts.error_mode)
+
+
+def _pdf_doc(pdf: bytes):
+    return [("raw_pdf", pdf.decode("latin-1"), None)]
+
+
+def _utf8_spans(pdf: bytes) -> bool:
+    """Whether every span text of the document encodes as UTF-8 (Arrow
+    cannot take a lone surrogate a glyph name such as /uniD800 decodes
+    to)."""
+    from oxidizepdf_spark.kernel.extract import extract_pdf_bytes
+
+    try:
+        for _k, t, _m in extract_pdf_bytes(pdf).spans:
+            t.encode("utf-8")
+    except UnicodeEncodeError:
+        return False
+    return True
+
+
+def test_differential_batch_loop_crafted(monkeypatch):
+    """The crafted skeleton, content and font cases and the catalog, one
+    document each, in every error mode; the batch also runs sliced, so
+    the span child carries an offset. A document whose spans Arrow cannot
+    encode is compared on extract_batch's column lists instead."""
+    from oxidizepdf_spark.corpus import all_cases
+    from oxidizepdf_spark.kernel import extract as E
+
+    helv = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica %s>>"
+    # the batch shares a FontInfo between equal font dicts that hold no
+    # reference: these pairs are equal dicts whose referenced objects, or
+    # whose float bits, differ
+    shared = [
+        _font_pdf(helv % b"/Encoding 6 0 R ", _SHOW,
+                  {6: b"<< /Differences [72 /%s] >>" % glyph})
+        for glyph in (b"A", b"B")] + [
+        _font_pdf(helv % b"/FirstChar 72 /LastChar 72 /Widths [%s] " % w,
+                  b"BT /F1 10 Tf (HH) Tj ET") for w in (b"0.0", b"-0.0")]
+    pdfs = [*_crafted_skeleton_cases().values(),
+            *_page_loop_content_cases().values(),
+            *_crafted_font_cases().values(), *shared,
+            *(pdf for _case, pdf, _expected in all_cases())]
+    odd = [p for p in pdfs if not _utf8_spans(p)]
+    assert len(odd) == 1
+    batch = _arrow_batch([_pdf_doc(p) for p in pdfs if p not in odd])
+    _assert_same_batches([batch, batch.slice(7, 40)], monkeypatch)
+    for opts in _error_modes():
+        args = (["raw_pdf"], [odd[0].decode("latin-1")], [None], [0, 1], 0,
+                None, opts)
+        got = E.extract_batch(*args)
+        with monkeypatch.context() as m:
+            m.setattr(E, "_batch_loop_serves", lambda options: False)
+            want = E.extract_batch(*args)
+        assert got[:11] == want[:11]
+
+
+def test_differential_batch_loop_corpus(monkeypatch):
+    """A 300-document generated sample (50-page, corrupted, HTML and
+    interleaved documents), documents with several payloads, a password
+    column, b85: and non-latin-1 payloads, and odd rows (no spans, null
+    kinds and texts, unknown kinds)."""
+    import base64
+
+    from oxidizepdf_spark.corpus import all_cases, build_encrypted_pdf
+    from oxidizepdf_spark.corpus import generate_corpus
+
+    docs, counts = [], {"MEGA": 0, "HTML": 0, "corrupt": 0}
+    for in_row, _ in generate_corpus(n_docs=300, seed=17, mega_doc_rate=0.05,
+                                     corrupt_rate=0.1):
+        case = in_row["case"]
+        for key in counts:
+            counts[key] += key in case
+        docs.append([(s["kind"], s["text"], s["media_ref"])
+                     for s in in_row["spans"]])
+    assert counts["MEGA"] >= 5 and counts["HTML"] >= 20
+    assert counts["corrupt"] >= 10
+    docs += [docs[i] + docs[i + 1] + docs[i + 2] for i in range(0, 60, 3)]
+    catalog = {case: pdf for case, pdf, _ in all_cases()}
+    locked = build_encrypted_pdf("locked text", user_pw=b"pw")
+    docs += [
+        _pdf_doc(locked), _pdf_doc(locked), _pdf_doc(locked),
+        _pdf_doc(build_encrypted_pdf("open text")),
+        [("raw_pdf", "b85:" + base64.b85encode(catalog["X01"]).decode(),
+          None)],
+        [("raw_pdf", catalog["X01"].decode("latin-1") + "\u2603", None)],
+        [], [("raw_pdf", None, None)], [("raw_pdf", "", None)],
+        [("raw_html", None, None)], [(None, "x", "m")], [("text", None, "m")],
+        [("media", None, None)], [("weird", "w", "r")],
+        [("raw_pdf", "%PDF-1.4 garbage", None), ("text", "after", None)],
+    ]
+    passwords = [None] * len(docs)
+    passwords[-15:-12] = ["pw", "wrong", None]
+    passwords[5] = "unused"
+    _assert_same_batches([_arrow_batch(docs, passwords)], monkeypatch)
+
+
+def test_differential_batch_loop_mutations(monkeypatch):
+    """600 seeded byte edits of the crafted skeleton and font documents
+    (those whose spans Arrow can encode), through both document loops."""
+    import random
+
+    rng = random.Random(14)
+    pdfs = [p for p in (*_crafted_skeleton_cases().values(),
+                        *_crafted_font_cases().values()) if _utf8_spans(p)]
+    tokens = [b"R", b" ", b"<<", b">>", b"[", b"]", b"/", b"(", b")", b"%",
+              b"\n", b"0", b"9", b"-", b".", b"\x00", b"endstream", b"obj",
+              b"trailer", b"xref", b"/Contents", b"/Font", b"/Encrypt",
+              b"/Root", b"%PDF-1.", b"/Length 2 0 R"]
+    docs = []
+    for _ in range(600):
+        data = bytearray(rng.choice(pdfs))
+        for _edit in range(rng.randrange(1, 4)):
+            i = rng.randrange(len(data))
+            op = rng.random()
+            if op < 0.3:
+                data[i] = rng.randrange(256)
+            elif op < 0.7:
+                data[i:i] = rng.choice(tokens)
+            elif op < 0.9:
+                del data[i:i + rng.randrange(1, 8)]
+            else:
+                del data[max(i, 16):]
+        docs.append(_pdf_doc(bytes(data)))
+    batches = [_arrow_batch(docs[i:i + 150]) for i in range(0, 600, 150)]
+    _assert_same_batches(batches, monkeypatch, modes=False)
+
+
+def test_batch_loop_fast_path_taken(monkeypatch):
+    """X01, X12-X15, a 50-page document, an HTML document and text/media
+    rows run in the C batch loop: extract_document_spans is never called.
+    A password row, an encrypted document, a layout-options run and the
+    X16 Form document are each handed to it once, so a silent fallback
+    cannot pass for the fast path."""
+    from oxidizepdf_spark.corpus import (
+        all_cases, build_encrypted_pdf, build_html_doc,
+        build_pdf_multipage_texts,
+    )
+    from oxidizepdf_spark.kernel import extract as E
+    from oxidizepdf_spark.kernel.textstate import ExtractionOptions
+
+    calls = []
+    inner = E.extract_document_spans
+
+    def counting(*a, **k):
+        calls.append(1)
+        return inner(*a, **k)
+
+    monkeypatch.setattr(E, "extract_document_spans", counting)
+    catalog = {case: pdf for case, pdf, _ in all_cases()}
+    mega = build_pdf_multipage_texts([f"page {i}" for i in range(50)])
+    html = build_html_doc("some body text long enough\nanother line here",
+                          with_image=True)
+    default = ExtractionOptions()
+    for label, doc in (
+            *((c, _pdf_doc(catalog[c])) for c in
+              ("X01", "X12", "X13", "X14", "X15")),
+            ("50-page", _pdf_doc(mega)),
+            ("html", [("raw_html", html, None)]),
+            ("text/media", [("text", "a", None), ("media", "", "m://1")])):
+        calls.clear()
+        C._CSCAN.batch_counts(True)
+        rows = _batch_rows([_arrow_batch([doc])], default)
+        assert rows[0]["ok"] and rows[0]["n_spans"] > 0, label
+        assert calls == [], label
+        assert C._CSCAN.batch_counts()["served"] == 1, label
+    assert _batch_rows([_arrow_batch([_pdf_doc(mega)])],
+                       default)[0]["n_pages"] == 50
+    locked = build_encrypted_pdf("locked text", user_pw=b"pw")
+    for label, doc, password, opts, reason in (
+            ("password", _pdf_doc(locked), "pw", default, "password"),
+            ("encrypted", _pdf_doc(build_encrypted_pdf("secret")), None,
+             default, "encrypted"),
+            ("layout", _pdf_doc(catalog["X01"]), None,
+             ExtractionOptions(preserve_layout=True), None),
+            ("form", _pdf_doc(catalog["X16"]), None, default, "page")):
+        calls.clear()
+        C._CSCAN.batch_counts(True)
+        rows = _batch_rows([_arrow_batch([doc], [password])], opts)
+        assert calls == [1], label
+        counts = C._CSCAN.batch_counts(True)
+        assert counts["served"] == 0, label
+        if reason is not None:
+            assert counts[reason] == 1, (label, counts)
+    assert rows[0]["ok"], "X16 extracts through the fallback"

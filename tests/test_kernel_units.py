@@ -288,6 +288,39 @@ def test_error_mode_strict_rejects_length_mismatch():
     assert strict.error is not None
 
 
+def test_default_options_shared_and_unchanged(monkeypatch):
+    """A call without options reuses one module-level ExtractionOptions:
+    no instance is built per document, and extraction in every mode
+    (password rows, the page loop, the Python loop, HTML) leaves the
+    shared instance equal to a fresh one."""
+    from oxidizepdf_spark.corpus import (
+        all_cases, build_encrypted_pdf, generate_corpus,
+    )
+    from oxidizepdf_spark.kernel import extract as E
+    from oxidizepdf_spark.kernel.textstate import ExtractionOptions
+
+    fresh = ExtractionOptions()
+    built = []
+    init = ExtractionOptions.__init__
+
+    def counting(self, *a, **k):
+        built.append(1)
+        init(self, *a, **k)
+
+    monkeypatch.setattr(ExtractionOptions, "__init__", counting)
+    for case, pdf, _expected in all_cases():
+        E.extract_pdf_bytes(pdf)
+    E.extract_pdf_bytes(build_encrypted_pdf("locked", user_pw=b"pw"))
+    for in_row, _ in generate_corpus(n_docs=60, seed=5):
+        E.extract_document_spans(
+            [(s["kind"], s["text"], s["media_ref"]) for s in in_row["spans"]])
+    E.extract_batch(["raw_pdf"], [all_cases()[0][1].decode("latin-1")],
+                    [None], [0, 1], 0, ["pw"], E._DEFAULT_OPTIONS)
+    assert built == []
+    assert {k: getattr(E._DEFAULT_OPTIONS, k) for k in fresh.__slots__} == {
+        k: getattr(fresh, k) for k in fresh.__slots__}
+
+
 def test_extract_metadata_info_dict():
     from oxidizepdf_spark.corpus import build_pdf_with_content_stream
     from oxidizepdf_spark.kernel.extract import extract_metadata

@@ -18,14 +18,24 @@ document class (strict classic xref, recovered, xref stream, object
 stream, LZW content, 50-page, HTML): documents, ``PdfReader`` +
 ``flatten_page_tree`` µs/doc, ``extract_document_spans`` µs/doc, the
 class's share of the corpus's kernel time, each class at its best of
-``--reps``, and the share of the class's pages the C page loop
-(``_cscan.c`` ``run_pages``) served, counted in an untimed pass as the
-pages that built no ``Interpreter``.
+``--reps``, the share of the class's pages the C page loop (``_cscan.c``
+``run_pages``) served, counted in an untimed pass as the pages that built
+no ``Interpreter``, and the share of its documents the C batch loop
+(``_cscan.c`` ``extract_batch``) served, from its own counters
+(``batch_counts``) over one untimed ``extract_batch`` call.
+
+Then the batch leg: ``pipeline._extract_batches`` over the same corpus
+staged as 4,000-row Arrow batches, in µs/doc at the best of ``--reps``,
+with the C batch loop and with it forced off (the per-document Python
+loop over ``extract_document_spans``, every other C step still on). Its
+figures and the batch loop's served and hand-back counts by reason
+(``batch_counts``) join the JSON.
 
 The replay (and so perfbench's ``kernel.*`` layers) times the Python
-per-page steps one call at a time, so it does not see the C page loop:
-the figures that move with it are the table's full µs/doc here and
-``pipeline.py_run_s`` in a traced perfbench run.
+per-page steps one call at a time, so it sees neither the C page loop
+nor the batch loop: the figures that move with them are the table's full
+µs/doc, the batch leg here and ``pipeline.py_run_s`` in a traced
+perfbench run.
 """
 
 from __future__ import annotations
@@ -42,6 +52,7 @@ sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
 N_DOCS = 16000  # extract_mixed's corpus size
 SAMPLE = 1500   # documents replayed per repetition
+BATCH_ROWS = 4000  # rows per staged Arrow batch in the batch leg
 COLD = "/root/reference/test-pdfs/Cold_Email_Hacks.pdf"
 HIGGS = (
     "/root/reference/oxidize-pdf-core/tests/fixtures/"
@@ -97,7 +108,7 @@ def _doc_class(case: str, data: bytes | None) -> str:
     return _CASE_CLASS.get(case, "strict classic")
 
 
-def native_share(items) -> float | None:
+def native_share(items, options) -> float | None:
     """The share of the pages of ``items`` that ran in the C page loop:
     every page the Python loop runs builds one ``Interpreter``."""
     from oxidizepdf_spark.kernel.extract import extract_document_spans
@@ -115,15 +126,38 @@ def native_share(items) -> float | None:
     Interpreter.__init__ = counting
     try:
         for triples, _raw in items:
-            pages += extract_document_spans(triples)[1]["n_pages"]
+            pages += extract_document_spans(triples, options)[1]["n_pages"]
     finally:
         Interpreter.__init__ = init
     return 1.0 - built / pages if pages else None
 
 
+def native_docs(items, options) -> float | None:
+    """The share of the documents of ``items`` the C batch loop served,
+    from its counters over one ``extract_batch`` call."""
+    from oxidizepdf_spark.kernel import content
+    from oxidizepdf_spark.kernel.extract import extract_batch
+
+    ck = content._CSCAN
+    if ck is None or not items:
+        return None
+    kinds, texts, refs, offsets = [], [], [], [0]
+    for triples, _raw in items:
+        for k, t, m in triples:
+            kinds.append(k)
+            texts.append(t)
+            refs.append(m)
+        offsets.append(len(kinds))
+    ck.batch_counts(True)
+    extract_batch(kinds, texts, refs, offsets, 0, None, options)
+    counts = ck.batch_counts(True)
+    return counts["served"] / sum(counts.values())
+
+
 def class_table(seed: int, reps: int) -> list[tuple]:
     """Rows of (class, docs, open+tree µs/doc, full µs/doc, kernel share,
-    native page share) over the whole ``N_DOCS`` corpus of ``seed``."""
+    native page share, native document share) over the whole ``N_DOCS``
+    corpus of ``seed``."""
     from oxidizepdf_spark.corpus import all_cases, gen_doc
     from oxidizepdf_spark.kernel.extract import (
         decode_raw_payload,
@@ -131,7 +165,9 @@ def class_table(seed: int, reps: int) -> list[tuple]:
     )
     from oxidizepdf_spark.kernel.pages import flatten_page_tree
     from oxidizepdf_spark.kernel.reader import PdfReader
+    from oxidizepdf_spark.kernel.textstate import ExtractionOptions
 
+    options = ExtractionOptions()
     cases = all_cases()
     docs = {c: [] for c in CLASSES}
     for i in range(N_DOCS):
@@ -158,7 +194,7 @@ def class_table(seed: int, reps: int) -> list[tuple]:
                     t_open += pc() - t0
             t0 = pc()
             for triples, _raw in items:
-                extract_document_spans(triples)
+                extract_document_spans(triples, options)
             best_full[cls] = min(best_full[cls], pc() - t0)
             best_open[cls] = min(best_open[cls], t_open)
     total = sum(best_full.values())
@@ -168,18 +204,74 @@ def class_table(seed: int, reps: int) -> list[tuple]:
         rows.append((cls, len(docs[cls]),
                      None if cls == "HTML" else best_open[cls] / n * 1e6,
                      best_full[cls] / n * 1e6, best_full[cls] / total,
-                     native_share(docs[cls])))
+                     native_share(docs[cls], options),
+                     native_docs(docs[cls], options)))
     return rows
 
 
 def print_class_table(rows: list[tuple]) -> None:
     print("| class | docs | open+tree µs/doc | full µs/doc | share of kernel "
-          "| native pages |")
-    print("|---|---|---|---|---|---|")
-    for cls, n, open_us, full_us, share, native in rows:
+          "| native pages | native docs |")
+    print("|---|---|---|---|---|---|---|")
+    for cls, n, open_us, full_us, share, pages, docs in rows:
         o = "-" if open_us is None else f"{open_us:.0f}"
-        nat = "-" if native is None else f"{native:.1%}"
-        print(f"| {cls} | {n} | {o} | {full_us:.0f} | {share:.0%} | {nat} |")
+        nat = ["-" if v is None else f"{v:.1%}" for v in (pages, docs)]
+        print(f"| {cls} | {n} | {o} | {full_us:.0f} | {share:.0%} "
+              f"| {nat[0]} | {nat[1]} |")
+
+
+def batch_leg(seed: int, reps: int) -> dict:
+    """``_extract_batches`` µs/doc over the seed's corpus staged as
+    ``BATCH_ROWS``-row Arrow batches, native and with the C batch loop
+    forced off, alternating, each at its best of ``reps``; and the batch
+    loop's served and hand-back counts by reason over one native pass."""
+    import pyarrow as pa
+
+    from oxidizepdf_spark import pipeline
+    from oxidizepdf_spark.corpus import all_cases, gen_doc
+    from oxidizepdf_spark.kernel import content, extract
+    from oxidizepdf_spark.kernel.textstate import ExtractionOptions
+
+    cases = all_cases()
+    rows = [gen_doc(i, seed, cases)[0] for i in range(N_DOCS)]
+    span_type = pa.list_(pa.struct([("kind", pa.string()),
+                                    ("text", pa.string()),
+                                    ("media_ref", pa.string())]))
+    batches = [
+        pa.RecordBatch.from_arrays(
+            [pa.array([r["doc_id"] for r in chunk], pa.string()),
+             pa.array([r["part_id"] for r in chunk], pa.int32()),
+             pa.array([[{k: s[k] for k in ("kind", "text", "media_ref")}
+                        for s in r["spans"]] for r in chunk], span_type)],
+            names=["doc_id", "part_id", "spans"])
+        for chunk in (rows[i:i + BATCH_ROWS]
+                      for i in range(0, N_DOCS, BATCH_ROWS))]
+    options = ExtractionOptions()
+    serves = extract._batch_loop_serves
+
+    def run(native: bool) -> float:
+        extract._batch_loop_serves = serves if native else (lambda o: False)
+        try:
+            t0 = time.perf_counter()
+            for _ in pipeline._extract_batches(batches, options):
+                pass
+            return time.perf_counter() - t0
+        finally:
+            extract._batch_loop_serves = serves
+
+    ck = content._CSCAN
+    if ck is not None:
+        ck.batch_counts(True)
+    run(True)
+    out = {"batch_counts": ck.batch_counts(True) if ck else None}
+    run(False)
+    best = {True: float("inf"), False: float("inf")}
+    for _ in range(max(reps, 1)):
+        for native in (True, False):
+            best[native] = min(best[native], run(native))
+    out["batch_native_us_per_doc"] = best[True] / N_DOCS * 1e6
+    out["batch_python_us_per_doc"] = best[False] / N_DOCS * 1e6
+    return out
 
 
 def fixture_legs(reps: int) -> dict:
@@ -208,6 +300,7 @@ def main() -> None:
 
     print_class_table(class_table(args.seed, args.reps))
     out = {"c_fast_path": int(content._CSCAN is not None)}
+    out.update(batch_leg(args.seed, args.reps))
     out.update(replay_layers(args.seed, args.reps))
     out.update(fixture_legs(args.reps))
     print(json.dumps({k: round(v, 5) if isinstance(v, float) else v
