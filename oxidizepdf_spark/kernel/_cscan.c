@@ -3278,7 +3278,8 @@ static Py_ssize_t u8_char_start_before(const unsigned char *d,
 
 typedef struct {
     PyObject *tag;      /* lowercased tag str (owned) */
-    unsigned char drops, boils, is_a;
+    unsigned char cls;  /* its HT_ class bits */
+    unsigned char boils;
 } HElem;
 
 typedef struct {
@@ -3304,7 +3305,7 @@ static int h_namebyte(unsigned char b)
              b == ' ' || b == '/' || b == '>' || b == 0x00);
 }
 
-static int h_push(H *h, PyObject *tag, int drops, int boils, int is_a)
+static int h_push(H *h, PyObject *tag, int cls, int boils)
 {
     if (h->sp >= h->cap) {
         Py_ssize_t nc = h->cap ? h->cap * 2 : 32;
@@ -3318,26 +3319,46 @@ static int h_push(H *h, PyObject *tag, int drops, int boils, int is_a)
     }
     Py_INCREF(tag);
     h->stack[h->sp].tag = tag;
-    h->stack[h->sp].drops = (unsigned char)drops;
+    h->stack[h->sp].cls = (unsigned char)cls;
     h->stack[h->sp].boils = (unsigned char)boils;
-    h->stack[h->sp].is_a = (unsigned char)is_a;
     h->sp++;
     return 0;
 }
 
-static const char *const H_DROP[] = {
-    "script", "style", "template", "noscript", "svg", "head", NULL,
-};
-static const char *const H_BOILER_TAGS[] = {
-    "nav", "header", "footer", "aside", "form", "button", NULL,
-};
-static const char *const H_BLOCK[] = {
-    "p", "div", "section", "article", "main", "body", "li", "td", "th",
-    "h1", "h2", "h3", "h4", "h5", "h6", "blockquote", "pre",
-    "figcaption", "ul", "ol", "table", "tr", NULL,
-};
-static const char *const H_VOID[] = {
-    "br", "hr", "img", "meta", "link", "input", "wbr", "source", NULL,
+/* The tag names html_extract.py's sets name, classified once: a tag
+ * name is looked up as it is read (h_tag_name) and its class bits ride
+ * on the stack entry.  The names are interned at module init. */
+enum { HT_VOID = 1, HT_DROP = 2, HT_BOIL = 4, HT_BLOCK = 8, HT_A = 16,
+       HT_CDATA = 32, HT_IMG = 64, HT_BR = 128 };
+typedef struct {
+    const char *name;
+    int cls;
+    PyObject *obj;
+    Py_ssize_t len;
+} HTag;
+static HTag h_tags[] = {
+    /* _VOID */
+    {"br", HT_VOID | HT_BR}, {"hr", HT_VOID}, {"img", HT_VOID | HT_IMG},
+    {"meta", HT_VOID}, {"link", HT_VOID}, {"input", HT_VOID},
+    {"wbr", HT_VOID}, {"source", HT_VOID},
+    /* _DROP (script and style also open a cdata section) */
+    {"script", HT_DROP | HT_CDATA}, {"style", HT_DROP | HT_CDATA},
+    {"template", HT_DROP}, {"noscript", HT_DROP}, {"svg", HT_DROP},
+    {"head", HT_DROP},
+    /* _BOILER_TAGS */
+    {"nav", HT_BOIL}, {"header", HT_BOIL}, {"footer", HT_BOIL},
+    {"aside", HT_BOIL}, {"form", HT_BOIL}, {"button", HT_BOIL},
+    /* _BLOCK */
+    {"p", HT_BLOCK}, {"div", HT_BLOCK}, {"section", HT_BLOCK},
+    {"article", HT_BLOCK}, {"main", HT_BLOCK}, {"body", HT_BLOCK},
+    {"li", HT_BLOCK}, {"td", HT_BLOCK}, {"th", HT_BLOCK}, {"h1", HT_BLOCK},
+    {"h2", HT_BLOCK}, {"h3", HT_BLOCK}, {"h4", HT_BLOCK}, {"h5", HT_BLOCK},
+    {"h6", HT_BLOCK}, {"blockquote", HT_BLOCK}, {"pre", HT_BLOCK},
+    {"figcaption", HT_BLOCK}, {"ul", HT_BLOCK}, {"ol", HT_BLOCK},
+    {"table", HT_BLOCK}, {"tr", HT_BLOCK},
+    /* the anchor */
+    {"a", HT_A},
+    {NULL, 0},
 };
 /* _BOILER_HINT plain-substring needles (the \bad\b case is special) */
 static const char *const H_HINT[] = {
@@ -3347,15 +3368,26 @@ static const char *const H_HINT[] = {
     "newsletter", NULL,
 };
 
-static int h_in_set(PyObject *tag, const char *const set[])
+/* h_tags by (length, first and last byte), filled at module init */
+#define H_BUCKETS 128
+static HTag *h_bucket[H_BUCKETS][4];
+
+static unsigned h_tag_hash(const char *t, Py_ssize_t len)
 {
-    const char *t = PyUnicode_AsUTF8(tag);
-    if (!t)
-        return -1;
-    for (int i = 0; set[i]; i++)
-        if (strcmp(t, set[i]) == 0)
-            return 1;
-    return 0;
+    return ((unsigned char)t[0] * 7u + (unsigned char)t[len - 1] * 3u +
+            (unsigned)len) % H_BUCKETS;
+}
+
+/* the entry of a lowercased tag name, or NULL */
+static HTag *h_tag_find(const char *t, Py_ssize_t len)
+{
+    if (len > 10)
+        return NULL;
+    HTag **b = h_bucket[h_tag_hash(t, len)];
+    for (int i = 0; i < 4 && b[i]; i++)
+        if (b[i]->len == len && memcmp(b[i]->name, t, (size_t)len) == 0)
+            return b[i];
+    return NULL;
 }
 
 /* _BOILER_HINT.search(value) — IGNORECASE substring alternation plus
@@ -3572,17 +3604,11 @@ static int h_close_anchor(H *h)
 /* handle_starttag(tag, attrs) — consumer body; src/href = last-seen attr
  * values (dict(attrs).get semantics), hint_hit = any class/id/role value
  * matching _BOILER_HINT */
-static int h_start(H *h, PyObject *tag, PyObject *src, PyObject *href,
-                   int hint_hit)
+static int h_start(H *h, PyObject *tag, int cls, PyObject *src,
+                   PyObject *href, int hint_hit)
 {
-    int v = h_in_set(tag, H_VOID);
-    if (v < 0)
-        return -1;
-    const char *t = PyUnicode_AsUTF8(tag);
-    if (!t)
-        return -1;
-    if (v) {
-        if (strcmp(t, "img") == 0 && !h->drop_depth && !h->boiler_depth) {
+    if (cls & HT_VOID) {
+        if ((cls & HT_IMG) && !h->drop_depth && !h->boiler_depth) {
             if (h_flush(h) < 0)
                 return -1;
             if (src && PyUnicode_GET_LENGTH(src)) {
@@ -3594,32 +3620,20 @@ static int h_start(H *h, PyObject *tag, PyObject *src, PyObject *href,
                 if (rc < 0)
                     return -1;
             }
-        } else if (strcmp(t, "br") == 0) {
+        } else if (cls & HT_BR) {
             if (h_flush(h) < 0)
                 return -1;
         }
         return 0;
     }
-    int drops = h_in_set(tag, H_DROP);
-    if (drops < 0)
-        return -1;
-    int boils = 0;
-    if (!drops) {
-        boils = h_in_set(tag, H_BOILER_TAGS);
-        if (boils < 0)
-            return -1;
-        if (!boils)
-            boils = hint_hit;
-    }
-    int blk = h_in_set(tag, H_BLOCK);
-    if (blk < 0)
-        return -1;
-    if (blk || boils || drops) {
+    int drops = (cls & HT_DROP) != 0;
+    int boils = !drops && ((cls & HT_BOIL) || hint_hit);
+    if ((cls & HT_BLOCK) || boils || drops) {
         if (h_flush(h) < 0)
             return -1;
     }
-    int is_a = strcmp(t, "a") == 0;
-    if (h_push(h, tag, drops, boils, is_a) < 0)
+    int is_a = (cls & HT_A) != 0;
+    if (h_push(h, tag, cls, boils) < 0)
         return -1;
     if (drops)
         h->drop_depth++;
@@ -3649,32 +3663,27 @@ static int h_start(H *h, PyObject *tag, PyObject *src, PyObject *href,
 }
 
 /* handle_endtag(tag) */
-static int h_endtag(H *h, PyObject *tag)
+static int h_endtag(H *h, PyObject *tag, int cls)
 {
-    int v = h_in_set(tag, H_VOID);
-    if (v < 0)
-        return -1;
-    if (v)
+    if (cls & HT_VOID)
         return 0;
     for (Py_ssize_t i = h->sp - 1; i >= 0; i--) {
-        int eq = PyUnicode_Compare(h->stack[i].tag, tag);
+        int eq = h->stack[i].tag == tag ? 0
+                                        : PyUnicode_Compare(h->stack[i].tag, tag);
         if (eq == -1 && PyErr_Occurred())
             return -1;
         if (eq != 0)
             continue;
-        int blk = h_in_set(tag, H_BLOCK);
-        if (blk < 0)
-            return -1;
-        if (blk || h->stack[i].boils) {
+        if ((h->stack[i].cls & HT_BLOCK) || h->stack[i].boils) {
             if (h_flush(h) < 0)
                 return -1;
         }
         for (Py_ssize_t k = i; k < h->sp; k++) {
-            if (h->stack[k].drops && h->drop_depth > 0)
+            if ((h->stack[k].cls & HT_DROP) && h->drop_depth > 0)
                 h->drop_depth--;
             if (h->stack[k].boils && h->boiler_depth > 0)
                 h->boiler_depth--;
-            if (h->stack[k].is_a) {
+            if (h->stack[k].cls & HT_A) {
                 if (h_close_anchor(h) < 0)
                     return -1;
             }
@@ -3782,6 +3791,28 @@ static PyObject *h_lower_name(H *h, Py_ssize_t s, Py_ssize_t e)
     if (buf != small)
         free(buf);
     return r;
+}
+
+/* a tag name: h_lower_name, the interned str of a name html_extract.py
+ * classifies (its class bits in *cls), else a new str (class 0) */
+static PyObject *h_tag_name(H *h, Py_ssize_t s, Py_ssize_t e, int *cls)
+{
+    *cls = 0;
+    if (e - s <= 10) {
+        char t[10];
+        int ascii = 1;
+        for (Py_ssize_t i = s; i < e; i++) {
+            char ch = (char)h->d[i];
+            ascii &= h->d[i] < 0x80;
+            t[i - s] = (ch >= 'A' && ch <= 'Z') ? ch + 32 : ch;
+        }
+        HTag *k = ascii && e > s ? h_tag_find(t, e - s) : NULL;
+        if (k) {
+            *cls = k->cls;
+            return Py_NewRef(k->obj);
+        }
+    }
+    return h_lower_name(h, s, e);
 }
 
 /* check_for_whole_start_tag: locatestarttagend_tolerant scan + the
@@ -3992,7 +4023,8 @@ static Py_ssize_t h_parse_starttag(H *h, Py_ssize_t i)
     Py_ssize_t k = name_s + 1;
     while (k < n && h_namebyte(d[k]))
         k++;
-    PyObject *tag = h_lower_name(h, name_s, k);
+    int cls;
+    PyObject *tag = h_tag_name(h, name_s, k, &cls);
     if (!tag)
         return -1;
     k = h_skip_ws_slash(h, k);
@@ -4208,24 +4240,14 @@ static Py_ssize_t h_parse_starttag(H *h, Py_ssize_t i)
          * (raw, no unescape — parser.py:330) */
         rc = h_data_range(h, i, endpos, 0);
     } else if (endkind == 2) {
-        rc = h_start(h, tag, src, href, hint);
-        if (rc == 0) {
-            int v = h_in_set(tag, H_VOID);
-            if (v < 0)
-                rc = -1;
-            else if (!v)
-                rc = h_endtag(h, tag);
-        }
+        rc = h_start(h, tag, cls, src, href, hint);
+        if (rc == 0 && !(cls & HT_VOID))
+            rc = h_endtag(h, tag, cls);
     } else {
-        rc = h_start(h, tag, src, href, hint);
-        if (rc == 0) {
-            const char *t = PyUnicode_AsUTF8(tag);
-            if (!t)
-                rc = -1;
-            else if (strcmp(t, "script") == 0 || strcmp(t, "style") == 0) {
-                Py_XDECREF(h->cdata);
-                h->cdata = Py_NewRef(tag);
-            }
+        rc = h_start(h, tag, cls, src, href, hint);
+        if (rc == 0 && (cls & HT_CDATA)) {
+            Py_XDECREF(h->cdata);
+            h->cdata = Py_NewRef(tag);
         }
     }
     Py_DECREF(tag);
@@ -4282,7 +4304,8 @@ static Py_ssize_t h_parse_endtag(H *h, Py_ssize_t i)
             Py_ssize_t ns = i + 2, ne = ns + 1;
             while (ne < n && h_namebyte(d[ne]))
                 ne++;
-            PyObject *tag = h_lower_name(h, ns, ne);
+            int cls;
+            PyObject *tag = h_tag_name(h, ns, ne, &cls);
             if (!tag)
                 return -1;
             Py_ssize_t after = h_skip_ws_slash(h, ne);
@@ -4299,7 +4322,7 @@ static Py_ssize_t h_parse_endtag(H *h, Py_ssize_t i)
                 h->bail = 1;
                 return -1;
             }
-            int rc = h_endtag(h, tag);
+            int rc = h_endtag(h, tag, cls);
             Py_DECREF(tag);
             if (rc < 0)
                 return -1;
@@ -4318,11 +4341,12 @@ static Py_ssize_t h_parse_endtag(H *h, Py_ssize_t i)
         }
     }
     {
-        PyObject *elem = h_lower_name(h, ts, te);
+        int cls;
+        PyObject *elem = h_tag_name(h, ts, te, &cls);
         if (!elem)
             return -1;
         if (h->cdata) {
-            int eq = PyUnicode_Compare(elem, h->cdata);
+            int eq = elem == h->cdata ? 0 : PyUnicode_Compare(elem, h->cdata);
             if (eq == -1 && PyErr_Occurred()) {
                 Py_DECREF(elem);
                 return -1;
@@ -4334,7 +4358,7 @@ static Py_ssize_t h_parse_endtag(H *h, Py_ssize_t i)
                 return gtpos;
             }
         }
-        int rc = h_endtag(h, elem);
+        int rc = h_endtag(h, elem, cls);
         Py_DECREF(elem);
         if (rc < 0)
             return -1;
@@ -4688,7 +4712,156 @@ static PyObject *html_spans(PyObject *self, PyObject *args)
  * including its flexible-producer fallback, re-parses from the same offset.
  * ======================================================================== */
 
-static PyObject *g_n_str, *g_f_str; /* "n" / "f" singletons */
+/* ---- the xref table ----------------------------------------------------- *
+ * The chain's entries, by object number, in insertion order (the order
+ * the xref dict keeps), with an open-addressing index.  In the batch loop
+ * an entry also holds the object fetched for it and, for an object
+ * stream, its parsed members: the reader's _cache and _objstm_cache, kept
+ * here until a Python step needs the reader (doc_reader). */
+typedef struct {
+    long long num, a, b, gen; /* gen: the generation obj was fetched at */
+    PyObject *obj;            /* the fetched object, or NULL */
+    PyObject *members;        /* an object stream's {number: value} */
+    char kind;                /* 'n', 'f' or 'c' */
+} XEnt;
+
+typedef struct {
+    XEnt *e;
+    Py_ssize_t n, cap;
+    Py_ssize_t *slot; /* index + 1 into e, 0 = empty */
+    Py_ssize_t nslot; /* a power of two */
+} XTab;
+
+static Py_ssize_t xt_home(XTab *t, long long num)
+{
+    unsigned long long h = (unsigned long long)num * 0x9E3779B97F4A7C15ULL;
+    return (Py_ssize_t)(h >> 17) & (t->nslot - 1);
+}
+
+static XEnt *xt_find(XTab *t, long long num)
+{
+    if (!t->nslot)
+        return NULL;
+    for (Py_ssize_t i = xt_home(t, num);; i = (i + 1) & (t->nslot - 1)) {
+        Py_ssize_t s = t->slot[i];
+        if (!s)
+            return NULL;
+        if (t->e[s - 1].num == num)
+            return &t->e[s - 1];
+    }
+}
+
+static int xt_grow(XTab *t)
+{
+    Py_ssize_t cap = t->cap ? t->cap * 2 : 16;
+    XEnt *e = (XEnt *)realloc(t->e, sizeof(XEnt) * (size_t)cap);
+    Py_ssize_t *slot = (Py_ssize_t *)calloc((size_t)cap * 2, sizeof(Py_ssize_t));
+    if (!e || !slot) {
+        if (e)
+            t->e = e;
+        free(slot);
+        PyErr_NoMemory();
+        return -1;
+    }
+    t->e = e;
+    t->cap = cap;
+    free(t->slot);
+    t->slot = slot;
+    t->nslot = cap * 2;
+    for (Py_ssize_t k = 0; k < t->n; k++) {
+        Py_ssize_t i = xt_home(t, e[k].num);
+        while (slot[i])
+            i = (i + 1) & (t->nslot - 1);
+        slot[i] = k + 1;
+    }
+    return 0;
+}
+
+/* entries[num] = (kind, a, b), or entries.setdefault: 0, or -1 */
+static int xt_put(XTab *t, long long num, char kind, long long a,
+                  long long b, int replace)
+{
+    XEnt *x = xt_find(t, num);
+    if (!x) {
+        if (t->n == t->cap && xt_grow(t) < 0)
+            return -1;
+        Py_ssize_t i = xt_home(t, num);
+        while (t->slot[i])
+            i = (i + 1) & (t->nslot - 1);
+        t->slot[i] = t->n + 1;
+        x = &t->e[t->n++];
+        memset(x, 0, sizeof(*x));
+        x->num = num;
+    } else if (!replace)
+        return 0;
+    x->kind = kind;
+    x->a = a;
+    x->b = b;
+    return 0;
+}
+
+static void xt_free(XTab *t)
+{
+    for (Py_ssize_t k = 0; k < t->n; k++) {
+        Py_XDECREF(t->e[k].obj);
+        Py_XDECREF(t->e[k].members);
+    }
+    free(t->e);
+    free(t->slot);
+    memset(t, 0, sizeof(*t));
+}
+
+static PyObject *g_n_str, *g_f_str, *g_c_str; /* "n" / "f" / "c" */
+
+/* the xref dict: {num: (kind, a, b)} in insertion order */
+static PyObject *xt_dict(XTab *t)
+{
+    PyObject *d = PyDict_New();
+    for (Py_ssize_t k = 0; d && k < t->n; k++) {
+        XEnt *x = &t->e[k];
+        PyObject *kind = x->kind == 'n' ? g_n_str : x->kind == 'f' ? g_f_str
+                                                                   : g_c_str;
+        PyObject *key = PyLong_FromLongLong(x->num);
+        PyObject *v = key ? Py_BuildValue("(OLL)", kind, x->a, x->b) : NULL;
+        if (!v || PyDict_SetItem(d, key, v) < 0)
+            Py_CLEAR(d);
+        Py_XDECREF(key);
+        Py_XDECREF(v);
+    }
+    return d;
+}
+
+/* the table of an xref dict of (kind, int, int) entries (the recovery
+ * scan's): 1, 0 = an entry it cannot hold, -1 = exception */
+static int xt_from_dict(XTab *t, PyObject *entries)
+{
+    Py_ssize_t pos = 0;
+    PyObject *k, *v;
+    while (PyDict_Next(entries, &pos, &k, &v)) {
+        int overflow = 0;
+        long long num = PyLong_CheckExact(k)
+                            ? PyLong_AsLongLongAndOverflow(k, &overflow)
+                            : 0;
+        if (!PyLong_CheckExact(k) || overflow || !PyTuple_CheckExact(v) ||
+            PyTuple_GET_SIZE(v) != 3 ||
+            !PyUnicode_Check(PyTuple_GET_ITEM(v, 0)) ||
+            PyUnicode_GET_LENGTH(PyTuple_GET_ITEM(v, 0)) != 1 ||
+            !PyLong_CheckExact(PyTuple_GET_ITEM(v, 1)) ||
+            !PyLong_CheckExact(PyTuple_GET_ITEM(v, 2)))
+            return 0;
+        Py_UCS4 kind = PyUnicode_READ_CHAR(PyTuple_GET_ITEM(v, 0), 0);
+        long long a = PyLong_AsLongLongAndOverflow(PyTuple_GET_ITEM(v, 1),
+                                                   &overflow);
+        long long b = overflow ? 0 : PyLong_AsLongLongAndOverflow(
+                                         PyTuple_GET_ITEM(v, 2), &overflow);
+        if (overflow || (kind != 'n' && kind != 'f' && kind != 'c'))
+            return 0;
+        if (PyErr_Occurred() || xt_put(t, num, (char)kind, a, b, 1) < 0)
+            return -1;
+    }
+    return 1;
+}
+
 
 /* bytes-pattern \s (ASCII-only: [ \t\n\r\f\v]) */
 static int is_bws(unsigned char b)
@@ -4722,7 +4895,7 @@ static int put_entry(PyObject *entries, long long key, PyObject *kind,
  * wins).  1 = parsed (*end = position after the last entry's EOL),
  * 0 = bail, -1 = exception. */
 static int xref_entries(const unsigned char *d, Py_ssize_t n, Py_ssize_t p,
-                        PyObject *entries, Py_ssize_t *end)
+                        XTab *entries, Py_ssize_t *end)
 {
     for (;;) {
         /* subsection header: \s*(\d+)\s+(\d+)\s* — commit p only on a
@@ -4789,9 +4962,8 @@ static int xref_entries(const unsigned char *d, Py_ssize_t n, Py_ssize_t p,
                 for (int k2 = 11; k2 < 16; k2++)
                     gen = gen * 10 + (e[k2] - '0');
                 /* first definition wins (entries.setdefault) */
-                if (put_entry(entries, start_obj + i,
-                              e[17] == 'n' ? g_n_str : g_f_str, off, gen,
-                              0) < 0)
+                if (xt_put(entries, start_obj + i, (char)e[17], off, gen,
+                           0) < 0)
                     return -1;
             }
             p = hdr_end + 20 * (count - 1) + 18;
@@ -4836,7 +5008,7 @@ static int xref_trailer(const unsigned char *d, Py_ssize_t n, Py_ssize_t pos,
 /* one whole section at `offset` (after optional whitespace): the xref.py
  * _parse_traditional_section result (entries, trailer, pos_after) */
 static int xref_section(const unsigned char *d, Py_ssize_t n,
-                        Py_ssize_t offset, PyObject *entries,
+                        Py_ssize_t offset, XTab *entries,
                         PyObject **trailer, Py_ssize_t *end)
 {
     Py_ssize_t p = offset;
@@ -4862,22 +5034,24 @@ static PyObject *parse_xref_section(PyObject *self, PyObject *args)
         return NULL;
     if (!PyBytes_Check(data_obj) || offset < 0)
         Py_RETURN_NONE;
-    PyObject *entries = PyDict_New();
-    if (!entries)
-        return NULL;
+    XTab t = {0};
     PyObject *trailer = NULL;
     Py_ssize_t end = 0;
     int rc = xref_section((const unsigned char *)PyBytes_AS_STRING(data_obj),
-                          PyBytes_GET_SIZE(data_obj), offset, entries,
-                          &trailer, &end);
+                          PyBytes_GET_SIZE(data_obj), offset, &t, &trailer,
+                          &end);
+    PyObject *entries = rc > 0 ? xt_dict(&t) : NULL;
+    xt_free(&t);
     if (rc <= 0) {
-        Py_DECREF(entries);
         if (rc < 0)
             return NULL;
         Py_RETURN_NONE;
     }
-    PyObject *r = Py_BuildValue("(NNn)", entries, trailer, end);
-    return r;
+    if (!entries) {
+        Py_DECREF(trailer);
+        return NULL;
+    }
+    return Py_BuildValue("(NNn)", entries, trailer, end);
 }
 
 /* ========================================================================
@@ -4892,14 +5066,17 @@ static PyObject *parse_xref_section(PyObject *self, PyObject *args)
  * encryption, a missing xref entry, a wrong-object entry, an indirect
  * /Length, an exception from a Python stream decode they did not expect,
  * and on every parse the object parser is not byte-certain about.  Stream
- * payloads (xref streams, object streams) decode through the Python
- * Stream.decode, so the build links no zlib.
+ * payloads (xref streams, object streams, page contents) decode through
+ * native_decode, which calls the zlib module's decompressobj for Flate,
+ * so the build links no zlib; any other stream goes to the Python
+ * Stream.decode.
  *
  * Objects fetched here go into reader._cache (object-stream members also
  * into reader._objstm_cache) exactly as get_object would cache them (same
- * key, same value), and a bailed step's Python re-run walks the same
- * objects first, so a bail leaves nothing Python would not have produced
- * itself.
+ * key, same value), or, in the batch loop before a reader exists, into
+ * the xref table entry they come from; a bailed step's Python re-run
+ * walks the same objects first, so a bail leaves nothing Python would not
+ * have produced itself.
  * ======================================================================== */
 
 static PyObject *g_stream_cls; /* objects.Stream */
@@ -4981,7 +5158,6 @@ static int c_startxref(const unsigned char *d, Py_ssize_t n, Py_ssize_t *out)
 
 /* ---- stream payloads, xref streams, the recovery scan ------------------ */
 
-static PyObject *g_c_str; /* "c" singleton */
 static PyObject *s_objstm_cache, *s_recovered, *s_resolve, *s_decode;
 static PyObject *k_W, *k_Size, *k_Index, *k_N, *k_First, *k_Info, *k_ID;
 
@@ -5073,6 +5249,444 @@ static PyObject *stream_decode(PyObject *stm, PyObject *resolve, int *raised)
         *raised = 1;
     }
     return NULL;
+}
+
+/* ---- native stream filters (filters.decode_stream_data) ---------------- *
+ * The common chain decodes here: FlateDecode (strategy 1 of decode_flate,
+ * the same zlib.decompressobj / decompress / flush calls _zlib_try makes,
+ * with its size and ratio guards), LZWDecode (lzw_run), ASCIIHexDecode,
+ * chains of these, and the PNG (10-15) and TIFF (2) predictors.  Anything
+ * else is handed to the Python Stream.decode, which owns decode_flate's
+ * fallback ladder: a first-try zlib error or guard, an indirect /Filter or
+ * /DecodeParms, an unknown filter, predictor parameters that are not
+ * plain ints or an odd predictor shape.  g_fnat counts the filters
+ * decoded natively and g_fpy the streams handed back, by call site and
+ * reason (filter_counts reads them). */
+
+enum { FS_XREF, FS_OBJSTM, FS_CONTENT, FS_N };
+static const char *const fs_names[FS_N] = {"xref", "objstm", "content"};
+enum { FN_FLATE, FN_LZW, FN_AHX, FN_PNG, FN_TIFF, FN_N };
+static const char *const fn_names[FN_N] = {
+    "FlateDecode", "LZWDecode", "ASCIIHexDecode", "png_predictor",
+    "tiff_predictor"};
+enum { FB_ZLIB, FB_INDIRECT, FB_FILTER, FB_PARAMS, FB_LZW, FB_N };
+static const char *const fb_names[FB_N] = {"zlib", "indirect", "filter",
+                                           "params", "lzw"};
+static long long g_fnat[FS_N][FN_N], g_fpy[FS_N][FB_N];
+static PyObject *g_decompressobj; /* zlib.decompressobj */
+static PyObject *s_decompress, *s_flush, *k_Predictor, *k_Columns,
+    *k_Colors, *k_Bpc, *k_EarlyChange;
+static long long g_max_size, g_max_ratio; /* filters.MAX_DECOMPRESSED_SIZE,
+                                             MAX_COMPRESSION_RATIO */
+
+static PyObject *lzw_run(const unsigned char *p, Py_ssize_t n,
+                         long long early, long long cap); /* below */
+static int str_is(PyObject *s, const char *lit);              /* below */
+static void install_global(PyObject **slot, PyObject *value); /* below */
+
+/* _zlib_try(data, MAX_WBITS): new bytes, or NULL (bail: a zlib error,
+ * the size or ratio guard; or an exception that is not an Exception) */
+static PyObject *flate_once(PyObject *data)
+{
+    PyObject *d = PyObject_CallNoArgs(g_decompressobj);
+    PyObject *cap = d ? PyLong_FromLongLong(g_max_size + 1) : NULL;
+    PyObject *out = cap ? PyObject_CallMethodObjArgs(d, s_decompress, data,
+                                                     cap, NULL)
+                        : NULL;
+    PyObject *tail = out ? PyObject_CallMethodNoArgs(d, s_flush) : NULL;
+    Py_XDECREF(d);
+    Py_XDECREF(cap);
+    if (tail && PyBytes_CheckExact(out) && PyBytes_CheckExact(tail)) {
+        if (PyBytes_GET_SIZE(tail))
+            PyBytes_Concat(&out, tail);
+    } else
+        Py_CLEAR(out);
+    Py_XDECREF(tail);
+    if (out) {
+        long long in = PyBytes_GET_SIZE(data), got = PyBytes_GET_SIZE(out);
+        if (got > g_max_size || (in > 0 && got > in * g_max_ratio))
+            Py_CLEAR(out);
+    }
+    if (!out && PyErr_Occurred() && PyErr_ExceptionMatches(PyExc_Exception))
+        PyErr_Clear();
+    return out;
+}
+
+/* decode_ascii_hex: digits up to the first '>', others skipped, an odd
+ * last digit padded with 0 */
+static PyObject *ahx_decode(PyObject *data)
+{
+    const unsigned char *p = (const unsigned char *)PyBytes_AS_STRING(data);
+    Py_ssize_t n = PyBytes_GET_SIZE(data), k = 0;
+    const unsigned char *gt = memchr(p, '>', (size_t)n);
+    if (gt)
+        n = gt - p;
+    PyObject *out = PyBytes_FromStringAndSize(NULL, n / 2 + 1);
+    if (!out)
+        return NULL;
+    unsigned char *o = (unsigned char *)PyBytes_AS_STRING(out);
+    int hi = -1;
+    for (Py_ssize_t i = 0; i < n; i++) {
+        int v = hex_digit(p[i]);
+        if (v < 0)
+            continue;
+        if (hi < 0)
+            hi = v;
+        else {
+            o[k++] = (unsigned char)(hi << 4 | v);
+            hi = -1;
+        }
+    }
+    if (hi >= 0)
+        o[k++] = (unsigned char)(hi << 4);
+    _PyBytes_Resize(&out, k);
+    return out;
+}
+
+/* int(params.get(key, def) or def) for a plain int: 1, else 0 */
+static int parm_int(PyObject *params, PyObject *key, long long def,
+                    long long *out)
+{
+    PyObject *v = params ? PyDict_GetItemWithError(params, key) : NULL;
+    if (PyErr_Occurred()) {
+        PyErr_Clear();
+        return 0;
+    }
+    if (!v || v == Py_None || v == Py_False) {
+        *out = def;
+        return 1;
+    }
+    if (!PyLong_Check(v))
+        return 0;
+    int overflow;
+    long long x = PyLong_AsLongLongAndOverflow(v, &overflow);
+    if (overflow || (x == -1 && PyErr_Occurred())) {
+        PyErr_Clear();
+        return 0;
+    }
+    *out = x ? x : def;
+    return 1;
+}
+
+#define PRED_DIM_MAX (1LL << 20)
+
+/* apply_predictor(data, params): new bytes (data itself when no predictor
+ * applies), or NULL with *bail set (no exception) / an exception */
+static PyObject *predict(PyObject *data, PyObject *params, int *used,
+                         int *bail)
+{
+    long long pred, cols, colors, bpc;
+    if (!parm_int(params, k_Predictor, 1, &pred) ||
+        !parm_int(params, k_Columns, 1, &cols) ||
+        !parm_int(params, k_Colors, 1, &colors) ||
+        !parm_int(params, k_Bpc, 8, &bpc)) {
+        *bail = FB_PARAMS + 1;
+        return NULL;
+    }
+    if (pred <= 1)
+        return Py_NewRef(data);
+    if (!(pred == 2 || (pred >= 10 && pred <= 15)) || cols < 1 ||
+        colors < 1 || bpc < 1 || cols > PRED_DIM_MAX ||
+        colors > PRED_DIM_MAX || bpc > PRED_DIM_MAX) {
+        *bail = FB_PARAMS + 1;
+        return NULL;
+    }
+    const unsigned char *in = (const unsigned char *)PyBytes_AS_STRING(data);
+    Py_ssize_t n = PyBytes_GET_SIZE(data);
+    if (pred == 2) { /* _tiff_unpredict: 8-bit samples only */
+        Py_ssize_t row = (Py_ssize_t)(cols * colors);
+        if (bpc != 8 || n % row != 0)
+            return Py_NewRef(data);
+        PyObject *out = PyBytes_FromStringAndSize(NULL, n);
+        if (!out)
+            return NULL;
+        unsigned char *o = (unsigned char *)PyBytes_AS_STRING(out);
+        for (Py_ssize_t r = 0; r < n; r += row)
+            for (Py_ssize_t i = 0; i < row; i++)
+                o[r + i] = i < colors ? in[r + i]
+                                      : (unsigned char)(in[r + i] +
+                                                        o[r + i - colors]);
+        used[FN_TIFF] = 1;
+        return out;
+    }
+    /* _png_unpredict: whole rows only, each led by its filter tag */
+    Py_ssize_t bpp = (Py_ssize_t)((colors * bpc + 7) / 8);
+    Py_ssize_t rb = (Py_ssize_t)((cols * colors * bpc + 7) / 8);
+    if (bpp < 1)
+        bpp = 1;
+    Py_ssize_t stride = rb + 1, rows = n / stride;
+    if (n % stride && rows == 0) {
+        *bail = FB_PARAMS + 1; /* "predictor data shorter than one row" */
+        return NULL;
+    }
+    PyObject *out = PyBytes_FromStringAndSize(NULL, rows * rb);
+    if (!out)
+        return NULL;
+    unsigned char *o = (unsigned char *)PyBytes_AS_STRING(out);
+    for (Py_ssize_t r = 0; r < rows; r++) {
+        const unsigned char *cur = in + r * stride + 1;
+        unsigned char *res = o + r * rb;
+        const unsigned char *prev = r ? res - rb : NULL;
+        unsigned char tag = cur[-1];
+        for (Py_ssize_t i = 0; i < rb; i++) {
+            int a = i >= bpp ? res[i - bpp] : 0, b = prev ? prev[i] : 0,
+                c = prev && i >= bpp ? prev[i - bpp] : 0, pr;
+            switch (tag) {
+            case 0: pr = 0; break;
+            case 1: pr = a; break;
+            case 2: pr = b; break;
+            case 3: pr = (a + b) >> 1; break;
+            case 4: {
+                int p = a + b - c, pa = abs(p - a), pb = abs(p - b),
+                    pc = abs(p - c);
+                pr = pa <= pb && pa <= pc ? a : pb <= pc ? b : c;
+                break;
+            }
+            default: /* "unknown PNG filter tag" */
+                Py_DECREF(out);
+                *bail = FB_PARAMS + 1;
+                return NULL;
+            }
+            res[i] = (unsigned char)(cur[i] + pr);
+        }
+    }
+    used[FN_PNG] = 1;
+    return out;
+}
+
+/* _filter_params(parms, i) (borrowed; NULL for {}) */
+static PyObject *filter_params(PyObject *parms, Py_ssize_t i)
+{
+    if (parms && PyList_Check(parms)) {
+        PyObject *p = i < PyList_GET_SIZE(parms) ? PyList_GET_ITEM(parms, i)
+                                                 : NULL;
+        return p && PyDict_Check(p) ? p : NULL;
+    }
+    return parms && PyDict_Check(parms) && i == 0 ? parms : NULL;
+}
+
+/* a Ref, or a list holding one */
+static int holds_ref(PyObject *v)
+{
+    PyTypeObject *ref = (PyTypeObject *)g_ref_cls;
+    if (PyObject_TypeCheck(v, ref))
+        return 1;
+    if (PyList_Check(v))
+        for (Py_ssize_t i = 0; i < PyList_GET_SIZE(v); i++)
+            if (PyObject_TypeCheck(PyList_GET_ITEM(v, i), ref))
+                return 1;
+    return 0;
+}
+
+/* one filter name (an alias resolved): its FN_ index, or -1 */
+static int filter_kind(PyObject *name)
+{
+    if (str_is(name, "FlateDecode") || str_is(name, "Fl"))
+        return FN_FLATE;
+    if (str_is(name, "LZWDecode") || str_is(name, "LZW"))
+        return FN_LZW;
+    if (str_is(name, "ASCIIHexDecode") || str_is(name, "AHx"))
+        return FN_AHX;
+    return -1;
+}
+
+/* Stream(sd, raw).decode() for the chains decoded natively: new bytes, or
+ * NULL with no exception (hand the stream to Stream.decode; counted for
+ * `site`, a FS_ index or -1 for none) or with one that is not an
+ * Exception */
+static PyObject *native_decode(PyObject *sd, PyObject *raw, int site)
+{
+    int why = 0, used[FN_N] = {0};
+    PyObject *filt = NULL, *parms = NULL, *cur = NULL;
+    if (!g_decompressobj || !PyDict_Check(sd) || !PyBytes_CheckExact(raw)) {
+        why = FB_FILTER + 1;
+        goto bail;
+    }
+    /* dict.get("DecodeParms", dict.get("DP")) */
+    filt = PyDict_GetItemWithError(sd, k_Filter);
+    if (!PyErr_Occurred())
+        parms = PyDict_GetItemWithError(sd, k_DecodeParms);
+    if (!parms && !PyErr_Occurred())
+        parms = PyDict_GetItemWithError(sd, k_DP);
+    if (PyErr_Occurred())
+        goto err;
+    if ((filt && holds_ref(filt)) || (parms && holds_ref(parms))) {
+        why = FB_INDIRECT + 1;
+        goto bail;
+    }
+    cur = Py_NewRef(raw);
+    if (!filt || filt == Py_None)
+        return cur;
+    int is_list = PyList_Check(filt);
+    if (!is_list && !PyUnicode_Check(filt)) {
+        why = FB_FILTER + 1; /* "invalid Filter type" */
+        goto bail;
+    }
+    Py_ssize_t nf = is_list ? PyList_GET_SIZE(filt) : 1, fi = 0;
+    for (Py_ssize_t j = 0; j < nf; j++) {
+        PyObject *name = is_list ? PyList_GET_ITEM(filt, j) : filt;
+        if (!PyUnicode_Check(name))
+            continue; /* non-name entries are dropped */
+        PyObject *params = filter_params(parms, fi++), *next = NULL;
+        int kind = filter_kind(name);
+        if (kind < 0) {
+            why = FB_FILTER + 1;
+            goto bail;
+        }
+        used[kind] = 1;
+        if (kind == FN_AHX) {
+            next = ahx_decode(cur);
+            if (!next)
+                goto err;
+        } else {
+            PyObject *dec;
+            if (kind == FN_FLATE) {
+                dec = flate_once(cur);
+                if (!dec) {
+                    why = FB_ZLIB + 1;
+                    goto bail_or_err;
+                }
+            } else {
+                /* int(early) if early is not None else 1, in the range
+                 * decode_lzw hands to lzw_decode */
+                PyObject *ev = params ? PyDict_GetItemWithError(params,
+                                                                k_EarlyChange)
+                                      : NULL;
+                long long early = 1;
+                int overflow = 0;
+                if (PyErr_Occurred())
+                    goto err;
+                if (ev && ev != Py_None) {
+                    early = PyLong_Check(ev)
+                                ? PyLong_AsLongLongAndOverflow(ev, &overflow)
+                                : 1LL << 30;
+                    if (overflow || early <= -(1LL << 30) ||
+                        early >= (1LL << 30)) {
+                        PyErr_Clear();
+                        why = FB_PARAMS + 1;
+                        goto bail;
+                    }
+                }
+                dec = lzw_run((const unsigned char *)PyBytes_AS_STRING(cur),
+                              PyBytes_GET_SIZE(cur), early, g_max_size);
+                if (!dec)
+                    goto err;
+                if (!PyBytes_Check(dec)) { /* the FilterError message */
+                    Py_DECREF(dec);
+                    why = FB_LZW + 1;
+                    goto bail;
+                }
+            }
+            next = predict(dec, params, used, &why);
+            Py_DECREF(dec);
+            if (!next)
+                goto bail_or_err;
+        }
+        Py_SETREF(cur, next);
+    }
+    for (int k = 0; site >= 0 && k < FN_N; k++)
+        g_fnat[site][k] += used[k];
+    return cur;
+bail_or_err:
+    if (PyErr_Occurred())
+        goto err;
+bail:
+    Py_XDECREF(cur);
+    if (site >= 0)
+        g_fpy[site][why - 1]++;
+    return NULL;
+err:
+    Py_XDECREF(cur);
+    if (PyErr_ExceptionMatches(PyExc_Exception)) {
+        PyErr_Clear();
+        if (site >= 0)
+            g_fpy[site][FB_FILTER]++;
+    }
+    return NULL;
+}
+
+/* decode_stream(dict, raw): native_decode's bytes, or None where it
+ * hands the stream to Stream.decode (uncounted) */
+static PyObject *decode_stream(PyObject *self, PyObject *args)
+{
+    PyObject *sd, *raw;
+    if (!PyArg_ParseTuple(args, "OO", &sd, &raw))
+        return NULL;
+    PyObject *dec = native_decode(sd, raw, -1);
+    return dec || PyErr_Occurred() ? dec : Py_NewRef(Py_None);
+}
+
+/* native_decode over a Stream object: new bytes, or NULL with no
+ * exception (Stream.decode's) or with one that is not an Exception */
+static PyObject *stream_native(PyObject *stm, int site)
+{
+    PyObject *sd = PyObject_GetAttr(stm, s_dict);
+    PyObject *raw = sd ? PyObject_GetAttr(stm, s_raw) : NULL;
+    PyObject *dec = raw ? native_decode(sd, raw, site) : NULL;
+    Py_XDECREF(sd);
+    Py_XDECREF(raw);
+    if (!dec && PyErr_Occurred() && PyErr_ExceptionMatches(PyExc_Exception))
+        PyErr_Clear();
+    return dec;
+}
+
+/* setup_filters(zlib.decompressobj, MAX_DECOMPRESSED_SIZE,
+ * MAX_COMPRESSION_RATIO) */
+static PyObject *setup_filters(PyObject *self, PyObject *args)
+{
+    PyObject *dobj;
+    long long size, ratio;
+    if (!PyArg_ParseTuple(args, "OLL", &dobj, &size, &ratio))
+        return NULL;
+    if (!PyCallable_Check(dobj) || size < 0 || ratio < 1) {
+        PyErr_SetString(PyExc_ValueError, "setup_filters: bad arguments");
+        return NULL;
+    }
+    install_global(&g_decompressobj, dobj);
+    g_max_size = size;
+    g_max_ratio = ratio;
+    Py_RETURN_NONE;
+}
+
+/* filter_counts(reset=False): {"native": {site: {filter: streams}},
+ * "python": {site: {reason: streams}}} since the module loaded or the
+ * last reset */
+static PyObject *filter_counts(PyObject *self, PyObject *args)
+{
+    int reset = 0;
+    if (!PyArg_ParseTuple(args, "|p", &reset))
+        return NULL;
+    PyObject *res = PyDict_New(), *nat = PyDict_New(), *py = PyDict_New();
+    int ok = res && nat && py && PyDict_SetItemString(res, "native", nat) == 0 &&
+             PyDict_SetItemString(res, "python", py) == 0;
+    for (int s = 0; ok && s < FS_N; s++) {
+        PyObject *a = PyDict_New(), *b = PyDict_New();
+        ok = a && b && PyDict_SetItemString(nat, fs_names[s], a) == 0 &&
+             PyDict_SetItemString(py, fs_names[s], b) == 0;
+        for (int k = 0; ok && k < FN_N; k++) {
+            PyObject *v = PyLong_FromLongLong(g_fnat[s][k]);
+            ok = v && PyDict_SetItemString(a, fn_names[k], v) == 0;
+            Py_XDECREF(v);
+        }
+        for (int k = 0; ok && k < FB_N; k++) {
+            PyObject *v = PyLong_FromLongLong(g_fpy[s][k]);
+            ok = v && PyDict_SetItemString(b, fb_names[k], v) == 0;
+            Py_XDECREF(v);
+        }
+        Py_XDECREF(a);
+        Py_XDECREF(b);
+    }
+    Py_XDECREF(nat);
+    Py_XDECREF(py);
+    if (!ok) {
+        Py_XDECREF(res);
+        return NULL;
+    }
+    if (reset) {
+        memset(g_fnat, 0, sizeof(g_fnat));
+        memset(g_fpy, 0, sizeof(g_fpy));
+    }
+    return res;
 }
 
 /* a list of exact ints (bool excluded) that fit a Py_ssize_t: 1 with a
@@ -5182,7 +5796,7 @@ static int header_absent(const unsigned char *d, Py_ssize_t n,
  * 0 = bail, -1 = exception.  Nothing is written to `entries` before every
  * check has passed. */
 static int xref_stream_at(const unsigned char *d, Py_ssize_t n,
-                          Py_ssize_t offset, int lenient, PyObject *entries,
+                          Py_ssize_t offset, int lenient, XTab *entries,
                           PyObject **trailer)
 {
     OLex o = {d, n, offset, 0};
@@ -5217,11 +5831,17 @@ static int xref_stream_at(const unsigned char *d, Py_ssize_t n,
             goto out;
         }
     }
-    stm = new_stream(d, start, stop, value);
-    if (!stm)
+    PyObject *raw =
+        PyBytes_FromStringAndSize((const char *)(d + start), stop - start);
+    if (!raw)
         goto out;
-    int raised;
-    dec = stream_decode(stm, Py_None, &raised);
+    dec = native_decode(value, raw, FS_XREF);
+    if (!dec && !PyErr_Occurred()) {
+        int raised;
+        stm = PyObject_CallFunctionObjArgs(g_stream_cls, value, raw, NULL);
+        dec = stm ? stream_decode(stm, Py_None, &raised) : NULL;
+    }
+    Py_DECREF(raw);
     if (!dec) {
         rc = PyErr_Occurred() ? -1 : 0;
         goto out;
@@ -5291,9 +5911,8 @@ static int xref_stream_at(const unsigned char *d, Py_ssize_t n,
         for (Py_ssize_t j = 0; j < count && r < n_rows; j++, r++) {
             const unsigned char *e = m + r * row;
             long long t = xs_field(e, w[0], 1);
-            PyObject *kind = t == 0 ? g_f_str : t == 1 ? g_n_str
-                           : t == 2 ? g_c_str : NULL;
-            if (kind && put_entry(entries, first + j, kind,
+            char kind = t == 0 ? 'f' : t == 1 ? 'n' : t == 2 ? 'c' : 0;
+            if (kind && xt_put(entries, first + j, kind,
                                   xs_field(e + w[0], w[1], 0),
                                   xs_field(e + w[0] + w[1], w[2], 0), 0) < 0)
                 goto out;
@@ -5658,19 +6277,21 @@ static PyObject *recover_xref_c(PyObject *self, PyObject *args)
 /* parse_xref_chain (start_offset None) over the bytes of data_obj: the
  * /Prev chain of traditional sections and xref streams, newest entries
  * and trailer keys first, with the hybrid /XRefStm hop, the cycle guard
- * and the 64-hop cap; recovery when nothing parses.  (entries, trailer,
- * mode), None (bail), or NULL (exception). */
-static PyObject *chain_of(PyObject *data_obj, int lenient)
+ * and the 64-hop cap; recovery when nothing parses.  The entries go into
+ * the empty table *entries.  1 with *trailer_out (new) and *mode (the
+ * s_strict or s_recovered singleton), 0 = bail, -1 = exception. */
+static int chain_tab(PyObject *data_obj, int lenient, XTab *entries,
+                     PyObject **trailer_out, PyObject **mode)
 {
     const unsigned char *d = (const unsigned char *)PyBytes_AS_STRING(data_obj);
     Py_ssize_t n = PyBytes_GET_SIZE(data_obj), offset = -1;
     int st = c_startxref(d, n, &offset);
     if (st < 0)
-        Py_RETURN_NONE;
-    PyObject *entries = PyDict_New(), *trailer = PyDict_New(), *res;
+        return 0;
+    PyObject *trailer = PyDict_New();
     Py_ssize_t seen[64];
     int hops = 0, ok = 0;
-    if (!entries || !trailer)
+    if (!trailer)
         goto err;
     while (st == 1 && 0 <= offset && offset < n && hops < 64) {
         int cyc = 0;
@@ -5742,46 +6363,80 @@ static PyObject *chain_of(PyObject *data_obj, int lenient)
         if (verdict == 0)
             break;
     }
-    if (!ok || PyDict_GET_SIZE(entries) == 0) {
-        Py_DECREF(entries);
+    if (!ok || entries->n == 0) {
         Py_DECREF(trailer);
+        xt_free(entries);
         PyObject *r = recover(d, n);
         if (!r || r == Py_None)
-            return r;
-        res = Py_BuildValue("(OOO)", PyTuple_GET_ITEM(r, 0),
-                            PyTuple_GET_ITEM(r, 1), s_recovered);
+            return r ? (Py_DECREF(r), 0) : -1;
+        int rc = xt_from_dict(entries, PyTuple_GET_ITEM(r, 0));
+        if (rc == 1) {
+            *trailer_out = Py_NewRef(PyTuple_GET_ITEM(r, 1));
+            *mode = s_recovered;
+        } else
+            xt_free(entries);
         Py_DECREF(r);
-        return res;
+        return rc;
     }
-    return Py_BuildValue("(NNO)", entries, trailer, s_strict);
+    *trailer_out = trailer;
+    *mode = s_strict;
+    return 1;
 bail:
-    Py_XDECREF(entries);
+    xt_free(entries);
     Py_XDECREF(trailer);
-    Py_RETURN_NONE;
+    return 0;
 err:
-    Py_XDECREF(entries);
+    xt_free(entries);
     Py_XDECREF(trailer);
-    return NULL;
+    return -1;
 }
 
+/* xref_chain(data, lenient=True): chain_tab's (entries, trailer, mode)
+ * with the entries as the xref dict, or None (bail) */
 static PyObject *xref_chain(PyObject *self, PyObject *args)
 {
-    PyObject *data_obj;
+    PyObject *data_obj, *trailer, *mode;
     int lenient = 1;
     if (!PyArg_ParseTuple(args, "O|p", &data_obj, &lenient))
         return NULL;
     if (!PyBytes_Check(data_obj))
         Py_RETURN_NONE;
-    return chain_of(data_obj, lenient);
+    XTab t = {0};
+    int rc = chain_tab(data_obj, lenient, &t, &trailer, &mode);
+    if (rc <= 0)
+        return rc < 0 ? NULL : Py_NewRef(Py_None);
+    PyObject *entries = xt_dict(&t);
+    xt_free(&t);
+    if (!entries) {
+        Py_DECREF(trailer);
+        return NULL;
+    }
+    return Py_BuildValue("(NNO)", entries, trailer, mode);
 }
 
-/* one reader's state for the duration of a C call (borrowed views into
- * the PdfReader's slots, held by new refs) */
+/* PdfReader's slots, in the order reader_new takes their values */
+enum { RS_DATA, RS_VERSION, RS_XREF, RS_TRAILER, RS_MODE, RS_LENIENT,
+       RS_DECRYPTOR, RS_RECIPIENT, RS_CACHE, RS_OBJSTM, RS_RESOLVING,
+       RS_FIC, RS_MEMO, RS_N };
+static PyObject *reader_new(PyObject *vals[RS_N]); /* below */
+
+/* one reader's state for the duration of a C call.  Over a PdfReader
+ * (doc_open, tab 0): borrowed views into its slots, held by new refs.  In
+ * the batch loop (tab 1) there is no reader yet: the xref table holds the
+ * entries, the fetched objects and the object-stream members, res the
+ * (num, gen) pairs being fetched (the reader's _resolving), and vals the
+ * reader's other slots, until doc_reader builds the reader from them
+ * (tab -1: the reader is the doc's own) and the fetch goes on over its
+ * dicts. */
 typedef struct {
     PyObject *reader, *data, *xref, *cache, *resolving, *objstm;
     const unsigned char *d;
     Py_ssize_t n;
-    int lenient;
+    int lenient, tab;
+    XTab xt;
+    long long *res; /* num, gen pairs */
+    Py_ssize_t nres, capres;
+    PyObject *vals[RS_N];
 } Doc;
 
 static void doc_close(Doc *doc)
@@ -5791,6 +6446,106 @@ static void doc_close(Doc *doc)
     Py_CLEAR(doc->cache);
     Py_CLEAR(doc->resolving);
     Py_CLEAR(doc->objstm);
+    xt_free(&doc->xt);
+    free(doc->res);
+    doc->res = NULL;
+    for (int i = 0; i < RS_N; i++)
+        Py_CLEAR(doc->vals[i]);
+    if (doc->tab >= 0) /* a reader doc_reader built is the doc's own */
+        doc->reader = NULL;
+    else
+        Py_CLEAR(doc->reader);
+}
+
+static PyObject *okey(long long num, long long gen)
+{
+    return Py_BuildValue("(LL)", num, gen);
+}
+
+/* the PdfReader of the document: in the batch loop, built on first use
+ * from the tables (borrowed; NULL on an exception) */
+static PyObject *doc_reader(Doc *doc)
+{
+    if (doc->tab <= 0)
+        return doc->reader;
+    PyObject *xref = xt_dict(&doc->xt), *cache = PyDict_New(),
+             *objstm = PyDict_New(), *resolving = PySet_New(NULL);
+    int ok = xref && cache && objstm && resolving;
+    for (Py_ssize_t k = 0; ok && k < doc->xt.n; k++) {
+        XEnt *x = &doc->xt.e[k];
+        PyObject *key = x->obj ? okey(x->num, x->gen) : NULL;
+        PyObject *num = x->members ? PyLong_FromLongLong(x->num) : NULL;
+        ok = (!x->obj || (key && PyDict_SetItem(cache, key, x->obj) == 0)) &&
+             (!x->members ||
+              (num && PyDict_SetItem(objstm, num, x->members) == 0));
+        Py_XDECREF(key);
+        Py_XDECREF(num);
+    }
+    for (Py_ssize_t i = 0; ok && i < doc->nres; i++) {
+        PyObject *key = okey(doc->res[2 * i], doc->res[2 * i + 1]);
+        ok = key && PySet_Add(resolving, key) == 0;
+        Py_XDECREF(key);
+    }
+    if (!ok) {
+        Py_XDECREF(xref);
+        Py_XDECREF(cache);
+        Py_XDECREF(objstm);
+        Py_XDECREF(resolving);
+        return NULL;
+    }
+    doc->xref = Py_NewRef(xref);
+    doc->cache = Py_NewRef(cache);
+    doc->objstm = Py_NewRef(objstm);
+    doc->resolving = Py_NewRef(resolving);
+    doc->vals[RS_XREF] = xref;
+    doc->vals[RS_CACHE] = cache;
+    doc->vals[RS_OBJSTM] = objstm;
+    doc->vals[RS_RESOLVING] = resolving;
+    doc->reader = reader_new(doc->vals); /* steals vals */
+    memset(doc->vals, 0, sizeof(doc->vals));
+    xt_free(&doc->xt);
+    doc->nres = 0;
+    doc->tab = -1;
+    return doc->reader;
+}
+
+/* the fetch of (num, gen) starts (add) or ends: key is the (num, gen)
+ * tuple over a reader, NULL in the batch loop */
+static int res_mark(Doc *doc, PyObject *key, long long num, long long gen,
+                    int add)
+{
+    if (doc->tab <= 0) {
+        PyObject *k = key ? Py_NewRef(key) : okey(num, gen);
+        int rc = !k ? -1 : add ? PySet_Add(doc->resolving, k)
+                               : PySet_Discard(doc->resolving, k) < 0 ? -1 : 0;
+        Py_XDECREF(k);
+        return rc;
+    }
+    if (!add) { /* the marks nest: the last one with these numbers */
+        for (Py_ssize_t i = doc->nres - 1; i >= 0; i--)
+            if (doc->res[2 * i] == num && doc->res[2 * i + 1] == gen) {
+                memmove(doc->res + 2 * i, doc->res + 2 * i + 2,
+                        sizeof(long long) * (size_t)(2 * (doc->nres - i - 1)));
+                doc->nres--;
+                break;
+            }
+        return 0;
+    }
+    if (doc->nres == doc->capres) {
+        Py_ssize_t cap = doc->capres ? doc->capres * 2 : 8;
+        long long *r = (long long *)realloc(doc->res,
+                                            sizeof(long long) * 2 * (size_t)cap);
+        if (!r) {
+            PyErr_NoMemory();
+            return -1;
+        }
+        doc->res = r;
+        doc->capres = cap;
+    }
+    doc->res[2 * doc->nres] = num;
+    doc->res[2 * doc->nres + 1] = gen;
+    doc->nres++;
+    return 0;
 }
 
 /* 1 = ready, 0 = bail (encrypted, a reader still being built, unexpected
@@ -5840,23 +6595,24 @@ static int doc_open(Doc *doc, PyObject *reader)
 static PyObject *doc_resolve(Doc *doc, PyObject *v, int *bail);
 
 /* reader._capture_stream without a decryptor: the payload after the
- * `stream` keyword at pos of the object `key`.  An indirect /Length
- * resolves with key in _resolving, as get_object holds it there.  New
- * Stream, or NULL with *bail / exception (a strict /Length mismatch or an
- * unterminated stream raises in Python, which then rescans or
- * propagates: bail). */
-static PyObject *doc_stream(Doc *doc, PyObject *key, PyObject *value,
-                            Py_ssize_t pos, int *bail)
+ * `stream` keyword at pos of the object (num, gen) (key: see res_mark).
+ * An indirect /Length resolves with the object marked as being fetched,
+ * as get_object holds it in _resolving.  New Stream, or NULL with *bail /
+ * exception (a strict /Length mismatch or an unterminated stream raises
+ * in Python, which then rescans or propagates: bail). */
+static PyObject *doc_stream(Doc *doc, PyObject *key, long long num,
+                            long long gen, PyObject *value, Py_ssize_t pos,
+                            int *bail)
 {
     Py_ssize_t start, stop;
     PyObject *length = PyDict_GetItemWithError(value, k_Length), *res = NULL;
     if (!length && PyErr_Occurred())
         return NULL;
     if (length && PyObject_TypeCheck(length, (PyTypeObject *)g_ref_cls)) {
-        if (PySet_Add(doc->resolving, key) < 0)
+        if (res_mark(doc, key, num, gen, 1) < 0)
             return NULL;
         res = doc_resolve(doc, length, bail);
-        if (PySet_Discard(doc->resolving, key) < 0)
+        if (res_mark(doc, key, num, gen, 0) < 0)
             Py_CLEAR(res);
         if (!res)
             return NULL;
@@ -5875,16 +6631,17 @@ static PyObject *doc_fetch(Doc *doc, PyObject *num, PyObject *gen, int *bail);
 
 /* PdfReader._get_compressed_object's container parse: the {number:
  * value} members of object stream `container`, the dict the reader keeps
- * in _objstm_cache.  Python holds `key` (the member being fetched) in
- * _resolving throughout, and so does this.  New ref, or NULL with *bail /
- * an exception. */
-static PyObject *objstm_members(Doc *doc, PyObject *key, PyObject *container,
+ * in _objstm_cache.  Python holds the member being fetched, (num, gen)
+ * (key: see res_mark), in _resolving throughout, and so does this.  New
+ * ref, or NULL with *bail / an exception. */
+static PyObject *objstm_members(Doc *doc, PyObject *key, long long num,
+                                long long gen, PyObject *container,
                                 int *bail)
 {
     PyObject *zero = NULL, *stm = NULL, *resolve = NULL, *dec = NULL,
              *parsed = NULL;
     long long *pairs = NULL;
-    if (PySet_Add(doc->resolving, key) < 0)
+    if (res_mark(doc, key, num, gen, 1) < 0)
         return NULL;
     zero = PyLong_FromLong(0);
     stm = zero ? doc_fetch(doc, container, zero, bail) : NULL;
@@ -5909,8 +6666,12 @@ static PyObject *objstm_members(Doc *doc, PyObject *key, PyObject *container,
         goto done;
     }
     int raised;
-    resolve = PyObject_GetAttr(doc->reader, s_resolve);
-    dec = resolve ? stream_decode(stm, resolve, &raised) : NULL;
+    dec = stream_native(stm, FS_OBJSTM);
+    if (!dec && !PyErr_Occurred()) {
+        PyObject *reader = doc_reader(doc);
+        resolve = reader ? PyObject_GetAttr(reader, s_resolve) : NULL;
+        dec = resolve ? stream_decode(stm, resolve, &raised) : NULL;
+    }
     if (!dec) {
         *bail = !PyErr_Occurred();
         Py_CLEAR(parsed);
@@ -5953,7 +6714,7 @@ static PyObject *objstm_members(Doc *doc, PyObject *key, PyObject *container,
     }
 done:
     free(pairs);
-    if (PySet_Discard(doc->resolving, key) < 0)
+    if (res_mark(doc, key, num, gen, 0) < 0)
         Py_CLEAR(parsed);
     Py_XDECREF(zero);
     Py_XDECREF(stm);
@@ -5962,10 +6723,135 @@ done:
     return parsed;
 }
 
+/* an exact int as a long long: 1, else 0 */
+static int exact_ll(PyObject *v, long long *out)
+{
+    int overflow = 0;
+    if (!PyLong_CheckExact(v))
+        return 0;
+    *out = PyLong_AsLongLongAndOverflow(v, &overflow);
+    if (overflow || (*out == -1 && PyErr_Occurred())) {
+        PyErr_Clear();
+        return 0;
+    }
+    return 1;
+}
+
+/* get_object over the batch loop's tables (doc->tab > 0): see doc_fetch */
+static PyObject *tab_fetch(Doc *doc, long long num, long long gen, int *bail)
+{
+    XEnt *x = xt_find(&doc->xt, num);
+    if (x && x->obj) {
+        if (x->gen == gen)
+            return Py_NewRef(x->obj);
+        *bail = 1; /* a second generation of one number: Python's */
+        return NULL;
+    }
+    for (Py_ssize_t i = 0; i < doc->nres; i++)
+        if (doc->res[2 * i] == num && doc->res[2 * i + 1] == gen) {
+            *bail = 1; /* a reference cycle */
+            return NULL;
+        }
+    if (!x) { /* a missing entry is filled from a header scan in Python */
+        *bail = 1;
+        return NULL;
+    }
+    PyObject *obj = NULL;
+    if (x->kind == 'f') {
+        obj = Py_NewRef(Py_None);
+    } else if (x->kind == 'n') {
+        OLex o;
+        o.d = doc->d;
+        o.n = doc->n;
+        o.pos = x->a >= 0 ? (Py_ssize_t)x->a : 0;
+        o.bail = 0;
+        long long pnum, pgen;
+        PyObject *value;
+        int has_stream;
+        int rc = o_indirect(&o, &pnum, &pgen, &value, &has_stream);
+        if (rc <= 0) {
+            *bail = rc == 0;
+            return NULL;
+        }
+        if (pnum != num) { /* wrong object at the offset: Python rescans */
+            Py_DECREF(value);
+            *bail = 1;
+            return NULL;
+        }
+        if (has_stream) {
+            obj = doc_stream(doc, NULL, num, gen, value, o.pos, bail);
+            Py_DECREF(value);
+            if (!obj)
+                return NULL;
+        } else
+            obj = value;
+    } else {
+        /* _get_compressed_object (an entry naming its own number as
+         * container: Python) */
+        long long cnum = x->a;
+        if (cnum == num) {
+            *bail = 1;
+            return NULL;
+        }
+        XEnt *cx = xt_find(&doc->xt, cnum);
+        PyObject *parsed = cx && cx->members ? Py_NewRef(cx->members) : NULL;
+        PyObject *container = PyLong_FromLongLong(cnum);
+        if (!container) {
+            Py_XDECREF(parsed);
+            return NULL;
+        }
+        if (!parsed) {
+            parsed = objstm_members(doc, NULL, num, gen, container, bail);
+            /* the fetch may have built the reader: its dict, else the
+             * container's entry */
+            int rc = 0;
+            if (parsed && doc->tab < 0)
+                rc = PyDict_SetItem(doc->objstm, container, parsed);
+            else if (parsed && (cx = xt_find(&doc->xt, cnum)) != NULL) {
+                Py_XSETREF(cx->members, Py_NewRef(parsed));
+            }
+            if (rc < 0)
+                Py_CLEAR(parsed);
+        }
+        Py_DECREF(container);
+        if (!parsed)
+            return NULL;
+        PyObject *key = PyLong_FromLongLong(num);
+        obj = key ? PyDict_GetItemWithError(parsed, key) : NULL;
+        Py_XDECREF(key);
+        if (!obj && !PyErr_Occurred())
+            obj = Py_None;
+        Py_XINCREF(obj);
+        Py_DECREF(parsed);
+        if (!obj)
+            return NULL;
+    }
+    /* cached where the reader keeps it, or in the entry */
+    if (doc->tab < 0) {
+        PyObject *key = okey(num, gen);
+        int rc = key ? PyDict_SetItem(doc->cache, key, obj) : -1;
+        Py_XDECREF(key);
+        if (rc < 0)
+            Py_CLEAR(obj);
+    } else if ((x = xt_find(&doc->xt, num)) != NULL) {
+        Py_XSETREF(x->obj, Py_NewRef(obj));
+        x->gen = gen;
+    }
+    return obj;
+}
+
 /* PdfReader.get_object(num, gen) for cached, free, in-use and compressed
  * entries: new ref, or NULL with *bail set (no exception) / an exception */
 static PyObject *doc_fetch(Doc *doc, PyObject *num, PyObject *gen, int *bail)
 {
+    if (doc->tab > 0) {
+        long long n, g;
+        if (!exact_ll(num, &n) || !exact_ll(gen, &g)) {
+            *bail = 1;
+            return NULL;
+        }
+        return tab_fetch(doc, n, g, bail);
+    }
     PyObject *key = PyTuple_Pack(2, num, gen);
     if (!key)
         return NULL;
@@ -6019,7 +6905,7 @@ static PyObject *doc_fetch(Doc *doc, PyObject *num, PyObject *gen, int *bail)
             goto done;
         }
         if (has_stream) {
-            obj = doc_stream(doc, key, value, o.pos, bail);
+            obj = doc_stream(doc, key, 0, 0, value, o.pos, bail);
             Py_DECREF(value);
             if (!obj)
                 goto done;
@@ -6040,7 +6926,7 @@ static PyObject *doc_fetch(Doc *doc, PyObject *num, PyObject *gen, int *bail)
             Py_INCREF(parsed);
         else if (!PyErr_Occurred()) {
             Py_INCREF(container); /* the decode runs Python code */
-            parsed = objstm_members(doc, key, container, bail);
+            parsed = objstm_members(doc, key, 0, 0, container, bail);
             if (parsed && PyDict_SetItem(doc->objstm, container, parsed) < 0)
                 Py_CLEAR(parsed);
             Py_DECREF(container);
@@ -6312,9 +7198,9 @@ static PyObject *flatten_pages(PyObject *self, PyObject *args)
 }
 
 /* one content stream's bytes (pages._safe_decode): unfiltered payloads
- * natively, anything with a /Filter or decode parameters through the
+ * and the chains native_decode serves natively, any other through the
  * Python helper.  New ref or NULL (exception). */
-static PyObject *content_bytes(PyObject *reader, PyObject *stm,
+static PyObject *content_bytes(Doc *doc, PyObject *stm,
                                PyObject *safe_decode)
 {
     PyObject *sd = PyObject_GetAttr(stm, s_dict);
@@ -6339,7 +7225,12 @@ static PyObject *content_bytes(PyObject *reader, PyObject *stm,
     Py_DECREF(sd);
     if (plain)
         return PyObject_GetAttr(stm, s_raw);
-    return PyObject_CallFunctionObjArgs(safe_decode, reader, stm, NULL);
+    PyObject *dec = stream_native(stm, FS_CONTENT);
+    if (dec || PyErr_Occurred())
+        return dec;
+    PyObject *reader = doc_reader(doc);
+    return reader ? PyObject_CallFunctionObjArgs(safe_decode, reader, stm, NULL)
+                  : NULL;
 }
 
 /* the joined /Contents bytes of an open document (contents: the page
@@ -6370,7 +7261,7 @@ static PyObject *doc_contents(Doc *doc, PyObject *contents,
         }
         int r = 0;
         if (PyObject_TypeCheck(obj, (PyTypeObject *)g_stream_cls)) {
-            PyObject *b = content_bytes(doc->reader, obj, safe_decode);
+            PyObject *b = content_bytes(doc, obj, safe_decode);
             r = b ? PyList_Append(parts, b) : -1;
             Py_XDECREF(b);
         }
@@ -6420,14 +7311,11 @@ typedef struct {
     unsigned char first, last;
 } LzwEnt;
 
-static PyObject *lzw_decode(PyObject *self, PyObject *args)
+static PyObject *lzw_run(const unsigned char *p, Py_ssize_t n,
+                         long long early, long long cap)
 {
-    Py_buffer buf;
-    long long early, cap;
-    if (!PyArg_ParseTuple(args, "y*LL", &buf, &early, &cap))
-        return NULL;
     LzwEnt *tab = (LzwEnt *)malloc(4096 * sizeof(LzwEnt));
-    Py_ssize_t ocap = buf.len * 4 + 256, olen = 0;
+    Py_ssize_t ocap = n * 4 + 256, olen = 0;
     unsigned char *out = (unsigned char *)malloc((size_t)ocap);
     PyObject *res = NULL;
     if (!tab || !out) {
@@ -6439,11 +7327,10 @@ static PyObject *lzw_decode(PyObject *self, PyObject *args)
         tab[i].len = 1;
         tab[i].first = tab[i].last = (unsigned char)i;
     }
-    const unsigned char *p = (const unsigned char *)buf.buf;
     long long tlen = 258;
     int width = 9, prev = -1, bitcnt = 0;
     unsigned long bitbuf = 0;
-    for (Py_ssize_t i = 0; i < buf.len; i++) {
+    for (Py_ssize_t i = 0; i < n; i++) {
         bitbuf = ((bitbuf << 8) | p[i]) & 0xFFFFFFUL;
         bitcnt += 8;
         while (bitcnt >= width) {
@@ -6509,6 +7396,17 @@ finish:
 done:
     free(tab);
     free(out);
+    return res;
+}
+
+static PyObject *lzw_decode(PyObject *self, PyObject *args)
+{
+    Py_buffer buf;
+    long long early, cap;
+    if (!PyArg_ParseTuple(args, "y*LL", &buf, &early, &cap))
+        return NULL;
+    PyObject *res = lzw_run((const unsigned char *)buf.buf, buf.len, early,
+                            cap);
     PyBuffer_Release(&buf);
     return res;
 }
@@ -7606,6 +8504,7 @@ static PyObject *parse_cmap(PyObject *self, PyObject *data)
 }
 
 static PyObject *g_extract_font_info; /* fonts.extract_font_info */
+static PyObject *g_no_refs; /* reader._NoRefs(): resolve is the identity */
 static PyObject *g_fallback_enc;      /* fonts.fallback_encoding */
 
 /* setup_fonts(CMap, glyph_name_to_unicode, winansi, macroman, afm_tables,
@@ -8143,43 +9042,57 @@ typedef struct {
     Doc doc;
     PyObject *fic, *dmemo, *safe_decode; /* _fontinfo_cache, run memo */
     PyObject *spans, *texts, *frags;     /* the DocResult lists */
-    PyObject *shared_fi; /* extract_batch's {direct_key: FontInfo}, or NULL */
+    PyObject *shared_fi; /* extract_batch's {font_key: FontInfo}, or NULL */
     double nl_thr, sp_thr, tj_thr;
     int inc_art;
 } Pages;
 
-static PyObject *direct_key(PyObject *v, int depth);
+/* A hashable key for a font dict, equal for two dicts extract_font_info
+ * builds the same FontInfo from: a dict or list as its type and its
+ * items' keys in order, a scalar as (type, value), a float by its bits.
+ * With a document (the batch loop), a reference is (Ref, the key of the
+ * object it resolves to) and a stream (Stream, its dict's key, its raw
+ * bytes, up to FK_RAW_MAX of them); without one, a value that holds a
+ * reference has no key.  New ref; NULL without an exception for no key
+ * (another object, a fetch that bails or raises, a nest deeper than 16,
+ * more than FK_NODES values). */
+#define FK_RAW_MAX 4096
+#define FK_NODES 4096
 
-/* t[i] = direct_key(v): 0, or -1 (v not keyed, or an exception) */
-static int set_key(PyObject *t, Py_ssize_t i, PyObject *v, int depth)
+typedef struct {
+    Doc *doc;
+    int nodes;
+} FKey;
+
+static PyObject *font_key(FKey *f, PyObject *v, int depth);
+
+/* t[i] = font_key(v): 0, or -1 (v not keyed, or an exception) */
+static int set_key(FKey *f, PyObject *t, Py_ssize_t i, PyObject *v, int depth)
 {
-    PyObject *k = direct_key(v, depth + 1);
+    PyObject *k = font_key(f, v, depth + 1);
     if (!k)
         return -1;
     PyTuple_SET_ITEM(t, i, k);
     return 0;
 }
 
-/* a hashable key for a PDF value that holds no reference: a dict or list
- * as its type and its items' keys in order, a scalar as (type, value), a
- * float by its bits.  New ref; NULL without an exception when v holds a
- * Ref, a Stream or any other object, or nests deeper than 16. */
-static PyObject *direct_key(PyObject *v, int depth)
+static PyObject *font_key(FKey *f, PyObject *v, int depth)
 {
-    if (depth > 16)
+    if (depth > 16 || ++f->nodes > FK_NODES)
         return NULL;
     PyObject *t, *k, *x;
     if (PyDict_CheckExact(v)) {
         t = PyTuple_New(1 + 2 * PyDict_GET_SIZE(v));
         Py_ssize_t pos = 0, i = 1;
         while (t && PyDict_Next(v, &pos, &k, &x)) {
-            if (set_key(t, i++, k, depth) < 0 || set_key(t, i++, x, depth) < 0)
+            if (set_key(f, t, i++, k, depth) < 0 ||
+                set_key(f, t, i++, x, depth) < 0)
                 Py_CLEAR(t);
         }
     } else if (PyList_CheckExact(v)) {
         t = PyTuple_New(1 + PyList_GET_SIZE(v));
         for (Py_ssize_t i = 0; t && i < PyList_GET_SIZE(v); i++)
-            if (set_key(t, i + 1, PyList_GET_ITEM(v, i), depth) < 0)
+            if (set_key(f, t, i + 1, PyList_GET_ITEM(v, i), depth) < 0)
                 Py_CLEAR(t);
     } else if (PyFloat_CheckExact(v)) {
         double d = PyFloat_AS_DOUBLE(v);
@@ -8188,6 +9101,30 @@ static PyObject *direct_key(PyObject *v, int depth)
     } else if (PyUnicode_Check(v) || PyBytes_CheckExact(v) ||
                PyLong_CheckExact(v) || PyBool_Check(v) || v == Py_None) {
         return PyTuple_Pack(2, (PyObject *)Py_TYPE(v), v);
+    } else if (f->doc && PyObject_TypeCheck(v, (PyTypeObject *)g_ref_cls)) {
+        int bail = 0;
+        PyObject *r = doc_resolve(f->doc, v, &bail);
+        if (!r) {
+            if (PyErr_Occurred() && PyErr_ExceptionMatches(PyExc_Exception))
+                PyErr_Clear();
+            return NULL;
+        }
+        k = font_key(f, r, depth + 1);
+        Py_DECREF(r);
+        return k ? Py_BuildValue("(ON)", (PyObject *)Py_TYPE(v), k) : NULL;
+    } else if (f->doc &&
+               PyObject_TypeCheck(v, (PyTypeObject *)g_stream_cls)) {
+        PyObject *sd = PyObject_GetAttr(v, s_dict);
+        PyObject *raw = sd ? PyObject_GetAttr(v, s_raw) : NULL;
+        k = raw && PyBytes_CheckExact(raw) &&
+                    PyBytes_GET_SIZE(raw) <= FK_RAW_MAX
+                ? font_key(f, sd, depth + 1)
+                : NULL;
+        t = k ? PyTuple_Pack(3, (PyObject *)Py_TYPE(v), k, raw) : NULL;
+        Py_XDECREF(k);
+        Py_XDECREF(sd);
+        Py_XDECREF(raw);
+        return t;
     } else
         return NULL;
     if (t)
@@ -8196,9 +9133,11 @@ static PyObject *direct_key(PyObject *v, int depth)
 }
 
 /* extract_font_info(resolve(fobj)) for a dict, else None (new ref).  In
- * extract_batch a dict with no reference in it builds the same FontInfo
- * in every document (extract_font_info resolves only references), so
- * its FontInfo is shared through P->shared_fi for the whole batch. */
+ * extract_batch, font dicts with equal font_keys build the same FontInfo
+ * in every document (extract_font_info reads only the dict and the
+ * objects its references resolve to), so the FontInfo is shared through
+ * P->shared_fi for the whole batch; a dict that holds no reference needs
+ * no reader for its build either: g_no_refs stands in for it. */
 static PyObject *font_info(Pages *P, PyObject *fobj, int *bail)
 {
     PyObject *fd = doc_resolve(&P->doc, fobj, bail);
@@ -8206,13 +9145,25 @@ static PyObject *font_info(Pages *P, PyObject *fobj, int *bail)
         return NULL;
     PyObject *fi = Py_None, *key = NULL;
     if (PyDict_Check(fd)) {
-        key = P->shared_fi ? direct_key(fd, 0) : NULL;
+        FKey f = {NULL, 0};
+        int refs = 0;
+        if (P->shared_fi) {
+            key = font_key(&f, fd, 0);
+            if (!key && !PyErr_Occurred()) {
+                FKey g = {&P->doc, 0};
+                refs = 1;
+                key = font_key(&g, fd, 0);
+            }
+        }
         fi = key ? PyDict_GetItemWithError(P->shared_fi, key) : NULL;
         if (fi)
             Py_INCREF(fi);
         else if (!PyErr_Occurred()) {
-            fi = PyObject_CallFunctionObjArgs(g_extract_font_info, fd,
-                                              P->doc.reader, NULL);
+            PyObject *reader =
+                key && !refs ? g_no_refs : doc_reader(&P->doc);
+            fi = reader ? PyObject_CallFunctionObjArgs(g_extract_font_info,
+                                                       fd, reader, NULL)
+                        : NULL;
             if (fi && key && PyDict_SetItem(P->shared_fi, key, fi) < 0)
                 Py_CLEAR(fi);
         }
@@ -8447,22 +9398,25 @@ static PyObject *run_pages(PyObject *self, PyObject *args)
 
 /* ======================================================================== */
 /* The batch loop: extract_batch runs extract.extract_batch's per-document
- * loop over one Arrow batch in one call.  Per document it does what
- * extract_document_spans does: the latin-1 payload decode, the PdfReader
- * construction (allocated here with its slots filled, after the header
- * check, the xref chain and the /Root and /Encrypt checks), the page tree
- * and the page loop (run_one per page); for an HTML payload the tokenizer
- * and extract_html_spans' filter; and the text/media passthrough.  It
- * appends straight into the batch's span and per-document columns and
- * times wall_ms itself.  A document it is not certain about is handed
+ * loop over one Arrow batch in one call, reading the input columns'
+ * buffers and writing the output columns' buffers.  Per document it does
+ * what extract_document_spans does: the latin-1 payload decode (from the
+ * UTF-8 column data straight into the document's bytes), the xref chain
+ * into the document's C table after the header check, the /Root and
+ * /Encrypt checks, the page tree and the page loop (run_one per page);
+ * for an HTML payload the tokenizer and extract_html_spans' filter; and
+ * the text/media passthrough, copied column to column.  The PdfReader is
+ * built from the tables (doc_reader) only when a Python step needs it.
+ * It times wall_ms itself.  A document it is not certain about is handed
  * back whole, before anything of it is kept, to the Python row function
  * (extract_document_spans with a fresh reader, which stays the
  * authority): a password, a b85: or non-latin-1 payload, a reader that
- * raises or bails (a missing header or /Root, an xref chain xref_chain
+ * raises or bails (a missing header or /Root, an xref chain chain_tab
  * bails on, a recovered reader in strict mode), encryption, a page tree
- * flatten_pages does not serve, a page run_one bails on, and an HTML
- * document html_events bails on.  The documents served and handed back,
- * by reason, are counted in g_batch_counts (batch_counts reads them). */
+ * flatten_doc does not serve, a page run_one bails on, an HTML document
+ * html_events bails on, and a span that does not encode as UTF-8.  The
+ * documents served and handed back, by reason, are counted in
+ * g_batch_counts (batch_counts reads them). */
 
 enum { HB_SERVED, HB_PASSWORD, HB_B85, HB_PAYLOAD, HB_READER, HB_ENCRYPTED,
        HB_TREE, HB_PAGE, HB_HTML, HB_N };
@@ -8471,10 +9425,7 @@ static const char *const hb_names[HB_N] = {
     "page", "html"};
 static long long g_batch_counts[HB_N];
 
-/* PdfReader's slots, in the order reader_new takes their values */
-enum { RS_DATA, RS_VERSION, RS_XREF, RS_TRAILER, RS_MODE, RS_LENIENT,
-       RS_DECRYPTOR, RS_RECIPIENT, RS_CACHE, RS_OBJSTM, RS_RESOLVING,
-       RS_FIC, RS_MEMO, RS_N };
+/* PdfReader's slot names, in RS_ order */
 static const char *const rs_names[RS_N] = {
     "data", "version", "xref", "trailer", "mode", "lenient", "decryptor",
     "_recipient_key", "_cache", "_objstm_cache", "_resolving",
@@ -8483,11 +9434,15 @@ static PyTypeObject *g_reader_cls;
 static Py_ssize_t g_reader_off[RS_N];
 static PyObject *k_Encrypt, *g_b85_str;
 
-/* setup_reader(PdfReader): record the offset of each slot reader_new
- * fills.  A class whose slots are not exactly these object slots raises
- * (the C kernel then stays off). */
-static PyObject *setup_reader(PyObject *self, PyObject *cls)
+/* setup_reader(PdfReader, no_refs): record the offset of each slot
+ * reader_new fills, and the stand-in reader font_info passes for a font
+ * dict that holds no reference.  A class whose slots are not exactly
+ * these object slots raises (the C kernel then stays off). */
+static PyObject *setup_reader(PyObject *self, PyObject *args)
 {
+    PyObject *cls, *no_refs;
+    if (!PyArg_ParseTuple(args, "OO", &cls, &no_refs))
+        return NULL;
     if (!PyType_Check(cls)) {
         PyErr_SetString(PyExc_TypeError, "PdfReader must be a class");
         return NULL;
@@ -8518,6 +9473,7 @@ static PyObject *setup_reader(PyObject *self, PyObject *cls)
         }
     }
     install_global((PyObject **)&g_reader_cls, cls);
+    install_global(&g_no_refs, no_refs);
     Py_RETURN_NONE;
 }
 
@@ -8563,6 +9519,223 @@ static int pdf_header(const unsigned char *d, Py_ssize_t n, long *maj,
     return 0;
 }
 
+/* ---- Arrow columns ------------------------------------------------------ *
+ * The input string columns are read through the buffer protocol: an
+ * array's offset, validity bitmap (or none), int32 offsets and UTF-8
+ * data.  The output columns are built in malloc'd buffers and handed
+ * back as bytes for pa.Array.from_buffers. */
+
+typedef struct {
+    Py_buffer valid, offs, data;
+    int has_valid, open;
+    Py_ssize_t off, n_offs; /* array offset; int32 offsets in the buffer */
+} SIn;
+
+static void sin_close(SIn *s)
+{
+    if (!s->open)
+        return;
+    if (s->has_valid)
+        PyBuffer_Release(&s->valid);
+    PyBuffer_Release(&s->offs);
+    PyBuffer_Release(&s->data);
+    s->open = 0;
+}
+
+/* t = (offset, validity or None, offsets, data): 0, or -1 (exception) */
+static int sin_open(SIn *s, PyObject *t)
+{
+    memset(s, 0, sizeof(*s));
+    PyObject *valid, *offs, *data;
+    if (!PyArg_ParseTuple(t, "nOOO", &s->off, &valid, &offs, &data))
+        return -1;
+    s->has_valid = valid != Py_None;
+    if (s->has_valid && PyObject_GetBuffer(valid, &s->valid, PyBUF_SIMPLE) < 0)
+        return -1;
+    if (PyObject_GetBuffer(offs, &s->offs, PyBUF_SIMPLE) < 0) {
+        if (s->has_valid)
+            PyBuffer_Release(&s->valid);
+        return -1;
+    }
+    if (PyObject_GetBuffer(data, &s->data, PyBUF_SIMPLE) < 0) {
+        if (s->has_valid)
+            PyBuffer_Release(&s->valid);
+        PyBuffer_Release(&s->offs);
+        return -1;
+    }
+    s->open = 1;
+    s->n_offs = s->offs.len / 4;
+    if (s->off < 0) {
+        PyErr_SetString(PyExc_ValueError, "extract_batch: negative offset");
+        return -1;
+    }
+    return 0;
+}
+
+/* value j: 1 = *p, *len set, 0 = null, -1 = out of bounds (exception) */
+static int sin_get(SIn *s, Py_ssize_t j, const char **p, Py_ssize_t *len)
+{
+    Py_ssize_t i = s->off + j;
+    if (j < 0 || i + 1 >= s->n_offs)
+        goto bad;
+    if (s->has_valid) {
+        if (i / 8 >= s->valid.len)
+            goto bad;
+        if (!((((const unsigned char *)s->valid.buf)[i / 8] >> (i % 8)) & 1))
+            return 0;
+    }
+    const int32_t *o = (const int32_t *)s->offs.buf;
+    if (o[i] < 0 || o[i + 1] < o[i] || o[i + 1] > s->data.len)
+        goto bad;
+    *p = (const char *)s->data.buf + o[i];
+    *len = o[i + 1] - o[i];
+    return 1;
+bad:
+    PyErr_SetString(PyExc_ValueError, "extract_batch: column out of bounds");
+    return -1;
+}
+
+/* value j as a str, or None */
+static PyObject *sin_obj(SIn *s, Py_ssize_t j)
+{
+    const char *p;
+    Py_ssize_t len;
+    int rc = sin_get(s, j, &p, &len);
+    if (rc < 0)
+        return NULL;
+    return rc ? PyUnicode_DecodeUTF8(p, len, NULL) : Py_NewRef(Py_None);
+}
+
+typedef struct {
+    char *p;
+    Py_ssize_t len, cap;
+} Buf;
+
+static int buf_put(Buf *b, const void *src, Py_ssize_t n)
+{
+    if (b->len + n > b->cap) {
+        Py_ssize_t cap = b->cap * 2 > b->len + n ? b->cap * 2 : b->len + n + 64;
+        char *q = (char *)realloc(b->p, (size_t)cap);
+        if (!q) {
+            PyErr_NoMemory();
+            return -1;
+        }
+        b->p = q;
+        b->cap = cap;
+    }
+    if (n)
+        memcpy(b->p + b->len, src, (size_t)n);
+    b->len += n;
+    return 0;
+}
+
+static int buf_i32(Buf *b, long long v)
+{
+    int32_t x = (int32_t)v;
+    if (x != v) {
+        PyErr_SetString(PyExc_OverflowError, "extract_batch: int32 column");
+        return -1;
+    }
+    return buf_put(b, &x, 4);
+}
+
+static PyObject *buf_bytes(Buf *b)
+{
+    return PyBytes_FromStringAndSize(b->p ? b->p : "", b->len);
+}
+
+/* a string column: int32 offsets, UTF-8 data, one validity byte per row
+ * (packed into a bitmap at the end) */
+typedef struct {
+    Buf offs, data, valid;
+    Py_ssize_t n;
+} SOut;
+
+static int sout_put(SOut *s, const char *p, Py_ssize_t len, int valid)
+{
+    unsigned char v = (unsigned char)valid;
+    if (!s->offs.len && buf_i32(&s->offs, 0) < 0)
+        return -1;
+    if (buf_put(&s->data, p, len) < 0 || buf_i32(&s->offs, s->data.len) < 0 ||
+        buf_put(&s->valid, &v, 1) < 0)
+        return -1;
+    s->n++;
+    return 0;
+}
+
+/* a str (its UTF-8: a lone surrogate raises UnicodeEncodeError) or None */
+static int sout_obj(SOut *s, PyObject *v)
+{
+    if (v == Py_None)
+        return sout_put(s, "", 0, 0);
+    if (!PyUnicode_Check(v)) {
+        PyErr_SetString(PyExc_TypeError, "extract_batch: a span is not str");
+        return -1;
+    }
+    Py_ssize_t len;
+    const char *p = PyUnicode_IS_ASCII(v) ? (len = PyUnicode_GET_LENGTH(v),
+                                              (const char *)PyUnicode_DATA(v))
+                                           : PyUnicode_AsUTF8AndSize(v, &len);
+    return p ? sout_put(s, p, len, 1) : -1;
+}
+
+/* back to n rows */
+static void sout_cut(SOut *s, Py_ssize_t n)
+{
+    if (n >= s->n)
+        return;
+    s->n = n;
+    s->offs.len = (n + 1) * 4;
+    s->data.len = ((int32_t *)s->offs.p)[n];
+    s->valid.len = n;
+}
+
+/* one byte per row packed into an Arrow bitmap; *zeros counts the 0s */
+static PyObject *pack_bits(Buf *v, Py_ssize_t *zeros)
+{
+    PyObject *bits = PyBytes_FromStringAndSize(NULL, (v->len + 7) / 8);
+    if (!bits)
+        return NULL;
+    unsigned char *b = (unsigned char *)PyBytes_AS_STRING(bits);
+    memset(b, 0, (size_t)((v->len + 7) / 8));
+    *zeros = 0;
+    for (Py_ssize_t i = 0; i < v->len; i++) {
+        if (v->p[i])
+            b[i / 8] |= (unsigned char)(1 << (i % 8));
+        else
+            ++*zeros;
+    }
+    return bits;
+}
+
+static PyObject *bits_bytes(Buf *v)
+{
+    Py_ssize_t zeros;
+    return pack_bits(v, &zeros);
+}
+
+/* (validity bitmap or None, offsets, data, null count) */
+static PyObject *sout_finish(SOut *s)
+{
+    if (!s->offs.len && buf_i32(&s->offs, 0) < 0)
+        return NULL;
+    Py_ssize_t nulls;
+    PyObject *bits = pack_bits(&s->valid, &nulls);
+    if (!bits)
+        return NULL;
+    if (!nulls)
+        Py_SETREF(bits, Py_NewRef(Py_None));
+    return Py_BuildValue("(NNNn)", bits, buf_bytes(&s->offs),
+                         buf_bytes(&s->data), nulls);
+}
+
+static void sout_free(SOut *s)
+{
+    free(s->offs.p);
+    free(s->data.p);
+    free(s->valid.p);
+}
+
 typedef struct {
     PyObject *recipient_key, *safe_decode;
     int strict, inc_art;
@@ -8570,7 +9743,10 @@ typedef struct {
     Py_ssize_t min_block_chars;
     long max_depth;
     PyObject *payload_spans; /* one payload's (kind, text, media_ref) spans */
-    PyObject *shared_fi;     /* FontInfo by direct_key, for the batch */
+    PyObject *shared_fi;     /* FontInfo by font_key, for the batch */
+    SIn kind, text, ref;     /* the input span columns */
+    SOut okind, otext, oref, omode, oerr; /* the output string columns */
+    Buf soff, lofs, ok, npages, nspans, bytes_in, wall;
 } Batch;
 
 /* an exception in a document's step: an Exception hands the document
@@ -8586,74 +9762,99 @@ static int hand_back(int *reason, int why)
     return 0;
 }
 
-/* one raw_pdf payload (extract_pdf_bytes): 1 = served, its spans in
- * B->payload_spans, *n_pages and *bytes_in added to and *mode set to a
- * non-strict reader mode; 0 = hand back (*reason set); -1 = exception */
-static int batch_pdf(Batch *B, PyObject *text, int *reason,
+/* decode_raw_payload for a latin-1 payload given as UTF-8: the bytes,
+ * with no b85: prefix.  New bytes, or NULL with *why set (no
+ * exception) / an exception. */
+static PyObject *latin1_payload(const char *p, Py_ssize_t len, int *why)
+{
+    if (len >= 4 && memcmp(p, "b85:", 4) == 0) {
+        *why = HB_B85;
+        return NULL;
+    }
+    const unsigned char *u = (const unsigned char *)p;
+    Py_ssize_t k = 0, i = 0;
+    uint64_t hi = 0, w;
+    for (; i + 8 <= len; i += 8) { /* 8 bytes at a time: any high bit */
+        memcpy(&w, u + i, 8);
+        hi |= w;
+    }
+    for (; i < len; i++)
+        hi |= u[i];
+    if (!(hi & 0x8080808080808080ULL))
+        return PyBytes_FromStringAndSize(p, len);
+    PyObject *out = PyBytes_FromStringAndSize(NULL, len);
+    if (!out)
+        return NULL;
+    unsigned char *o = (unsigned char *)PyBytes_AS_STRING(out);
+    for (i = 0; i < len; i++) {
+        if (u[i] < 0x80)
+            o[k++] = u[i];
+        else if ((u[i] == 0xC2 || u[i] == 0xC3) && i + 1 < len &&
+                 (u[i + 1] & 0xC0) == 0x80) {
+            o[k++] = (unsigned char)((u[i] & 0x1F) << 6 | (u[i + 1] & 0x3F));
+            i++;
+        } else { /* a code point past U+00FF: not latin-1 */
+            Py_DECREF(out);
+            *why = HB_PAYLOAD;
+            return NULL;
+        }
+    }
+    _PyBytes_Resize(&out, k);
+    return out;
+}
+
+/* one raw_pdf payload (extract_pdf_bytes) of p[:len] (NULL: a null
+ * text): 1 = served, its spans in B->payload_spans, *n_pages and
+ * *bytes_in added to and *mode set to a non-strict reader mode; 0 = hand
+ * back (*reason set); -1 = exception */
+static int batch_pdf(Batch *B, const char *p, Py_ssize_t len, int *reason,
                      long long *n_pages, long long *bytes_in, PyObject **mode)
 {
-    if (text == Py_None)
-        text = g_empty;
-    if (!PyUnicode_Check(text))
-        return hand_back(reason, HB_PAYLOAD);
-    if (PyUnicode_Tailmatch(text, g_b85_str, 0, 4, -1) == 1)
-        return hand_back(reason, HB_B85);
-    if (PyUnicode_KIND(text) != PyUnicode_1BYTE_KIND)
-        return hand_back(reason, HB_PAYLOAD); /* not latin-1 */
-    const unsigned char *u = PyUnicode_1BYTE_DATA(text);
-    Py_ssize_t n = PyUnicode_GET_LENGTH(text);
+    int why = HB_READER;
+    PyObject *data = latin1_payload(p ? p : "", p ? len : 0, &why);
+    if (!data)
+        return hand_back(reason, why);
+    const unsigned char *u = (const unsigned char *)PyBytes_AS_STRING(data);
+    Py_ssize_t n = PyBytes_GET_SIZE(data);
     long maj, min;
-    if (!pdf_header(u, n, &maj, &min)) /* also the empty file */
-        return hand_back(reason, HB_READER);
-    PyObject *data = PyBytes_FromStringAndSize((const char *)u, n);
-    PyObject *chain = data ? chain_of(data, !B->strict) : NULL;
-    if (!chain || chain == Py_None) {
-        Py_XDECREF(data);
-        Py_XDECREF(chain);
+    Pages P;
+    memset(&P, 0, sizeof(P));
+    PyObject *trailer = NULL, *rmode = NULL, *pages = NULL;
+    int rc = 0, bail = 0;
+    if (pdf_header(u, n, &maj, &min)) /* also the empty file */
+        rc = chain_tab(data, !B->strict, &P.doc.xt, &trailer, &rmode);
+    if (rc <= 0) {
+        Py_DECREF(data);
         return hand_back(reason, HB_READER);
     }
-    PyObject *entries = PyTuple_GET_ITEM(chain, 0),
-             *trailer = PyTuple_GET_ITEM(chain, 1),
-             *rmode = PyTuple_GET_ITEM(chain, 2);
     int has_root = PyDict_Contains(trailer, k_Root);
     int has_enc = has_root > 0 ? PyDict_Contains(trailer, k_Encrypt) : 0;
     if ((B->strict && rmode != s_strict) || has_root <= 0 || has_enc) {
-        Py_DECREF(data);
-        Py_DECREF(chain);
-        return hand_back(reason, has_enc > 0 ? HB_ENCRYPTED : HB_READER);
+        rc = hand_back(reason, has_enc > 0 ? HB_ENCRYPTED : HB_READER);
+        goto out;
     }
-    PyObject *vals[RS_N] = {
-        Py_NewRef(data), Py_BuildValue("(ll)", maj, min), Py_NewRef(entries),
-        Py_NewRef(trailer), Py_NewRef(rmode),
-        Py_NewRef(B->strict ? Py_False : Py_True), Py_NewRef(Py_None),
-        Py_NewRef(B->recipient_key), PyDict_New(), PyDict_New(),
-        PySet_New(NULL), PyDict_New(), PyDict_New()};
-    PyObject *reader = NULL, *pages = NULL;
-    int rc = -1, bail = 0;
-    Pages P;
-    for (int i = 0; i < RS_N; i++)
-        if (!vals[i]) {
-            for (int j = 0; j < RS_N; j++)
-                Py_XDECREF(vals[j]);
-            rc = hand_back(reason, HB_READER);
-            goto out;
-        }
-    memset(&P, 0, sizeof(P));
-    P.doc.reader = reader = reader_new(vals);
-    if (!reader) {
+    /* the reader's slots but the four the tables stand for (doc_reader) */
+    PyObject **v = P.doc.vals;
+    v[RS_DATA] = Py_NewRef(data);
+    v[RS_VERSION] = Py_BuildValue("(ll)", maj, min);
+    v[RS_TRAILER] = Py_NewRef(trailer);
+    v[RS_MODE] = Py_NewRef(rmode);
+    v[RS_LENIENT] = Py_NewRef(B->strict ? Py_False : Py_True);
+    v[RS_DECRYPTOR] = Py_NewRef(Py_None);
+    v[RS_RECIPIENT] = Py_NewRef(B->recipient_key);
+    v[RS_FIC] = PyDict_New();
+    v[RS_MEMO] = PyDict_New();
+    if (!v[RS_VERSION] || !v[RS_FIC] || !v[RS_MEMO]) {
         rc = hand_back(reason, HB_READER);
         goto out;
     }
-    P.doc.data = Py_NewRef(vals[RS_DATA]);
-    P.doc.xref = Py_NewRef(vals[RS_XREF]);
-    P.doc.cache = Py_NewRef(vals[RS_CACHE]);
-    P.doc.resolving = Py_NewRef(vals[RS_RESOLVING]);
-    P.doc.objstm = Py_NewRef(vals[RS_OBJSTM]);
-    P.doc.d = (const unsigned char *)PyBytes_AS_STRING(data);
+    P.doc.tab = 1;
+    P.doc.data = Py_NewRef(data);
+    P.doc.d = u;
     P.doc.n = n;
     P.doc.lenient = !B->strict;
-    P.fic = vals[RS_FIC];
-    P.dmemo = vals[RS_MEMO];
+    P.fic = v[RS_FIC];
+    P.dmemo = v[RS_MEMO];
     P.safe_decode = B->safe_decode;
     P.spans = B->payload_spans;
     P.shared_fi = B->shared_fi;
@@ -8680,55 +9881,67 @@ static int batch_pdf(Batch *B, PyObject *text, int *reason,
                 *mode = rmode;
         }
     }
-    doc_close(&P.doc);
 out:
     Py_XDECREF(pages);
-    Py_XDECREF(reader);
-    Py_DECREF(chain);
+    doc_close(&P.doc);
+    Py_DECREF(trailer);
     Py_DECREF(data);
     return rc;
 }
 
-/* append the spans of B->payload_spans to the four span columns, numbering
- * them from *k */
-static int batch_unpack(Batch *B, PyObject **cols, Py_ssize_t *k)
+/* append the spans of B->payload_spans to the span columns, numbering
+ * them from *k: 0, or -1 (exception; a span Arrow cannot encode) */
+static int batch_unpack(Batch *B, Py_ssize_t *k)
 {
     for (Py_ssize_t i = 0; i < PyList_GET_SIZE(B->payload_spans); i++) {
         PyObject *sp = PyList_GET_ITEM(B->payload_spans, i);
-        PyObject *off = PyLong_FromSsize_t((*k)++);
-        int rc = off ? 0 : -1;
-        for (int c = 0; rc == 0 && c < 3; c++)
-            rc = PyList_Append(cols[c], PyTuple_GET_ITEM(sp, c));
-        if (rc == 0)
-            rc = PyList_Append(cols[3], off);
-        Py_XDECREF(off);
-        if (rc < 0)
+        if (sout_obj(&B->okind, PyTuple_GET_ITEM(sp, 0)) < 0 ||
+            sout_obj(&B->otext, PyTuple_GET_ITEM(sp, 1)) < 0 ||
+            sout_obj(&B->oref, PyTuple_GET_ITEM(sp, 2)) < 0 ||
+            buf_i32(&B->soff, (*k)++) < 0)
             return -1;
     }
-    return PyList_SetSlice(B->payload_spans, 0, PyList_GET_SIZE(B->payload_spans), NULL);
+    return PyList_SetSlice(B->payload_spans, 0,
+                           PyList_GET_SIZE(B->payload_spans), NULL);
+}
+
+static int bytes_is(const char *p, Py_ssize_t len, const char *lit)
+{
+    return p && (size_t)len == strlen(lit) && memcmp(p, lit, (size_t)len) == 0;
+}
+
+/* copy input column value j to an output column (a null stays null,
+ * or becomes "" with empty) */
+static int copy_value(SIn *in, SOut *out, Py_ssize_t j, int empty)
+{
+    const char *p;
+    Py_ssize_t len;
+    int rc = sin_get(in, j, &p, &len);
+    if (rc < 0)
+        return -1;
+    return rc ? sout_put(out, p, len, 1) : sout_put(out, "", 0, empty);
 }
 
 /* one document's spans lo..hi: 1 = served (appended), 0 = hand back,
  * -1 = exception */
-static int batch_doc(Batch *B, PyObject *kinds, PyObject *texts,
-                     PyObject *refs, Py_ssize_t lo, Py_ssize_t hi,
-                     PyObject **cols, int *reason, long long *n_pages,
-                     long long *bytes_in, PyObject **mode, Py_ssize_t *k)
+static int batch_doc(Batch *B, Py_ssize_t lo, Py_ssize_t hi, int *reason,
+                     long long *n_pages, long long *bytes_in, PyObject **mode,
+                     Py_ssize_t *k)
 {
     for (Py_ssize_t j = lo; j < hi; j++) {
-        PyObject *kind = PyList_GET_ITEM(kinds, j),
-                 *text = PyList_GET_ITEM(texts, j),
-                 *ref = PyList_GET_ITEM(refs, j);
-        int is_str = PyUnicode_Check(kind);
-        if (is_str && PyUnicode_CompareWithASCIIString(kind, "raw_pdf") == 0) {
-            int rc = batch_pdf(B, text, reason, n_pages, bytes_in, mode);
+        const char *kp = NULL, *tp = NULL;
+        Py_ssize_t kl = 0, tl = 0;
+        if (sin_get(&B->kind, j, &kp, &kl) < 0 ||
+            sin_get(&B->text, j, &tp, &tl) < 0)
+            return -1;
+        if (bytes_is(kp, kl, "raw_pdf")) {
+            int rc = batch_pdf(B, tp, tl, reason, n_pages, bytes_in, mode);
             if (rc <= 0)
                 return rc;
-        } else if (is_str &&
-                   PyUnicode_CompareWithASCIIString(kind, "raw_html") == 0) {
-            if (text == Py_None)
-                text = g_empty;
-            if (!PyUnicode_Check(text))
+        } else if (bytes_is(kp, kl, "raw_html")) {
+            PyObject *text = tp ? PyUnicode_DecodeUTF8(tp, tl, NULL)
+                                : Py_NewRef(g_empty);
+            if (!text)
                 return hand_back(reason, HB_PAYLOAD);
             H h;
             int rc = html_run(&h, text, 0);
@@ -8736,25 +9949,23 @@ static int batch_doc(Batch *B, PyObject *kinds, PyObject *texts,
                 rc = html_filter(h.events, B->link_density_max,
                                  B->min_block_chars, B->payload_spans) < 0 ? -1 : 1;
             h_free(&h);
+            if (rc > 0)
+                *bytes_in += PyUnicode_GET_LENGTH(text);
+            Py_DECREF(text);
             if (rc <= 0)
                 return hand_back(reason, HB_HTML);
-            *bytes_in += PyUnicode_GET_LENGTH(text);
         } else {
             /* text / media / unknown kinds pass through: (kind, text or
              * "", media_ref), with no media_ref on a text span */
-            if (text == Py_None)
-                text = g_empty;
-            if (!PyUnicode_Check(text))
-                return hand_back(reason, HB_PAYLOAD);
-            if (is_str && PyUnicode_CompareWithASCIIString(kind, "text") == 0)
-                ref = Py_None;
-            PyObject *sp = PyTuple_Pack(3, kind, text, ref);
-            int rc = sp ? PyList_Append(B->payload_spans, sp) : -1;
-            Py_XDECREF(sp);
-            if (rc < 0)
-                return hand_back(reason, HB_PAYLOAD);
+            if (copy_value(&B->kind, &B->okind, j, 0) < 0 ||
+                copy_value(&B->text, &B->otext, j, 1) < 0 ||
+                (bytes_is(kp, kl, "text") ? sout_put(&B->oref, "", 0, 0)
+                                          : copy_value(&B->ref, &B->oref, j, 0)) < 0 ||
+                buf_i32(&B->soff, (*k)++) < 0)
+                return -1;
+            continue;
         }
-        if (batch_unpack(B, cols, k) < 0)
+        if (batch_unpack(B, k) < 0)
             return hand_back(reason, HB_PAYLOAD);
     }
     return 1;
@@ -8767,112 +9978,201 @@ static double now_ms(void)
     return ts.tv_sec * 1e3 + ts.tv_nsec / 1e6;
 }
 
-/* append v (a new reference, NULL on error) to lst */
-static int append_new(PyObject *lst, PyObject *v)
+/* one document's per-row columns */
+static int batch_row(Batch *B, int ok, PyObject *mode, PyObject *error,
+                     long long n_pages, Py_ssize_t n_spans, long long bytes_in,
+                     double wall)
 {
-    int rc = v ? PyList_Append(lst, v) : -1;
-    Py_XDECREF(v);
+    unsigned char o = (unsigned char)ok;
+    return (buf_i32(&B->lofs, B->okind.n) < 0 || buf_put(&B->ok, &o, 1) < 0 ||
+            sout_obj(&B->omode, mode) < 0 || sout_obj(&B->oerr, error) < 0 ||
+            buf_i32(&B->npages, n_pages) < 0 ||
+            buf_i32(&B->nspans, n_spans) < 0 ||
+            buf_put(&B->bytes_in, &bytes_in, 8) < 0 ||
+            buf_put(&B->wall, &wall, 8) < 0)
+               ? -1
+               : 0;
+}
+
+/* row's (kind, text, media_ref) triples lo..hi */
+static PyObject *batch_triples(Batch *B, Py_ssize_t lo, Py_ssize_t hi)
+{
+    PyObject *lst = PyList_New(hi - lo);
+    for (Py_ssize_t j = lo; lst && j < hi; j++) {
+        PyObject *k = sin_obj(&B->kind, j);
+        PyObject *t = k ? sin_obj(&B->text, j) : NULL;
+        PyObject *m = t ? sin_obj(&B->ref, j) : NULL;
+        PyObject *tr = m ? PyTuple_Pack(3, k, t, m) : NULL;
+        Py_XDECREF(k);
+        Py_XDECREF(t);
+        Py_XDECREF(m);
+        if (!tr)
+            Py_CLEAR(lst);
+        else
+            PyList_SET_ITEM(lst, j - lo, tr);
+    }
+    return lst;
+}
+
+/* run_row(row, triples) → (spans, meta) of a handed-back document,
+ * written to the columns */
+static int batch_python_row(Batch *B, PyObject *run_row, Py_ssize_t row,
+                            Py_ssize_t lo, Py_ssize_t hi)
+{
+    double t0 = now_ms();
+    PyObject *triples = batch_triples(B, lo, hi), *res = NULL;
+    if (triples)
+        res = PyObject_CallFunction(run_row, "nO", row, triples);
+    Py_XDECREF(triples);
+    if (!res)
+        return -1;
+    PyObject *spans, *meta;
+    int rc = -1;
+    if (!PyArg_ParseTuple(res, "O!O!", &PyList_Type, &spans, &PyDict_Type,
+                          &meta))
+        goto out;
+    for (Py_ssize_t i = 0; i < PyList_GET_SIZE(spans); i++) {
+        PyObject *sp = PyList_GET_ITEM(spans, i), *k, *t, *m;
+        Py_ssize_t o;
+        if (!PyArg_ParseTuple(sp, "OOOn", &k, &t, &m, &o) ||
+            sout_obj(&B->okind, k) < 0 || sout_obj(&B->otext, t) < 0 ||
+            sout_obj(&B->oref, m) < 0 || buf_i32(&B->soff, o) < 0)
+            goto out;
+    }
+    PyObject *ok = PyDict_GetItemString(meta, "ok"),
+             *mode = PyDict_GetItemString(meta, "mode"),
+             *err = PyDict_GetItemString(meta, "error"),
+             *np = PyDict_GetItemString(meta, "n_pages"),
+             *bi = PyDict_GetItemString(meta, "bytes_in");
+    if (!ok || !mode || !err || !np || !bi) {
+        PyErr_SetString(PyExc_KeyError, "extract_batch: row meta");
+        goto out;
+    }
+    int okv = PyObject_IsTrue(ok);
+    long long npv = PyLong_AsLongLong(np), biv = PyLong_AsLongLong(bi);
+    if (okv < 0 || PyErr_Occurred())
+        goto out;
+    rc = batch_row(B, okv, mode, err, npv, PyList_GET_SIZE(spans), biv,
+                   now_ms() - t0);
+out:
+    Py_DECREF(res);
     return rc;
 }
 
-/* extract_batch(kinds, texts, media_refs, list_offsets, base, passwords,
- * strict, newline_threshold, space_threshold, tj_space_threshold,
- * include_artifacts, recipient_key, link_density_max, min_block_chars,
- * max_tree_depth, _safe_decode, run_row, columns): runs every document
- * of the batch, appending to columns (kind, text, media_ref, offset,
- * list offsets, ok, mode, error, n_pages, n_spans, bytes_in, wall_ms);
- * a document handed back runs as run_row(row), which appends its own. */
+/* extract_batch(n, list_offsets, list_offset, kind, text, media_ref,
+ * passwords, strict, newline_threshold, space_threshold,
+ * tj_space_threshold, include_artifacts, recipient_key, link_density_max,
+ * min_block_chars, max_tree_depth, _safe_decode, run_row): the batch's n
+ * documents.  list_offsets is the spans list array's int32 offsets
+ * buffer, list_offset its array offset; kind, text and media_ref are the
+ * struct fields' (offset, validity or None, offsets, data); passwords a
+ * list or None.  A document handed back runs as run_row(row, triples),
+ * which returns its (spans, meta).  Returns the output columns: the span
+ * kind, text and media_ref as (validity or None, offsets, data, nulls),
+ * the span offsets, the list offsets, then ok (one byte per row), mode and
+ * error as string columns, n_pages, n_spans, bytes_in and wall_ms. */
 static PyObject *extract_batch(PyObject *self, PyObject *args)
 {
-    PyObject *kinds, *texts, *refs, *offsets, *passwords, *run_row, *out;
-    Py_ssize_t base;
+    PyObject *lofs_obj, *kind_t, *text_t, *ref_t, *passwords, *run_row;
+    Py_ssize_t n, loff;
+    Py_buffer lb;
     Batch B;
     memset(&B, 0, sizeof(B));
-    if (!PyArg_ParseTuple(args, "O!O!O!O!nOpdddpOdnlOOO!", &PyList_Type,
-                          &kinds, &PyList_Type, &texts, &PyList_Type, &refs,
-                          &PyList_Type, &offsets, &base, &passwords,
+    if (!PyArg_ParseTuple(args, "nOnO!O!O!OpdddpOdnlOO", &n, &lofs_obj,
+                          &loff, &PyTuple_Type, &kind_t, &PyTuple_Type,
+                          &text_t, &PyTuple_Type, &ref_t, &passwords,
                           &B.strict, &B.nl_thr, &B.sp_thr, &B.tj_thr,
                           &B.inc_art, &B.recipient_key, &B.link_density_max,
                           &B.min_block_chars, &B.max_depth, &B.safe_decode,
-                          &run_row, &PyTuple_Type, &out))
+                          &run_row))
         return NULL;
-    Py_ssize_t n_spans = PyList_GET_SIZE(kinds);
-    Py_ssize_t n = PyList_GET_SIZE(offsets) - 1;
-    PyObject *cols[12];
-    int ok = PyTuple_GET_SIZE(out) == 12 && PyList_GET_SIZE(texts) == n_spans &&
-             PyList_GET_SIZE(refs) == n_spans && n >= 0 &&
-             (passwords == Py_None ||
-              (PyList_Check(passwords) && PyList_GET_SIZE(passwords) >= n));
-    for (int c = 0; ok && c < 12; c++)
-        ok = PyList_Check(cols[c] = PyTuple_GET_ITEM(out, c));
-    if (!ok) {
-        PyErr_SetString(PyExc_ValueError, "extract_batch: column shapes");
-        return NULL;
-    }
-    if (!g_reader_cls || !g_extract_font_info || !g_cmap_cls || !g_scan_bi ||
-        !g_unescape) {
+    if (!g_reader_cls || !g_no_refs || !g_extract_font_info || !g_cmap_cls ||
+        !g_scan_bi || !g_unescape) {
         PyErr_SetString(PyExc_RuntimeError,
                         "extract_batch requires the setup calls");
         return NULL;
     }
+    if (n < 0 || loff < 0 ||
+        (passwords != Py_None &&
+         !(PyList_Check(passwords) && PyList_GET_SIZE(passwords) >= n))) {
+        PyErr_SetString(PyExc_ValueError, "extract_batch: column shapes");
+        return NULL;
+    }
+    if (PyObject_GetBuffer(lofs_obj, &lb, PyBUF_SIMPLE) < 0)
+        return NULL;
+    PyObject *res = NULL;
+    if (lb.len / 4 < loff + n + 1) {
+        PyErr_SetString(PyExc_ValueError, "extract_batch: list offsets");
+        goto done;
+    }
+    const int32_t *lofs = (const int32_t *)lb.buf + loff;
+    if (sin_open(&B.kind, kind_t) < 0 || sin_open(&B.text, text_t) < 0 ||
+        sin_open(&B.ref, ref_t) < 0)
+        goto done;
     B.payload_spans = PyList_New(0);
     B.shared_fi = PyDict_New();
-    if (!B.payload_spans || !B.shared_fi)
-        goto err;
+    if (!B.payload_spans || !B.shared_fi || buf_i32(&B.lofs, 0) < 0)
+        goto done;
     for (Py_ssize_t row = 0; row < n; row++) {
-        Py_ssize_t lo = PyLong_AsSsize_t(PyList_GET_ITEM(offsets, row));
-        Py_ssize_t hi = PyLong_AsSsize_t(PyList_GET_ITEM(offsets, row + 1));
-        if (PyErr_Occurred())
-            goto err;
-        lo -= base;
-        hi -= base;
-        Py_ssize_t start = PyList_GET_SIZE(cols[0]), k = 0;
+        Py_ssize_t lo = lofs[row], hi = lofs[row + 1];
+        Py_ssize_t start = B.okind.n, k = 0;
         long long n_pages = 0, bytes_in = 0;
         PyObject *mode = s_strict;
         int reason = HB_SERVED, rc;
         double t0 = now_ms();
-        if (lo < 0 || hi < lo || hi > n_spans)
+        if (lo < 0 || hi < lo)
             rc = hand_back(&reason, HB_PAYLOAD);
         else if (passwords != Py_None &&
                  PyList_GET_ITEM(passwords, row) != Py_None)
             rc = hand_back(&reason, HB_PASSWORD);
         else
-            rc = batch_doc(&B, kinds, texts, refs, lo, hi, cols, &reason,
-                           &n_pages, &bytes_in, &mode, &k);
+            rc = batch_doc(&B, lo, hi, &reason, &n_pages, &bytes_in, &mode,
+                           &k);
         if (rc < 0)
-            goto err;
+            goto done;
         g_batch_counts[reason]++;
         if (rc == 0) {
-            if (PyList_SetSlice(B.payload_spans, 0, PyList_GET_SIZE(B.payload_spans),
-                                NULL) < 0)
-                goto err;
-            for (int c = 0; c < 4; c++)
-                if (PyList_SetSlice(cols[c], start, PY_SSIZE_T_MAX, NULL) < 0)
-                    goto err;
-            PyObject *r = PyLong_FromSsize_t(row);
-            PyObject *res = r ? PyObject_CallOneArg(run_row, r) : NULL;
-            Py_XDECREF(r);
-            if (!res)
-                goto err;
-            Py_DECREF(res);
+            if (PyList_SetSlice(B.payload_spans, 0,
+                                PyList_GET_SIZE(B.payload_spans), NULL) < 0)
+                goto done;
+            sout_cut(&B.okind, start);
+            sout_cut(&B.otext, start);
+            sout_cut(&B.oref, start);
+            B.soff.len = start * 4;
+            if (batch_python_row(&B, run_row, row, lo, hi) < 0)
+                goto done;
             continue;
         }
-        if (append_new(cols[4], PyLong_FromSsize_t(PyList_GET_SIZE(cols[0]))) ||
-            PyList_Append(cols[5], Py_True) || PyList_Append(cols[6], mode) ||
-            PyList_Append(cols[7], Py_None) ||
-            append_new(cols[8], PyLong_FromLongLong(n_pages)) ||
-            append_new(cols[9], PyLong_FromSsize_t(k)) ||
-            append_new(cols[10], PyLong_FromLongLong(bytes_in)) ||
-            append_new(cols[11], PyFloat_FromDouble(now_ms() - t0)))
-            goto err;
+        if (batch_row(&B, 1, mode, Py_None, n_pages, k, bytes_in,
+                      now_ms() - t0) < 0)
+            goto done;
     }
-    Py_DECREF(B.payload_spans);
-    Py_DECREF(B.shared_fi);
-    Py_RETURN_NONE;
-err:
+    res = Py_BuildValue(
+        "(NNNNNNNNNNNNN)", sout_finish(&B.okind), sout_finish(&B.otext),
+        sout_finish(&B.oref), buf_bytes(&B.soff), buf_bytes(&B.lofs),
+        bits_bytes(&B.ok), sout_finish(&B.omode), sout_finish(&B.oerr),
+        buf_bytes(&B.npages), buf_bytes(&B.nspans), buf_bytes(&B.bytes_in),
+        buf_bytes(&B.wall), PyLong_FromSsize_t(B.okind.n));
+done:
+    PyBuffer_Release(&lb);
+    sin_close(&B.kind);
+    sin_close(&B.text);
+    sin_close(&B.ref);
+    sout_free(&B.okind);
+    sout_free(&B.otext);
+    sout_free(&B.oref);
+    sout_free(&B.omode);
+    sout_free(&B.oerr);
+    free(B.soff.p);
+    free(B.lofs.p);
+    free(B.ok.p);
+    free(B.npages.p);
+    free(B.nspans.p);
+    free(B.bytes_in.p);
+    free(B.wall.p);
     Py_XDECREF(B.payload_spans);
     Py_XDECREF(B.shared_fi);
-    return NULL;
+    return res;
 }
 
 /* batch_counts(reset=False): {reason: documents} of extract_batch since
@@ -9238,6 +10538,14 @@ static PyMethodDef methods[] = {
     {"get_object", c_get_object, METH_VARARGS,
      "reader.get_object for cached/free/in-use/compressed entries; "
      "BAIL = bail"},
+    {"setup_filters", setup_filters, METH_VARARGS,
+     "install zlib.decompressobj and the filters.py size and ratio caps"},
+    {"decode_stream", decode_stream, METH_VARARGS,
+     "the native filter chain's bytes for (dict, raw), or None where "
+     "Stream.decode decodes"},
+    {"filter_counts", filter_counts, METH_VARARGS,
+     "streams decoded natively by filter and handed to Stream.decode by "
+     "reason, per call site"},
     {"lzw_decode", lzw_decode, METH_VARARGS,
      "decode_lzw -> bytes, or the FilterError message as str"},
     {"flatten_pages", flatten_pages, METH_VARARGS,
@@ -9253,7 +10561,7 @@ static PyMethodDef methods[] = {
     {"run_pages", run_pages, METH_VARARGS,
      "run a document's pages natively from start; the first page not "
      "served, or None = the document is not served"},
-    {"setup_reader", setup_reader, METH_O,
+    {"setup_reader", setup_reader, METH_VARARGS,
      "record PdfReader's slot layout for extract_batch"},
     {"extract_batch", extract_batch, METH_VARARGS,
      "run one Arrow batch's documents; a document not served runs as "
@@ -9353,6 +10661,13 @@ PyMODINIT_FUNC PyInit_oxpdf_cscan(void)
     IN(k_Info, "Info");
     IN(k_ID, "ID");
     IN(g_c_str, "c");
+    IN(s_decompress, "decompress");
+    IN(s_flush, "flush");
+    IN(k_Predictor, "Predictor");
+    IN(k_Columns, "Columns");
+    IN(k_Colors, "Colors");
+    IN(k_Bpc, "BitsPerComponent");
+    IN(k_EarlyChange, "EarlyChange");
     IN(f_name, "name");
     IN(f_font_type, "font_type");
     IN(f_encoding, "encoding");
@@ -9387,6 +10702,19 @@ PyMODINIT_FUNC PyInit_oxpdf_cscan(void)
     IN(g_fb_mac, "MacRomanEncoding");
     IN(g_fb_std, "StandardEncoding");
     IN(g_fb_pdfdoc, "PdfDocEncoding");
+    for (HTag *e = h_tags; e->name; e++) {
+        IN(e->obj, e->name);
+        e->len = (Py_ssize_t)strlen(e->name);
+        HTag **b = h_bucket[h_tag_hash(e->name, e->len)];
+        int i = 0;
+        while (i < 4 && b[i])
+            i++;
+        if (i == 4) {
+            PyErr_SetString(PyExc_RuntimeError, "HTML tag table bucket full");
+            return NULL;
+        }
+        b[i] = e;
+    }
     k_inheritable[0] = k_Resources;
     k_inheritable[1] = k_MediaBox;
     IN(k_inheritable[2], "CropBox");

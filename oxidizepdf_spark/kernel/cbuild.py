@@ -18,7 +18,13 @@ pinned to its Python original by the differential tests
   object parse and fetch, object-stream members included (``parse_indirect``,
   ``get_object``: reader.py), the page tree and the /Contents assembly
   (``flatten_pages``, ``page_content``: pages.py);
-- the LZW filter (``lzw_decode``: filters.decode_lzw);
+- the stream filters (``lzw_decode``: filters.decode_lzw; and, inside
+  the C fetch and /Contents assembly, filters.decode_stream_data's common
+  chain: Flate through the ``zlib.decompressobj`` calls of
+  ``_zlib_try`` that ``setup_filters`` installs, LZW, ASCIIHex, chains
+  of these and the PNG and TIFF predictors, any other stream going to
+  the Python ``Stream.decode``; ``filter_counts`` reads the streams
+  decoded natively by filter and handed back by reason);
 - the text path: the CMap parse (``parse_cmap``: cmap.CMap.parse with
   tokenize_cmap, for the ToUnicode streams fonts.extract_font_info reads)
   and, inside ``run_page``, the per-font code table that decodes and
@@ -39,19 +45,24 @@ pinned to its Python original by the differential tests
   with or without the out-link list) and, with the span filter,
   ``html_spans`` (extract_html_spans);
 - the batch loop (``extract_batch``: extract.extract_batch's document
-  loop over one Arrow batch, for the options the page loop serves): per
-  document the latin-1 payload decode, the PdfReader construction (the
+  loop over one Arrow batch, for the options the page loop serves): it
+  reads the input string columns' Arrow buffers, and per document runs
+  the latin-1 payload decode straight into the document's bytes, the
+  xref chain into a C table that also holds the fetched objects and
+  object-stream members, the page tree and the page loop, the HTML spans
+  and the text/media passthrough, writing the output columns' buffers,
+  with wall_ms timed in C and a FontInfo shared across the batch's
+  documents for a font dict that holds no reference. The PdfReader (the
   object allocated here with its slots filled, the layout
-  ``setup_reader`` checks), the xref chain, the page tree and the page
-  loop, the HTML spans and the text/media passthrough, appended straight
-  into the batch's columns, with wall_ms timed in C and a FontInfo shared
-  across the batch's documents for a font dict that holds no reference.
-  A document is handed back whole to extract_document_spans (a fresh
-  reader, Python the authority) for a password, a ``b85:`` or
-  non-latin-1 payload, a reader that raises or bails (no header or
-  /Root, a chain ``xref_chain`` bails on, a recovered reader in strict
-  mode), encryption, a tree ``flatten_pages`` does not serve, a page the
-  page loop bails on, or HTML ``html_events`` bails on;
+  ``setup_reader`` checks) is built from the tables only when a Python
+  step needs it: a FontInfo build for a font dict that holds a
+  reference, or a stream decode handed to Python. A document is handed
+  back whole to extract_document_spans (a fresh reader, Python the
+  authority) for a password, a ``b85:`` or non-latin-1 payload, a reader
+  that raises or bails (no header or /Root, a chain ``xref_chain`` bails
+  on, a recovered reader in strict mode), encryption, a tree
+  ``flatten_pages`` does not serve, a page the page loop bails on, HTML
+  ``html_events`` bails on, or a span Arrow cannot encode;
   ``batch_counts`` reads the served and handed-back documents by reason.
 
 Every entry point returns a complete result or a bail (None, or ``BAIL``

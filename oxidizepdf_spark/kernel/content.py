@@ -2090,6 +2090,16 @@ def _load_cscan():
             _objmod.Ref, _objmod._NAME_MEMO, _objmod.Lexer._decode_name_bytes,
             _objmod.Stream,
         )
+        # the stream filters the C fetch and /Contents assembly decode
+        # natively (filters.py keeps the fallback ladder)
+        import zlib as _zlib
+
+        from . import filters as _filters
+
+        mod.setup_filters(
+            _zlib.decompressobj, _filters.MAX_DECOMPRESSED_SIZE,
+            _filters.MAX_COMPRESSION_RATIO,
+        )
         # CMap parse and cold run decode (parse_cmap, the per-font code
         # table behind run_page's memo misses, its Standard-14 width rows),
         # and the FontInfo build run_pages calls on a cache miss

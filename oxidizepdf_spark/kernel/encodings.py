@@ -89,17 +89,21 @@ for _c in range(26):
 
 
 def glyph_name_to_unicode(name: str) -> str | None:
+    """The character a glyph name stands for, or None. A ``uniXXXX`` or
+    ``uXXXX[XX]`` name of a surrogate code point (D800-DFFF) maps to
+    None: a Rust ``char`` cannot hold one, so the reference never emits
+    it, and Arrow cannot encode it."""
     ch = _GLYPH_NAMES.get(name)
     if ch is not None:
         return ch
     if name.startswith("uni") and len(name) >= 7:
-        try:
-            return chr(int(name[3:7], 16))
-        except ValueError:
-            return None
-    if name.startswith("u") and 5 <= len(name) <= 7:
-        try:
-            return chr(int(name[1:], 16))
-        except ValueError:
-            return None
-    return None
+        digits = name[3:7]
+    elif name.startswith("u") and 5 <= len(name) <= 7:
+        digits = name[1:]
+    else:
+        return None
+    try:
+        cp = int(digits, 16)
+        return None if 0xD800 <= cp <= 0xDFFF else chr(cp)
+    except ValueError:
+        return None

@@ -1031,76 +1031,205 @@ def _batch_loop_serves(options: ExtractionOptions) -> bool:
     return _page_loop_serves(options)
 
 
-def extract_batch(kinds, texts, media_refs, list_offsets, base, passwords,
-                  options: ExtractionOptions) -> tuple[list, ...]:
-    """One Arrow batch of documents → the twelve column lists of
-    ``pipeline._extract_batches``: the flattened spans' kind, text,
-    media_ref and offset, the list offsets (from 0), then per document
-    ok, mode, error, n_pages, n_spans, bytes_in and wall_ms.
+def _run_row(triples, password, options: ExtractionOptions):
+    """One document of a batch: ``extract_document_spans`` over its
+    (kind, text, media_ref) triples, with its password when one is set.
+    An exception, or a span text Arrow cannot encode as UTF-8 (a lone
+    surrogate), becomes a ``kernel:`` error row; an error message that
+    does not encode is backslash-escaped."""
+    opts = options if password is None else options.with_password(password)
+    try:
+        spans, meta = extract_document_spans(triples, opts)
+        for span in spans:
+            for s in span[:3]:
+                if s is not None and not s.isascii():
+                    s.encode("utf-8")
+    except Exception as e:  # absolute backstop: error-as-data
+        spans, meta = [], {
+            "ok": False,
+            "error": f"kernel:{type(e).__name__}:{e}",
+            "mode": "strict",
+            "n_pages": 0,
+            "bytes_in": 0,
+        }
+    err = meta["error"]
+    if err is not None and not err.isascii():
+        meta["error"] = err.encode("utf-8", "backslashreplace").decode()
+    return spans, meta
 
-    The inputs are the batch's flat span child columns as lists, its list
-    offsets (``base`` is the child array's own offset) and its password
-    column (None when it has none). A document is ``extract_document_spans``
-    over its (kind, text, media_ref) triples, with its password when one is
-    set; an exception from it becomes a ``kernel:`` error row.
 
-    With the C kernel loaded and options the page loop serves, the whole
-    batch runs in one native call (``_cscan.c`` ``extract_batch``:
-    payload decode, reader, page tree and page loop, HTML spans and the
-    passthrough). A document it is not certain about (a password, a
-    ``b85:`` payload, encryption, a reader or tree it does not serve, a
-    page the page loop bails on) is handed back whole to ``run_row``
-    below, which stays the authority."""
-    cols = tuple([] for _ in range(12))
-    (out_kind, out_text, out_ref, out_off, out_offsets, ok_c, mode_c, err_c,
-     npages_c, nspans_c, bytes_c, wall_c) = cols
-    out_offsets.append(0)
+_SPAN_FIELDS = ("kind", "text", "media_ref")
 
-    def run_row(row: int) -> None:
-        lo, hi = list_offsets[row] - base, list_offsets[row + 1] - base
-        triples = list(zip(kinds[lo:hi], texts[lo:hi], media_refs[lo:hi]))
+
+def _span_type():
+    import pyarrow as pa
+
+    return pa.struct([("kind", pa.string()), ("text", pa.string()),
+                      ("media_ref", pa.string()), ("offset", pa.int32())])
+
+
+def _pylist(arr) -> list:
+    """A string Arrow array's values as a Python list (None for null):
+    ``to_pylist()``'s values, without its per-element scalar boxing."""
+    return arr.to_numpy(zero_copy_only=False).tolist()
+
+
+def _extract_batch_py(spans, passwords, options: ExtractionOptions) -> list:
+    """``extract_batch`` as a Python loop over list conversions: the
+    string columns and list offsets convert through
+    ``to_numpy(zero_copy_only=False).tolist()`` (the same values as
+    ``to_pylist()``, about 8× faster), the password column through
+    ``to_pylist()``, and the output columns through ``pa.array``."""
+    import pyarrow as pa
+
+    offsets = spans.offsets.to_numpy().tolist()
+    flat = spans.values
+    kinds, texts, refs = (_pylist(flat.field(f)) for f in _SPAN_FIELDS)
+    pw = passwords.to_pylist() if passwords is not None else None
+    cols = tuple([] for _ in range(11))
+    (out_kind, out_text, out_ref, out_off, ok_c, mode_c, err_c, npages_c,
+     nspans_c, bytes_c, wall_c) = cols
+    list_offsets = [0]
+    for row in range(len(spans)):
+        lo, hi = offsets[row], offsets[row + 1]
         t_doc = time.perf_counter()
-        opts_row = options
-        if passwords is not None and passwords[row] is not None:
-            opts_row = options.with_password(passwords[row])
-        try:
-            spans, meta = extract_document_spans(triples, opts_row)
-        except Exception as e:  # absolute backstop: error-as-data
-            spans, meta = [], {
-                "ok": False,
-                "error": f"kernel:{type(e).__name__}:{e}",
-                "mode": "strict",
-                "n_pages": 0,
-                "bytes_in": 0,
-            }
-        for k, t, m, o in spans:
+        doc_spans, meta = _run_row(
+            list(zip(kinds[lo:hi], texts[lo:hi], refs[lo:hi])),
+            pw[row] if pw is not None else None, options)
+        for k, t, m, o in doc_spans:
             out_kind.append(k)
             out_text.append(t)
             out_ref.append(m)
             out_off.append(o)
-        out_offsets.append(len(out_kind))
+        list_offsets.append(len(out_kind))
         ok_c.append(bool(meta["ok"]))
         mode_c.append(meta["mode"])
         err_c.append(meta["error"])
         npages_c.append(int(meta["n_pages"]))
-        nspans_c.append(len(spans))
+        nspans_c.append(len(doc_spans))
         bytes_c.append(int(meta["bytes_in"]))
         wall_c.append((time.perf_counter() - t_doc) * 1000.0)
+    span_type = _span_type()
+    spans_out = pa.ListArray.from_arrays(
+        pa.array(list_offsets, type=pa.int32()),
+        pa.StructArray.from_arrays(
+            [pa.array(out_kind, type=pa.string()),
+             pa.array(out_text, type=pa.string()),
+             pa.array(out_ref, type=pa.string()),
+             pa.array(out_off, type=pa.int32())],
+            fields=list(span_type)))
+    return [spans_out, pa.array(ok_c, type=pa.bool_()),
+            pa.array(mode_c, type=pa.string()),
+            pa.array(err_c, type=pa.string()),
+            pa.array(npages_c, type=pa.int32()),
+            pa.array(nspans_c, type=pa.int32()),
+            pa.array(bytes_c, type=pa.int64()),
+            pa.array(wall_c, type=pa.float64())]
 
+
+def _native_input(spans) -> bool:
+    """Whether the C batch loop reads this spans column: a list (int32
+    offsets) of structs whose kind, text and media_ref are strings (int32
+    offsets); a ``large_string`` or ``large_list`` runs in Python."""
+    import pyarrow as pa
+
+    t = spans.type
+    if not pa.types.is_list(t) or not pa.types.is_struct(t.value_type):
+        return False
+    st = t.value_type
+    return all(st.get_field_index(f) >= 0
+               and st.field(f).type == pa.string() for f in _SPAN_FIELDS)
+
+
+def _c_field(arr) -> tuple:
+    """A string array as the C loop reads it: (offset, validity or None,
+    offsets, data); an array with no offsets buffer is empty."""
+    valid, offs, data = arr.buffers()
+    if arr.null_count == 0:
+        valid = None
+    return (arr.offset, valid, offs if offs is not None else bytes(4),
+            data if data is not None else b"")
+
+
+def _str_array(n: int, col) -> object:
+    import pyarrow as pa
+
+    valid, offs, data, nulls = col
+    return pa.Array.from_buffers(
+        pa.string(), n,
+        [None if valid is None else pa.py_buffer(valid), pa.py_buffer(offs),
+         pa.py_buffer(data)], null_count=nulls)
+
+
+def _fixed_array(typ, n: int, buf) -> object:
+    import pyarrow as pa
+
+    return pa.Array.from_buffers(typ, n, [None, pa.py_buffer(buf)],
+                                 null_count=0)
+
+
+def extract_batch(spans, passwords, options: ExtractionOptions) -> list:
+    """One Arrow batch of documents → its output arrays: the spans list
+    (struct of kind, text, media_ref and offset), then per document ok,
+    mode, error, n_pages, n_spans, bytes_in and wall_ms.
+
+    ``spans`` is the batch's spans column (a list of kind, text and
+    media_ref structs; a list entry's struct and field nulls are read as
+    their fields' values), ``passwords`` its password column or None. A
+    document is ``_run_row``: ``extract_document_spans`` over its triples,
+    with its password when one is set, and an exception or a span Arrow
+    cannot encode becomes a ``kernel:`` error row.
+
+    With the C kernel loaded, options the page loop serves and an input
+    it reads, the whole batch runs in one native call (``_cscan.c``
+    ``extract_batch``): it reads the string columns' Arrow buffers,
+    decodes each latin-1 payload straight into the reader's bytes, runs
+    the reader, page tree and page loop, the HTML spans and the
+    passthrough, and writes the output columns' buffers, which
+    ``pa.Array.from_buffers`` wraps. A document it is not certain about
+    (a password, a ``b85:`` or non-latin-1 payload, encryption, a reader
+    or tree it does not serve, a page the page loop bails on, a span that
+    does not encode) is handed back whole to ``_run_row``, which stays the
+    authority. Otherwise ``_extract_batch_py`` runs the same contract in
+    Python."""
+    import pyarrow as pa
+
+    if isinstance(spans, pa.ChunkedArray):  # pragma: no cover
+        spans = spans.combine_chunks()
     ck = _content._CSCAN
-    if ck is not None and _batch_loop_serves(options):
-        ck.extract_batch(
-            kinds, texts, media_refs, list_offsets, base, passwords,
-            options.error_mode == "strict", options.newline_threshold,
-            options.space_threshold, options.tj_space_threshold,
-            options.include_artifacts,
-            getattr(options, "recipient_key", None), LINK_DENSITY_MAX,
-            MIN_BLOCK_CHARS, MAX_TREE_DEPTH, _safe_decode, run_row, cols,
-        )
-    else:
-        for row in range(len(list_offsets) - 1):
-            run_row(row)
-    return cols
+    if (ck is None or not len(spans) or not _batch_loop_serves(options)
+            or not _native_input(spans)):
+        return _extract_batch_py(spans, passwords, options)
+    pw = (passwords.to_pylist()
+          if passwords is not None and passwords.null_count < len(passwords)
+          else None)
+    flat = spans.values
+    n = len(spans)
+    (kind, text, ref, span_off, list_off, ok, mode, err, n_pages, n_spans,
+     bytes_in, wall, total) = ck.extract_batch(
+        n, spans.buffers()[1], spans.offset,
+        *(_c_field(flat.field(f)) for f in _SPAN_FIELDS), pw,
+        options.error_mode == "strict", options.newline_threshold,
+        options.space_threshold, options.tj_space_threshold,
+        options.include_artifacts, getattr(options, "recipient_key", None),
+        LINK_DENSITY_MAX, MIN_BLOCK_CHARS, MAX_TREE_DEPTH, _safe_decode,
+        lambda row, triples: _run_row(
+            triples, pw[row] if pw is not None else None, options))
+    span_type = _span_type()
+    spans_out = pa.ListArray.from_arrays(
+        _fixed_array(pa.int32(), n + 1, list_off),
+        pa.StructArray.from_arrays(
+            [_str_array(total, kind), _str_array(total, text),
+             _str_array(total, ref),
+             _fixed_array(pa.int32(), total, span_off)],
+            fields=list(span_type)))
+    return [spans_out,
+            _fixed_array(pa.bool_(), n, ok),
+            _str_array(n, mode), _str_array(n, err),
+            _fixed_array(pa.int32(), n, n_pages),
+            _fixed_array(pa.int32(), n, n_spans),
+            _fixed_array(pa.int64(), n, bytes_in),
+            _fixed_array(pa.float64(), n, wall)]
 
 
 # -- page-composition analysis (operations/page_analysis.rs) ----------------

@@ -20,6 +20,15 @@ JBIG2Decode dispatches to kernel/jbig2.py (MQ arithmetic + generic regions
 generic_region,page_buffer}.rs). JPX remains pass-through (the extraction
 hot path captures image XObjects as references — ``kind='image'`` spans —
 and never decodes them; SURVEY.md §2.2).
+
+With the C kernel loaded, the C object fetch and /Contents assembly
+decode the common chain themselves (kernel/_cscan.c ``native_decode``):
+FlateDecode through the same ``zlib.decompressobj`` calls as
+``_zlib_try`` with its size and ratio guards, LZWDecode, ASCIIHexDecode,
+chains of these and the PNG and TIFF predictors. Every other stream, and
+every stream whose first zlib try fails, decodes here: this module owns
+decode_flate's fallback ladder and stays the authority the C chain is
+tested against (tests/test_native_filters.py).
 """
 
 from __future__ import annotations

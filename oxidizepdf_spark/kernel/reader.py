@@ -16,11 +16,14 @@ strict and recovered readers alike. Each returns a complete result or a
 bail; on a bail the Python code here runs that step from the start and
 stays the authority. Encrypted documents always fetch in Python.
 
-The C batch loop (``extract_batch``) also builds readers itself: it
-allocates a ``PdfReader`` and fills every slot (the layout
-``setup_reader`` checks at import) after the header check, the C xref
-chain and the /Root and /Encrypt checks. A document any of those is not
-certain about is handed back and opens through ``__init__`` below.
+The C batch loop (``extract_batch``) keeps a document's xref entries,
+fetched objects and object-stream members in C tables, and builds a
+``PdfReader`` from them only when a Python step needs one (a FontInfo
+build for a font dict that holds a reference, a stream decode handed to
+Python): it allocates the reader and fills every slot (the layout
+``setup_reader`` checks at import). A document the header check, the C
+xref chain or the /Root and /Encrypt checks are not certain about is
+handed back and opens through ``__init__`` below.
 """
 
 from __future__ import annotations
@@ -412,6 +415,18 @@ class PdfReader:
         return root
 
 
+class _NoRefs:
+    """The reader the C batch loop passes to ``extract_font_info`` for a
+    font dict that holds no reference, which needs none: ``resolve``
+    returns its value."""
+
+    __slots__ = ()
+
+    @staticmethod
+    def resolve(value):
+        return value
+
+
 # The C object parser, bound once at import (None → pure-Python parsing).
 # The other C steps read ``_content._CSCAN`` at call time, so
 # OXPDF_NO_CKERNEL=1 (no extension at all) turns every one of them off.
@@ -419,4 +434,4 @@ _CPARSE = (
     _content._CSCAN.parse_indirect if _content._CSCAN is not None else None
 )
 if _content._CSCAN is not None:
-    _content._CSCAN.setup_reader(PdfReader)
+    _content._CSCAN.setup_reader(PdfReader, _NoRefs())

@@ -55,28 +55,19 @@ METRICS_SCHEMA = [
 ]
 
 
-def _pylist(arr) -> list:
-    """A string Arrow array's values as a Python list (None for null):
-    ``to_pylist()``'s values, without its per-element scalar boxing."""
-    return arr.to_numpy(zero_copy_only=False).tolist()
-
-
 def _extract_batches(
     batches, options: ExtractionOptions
 ):
     """mapInArrow kernel: the outer loop is one Arrow RecordBatch of
-    documents; the nested spans column is accessed through its FLAT child
-    arrays (one list conversion per child column and batch instead of a
-    python dict per span — SURVEY.md §1.2 "batched byte-stream passes").
-    The string columns and the list offsets convert through
-    ``to_numpy(zero_copy_only=False).tolist()``: the same values as
-    ``to_pylist()``, about 8× faster (4 against 33 ms per 4,000-document
-    batch on a 4-vCPU host); ``part_id`` and ``password`` keep
-    ``to_pylist()``, since ``to_numpy`` turns a null int into NaN. The
-    document loop is ``kernel.extract.extract_batch``: with the C kernel
-    loaded it runs the whole batch in one native call, handing a document
-    it does not serve back to ``extract_document_spans``. Tolerant-mode
-    errors surface as columns, never as task failures.
+    documents, and ``kernel.extract.extract_batch`` turns its spans and
+    password columns into the output columns. With the C kernel loaded
+    it runs the whole batch in one native call that reads the input
+    columns' Arrow buffers and writes the output columns' buffers, handing
+    a document it does not serve back to ``extract_document_spans``;
+    otherwise a Python loop over the columns' list conversions runs the
+    same contract. ``doc_id`` and ``part_id`` pass through as the input
+    arrays. Tolerant-mode errors, and a span Arrow cannot encode, surface
+    as columns, never as task failures.
 
     This loop is deliberately not a ``map_rows`` row function. Over the
     same Arrow batches (8,000 seed-90210 ``gen_doc`` documents in
@@ -93,68 +84,34 @@ def _extract_batches(
     ctx = TaskContext.get()
     task_partition = ctx.partitionId() if ctx is not None else -1
 
-    span_struct = pa.struct(
-        [
-            ("kind", pa.string()),
-            ("text", pa.string()),
-            ("media_ref", pa.string()),
-            ("offset", pa.int32()),
-        ]
-    )
     for batch in batches:
         n = batch.num_rows
         names = batch.schema.names
-        doc_ids = _pylist(batch.column(names.index("doc_id")))
+        doc_ids = batch.column(names.index("doc_id"))
+        if doc_ids.type != pa.string():
+            doc_ids = doc_ids.cast(pa.string())
         part_ids = (
-            batch.column(names.index("part_id")).to_pylist()
+            batch.column(names.index("part_id"))
             if "part_id" in names
-            else [0] * n
+            else pa.array([0] * n, type=pa.int32())
         )
+        if part_ids.type != pa.int32():
+            part_ids = part_ids.cast(pa.int32())
         # optional per-document password column (PasswordProvider SPI at
         # corpus scale: a table of known-credential documents carries its
         # passwords alongside the payload; null = empty/base password)
-        pw_col = (
-            batch.column(names.index("password")).to_pylist()
+        passwords = (
+            batch.column(names.index("password"))
             if "password" in names
             else None
         )
-        spans_col = batch.column(names.index("spans"))
-        if isinstance(spans_col, pa.ChunkedArray):  # pragma: no cover
-            spans_col = spans_col.combine_chunks()
-        list_offsets = spans_col.offsets.to_numpy().tolist()
-        base = spans_col.values.offset  # flattened child may carry an offset
-        flat = spans_col.values
-        kinds = _pylist(flat.field("kind"))
-        texts = _pylist(flat.field("text"))
-        refs = _pylist(flat.field("media_ref"))
-
-        (out_kind, out_text, out_ref, out_off, out_offsets, ok_c, mode_c,
-         err_c, npages_c, nspans_c, bytes_c, wall_c) = extract_batch(
-            kinds, texts, refs, list_offsets, base, pw_col, options)
-        spans_arr = pa.ListArray.from_arrays(
-            pa.array(out_offsets, type=pa.int32()),
-            pa.StructArray.from_arrays(
-                [
-                    pa.array(out_kind, type=pa.string()),
-                    pa.array(out_text, type=pa.string()),
-                    pa.array(out_ref, type=pa.string()),
-                    pa.array(out_off, type=pa.int32()),
-                ],
-                fields=list(span_struct),
-            ),
-        )
+        columns = extract_batch(
+            batch.column(names.index("spans")), passwords, options)
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array(doc_ids, type=pa.string()),
-                pa.array(part_ids, type=pa.int32()),
-                spans_arr,
-                pa.array(ok_c, type=pa.bool_()),
-                pa.array(mode_c, type=pa.string()),
-                pa.array(err_c, type=pa.string()),
-                pa.array(npages_c, type=pa.int32()),
-                pa.array(nspans_c, type=pa.int32()),
-                pa.array(bytes_c, type=pa.int64()),
-                pa.array(wall_c, type=pa.float64()),
+                doc_ids,
+                part_ids,
+                *columns,
                 pa.array([task_partition] * n, type=pa.int32()),
             ],
             names=[

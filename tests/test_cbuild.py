@@ -28,7 +28,7 @@ def test_cscan_builds_with_toolchain():
     for entry in ("xref_chain", "parse_xref_section", "get_object",
                   "flatten_pages", "page_content", "parse_indirect",
                   "run_page", "parse_cmap", "run_pages", "extract_batch",
-                  "html_spans"):
+                  "html_spans", "setup_filters", "filter_counts"):
         assert hasattr(content._CSCAN, entry), entry
 
 

@@ -2247,36 +2247,41 @@ def test_differential_batch_loop_crafted(monkeypatch):
     """The crafted skeleton, content and font cases and the catalog, one
     document each, in every error mode; the batch also runs sliced, so
     the span child carries an offset. A document whose spans Arrow cannot
-    encode is compared on extract_batch's column lists instead."""
+    encode would be an error row in both loops (see
+    test_batch_lone_surrogate_is_one_error_row)."""
     from oxidizepdf_spark.corpus import all_cases
-    from oxidizepdf_spark.kernel import extract as E
 
     helv = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica %s>>"
-    # the batch shares a FontInfo between equal font dicts that hold no
-    # reference: these pairs are equal dicts whose referenced objects, or
-    # whose float bits, differ
+    tt = b"<< /Type /Font /Subtype /TrueType /BaseFont /ABCDEF+Custom %s>>"
+    # the batch shares a FontInfo between font dicts with equal keys (the
+    # objects their references resolve to included): these pairs are
+    # equal dicts whose referenced objects (an encoding, a ToUnicode
+    # stream, widths, a descriptor), or whose float bits, differ, and a
+    # reference against the same value inline
     shared = [
         _font_pdf(helv % b"/Encoding 6 0 R ", _SHOW,
                   {6: b"<< /Differences [72 /%s] >>" % glyph})
         for glyph in (b"A", b"B")] + [
         _font_pdf(helv % b"/FirstChar 72 /LastChar 72 /Widths [%s] " % w,
-                  b"BT /F1 10 Tf (HH) Tj ET") for w in (b"0.0", b"-0.0")]
+                  b"BT /F1 10 Tf (HH) Tj ET") for w in (b"0.0", b"-0.0")] + [
+        _font_pdf(tt % b"/ToUnicode 6 0 R ", _SHOW,
+                  {6: _stm(_CMAP_1BYTE.replace(b"<0058>", dst))})
+        for dst in (b"<0058>", b"<0059>")] + [
+        _font_pdf(tt % b"/FirstChar 72 /Widths 6 0 R /FontDescriptor 7 0 R ",
+                  _SHOW, {6: b"[%s 500]" % w,
+                          7: b"<< /MissingWidth %s >>" % mw})
+        for w, mw in ((b"600", b"250"), (b"700", b"250"),
+                      (b"600", b"251"))] + [
+        _font_pdf(helv % enc, _SHOW, extra)
+        for enc, extra in (
+            (b"/Encoding << /Differences [72 /B] >> ", None),
+            (b"/Encoding 6 0 R ", {6: b"<< /Differences [72 /B] >>"}))]
     pdfs = [*_crafted_skeleton_cases().values(),
             *_page_loop_content_cases().values(),
             *_crafted_font_cases().values(), *shared,
             *(pdf for _case, pdf, _expected in all_cases())]
-    odd = [p for p in pdfs if not _utf8_spans(p)]
-    assert len(odd) == 1
-    batch = _arrow_batch([_pdf_doc(p) for p in pdfs if p not in odd])
+    batch = _arrow_batch([_pdf_doc(p) for p in pdfs])
     _assert_same_batches([batch, batch.slice(7, 40)], monkeypatch)
-    for opts in _error_modes():
-        args = (["raw_pdf"], [odd[0].decode("latin-1")], [None], [0, 1], 0,
-                None, opts)
-        got = E.extract_batch(*args)
-        with monkeypatch.context() as m:
-            m.setattr(E, "_batch_loop_serves", lambda options: False)
-            want = E.extract_batch(*args)
-        assert got[:11] == want[:11]
 
 
 def test_differential_batch_loop_corpus(monkeypatch):
@@ -2407,3 +2412,248 @@ def test_batch_loop_fast_path_taken(monkeypatch):
         if reason is not None:
             assert counts[reason] == 1, (label, counts)
     assert rows[0]["ok"], "X16 extracts through the fallback"
+
+
+# -- the Arrow boundary of extract_batch ------------------------------------
+
+
+def _batch_columns(spans, passwords, options, python: bool):
+    """extract_batch's output columns as Python lists, wall_ms dropped:
+    the C batch loop, or (``python``) the Python loop behind the same
+    contract."""
+    from oxidizepdf_spark.kernel import extract as E
+
+    if python:
+        out = E._extract_batch_py(spans, passwords, options)
+    else:
+        out = E.extract_batch(spans, passwords, options)
+    assert len(out) == 8
+    assert all(len(c) == len(spans) for c in out)
+    return [c.to_pylist() for c in out[:7]]
+
+
+def _expected_columns(spans, passwords, options):
+    """The contract spelled out per row: extract_document_spans over the
+    row's to_pylist() triples (null list and struct entries read through
+    their fields, as extract_batch reads them)."""
+    from oxidizepdf_spark.kernel.extract import _run_row
+
+    offsets = spans.offsets.to_pylist()
+    flat = spans.values
+    fields = [flat.field(f).to_pylist() for f in ("kind", "text", "media_ref")]
+    pw = passwords.to_pylist() if passwords is not None else None
+    cols = [[] for _ in range(7)]
+    for row in range(len(spans)):
+        lo, hi = offsets[row], offsets[row + 1]
+        doc, meta = _run_row(list(zip(*(f[lo:hi] for f in fields))),
+                             pw[row] if pw else None, options)
+        cols[0].append([dict(zip(("kind", "text", "media_ref", "offset"), s))
+                        for s in doc])
+        for c, k in enumerate(("ok", "mode", "error", "n_pages"), start=1):
+            cols[c].append(meta[k])
+        cols[5].append(len(doc))
+        cols[6].append(meta["bytes_in"])
+    return cols
+
+
+def _assert_boundary(spans, passwords=None, options=None, native=True):
+    """C and Python extract_batch give equal columns, equal to the
+    contract; ``native`` asserts the C loop served at least one row."""
+    from oxidizepdf_spark.kernel.textstate import ExtractionOptions
+
+    options = options or ExtractionOptions()
+    C._CSCAN.batch_counts(True)
+    got = _batch_columns(spans, passwords, options, python=False)
+    counts = C._CSCAN.batch_counts(True)
+    assert (counts["served"] > 0) == native, counts
+    assert got == _batch_columns(spans, passwords, options, python=True)
+    assert got == _expected_columns(spans, passwords, options)
+
+
+def _span_struct(docs_flat, mask=None, field_masks=None):
+    import pyarrow as pa
+
+    arrays = []
+    for i, name in enumerate(("kind", "text", "media_ref")):
+        m = field_masks.get(name) if field_masks else None
+        arrays.append(pa.array([d[i] for d in docs_flat], pa.string(),
+                               mask=None if m is None else pa.array(m)))
+    return pa.StructArray.from_arrays(
+        arrays, names=["kind", "text", "media_ref"],
+        mask=None if mask is None else pa.array(mask))
+
+
+def test_batch_boundary_sliced_offsets():
+    """Slices of the list column, and a list over a sliced struct child
+    whose fields are themselves slices: nonzero offsets at every level."""
+    import pyarrow as pa
+
+    from oxidizepdf_spark.corpus import all_cases, build_html_doc
+
+    catalog = {case: pdf for case, pdf, _ in all_cases()}
+    flat = [("text", "lead", None)]
+    for case in ("X01", "X02", "X06", "X07", "X10", "C19"):
+        flat += [("raw_pdf", catalog[case].decode("latin-1"), None),
+                 ("media", "", f"m://{case}")]
+    flat += [("raw_html", build_html_doc("body text long enough here",
+                                         with_image=True), None)]
+    child = _span_struct(flat)
+    offsets = [0, 1, 3, 3, 7, 10, 14]
+    for k in (0, 1, 3):
+        # the list over child[k:], its offsets relative to the slice
+        sl = child.slice(k)
+        offs = [o for o in offsets if o <= len(sl)]
+        lst = pa.ListArray.from_arrays(pa.array(offs, pa.int32()), sl)
+        for a, b in ((0, len(lst)), (1, len(lst)), (2, 3), (len(lst), 0)):
+            _assert_boundary(lst.slice(a, b), native=b > 0 and a < len(lst)
+                             and any(offs[i + 1] > offs[i]
+                                     for i in range(a, min(a + b, len(lst)))))
+    # fields that are slices of longer arrays inside a sliced struct
+    kinds = pa.array(["pad"] + [d[0] for d in flat], pa.string()).slice(1)
+    texts = pa.array(["pad", "pad"] + [d[1] for d in flat],
+                     pa.string()).slice(2)
+    refs = pa.array([d[2] for d in flat] + ["tail"], pa.string()).slice(
+        0, len(flat))
+    st = pa.StructArray.from_arrays([kinds, texts, refs],
+                                    names=["kind", "text", "media_ref"])
+    lst = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), st)
+    _assert_boundary(lst)
+    _assert_boundary(lst.slice(2, 3))
+
+
+def test_batch_boundary_nulls_at_each_level():
+    """A null list entry, a null struct entry (its fields still read),
+    and nulls in each field."""
+    import pyarrow as pa
+
+    from oxidizepdf_spark.corpus import all_cases
+
+    x01 = all_cases()[0][1].decode("latin-1")
+    flat = [("raw_pdf", x01, None), ("text", "t", "ref-dropped"),
+            ("media", "m", "m://1"), ("raw_pdf", x01, None),
+            ("text", "u", None), ("media", None, None), (None, "k", "r"),
+            ("raw_html", None, None), ("raw_pdf", None, None)]
+    child = _span_struct(
+        flat, mask=[False, False, True, False, False, False, False, False,
+                    False],
+        field_masks={"kind": [False] * 6 + [True, False, False],
+                     "text": [False] * 4 + [True] + [False] * 4,
+                     "media_ref": [True] + [False] * 8})
+    lst = pa.ListArray.from_arrays(
+        pa.array([0, 3, 3, 5, 6, 7, 8, 9], pa.int32()), child,
+        mask=pa.array([False, True, False, False, False, False, False]))
+    _assert_boundary(lst)
+
+
+def test_batch_boundary_large_string_and_payload_kinds():
+    """A large_string spans column runs in Python with the same outputs;
+    non-latin-1 and b85: payloads are handed back and decode as the
+    Python loop decodes them."""
+    import base64
+
+    import pyarrow as pa
+
+    from oxidizepdf_spark.corpus import all_cases
+    from oxidizepdf_spark.kernel.textstate import ExtractionOptions
+
+    catalog = {case: pdf for case, pdf, _ in all_cases()}
+    docs = [[("raw_pdf", catalog["X01"].decode("latin-1"), None)],
+            [("raw_pdf", "b85:" + base64.b85encode(catalog["X02"]).decode(),
+              None)],
+            [("raw_pdf", catalog["X01"].decode("latin-1") + "\u2603", None)],
+            [("raw_pdf", catalog["X01"].decode("latin-1") + "\u00e9\u00ff",
+              None)],
+            [("text", "caf\u00e9 \u2603 \U0001f600", None)]]
+    span = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                      ("media_ref", pa.string())])
+    spans = pa.array([[dict(zip(("kind", "text", "media_ref"), s))
+                       for s in d] for d in docs], pa.list_(span))
+    _assert_boundary(spans)
+    large = pa.struct([("kind", pa.large_string()),
+                       ("text", pa.large_string()),
+                       ("media_ref", pa.large_string())])
+    big = spans.cast(pa.list_(large))
+    opts = ExtractionOptions()
+    got = _batch_columns(big, None, opts, python=False)
+    assert got == _batch_columns(spans, None, opts, python=False)
+    assert got == _batch_columns(big, None, opts, python=True)
+
+
+def test_batch_boundary_empty_and_all_handed_back():
+    import pyarrow as pa
+
+    from oxidizepdf_spark.corpus import all_cases, build_encrypted_pdf
+
+    span = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                      ("media_ref", pa.string())])
+    empty = pa.array([], pa.list_(span))
+    from oxidizepdf_spark.kernel import extract as E
+    from oxidizepdf_spark.kernel.textstate import ExtractionOptions
+
+    out = E.extract_batch(empty, None, ExtractionOptions())
+    assert [len(c) for c in out] == [0] * 8
+    assert out[0].type == E._extract_batch_py(
+        empty, None, ExtractionOptions())[0].type
+    locked = build_encrypted_pdf("locked text", user_pw=b"pw")
+    catalog = {case: pdf for case, pdf, _ in all_cases()}
+    docs = [[{"kind": "raw_pdf", "text": p.decode("latin-1"),
+              "media_ref": None}]
+            for p in (locked, catalog["X16"], locked, b"%PDF-1.4 junk")]
+    spans = pa.array(docs, pa.list_(span))
+    _assert_boundary(spans, native=False)
+    _assert_boundary(spans, pa.array(["pw", None, "wrong", None]),
+                     native=False)
+
+
+def test_batch_lone_surrogate_is_one_error_row(monkeypatch):
+    """A span text with a lone surrogate ends as that document's
+    ``kernel:UnicodeEncodeError`` row on the C and Python paths alike,
+    never as a failed batch, and every other row stays ok. No glyph name
+    or CMap of the engine maps to a surrogate any more (the Standard-14
+    font whose /Differences name /uniD800 decodes without one), so a
+    glyph mapper that does is installed for the test, in the Python font
+    build and in the C code tables."""
+    import pyarrow as pa
+
+    from oxidizepdf_spark.corpus import all_cases
+    from oxidizepdf_spark.kernel import afm_widths, cmap, encodings, fonts
+    from oxidizepdf_spark.kernel.textstate import ExtractionOptions
+
+    def setup(glyph):
+        C._CSCAN.setup_fonts(
+            cmap.CMap, glyph,
+            "".join(encodings.decode_winansi_byte(b) for b in range(256)),
+            "".join(encodings.decode_macroman_byte(b) for b in range(256)),
+            afm_widths.TABLES, fonts.extract_font_info,
+            fonts.fallback_encoding)
+
+    plain = encodings.glyph_name_to_unicode
+
+    def odd(name):
+        return "\ud800" if name == "surrogate.test" else plain(name)
+
+    helv = (b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding "
+            b"<< /Differences [66 /surrogate.test] >> >>")
+    surrogate = _font_pdf(helv, b"BT /F1 12 Tf 72 700 Td (ABC) Tj ET")
+    std14 = _crafted_font_cases()["std14_differences"]
+    x01 = all_cases()[0][1]
+    span = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                      ("media_ref", pa.string())])
+    docs = [x01, surrogate, x01, std14, x01]
+    spans = pa.array([[{"kind": "raw_pdf", "text": p.decode("latin-1"),
+                        "media_ref": None}] for p in docs], pa.list_(span))
+    monkeypatch.setattr(fonts, "glyph_name_to_unicode", odd)
+    setup(odd)
+    try:
+        _assert_boundary(spans)
+        cols = _batch_columns(spans, None, ExtractionOptions(), python=False)
+    finally:
+        setup(plain)
+    texts, ok, err = cols[0], cols[1], cols[3]
+    assert ok == [True, False, True, True, True]
+    assert err[1] == ("kernel:UnicodeEncodeError:'utf-8' codec can't encode "
+                      "character '\\ud800' in position 1: surrogates not "
+                      "allowed")
+    assert texts[1] == []
+    assert not any(0xD800 <= ord(ch) <= 0xDFFF
+                   for s in texts[3] for ch in s["text"])

@@ -314,8 +314,15 @@ def test_default_options_shared_and_unchanged(monkeypatch):
     for in_row, _ in generate_corpus(n_docs=60, seed=5):
         E.extract_document_spans(
             [(s["kind"], s["text"], s["media_ref"]) for s in in_row["spans"]])
-    E.extract_batch(["raw_pdf"], [all_cases()[0][1].decode("latin-1")],
-                    [None], [0, 1], 0, ["pw"], E._DEFAULT_OPTIONS)
+    import pyarrow as pa
+
+    span = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                      ("media_ref", pa.string())])
+    E.extract_batch(
+        pa.array([[{"kind": "raw_pdf", "media_ref": None,
+                    "text": all_cases()[0][1].decode("latin-1")}]],
+                 pa.list_(span)),
+        pa.array(["pw"]), E._DEFAULT_OPTIONS)
     assert built == []
     assert {k: getattr(E._DEFAULT_OPTIONS, k) for k in fresh.__slots__} == {
         k: getattr(fresh, k) for k in fresh.__slots__}

@@ -28,8 +28,9 @@ Then the batch leg: ``pipeline._extract_batches`` over the same corpus
 staged as 4,000-row Arrow batches, in µs/doc at the best of ``--reps``,
 with the C batch loop and with it forced off (the per-document Python
 loop over ``extract_document_spans``, every other C step still on). Its
-figures and the batch loop's served and hand-back counts by reason
-(``batch_counts``) join the JSON.
+figures, the batch loop's served and hand-back counts by reason
+(``batch_counts``) and the stream filters' native and Python decodes by
+call site (``filter_counts``) over one native pass join the JSON.
 
 The replay (and so perfbench's ``kernel.*`` layers) times the Python
 per-page steps one call at a time, so it sees neither the C page loop
@@ -132,24 +133,29 @@ def native_share(items, options) -> float | None:
     return 1.0 - built / pages if pages else None
 
 
+def _span_type():
+    import pyarrow as pa
+
+    return pa.list_(pa.struct([("kind", pa.string()), ("text", pa.string()),
+                               ("media_ref", pa.string())]))
+
+
 def native_docs(items, options) -> float | None:
     """The share of the documents of ``items`` the C batch loop served,
     from its counters over one ``extract_batch`` call."""
+    import pyarrow as pa
+
     from oxidizepdf_spark.kernel import content
     from oxidizepdf_spark.kernel.extract import extract_batch
 
     ck = content._CSCAN
     if ck is None or not items:
         return None
-    kinds, texts, refs, offsets = [], [], [], [0]
-    for triples, _raw in items:
-        for k, t, m in triples:
-            kinds.append(k)
-            texts.append(t)
-            refs.append(m)
-        offsets.append(len(kinds))
+    spans = pa.array(
+        [[{"kind": k, "text": t, "media_ref": m} for k, t, m in triples]
+         for triples, _raw in items], _span_type())
     ck.batch_counts(True)
-    extract_batch(kinds, texts, refs, offsets, 0, None, options)
+    extract_batch(spans, None, options)
     counts = ck.batch_counts(True)
     return counts["served"] / sum(counts.values())
 
@@ -234,15 +240,12 @@ def batch_leg(seed: int, reps: int) -> dict:
 
     cases = all_cases()
     rows = [gen_doc(i, seed, cases)[0] for i in range(N_DOCS)]
-    span_type = pa.list_(pa.struct([("kind", pa.string()),
-                                    ("text", pa.string()),
-                                    ("media_ref", pa.string())]))
     batches = [
         pa.RecordBatch.from_arrays(
             [pa.array([r["doc_id"] for r in chunk], pa.string()),
              pa.array([r["part_id"] for r in chunk], pa.int32()),
              pa.array([[{k: s[k] for k in ("kind", "text", "media_ref")}
-                        for s in r["spans"]] for r in chunk], span_type)],
+                        for s in r["spans"]] for r in chunk], _span_type())],
             names=["doc_id", "part_id", "spans"])
         for chunk in (rows[i:i + BATCH_ROWS]
                       for i in range(0, N_DOCS, BATCH_ROWS))]
@@ -262,8 +265,10 @@ def batch_leg(seed: int, reps: int) -> dict:
     ck = content._CSCAN
     if ck is not None:
         ck.batch_counts(True)
+        ck.filter_counts(True)
     run(True)
-    out = {"batch_counts": ck.batch_counts(True) if ck else None}
+    out = {"batch_counts": ck.batch_counts(True) if ck else None,
+           "filter_counts": ck.filter_counts(True) if ck else None}
     run(False)
     best = {True: float("inf"), False: float("inf")}
     for _ in range(max(reps, 1)):
