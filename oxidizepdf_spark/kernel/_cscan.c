@@ -4716,8 +4716,9 @@ static PyObject *html_spans(PyObject *self, PyObject *args)
  * The chain's entries, by object number, in insertion order (the order
  * the xref dict keeps), with an open-addressing index.  In the batch loop
  * an entry also holds the object fetched for it and, for an object
- * stream, its parsed members: the reader's _cache and _objstm_cache, kept
- * here until a Python step needs the reader (doc_reader). */
+ * stream, its parsed members: what a reader keeps in _cache and
+ * _objstm_cache.  The table is complete when chain_tab returns; a fetch
+ * writes into its entries but never adds one. */
 typedef struct {
     long long num, a, b, gen; /* gen: the generation obj was fetched at */
     PyObject *obj;            /* the fetched object, or NULL */
@@ -6414,29 +6415,25 @@ static PyObject *xref_chain(PyObject *self, PyObject *args)
     return Py_BuildValue("(NNO)", entries, trailer, mode);
 }
 
-/* PdfReader's slots, in the order reader_new takes their values */
-enum { RS_DATA, RS_VERSION, RS_XREF, RS_TRAILER, RS_MODE, RS_LENIENT,
-       RS_DECRYPTOR, RS_RECIPIENT, RS_CACHE, RS_OBJSTM, RS_RESOLVING,
-       RS_FIC, RS_MEMO, RS_N };
-static PyObject *reader_new(PyObject *vals[RS_N]); /* below */
-
-/* one reader's state for the duration of a C call.  Over a PdfReader
- * (doc_open, tab 0): borrowed views into its slots, held by new refs.  In
- * the batch loop (tab 1) there is no reader yet: the xref table holds the
- * entries, the fetched objects and the object-stream members, res the
- * (num, gen) pairs being fetched (the reader's _resolving), and vals the
- * reader's other slots, until doc_reader builds the reader from them
- * (tab -1: the reader is the doc's own) and the fetch goes on over its
- * dicts. */
+/* one document's state for the duration of a C call, in one of two
+ * modes.  Over a PdfReader (doc_open, tab 0): borrowed views into its
+ * slots, held by new refs.  Over the tables (the batch loop, tab 1): the
+ * xref table holds the entries, the fetched objects and the object-stream
+ * members, and res the (num, gen) pairs being fetched (the reader's
+ * _resolving).  A Python step that needs a reader (a FontInfo build, a
+ * content stream decode handed to Python) gets one from the batch's
+ * factory, built once per document through PdfReader's constructor
+ * (doc_reader); the fetch goes on over the tables. */
 typedef struct {
     PyObject *reader, *data, *xref, *cache, *resolving, *objstm;
+    PyObject *factory; /* tab 1: PdfReader(data, ...) (borrowed) */
     const unsigned char *d;
     Py_ssize_t n;
     int lenient, tab;
+    int objstm_py; /* tab 1: a container's decode was Python's (a bail) */
     XTab xt;
     long long *res; /* num, gen pairs */
     Py_ssize_t nres, capres;
-    PyObject *vals[RS_N];
 } Doc;
 
 static void doc_close(Doc *doc)
@@ -6449,12 +6446,10 @@ static void doc_close(Doc *doc)
     xt_free(&doc->xt);
     free(doc->res);
     doc->res = NULL;
-    for (int i = 0; i < RS_N; i++)
-        Py_CLEAR(doc->vals[i]);
-    if (doc->tab >= 0) /* a reader doc_reader built is the doc's own */
-        doc->reader = NULL;
-    else
+    if (doc->tab) /* a reader doc_reader built is the doc's own */
         Py_CLEAR(doc->reader);
+    else
+        doc->reader = NULL;
 }
 
 static PyObject *okey(long long num, long long gen)
@@ -6462,50 +6457,12 @@ static PyObject *okey(long long num, long long gen)
     return Py_BuildValue("(LL)", num, gen);
 }
 
-/* the PdfReader of the document: in the batch loop, built on first use
- * from the tables (borrowed; NULL on an exception) */
+/* the PdfReader of the document: over the tables, the factory's, built
+ * on first use (borrowed; NULL on an exception) */
 static PyObject *doc_reader(Doc *doc)
 {
-    if (doc->tab <= 0)
-        return doc->reader;
-    PyObject *xref = xt_dict(&doc->xt), *cache = PyDict_New(),
-             *objstm = PyDict_New(), *resolving = PySet_New(NULL);
-    int ok = xref && cache && objstm && resolving;
-    for (Py_ssize_t k = 0; ok && k < doc->xt.n; k++) {
-        XEnt *x = &doc->xt.e[k];
-        PyObject *key = x->obj ? okey(x->num, x->gen) : NULL;
-        PyObject *num = x->members ? PyLong_FromLongLong(x->num) : NULL;
-        ok = (!x->obj || (key && PyDict_SetItem(cache, key, x->obj) == 0)) &&
-             (!x->members ||
-              (num && PyDict_SetItem(objstm, num, x->members) == 0));
-        Py_XDECREF(key);
-        Py_XDECREF(num);
-    }
-    for (Py_ssize_t i = 0; ok && i < doc->nres; i++) {
-        PyObject *key = okey(doc->res[2 * i], doc->res[2 * i + 1]);
-        ok = key && PySet_Add(resolving, key) == 0;
-        Py_XDECREF(key);
-    }
-    if (!ok) {
-        Py_XDECREF(xref);
-        Py_XDECREF(cache);
-        Py_XDECREF(objstm);
-        Py_XDECREF(resolving);
-        return NULL;
-    }
-    doc->xref = Py_NewRef(xref);
-    doc->cache = Py_NewRef(cache);
-    doc->objstm = Py_NewRef(objstm);
-    doc->resolving = Py_NewRef(resolving);
-    doc->vals[RS_XREF] = xref;
-    doc->vals[RS_CACHE] = cache;
-    doc->vals[RS_OBJSTM] = objstm;
-    doc->vals[RS_RESOLVING] = resolving;
-    doc->reader = reader_new(doc->vals); /* steals vals */
-    memset(doc->vals, 0, sizeof(doc->vals));
-    xt_free(&doc->xt);
-    doc->nres = 0;
-    doc->tab = -1;
+    if (!doc->reader)
+        doc->reader = PyObject_CallOneArg(doc->factory, doc->data);
     return doc->reader;
 }
 
@@ -6514,7 +6471,7 @@ static PyObject *doc_reader(Doc *doc)
 static int res_mark(Doc *doc, PyObject *key, long long num, long long gen,
                     int add)
 {
-    if (doc->tab <= 0) {
+    if (!doc->tab) {
         PyObject *k = key ? Py_NewRef(key) : okey(num, gen);
         int rc = !k ? -1 : add ? PySet_Add(doc->resolving, k)
                                : PySet_Discard(doc->resolving, k) < 0 ? -1 : 0;
@@ -6668,9 +6625,13 @@ static PyObject *objstm_members(Doc *doc, PyObject *key, long long num,
     int raised;
     dec = stream_native(stm, FS_OBJSTM);
     if (!dec && !PyErr_Occurred()) {
-        PyObject *reader = doc_reader(doc);
-        resolve = reader ? PyObject_GetAttr(reader, s_resolve) : NULL;
-        dec = resolve ? stream_decode(stm, resolve, &raised) : NULL;
+        /* Python's decode runs over the reader's resolve; over the tables
+         * it would run in the middle of this fetch, which a reader's
+         * _resolving does not hold: a bail */
+        if (doc->tab)
+            doc->objstm_py = 1;
+        else if ((resolve = PyObject_GetAttr(doc->reader, s_resolve)))
+            dec = stream_decode(stm, resolve, &raised);
     }
     if (!dec) {
         *bail = !PyErr_Occurred();
@@ -6737,7 +6698,10 @@ static int exact_ll(PyObject *v, long long *out)
     return 1;
 }
 
-/* get_object over the batch loop's tables (doc->tab > 0): see doc_fetch */
+/* get_object over the batch loop's tables (doc->tab): see doc_fetch.
+ * An entry keeps the object fetched for it and, for an object stream's
+ * container, its members; a reader built for a Python step never takes
+ * them over. */
 static PyObject *tab_fetch(Doc *doc, long long num, long long gen, int *bail)
 {
     XEnt *x = xt_find(&doc->xt, num);
@@ -6802,16 +6766,8 @@ static PyObject *tab_fetch(Doc *doc, long long num, long long gen, int *bail)
         }
         if (!parsed) {
             parsed = objstm_members(doc, NULL, num, gen, container, bail);
-            /* the fetch may have built the reader: its dict, else the
-             * container's entry */
-            int rc = 0;
-            if (parsed && doc->tab < 0)
-                rc = PyDict_SetItem(doc->objstm, container, parsed);
-            else if (parsed && (cx = xt_find(&doc->xt, cnum)) != NULL) {
+            if (parsed && cx)
                 Py_XSETREF(cx->members, Py_NewRef(parsed));
-            }
-            if (rc < 0)
-                Py_CLEAR(parsed);
         }
         Py_DECREF(container);
         if (!parsed)
@@ -6826,17 +6782,8 @@ static PyObject *tab_fetch(Doc *doc, long long num, long long gen, int *bail)
         if (!obj)
             return NULL;
     }
-    /* cached where the reader keeps it, or in the entry */
-    if (doc->tab < 0) {
-        PyObject *key = okey(num, gen);
-        int rc = key ? PyDict_SetItem(doc->cache, key, obj) : -1;
-        Py_XDECREF(key);
-        if (rc < 0)
-            Py_CLEAR(obj);
-    } else if ((x = xt_find(&doc->xt, num)) != NULL) {
-        Py_XSETREF(x->obj, Py_NewRef(obj));
-        x->gen = gen;
-    }
+    Py_XSETREF(x->obj, Py_NewRef(obj));
+    x->gen = gen;
     return obj;
 }
 
@@ -6844,7 +6791,7 @@ static PyObject *tab_fetch(Doc *doc, long long num, long long gen, int *bail)
  * entries: new ref, or NULL with *bail set (no exception) / an exception */
 static PyObject *doc_fetch(Doc *doc, PyObject *num, PyObject *gen, int *bail)
 {
-    if (doc->tab > 0) {
+    if (doc->tab) {
         long long n, g;
         if (!exact_ll(num, &n) || !exact_ll(gen, &g)) {
             *bail = 1;
@@ -8504,7 +8451,6 @@ static PyObject *parse_cmap(PyObject *self, PyObject *data)
 }
 
 static PyObject *g_extract_font_info; /* fonts.extract_font_info */
-static PyObject *g_no_refs; /* reader._NoRefs(): resolve is the identity */
 static PyObject *g_fallback_enc;      /* fonts.fallback_encoding */
 
 /* setup_fonts(CMap, glyph_name_to_unicode, winansi, macroman, afm_tables,
@@ -9136,8 +9082,8 @@ static PyObject *font_key(FKey *f, PyObject *v, int depth)
  * extract_batch, font dicts with equal font_keys build the same FontInfo
  * in every document (extract_font_info reads only the dict and the
  * objects its references resolve to), so the FontInfo is shared through
- * P->shared_fi for the whole batch; a dict that holds no reference needs
- * no reader for its build either: g_no_refs stands in for it. */
+ * P->shared_fi for the whole batch.  A miss builds it over the
+ * document's reader (doc_reader). */
 static PyObject *font_info(Pages *P, PyObject *fobj, int *bail)
 {
     PyObject *fd = doc_resolve(&P->doc, fobj, bail);
@@ -9145,13 +9091,11 @@ static PyObject *font_info(Pages *P, PyObject *fobj, int *bail)
         return NULL;
     PyObject *fi = Py_None, *key = NULL;
     if (PyDict_Check(fd)) {
-        FKey f = {NULL, 0};
-        int refs = 0;
         if (P->shared_fi) {
+            FKey f = {NULL, 0};
             key = font_key(&f, fd, 0);
             if (!key && !PyErr_Occurred()) {
                 FKey g = {&P->doc, 0};
-                refs = 1;
                 key = font_key(&g, fd, 0);
             }
         }
@@ -9159,8 +9103,7 @@ static PyObject *font_info(Pages *P, PyObject *fobj, int *bail)
         if (fi)
             Py_INCREF(fi);
         else if (!PyErr_Occurred()) {
-            PyObject *reader =
-                key && !refs ? g_no_refs : doc_reader(&P->doc);
+            PyObject *reader = doc_reader(&P->doc);
             fi = reader ? PyObject_CallFunctionObjArgs(g_extract_font_info,
                                                        fd, reader, NULL)
                         : NULL;
@@ -9405,96 +9348,36 @@ static PyObject *run_pages(PyObject *self, PyObject *args)
  * into the document's C table after the header check, the /Root and
  * /Encrypt checks, the page tree and the page loop (run_one per page);
  * for an HTML payload the tokenizer and extract_html_spans' filter; and
- * the text/media passthrough, copied column to column.  The PdfReader is
- * built from the tables (doc_reader) only when a Python step needs it.
- * It times wall_ms itself.  A document it is not certain about is handed
+ * the text/media passthrough, copied column to column.  No PdfReader
+ * exists unless a Python step needs one (a FontInfo build on a shared_fi
+ * miss, a content stream decode handed to Python): the batch's reader
+ * factory then builds it through PdfReader's constructor, once per
+ * document (doc_reader), and the C fetch goes on over the tables.  It
+ * times wall_ms itself.  A document it is not certain about is handed
  * back whole, before anything of it is kept, to the Python row function
  * (extract_document_spans with a fresh reader, which stays the
  * authority): a password, a b85: or non-latin-1 payload, a reader that
  * raises or bails (a missing header or /Root, an xref chain chain_tab
  * bails on, a recovered reader in strict mode), encryption, a page tree
- * flatten_doc does not serve, a page run_one bails on, an HTML document
- * html_events bails on, and a span that does not encode as UTF-8.  The
+ * flatten_doc does not serve, a page run_one bails on, an object stream
+ * whose container filter the native chain declines (its decode would run
+ * in the middle of a fetch: objstm), an HTML document html_events bails
+ * on, and a span that does not encode as UTF-8.  The
  * documents served and handed back, by reason, are counted in
  * g_batch_counts (batch_counts reads them). */
 
 enum { HB_SERVED, HB_PASSWORD, HB_B85, HB_PAYLOAD, HB_READER, HB_ENCRYPTED,
-       HB_TREE, HB_PAGE, HB_HTML, HB_N };
+       HB_TREE, HB_PAGE, HB_OBJSTM, HB_HTML, HB_N };
 static const char *const hb_names[HB_N] = {
     "served", "password", "b85", "payload", "reader", "encrypted", "tree",
-    "page", "html"};
+    "page", "objstm", "html"};
 static long long g_batch_counts[HB_N];
 
-/* PdfReader's slot names, in RS_ order */
-static const char *const rs_names[RS_N] = {
-    "data", "version", "xref", "trailer", "mode", "lenient", "decryptor",
-    "_recipient_key", "_cache", "_objstm_cache", "_resolving",
-    "_fontinfo_cache", "_span_decode_memo"};
-static PyTypeObject *g_reader_cls;
-static Py_ssize_t g_reader_off[RS_N];
 static PyObject *k_Encrypt, *g_b85_str;
 
-/* setup_reader(PdfReader, no_refs): record the offset of each slot
- * reader_new fills, and the stand-in reader font_info passes for a font
- * dict that holds no reference.  A class whose slots are not exactly
- * these object slots raises (the C kernel then stays off). */
-static PyObject *setup_reader(PyObject *self, PyObject *args)
-{
-    PyObject *cls, *no_refs;
-    if (!PyArg_ParseTuple(args, "OO", &cls, &no_refs))
-        return NULL;
-    if (!PyType_Check(cls)) {
-        PyErr_SetString(PyExc_TypeError, "PdfReader must be a class");
-        return NULL;
-    }
-    PyTypeObject *t = (PyTypeObject *)cls;
-    if (t->tp_dictoffset || t->tp_weaklistoffset || t->tp_itemsize ||
-        t->tp_basicsize !=
-            (Py_ssize_t)(sizeof(PyObject) + RS_N * sizeof(PyObject *))) {
-        PyErr_SetString(PyExc_TypeError,
-                        "PdfReader's slots are not the native layout");
-        return NULL;
-    }
-    for (int i = 0; i < RS_N; i++) {
-        PyObject *d = PyObject_GetAttrString(cls, rs_names[i]);
-        if (!d)
-            return NULL;
-        PyMemberDef *m = Py_IS_TYPE(d, &PyMemberDescr_Type)
-                             ? ((PyMemberDescrObject *)d)->d_member
-                             : NULL;
-        int ok = m && m->type == T_OBJECT_EX && !(m->flags & READONLY);
-        if (ok)
-            g_reader_off[i] = m->offset;
-        Py_DECREF(d);
-        if (!ok) {
-            PyErr_Format(PyExc_TypeError, "PdfReader.%s is not an object slot",
-                         rs_names[i]);
-            return NULL;
-        }
-    }
-    install_global((PyObject **)&g_reader_cls, cls);
-    install_global(&g_no_refs, no_refs);
-    Py_RETURN_NONE;
-}
-
-/* a PdfReader with its slots set to vals (references stolen) */
-static PyObject *reader_new(PyObject *vals[RS_N])
-{
-    PyObject *r = g_reader_cls->tp_alloc(g_reader_cls, 0);
-    for (int i = 0; i < RS_N; i++) {
-        if (r)
-            *(PyObject **)((char *)r + g_reader_off[i]) = vals[i];
-        else
-            Py_DECREF(vals[i]);
-    }
-    return r;
-}
-
-/* PdfReader._parse_header: the first %PDF-x.y ending within the first
- * 1 KB.  1 = found (*maj, *min set), 0 = missing or too long for a long
- * (Python decides). */
-static int pdf_header(const unsigned char *d, Py_ssize_t n, long *maj,
-                      long *min)
+/* PdfReader._parse_header's check: a %PDF-x.y ending within the first
+ * 1 KB.  1 = found, 0 = missing. */
+static int pdf_header(const unsigned char *d, Py_ssize_t n)
 {
     Py_ssize_t end = n < 1024 ? n : 1024;
     for (Py_ssize_t p = 0; p + 5 < end; p++) {
@@ -9505,16 +9388,8 @@ static int pdf_header(const unsigned char *d, Py_ssize_t n, long *maj,
             i++;
         if (i == a || i >= end || d[i] != '.')
             continue;
-        Py_ssize_t b = ++i;
-        while (i < end && d[i] >= '0' && d[i] <= '9')
-            i++;
-        if (i == b)
-            continue;
-        if (b - 1 - a > 9 || i - b > 9)
-            return 0;
-        *maj = strtol((const char *)d + a, NULL, 10);
-        *min = strtol((const char *)d + b, NULL, 10);
-        return 1;
+        if (i + 1 < end && d[i + 1] >= '0' && d[i + 1] <= '9')
+            return 1;
     }
     return 0;
 }
@@ -9737,7 +9612,7 @@ static void sout_free(SOut *s)
 }
 
 typedef struct {
-    PyObject *recipient_key, *safe_decode;
+    PyObject *reader_factory, *safe_decode;
     int strict, inc_art;
     double nl_thr, sp_thr, tj_thr, link_density_max;
     Py_ssize_t min_block_chars;
@@ -9816,12 +9691,11 @@ static int batch_pdf(Batch *B, const char *p, Py_ssize_t len, int *reason,
         return hand_back(reason, why);
     const unsigned char *u = (const unsigned char *)PyBytes_AS_STRING(data);
     Py_ssize_t n = PyBytes_GET_SIZE(data);
-    long maj, min;
     Pages P;
     memset(&P, 0, sizeof(P));
     PyObject *trailer = NULL, *rmode = NULL, *pages = NULL;
     int rc = 0, bail = 0;
-    if (pdf_header(u, n, &maj, &min)) /* also the empty file */
+    if (pdf_header(u, n)) /* also the empty file */
         rc = chain_tab(data, !B->strict, &P.doc.xt, &trailer, &rmode);
     if (rc <= 0) {
         Py_DECREF(data);
@@ -9833,28 +9707,18 @@ static int batch_pdf(Batch *B, const char *p, Py_ssize_t len, int *reason,
         rc = hand_back(reason, has_enc > 0 ? HB_ENCRYPTED : HB_READER);
         goto out;
     }
-    /* the reader's slots but the four the tables stand for (doc_reader) */
-    PyObject **v = P.doc.vals;
-    v[RS_DATA] = Py_NewRef(data);
-    v[RS_VERSION] = Py_BuildValue("(ll)", maj, min);
-    v[RS_TRAILER] = Py_NewRef(trailer);
-    v[RS_MODE] = Py_NewRef(rmode);
-    v[RS_LENIENT] = Py_NewRef(B->strict ? Py_False : Py_True);
-    v[RS_DECRYPTOR] = Py_NewRef(Py_None);
-    v[RS_RECIPIENT] = Py_NewRef(B->recipient_key);
-    v[RS_FIC] = PyDict_New();
-    v[RS_MEMO] = PyDict_New();
-    if (!v[RS_VERSION] || !v[RS_FIC] || !v[RS_MEMO]) {
+    P.fic = PyDict_New();
+    P.dmemo = PyDict_New();
+    if (!P.fic || !P.dmemo) {
         rc = hand_back(reason, HB_READER);
         goto out;
     }
     P.doc.tab = 1;
+    P.doc.factory = B->reader_factory;
     P.doc.data = Py_NewRef(data);
     P.doc.d = u;
     P.doc.n = n;
     P.doc.lenient = !B->strict;
-    P.fic = v[RS_FIC];
-    P.dmemo = v[RS_MEMO];
     P.safe_decode = B->safe_decode;
     P.spans = B->payload_spans;
     P.shared_fi = B->shared_fi;
@@ -9881,8 +9745,12 @@ static int batch_pdf(Batch *B, const char *p, Py_ssize_t len, int *reason,
                 *mode = rmode;
         }
     }
+    if (rc == 0 && P.doc.objstm_py)
+        *reason = HB_OBJSTM;
 out:
     Py_XDECREF(pages);
+    Py_XDECREF(P.fic);
+    Py_XDECREF(P.dmemo);
     doc_close(&P.doc);
     Py_DECREF(trailer);
     Py_DECREF(data);
@@ -10061,12 +9929,14 @@ out:
 
 /* extract_batch(n, list_offsets, list_offset, kind, text, media_ref,
  * passwords, strict, newline_threshold, space_threshold,
- * tj_space_threshold, include_artifacts, recipient_key, link_density_max,
+ * tj_space_threshold, include_artifacts, reader_factory, link_density_max,
  * min_block_chars, max_tree_depth, _safe_decode, run_row): the batch's n
  * documents.  list_offsets is the spans list array's int32 offsets
  * buffer, list_offset its array offset; kind, text and media_ref are the
  * struct fields' (offset, validity or None, offsets, data); passwords a
- * list or None.  A document handed back runs as run_row(row, triples),
+ * list or None; reader_factory(data) builds a document's PdfReader for a
+ * Python step (doc_reader).  A document handed back runs as
+ * run_row(row, triples),
  * which returns its (spans, meta).  Returns the output columns: the span
  * kind, text and media_ref as (validity or None, offsets, data, nulls),
  * the span offsets, the list offsets, then ok (one byte per row), mode and
@@ -10082,12 +9952,11 @@ static PyObject *extract_batch(PyObject *self, PyObject *args)
                           &loff, &PyTuple_Type, &kind_t, &PyTuple_Type,
                           &text_t, &PyTuple_Type, &ref_t, &passwords,
                           &B.strict, &B.nl_thr, &B.sp_thr, &B.tj_thr,
-                          &B.inc_art, &B.recipient_key, &B.link_density_max,
+                          &B.inc_art, &B.reader_factory, &B.link_density_max,
                           &B.min_block_chars, &B.max_depth, &B.safe_decode,
                           &run_row))
         return NULL;
-    if (!g_reader_cls || !g_no_refs || !g_extract_font_info || !g_cmap_cls ||
-        !g_scan_bi || !g_unescape) {
+    if (!g_extract_font_info || !g_cmap_cls || !g_scan_bi || !g_unescape) {
         PyErr_SetString(PyExc_RuntimeError,
                         "extract_batch requires the setup calls");
         return NULL;
@@ -10561,8 +10430,6 @@ static PyMethodDef methods[] = {
     {"run_pages", run_pages, METH_VARARGS,
      "run a document's pages natively from start; the first page not "
      "served, or None = the document is not served"},
-    {"setup_reader", setup_reader, METH_VARARGS,
-     "record PdfReader's slot layout for extract_batch"},
     {"extract_batch", extract_batch, METH_VARARGS,
      "run one Arrow batch's documents; a document not served runs as "
      "run_row(row)"},

@@ -51,18 +51,20 @@ pinned to its Python original by the differential tests
   xref chain into a C table that also holds the fetched objects and
   object-stream members, the page tree and the page loop, the HTML spans
   and the text/media passthrough, writing the output columns' buffers,
-  with wall_ms timed in C and a FontInfo shared across the batch's
-  documents for a font dict that holds no reference. The PdfReader (the
-  object allocated here with its slots filled, the layout
-  ``setup_reader`` checks) is built from the tables only when a Python
-  step needs it: a FontInfo build for a font dict that holds a
-  reference, or a stream decode handed to Python. A document is handed
-  back whole to extract_document_spans (a fresh reader, Python the
-  authority) for a password, a ``b85:`` or non-latin-1 payload, a reader
-  that raises or bails (no header or /Root, a chain ``xref_chain`` bails
-  on, a recovered reader in strict mode), encryption, a tree
-  ``flatten_pages`` does not serve, a page the page loop bails on, HTML
-  ``html_events`` bails on, or a span Arrow cannot encode;
+  with wall_ms timed in C and one FontInfo shared across the batch's
+  documents for font dicts with equal keys. No PdfReader exists unless
+  a Python step needs one (a FontInfo build on a cache miss, or a
+  content stream decode handed to Python): the reader factory
+  extract.extract_batch passes in then builds it through PdfReader's
+  constructor, once per document, and the C fetch stays on the tables.
+  A document is handed back whole to extract_document_spans (a fresh
+  reader, Python the authority) for a password, a ``b85:`` or
+  non-latin-1 payload, a reader that raises or bails (no header or
+  /Root, a chain ``xref_chain`` bails on, a recovered reader in strict
+  mode), encryption, a tree ``flatten_pages`` does not serve, a page the
+  page loop bails on, an object stream whose container filter the
+  native chain declines (its Python decode would run in the middle of a
+  fetch), HTML ``html_events`` bails on, or a span Arrow cannot encode;
   ``batch_counts`` reads the served and handed-back documents by reason.
 
 Every entry point returns a complete result or a bail (None, or ``BAIL``

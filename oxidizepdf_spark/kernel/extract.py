@@ -18,6 +18,7 @@ exceptions — a corrupt document must not fail a Spark task.
 from __future__ import annotations
 
 import base64
+import functools
 import time
 
 from . import content as _content
@@ -1183,13 +1184,18 @@ def extract_batch(spans, passwords, options: ExtractionOptions) -> list:
     With the C kernel loaded, options the page loop serves and an input
     it reads, the whole batch runs in one native call (``_cscan.c``
     ``extract_batch``): it reads the string columns' Arrow buffers,
-    decodes each latin-1 payload straight into the reader's bytes, runs
-    the reader, page tree and page loop, the HTML spans and the
-    passthrough, and writes the output columns' buffers, which
-    ``pa.Array.from_buffers`` wraps. A document it is not certain about
+    decodes each latin-1 payload straight into the document's bytes, runs
+    the xref chain, page tree and page loop over its own tables, the HTML
+    spans and the passthrough, and writes the output columns' buffers,
+    which ``pa.Array.from_buffers`` wraps. It is passed a ``PdfReader``
+    factory with the options' strictness and recipient key, which it calls
+    at most once per document, and only when a Python step needs a
+    reader: a FontInfo build on a cache miss, or a content stream whose
+    filter the native chain declines. A document it is not certain about
     (a password, a ``b85:`` or non-latin-1 payload, encryption, a reader
-    or tree it does not serve, a page the page loop bails on, a span that
-    does not encode) is handed back whole to ``_run_row``, which stays the
+    or tree it does not serve, a page the page loop bails on, an object
+    stream whose filter the native chain declines, a span that does not
+    encode) is handed back whole to ``_run_row``, which stays the
     authority. Otherwise ``_extract_batch_py`` runs the same contract in
     Python."""
     import pyarrow as pa
@@ -1203,15 +1209,19 @@ def extract_batch(spans, passwords, options: ExtractionOptions) -> list:
     pw = (passwords.to_pylist()
           if passwords is not None and passwords.null_count < len(passwords)
           else None)
+    strict = options.error_mode == "strict"
+    reader_factory = functools.partial(
+        PdfReader, lenient=not strict,
+        recipient_key=getattr(options, "recipient_key", None))
     flat = spans.values
     n = len(spans)
     (kind, text, ref, span_off, list_off, ok, mode, err, n_pages, n_spans,
      bytes_in, wall, total) = ck.extract_batch(
         n, spans.buffers()[1], spans.offset,
         *(_c_field(flat.field(f)) for f in _SPAN_FIELDS), pw,
-        options.error_mode == "strict", options.newline_threshold,
+        strict, options.newline_threshold,
         options.space_threshold, options.tj_space_threshold,
-        options.include_artifacts, getattr(options, "recipient_key", None),
+        options.include_artifacts, reader_factory,
         LINK_DENSITY_MAX, MIN_BLOCK_CHARS, MAX_TREE_DEPTH, _safe_decode,
         lambda row, triples: _run_row(
             triples, pw[row] if pw is not None else None, options))

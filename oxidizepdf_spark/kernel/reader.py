@@ -17,13 +17,13 @@ bail; on a bail the Python code here runs that step from the start and
 stays the authority. Encrypted documents always fetch in Python.
 
 The C batch loop (``extract_batch``) keeps a document's xref entries,
-fetched objects and object-stream members in C tables, and builds a
-``PdfReader`` from them only when a Python step needs one (a FontInfo
-build for a font dict that holds a reference, a stream decode handed to
-Python): it allocates the reader and fills every slot (the layout
-``setup_reader`` checks at import). A document the header check, the C
-xref chain or the /Root and /Encrypt checks are not certain about is
-handed back and opens through ``__init__`` below.
+fetched objects and object-stream members in C tables, and constructs a
+``PdfReader`` only when a Python step needs one (a FontInfo build, a
+content stream decode handed to Python), at most once per document,
+through ``__init__`` below; its own fetches stay on the tables. A document
+the header check, the C xref chain or the /Root and /Encrypt checks are
+not certain about is handed back and opens here too. Nothing in C reads
+this class's layout, so importing this module calls no C.
 """
 
 from __future__ import annotations
@@ -48,9 +48,6 @@ class PdfReader:
     (document.rs:101-162 cache) — both live and die inside one UDF call.
     """
 
-    # _cscan.c's extract_batch builds readers natively and fills these
-    # slots itself (its rs_names list; setup_reader below checks the
-    # layout): a slot added here must be added there too.
     __slots__ = (
         "data",
         "version",
@@ -415,23 +412,9 @@ class PdfReader:
         return root
 
 
-class _NoRefs:
-    """The reader the C batch loop passes to ``extract_font_info`` for a
-    font dict that holds no reference, which needs none: ``resolve``
-    returns its value."""
-
-    __slots__ = ()
-
-    @staticmethod
-    def resolve(value):
-        return value
-
-
 # The C object parser, bound once at import (None → pure-Python parsing).
 # The other C steps read ``_content._CSCAN`` at call time, so
 # OXPDF_NO_CKERNEL=1 (no extension at all) turns every one of them off.
 _CPARSE = (
     _content._CSCAN.parse_indirect if _content._CSCAN is not None else None
 )
-if _content._CSCAN is not None:
-    _content._CSCAN.setup_reader(PdfReader, _NoRefs())

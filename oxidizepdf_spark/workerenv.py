@@ -31,8 +31,7 @@ daemon/worker environment and nowhere else, so the driver keeps a stock
 ``zipimport`` and an unfrozen heap. It runs when a worker first imports
 this package, i.e. while unpickling its first task's function, so that
 task still pays the stock cost and every later task on the reused worker
-does not. Opt out with ``SPARK_GRAFT_KEEP_ZIP_INVALIDATION=1`` (zip
-filter) and ``SPARK_GRAFT_KEEP_WORKER_GC=1`` (heap freeze).
+does not.
 """
 
 from __future__ import annotations
@@ -68,14 +67,12 @@ def _invalidate_caches(self) -> None:  # noqa: ANN001 — stdlib signature
 
 def setup_worker() -> bool:
     """In a Spark worker process, install the zip filter and freeze the
-    heap (each unless opted out); True iff this is a worker process.
+    heap; True iff this is a worker process.
     Idempotent; a no-op in the driver and in non-Spark processes."""
     global _SET_UP
     if _SET_UP or "PYTHON_WORKER_FACTORY_SECRET" not in os.environ:
         return _SET_UP
     _SET_UP = True
-    if os.environ.get("SPARK_GRAFT_KEEP_ZIP_INVALIDATION") != "1":
-        zipimport.zipimporter.invalidate_caches = _invalidate_caches
-    if os.environ.get("SPARK_GRAFT_KEEP_WORKER_GC") != "1":
-        gc.freeze()
+    zipimport.zipimporter.invalidate_caches = _invalidate_caches
+    gc.freeze()
     return True

@@ -1,10 +1,12 @@
-"""The C kernel build: a host with a toolchain must load the extension, and
-a compiler rejection must say why instead of silently running pure Python
-(where every C differential test would skip)."""
+"""The C kernel build: a host with a toolchain must load the extension with
+every entry the code reads, and a compiler rejection must say why instead
+of silently running pure Python (where every C differential test would
+skip)."""
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import sysconfig
 
@@ -25,11 +27,26 @@ def test_cscan_builds_with_toolchain():
     assert content._CSCAN is not None, (
         cbuild.build_failure()
         or "no failure sentinel: transient build error or import failure")
-    for entry in ("xref_chain", "parse_xref_section", "get_object",
-                  "flatten_pages", "page_content", "parse_indirect",
-                  "run_page", "parse_cmap", "run_pages", "extract_batch",
-                  "html_spans", "setup_filters", "filter_counts"):
-        assert hasattr(content._CSCAN, entry), entry
+    entries = _entries_read()
+    assert {"extract_batch", "html_events", "batch_counts"} <= entries
+    missing = sorted(e for e in entries if not hasattr(content._CSCAN, e))
+    assert not missing, missing
+
+
+def _entries_read() -> set:
+    """Every ``_CSCAN.<name>`` and ``ck.<name>`` the package's modules and
+    its tools read: a caller that falls back to Python on an exception
+    would hide a dropped entry."""
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(cbuild.__file__)))
+    names = set()
+    for top in (pkg, os.path.join(os.path.dirname(pkg), "tools")):
+        for root, _dirs, files in os.walk(top):
+            for f in files:
+                if f.endswith(".py"):
+                    with open(os.path.join(root, f), encoding="utf-8") as fh:
+                        names.update(re.findall(
+                            r"\b(?:_CSCAN|ck)\.(\w+)", fh.read()))
+    return names
 
 
 def test_failed_build_records_compiler_stderr(tmp_path):

@@ -1662,7 +1662,7 @@ _CMAP_1BYTE = b"""begincmap /WMode -255 def
 endbfrange endcmap"""
 
 
-def _crafted_font_cases():
+def _crafted_font_cases(show: bytes = _SHOW):
     import zlib
 
     helv = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica %s>>"
@@ -1673,42 +1673,42 @@ def _crafted_font_cases():
            b"/CIDSystemInfo << /Registry (Adobe) /Ordering (Identity) "
            b"/Supplement 0 >> /DW 900 >>")
     cases = {}
-    cases["std14_plain"] = _font_pdf(helv % b"", _SHOW)
+    cases["std14_plain"] = _font_pdf(helv % b"", show)
     cases["std14_differences"] = _font_pdf(helv % (
         b"/Encoding << /BaseEncoding /WinAnsiEncoding /Differences [65 /B /C "
         b"97 /uni00E9 /bullet /u1F600 /notaglyph /space -1 /Euro 300 /fi "
-        b"true /A 2.5 (x) /uniD800] >> "), _SHOW)
+        b"true /A 2.5 (x) /uniD800] >> "), show)
     cases["macroman"] = _font_pdf(
         helv.replace(b"Helvetica", b"Times-BoldItalic")
-        % b"/Encoding /MacRomanEncoding ", _SHOW)
+        % b"/Encoding /MacRomanEncoding ", show)
     cases["encoding_ref"] = _font_pdf(
-        helv % b"/Encoding 6 0 R ", _SHOW,
+        helv % b"/Encoding 6 0 R ", show,
         {6: b"<< /Differences [72 /H.alt /e 104 /uni0048] >>"})
     cases["truetype_widths"] = _font_pdf(tt % (
         b"/FirstChar 65 /LastChar 70 /Widths [500 600 700.5 /x null true] "
-        b"/FontDescriptor 6 0 R /Encoding /WinAnsiEncoding "), _SHOW,
+        b"/FontDescriptor 6 0 R /Encoding /WinAnsiEncoding "), show,
         {6: b"<< /Type /FontDescriptor /MissingWidth 333.25 >>"})
-    cases["truetype_no_widths"] = _font_pdf(tt % b"", _SHOW)
+    cases["truetype_no_widths"] = _font_pdf(tt % b"", show)
     cases["missing_firstchar"] = _font_pdf(
-        tt % b"/Widths 6 0 R /LastChar 300 ", _SHOW,
+        tt % b"/Widths 6 0 R /LastChar 300 ", show,
         {6: b"[" + b" ".join(b"%d" % (250 + i) for i in range(120)) + b"]"})
     cases["type1_tounicode"] = _font_pdf(
-        tt % b"/ToUnicode 6 0 R /Widths [600 700] /FirstChar 97 ", _SHOW,
+        tt % b"/ToUnicode 6 0 R /Widths [600 700] /FirstChar 97 ", show,
         {6: _stm(_CMAP_1BYTE)})
     cases["identity_h_tounicode"] = _font_pdf(
-        type0 % b"/ToUnicode 7 0 R ", _SHOW, {6: cid, 7: _stm(_CMAP_2BYTE)})
+        type0 % b"/ToUnicode 7 0 R ", show, {6: cid, 7: _stm(_CMAP_2BYTE)})
     cases["identity_h_flate_tounicode"] = _font_pdf(
-        type0 % b"/ToUnicode 7 0 R ", _SHOW,
+        type0 % b"/ToUnicode 7 0 R ", show,
         {6: cid, 7: _stm(zlib.compress(_CMAP_2BYTE), b"/Filter /FlateDecode ")})
     cases["identity_h_bad_flate"] = _font_pdf(
-        type0 % b"/ToUnicode 7 0 R ", _SHOW,
+        type0 % b"/ToUnicode 7 0 R ", show,
         {6: cid, 7: _stm(b"not zlib", b"/Filter /FlateDecode ")})
     cases["tounicode_3byte"] = _font_pdf(
-        type0 % b"/ToUnicode 7 0 R ", _SHOW,
+        type0 % b"/ToUnicode 7 0 R ", show,
         {6: cid, 7: _stm(b"1 beginbfchar <414243> <0058> endbfchar "
                          b"1 beginbfrange <0048> <0049> <0061> endbfrange")})
     cases["tounicode_usecmap"] = _font_pdf(
-        type0 % b"/ToUnicode 7 0 R ", _SHOW,
+        type0 % b"/ToUnicode 7 0 R ", show,
         {6: cid, 7: _stm(b"/Identity-H usecmap " + _CMAP_2BYTE)})
     cases["type0_self_descendant"] = _font_pdf(
         b"<< /Type /Font /Subtype /Type0 /BaseFont /Loop "
@@ -1722,20 +1722,20 @@ def _crafted_font_cases():
             b"/Supplement 2 >> >>"})
     cases["type0_encoding_stream"] = _font_pdf(
         b"<< /Type /Font /Subtype /Type0 /BaseFont /X /Encoding 7 0 R "
-        b"/DescendantFonts [6 0 R] >>", _SHOW,
+        b"/DescendantFonts [6 0 R] >>", show,
         {6: cid, 7: _stm(b"1 begincidrange <0000> <FFFF> 0 endcidrange")})
     cases["type3"] = _font_pdf(
         b"<< /Type /Font /Subtype /Type3 /FontBBox [0 0 1 1] "
         b"/FontMatrix [0.001 0 0 0.001 0 0] /CharProcs << >> "
         b"/Encoding << /Differences [72 /H /e] >> /FirstChar 72 "
-        b"/LastChar 101 /Widths [500 600] >>", _SHOW)
+        b"/LastChar 101 /Widths [500 600] >>", show)
     cases["fontfile_widths"] = _font_pdf(
-        tt % b"/FontDescriptor 6 0 R ", _SHOW,
+        tt % b"/FontDescriptor 6 0 R ", show,
         {6: b"<< /Type /FontDescriptor /FontFile2 7 0 R >>",
          7: _stm(b"\x00\x01\x00\x00 not a font")})
     # fonts from the page tree: inherited from /Pages, overridden on a
     # second page, and one font Ref shared by two pages
-    shared = _objects(content=_SHOW)
+    shared = _objects(content=show)
     shared[2] = shared[2].replace(b"/Kids [3 0 R]", b"/Kids [3 0 R 6 0 R 7 0 R]")
     shared[6] = (b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R "
                  b"/Resources << /Font << /F1 8 0 R /F2 5 0 R >> >> >>")
@@ -2246,8 +2246,13 @@ def _utf8_spans(pdf: bytes) -> bool:
 def test_differential_batch_loop_crafted(monkeypatch):
     """The crafted skeleton, content and font cases and the catalog, one
     document each, in every error mode; the batch also runs sliced, so
-    the span child carries an offset. A document whose spans Arrow cannot
-    encode would be an error row in both loops (see
+    the span child carries an offset. Two more batches open with a font
+    dict that holds a reference (a ToUnicode font, as in X12-X14) and
+    with one that holds none, so the batch's first FontInfo build of
+    each kind constructs the document's reader. An object stream whose
+    container filter the native chain declines is handed back (its
+    decode would run in the middle of a fetch). A document whose spans
+    Arrow cannot encode would be an error row in both loops (see
     test_batch_lone_surrogate_is_one_error_row)."""
     from oxidizepdf_spark.corpus import all_cases
 
@@ -2276,12 +2281,83 @@ def test_differential_batch_loop_crafted(monkeypatch):
         for enc, extra in (
             (b"/Encoding << /Differences [72 /B] >> ", None),
             (b"/Encoding 6 0 R ", {6: b"<< /Differences [72 /B] >>"}))]
+    fonts = _crafted_font_cases()
+    catalog = {case: pdf for case, pdf, _ in all_cases()}
     pdfs = [*_crafted_skeleton_cases().values(),
             *_page_loop_content_cases().values(),
-            *_crafted_font_cases().values(), *shared,
-            *(pdf for _case, pdf, _expected in all_cases())]
+            *fonts.values(), *shared, *catalog.values()]
     batch = _arrow_batch([_pdf_doc(p) for p in pdfs])
-    _assert_same_batches([batch, batch.slice(7, 40)], monkeypatch)
+    refs_first = _arrow_batch([_pdf_doc(p) for p in (
+        catalog["X12"], fonts["type1_tounicode"], catalog["X13"])])
+    free_first = _arrow_batch([_pdf_doc(p) for p in (
+        fonts["std14_plain"], catalog["X14"], fonts["std14_plain"])])
+    _assert_same_batches([batch, batch.slice(7, 40), refs_first, free_first],
+                         monkeypatch)
+    # an indirect /DecodeParms on the container: the native chain declines
+    objs = _objects()
+    objstm = _xs_pdf({4: objs[4], 9: b"<< /Predictor 1 >>"},
+                     {k: objs[k] for k in (1, 2, 3, 5)},
+                     stm_kw={"extra": b"/DecodeParms 9 0 R "})
+    C._CSCAN.batch_counts(True)
+    _assert_same_batches([_arrow_batch([_pdf_doc(objstm)])], monkeypatch,
+                         modes=False)
+    assert C._CSCAN.batch_counts(True)["objstm"] == 1
+
+
+def test_batch_loop_reader_factory(monkeypatch):
+    """The batch loop builds a document's PdfReader through the factory
+    extract_batch passes it, PdfReader's own constructor: here a subclass
+    with one more slot, which counts the builds made outside the Python
+    row function, so no layout of the class is mirrored in C. Over the
+    crafted font cases (with their own content, and with a one-byte and a
+    two-byte show the page loop serves), each alone in its batch so its
+    first font dict misses the batch's FontInfo cache, the columns equal
+    the Python loop's and each document builds exactly one reader; with
+    the cases twice in one batch, a copy whose font dicts all hit the
+    cache builds none."""
+    from oxidizepdf_spark.kernel import extract as E
+    from oxidizepdf_spark.kernel.reader import PdfReader
+    from oxidizepdf_spark.kernel.textstate import ExtractionOptions
+
+    built, in_row = [], [False]
+
+    class Counting(PdfReader):
+        __slots__ = ("in_row",)
+
+        def __init__(self, data, **kw):
+            super().__init__(data, **kw)
+            self.in_row = in_row[0]
+            if not self.in_row:
+                built.append(data)
+
+    run_row = E._run_row
+
+    def flagged_row(*a):
+        in_row[0] = True
+        try:
+            return run_row(*a)
+        finally:
+            in_row[0] = False
+
+    monkeypatch.setattr(E, "PdfReader", Counting)
+    monkeypatch.setattr(E, "_run_row", flagged_row)
+    pdfs = list(dict.fromkeys(
+        p for show in (_SHOW, b"BT /F1 12 Tf (Hello) Tj [(Wor) -250 (ld)] TJ ET",
+                       b"BT /F1 12 Tf <00480024> Tj ET")
+        for p in _crafted_font_cases(show).values() if _utf8_spans(p)))
+    singles = [_arrow_batch([_pdf_doc(p)]) for p in pdfs]
+    doubled = _arrow_batch([_pdf_doc(p) for p in pdfs + pdfs])
+    _assert_same_batches([*singles, doubled], monkeypatch, modes=False)
+    opts = ExtractionOptions()
+    C._CSCAN.batch_counts(True)
+    built.clear()
+    _batch_rows(singles, opts)
+    # a page the page loop bails on is handed back after its font build
+    assert C._CSCAN.batch_counts(True)["served"] >= 10
+    assert sorted(map(pdfs.index, built)) == list(range(len(pdfs)))
+    built.clear()
+    _batch_rows([doubled], opts)
+    assert len(built) <= len(pdfs)
 
 
 def test_differential_batch_loop_corpus(monkeypatch):

@@ -9,7 +9,7 @@ These tests pin:
   ``pyspark.zip`` or ``py4j-*`` zip elsewhere, or any user zip, still
   re-reads its directory, so ``sc.addPyFile``-style dynamic code keeps
   stock semantics,
-- each opt-out variable keeps its stock behavior in a worker process,
+- a worker process gets the filter and a frozen heap,
 - inside real Spark workers the patch is live and no archive under
   ``$SPARK_HOME`` is re-read by ``importlib.invalidate_caches()``.
 """
@@ -104,22 +104,13 @@ def test_user_zip_still_invalidates(tmp_path, monkeypatch):
 
 
 def test_opt_out_env(monkeypatch):
-    """In a worker process, each opt-out variable keeps its stock behavior;
-    without them the zip filter is installed and the heap frozen."""
+    """In a worker process the zip filter is installed and the heap
+    frozen."""
     monkeypatch.setenv("PYTHON_WORKER_FACTORY_SECRET", "test")
-    monkeypatch.setenv("SPARK_GRAFT_KEEP_ZIP_INVALIDATION", "1")
-    monkeypatch.setenv("SPARK_GRAFT_KEEP_WORKER_GC", "1")
     monkeypatch.setattr(workerenv, "_SET_UP", False)
     monkeypatch.setattr(
         zipimport.zipimporter, "invalidate_caches", workerenv._ORIG_INVALIDATE
     )
-    assert workerenv.setup_worker() is True
-    assert zipimport.zipimporter.invalidate_caches is workerenv._ORIG_INVALIDATE
-    assert gc.get_freeze_count() == 0
-
-    monkeypatch.delenv("SPARK_GRAFT_KEEP_ZIP_INVALIDATION")
-    monkeypatch.delenv("SPARK_GRAFT_KEEP_WORKER_GC")
-    monkeypatch.setattr(workerenv, "_SET_UP", False)
     try:
         assert workerenv.setup_worker() is True
         assert zipimport.zipimporter.invalidate_caches is (
